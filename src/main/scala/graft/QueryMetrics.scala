@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Execution instrumentation (SURVEY.md §2.13): run an action and
   * report the aggregate task metrics of the jobs it triggered —
-  * shuffle records/bytes written, input records — via a
+  * shuffle records/bytes written, input records, job count — via a
   * SparkListener. This is how the plan-shape claims get NUMBERS: e.g.
   * the two-phase bounded-heap top-k provably shuffles a candidate set,
   * not the fact table (QueryMetricsSpec).
@@ -19,7 +19,7 @@ import org.apache.spark.sql.SparkSession
 object QueryMetrics {
 
   case class Metrics(shuffleRecordsWritten: Long, shuffleBytesWritten: Long,
-      inputRecords: Long, tasks: Long)
+      inputRecords: Long, tasks: Long, jobs: Long)
 
   def measure(spark: SparkSession)(action: => Unit): Metrics = {
     val shRecs = new AtomicLong
@@ -57,6 +57,6 @@ object QueryMetrics {
         last = snap
       }
     } finally spark.sparkContext.removeSparkListener(listener)
-    Metrics(shRecs.get, shBytes.get, inRecs.get, tasks.get)
+    Metrics(shRecs.get, shBytes.get, inRecs.get, tasks.get, jobsStarted.get)
   }
 }

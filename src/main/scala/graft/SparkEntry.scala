@@ -56,12 +56,7 @@ object SparkEntry {
     */
   private def memoBatch(name: String,
       f: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
-    (s, d) => IndexCache.getOrBuild(s, s"batch-result:$name:$d") {
-      val df = f(s, d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    }
+    (s, d) => IndexCache.persisted(s, "batch-result", name, d)(f(s, d))
 
   private val hnswBatch  = memoBatch("hnsw", HnswKnn.topKBatch(_, _))
   private val bq256Batch = memoBatch("bq256", BinaryQuantKnn.topKBatchWide(_, _))

@@ -2,7 +2,6 @@ package graft.knn
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.IndexCache
 
@@ -109,11 +108,8 @@ object BinaryQuantKnn {
       overfetch: Int = 16): DataFrame = {
     val (base, queries, _, _) = ExactKnn.split(spark, dir)
 
-    val codes = IndexCache.getOrBuild(spark, s"bq:$dir") {
-      val c = encode(base).persist(StorageLevel.MEMORY_AND_DISK)
-      c.count() // materialize the code table once (the scan target)
-      c
-    }
+    // the code table is the scan target: materialized once
+    val codes = IndexCache.persisted(spark, "bq", dir)(encode(base))
     val qCodes = broadcast(encode(queries)
       .select(col("vec_id").as("qid"), col("code").as("qcode")))
 
@@ -149,11 +145,8 @@ object BinaryQuantKnn {
     val (base, queries, _, _) = ExactKnn.split(spark, dir)
     val words = nBits / 64
 
-    val codes = IndexCache.getOrBuild(spark, s"bq-wide:$dir:$nBits") {
-      val c = encodeWide(base, nBits).persist(StorageLevel.MEMORY_AND_DISK)
-      c.count()
-      c
-    }
+    val codes = IndexCache.persisted(spark, "bq-wide", dir, nBits)(
+      encodeWide(base, nBits))
     val qCodes = broadcast(encodeWide(queries, nBits)
       .select(col("vec_id").as("qid") +:
         (0 until words).map(i => col(s"code$i").as(s"qcode$i")): _*))

@@ -2,7 +2,6 @@ package graft.knn
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.IndexCache
 
@@ -54,15 +53,17 @@ object IvfPqKnn {
   def builtIndex(spark: SparkSession, base: DataFrame, dir: String,
       nC: Int, m: Int, ksub: Int)
       : (Array[Array[Double]], PqKnn.PqCodebooks, DataFrame) =
-    IndexCache.getOrBuild(spark, s"ivfpq:$dir:$nC:$m:$ksub") {
-      val cs = IvfKnn.trainCentroids(base, nC).map(_.toArray).toArray
-      val books = PqKnn.trainCodebooks(base, m, ksub)
-      val coded = PqKnn.encode(base, books)
-        .join(IvfKnn.assignCids(base, cs).select("vec_id", "cid"), "vec_id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      coded.count()
-      (cs, books, coded)
+  {
+    val (cs, books) = IndexCache.getOrBuild(spark, "ivfpq", dir, nC, m, ksub) {
+      (IvfKnn.trainCentroids(base, nC).map(_.toArray).toArray,
+        PqKnn.trainCodebooks(base, m, ksub))
     }
+    (cs, books, IndexCache.persisted(spark, "ivfpq", dir, nC, m, ksub,
+      "lists") {
+      PqKnn.encode(base, books)
+        .join(IvfKnn.assignCids(base, cs).select("vec_id", "cid"), "vec_id")
+    })
+  }
 
   /** The search body shared by the in-memory and reloaded paths (the
     * lifecycle query is bit-equal to [[topKBatch]] by construction).
@@ -150,20 +151,17 @@ object IvfPqKnn {
     val nC = if (nCentroids > 0) nCentroids
              else math.max(4, math.sqrt(n.toDouble).toInt)
     val nP = if (nprobe > 0) nprobe else math.max(2, nC / 2)
-    val path = IndexCache.getOrBuild(spark, s"ivfpq-ckpt:$dir:$nC:$m:$ksub") {
+    val path = IndexCache.getOrBuild(spark, "ivfpq-ckpt", dir, nC, m, ksub) {
       val (cs, cb, lists) = builtIndex(spark, base, dir, nC, m, ksub)
       val p = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
         s"/graft-ivfpq-lifecycle-${Integer.toHexString(dir.hashCode)}-$nC-$m-$ksub"
       saveIndex(cs, cb, lists, p)
       p
     }
-    val (cs, cb, lists) = IndexCache.getOrBuild(spark,
-      s"ivfpq-reloaded:$dir:$nC:$m:$ksub") {
-      val (c, b, l0) = loadIndex(spark, path)
-      val l = l0.persist(StorageLevel.MEMORY_AND_DISK)
-      l.count()
-      (c, b, l)
-    }
+    val (cs, cb, l0) = IndexCache.getOrBuild(spark, "ivfpq-reloaded", dir,
+      nC, m, ksub)(loadIndex(spark, path))
+    val lists = IndexCache.persisted(spark, "ivfpq-reloaded", dir, nC, m,
+      ksub, "lists")(l0)
     searchLists(spark, cs, cb, lists, base, queries, k, nP, ksub, overfetch)
   }
 }

@@ -2,7 +2,6 @@ package graft.knn
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Matryoshka-style truncated-dimension ANN: coarse-score every base
   * vector on the PREFIX of its coordinates (the way MRL-trained
@@ -37,12 +36,9 @@ object MatryoshkaKnn {
   def topKBatch(spark: SparkSession, dir: String, k: Int = 10,
       coarseDim: Int = 32, overfetch: Int = 16): DataFrame = {
     val (base0, queries, _, _) = ExactKnn.split(spark, dir)
-    val base = graft.IndexCache.getOrBuild(spark, s"mrl:$dir:$coarseDim") {
-      val b = base0.select(col("vec_id"), col("emb"),
+    val base = graft.IndexCache.persisted(spark, "mrl", dir, coarseDim) {
+      base0.select(col("vec_id"), col("emb"),
         slice(col("emb"), 1, coarseDim).as("cemb"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      b.count()
-      b
     }
     val cq = broadcast(queries.select(col("vec_id").as("qid"),
       slice(col("emb"), 1, coarseDim).as("cq")))

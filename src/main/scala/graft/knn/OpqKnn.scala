@@ -2,7 +2,6 @@ package graft.knn
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.IndexCache
 
@@ -41,7 +40,7 @@ object OpqKnn {
     */
   def rotation(spark: SparkSession, dir: String,
       m: Int = 8): Array[Array[Double]] =
-    IndexCache.getOrBuild(spark, s"opq-rot:$dir:$m") {
+    IndexCache.getOrBuild(spark, "opq-rot", dir, m) {
       import spark.implicits._
       val (base, _, _, _) = ExactKnn.split(spark, dir)
       val vecs = base.select(col("emb").cast("array<double>"))
@@ -76,14 +75,12 @@ object OpqKnn {
       m: Int = 8, ksub: Int = 256): (PqKnn.PqCodebooks, DataFrame) = {
     val (base, _, _, _) = ExactKnn.split(spark, dir)
     val rot = rotation(spark, dir, m)
-    IndexCache.getOrBuild(spark, s"opq:$dir:$m:$ksub") {
-      val rBase = RandomProjection.project(base, rot)
-        .select(col("vec_id"), col("pvec").as("emb"))
-      val b = PqKnn.trainCodebooks(rBase, m, ksub)
-      val enc = PqKnn.encode(rBase, b).persist(StorageLevel.MEMORY_AND_DISK)
-      enc.count()
-      (b, enc)
-    }
+    lazy val rBase = RandomProjection.project(base, rot)
+      .select(col("vec_id"), col("pvec").as("emb"))
+    val b = IndexCache.getOrBuild(spark, "opq", dir, m, ksub)(
+      PqKnn.trainCodebooks(rBase, m, ksub))
+    (b, IndexCache.persisted(spark, "opq", dir, m, ksub, "codes")(
+      PqKnn.encode(rBase, b)))
   }
 
   def topKBatch(spark: SparkSession, dir: String, k: Int = 10,
@@ -201,7 +198,7 @@ object OpqKnn {
   def topKBatchLifecycle(spark: SparkSession, dir: String, k: Int = 10,
       m: Int = 8, ksub: Int = 256, overfetch: Int = 16): DataFrame = {
     val (base, queries, _, _) = ExactKnn.split(spark, dir)
-    val path = IndexCache.getOrBuild(spark, s"opq-ckpt:$dir:$m:$ksub") {
+    val path = IndexCache.getOrBuild(spark, "opq-ckpt", dir, m, ksub) {
       val rot = rotation(spark, dir, m)
       val (cb, codes) = cachedIndex(spark, dir, m, ksub)
       val p = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
@@ -209,13 +206,10 @@ object OpqKnn {
       saveIndex(rot, cb, codes, p)
       p
     }
-    val (rot, cb, codes) = IndexCache.getOrBuild(spark,
-      s"opq-reloaded:$dir:$m:$ksub") {
-      val (r, c, enc0) = loadIndex(spark, path)
-      val enc = enc0.persist(StorageLevel.MEMORY_AND_DISK)
-      enc.count()
-      (r, c, enc)
-    }
+    val (rot, cb, enc) = IndexCache.getOrBuild(spark, "opq-reloaded", dir, m,
+      ksub)(loadIndex(spark, path))
+    val codes = IndexCache.persisted(spark, "opq-reloaded", dir, m, ksub,
+      "codes")(enc)
     val rQueries = RandomProjection.project(queries, rot)
       .select(col("vec_id"), col("pvec").as("emb"))
     PqKnn.searchCodesWith(cb, codes, rQueries, base, queries, k, overfetch)

@@ -2,7 +2,6 @@ package graft.knn
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.IndexCache
 
@@ -34,7 +33,7 @@ object PcaKnn {
     * projection matrix (outDim × dim rows), memoized per dataset.
     */
   def basis(spark: SparkSession, dir: String, outDim: Int = 32): Array[Array[Double]] =
-    IndexCache.getOrBuild(spark, s"pca-basis:$dir:$outDim") {
+    IndexCache.getOrBuild(spark, "pca-basis", dir, outDim) {
       import spark.implicits._
       val (base, _, _, _) = ExactKnn.split(spark, dir)
       val vecs = base.select(col("emb").cast("array<double>")).as[Seq[Double]]
@@ -54,15 +53,16 @@ object PcaKnn {
   def topKBatch(spark: SparkSession, dir: String, k: Int = 10,
       outDim: Int = 32, overfetch: Int = 16): DataFrame = {
     val matrix = basis(spark, dir, outDim)
-    val pBase = IndexCache.getOrBuild(spark, s"pca:$dir:$outDim") {
-      val (base, _, _, _) = ExactKnn.split(spark, dir)
-      val p = RandomProjection.project(base, matrix)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    }
-    search(spark, dir, matrix, pBase, k, overfetch)
+    search(spark, dir, matrix, memoProjected(spark, dir, outDim), k, overfetch)
   }
+
+  /** The base split projected through [[basis]], persisted once per
+    * (dataset, outDim) — the one build site batch and lifecycle share.
+    */
+  private def memoProjected(spark: SparkSession, dir: String,
+      outDim: Int): DataFrame =
+    IndexCache.persisted(spark, "pca", dir, outDim)(RandomProjection.project(
+      ExactKnn.split(spark, dir)._1, basis(spark, dir, outDim)))
 
   /** Shared mine + re-rank body: projected-space bounded-heap candidate
     * mining, then exact re-rank of queries × k·overfetch rows.
@@ -125,27 +125,16 @@ object PcaKnn {
     */
   def topKBatchLifecycle(spark: SparkSession, dir: String, k: Int = 10,
       outDim: Int = 32, overfetch: Int = 16): DataFrame = {
-    val path = IndexCache.getOrBuild(spark, s"pca-ckpt:$dir:$outDim") {
-      val matrix = basis(spark, dir, outDim)
-      val pBase = IndexCache.getOrBuild(spark, s"pca:$dir:$outDim") {
-        val (base, _, _, _) = ExactKnn.split(spark, dir)
-        val p = RandomProjection.project(base, matrix)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        p
-      }
+    val path = IndexCache.getOrBuild(spark, "pca-ckpt", dir, outDim) {
       val p = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
         s"/graft-pca-lifecycle-${Integer.toHexString(dir.hashCode)}-$outDim"
-      saveIndex(matrix, pBase, p)
+      saveIndex(basis(spark, dir, outDim), memoProjected(spark, dir, outDim), p)
       p
     }
-    val (matrix, pBase) = IndexCache.getOrBuild(spark,
-      s"pca-reloaded:$dir:$outDim") {
-      val (m, p0) = loadIndex(spark, path)
-      val p = p0.persist(StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      (m, p)
-    }
+    val (matrix, p0) = IndexCache.getOrBuild(spark, "pca-reloaded", dir,
+      outDim)(loadIndex(spark, path))
+    val pBase = IndexCache.persisted(spark, "pca-reloaded", dir, outDim,
+      "projected")(p0)
     search(spark, dir, matrix, pBase, k, overfetch)
   }
 }

@@ -2,7 +2,6 @@ package graft.knn
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.IndexCache
 
@@ -202,12 +201,10 @@ object PqKnn {
   private[knn] def cachedIndex(spark: SparkSession, dir: String,
       m: Int = 8, ksub: Int = 256): (PqCodebooks, DataFrame) = {
     val (base, _, _, _) = ExactKnn.split(spark, dir)
-    IndexCache.getOrBuild(spark, s"pq:$dir:$m:$ksub") {
-      val b = trainCodebooks(base, m, ksub)
-      val enc = encode(base, b).persist(StorageLevel.MEMORY_AND_DISK)
-      enc.count()
-      (b, enc)
-    }
+    val b = IndexCache.getOrBuild(spark, "pq", dir, m, ksub)(
+      trainCodebooks(base, m, ksub))
+    (b, IndexCache.persisted(spark, "pq", dir, m, ksub, "codes")(
+      encode(base, b)))
   }
 
   def topKBatch(spark: SparkSession, dir: String, k: Int = 10,
@@ -327,20 +324,17 @@ object PqKnn {
   def topKBatchLifecycle(spark: SparkSession, dir: String, k: Int = 10,
       m: Int = 8, ksub: Int = 256, overfetch: Int = 16): DataFrame = {
     val (base, queries, _, _) = ExactKnn.split(spark, dir)
-    val path = IndexCache.getOrBuild(spark, s"pq-ckpt:$dir:$m:$ksub") {
+    val path = IndexCache.getOrBuild(spark, "pq-ckpt", dir, m, ksub) {
       val (cb, codes) = cachedIndex(spark, dir, m, ksub)
       val p = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
         s"/graft-pq-lifecycle-${Integer.toHexString(dir.hashCode)}-$m-$ksub"
       saveIndex(cb, codes, p)
       p
     }
-    val (cb, codes) = IndexCache.getOrBuild(spark,
-      s"pq-reloaded:$dir:$m:$ksub") {
-      val (c, enc0) = loadIndex(spark, path)
-      val enc = enc0.persist(StorageLevel.MEMORY_AND_DISK)
-      enc.count()
-      (c, enc)
-    }
+    val (cb, enc) = IndexCache.getOrBuild(spark, "pq-reloaded", dir, m,
+      ksub)(loadIndex(spark, path))
+    val codes = IndexCache.persisted(spark, "pq-reloaded", dir, m, ksub,
+      "codes")(enc)
     searchCodes(cb, codes, base, queries, k, overfetch)
   }
 }

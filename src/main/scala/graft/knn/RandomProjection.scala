@@ -2,7 +2,6 @@ package graft.knn
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.IndexCache
 
@@ -74,11 +73,9 @@ object RandomProjection {
     val dim = base.select(size(col("emb"))).head.getInt(0)
     val matrix = projectionMatrix(dim, outDim, seed)
 
-    val pBase = IndexCache.getOrBuild(spark, s"rp:$dir:$outDim:$seed") {
-      val p = project(base, matrix).persist(StorageLevel.MEMORY_AND_DISK)
-      p.count() // materialize the projected table once (the scan target)
-      p
-    }
+    // the projected table is the scan target: materialized once
+    val pBase = IndexCache.persisted(spark, "rp", dir, outDim, seed)(
+      project(base, matrix))
     val pq = broadcast(project(queries, matrix)
       .select(col("vec_id").as("qid"), col("pvec").as("qpvec")))
 

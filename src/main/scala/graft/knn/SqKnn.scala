@@ -2,7 +2,6 @@ package graft.knn
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.IndexCache
 
@@ -118,12 +117,9 @@ object SqKnn {
       overfetch: Int = 16): DataFrame = {
     import spark.implicits._
     val (base, queries, _, _) = ExactKnn.split(spark, dir)
-    val (bounds, codes) = IndexCache.getOrBuild(spark, s"sq:$dir") {
-      val b = trainBounds(base)
-      val enc = encode(base, b).persist(StorageLevel.MEMORY_AND_DISK)
-      enc.count()
-      (b, enc)
-    }
+    val bounds = IndexCache.getOrBuild(spark, "sq", dir)(trainBounds(base))
+    val codes = IndexCache.persisted(spark, "sq", dir, "codes")(
+      encode(base, bounds))
     val bcBounds = spark.sparkContext.broadcast(bounds)
     val codesRdd = codes.as[(Long, Array[Byte])].rdd
     val numP = codesRdd.getNumPartitions

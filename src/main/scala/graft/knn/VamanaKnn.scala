@@ -98,8 +98,7 @@ object VamanaKnn {
         s"[${stats.getLong(1)}, ${stats.getLong(2)}]")
     val s90 = math.round(0.90 * n)
     val s95 = math.round(0.95 * n)
-    val index = graft.IndexCache.getOrBuild(spark,
-      s"vamana-ins:$dir:$shards") {
+    val index = graft.IndexCache.getOrBuild(spark, "vamana-ins", dir, shards) {
       val built = buildIndex(emb.filter(col("vec_id") < s90), shards)
       val grown = insertIntoIndex(built,
         emb.filter(col("vec_id") >= s90 && col("vec_id") < s95)).persist()
@@ -164,18 +163,24 @@ object VamanaKnn {
         Seq("dist" -> true, "vec_id" -> true), k))
   }
 
+  /** The persisted shard graphs over `dir`'s split base, built once per
+    * (dataset, shards) — the one build site batch and lifecycle share.
+    */
+  private def memoIndex(spark: SparkSession, dir: String,
+      shards: Int): VamanaDistIndex =
+    graft.IndexCache.getOrBuild(spark, "vamana", dir, shards) {
+      val ix = buildIndex(ExactKnn.split(spark, dir)._1, shards).persist()
+      ix.graphs.count()
+      ix
+    }
+
   /** One-shot build + batch search over the held-out queries — the
     * family-standard declared shape.
     */
   def topKBatch(spark: SparkSession, dir: String, k: Int = 10,
       ef: Int = 100, shards: Int = 16): DataFrame = {
-    val (base, queries, _, _) = ExactKnn.split(spark, dir)
-    val index = graft.IndexCache.getOrBuild(spark, s"vamana:$dir:$shards") {
-      val ix = buildIndex(base, shards).persist()
-      ix.graphs.count()
-      ix
-    }
-    searchIndex(index, queries, k, ef)
+    val (_, queries, _, _) = ExactKnn.split(spark, dir)
+    searchIndex(memoIndex(spark, dir, shards), queries, k, ef)
   }
 
   /** Build → save → load → search with the RELOADED graphs, bit-equal
@@ -183,20 +188,15 @@ object VamanaKnn {
     */
   def topKBatchLifecycle(spark: SparkSession, dir: String, k: Int = 10,
       ef: Int = 100, shards: Int = 16): DataFrame = {
-    val (base, queries, _, _) = ExactKnn.split(spark, dir)
-    val path = graft.IndexCache.getOrBuild(spark, s"vamana-ckpt:$dir:$shards") {
-      val index = graft.IndexCache.getOrBuild(spark, s"vamana:$dir:$shards") {
-        val ix = buildIndex(base, shards).persist()
-        ix.graphs.count()
-        ix
-      }
+    val (_, queries, _, _) = ExactKnn.split(spark, dir)
+    val path = graft.IndexCache.getOrBuild(spark, "vamana-ckpt", dir, shards) {
       val p = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
         s"/graft-vamana-lifecycle-${Integer.toHexString(dir.hashCode)}-$shards"
-      saveIndex(index, p)
+      saveIndex(memoIndex(spark, dir, shards), p)
       p
     }
-    val index = graft.IndexCache.getOrBuild(spark,
-      s"vamana-reloaded:$dir:$shards") {
+    val index = graft.IndexCache.getOrBuild(spark, "vamana-reloaded", dir,
+        shards) {
       val ix = loadIndex(spark, path).persist()
       ix.graphs.count()
       ix

@@ -88,16 +88,13 @@ object Dedup {
     * instead of re-splitting every text.
     */
   def gramSets(spark: SparkSession, dir: String): DataFrame =
-    graft.IndexCache.getOrBuild(spark, s"gram-sets:$dir") {
+    graft.IndexCache.persisted(spark, "gram-sets", dir) {
       import spark.implicits._
-      val df = Tables.documents(spark, dir)
+      Tables.documents(spark, dir)
         .select(col("doc_id"), col("text"))
         .as[(Long, String)]
         .map { case (id, t) => (id, gramsOf(t)) }
         .toDF("doc_id", "grams")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
     }
 
   /** (doc_id, ghashes) — the gram sets as FNV-64 hashes, memoized like
@@ -108,7 +105,7 @@ object Dedup {
     * string-gram oracle check would catch one.)
     */
   def gramHashSets(spark: SparkSession, dir: String): DataFrame =
-    graft.IndexCache.getOrBuild(spark, s"gram-hash-sets:$dir") {
+    graft.IndexCache.persisted(spark, "gram-hash-sets", dir) {
       import spark.implicits._
       // widen BEFORE the typed gram pass AND the persist (the
       // single-split scan would serialize the FNV hashing on one core)
@@ -117,16 +114,13 @@ object Dedup {
       // executor-width memos taxed ~25 serve rows at local[32] in the
       // round-14 driver runs (local[8] ran them 2-10x faster); 8-wide
       // keeps the build within ~10% of full width (driver c8 evidence)
-      val df = graft.plans.GraftOps.widenTo(
+      graft.plans.GraftOps.widenTo(
           Tables.documents(spark, dir)
             .select(col("doc_id"), col("text")),
           math.min(8, spark.sparkContext.defaultParallelism))
         .as[(Long, String)]
         .map { case (id, t) => (id, gramsOf(t).map(fnv64).toArray) }
         .toDF("doc_id", "ghashes")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
     }
 
   /** Cluster-size distribution of the near-dup components — the
@@ -218,11 +212,8 @@ object Dedup {
     // without the memo each consumer repeats the posting-list expansion
     // (measured: the crosscheck row paid the full mining twice)
     if (threshold == 0.6)
-      graft.IndexCache.getOrBuild(spark, s"containment-pairs:$dir") {
-        val df = minedContainmentPairs(spark, dir, 0.6)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        df.count()
-        df
+      graft.IndexCache.persisted(spark, "containment-pairs", dir) {
+        minedContainmentPairs(spark, dir, 0.6)
       }
     else minedContainmentPairs(spark, dir, threshold)
 
@@ -326,11 +317,8 @@ object Dedup {
   def ngramJaccardPairs(spark: SparkSession, dir: String,
       threshold: Double = 0.5): DataFrame =
     if (threshold >= 0.5)
-      graft.IndexCache.getOrBuild(spark, s"jaccard-pairs:$dir") {
-        val df = minedJaccardPairs(spark, dir, 0.5)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        df.count()
-        df
+      graft.IndexCache.persisted(spark, "jaccard-pairs", dir) {
+        minedJaccardPairs(spark, dir, 0.5)
       }.filter(col("jaccard") >= threshold)
     else minedJaccardPairs(spark, dir, threshold)
 
@@ -346,7 +334,7 @@ object Dedup {
     */
   private def topGramFreq(spark: SparkSession, dir: String)
       : org.apache.spark.broadcast.Broadcast[Map[Long, Long]] =
-    graft.IndexCache.getOrBuild(spark, s"gram-topfreq:$dir") {
+    graft.IndexCache.getOrBuild(spark, "gram-topfreq", dir) {
       val top = gramHashSets(spark, dir)
         .select(explode(col("ghashes")).as("gram"))
         .groupBy("gram").agg(count(lit(1)).as("df"))
@@ -492,11 +480,8 @@ object Dedup {
     // memoized at the declared operating point: consumed by the
     // dedup_minhash_lsh row AND the minhash-winnow cross-check
     if (threshold == 0.8)
-      graft.IndexCache.getOrBuild(spark, s"minhash-pairs:$dir") {
-        val df = minedMinhashLshPairs(spark, dir, 0.8)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        df.count()
-        df
+      graft.IndexCache.persisted(spark, "minhash-pairs", dir) {
+        minedMinhashLshPairs(spark, dir, 0.8)
       }
     else minedMinhashLshPairs(spark, dir, threshold)
 
@@ -599,11 +584,8 @@ object Dedup {
     // and dedup_keep_best both consume it, and the union-find/
     // propagation pass is deterministic — one build, many readers
     // (charged to bench_build_clusters)
-    graft.IndexCache.getOrBuild(spark, s"clusters:$dir:$threshold") {
-      val c = computeNearDupClusters(spark, dir, threshold, maxIters)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      c.count()
-      c
+    graft.IndexCache.persisted(spark, "clusters", dir, threshold) {
+      computeNearDupClusters(spark, dir, threshold, maxIters)
     }
 
   private def computeNearDupClusters(spark: SparkSession, dir: String,
@@ -624,24 +606,7 @@ object Dedup {
     // fall through to the distributed loop below.
     val edgeCount = pairs.count()
     if (edgeCount <= 10_000_000L) {
-      val es = pairs.collect()
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x // path compression
-        while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      es.foreach { case (a, b) =>
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { // min root wins -> rep is the component minimum
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-      }
-      val labels = parent.keysIterator.map(v => (v, find(v))).toSeq
-        .toDF("doc_id", "rep0")
+      val labels = unionFindReps(pairs.collect()).toDF("doc_id", "rep0")
       return Tables.documents(spark, dir).select(col("doc_id"))
         .join(broadcast(labels), Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("rep0"), col("doc_id")).as("rep_id"))
@@ -775,19 +740,16 @@ object Dedup {
     * instead of extra work on every one of the O(candidates) pairs.
     */
   def normalizedEmbeddings(spark: SparkSession, dir: String): DataFrame =
-    graft.IndexCache.getOrBuild(spark, s"norm-emb:$dir") {
+    graft.IndexCache.persisted(spark, "norm-emb", dir) {
       // widen BEFORE persist so the downstream distance kernels see
       // multiple cached partitions, not the fixture's one split — CAPPED
       // at 8 (see gramHashSets: executor-width memos tax every cheap
       // multi-stage consumer with one task launch per cached partition)
-      val n = l2Normalize(graft.plans.GraftOps.widenTo(
+      l2Normalize(graft.plans.GraftOps.widenTo(
           Tables.embeddings(spark, dir)
             .select(col("vec_id"),
               VectorFunctions.toDoubleArray(col("embedding")).as("v")),
           math.min(8, spark.sparkContext.defaultParallelism)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      n.count()
-      n
     }
 
   /** Exact cosine-similar pair mining over embeddings: all pairs with
@@ -840,7 +802,7 @@ object Dedup {
     // registered `anchor-flat` driver-artifact bound (visible to
     // BoundAuditSweepSpec, closing the r11 escape hatch).
     val (aIds, aFlat, _) = graft.IndexCache.getOrBuild(spark,
-        s"anchor-flat:$dir:$anchorTarget") {
+        "anchor-flat", dir, anchorTarget) {
       val stride = math.max(1L, n.count() / anchorTarget)
       collectFlat(n.filter(pmod(col("vec_id"), lit(stride)) === 0))
     }
@@ -935,8 +897,8 @@ object Dedup {
     // stale flat matrix to the exact yardstick. The count is one cheap
     // action on what is in practice the persisted norm cache.
     val (ids, flat, _) = graft.IndexCache.getOrBuild(spark,
-        s"neardup-oracle-corpus:${n.queryExecution.analyzed.semanticHash()}" +
-          s":${n.count()}") {
+        "neardup-oracle-corpus", n.queryExecution.analyzed.semanticHash(),
+        n.count()) {
       collectFlat(n)
     }
     val bc = spark.sparkContext.broadcast((ids, flat))
@@ -1057,7 +1019,7 @@ object Dedup {
     * (same +0.01, same normalize-then-dot fold order).
     */
   def plantedNormalizedEmbeddings(spark: SparkSession, dir: String): DataFrame =
-    graft.IndexCache.getOrBuild(spark, s"norm-emb-planted:$dir") {
+    graft.IndexCache.persisted(spark, "norm-emb-planted", dir) {
       // deliberately NOT widened: the dbscan/LSH consumers run many
       // CHEAP stages over this persisted relation (banding explodes,
       // degree rollups, component joins), and 32-partition cached
@@ -1069,10 +1031,7 @@ object Dedup {
         VectorFunctions.toDoubleArray(col("embedding")).as("v"))
       val planted = base.select((col("vec_id") + 100000L).as("vec_id"),
         transform(col("v"), x => x + lit(0.01)).as("v"))
-      val n = l2Normalize(base.union(planted))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      n.count()
-      n
+      l2Normalize(base.union(planted))
     }
 
   /** [[plantedNormalizedEmbeddings]] over a deterministic ≤`target`
@@ -1092,18 +1051,15 @@ object Dedup {
     val n = Tables.embeddings(spark, dir).count()
     val stride = (n + target - 1) / target
     if (stride == 1L) plantedNormalizedEmbeddings(spark, dir)
-    else graft.IndexCache.getOrBuild(spark,
-        s"norm-emb-planted:$dir:panel$target") {
+    else graft.IndexCache.persisted(spark,
+        "norm-emb-planted", dir, s"panel$target") {
       val base = Tables.embeddings(spark, dir)
         .filter(pmod(col("vec_id"), lit(stride)) === 0)
         .select(col("vec_id"), VectorFunctions.toDoubleArray(col("embedding"))
           .as("v"))
       val planted = base.select((col("vec_id") + 100000L).as("vec_id"),
         transform(col("v"), x => x + lit(0.01)).as("v"))
-      val p = l2Normalize(base.union(planted))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
+      l2Normalize(base.union(planted))
     }
   }
 
@@ -1515,7 +1471,7 @@ object Dedup {
     val base = normalizedEmbeddings(spark, dir)
       .select(col("vec_id"), col("nv").as("emb"))
     val cents = graft.IndexCache.getOrBuild(spark,
-      s"semdedup-cents:$dir:$nClusters") {
+        "semdedup-cents", dir, nClusters) {
       graft.knn.IvfKnn.trainCentroids(base, nClusters).map(_.toArray).toArray
     }
     val assigned = graft.knn.IvfKnn.assignCids(base, cents)

@@ -102,27 +102,27 @@ object EmbeddingStats {
     // star-contraction fixpoint is a build (charged to
     // bench_build_mutual_knn with the pair relation it contracts);
     // the declared row serves the persisted labels
-    graft.IndexCache.getOrBuild(spark, s"mutual-knn-clusters:$dir:$k") {
+    graft.IndexCache.persisted(spark, "mutual-knn-clusters", dir, k) {
       import spark.implicits._
-      val pairs = graft.knn.ExactKnn.mutualKnnPairs(spark, dir, k)
+      val mutual = graft.knn.ExactKnn.mutualKnnPairs(spark, dir, k)
         .select(col("vec_a").as("u"), col("vec_b").as("v"))
+      // the self-join runs once: the cutover count and the collect both
+      // read the checkpointed edges (same idiom as Dedup's LSH leg)
+      val pairs = mutual.localCheckpoint(true)
       // same cutover as Dedup.nearDupClusters: the mutual-pair edge
       // set is panel-bounded (<= panel·k rows at every tier) — far
       // under the 10M-edge driver bound — so path-compressed
       // union-find labels it with zero scheduled stages; the
       // star-contraction loop stays as the past-cutover leg (identical
-      // output: component = min node id in both)
-      val labeled =
-        if (pairs.count() <= 10000000L)
-          Dedup.unionFindReps(pairs.as[(Long, Long)].collect())
-            .toDF("vec_id", "cluster")
-        else
-          GraphOps.starContractionComponents(pairs)
-            .select(col("node").as("vec_id"), col("component").as("cluster"))
-      val c = labeled
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      c.count()
-      c
+      // output: component = min node id in both). That leg keeps the
+      // uncheckpointed lineage, so its persisted labels can be
+      // recomputed after a bench cache release drops checkpoint blocks.
+      if (pairs.count() <= 10000000L)
+        Dedup.unionFindReps(pairs.as[(Long, Long)].collect())
+          .toDF("vec_id", "cluster")
+      else
+        GraphOps.starContractionComponents(mutual)
+          .select(col("node").as("vec_id"), col("component").as("cluster"))
     }
 
   /** Pairwise euclidean distances between per-label centroids — the
@@ -373,15 +373,12 @@ object EmbeddingStats {
   private def quantizedVectors(spark: SparkSession, dir: String,
       q: Long): org.apache.spark.sql.Dataset[(Long, Array[Long])] = {
     import spark.implicits._
-    graft.IndexCache.getOrBuild(spark, s"kmeans-quant:$q:$dir") {
-      val d = Tables.embeddings(spark, dir)
+    graft.IndexCache.persisted(spark, "kmeans-quant", q, dir) {
+      Tables.embeddings(spark, dir)
         .select(col("vec_id"),
           transform(col("embedding").cast("array<double>"),
             x => round(x * q, 0).cast("long")).as("qv"))
         .as[(Long, Array[Long])]
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      d.count()
-      d
     }
   }
 
@@ -421,7 +418,7 @@ object EmbeddingStats {
     */
   private[graft] def kmeansCentroids(spark: SparkSession, dir: String,
       k: Int = 8, iters: Int = 3, q: Long = 1000000L): Array[Array[Long]] =
-    graft.IndexCache.getOrBuild(spark, s"kmeans-cents:$k:$iters:$q:$dir") {
+    graft.IndexCache.getOrBuild(spark, "kmeans-cents", k, iters, q, dir) {
       import spark.implicits._
       val data = quantizedVectors(spark, dir, q)
       var cents: Array[Array[Long]] = data.orderBy(col("vec_id")).limit(k)
@@ -603,7 +600,7 @@ object EmbeddingStats {
     */
   private[graft] def labelCentroids(spark: SparkSession, dir: String,
       q: Long = 1000000L): (Array[Int], Array[Array[Long]]) =
-    graft.IndexCache.getOrBuild(spark, s"rocchio-cents:$q:$dir") {
+    graft.IndexCache.getOrBuild(spark, "rocchio-cents", q, dir) {
       import spark.implicits._
       val (_, _, splitAt, _) = graft.knn.ExactKnn.split(spark, dir)
       val train = quantizedVectors(spark, dir, q)

@@ -42,7 +42,7 @@ object GraphOps {
     */
   private def bipartiteTrans(spark: SparkSession,
       dir: String): (DataFrame, DataFrame, Long) =
-    graft.IndexCache.getOrBuild(spark, s"graph-bipartite-trans:$dir") {
+    graft.IndexCache.getOrBuild(spark, "graph-bipartite-trans", dir) {
       val und = Tables.events(spark, dir)
         .groupBy(col("user_id"), col("event_type"))
         .agg(count(lit(1)).as("w"))
@@ -104,7 +104,7 @@ object GraphOps {
     val (trans, nodes, _) = bipartiteTrans(spark, dir)
     // one driver-side scalar (the seed id), memoized per dataset so
     // repeated PPR calls don't re-scan events for one number
-    val seed = graft.IndexCache.getOrBuild(spark, s"graph-ppr-seed:$dir") {
+    val seed = graft.IndexCache.getOrBuild(spark, "graph-ppr-seed", dir) {
       "u:" + Tables.events(spark, dir)
         .agg(min(col("user_id"))).head().getLong(0)
     }
@@ -154,33 +154,27 @@ object GraphOps {
     * consumer read; memoized + persisted per dataset.
     */
   private def custPartPairs(spark: SparkSession, dir: String): DataFrame =
-    graft.IndexCache.getOrBuild(spark, s"cust-part-pairs:$dir") {
-      val cp = Tables.lineitem(spark, dir)
+    graft.IndexCache.persisted(spark, "cust-part-pairs", dir) {
+      Tables.lineitem(spark, dir)
         .join(Tables.orders(spark, dir),
           col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
         .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cp.count()
-      cp
     }
 
   private def copurchaseCounts(spark: SparkSession, dir: String): DataFrame =
-    graft.IndexCache.getOrBuild(spark, s"copurchase-counts:$dir") {
+    graft.IndexCache.persisted(spark, "copurchase-counts", dir) {
       // NOTE kept as the codegen'd equi-self-join deliberately: a
       // grouped collect_set + typed flatMap variant (one fewer shuffle
       // on paper) measured 5.9 s vs 3.7 s here — the 7M-pair emission
       // through Scala tuple encoders loses whole-stage codegen and
       // costs more than the shuffle it saves at this deg² volume.
       val cp = custPartPairs(spark, dir)
-      val counts = cp.toDF("c1", "p").join(cp.toDF("c2", "p2"),
+      cp.toDF("c1", "p").join(cp.toDF("c2", "p2"),
           col("p") === col("p2") && col("c1") < col("c2"))
         .groupBy(col("c1").as("u"), col("c2").as("v"))
         .agg(count(lit(1)).as("shared"))
         .filter(col("shared") >= 2)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      counts.count() // materialize once; every minShared slice reads it
-      counts
     }
 
   /** Item–item co-purchase counts — the TRANSPOSE of
@@ -193,16 +187,13 @@ object GraphOps {
     * ultra-hot baskets before pairing). Memoized per dataset.
     */
   private[graft] def itemPairCounts(spark: SparkSession, dir: String): DataFrame =
-    graft.IndexCache.getOrBuild(spark, s"copurchase-itempairs:$dir") {
+    graft.IndexCache.persisted(spark, "copurchase-itempairs", dir) {
       val cp = custPartPairs(spark, dir)
-      val counts = cp.toDF("c", "p1").join(cp.toDF("c2", "p2"),
+      cp.toDF("c", "p1").join(cp.toDF("c2", "p2"),
           col("c") === col("c2") && col("p1") < col("p2"))
         .groupBy(col("p1"), col("p2"))
         .agg(count(lit(1)).as("cnt"))
         .filter(col("cnt") >= 2)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      counts.count()
-      counts
     }
 
   /** BASKET COMPLETION off the item-item transpose: for every
@@ -259,18 +250,15 @@ object GraphOps {
     */
   private[graft] def itemNeighborListsDF(spark: SparkSession, dir: String,
       nbrCap: Int = 20): DataFrame =
-    graft.IndexCache.getOrBuild(spark, s"item-nbr-df:$dir:$nbrCap") {
+    graft.IndexCache.persisted(spark, "item-nbr-df", dir, nbrCap) {
       val ip = itemPairCounts(spark, dir)
       val sym = ip.select(col("p1").as("p"), col("p2").as("rec"), col("cnt"))
         .unionAll(ip.select(col("p2").as("p"), col("p1").as("rec"),
           col("cnt")))
-      val df = graft.plans.GraftOps.topKPerGroup(sym, Seq("p"),
+      graft.plans.GraftOps.topKPerGroup(sym, Seq("p"),
           Seq(("cnt", false), ("rec", true)), nbrCap)
         .select(col("p").cast("long"), col("rec").cast("long"),
           col("cnt").cast("long").as("n"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
     }
 
   /** [[itemNeighborListsDF]] collected to a driver map. Bound: callers
@@ -280,7 +268,7 @@ object GraphOps {
     */
   private[graft] def itemNeighborLists(spark: SparkSession, dir: String,
       nbrCap: Int = 20): Map[Long, Array[(Long, Long)]] =
-    graft.IndexCache.getOrBuild(spark, s"item-nbr-lists:$dir:$nbrCap") {
+    graft.IndexCache.getOrBuild(spark, "item-nbr-lists", dir, nbrCap) {
       import spark.implicits._
       itemNeighborListsDF(spark, dir, nbrCap)
         .as[(Long, Long, Long)].collect()
@@ -296,7 +284,7 @@ object GraphOps {
   private[graft] def itemNeighborBroadcast(spark: SparkSession, dir: String,
       nbrCap: Int = 20)
       : org.apache.spark.broadcast.Broadcast[Map[Long, Array[(Long, Long)]]] =
-    graft.IndexCache.getOrBuild(spark, s"item-nbr-bc:$dir:$nbrCap") {
+    graft.IndexCache.getOrBuild(spark, "item-nbr-bc", dir, nbrCap) {
       spark.sparkContext.broadcast(itemNeighborLists(spark, dir, nbrCap))
     }
 
@@ -418,7 +406,7 @@ object GraphOps {
 
   def copurchaseEdges(spark: SparkSession, dir: String,
       minShared: Int = 2): DataFrame =
-    graft.IndexCache.getOrBuild(spark, s"copurchase:$dir:$minShared") {
+    graft.IndexCache.persisted(spark, "copurchase", dir, minShared) {
       // each slice persists its own (u,v) projection: consumers like
       // the label-propagation rounds join it repeatedly, and a derived
       // filter-over-cache loses the in-memory stats that keep those
@@ -426,12 +414,9 @@ object GraphOps {
       // 5.6 s without this). The expensive pair EXPANSION still runs
       // once, in copurchaseCounts.
       val counts = copurchaseCounts(spark, dir)
-      val edges = (if (minShared <= 2) counts
+      (if (minShared <= 2) counts
         else counts.filter(col("shared") >= minShared))
         .select("u", "v")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      edges.count()
-      edges
     }
 
   /** Single-source BFS over the co-purchase graph: distance (hop
@@ -465,17 +450,13 @@ object GraphOps {
     */
   def bidirAdjacency(spark: SparkSession, dir: String,
       minShared: Int = 2): DataFrame =
-    graft.IndexCache.getOrBuild(spark,
-        s"copurchase-bidir:$dir:$minShared") {
+    graft.IndexCache.persisted(spark, "copurchase-bidir", dir, minShared) {
       val e = copurchaseEdges(spark, dir, minShared)
-      val b = e.select(col("u").cast("long").as("u"),
+      e.select(col("u").cast("long").as("u"),
           col("v").cast("long").as("v"))
         .unionAll(e.select(col("v").cast("long").as("u"),
           col("u").cast("long").as("v")))
         .repartition(col("u"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      b.count()
-      b
     }
 
   /** Degree distribution of the co-purchase graph — the first QA
@@ -563,17 +544,14 @@ object GraphOps {
     */
   private[graft] def weightedAdjacency(spark: SparkSession, dir: String,
       minShared: Int = 4): DataFrame =
-    graft.IndexCache.getOrBuild(spark, s"graph-sssp-adj:$dir:$minShared") {
+    graft.IndexCache.persisted(spark, "graph-sssp-adj", dir, minShared) {
       val e0 = copurchaseCounts(spark, dir)
         .filter(col("shared") >= minShared)
         .select(col("u").cast("long").as("u"), col("v").cast("long").as("v"),
           expr("1000 div shared").cast("long").as("w"))
-      val bidir = e0
+      e0
         .unionAll(e0.select(col("v").as("u"), col("u").as("v"), col("w")))
         .repartition(col("u"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      bidir.count()
-      bidir
     }
 
   def weightedSssp(spark: SparkSession, dir: String, rounds: Int = 6,
@@ -733,14 +711,11 @@ object GraphOps {
     */
   private[graft] def degreesOf(spark: SparkSession, dir: String,
       minShared: Int = 2): DataFrame =
-    graft.IndexCache.getOrBuild(spark, s"graph-deg:$dir:$minShared") {
+    graft.IndexCache.persisted(spark, "graph-deg", dir, minShared) {
       val e = copurchaseEdges(spark, dir, minShared)
-      val deg = e.select(col("u").as("node"))
+      e.select(col("u").as("node"))
         .unionAll(e.select(col("v").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      deg.count()
-      deg
     }
 
   /** The TRIANGLE relation (x, y, z — each triangle exactly once),
@@ -758,7 +733,7 @@ object GraphOps {
     */
   private[graft] def trianglesOf(spark: SparkSession, dir: String,
       minShared: Int = 2): DataFrame =
-    graft.IndexCache.getOrBuild(spark, s"graph-tri:$dir:$minShared") {
+    graft.IndexCache.persisted(spark, "graph-tri", dir, minShared) {
       val edges = copurchaseEdges(spark, dir, minShared)
       val deg = degreesOf(spark, dir, minShared)
       // orient: (a -> b) iff (deg(a), a) < (deg(b), b); ids are unique
@@ -792,13 +767,10 @@ object GraphOps {
         .select(col("a"), col("b"), col("c"))
       // the closing-edge probe broadcasts (|E| keys, a few MB): the
       // wedge relation — the big side — never shuffles
-      val tri = wedges
+      wedges
         .join(broadcast(oriented.select(col("a").as("b"), col("b").as("c"))),
           Seq("b", "c"), "left_semi")
         .select(col("a").as("x"), col("b").as("y"), col("c").as("z"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      tri.count()
-      tri
     }
 
   def triangleCensus(spark: SparkSession, dir: String,
@@ -1060,12 +1032,8 @@ object GraphOps {
     // join + two aggregations) before the memo (§7.2); synchronous
     // min-tie LPA is a pure function of the graph, so the persisted
     // relation is bit-identical to a fresh run
-    graft.IndexCache.getOrBuild(spark,
-        s"graph-labels:$dir:$minShared:$rounds") {
-      val l = labelPropagationUncached(spark, dir, minShared, rounds)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      l.count()
-      l
+    graft.IndexCache.persisted(spark, "graph-labels", dir, minShared, rounds) {
+      labelPropagationUncached(spark, dir, minShared, rounds)
     }
 
   /** The LPA fixpoint as a PURE RDD loop over primitive pairs — the

@@ -45,8 +45,8 @@ object HybridSearch {
   private def rrfFused(spark: SparkSession, dir: String,
       terms: Seq[String], queryIdx: Long, depth: Int,
       kRrf: Int): DataFrame =
-    graft.IndexCache.getOrBuild(spark,
-        s"hybrid-rrf:$dir:${terms.mkString("+")}:$queryIdx:$depth:$kRrf") {
+    graft.IndexCache.persisted(spark, "hybrid-rrf", dir, terms, queryIdx,
+        depth, kRrf) {
       // lexical leg: top-`depth` BM25 docs, ranked (score desc, doc_id)
       val bm = TextOps.bm25TopKExploded(spark, dir, terms, k = depth)
         .withColumn("bm25_rank", row_number().over(
@@ -61,16 +61,13 @@ object HybridSearch {
       // both legs are depth-bounded: the windows above and this join
       // run on k-sized inputs (single-partition windows are fine at
       // depth=100)
-      val fused = bm.join(vec, Seq("doc_id"), "full_outer")
+      bm.join(vec, Seq("doc_id"), "full_outer")
         .select(col("doc_id"),
           round(
             coalesce(lit(1.0) / (col("bm25_rank") + kRrf), lit(0.0)) +
             coalesce(lit(1.0) / (col("vec_rank") + kRrf), lit(0.0)), 6)
             .as("rrf"),
           col("bm25_rank"), col("vec_rank"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      fused.count()
-      fused
     }
 
   /** The SERVING-SIDE composition flagship — the full RAG retrieval

@@ -343,11 +343,8 @@ object Pipeline {
     * `bench_build_e2e` (the index-publication discipline).
     */
   def endToEndManifest(spark: SparkSession, dir: String): DataFrame =
-    graft.IndexCache.getOrBuild(spark, s"e2e-manifest:$dir") {
-      val m = endToEndCuration(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      m.count()
-      m
+    graft.IndexCache.persisted(spark, "e2e-manifest", dir) {
+      endToEndCuration(spark, dir)
     }
 
   /** The SHARD manifest of [[endToEndCuration]] — the pipeline's final
@@ -739,8 +736,8 @@ object Pipeline {
   private def classifierFeatures(spark: SparkSession, dir: String): DataFrame = {
     val w0 = split(col("text"), " ")
     val wcnt = size(w0).cast("double")
-    graft.IndexCache.getOrBuild(spark, s"lr-feats:$dir") {
-      val f = Tables.documents(spark, dir).select(
+    graft.IndexCache.persisted(spark, "lr-feats", dir) {
+      Tables.documents(spark, dir).select(
         col("doc_id"),
         col("lang"),
         when(TextOps.qualityOf(col("text"), w0) >= 0.5, 1.0)
@@ -752,9 +749,6 @@ object Pipeline {
           / wcnt / 10.0, lit(1.0)).as("f3"),
         (size(array_distinct(split(col("text"), " "))).cast("double")
           / wcnt).as("f4"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      f.count()
-      f
     }
   }
 
@@ -775,7 +769,7 @@ object Pipeline {
     * eval queries are untouched — PipelineSpec pins the weight vector.
     */
   private def classifierRows(spark: SparkSession, dir: String) =
-    graft.IndexCache.getOrBuild(spark, s"lr-rows:$dir") {
+    graft.IndexCache.getOrBuild(spark, "lr-rows", dir) {
       import spark.implicits._
       val r = classifierFeatures(spark, dir)
         .select(array(col("y"), col("f0"), col("f1"), col("f2"), col("f3"),
@@ -821,7 +815,7 @@ object Pipeline {
     */
   private[graft] def trainedWeights(spark: SparkSession, dir: String,
       iters: Int, lr: Double): Array[Double] =
-    graft.IndexCache.getOrBuild(spark, s"lr-weights:$dir:$iters:$lr") {
+    graft.IndexCache.getOrBuild(spark, "lr-weights", dir, iters, lr) {
       val rows = classifierRows(spark, dir)
       val n = rows.count().toDouble
       var w = Array.fill(5)(0.0)

@@ -95,7 +95,7 @@ object ScaleTechniques {
     */
   private[graft] def bucketedTables(spark: SparkSession,
       dir: String): (String, String) =
-    graft.IndexCache.getOrBuild(spark, s"buckets:$dir") {
+    graft.IndexCache.getOrBuild(spark, "buckets", dir) {
       val tag = java.lang.Integer.toHexString(dir.hashCode)
       val (ot, lt) = (s"graft_orders_b_$tag", s"graft_lineitem_b_$tag")
       // repartition by the bucket key FIRST (same murmur3 hash as the
@@ -141,7 +141,7 @@ object ScaleTechniques {
     * models.
     */
   private[graft] def partitionedOrdersPath(spark: SparkSession, dir: String): String =
-    graft.IndexCache.getOrBuild(spark, s"dpp_orders:$dir") {
+    graft.IndexCache.getOrBuild(spark, "dpp_orders", dir) {
       val p = graft.streaming.EventStream.cleanupOnExit(
         java.nio.file.Files.createTempDirectory("graft_part_orders")).toString
       Tables.orders(spark, dir)
@@ -286,7 +286,7 @@ object ScaleTechniques {
     */
   private[graft] def zorderPartitionedEventsPath(spark: SparkSession,
       dir: String, bits: Int = 8, shift: Int = 4): String =
-    graft.IndexCache.getOrBuild(spark, s"zorder-part:$dir:$bits:$shift") {
+    graft.IndexCache.getOrBuild(spark, "zorder-part", dir, bits, shift) {
       val p = graft.streaming.EventStream.cleanupOnExit(
         java.nio.file.Files.createTempDirectory("graft_zpart_events")).toString
       val mask = (1L << bits) - 1
@@ -390,7 +390,7 @@ object ScaleTechniques {
     */
   private[graft] def hilbertPartitionedEventsPath(spark: SparkSession,
       dir: String, bits: Int = 8, shift: Int = 4): String =
-    graft.IndexCache.getOrBuild(spark, s"hilbert-part:$dir:$bits:$shift") {
+    graft.IndexCache.getOrBuild(spark, "hilbert-part", dir, bits, shift) {
       val p = graft.streaming.EventStream.cleanupOnExit(
         java.nio.file.Files.createTempDirectory("graft_hpart_events")).toString
       val mask = (1L << bits) - 1
@@ -438,7 +438,7 @@ object ScaleTechniques {
     */
   private[graft] def layoutReader(spark: SparkSession, key: String,
       path: String): DataFrame =
-    graft.IndexCache.getOrBuild(spark, s"layout-reader:$key") {
+    graft.IndexCache.getOrBuild(spark, "layout-reader", key) {
       spark.read.parquet(path)
     }
 
@@ -710,8 +710,7 @@ object ScaleTechniques {
     */
   private[graft] def layoutEnvelopes(spark: SparkSession, dir: String,
       layout: String, rowsPerFile: Int = 4096): DataFrame =
-    graft.IndexCache.getOrBuild(spark,
-        s"layout-env:$dir:$layout:$rowsPerFile") {
+    graft.IndexCache.persisted(spark, "layout-env", dir, layout, rowsPerFile) {
       val epday = floor(unix_micros(col("l_shipdate")) / lit(86400000000L))
         .cast("long")
       val base = Tables.lineitem(spark, dir)
@@ -744,15 +743,12 @@ object ScaleTechniques {
           Seq("z" -> true, "l_orderkey" -> true, "l_linenumber" -> true)
         case other => throw new IllegalArgumentException(other)
       }
-      val env = graft.plans.GraftOps.globalRank(li, orderCols, "grk")
+      graft.plans.GraftOps.globalRank(li, orderCols, "grk")
         .withColumn("file_id", ((col("grk") - 1) / rowsPerFile).cast("long"))
         .groupBy(col("file_id"))
         .agg(min(col("epday")).as("dmn"), max(col("epday")).as("dmx"),
           min(col("supp")).as("smn"), max(col("supp")).as("smx"),
           count(lit(1)).as("n_rows"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      env.count()
-      env
     }
 
   def minmaxSkipping(spark: SparkSession, dir: String,

@@ -457,7 +457,7 @@ object TextOps {
   def languageIdNgram(spark: SparkSession, dir: String): DataFrame = {
     // profiles are a pure function of the corpus — train once per
     // dataset (build-once like the ANN indexes), classify many
-    val profiles = graft.IndexCache.getOrBuild(spark, s"langid-profiles:$dir") {
+    val profiles = graft.IndexCache.getOrBuild(spark, "langid-profiles", dir) {
       trainProfiles(Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"), col("text")), 40)
     }
@@ -536,21 +536,19 @@ object TextOps {
     * them broadcast. Charged to `bench_build_langid`.
     */
   private def nbModel(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame) =
-    graft.IndexCache.getOrBuild(spark, s"nb-model:$dir") {
-      val docs = nbDocs(spark, dir)
-      val isTest = col("doc_id") % 5 === 4
-      val trainWords = docs.filter(!isTest)
-        .select(col("lang"), explode(col("w")).as("word"))
-      val tf = trainWords.groupBy(col("word"), col("lang"))
-        .agg(count(lit(1)).as("tf"))
+      : (DataFrame, DataFrame) = {
+    lazy val docs = nbDocs(spark, dir)
+    val isTest = col("doc_id") % 5 === 4
+    lazy val trainWords = docs.filter(!isTest)
+      .select(col("lang"), explode(col("w")).as("word"))
+    val cls = graft.IndexCache.persisted(spark, "nb-model", dir, "classes") {
       val classTot = trainWords.groupBy(col("lang"))
         .agg(count(lit(1)).as("tot"))
       val nDocs = docs.filter(!isTest).groupBy(col("lang"))
         .agg(count(lit(1)).as("nd"))
       val nTrain = docs.filter(!isTest).agg(count(lit(1)).as("n"))
       val vSize = trainWords.agg(countDistinct(col("word")).as("v"))
-      val cls = classTot.join(nDocs, Seq("lang"))
+      classTot.join(nDocs, Seq("lang"))
         .crossJoin(nTrain).crossJoin(vSize)
         .select(col("lang").as("c"),
           round(log(col("nd").cast("double") / col("n")) * 1e6, 0)
@@ -558,18 +556,20 @@ object TextOps {
           round(log(lit(1.0) / (col("tot") + col("v"))) * 1e6, 0)
             .cast("long").as("unseen_q"),
           col("tot"), col("v"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val grid = trainWords.select(col("word").as("mword")).distinct()
+    }
+    val grid = graft.IndexCache.persisted(spark, "nb-model", dir, "grid") {
+      val tf = trainWords.groupBy(col("word"), col("lang"))
+        .agg(count(lit(1)).as("tf"))
+      trainWords.select(col("word").as("mword")).distinct()
         .crossJoin(cls.select(col("c"), col("tot"), col("v")))
         .join(tf, col("mword") === tf("word") && col("c") === tf("lang"),
           "left")
         .select(col("mword"), col("c").as("mlang"),
           round(log((coalesce(tf("tf"), lit(0L)) + lit(1.0)) /
             (col("tot") + col("v"))) * 1e6, 0).cast("long").as("qll"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cls.count(); grid.count()
-      (cls, grid)
     }
+    (cls, grid)
+  }
 
   /** Force the NB model build (bench charge hook). */
   private[graft] def prewarmNbModel(spark: SparkSession, dir: String): Long = {
@@ -638,19 +638,16 @@ object TextOps {
     * query).
     */
   def tokenizedDocs(spark: SparkSession, dir: String): DataFrame =
-    graft.IndexCache.getOrBuild(spark, s"tokens:$dir") {
+    graft.IndexCache.persisted(spark, "tokens", dir) {
       // widen BEFORE persist: the single-split fixture scan would
       // otherwise pin every downstream text consumer to one cached
       // partition (one core) for the whole session — CAPPED at 8 (see
       // Dedup.gramHashSets: executor-width memos tax every cheap
       // multi-stage consumer with one task launch per cached partition)
-      val t = graft.plans.GraftOps.widenTo(
+      graft.plans.GraftOps.widenTo(
           Tables.documents(spark, dir)
             .select(col("doc_id"), split(col("text"), " ").as("w")),
           math.min(8, spark.sparkContext.defaultParallelism))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      t.count()
-      t
     }
 
   /** Vocabulary coverage / OOV rate — the tokenizer-health signal:
@@ -1505,7 +1502,7 @@ object TextOps {
   private def trainedUnigram(spark: SparkSession, dir: String,
       vocabSize: Int, iters: Int, maxPiece: Int): Array[(String, Long, Long)] =
     graft.IndexCache.getOrBuild(spark,
-        s"unigram-vocab:$dir:$vocabSize:$iters:$maxPiece") {
+        "unigram-vocab", dir, vocabSize, iters, maxPiece) {
       import spark.implicits._
       val words = tokenizedDocs(spark, dir)
         .select(explode(col("w")).as("word"))
@@ -1606,7 +1603,7 @@ object TextOps {
   }
 
   def bpeVocab(spark: SparkSession, dir: String, nMerges: Int = 10): DataFrame =
-    graft.IndexCache.getOrBuild(spark, s"bpe-table:$dir:$nMerges") {
+    graft.IndexCache.getOrBuild(spark, "bpe-table", dir, nMerges) {
       trainBpeVocab(spark, dir, nMerges)
     }
 
@@ -1781,9 +1778,8 @@ object TextOps {
     // (it is the ed-join's index; persisting it is the right call at any
     // vocabulary size, and skipping it would recompute the scan +
     // distinct + expansion for each join side)
-    val keyed = graft.IndexCache.getOrBuild(spark,
-        s"fuzzy-keyed:$dir:$maxDist") {
-      val k = vocab.as[String].flatMap { w =>
+    val keyed = graft.IndexCache.persisted(spark, "fuzzy-keyed", dir, maxDist) {
+      vocab.as[String].flatMap { w =>
         val seen = scala.collection.mutable.LinkedHashSet(w)
         var frontier: Set[String] = Set(w)
         var d = 0
@@ -1795,9 +1791,6 @@ object TextOps {
         }
         seen.iterator.map(k => (k, w))
       }.toDF("key", "w")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      k.count()
-      k
     }
     // the verified PAIR relation is read by several declared rows (the
     // pair row itself, the typo dictionary, the cluster labeling) — r10
@@ -1805,17 +1798,14 @@ object TextOps {
     // as the heaviest declared row, so the pairs memoize like `keyed`,
     // charged to bench_build_fuzzy (vocab-bounded: |pairs| << |vocab|²
     // by the deletion-key blocking)
-    graft.IndexCache.getOrBuild(spark, s"fuzzy-pairs:$dir:$maxDist") {
-      val pairs = keyed.toDF("key", "w1")
+    graft.IndexCache.persisted(spark, "fuzzy-pairs", dir, maxDist) {
+      keyed.toDF("key", "w1")
         .join(keyed.toDF("key", "w2"), Seq("key"))
         .filter(col("w1") < col("w2"))
         .select("w1", "w2").distinct()
         .withColumn("dist", levenshtein(col("w1"), col("w2")))
         .filter(col("dist") <= maxDist)
         .select(col("w1"), col("w2"), col("dist").cast("long").as("dist"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pairs.count()
-      pairs
     }
   }
 
@@ -1887,7 +1877,7 @@ object TextOps {
     */
   def typoLabelDictionary(spark: SparkSession, dir: String,
       maxDist: Int = 2): DataFrame =
-    graft.IndexCache.getOrBuild(spark, s"fuzzy-labels:$dir:$maxDist") {
+    graft.IndexCache.persisted(spark, "fuzzy-labels", dir, maxDist) {
       import spark.implicits._
       val es = fuzzyWordPairs(spark, dir, maxDist)
         .select("w1", "w2").as[(String, String)].collect()
@@ -1906,11 +1896,8 @@ object TextOps {
           if (ra < rb) parent(rb) = ra else parent(ra) = rb
         }
       }
-      val labels = parent.keysIterator.map(v => (v, find(v))).toSeq
+      parent.keysIterator.map(v => (v, find(v))).toSeq
         .toDF("w", "rep0")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      labels.count()
-      labels
     }
 
   private val ngramViewSeq = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -1947,7 +1934,7 @@ object TextOps {
       nMerges: Int = 10): DataFrame = {
     import spark.implicits._
     val merges = graft.IndexCache.getOrBuild(spark,
-        s"bpe-merges:$dir:$nMerges") {
+        "bpe-merges", dir, nMerges) {
       bpeVocab(spark, dir, nMerges).collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2)))
         .sortBy(_._1).map(t => (t._2, t._3)).toSeq
@@ -2185,11 +2172,8 @@ object TextOps {
     */
   def winnowingFingerprints(spark: SparkSession, dir: String, k: Int = 5,
       window: Int = 4): DataFrame =
-    graft.IndexCache.getOrBuild(spark, s"winnow-fp:$dir:$k:$window") {
-      val df = winnowingOf(Tables.documents(spark, dir), k, window)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
+    graft.IndexCache.persisted(spark, "winnow-fp", dir, k, window) {
+      winnowingOf(Tables.documents(spark, dir), k, window)
     }
 
   private[graft] def winnowingOf(docs: DataFrame, k: Int,
@@ -2286,11 +2270,8 @@ object TextOps {
     // consumed by the pair row, the containment row, and BOTH detector
     // cross-checks (the containment-pairs discipline)
     if (k == 5 && window == 4 && maxDf == 64 && minShared == 2)
-      graft.IndexCache.getOrBuild(spark, s"winnow-pairs:$dir") {
-        val df = minedWinnowingPairs(spark, dir, k, window, maxDf, minShared)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        df.count()
-        df
+      graft.IndexCache.persisted(spark, "winnow-pairs", dir) {
+        minedWinnowingPairs(spark, dir, k, window, maxDf, minShared)
       }
     else minedWinnowingPairs(spark, dir, k, window, maxDf, minShared)
 

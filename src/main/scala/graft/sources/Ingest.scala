@@ -67,7 +67,7 @@ object Ingest {
     * the collect is the fixture-scale shortcut for it.
     */
   def ndjsonFixture(spark: SparkSession, dir: String): String =
-    graft.IndexCache.getOrBuild(spark, s"ndjson-fixture:$dir") {
+    graft.IndexCache.getOrBuild(spark, "ndjson-fixture", dir) {
       val rows = graft.Tables.embeddings(spark, dir)
         .orderBy("vec_id").select("vec_id", "embedding", "label").collect()
       val sb = new StringBuilder
@@ -385,7 +385,7 @@ object Ingest {
     */
   private[graft] def evolvedOrdersDir(spark: SparkSession,
       dir: String): String =
-    graft.IndexCache.getOrBuild(spark, s"orders-evolved:$dir") {
+    graft.IndexCache.getOrBuild(spark, "orders-evolved", dir) {
       val out = graft.streaming.EventStream.cleanupOnExit(
         java.nio.file.Files.createTempDirectory("graft-evolved")).toString
       val o = graft.Tables.orders(spark, dir)

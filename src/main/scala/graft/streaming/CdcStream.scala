@@ -57,7 +57,7 @@ object CdcStream {
     */
   private def stagedChangelogDir(spark: SparkSession, dir: String,
       nChunks: Int = 4): String =
-    graft.IndexCache.getOrBuild(spark, s"orders-cdc-dir:$dir:$nChunks") {
+    graft.IndexCache.getOrBuild(spark, "orders-cdc-dir", dir, nChunks) {
       val out = EventStream.cleanupOnExit(
         java.nio.file.Files.createTempDirectory("graft-cdc-log")).toString
       val log = graft.sources.Ingest.mergeChangelogShowcase(spark, dir)
@@ -102,8 +102,7 @@ object CdcStream {
     * loop, not the base snapshot.
     */
   private def baseStateDir(spark: SparkSession, dir: String): String =
-    graft.IndexCache.getOrBuild(spark,
-        s"orders-cdc-base:$dir:$NStateBuckets") {
+    graft.IndexCache.getOrBuild(spark, "orders-cdc-base", dir, NStateBuckets) {
       val base = EventStream.cleanupOnExit(
         java.nio.file.Files.createTempDirectory("graft-cdc-base")).toString
       graft.Tables.orders(spark, dir)
@@ -365,7 +364,7 @@ object CdcStream {
   private def appliedStateDirs(spark: SparkSession,
       dir: String): (String, String) =
     graft.IndexCache.getOrBuild(spark,
-        s"orders-cdc-applied:$dir:$NStateBuckets") {
+        "orders-cdc-applied", dir, NStateBuckets) {
       val staged = stagedChangelogDir(spark, dir)
       val base = baseStateDir(spark, dir)
       val stateRoot = EventStream.cleanupOnExit(
@@ -440,7 +439,7 @@ object CdcStream {
   private def versionChainDirs(spark: SparkSession,
       dir: String): (String, String) =
     graft.IndexCache.getOrBuild(spark,
-        s"orders-cdc-chain:$dir:$NStateBuckets:$NLogChunks") {
+        "orders-cdc-chain", dir, NStateBuckets, NLogChunks) {
       val base = baseStateDir(spark, dir)
       val stateRoot = EventStream.cleanupOnExit(
         java.nio.file.Files.createTempDirectory("graft-cdc-chain")).toString
@@ -534,7 +533,7 @@ object CdcStream {
   def expiredChainSummary(spark: SparkSession, dir: String): DataFrame = {
     val keepFrom = 2L
     val (root, base, nExpired) = graft.IndexCache.getOrBuild(spark,
-        s"orders-cdc-expired:$dir:$NLogChunks:$keepFrom") {
+        "orders-cdc-expired", dir, NLogChunks, keepFrom) {
       val (chainRoot, chainBase) = versionChainDirs(spark, dir)
       val root = EventStream.cleanupOnExit(
         java.nio.file.Files.createTempDirectory("graft-cdc-expire")).toString
@@ -577,8 +576,7 @@ object CdcStream {
     */
   private def morSidecarDirs(spark: SparkSession,
       dir: String): (String, String, String) =
-    graft.IndexCache.getOrBuild(spark,
-        s"orders-cdc-mor:$dir:$NStateBuckets") {
+    graft.IndexCache.getOrBuild(spark, "orders-cdc-mor", dir, NStateBuckets) {
       val base = baseStateDir(spark, dir)
       val root = EventStream.cleanupOnExit(
         java.nio.file.Files.createTempDirectory("graft-cdc-mor")).toString
@@ -677,7 +675,7 @@ object CdcStream {
     // `bench_build_cdc_stage` via prestage, and the declared row
     // measures the read-back proof that the fold lost nothing
     val out = graft.IndexCache.getOrBuild(spark,
-        s"orders-mor-compacted:$dir:$NStateBuckets") {
+        "orders-mor-compacted", dir, NStateBuckets) {
       val o = EventStream.cleanupOnExit(
         java.nio.file.Files.createTempDirectory("graft-mor-compact")).toString
       morRead(spark, base, dels, ins)
@@ -716,8 +714,7 @@ object CdcStream {
     */
   private def morChainDirs(spark: SparkSession,
       dir: String): (String, String) =
-    graft.IndexCache.getOrBuild(spark,
-        s"orders-mor-chain:$dir:$NLogChunks") {
+    graft.IndexCache.getOrBuild(spark, "orders-mor-chain", dir, NLogChunks) {
       val base = baseStateDir(spark, dir)
       val root = EventStream.cleanupOnExit(
         java.nio.file.Files.createTempDirectory("graft-mor-chain")).toString
@@ -1054,8 +1051,7 @@ object CdcStream {
     */
   private def morMinorLayout(spark: SparkSession,
       dir: String): (String, String, Long, Long, Long) =
-    graft.IndexCache.getOrBuild(spark,
-        s"orders-mor-minor:$dir:$NLogChunks") {
+    graft.IndexCache.getOrBuild(spark, "orders-mor-minor", dir, NLogChunks) {
       val (baseDir, chainRoot) = morChainDirs(spark, dir)
       val root = EventStream.cleanupOnExit(
         java.nio.file.Files.createTempDirectory("graft-mor-minor")).toString
@@ -1342,7 +1338,7 @@ object CdcStream {
     */
   private def ivmBaseAggDir(spark: SparkSession, dir: String): String =
     graft.IndexCache.getOrBuild(spark,
-        s"orders-cdc-ivm-base:$dir:$NIvmSegments") {
+        "orders-cdc-ivm-base", dir, NIvmSegments) {
       val out = EventStream.cleanupOnExit(
         java.nio.file.Files.createTempDirectory("graft-cdc-ivm-base")).toString
       graft.Tables.orders(spark, dir)

@@ -36,7 +36,7 @@ object CorpusStream {
     */
   private def stagedDocsDir(spark: SparkSession, dir: String): String = {
     val src = java.nio.file.Paths.get(s"$dir/documents.parquet")
-    graft.IndexCache.getOrBuild(spark, s"documents-stream-dir:$dir") {
+    graft.IndexCache.getOrBuild(spark, "documents-stream-dir", dir) {
       if (java.nio.file.Files.isDirectory(src)) src.toString
       else {
         val d = java.nio.file.Files.createTempDirectory("graft-docs-stream")

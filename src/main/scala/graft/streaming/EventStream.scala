@@ -229,7 +229,7 @@ object EventStream {
     */
   private def stagedEventsDir(spark: SparkSession, dir: String): String = {
     val src = java.nio.file.Paths.get(s"$dir/events.parquet")
-    graft.IndexCache.getOrBuild(spark, s"events-stream-dir:$dir") {
+    graft.IndexCache.getOrBuild(spark, "events-stream-dir", dir) {
       if (java.nio.file.Files.isDirectory(src)) src.toString
       else {
         val d = java.nio.file.Files.createTempDirectory("graft-events-stream")
@@ -433,7 +433,7 @@ object EventStream {
     * through untouched.
     */
   private def stagedDupEventsDir(spark: SparkSession, dir: String): String =
-    graft.IndexCache.getOrBuild(spark, s"events-stream-dup-dir:$dir") {
+    graft.IndexCache.getOrBuild(spark, "events-stream-dup-dir", dir) {
       val src = java.nio.file.Paths.get(s"$dir/events.parquet")
       val d = java.nio.file.Files.createTempDirectory("graft-events-dup")
       java.nio.file.Files.copy(src, d.resolve("events.parquet"))
@@ -565,7 +565,7 @@ object EventStream {
     * each other; their own rows are excluded after the sink.
     */
   private def stagedOuterEventsDir(spark: SparkSession, dir: String): String =
-    graft.IndexCache.getOrBuild(spark, s"events-stream-outer-dir:$dir") {
+    graft.IndexCache.getOrBuild(spark, "events-stream-outer-dir", dir) {
       stageWithSentinels(spark, dir, "graft-events-outer", farUs => Seq(
         (-1L, farUs, -1L, "error", 0.0, "{}"),
         (-2L, farUs, -2L, "click", 0.0, "{}")))
@@ -996,7 +996,7 @@ object EventStream {
     * the fixture; its own (never-closed) session is excluded by user_id.
     */
   private def stagedSessionsDir(spark: SparkSession, dir: String): String =
-    graft.IndexCache.getOrBuild(spark, s"events-stream-sessions-dir:$dir") {
+    graft.IndexCache.getOrBuild(spark, "events-stream-sessions-dir", dir) {
       stageWithSentinels(spark, dir, "graft-events-sess", farUs => Seq(
         (-1L, farUs, -1L, "click", 0.0, "{}")))
     }

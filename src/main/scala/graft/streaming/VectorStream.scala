@@ -74,7 +74,7 @@ object VectorStream {
     */
   private def stagedEmbeddingsDir(spark: SparkSession, dir: String): String = {
     val src = java.nio.file.Paths.get(s"$dir/embeddings.parquet")
-    graft.IndexCache.getOrBuild(spark, s"embeddings-stream-dir:$dir") {
+    graft.IndexCache.getOrBuild(spark, "embeddings-stream-dir", dir) {
       if (java.nio.file.Files.isDirectory(src)) src.toString
       else {
         val d = java.nio.file.Files.createTempDirectory("graft-emb-stream")
@@ -170,13 +170,9 @@ object VectorStream {
   def hnswTopKStreamed(spark: SparkSession, dir: String, k: Int = 10,
       ef: Int = 100, shards: Int = 16): DataFrame = {
     val staged = stagedEmbeddingsDir(spark, dir)
-    val (base, _, splitAt, _) = graft.knn.ExactKnn.split(spark, dir)
-    // same memo key as the batch path: one build serves both
-    val index = graft.IndexCache.getOrBuild(spark, s"hnsw:$dir:$shards") {
-      val ix = graft.knn.HnswKnn.buildIndex(base, shards).persist()
-      ix.graphs.count()
-      ix
-    }
+    val (_, _, splitAt, _) = graft.knn.ExactKnn.split(spark, dir)
+    // same memo as the batch path: one build serves both
+    val index = graft.knn.HnswKnn.memoIndex(spark, dir, shards)
     val outDir = resultDir("graft-hnsw-serve")
     val outSchema = StructType(Seq(
       StructField("qid", LongType), StructField("vec_id", LongType),

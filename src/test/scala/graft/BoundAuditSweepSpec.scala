@@ -71,7 +71,7 @@ class BoundAuditSweepSpec extends SparkSpec {
 
   test("an unregistered cache family fails loudly at build time") {
     val ex = intercept[IllegalStateException] {
-      IndexCache.getOrBuild(spark, "rogue-family:whatever") {
+      IndexCache.getOrBuild(spark, "rogue-family", "whatever") {
         Map(1L -> 2L)
       }
     }
@@ -82,7 +82,7 @@ class BoundAuditSweepSpec extends SparkSpec {
     // ndjson-fixture is registered at 4 leaf elements; a map this size
     // can never pass
     val ex = intercept[IllegalStateException] {
-      IndexCache.getOrBuild(spark, "ndjson-fixture:rogue-oversize") {
+      IndexCache.getOrBuild(spark, "ndjson-fixture", "rogue-oversize") {
         (1 to 64).map(i => i.toLong -> i.toLong).toMap
       }
     }

@@ -113,7 +113,8 @@ class CollectSiteLintSpec extends AnyFunSuite {
     ("Dedup.scala",
       ".collect().map(r => r.getLong(0) -> r.getLong(1)).toMap") ->
       (1, "limit(TopFreqGrams) df map inside the family:gram-topfreq build"),
-    ("Dedup.scala", "val es = pairs.collect()") ->
+    ("Dedup.scala",
+      "val labels = unionFindReps(pairs.collect()).toDF(\"doc_id\", \"rep0\")") ->
       (1, "<=10M-edge cutover-gated union-find leg (distributed " +
         "min-label propagation above)"),
     ("Dedup.scala",
