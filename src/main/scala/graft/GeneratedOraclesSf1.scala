@@ -8,8 +8,8 @@ package graft
   * `graft.Verify /tmp/graft_sf1` dump. Closes the r11 replay gap: the
   * sf0.01-generation VALUES pins bind only their generation tier, so
   * the whole-surface sf1 sweep had to skip them — with this overlay
-  * (applied by Verify when it detects the sf1 tier by its exact
-  * embeddings cardinality) the same hash gate replays them at 10x.
+  * (applied by Verify when the tier's `_GRAFT_TIER` marker names sf1)
+  * the same hash gate replays them at 10x.
   *
   * The pins live in a gzipped tab-separated resource
   * (`name\tbase64(sql)`): the 10k-row ANN batch relations exceed the

@@ -113,6 +113,25 @@ object IndexCache {
     ds
   }
 
+  /** Write an index checkpoint once per (session, family, parts) and
+    * return its path, `<tmpdir>/graft-<family>-lifecycle-<parts>`, where
+    * a String part (the dataset dir) contributes its hash in hex. The
+    * path is memoized under `<family>-ckpt`, so later callers only read
+    * it: the save is index publication, never part of a search.
+    */
+  def checkpoint(spark: SparkSession, family: String, parts: Any*)(
+      save: String => Unit): String =
+    getOrBuild(spark, s"$family-ckpt", parts: _*) {
+      val tag = parts.map {
+        case s: String => Integer.toHexString(s.hashCode)
+        case p => p.toString
+      }.mkString("-")
+      val path = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
+        s"/graft-$family-lifecycle-$tag"
+      save(path)
+      path
+    }
+
   /** Drop all entries (tests). Persisted datasets are left to Spark's
     * ContextCleaner / session stop.
     */

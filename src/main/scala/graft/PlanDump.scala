@@ -1,29 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only measurement tool (optimization guide §1/§7.2): dump
   * `.explain("formatted")` for named declared queries to
   * `<outDir>/<query>_<suffix>.txt` — the committed plan evidence for
   * the optimization rounds (`plans/r14/...`). Not part of the driver
   * contract; the driver never invokes it. Session config mirrors
-  * [[Bench]] so the dumped plan is the plan the bench measures.
+  * [[Bench]] (both use [[GraftSession]]), so the dumped plan is the
+  * plan the bench measures.
   *
   * Usage: runMain graft.PlanDump <outDir> <suffix> <q1,q2,...>
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val Array(outDir, suffix, namesCsv) = args.take(3)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (name <- namesCsv.split(",").map(_.trim).filter(_.nonEmpty)) {
       spark.sparkContext.setJobDescription(s"plandump: $name")

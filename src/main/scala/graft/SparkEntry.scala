@@ -2,14 +2,17 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.knn.{BinaryQuantKnn, ExactKnn, HnswKnn, IvfKnn, IvfPqKnn, MatryoshkaKnn, OpqKnn, PcaKnn, PqKnn, RandomProjection, SqKnn, VamanaKnn}
-import graft.operators.{Dedup, EmbeddingStats, Evaluation, EventOps, GraphOps, HybridSearch, Multimodal, Pipeline, Profiling, Relational, ScaleTechniques, Stats, TemporalJoins, TextOps}
+import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * Every implemented operator from SURVEY.md §2 appears in [[queries]];
-  * SQL-expressible ones also appear in [[oracleSql]] (DuckDB-compatible,
-  * same column names/aliases as the Spark output — the driver sorts
-  * columns by name and hash-compares values).
+/** The query surface: [[entry]] plus every declared query and its DuckDB
+  * oracle, keyed by name.
+  *
+  * A query is added as ONE [[Declared]] row in its family file under
+  * `graft/queries/`: the Spark body, the oracle SQL (same tables, same
+  * column names and aliases as the Spark output — the comparison
+  * sorts columns by name and hash-compares values) and, through its
+  * [[Declared.Family]], whether it reads memos. [[queries]] and [[oracleSql]]
+  * are derived from those rows; a repeated name fails at load.
   *
   * Determinism rules (SURVEY.md §7.4): distances rounded to 6dp before
   * ranking; money/measure sums on exact integer cents (ExactNum);
@@ -17,22 +20,6 @@ import graft.operators.{Dedup, EmbeddingStats, Evaluation, EventOps, GraphOps, H
   * tie-break.
   */
 object SparkEntry {
-
-  private val sqlKnnSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Register a [[graft.sources.KnnDataSource]] temp view via pure SQL
-    * and query it — the declared bodies are `spark.sql` text only, so
-    * the whole kNN path is reachable without any Scala API.
-    */
-  private def sqlKnn(s: SparkSession, d: String, options: String,
-      select: String => String,
-      provider: String = "graft.sources.KnnDataSource"): DataFrame = {
-    val v = s"graft_knn_sql_${sqlKnnSeq.incrementAndGet()}"
-    s.sql(s"""CREATE OR REPLACE TEMPORARY VIEW $v
-              USING $provider
-              OPTIONS (dir '$d', $options)""")
-    s.sql(select(v))
-  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The reference's LITERAL end-to-end pipeline
@@ -45,8455 +32,16 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     sources.Ingest.ndjsonTopKPipeline(spark, "/root/testdata/sf0.001")
 
-  /** Per-dataset memo of an ANN family's BATCH SEARCH RESULT: each
-    * eval_* row scores the exact same (qid, vec_id) table its
-    * knn_*_batch twin just produced — without this memo every eval
-    * re-ran the whole coarse scan + re-rank (the index builds were
-    * already memoized, the searches were not; ~15-20 s of duplicate
-    * work per bench at sf0.1). The result is (queries x k) rows —
-    * tiny to persist, same pattern as the exact ground truth
-    * (ExactKnn.topKBatch).
-    */
-  private def memoBatch(name: String,
-      f: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
-    (s, d) => IndexCache.persisted(s, "batch-result", name, d)(f(s, d))
+  /** Every declared row, family by family. */
+  val declared: Seq[Declared] = Seq(VectorQueries.rows, TextQueries.rows,
+    DedupQueries.rows, GraphQueries.rows, PipelineQueries.rows,
+    EventQueries.rows, OrderQueries.rows, StatsQueries.rows,
+    IngestQueries.rows, LayoutQueries.rows, RelationalQueries.rows).flatten
 
-  private val hnswBatch  = memoBatch("hnsw", HnswKnn.topKBatch(_, _))
-  private val bq256Batch = memoBatch("bq256", BinaryQuantKnn.topKBatchWide(_, _))
-  private val ivfBatch   = memoBatch("ivf", IvfKnn.topKBatch(_, _))
-  private val pqBatch    = memoBatch("pq", PqKnn.topKBatch(_, _))
-  private val opqBatch   = memoBatch("opq", OpqKnn.topKBatch(_, _))
-  private val vamanaBatch = memoBatch("vamana", VamanaKnn.topKBatch(_, _))
-  private val ivfpqBatch = memoBatch("ivfpq", IvfPqKnn.topKBatch(_, _))
-  private val rpBatch    = memoBatch("rp", RandomProjection.topKBatch(_, _))
-  private val pcaBatch   = memoBatch("pca", PcaKnn.topKBatch(_, _))
-  private val bqBatch    = memoBatch("bq", BinaryQuantKnn.topKBatch(_, _))
-  private val sqBatch    = memoBatch("sq", SqKnn.topKBatch(_, _))
-  private val mrlBatch   = memoBatch("mrl", MatryoshkaKnn.topKBatch(_, _))
+  private val byName = Declared.byName(declared)
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // — reference parity: vector search (SURVEY §2.1-2.5, §2.9) —
-    // the reference's literal main() as ONE row (S1 lenient NDJSON
-    // ingest + limit, S2 prefix split, J1/T1 exact top-k, P1
-    // first-sentence projection); oracle replays each step on the
-    // embeddings parquet (file order == vec_id by construction)
-    "ingest_ndjson_topk" ->
-      ((s, d) => sources.Ingest.ndjsonTopKPipeline(s, d)),
-    "knn_exact_single" -> ((s, d) => ExactKnn.topKSingle(s, d)),
-    "knn_exact_batch"  -> ((s, d) => ExactKnn.topKBatch(s, d)),
-    // reciprocal-kNN pairs over the base split (hub-free neighborhood
-    // evidence; mutual filter = one self-join of the n*k top-k rows)
-    "knn_mutual_pairs" -> ((s, d) => ExactKnn.mutualKnnPairs(s, d)),
-    // embedding-space clustering: star-contraction components of the
-    // mutual-kNN graph (no k-clusters hyperparameter, hub-free)
-    "emb_mutual_knn_clusters" ->
-      ((s, d) => EmbeddingStats.mutualKnnClusters(s, d)),
-    // k-occurrence histogram + skewness off the same memoized self
-    // top-k (the hub-pathology diagnostic of high-dim spaces)
-    "emb_hubness" -> ((s, d) => EmbeddingStats.hubness(s, d)),
-    "knn_euclidean_single" -> ((s, d) => ExactKnn.topKSingleEuclidean(s, d)),
-    "knn_range_search"     -> ((s, d) => ExactKnn.rangeSearch(s, d)),
-    // faceted search: one scan, one bounded-heap pass grouped by
-    // (query, label) — top matches within every category at once
-    "knn_per_label_batch"  -> ((s, d) => ExactKnn.topKPerLabelBatch(s, d)),
-    // the same range search EXECUTED BY the streaming engine: queries
-    // flow through the file stream source, the distance predicate runs
-    // in the stream-static broadcast join (stateless, append mode) —
-    // shares knn_range_search's oracle
-    "knn_range_streamed"   -> ((s, d) => streaming.VectorStream.rangeSearchStreamed(s, d)),
-    // ANN SERVING over the stream: broadcast shard-graph replicas,
-    // per-query scatter-gather + identical round-then-rank merge
-    // inside the micro-batch — streamed == batch exactly, shares
-    // knn_hnsw_batch's literal oracle
-    "knn_hnsw_streamed"    -> ((s, d) => streaming.VectorStream.hnswTopKStreamed(s, d)),
-    "knn_filtered_batch"   -> ((s, d) => ExactKnn.topKBatchFiltered(s, d)),
-    // filtered ANN on the shared HNSW graphs (post-filter + overfetch):
-    // literal-oracle pinned (GeneratedOracles); recall vs the exact
-    // filtered scan gated in HnswSpec
-    "knn_hnsw_filtered"    -> ((s, d) => HnswKnn.topKBatchFiltered(s, d)),
-    "knn_exact_after_insert" -> ((s, d) => ExactKnn.topKAfterInsert(s, d)),
-    // keyed delete (left-anti) then search: the oracle excludes the
-    // slab by predicate, so a hash-match proves the delete dropped
-    // exactly the keyed rows
-    "knn_exact_after_delete" -> ((s, d) => ExactKnn.topKAfterDelete(s, d)),
-    // the INDEX-side delete: the slab leaves the inverted file by the
-    // same keyed anti-join; exhaustive probe is exact -> same oracle
-    "knn_ivf_after_delete" -> ((s, d) => IvfKnn.topKAfterDelete(s, d)),
-    // the same mutation on the inverted-file family: insert_many into a
-    // built IVF index, exhaustive probe (= exact), shared oracle
-    "knn_ivf_after_insert" -> ((s, d) => IvfKnn.topKAfterInsert(s, d)),
-    // SQL-facing index search (DSv1 relation over the library entry
-    // points): the query bodies are pure SQL — shares knn_exact_single's
-    // oracle (exact backend); the HNSW view is approximate -> rows-only
-    "sql_knn_exact" -> ((s, d) => sqlKnn(s, d,
-      "backend 'exact', k '10', queryIdx '29'",
-      v => s"SELECT vec_id, dist FROM $v ORDER BY dist ASC, vec_id ASC")),
-    "sql_knn_hnsw" -> ((s, d) => sqlKnn(s, d,
-      "backend 'hnsw', k '10'",
-      v => s"SELECT qid, vec_id, dist, rk FROM $v")),
-    // the quantized families are reachable from SQL too (PQ standing in
-    // for pq/sq/ivfpq/rp — KnnDataSourceSpec pins all four to their
-    // Scala entry points); approximate -> rows-only
-    "sql_knn_pq" -> ((s, d) => sqlKnn(s, d,
-      "backend 'pq', k '10'",
-      v => s"SELECT qid, vec_id, dist, rk FROM $v")),
-    // the flat-graph family from pure SQL (shares knn_vamana_batch's
-    // literal pin — the view answers with the same shard graphs)
-    "sql_knn_vamana" -> ((s, d) => sqlKnn(s, d,
-      "backend 'vamana', k '10'",
-      v => s"SELECT qid, vec_id, dist, rk FROM $v")),
-    // Data Source V2 binding: same backends, plus the V2 source-boundary
-    // contracts — the qid predicate is PUSHED INTO the scan (negotiated
-    // via SupportsPushDownFilters) and the projection prunes dist/rk out
-    // of the read schema (KnnDataSourceSpec pins both in the executed
-    // plan); shares the exact-batch arithmetic so it carries an oracle
-    "sql_knn_v2" -> ((s, d) => {
-      val (_, _, splitAt, n) = ExactKnn.split(s, d)
-      val qid = splitAt + 25 % (n - splitAt) // same held-out-qid modulo as knn_exact_single
-      sqlKnn(s, d, "backend 'exact_batch', k '10'",
-        v => s"""SELECT vec_id, dist FROM $v
-                 WHERE qid = $qid ORDER BY dist ASC, vec_id ASC""",
-        provider = "graft.sources.KnnDataSourceV2")
-    }),
-    // DSv2 AGGREGATE pushdown contract: count(*) collapses inside the
-    // source to a one-row scan (KnnDataSourceSpec pins the plan shape)
-    "sql_knn_v2_count" -> ((s, d) =>
-      sqlKnn(s, d, "backend 'exact_batch', k '10'",
-        v => s"SELECT count(*) AS n FROM $v",
-        provider = "graft.sources.KnnDataSourceV2")),
-    // DSv2 TOP-N pushdown contract: ORDER BY dist LIMIT k collapses
-    // into the scan — no Sort above it (KnnDataSourceSpec pins the
-    // shape); total (dist, vec_id) order keeps the cut deterministic
-    "sql_knn_v2_topn" -> ((s, d) => {
-      val (_, _, splitAt, n) = ExactKnn.split(s, d)
-      val qid = splitAt + 25 % (n - splitAt)
-      sqlKnn(s, d, "backend 'exact_batch', k '10'",
-        v => s"""SELECT vec_id, dist FROM $v
-                 WHERE qid = $qid ORDER BY dist ASC, vec_id ASC LIMIT 5""",
-        provider = "graft.sources.KnnDataSourceV2")
-    }),
-    // user-supplied query vector from pure SQL (the reference's
-    // index.search(query)): the vector literal is fixture row 29, so
-    // the oracle is full-table knn of that row (self included, dist 0)
-    "sql_knn_search" -> ((s, d) => {
-      import s.implicits._
-      val vec = graft.Tables.embeddings(s, d)
-        .filter(org.apache.spark.sql.functions.col("vec_id") === 29L)
-        .select(graft.functions.VectorFunctions.toDoubleArray(
-          org.apache.spark.sql.functions.col("embedding")))
-        .as[Array[Double]].head()
-      sqlKnn(s, d, s"backend 'search', k '10', vector '${vec.mkString(",")}'",
-        v => s"SELECT vec_id, dist FROM $v ORDER BY dist ASC, vec_id ASC")
-    }),
-    // HNSW is approximate: no SQL oracle; quality is gated by the recall
-    // queries below + HnswSpec (the reference's own pattern, main.rs:89-93)
-    "knn_hnsw_single" -> ((s, d) => HnswKnn.topKSingle(s, d)),
-    "knn_hnsw_batch"  -> hnswBatch,
-    // build -> save -> load -> search as ONE declared query: proves a
-    // reloaded checkpoint answers identically (HnswSpec pins equality)
-    "knn_hnsw_lifecycle" -> ((s, d) => HnswKnn.topKBatchLifecycle(s, d)),
-    "eval_recall_exact_self" -> ((s, d) => {
-      val ex = ExactKnn.topKBatch(s, d).select("qid", "vec_id")
-      Evaluation.recall(ex, ex)
-    }),
-    "eval_precision_exact_self" -> ((s, d) => {
-      val ex = ExactKnn.topKBatch(s, d).select("qid", "vec_id")
-      Evaluation.precision(ex, ex)
-    }),
-    "eval_recall_hnsw" -> ((s, d) => Evaluation.recall(
-      hnswBatch(s, d).select("qid", "vec_id"),
-      ExactKnn.topKBatch(s, d).select("qid", "vec_id"))),
-    // the 100-TB evaluation mode: ground truth brute-forced only for a
-    // deterministic 1-in-10 query sample (O(n) instead of O(n²)), the
-    // ANN side semi-joined down to the same qids
-    // (no qid pre-filter needed: recall's (qid, vec_id) semi-join
-    // against the sampled ground truth already ignores unsampled qids)
-    "eval_recall_hnsw_sampled" -> ((s, d) => Evaluation.recall(
-      hnswBatch(s, d).select("qid", "vec_id"),
-      ExactKnn.topKBatchSampled(s, d).select("qid", "vec_id"))),
-    // the sampled ground truth ITSELF as a declared row with a REAL SQL
-    // oracle (not a literal): O(|sample|·n) on both engines, so this is
-    // the embedding row the 10x-tier hash replay can cover (the full
-    // exact-GT oracle is deliberately quadratic) — r10 verdict ask #5
-    "knn_exact_batch_sampled" ->
-      ((s, d) => ExactKnn.topKBatchSampled(s, d)),
-    "emb_hubness_sampled" ->
-      ((s, d) => EmbeddingStats.hubnessSampled(s, d)),
-    "knn_ivf_batch" -> ivfBatch,
-    // save (partitioned by cid) -> load -> probe: the reloaded scan
-    // prunes to the probed partitions (IvfKnnSpec pins PartitionFilters
-    // and bit-equality with the in-memory batch)
-    "knn_ivf_lifecycle" -> ((s, d) => IvfKnn.topKBatchLifecycle(s, d)),
-    "eval_recall_ivf" -> ((s, d) => Evaluation.recall(
-      ivfBatch(s, d).select("qid", "vec_id"),
-      ExactKnn.topKBatch(s, d).select("qid", "vec_id"))),
-    // MAP self-eval is oracle-exact: every hit's precision@rk is the
-    // exact double rk/rk = 1.0, so the average is order-independent
-    "eval_map_exact_self" -> ((s, d) => Evaluation.meanAveragePrecision(
-      ExactKnn.topKBatch(s, d),
-      ExactKnn.topKBatch(s, d).select("qid", "vec_id"))),
-    "eval_map_hnsw" -> ((s, d) => Evaluation.meanAveragePrecision(
-      hnswBatch(s, d),
-      ExactKnn.topKBatch(s, d).select("qid", "vec_id"))),
-    "eval_mrr_hnsw" -> ((s, d) => Evaluation.meanReciprocalRank(
-      hnswBatch(s, d),
-      ExactKnn.topKBatch(s, d).select("qid", "vec_id"))),
-    "eval_ndcg_hnsw" -> ((s, d) => Evaluation.ndcgAtK(
-      hnswBatch(s, d),
-      ExactKnn.topKBatch(s, d).select("qid", "vec_id"), 10)),
-    // operational surfaces: per-shard graph stats; recall-vs-ef curve
-    // (both approximate-index introspection -> rows-only, spec-gated)
-    "knn_hnsw_stats" -> ((s, d) => HnswKnn.indexStats(s, d)),
-    "eval_hnsw_ef_sweep" -> ((s, d) => Evaluation.hnswEfSweep(s, d)),
-    // re-rank depth (overfetch) curve for the PQ family — the third
-    // tuning surface after ef and beam; literal-pinned like its twins
-    "eval_pq_overfetch_sweep" ->
-      ((s, d) => Evaluation.pqOverfetchSweep(s, d)),
-    // the beam-width (L) operating curve on the Vamana graphs — the
-    // flagship family's ef-sweep twin (literal-pinned + spec-gated)
-    "eval_vamana_beam_sweep" ->
-      ((s, d) => Evaluation.vamanaBeamSweep(s, d)),
-    "knn_rp_batch" -> rpBatch,
-    "eval_recall_rp" -> ((s, d) => Evaluation.recall(
-      rpBatch(s, d).select("qid", "vec_id"),
-      ExactKnn.topKBatch(s, d).select("qid", "vec_id"))),
-    // data-dependent projection twin: covariance-eigenbasis reduction
-    "knn_pca_batch" -> pcaBatch,
-    // train -> save -> load -> search over the persisted basis/projection
-    "knn_pca_lifecycle" -> ((s, d) => PcaKnn.topKBatchLifecycle(s, d)),
-    "eval_recall_pca" -> ((s, d) => Evaluation.recall(
-      pcaBatch(s, d).select("qid", "vec_id"),
-      ExactKnn.topKBatch(s, d).select("qid", "vec_id"))),
-    "knn_pq_batch" -> pqBatch,
-    // PQ build -> save -> load -> search (bit-equal to the in-memory
-    // index; completes the checkpoint surface across HNSW/IVF/PQ)
-    "knn_pq_lifecycle" -> ((s, d) => PqKnn.topKBatchLifecycle(s, d)),
-    "eval_recall_pq" -> ((s, d) => Evaluation.recall(
-      pqBatch(s, d).select("qid", "vec_id"),
-      ExactKnn.topKBatch(s, d).select("qid", "vec_id"))),
-    // OPQ: eigenvalue-allocation rotation in front of the PQ substrate
-    // — balanced-variance subspaces, same ADC scan + exact re-rank
-    "knn_opq_batch" -> opqBatch,
-    // rotation + codebooks + codes -> save -> load -> search, bit-equal
-    // to the in-memory index (shares knn_opq_batch's literal pin)
-    "knn_opq_lifecycle" -> ((s, d) => OpqKnn.topKBatchLifecycle(s, d)),
-    // Vamana (DiskANN family): flat alpha-pruned graph per shard, the
-    // HnswKnn scatter-gather harness with a different index inside
-    "knn_vamana_batch" -> vamanaBatch,
-    "knn_vamana_lifecycle" ->
-      ((s, d) => VamanaKnn.topKBatchLifecycle(s, d)),
-    // insert_many into built shard graphs (the alpha-pass insert IS
-    // the build step), then search — literal-pinned + recall-gated
-    "knn_vamana_after_insert" ->
-      ((s, d) => VamanaKnn.topKAfterInsert(s, d)),
-    "eval_recall_vamana" -> ((s, d) => Evaluation.recall(
-      vamanaBatch(s, d).select("qid", "vec_id"),
-      ExactKnn.topKBatch(s, d).select("qid", "vec_id"))),
-    "eval_recall_opq" -> ((s, d) => Evaluation.recall(
-      opqBatch(s, d).select("qid", "vec_id"),
-      ExactKnn.topKBatch(s, d).select("qid", "vec_id"))),
-    // maximum inner product (MIPS): the recommender scoring mode
-    "knn_mips_single" -> ((s, d) => ExactKnn.topKSingleMips(s, d)),
-    // 1-bit sign quantization: XOR+popcount Hamming coarse scan over
-    // one-long-per-vector codes + exact re-rank (64x scan compression)
-    "knn_bq_batch" -> bqBatch,
-    "eval_recall_bq" -> ((s, d) => Evaluation.recall(
-      bqBatch(s, d).select("qid", "vec_id"),
-      ExactKnn.topKBatch(s, d).select("qid", "vec_id"))),
-    // the BQ family's SCALE operating point: 256 hyperplane bits (4 long
-    // words, still codegen'd XOR+popcount) — ScaleSpec shows the 64-bit
-    // sign code's recall decays at 10x sf0.1 while this holds >= 0.6
-    // with the same constant overfetch; rows-only + recall-gated
-    "knn_bq256_batch" -> bq256Batch,
-    "eval_recall_bq256" -> ((s, d) => Evaluation.recall(
-      bq256Batch(s, d).select("qid", "vec_id"),
-      ExactKnn.topKBatch(s, d).select("qid", "vec_id"))),
-    // composed-layout checkpoint: build -> save (cid-partitioned code
-    // lists) -> load -> search, bit-equal to the in-memory index
-    "knn_ivfpq_lifecycle" -> ((s, d) => IvfPqKnn.topKBatchLifecycle(s, d)),
-    // Matryoshka truncated-dimension coarse scan + exact re-rank
-    "knn_mrl_batch" -> mrlBatch,
-    "eval_recall_mrl" -> ((s, d) => Evaluation.recall(
-      mrlBatch(s, d).select("qid", "vec_id"),
-      ExactKnn.topKBatch(s, d).select("qid", "vec_id"))),
-    "knn_sq_batch" -> sqBatch,
-    "eval_recall_sq" -> ((s, d) => Evaluation.recall(
-      sqBatch(s, d).select("qid", "vec_id"),
-      ExactKnn.topKBatch(s, d).select("qid", "vec_id"))),
-    "knn_ivfpq_batch" -> ivfpqBatch,
-    "eval_recall_ivfpq" -> ((s, d) => Evaluation.recall(
-      ivfpqBatch(s, d).select("qid", "vec_id"),
-      ExactKnn.topKBatch(s, d).select("qid", "vec_id"))),
-    // — relational coverage (north-star; SURVEY §2.3/2.4 absent cats) —
-    "q1_pricing_summary"    -> Relational.q1PricingSummary _,
-    "q3_shipping_priority"  -> Relational.q3ShippingPriority _,
-    "q5_region_revenue"     -> Relational.q5RegionRevenue _,
-    "topk_orders_per_segment" -> Relational.topOrdersPerSegment _,
-    "rollup_lineitem"       -> Relational.rollupLineitem _,
-    "setop_priority_custkeys" -> Relational.setOpPriorityCustomers _,
-    "anti_customers_no_orders" -> Relational.customersWithoutOrders _,
-    "semi_customers_urgent" -> Relational.customersWithUrgentOrders _,
-    "fullouter_nation_coverage" -> Relational.nationCoverage _,
-    "sql_revenue_by_priority" -> Relational.sqlRevenueByPriority _,
-    "cube_lineitem" -> Relational.cubeLineitem _,
-    "q4_exists_late_discount" -> Relational.ordersWithLateDiscountedLines _,
-    "q18_large_orders" -> Relational.largeVolumeOrders _,
-    "window_customer_orders" -> Relational.customerOrderWindows _,
-    "window_analytics_extras" -> Relational.windowAnalyticsExtras _,
-    "scalar_part_showcase" -> Relational.partScalarShowcase _,
-    "pivot_priority_segment" -> Relational.pivotPrioritySegment _,
-    "setop_all_priorities" -> Relational.setOpAllVariants _,
-    "grouping_sets_lineitem" -> Relational.groupingSetsLineitem _,
-    "posexplode_tokens" -> Relational.posexplodeTokens _,
-    "argmax_events" -> Relational.argmaxEvents _,
-    "scalar_order_dates" -> Relational.orderDateParts _,
-    // regex extract / global replace / match-test (portable subset)
-    "scalar_regex_showcase" -> Relational.regexShowcase _,
-    "q6_forecast_revenue" -> Relational.q6ForecastRevenue _,
-    "q7_volume_shipping" -> Relational.q7VolumeShipping _,
-    "q8_market_share" -> Relational.q8MarketShare _,
-    "q10_returned_items" -> Relational.q10ReturnedItems _,
-    "q13_customer_distribution" -> Relational.q13CustomerDistribution _,
-    "q14_promo_effect" -> Relational.q14PromoEffect _,
-    "q15_top_supplier" -> Relational.q15TopSupplier _,
-    "q16_supplier_diversity" -> Relational.q16SupplierDiversity _,
-    "q17_small_qty_revenue" -> Relational.q17SmallQuantityRevenue _,
-    "q19_bracket_revenue" -> Relational.q19BracketRevenue _,
-    "q22_idle_balance" -> Relational.q22IdleBalance _,
-    "q2_min_cost_supplier" -> Relational.q2MinCostSupplier _,
-    "lateral_top_orders" -> Relational.lateralTopOrders _,
-    "scalar_subquery_max_qty" -> Relational.scalarSubqueryMaxQty _,
-    "q12_priority_shipping" -> Relational.q12PriorityShipping _,
-    "q9_profit_by_nation" -> Relational.q9ProfitByNation _,
-    "q11_important_parts" -> Relational.q11ImportantParts _,
-    "q20_excess_shippers" -> Relational.q20ExcessShippers _,
-    "q21_sole_suppliers" -> Relational.q21SoleSuppliers _,
-    // — temporal joins (as-of / range — custom operators) —
-    "asof_error_click"  -> TemporalJoins.asofErrorClick _,
-    "asof_next_click"   -> TemporalJoins.asofNextErrorClick _,
-    "range_events_5min" -> TemporalJoins.eventsWithin5min _,
-    // — dedup / near-dup detection (training-data pipeline ops) —
-    "dedup_exact"         -> Dedup.exactDuplicates _,
-    "dedup_ngram_jaccard" -> ((s, d) => Dedup.ngramJaccardPairs(s, d)),
-    // per-doc duplicated-shingle coverage (Lee et al. 2022 substring
-    // signal): linear-shape rollup on the memoized gram hashes
-    "dedup_gram_coverage" -> ((s, d) => Dedup.gramCoverage(s, d)),
-    // corpus-level duplicated-gram histogram (memorization-risk
-    // fingerprint): grams at each document frequency >= 2
-    "dedup_gram_spectrum" -> ((s, d) => Dedup.gramFrequencySpectrum(s, d)),
-    // exact substring-duplication spans (Lee et al. 2022): per doc,
-    // tokens inside an 8-gram repeated verbatim in another document
-    "dedup_substring_spans" -> ((s, d) => Dedup.substringSpans(s, d)),
-    // which feeds copy each other: memoized pair relation x source
-    // tags, exact micro-unit mean similarity per source pair
-    "dedup_cross_source" -> ((s, d) => Dedup.crossSourceDupMatrix(s, d)),
-    // minhash/simhash use engine-side hashing -> rows-only check; quality
-    // gated by DedupSpec (exact-equality vs brute force)
-    "dedup_minhash_lsh"   -> ((s, d) => Dedup.minhashLshPairs(s, d)),
-    "dedup_simhash"       -> ((s, d) => Dedup.simhashPairs(s, d)),
-    "neardup_embedding"   -> ((s, d) => Dedup.embeddingNearDupExact(s, d)),
-    // anchor-sampled dup-rate estimator: a ~50-row anchor panel whose
-    // stride derives from the corpus COUNT (r11 weak #1 closed: O(n·C)
-    // work, O(C·dim) bounded driver artifact) — sf1-replayable oracle
-    // (the embedding-family replay gap, r10 ask #5)
-    "neardup_embedding_sampled" ->
-      ((s, d) => Dedup.embeddingNearDupExactSampled(s, d)),
-    // the scale path AT its design regime: every vector gets a planted
-    // near-dup (+0.01 shift, sim ~0.9968; mirrored in the oracle), then
-    // 16x16-bit banded LSH candidates + exact verification at 0.98 —
-    // <1% of the pair space is ever inspected (DedupSpec pins the
-    // candidate count; sub-0.5 mining stays on the exact leg above)
-    "neardup_embedding_lsh" -> ((s, d) => Dedup.embeddingNearDupLshQuery(s, d)),
-    // incremental (batch-vs-corpus) dedup: the new 10% slice's bands
-    // probe the precomputed corpus band table — O(|batch|) per batch,
-    // the corpus never re-pairs; LSH recall ~1 at j>=0.9, so the
-    // exact-verified output equals the oracle's full Jaccard join
-    "dedup_incremental_minhash" -> ((s, d) => Dedup.incrementalMinhashPairs(s, d)),
-    // the same miner EXECUTED BY the streaming engine at ingestion
-    // time: new docs sign themselves in-flight, probe the standing
-    // corpus band table in stateless stream-static joins — shares the
-    // batch row's oracle
-    "dedup_incremental_streamed" -> ((s, d) => streaming.CorpusStream.incrementalMinhashStreamed(s, d)),
-    "dedup_clusters"      -> ((s, d) => Dedup.nearDupClusters(s, d)),
-    // retention policy on those clusters: keep the best copy per cluster
-    "dedup_keep_best"     -> Dedup.keepBestPerCluster _,
-    // SemDeDup (cluster-then-compare): k-means assignment is engine-side
-    // -> rows-only; DedupSpec pins exact equality to the brute-force
-    // within-cluster pair set + the planted-duplicate prune
-    "dedup_semantic"      -> ((s, d) => Dedup.semanticDedup(s, d)),
-    // C4-style span-level dedup with document reconstruction
-    "text_span_dedup"     -> ((s, d) => TextOps.spanDedup(s, d)),
-    // — text analysis (training-data pipeline ops) —
-    "text_tokens"      -> TextOps.tokenCounts _,
-    "text_quality"     -> TextOps.qualityScores _,
-    // the same per-row scoring PRODUCED BY the streaming engine at
-    // ingestion time (stateless projection in the micro-batch) —
-    // shares text_quality's oracle; completes the ingestion trio
-    // (dedup, index, quality) executed by the streaming engine
-    "text_quality_streamed" ->
-      ((s, d) => graft.streaming.CorpusStream.qualityScoresStreamed(s, d)),
-    // per-language median gate: micro-unit medians broadcast back,
-    // map-only keep/drop flags in exact long arithmetic
-    "text_quality_gate" -> ((s, d) => TextOps.qualityGate(s, d)),
-    // tokenizer health: per-doc OOV rate vs the deterministic
-    // top-1000 corpus vocabulary (broadcast membership, no vocab sort)
-    "text_vocab_coverage" -> ((s, d) => TextOps.vocabCoverage(s, d)),
-    "text_langid"      -> TextOps.languageId _,
-    // n-gram langid trains profiles on the corpus: rows-only; accuracy
-    // vs the ground-truth lang column is gated in TextOpsSpec
-    "text_langid_ngram" -> ((s, d) => TextOps.languageIdNgram(s, d)),
-    "text_fingerprint" -> TextOps.fingerprints _,
-    // MOSS winnowing: per-window min shingle hash, RIGHTMOST tie-break,
-    // distinct (pos, hash) selection — map-only per document
-    "text_winnowing" -> ((s, d) => TextOps.winnowingFingerprints(s, d)),
-    // cross-doc shared-winnowed-hash pairs (df-capped bucket join)
-    "text_winnowing_pairs" -> ((s, d) => TextOps.winnowingPairs(s, d)),
-    // asymmetric containment off the same selection (quote detection)
-    "text_winnowing_containment" ->
-      ((s, d) => TextOps.winnowingContainment(s, d)),
-    "text_pii_scrub"   -> TextOps.redact _,
-    "text_repetition"  -> TextOps.repetitionScores _,
-    // per-doc TextRank keywords: exact-integer PageRank over each
-    // document's word co-occurrence graph, map-only at any scale
-    "text_textrank_keywords" -> ((s, d) => TextOps.textrankKeywords(s, d)),
-    // unigram-distribution diversity: TTR + Shannon word entropy
-    "text_word_entropy" -> TextOps.wordEntropy _,
-    // rank-frequency OLS (Zipf) corpus-health diagnostic
-    "text_zipf_fit" -> ((s, d) => TextOps.zipfFit(s, d)),
-    "text_decontaminate" -> ((s, d) => TextOps.decontaminate(s, d)),
-    // the 100 TB variant: benchmark gram-set as ONE broadcast Bloom
-    // filter, corpus flagged in a map-only scan (no shuffle, no gram
-    // strings leave the partition); deterministic, so pinned by a
-    // generated-literal oracle (GeneratedOracles), plus the spec-level
-    // no-false-negative + fixture-exact flag-set gates
-    "text_decontaminate_bloom" -> ((s, d) => TextOps.decontaminateBloom(s, d)),
-    // the SEMANTIC decontamination leg: tiny benchmark embeddings
-    // broadcast, corpus flagged by cosine in one map-only scan
-    "text_decontaminate_embedding" -> ((s, d) => Dedup.embeddingDecontaminate(s, d)),
-    // unigram-LM surprisal (the CCNet perplexity signal, corpus-trained)
-    "text_unigram_logprob" -> ((s, d) => TextOps.unigramLogProb(s, d)),
-    // SentencePiece-family unigram tokenizer training: substring seed
-    // vocab re-estimated by fixed-round Viterbi EM in integer
-    // nano-nat log-probs (deterministic; literal-oracle pinned, EM
-    // replayed driver-side in the spec)
-    "text_unigram_tokenizer" -> ((s, d) => TextOps.unigramVocab(s, d)),
-    // per-doc token cost under the trained unigram tokenizer (the
-    // bpe_encode twin): broadcast piece table, map-only Viterbi pass
-    "text_unigram_encode" -> ((s, d) => TextOps.unigramEncode(s, d)),
-    // add-1 bigram LM: per-doc mean surprisal + perplexity
-    "text_bigram_perplexity" -> ((s, d) => TextOps.bigramSurprisal(s, d)),
-    // interpolated Kneser-Ney bigram LM (the KenLM smoothing): per-doc
-    // mean surprisal + perplexity, D=0.75, all margins off the type table
-    "text_kneser_ney" -> ((s, d) => TextOps.kneserNeySurprisal(s, d)),
-    // TF-IDF top-3 terms per doc; window order total -> auto bounded heap
-    "text_tfidf_terms" -> ((s, d) => TextOps.tfidfTopTerms(s, d)),
-    // inverted-index materialization: full df/cf stats + bounded-heap
-    // capped posting segments (no unbounded per-term list)
-    "text_inverted_index" -> ((s, d) => TextOps.invertedIndex(s, d)),
-    // positional-postings intersection for the 2-word phrase "table hash"
-    "text_phrase_search" -> ((s, d) => TextOps.phraseSearch(s, d)),
-    // BPE tokenizer training (iterative merge loop over the word-freq
-    // table): rows-only — the trained merge table is pinned against a
-    // reference driver-side trainer in TextOpsSpec
-    "text_bpe_vocab"   -> ((s, d) => TextOps.bpeVocab(s, d)),
-    "text_bm25_topk"   -> ((s, d) => TextOps.bm25TopK(s, d)),
-    // PRF second-pass retrieval: top-r feedback docs expand the seed
-    // query; expanded-score contributions quantize to micro-units
-    // before the per-doc sum (order-free exact integers)
-    "text_bm25_prf"    -> ((s, d) => TextOps.bm25PrfTopK(s, d)),
-    // arbitrary-term-list BM25 (exploded ⨝ broadcast-terms plan); the
-    // oracle is generated for the same 8-term query below
-    "text_bm25_general" -> ((s, d) => TextOps.bm25TopKGeneral(s, d)),
-    // lexical + vector reciprocal-rank fusion over the same id space
-    "hybrid_rrf_topk" -> ((s, d) => HybridSearch.rrfTopK(s, d)),
-    // serving-side composition flagship: BM25 + vector retrieval ->
-    // RRF fuse -> per-source diversity cap -> ranked answer, one plan
-    "hybrid_end_to_end" -> ((s, d) => HybridSearch.hybridEndToEnd(s, d)),
-    // MMR diversified re-rank of one query's candidate block: rows-only,
-    // pinned in HybridSearchSpec (λ=1 degenerates to plain top-k)
-    "hybrid_mmr_topk" -> ((s, d) => HybridSearch.mmrTopK(s, d)),
-    "sketch_distinct_ngrams" -> ((s, d) => TextOps.sketchDistinctNgrams(s, d)),
-    "sketch_users_per_type" -> ((s, d) => TextOps.sketchDistinctUsers(s, d)),
-    // KMV set algebra: pairwise cross-source vocab overlap off one scan
-    // + |sources| mergeable sketches (vs the S^2 join); exact yardstick
-    "sketch_source_overlap" -> ((s, d) => TextOps.kmvSourceOverlap(s, d)),
-    // the SAME sketch computed BY the streaming engine (k-long state
-    // buffers merging across micro-batches); exact column batch-audited
-    "sketch_users_streamed" ->
-      ((s, d) => graft.streaming.EventStream.sketchUsersStreamed(s, d)),
-    // the same KMV Aggregator invoked from pure SQL (registered UDAF)
-    "sql_sketch_users" -> ((s, d) => TextOps.sqlSketchUsers(s, d)),
-    // HLL++ built-in sketch twin: engine-internal hash -> rows-only,
-    // relative-error gated in TextOpsSpec
-    "sketch_users_hll" -> ((s, d) => TextOps.hllDistinctUsers(s, d)),
-    // Count-Min frequency sketch: one grid-shaped partial aggregate +
-    // broadcast-probe scoring; estimates exact at the declared width
-    "sketch_heavy_hitters_cms" -> ((s, d) => TextOps.cmsHeavyHitters(s, d)),
-    // the SAME CMS registers maintained by the streaming engine as one
-    // global-aggregate state entry (mergeable-sketch family #2 under
-    // the gate); estimates + exact yardstick derived batch-side after
-    "sketch_heavy_hitters_streamed" ->
-      ((s, d) => graft.streaming.EventStream.cmsHeavyHittersStreamed(s, d)),
-    // — composed pipeline ops (training-corpus preparation shapes) —
-    "pipeline_training_corpus" -> ((s, d) => Pipeline.trainingCorpus(s, d)),
-    "pipeline_stratified_sample" -> Pipeline.stratifiedSample _,
-    "pipeline_heavy_hitters" -> ((s, d) => Pipeline.heavyHitterTokens(s, d)),
-    "pipeline_pack_shards" -> ((s, d) => Pipeline.packShards(s, d)),
-    // packing QA: per-language shard-load distribution + imbalance
-    "pipeline_shard_balance" -> ((s, d) => Pipeline.shardBalance(s, d)),
-    // mT5-style α=0.5 temperature rebalancing of the language mix
-    "pipeline_temperature_sample" -> ((s, d) => Pipeline.temperatureSample(s, d)),
-    // DSIR hashed-unigram importance weights (target = lang 'en')
-    "pipeline_dsir_weights" -> ((s, d) => Pipeline.dsirWeights(s, d)),
-    // Efraimidis-Spirakis weighted k-sample (weight = token count)
-    "pipeline_weighted_sample" -> ((s, d) => Pipeline.weightedSample(s, d)),
-    // deterministic distributed logistic-regression quality filter
-    // (integer-quantized batch GD; one agg scan per round)
-    "pipeline_quality_classifier" ->
-      ((s, d) => Pipeline.qualityClassifier(s, d)),
-    // active-learning cut: the 50 docs nearest the trained decision
-    // boundary (smallest |w.x| micro-units, bounded-heap TakeOrdered)
-    "pipeline_uncertainty_sample" ->
-      ((s, d) => Pipeline.uncertaintySample(s, d)),
-    // tie-aware Mann-Whitney AUC of the trained scorer (weights memoized)
-    "eval_auc_classifier" -> ((s, d) => Pipeline.classifierAuc(s, d)),
-    // the model-report-card slice row: per-language AUC on the same
-    // global bin edges (a collapsed slice can hide under global AUC)
-    "eval_auc_by_lang" -> ((s, d) => Pipeline.classifierAucByLang(s, d)),
-    // lift/gains curve at every distinct score cut — the budget view
-    // of the same trained classifier (AUC ranks, calibration trusts
-    // probabilities, lift prices a selection budget)
-    "eval_lift_classifier" -> ((s, d) => Pipeline.classifierLift(s, d)),
-    // decile reliability bins (exact counts, quantized mean prediction)
-    "eval_calibration_classifier" ->
-      ((s, d) => Pipeline.classifierCalibration(s, d)),
-    // Brier proper score + Murphy REL/RES/UNC decomposition over the
-    // same 10 probability bins (quantize-before-sum discipline)
-    "eval_brier_classifier" -> ((s, d) => Pipeline.classifierBrier(s, d)),
-    // isotonic (PAV) calibration map via the minimax characterization
-    // over 64 score bins — the monotone fit a serving tier looks up
-    "eval_isotonic_calibration" ->
-      ((s, d) => Pipeline.classifierIsotonic(s, d)),
-    // — multimodal plumbing (stubbed codec; see Multimodal scaladoc) —
-    "multimodal_stats" -> Multimodal.featureStats _,
-    "multimodal_frames" -> Multimodal.frameOffsets _,
-    // perceptual-signature bucket dedup (linear, no pairwise stage)
-    "multimodal_signature_dedup" -> Multimodal.signatureDedupGroups _,
-    // REAL codec leg: render -> PNG encode -> ImageIO decode -> 8x8
-    // average-hash over decoded pixels -> bucket dedup; the oracle
-    // derives the same groups decoder-free from exact-text identity
-    "multimodal_phash_dedup" -> Multimodal.phashDedupGroups _,
-    // PNG container metadata parsed from the real encoded binaries
-    // (IHDR at fixed offsets, no pixel decode); oracle derives the
-    // dims codec-free from the same n_chars arithmetic
-    "multimodal_png_meta" -> Multimodal.pngMetaQuery _,
-    // REAL audio codec leg: synthesize -> WAV encode (AudioSystem) ->
-    // PCM decode -> 64-window energy fingerprint over DECODED samples
-    // -> bucket dedup; decoder-free oracle via title identity
-    "multimodal_audio_dedup" -> Multimodal.audioDedupGroups _,
-    // REAL video codec leg: render 4 frames -> animated-GIF encode ->
-    // per-frame decode -> keyframe-sample -> temporal fingerprint ->
-    // bucket dedup; decoder-free oracle via title identity
-    "multimodal_video_dedup" -> Multimodal.videoDedupGroups _,
-    // — graph analytics (iterative-shuffle workload) —
-    "graph_pagerank" -> ((s, d) => GraphOps.pageRank(s, d)),
-    // random walk with restart from the min-user seed: sparse rank
-    // frame (only reached nodes), per-round 9dp quantization
-    "graph_ppr" -> ((s, d) => GraphOps.personalizedPageRank(s, d)),
-    // per-node local clustering coefficient: corner-exploded ordered
-    // triangle enumeration + degree rollup, one final division
-    "graph_clustering_coeff" ->
-      ((s, d) => GraphOps.clusteringCoefficient(s, d)),
-    // Pearson correlation of endpoint degrees over directed stubs,
-    // DECIMAL(38,0) moments, one fixed-shape formula
-    "graph_assortativity" -> ((s, d) => GraphOps.degreeAssortativity(s, d)),
-    // PQ-vs-OPQ mean squared reconstruction error off the cached code
-    // tables — the number the rotation exists to lower
-    "eval_quantization_distortion" ->
-      ((s, d) => OpqKnn.quantizationDistortion(s, d)),
-    // Adamic-Adar link prediction: 2-path expansion x broadcast degree
-    // relation, integer micro-unit contributions, TakeOrdered top-k
-    "graph_link_prediction" -> ((s, d) => GraphOps.linkPrediction(s, d)),
-    // item-item CF serving: top-k unowned parts per customer scored by
-    // summed co-purchase affinity (the co-purchase TRANSPOSE), grouped
-    // top-k via the bounded-heap TopKPerGroup operator
-    "orders_basket_completion" -> ((s, d) => GraphOps.basketCompletion(s, d)),
-    // the ItemNbrDriverMaxEntries fallback leg, gated on the same oracle
-    "orders_basket_completion_dist" ->
-      ((s, d) => GraphOps.basketCompletionDistributed(s, d)),
-    // the normalized "related items" table: per-part top-10 by
-    // co-purchase cosine (cnt / sqrt(pop_a*pop_b)), the popularity
-    // correction raw co-counts lack; shares the CF build
-    "orders_item_similarity" -> ((s, d) => GraphOps.itemSimilarity(s, d)),
-    // — event-time processing (SURVEY §2.11 extensions) —
-    "events_tumbling" -> EventOps.tumbling _,
-    "events_sliding"  -> EventOps.sliding _,
-    "events_sessions" -> EventOps.sessions _,
-    "events_sessions_native" -> EventOps.sessionsNative _,
-    "events_json_stats" -> EventOps.jsonStats _,
-    "events_salted_agg" -> ((s, d) => ScaleTechniques.saltedEventAgg(s, d)),
-    // runtime-filter join pruning: dim keys -> broadcast Bloom -> fact
-    // rows drop map-side before the join; exact join removes FPs
-    "orders_bloom_pruned_join" -> ((s, d) => ScaleTechniques.bloomPrunedJoin(s, d)),
-    // dynamic partition pruning: month-partitioned fact x broadcast
-    // calendar dim -> runtime IN-filter on the partition column reads
-    // 3 of 84 month dirs (plan + pruned-I/O pinned in the spec)
-    "orders_dpp_pruned" -> ((s, d) => ScaleTechniques.dppPrunedJoin(s, d)),
-    // co-bucketed fact-to-fact join: both sides pre-hashed and sorted
-    // by the key, so the SMJ runs with no exchange and no sort
-    // (spec-pinned); only the |priorities|-group rollup shuffles
-    "orders_bucketed_join" -> ((s, d) => ScaleTechniques.bucketedJoin(s, d)),
-    // Z-order zone maps: the multi-dim clustering layout, as a query —
-    // per-tile envelopes a stats-based reader prunes on (bit-exact oracle)
-    "layout_zorder_stats" -> ((s, d) => ScaleTechniques.zorderBucketStats(s, d)),
-    // Hilbert-curve tile envelopes — same granularity as the zorder
-    // row; the index is a native codegen Expression (the rotation
-    // recurrence doesn't unroll into a Column fold)
-    "layout_hilbert_stats" ->
-      ((s, d) => ScaleTechniques.hilbertBucketStats(s, d)),
-    // measured read amplification of the two curves on one box
-    // predicate: tiles a stats-pruning reader opens + rows scanned vs
-    // rows matched, per curve — the I/O bill of the layout choice
-    "layout_curve_read_amp" ->
-      ((s, d) => ScaleTechniques.curveReadAmp(s, d)),
-    // the box predicate (date AND supplier band) on all four layouts:
-    // the measured case FOR Morton interleaving — neither 1-D sort
-    // serves the conjunctive query; the z-ordered files prune both axes
-    "layout_zorder_box" ->
-      ((s, d) => ScaleTechniques.zorderBoxAudit(s, d)),
-    // runtime partition pruning OVER the z-tiled layout: the tile
-    // directory deinterleaved into envelopes, DPP prunes to the box's
-    // tiles (plan pinned in ScaleTechniquesSpec) — r10 optional ask
-    "layout_zorder_dpp" ->
-      ((s, d) => ScaleTechniques.zorderDppBox(s, d)),
-    // the curve-story twin: DPP over the HILBERT-clustered layout, the
-    // tile catalog's exact envelopes derived via the inverse transform
-    // (layout-constant geometry) — completes the interleave family
-    // under the gate (r11 optional ask)
-    "layout_hilbert_dpp" ->
-      ((s, d) => ScaleTechniques.hilbertDppBox(s, d)),
-    // zone-map skip-rate audit: natural vs shipdate-sorted file layout
-    // for a one-month band — the pay-for-the-sort-rewrite evidence
-    "layout_minmax_skipping" ->
-      ((s, d) => ScaleTechniques.minmaxSkipping(s, d)),
-    // the two-key layout tradeoff: 3 layouts x 2 predicates — each
-    // single-key sort prunes its own access path and not the other
-    // (the evidence for Z-order interleaving)
-    "layout_tradeoff_matrix" ->
-      ((s, d) => ScaleTechniques.layoutTradeoffMatrix(s, d)),
-    // first-order event-type Markov transitions per user stream
-    "events_type_transitions" -> EventOps.typeTransitions _,
-    // held-out next-event accuracy of the Markov bigram model vs the
-    // majority-class baseline (80/20 user split, integer permille)
-    "events_markov_holdout" ->
-      ((s, d) => EventOps.markovHoldoutAccuracy(s, d)),
-    // GSP-style length-2 sequential-pattern support: a precedes b
-    // anywhere in a user's history (min/max-envelope existential)
-    "events_sequence_support" -> EventOps.sequenceSupport _,
-    // CUPED variance-reduced A/B readout: pooled theta off exact cent
-    // moments, adjusted arm means, rho^2 reduction permille
-    "events_cuped_lift" -> ((s, d) => EventOps.cupedLift(s, d)),
-    // difference-in-differences on the same frame: per-user post-pre
-    // deltas, arm contrast, two-sample SE, 95% interval
-    "events_did_lift" -> ((s, d) => EventOps.didLift(s, d)),
-    // mSPRT always-valid monitor: running effect, mixture likelihood
-    // ratio, monotone peeking-safe p per experiment day
-    "events_msprt_monitor" -> ((s, d) => EventOps.msprtMonitor(s, d)),
-    // the NINETEENTH streaming-executed row: the same per-day moment
-    // rollup maintained as complete-mode aggregation state, the Λ
-    // chain read off the drained state; shares the batch oracle
-    "events_msprt_monitor_streamed" -> ((s, d) =>
-      graft.streaming.EventStream.msprtMonitorStreamed(s, d)),
-    // all source-pair KS tests under Benjamini-Hochberg FDR control:
-    // integer sup-gaps, asymptotic p, running-min q-values
-    "stats_ks_fdr" -> ((s, d) => Stats.ksFdrBySource(s, d)),
-    // sample-ratio-mismatch guardrail: 1-dof chi-square of the arm
-    // split vs 50/50 against the 3.841 critical value
-    "events_srm_check" -> ((s, d) => EventOps.srmCheck(s, d)),
-    // DAU/WAU/MAU + stickiness: trailing distincts via the bounded
-    // calendar fan-out of the (user, day) activity relation
-    "events_dau_wau_mau" -> ((s, d) => EventOps.dauWauMau(s, d)),
-    // minimum detectable effect at 80% power / 5% size from the
-    // observed post-period variance and arm sizes
-    "events_mde" -> ((s, d) => EventOps.mdeEstimate(s, d)),
-    // CUSUM changepoint per type over daily revenue (exact-integer S)
-    "events_cusum_changepoint" -> EventOps.cusumChangepoint _,
-    // MATCH_RECOGNIZE-lite: per-user sequence regex ('v+p' conversions)
-    "events_pattern_match" -> EventOps.patternMatch _,
-    "events_quantiles" -> EventOps.valueQuantiles _,
-    // deterministic mergeable sketch (histogram state + in-bucket
-    // interpolation) — replaces the former percentile_approx row,
-    // whose sketch was merge-order-sensitive and could never sit
-    // under the hash gate; percentile_approx stays as engine surface,
-    // rank-error gated against the exact quantiles in EventOpsSpec
-    "events_quantiles_sketch" ->
-      ((s, d) => EventOps.valueQuantilesSketch(s, d)),
-    // the deterministic bounded-error leg: fixed-width histogram +
-    // integer rank arithmetic -> guaranteed enclosing interval, under
-    // the hash gate (the sketch leg above stays rows-only)
-    "events_quantiles_hist" -> ((s, d) => EventOps.valueQuantilesHistogram(s, d)),
-    "events_funnel" -> EventOps.funnel _,
-    // materialized-view refresh algebra: two independent partial states
-    // merged state-to-state; oracle = the full recompute
-    "events_incremental_agg" -> EventOps.incrementalAgg _,
-    // triangular retention matrix at day granularity
-    "events_retention_cohorts" -> EventOps.retentionCohorts _,
-    // fixed-width value histogram (50.00-wide buckets)
-    "events_histogram" -> ((s, d) => EventOps.histogram(s, d)),
-    // trailing 7-day rolling aggregates: the RANGE-frame window form
-    "events_rolling_7d" -> EventOps.rolling7d _,
-    // supervised lag-feature table for the forecasting ladder (y, lag1,
-    // lag7, leak-free trailing-7 mean; first-week NULLs kept explicit)
-    "events_lag_features" -> EventOps.lagFeatures _,
-    // streamable expectation checks (conditional-sum state) in batch
-    "events_expectations" -> ((sp, d) =>
-      graft.streaming.EventStream.eventsExpectations(Tables.events(sp, d))),
-    // the FIFTEENTH streaming-executed row: the same check sheet
-    // maintained by the engine's global aggregation state (complete
-    // mode); shares the batch oracle
-    "events_expectations_streamed" -> ((sp, d) =>
-      graft.streaming.EventStream.expectationsStreamed(sp, d)),
-    // gaps-and-islands change-point segmentation per user
-    "events_state_islands" -> EventOps.stateIslands _,
-    // robust mean: values clamped to exact [p05, p95] before averaging
-    "events_winsorized" -> ((s, d) => EventOps.winsorizedMean(s, d)),
-    // OHLC bars: first/last by (ts,event_id) via partial-aggregatable
-    // min_by/max_by — no window pass, no per-bar sort
-    "events_ohlc" -> ((s, d) => EventOps.ohlcBars(s, d)),
-    // distinct-over-window idiom as first-occurrence flag + running sum
-    "events_cumulative_distinct" -> EventOps.cumulativeDistinctUsers _,
-    // UNPIVOT/melt: pivot's inverse via stack
-    "unpivot_lineitem_measures" -> Relational.unpivotLineitemMeasures _,
-    // market-basket association rules (support/confidence/lift)
-    "orders_market_basket" -> ((s, d) => Relational.marketBasketBrands(s, d)),
-    // MERGE semantics end to end: keyed upsert (whole-row replace +
-    // append) applied to orders, end state summarized under the hash
-    // gate; the oracle reconstructs the merge with CASE + UNION
-    "orders_merge_upsert" -> ((s, d) => sources.Ingest.mergeUpsertShowcase(s, d)),
-    // the MERGE DELETE half: keyed anti-join end state under the gate
-    "orders_merge_delete" -> ((s, d) => sources.Ingest.mergeDeleteShowcase(s, d)),
-    // the CDC half of MERGE: per-key insert/update/delete changelog,
-    // |batch|-bounded (every join broadcasts a batch-sized side)
-    "orders_merge_changelog" ->
-      ((s, d) => sources.Ingest.mergeChangelogShowcase(s, d)),
-    // the CONSUMPTION half: the streaming engine tails the changelog
-    // one chunk per micro-batch and MERGEs it into a versioned state
-    // table (foreachBatch, the crash-proven v=<id> overwrite contract);
-    // the hash gate proves incremental maintenance == the batch MERGE
-    "orders_cdc_apply_streamed" ->
-      ((s, d) => streaming.CdcStream.applyChangelogStreamed(s, d)),
-    // the transaction-log CHECKPOINT: fold the applied version chain
-    // into one bucketed snapshot and summarize the table read back from
-    // the snapshot alone — the hash gate proves the fold lost nothing
-    "orders_cdc_compacted" ->
-      ((s, d) => streaming.CdcStream.compactedStateSummary(s, d)),
-    // incremental view maintenance: a per-segment (rows, cents) view
-    // maintained from changelog deltas ALONE — O(changes+groups) per
-    // trigger, the base table scanned exactly once at view build; the
-    // oracle re-aggregates the composed end table from scratch
-    "orders_cdc_ivm_streamed" ->
-      ((s, d) => streaming.CdcStream.ivmChangelogStreamed(s, d)),
-    // TIME TRAVEL over the version chain: the table read back as of
-    // EVERY version boundary (base, then chunk 0..3 applied), each
-    // as-of read resolved purely from the bucketed v=<id> layout —
-    // the hash gate proves snapshot-boundary reads across the whole
-    // timeline, not just the end state
-    "orders_cdc_timetravel" ->
-      ((s, d) => streaming.CdcStream.timeTravelSummary(s, d)),
-    // MERGE-ON-READ: the changelog applied as equality-delete +
-    // insert-delta sidecars beside the UNTOUCHED base (the deletion-
-    // vector strategy — a delete writes keys, never rewrites data);
-    // the read-side anti-join + union must hash to the same end state
-    // as the copy-on-write apply row
-    "orders_merge_on_read" ->
-      ((s, d) => streaming.CdcStream.mergeOnReadSummary(s, d)),
-    // the STREAMING merge-on-read apply: each micro-batch appends its
-    // slice as sidecar files (|batch|-row writes, base never touched),
-    // the read side resolves them — same oracle as the batch MOR row,
-    // the true O(changes) end of the CDC write-strategy spectrum
-    "orders_mor_apply_streamed" ->
-      ((s, d) => streaming.CdcStream.morApplyStreamed(s, d)),
-    // MOR major compaction: fold the sidecars into a clean bucketed
-    // snapshot (the deferred write, paid once) and summarize the table
-    // read back from the snapshot ALONE — the hash gate proves the
-    // fold lost nothing
-    "orders_mor_compacted" ->
-      ((s, d) => streaming.CdcStream.morCompactedSummary(s, d)),
-    // TIME TRAVEL over the MOR sidecar chain: as-of reads resolve base
-    // + the sidecar PREFIX <= v with sequence-aware delete masking —
-    // same oracle as the copy-on-write timetravel row, proving the two
-    // physical strategies implement identical as-of semantics
-    "orders_mor_timetravel" ->
-      ((s, d) => streaming.CdcStream.morTimeTravelSummary(s, d)),
-    // TIME TRAVEL through a MINOR-COMPACTED layout: every RETAINED
-    // boundary (>= the fold high-water) resolves off the folded chain
-    // — consolidated generation + live sidecar prefix — exactly as the
-    // pristine chain served it: the as-of guarantee that must survive
-    // compaction
-    "orders_mor_timetravel_folded" ->
-      ((s, d) => streaming.CdcStream.morFoldedTimeTravelSummary(s, d)),
-    // MOR MINOR compaction: fold the 3 oldest sidecar batches into one
-    // consolidated pair (manifest-committed, base untouched) — the
-    // read-side fan-in drops 8 -> 4 while the end state hash-matches
-    // the same composed-state oracle family
-    "orders_mor_minor_compacted" ->
-      ((s, d) => streaming.CdcStream.morMinorCompactedSummary(s, d)),
-    // the production MOR loop: streamed apply with AUTO minor
-    // compaction (pointer-file generations) — two folds fire during
-    // the 4-chunk stream, read fan-in stays bounded forever, end state
-    // under the same gate
-    "orders_mor_autocompact_streamed" ->
-      ((s, d) => streaming.CdcStream.morAutoCompactStreamed(s, d)),
-    // the SIZE policy under the gate (r13 verdict #3): count trigger
-    // provably inert (maxLive = 100), 1-byte budget — every fold is
-    // byte-triggered (4 generations vs the count row's 2), same
-    // composed end state
-    "orders_mor_autocompact_bytes" ->
-      ((s, d) => streaming.CdcStream.morAutoCompactBytesStreamed(s, d)),
-    // SNAPSHOT EXPIRY (retention): versions below the horizon fold
-    // into a new base, every RETAINED boundary reads back identically
-    "orders_cdc_expired" ->
-      ((s, d) => streaming.CdcStream.expiredChainSummary(s, d)),
-    // SCHEMA EVOLUTION: one mergeSchema read across two real file
-    // generations (the priority column added mid-stream); planning-time
-    // footer union, NULL back-fill at scan — generation 1 is never
-    // rewritten, and the hash gate proves no row loss or misalignment
-    "ingest_schema_evolution" ->
-      ((s, d) => sources.Ingest.schemaEvolutionRollup(s, d)),
-    // diurnal profile: hour-of-day rollup per type
-    "events_seasonality" -> EventOps.hourlySeasonality _,
-    // seasonal-naive forecast of the last day + backtest error
-    "events_forecast_naive" -> EventOps.seasonalNaiveForecast _,
-    // day-over-day deltas over the daily rollup
-    "events_day_over_day" -> EventOps.dayOverDayMovers _,
-    // denormalized per-customer lifetime-value rollup
-    "orders_customer_ltv" -> Relational.customerLtv _,
-    // RFM quartile scoring over the LTV rollup
-    "orders_rfm_segments" -> Relational.rfmSegments _,
-    // open-order backlog aging: integer epoch-day ages vs the max
-    // order date, bucketed, counts + open cents value per status
-    "orders_backlog_aging" -> Relational.backlogAging _,
-    // supplier-concentration HHI per part type (picounit-quantized
-    // share^2 terms, DOJ x10000 convention, 2500 flag)
-    "orders_supplier_hhi" -> Relational.supplierHhi _,
-    // 80/20 revenue concentration over the customer rollup
-    "orders_revenue_pareto" -> Relational.revenuePareto _,
-    // per-source exact-duplicate rate (curation signal)
-    "text_dup_rate_by_source" -> TextOps.dupRateBySource _,
-    // corpus summary card in long (metric, value) form
-    "pipeline_dataset_card" -> Pipeline.datasetCard _,
-    // statistical outlier screen: z-scores from exact BIGINT moment sums
-    "events_anomaly_zscore" -> ((s, d) => EventOps.anomalyZscore(s, d)),
-    // robust twin: modified z-score on exact-integer median/MAD
-    // pieces — the detector that survives heavy tails (50% breakdown)
-    "events_anomaly_mad" -> ((s, d) => EventOps.anomalyMad(s, d)),
-    // Holt level+trend smoothing + h-step forecast over the daily
-    // rollup (sorted-fold recursion, the ewma discipline)
-    "events_holt_forecast" -> ((s, d) => EventOps.holtForecast(s, d)),
-    // additive Holt-Winters (level+trend+weekly seasonality): sorted
-    // fold threading an m-double seasonal ring, exact integer init
-    "events_holt_winters" -> ((s, d) => EventOps.holtWintersForecast(s, d)),
-    // rolling-origin one-step MAE of naive/EWMA/Holt over the last 7
-    // days: ONE fold threads all three model states + error sums
-    "events_forecast_backtest" -> ((s, d) => EventOps.forecastBacktest(s, d)),
-    // 7-row rolling median (x2 exact interpolation over cent sums)
-    "events_rolling_median" -> ((s, d) => EventOps.rollingMedian(s, d)),
-    // Kaplan-Meier survival over user lifetimes: ordered prefix-slice
-    // factor folds, identical in both engines
-    "events_kaplan_meier" -> ((s, d) => EventOps.kaplanMeier(s, d)),
-    // Nelson-Aalen cumulative hazard: micro-quantized step hazards,
-    // order-free integer prefix sum, one final division
-    "events_nelson_aalen" -> ((s, d) => EventOps.nelsonAalen(s, d)),
-    // median-of-pairwise-slopes robust trend over the daily rollup;
-    // integer slope quantization + the x2 exact-median trick
-    "events_theilsen_trend" -> ((s, d) => EventOps.theilSenTrend(s, d)),
-    // additive seasonal decomposition: centered-7 MA detrend (integer
-    // cent sums), micro-quantized detrended values, per-slot means
-    "events_seasonal_decompose" ->
-      ((s, d) => EventOps.seasonalDecompose(s, d)),
-    // first/last-touch revenue attribution: BOTH models from one
-    // user-partitioned window pass, exact cents
-    "events_attribution" -> ((s, d) => EventOps.attribution(s, d)),
-    // the same attribution EXECUTED BY the streaming engine: per-user
-    // credit rows emitted from keyed state at watermark eviction
-    // (shares events_attribution's oracle)
-    "events_attribution_streamed" ->
-      ((s, d) => streaming.EventStream.attributionStreamed(s, d)),
-    // embedding-dedup threshold tuning sheet over the memoized >= 0.4
-    // exact pair relation: six conditional sums, map-side unpivot
-    "dedup_threshold_curve" -> ((s, d) => Dedup.thresholdCurve(s, d)),
-    // ACF lags 1..7 of the daily series (exact integer moments via
-    // the n-cleared mean; consecutive-observation lag indexing)
-    "events_autocorrelation" -> ((s, d) => EventOps.autocorrelation(s, d)),
-    // per-column profiling via unioned per-column branches (deliberately
-    // NOT the Expand plan — see Profiling.scala's rationale)
-    "quality_profile_orders" -> Profiling.profileOrders _,
-    // SCD Type-2 dimension versions from the island runs
-    "events_scd2" -> EventOps.scd2UserStates _,
-    // CDC snapshot diff: full-outer key join + change classification
-    "events_cdc_diff" -> EventOps.cdcSnapshotDiff _,
-    // gapless hourly grid (sequence+explode) with forward-filled sums
-    "events_resample" -> EventOps.resampleHourly _,
-    // equal-frequency ntile buckets over exact cent values
-    "events_equidepth" -> ((s, d) => EventOps.equidepthHistogram(s, d)),
-    // per-user EWMA as a fixed-association fold over the sorted history
-    "events_ewma" -> ((s, d) => EventOps.ewma(s, d)),
-    // the same fold EXECUTED BY the streaming engine: keyed state
-    // accumulates each user's history, the sentinel-driven event-time
-    // timeout fires the fold exactly once (order-insensitive buffering)
-    "events_ewma_streamed" ->
-      ((s, d) => graft.streaming.EventStream.ewmaStreamed(s, d)),
-    // deterministic md5-ordered k-sample through the bounded heap
-    "pipeline_ksample" -> ((s, d) => Pipeline.kSamplePerGroup(s, d)),
-    // contrastive-training negatives: md5-ordered non-neighbors
-    "pipeline_negative_sampling" ->
-      ((s, d) => Pipeline.negativeSampling(s, d)),
-    // contrastive HARD negatives: nearest base vectors with a
-    // DIFFERENT label than the query — the label predicate runs inside
-    // the broadcast-NLJ scan stage, one bounded-heap pass per query
-    "knn_hard_negatives" -> ((s, d) => ExactKnn.hardNegatives(s, d)),
-    // α=0.5 temperature token-budget allocation per source (the
-    // data-mixing sheet); micro-quantized sqrt weights, exact shares
-    "pipeline_mixture_plan" -> ((s, d) => Pipeline.mixturePlan(s, d)),
-    // the same allocation sheet computed AFTER exact dedup — the
-    // weights a release actually trains from (duplicate tokens train
-    // nothing; raw masses over-credit re-crawling sources)
-    "pipeline_mixture_dedup" ->
-      ((s, d) => Pipeline.mixturePlanDeduped(s, d)),
-    // CCNet-style interquartile perplexity band per language over the
-    // Kneser-Ney surprisal (integer 4x-quantile band, exact membership)
-    "pipeline_perplexity_band" ->
-      ((s, d) => Pipeline.perplexityBandPrune(s, d)),
-    // strongest adjacent-word associations by micro-quantized PMI —
-    // tokenizer-merge / boilerplate-phrase candidates
-    "text_pmi_collocations" -> ((s, d) => TextOps.pmiCollocations(s, d)),
-    // Gopher-style named rule report: each heuristic auditable on its
-    // own (exact integer bounds), beside the blended quality score
-    "text_gopher_rules" -> ((s, d) => TextOps.gopherRules(s, d)),
-    // map-only hash-boundary train/val/test assignment
-    "pipeline_train_val_test" -> Pipeline.trainValTest _,
-    // leakage-safe twin: the split key is the near-dup CLUSTER
-    // representative, so near-duplicates can never straddle
-    // train/test (the eval-inflation leak a doc-hash split permits)
-    "pipeline_leakage_safe_split" ->
-      ((s, d) => Pipeline.leakageSafeSplit(s, d)),
-    // easy-to-hard curriculum schedule: total-order quality rank +
-    // exact integer deciles (a pure function of the corpus)
-    "pipeline_curriculum" -> ((s, d) => Pipeline.curriculum(s, d)),
-    // END-TO-END curation flagship: ingest -> exact dedup -> near-dup
-    // keep-best (memoized clusters) -> per-lang quality gate ->
-    // tokenize -> fused curriculum rank + sequence packing (one range
-    // layout) -> shard assignment, under one plan and one hash gate
-    "pipeline_end_to_end" -> ((s, d) => Pipeline.endToEndManifest(s, d)),
-    // its final shard-balance manifest rolled up from the same
-    // composed relation
-    "pipeline_end_to_end_shards" ->
-      ((s, d) => Pipeline.endToEndShards(s, d)),
-    // GPT-style concat-then-chunk packing manifest: one exclusive
-    // prefix sum (range-partitionable), pure integer arithmetic
-    "pipeline_pack_sequences" -> ((s, d) => Pipeline.packSequences(s, d)),
-    // padding-waste audit: arrival-order vs length-sorted batch-of-32
-    // composition, both on the range-partitioned rank primitive
-    "pipeline_pad_efficiency" -> ((s, d) => Pipeline.padEfficiency(s, d)),
-    // asymmetric containment pairs (doc-inside-doc dedup)
-    "dedup_containment" -> ((s, d) => Dedup.containmentPairs(s, d)),
-    // gram-set vs winnowing containment, full-outer on the pair key:
-    // which doc-inside-doc findings the detectors share and which are
-    // selection-sparsity misses
-    "dedup_containment_crosscheck" ->
-      ((s, d) => Dedup.containmentCrossCheck(s, d)),
-    // MinHash-signature vs winnowing detectors on the pair key — the
-    // remaining detector pair of the cross-check matrix (r10 optional)
-    "dedup_minhash_winnow_crosscheck" ->
-      ((s, d) => Dedup.minhashWinnowCrossCheck(s, d)),
-    // near-dup cluster-size distribution (dedup-rate summary)
-    "dedup_cluster_sizes" -> ((s, d) => Dedup.clusterSizeHistogram(s, d)),
-    // corpus curation: per-source average quality (exact micro-units)
-    "text_quality_by_source" -> TextOps.qualityBySource _,
-    // per-source quantile normalization (tie-averaged mid-rank over
-    // the grid-bounded distinct-score cells; one division per row)
-    "text_quality_quantile_norm" ->
-      ((s, d) => TextOps.qualityQuantileNorm(s, d)),
-    // co-purchase graph: ordered-edge triangle census
-    "graph_triangles" -> ((s, d) => GraphOps.triangleCensus(s, d)),
-    // single-source BFS distances over the co-purchase graph
-    // (Pregel-style frontier join + min fold per round), declared on
-    // the minShared=4 signal cut (the link-prediction regime): the
-    // >=2 hairball reaches everything in <=2 hops and costs 12x the
-    // edges — this cut shows hop structure out to the full horizon
-    "graph_shortest_paths" ->
-      ((s, d) => GraphOps.shortestPaths(s, d, minShared = 4)),
-    // weighted SSSP (Bellman-Ford worklist): similarity-as-distance
-    // costs 1000 div shared, 6 relaxation rounds, same seed node
-    "graph_weighted_sssp" -> ((s, d) => GraphOps.weightedSssp(s, d)),
-    // degree histogram + permille share of the co-purchase graph (the
-    // hub/skew QA number that decides whether joins need salting)
-    "graph_degree_distribution" ->
-      ((s, d) => GraphOps.degreeDistribution(s, d)),
-    // connected components by alternating large-star/small-star
-    // contraction (O(log n) rounds, diameter-independent)
-    "graph_components" ->
-      ((s, d) => GraphOps.componentsStarContraction(s, d)),
-    // synchronous min-tie label-propagation communities (3 rounds)
-    "graph_communities" -> ((s, d) => GraphOps.labelPropagation(s, d)),
-    // Newman modularity of those communities: exact (4me_c - d_c^2)
-    // integer contributions, one half-up round per community
-    "graph_modularity" -> ((s, d) => GraphOps.modularity(s, d)),
-    // 2-core of the co-purchase minShared=3 cut: fixed-unroll iterative
-    // peel (oracle equality independent of convergence; the fixpoint is
-    // spec-pinned separately in GraphOpsSpec)
-    "graph_kcore" -> ((s, d) => GraphOps.kCore(s, d)),
-    // edit-distance similarity self-join over the token vocabulary
-    // (FastSS deletion-neighborhood blocking equi-join, never cartesian)
-    "text_fuzzy_word_pairs" -> ((s, d) => TextOps.fuzzyWordPairs(s, d)),
-    // prefix-blocked Jaro-Winkler linkage via the SQL-registered
-    // custom codegen Expression (graft_jaro_winkler)
-    "text_jaro_winkler_pairs" -> ((s, d) => TextOps.jaroWinklerPairs(s, d)),
-    // one-pass Pearson correlation matrix over exact decimal moments
-    "stats_correlation_matrix" -> ((s, d) => Stats.correlationMatrix(s, d)),
-    // chi-square independence of priority x segment (window totals,
-    // exact integer-micros statistic)
-    "stats_chi_square" -> ((s, d) => Stats.chiSquareIndependence(s, d)),
-    // revenue-concentration Gini via the exact integer rank formula
-    "stats_gini_revenue" -> ((s, d) => Stats.giniCoefficient(s, d)),
-    // Benford leading-digit profile (digit from the exact cent string)
-    "stats_benford_digits" -> ((s, d) => Stats.benfordDigits(s, d)),
-    // per-source quality-distribution drift vs the corpus baseline
-    // (PSI over 5 equal-width bins, micro-unit-quantized terms)
-    "stats_psi_by_source" -> ((s, d) => Stats.psiBySource(s, d)),
-    // day-over-day PSI of the purchase-value distribution: the
-    // temporal drift monitor (fixed cent bins, Laplace-smoothed,
-    // micro-quantized terms — the psiBySource discipline)
-    "stats_psi_drift_daily" -> ((s, d) => Stats.psiDriftDaily(s, d)),
-    // the TWENTIETH streaming-executed row: the (day, bin) histogram
-    // cells maintained as complete-mode state, the PSI chain read off
-    // the drained state; shares the batch oracle
-    "stats_psi_drift_streamed" -> ((s, d) =>
-      graft.streaming.EventStream.psiDriftStreamed(s, d)),
-    // two-sample KS over full ECDFs (integer-numerator exact) — the
-    // unbinned distribution-equality gate next to the PSI monitor
-    "stats_ks_quality" -> ((s, d) => Stats.ksQualityBySource(s, d)),
-    // pairwise Jensen-Shannon divergence between source histograms —
-    // the symmetric always-finite drift metric (picounit-quantized
-    // per-bin terms before the cross-bin sum)
-    "stats_jsd_sources" -> ((s, d) => Stats.jsdBySource(s, d)),
-    // Bayesian-bootstrap 95% CI for the mean order value: deterministic
-    // Exp(1) weights off the cross-engine hash, ranked replicate means
-    "stats_bootstrap_ci" -> ((s, d) => Stats.bootstrapCiOrderValue(s, d)),
-    // delta-method CI for the ratio metric revenue-per-order with
-    // customer as the randomization unit (linearized variance)
-    "stats_ratio_ci_delta" -> ((s, d) => Stats.ratioCiDelta(s, d)),
-    // tie-corrected Mann-Whitney U + common-language effect size —
-    // rank-based stochastic dominance, exact doubled rank sums
-    "stats_mann_whitney_quality" ->
-      ((s, d) => Stats.mannWhitneyQuality(s, d)),
-    // Spearman rank correlation length vs quality per source — exact
-    // doubled tie-averaged ranks, one decimal moment aggregate
-    "stats_spearman_length_quality" ->
-      ((s, d) => Stats.spearmanLengthQuality(s, d)),
-    // Cramér's V effect size from the same chi-square aggregate
-    "stats_cramers_v" -> ((s, d) => Stats.cramersV(s, d)),
-    // one-way ANOVA F across ALL sources (quantized-mean integer
-    // scatter sums, one final division)
-    "stats_anova_quality" -> ((s, d) => Stats.anovaQualityBySource(s, d)),
-    // post-hoc standardized pairwise contrasts off the same aggregate
-    "stats_anova_contrasts" -> ((s, d) => Stats.anovaContrasts(s, d)),
-    // stationary distribution of the type-transition Markov chain
-    // (3 power rounds, 9dp per round — the pagerank discipline)
-    "events_markov_stationary" ->
-      ((s, d) => EventOps.markovStationary(s, d)),
-    // declarative Deequ-style expectation suite: completeness,
-    // uniqueness, ranges, domains, referential integrity — exact
-    // violation counts, one conditional-sum scan per table
-    "quality_expectations" -> ((s, d) => operators.Expectations.suite(s, d)),
-    // NULL-bearing compound-key uniqueness with pinned cross-engine
-    // semantics (NULL rows counted out explicitly, never silently)
-    "quality_expectations_nullkeys" ->
-      ((s, d) => operators.Expectations.nullKeyUniqueness(s, d)),
-    // functional-dependency audit: declared candidate lhs->rhs pairs,
-    // exact violating-group/row counts from one rollup per candidate
-    "quality_fd_violations" ->
-      ((s, d) => operators.Expectations.fdViolations(s, d)),
-    // k-anonymity audit of the (segment, nation) quasi-identifier
-    "privacy_k_anonymity" -> ((s, d) => operators.Governance.kAnonymity(s, d)),
-    // l-diversity: per-class sensitive-value diversity + homogeneity
-    "privacy_l_diversity" -> ((s, d) => operators.Governance.lDiversity(s, d)),
-    // t-closeness: per-class EMD of the ordered sensitive distribution
-    // vs the corpus marginal, exact integer permille
-    "privacy_t_closeness" -> ((s, d) => operators.Governance.tCloseness(s, d)),
-    // Wang-Isola alignment/uniformity embedding-health summary
-    "emb_alignment_uniformity" ->
-      ((s, d) => EmbeddingStats.alignmentUniformity(s, d)),
-    // deterministic per-epoch training-order permutation via the
-    // range-partitioned global rank (corpus-scale by construction)
-    "pipeline_epoch_shuffle" -> ((s, d) => Pipeline.epochShuffle(s, d)),
-    // LDA-criterion class separability of the labeled embeddings
-    "emb_fisher_separability" ->
-      ((s, d) => EmbeddingStats.fisherSeparability(s, d)),
-    // Laplace-mechanism noisy counts with a deterministic
-    // poly-hash-seeded draw (the mechanism, oracle-replayable)
-    "privacy_dp_counts" -> ((s, d) => operators.Governance.dpEventCounts(s, d)),
-    // keyed sha256 pseudonymization: join-preserving one-way tokens,
-    // injectivity audit + the mapping itself pinned under the hash gate
-    "privacy_pseudonymize" ->
-      ((s, d) => operators.Governance.pseudonymizeUsers(s, d)),
-    // greedy k-center diversity coreset: k broadcast-map rounds +
-    // TakeOrdered(1) argmax each; quantized distances, min-id ties
-    "pipeline_kcenter_coreset" -> ((s, d) => Pipeline.kCenterCoreset(s, d)),
-    // custom Catalyst Generator (UDTF) from pure SQL: LATERAL VIEW
-    // graft_word_ngrams(text, 2)
-    "text_word_ngrams" -> ((s, d) => TextOps.wordNgramsSql(s, d)),
-    // connected components of the fuzzy-pair graph (entity resolution)
-    "text_typo_clusters" -> ((s, d) => TextOps.typoClusters(s, d)),
-    // RAG chunking: overlapping word windows, map-only
-    "text_chunking" -> ((s, d) => TextOps.chunkDocuments(s, d)),
-    // Dirichlet query-likelihood retrieval (micro-nat-quantized term
-    // contributions, 1-row stats attach, TakeOrdered)
-    "text_qlm_topk" -> ((s, d) => TextOps.queryLikelihoodTopK(s, d)),
-    // per-doc top-3 TF-IDF keywords through the bounded heap
-    "text_keywords_per_doc" -> ((s, d) => TextOps.keywordsPerDoc(s, d)),
-    // Church-Gale burstiness (variance-to-mean of per-doc counts):
-    // exact integer moments, one final division
-    "text_term_burstiness" -> ((s, d) => TextOps.termBurstiness(s, d)),
-    // langid confusion matrix vs the fixture's true labels — pure
-    // integers, permille via integer div
-    "text_langid_confusion" -> ((s, d) => TextOps.langIdConfusion(s, d)),
-    // TRAINED multinomial NB langid: add-one likelihoods in integer
-    // micro-nats on the 80% split, held-out confusion matrix
-    "text_naive_bayes_langid" ->
-      ((s, d) => TextOps.naiveBayesLangid(s, d)),
-    // cross-doc sliding 5-gram boilerplate mining: linear explode +
-    // one span-keyed rollup, total-ordered top 20
-    "text_repeated_spans" -> ((s, d) => TextOps.repeatedSpans(s, d)),
-    // tokenizer lifecycle part 2: ENCODE with the trained merge table
-    // (greedy lowest-rank merging; map-only, table broadcast) — BPE is
-    // not SQL-expressible -> rows-only, TextOpsSpec pins a reference
-    // encoder replay
-    "text_bpe_encode" -> ((s, d) => TextOps.bpeEncode(s, d)),
-    // token economics of the three tokenizers (whitespace/BPE/unigram)
-    // off the memoized encode relations; literal-pinned
-    "text_tokenizer_fertility" -> ((s, d) => TextOps.tokenizerFertility(s, d)),
-    // left-outer stream-stream interval join EXECUTED BY the streaming
-    // engine: unmatched errors emit null-padded from the join state
-    // when the sentinel-driven watermark passes their horizon
-    "events_interval_outer_streamed" ->
-      ((s, d) => graft.streaming.EventStream.intervalOuterStreamed(s, d)),
-    // FULL OUTER stream-stream interval join: both sides' unmatched
-    // rows emit from join state on watermark passage (join-mode matrix
-    // complete: inner, left outer, full outer)
-    "events_interval_full_streamed" ->
-      ((s, d) => graft.streaming.EventStream.intervalFullStreamed(s, d)),
-    // label-centroid separation matrix over quantized-exact means
-    "emb_centroid_distances" -> ((s, d) => EmbeddingStats.centroidDistances(s, d)),
-    // one-pass distributed covariance PCA (rows-only: no SQL eigensolve;
-    // moments + spectrum pinned in EmbeddingStatsSpec)
-    "emb_pca_variance" -> ((s, d) => EmbeddingStats.pcaVariance(s, d)),
-    // label-conditional outlier screen (farthest-from-own-centroid)
-    "emb_outlier_topk" -> ((s, d) => EmbeddingStats.outlierTopK(s, d)),
-    // deterministic Lloyd k-means (exact integer arithmetic; centroids
-    // broadcast, one map-only pass per iteration — the oracle unrolls
-    // the same three Lloyd steps as CTE stages)
-    "emb_kmeans" -> ((s, d) => EmbeddingStats.kmeansAssignments(s, d)),
-    // nearest-centroid (Rocchio) classifier: train on the 95% prefix,
-    // classify the held-out tail; the model-based filter-gate shape
-    "emb_centroid_classifier" ->
-      ((s, d) => EmbeddingStats.centroidPredictions(s, d)),
-    "emb_centroid_confusion" ->
-      ((s, d) => EmbeddingStats.centroidConfusion(s, d)),
-    // does a geometry-only clustering recover the labels: per-cluster
-    // dominant label + integer-permille purity
-    "emb_cluster_label_purity" ->
-      ((s, d) => EmbeddingStats.clusterLabelPurity(s, d)),
-    // the SAME assignment PRODUCED BY the streaming engine at
-    // ingestion time (file stream source -> broadcast centroid argmin
-    // inside the micro-batch -> memory sink): stateless per-row, so
-    // streamed == batch and it shares emb_kmeans's unrolled-Lloyd
-    // oracle — index maintenance without a batch re-assignment job
-    "emb_kmeans_streamed" ->
-      ((s, d) => graft.streaming.VectorStream.kmeansAssignStreamed(s, d)),
-    // sphere-coverage diagnostic: norm of the mean unit vector (the
-    // anisotropy that inflates every cosine) via two-level integer
-    // quantization — one map-side-combinable pass over the coordinates
-    "emb_isotropy" -> ((s, d) => EmbeddingStats.isotropy(s, d)),
-    // RankMe effective rank: exp-entropy of the covariance spectrum —
-    // representation-collapse monitor (deterministic Jacobi eigensolve
-    // over the one-pass moment aggregation; literal-oracle pinned)
-    "emb_effective_rank" -> ((s, d) => EmbeddingStats.effectiveRank(s, d)),
-    // TwoNN intrinsic dimension: MLE over r2/r1 NN-distance ratios —
-    // the MANIFOLD dimension next to effective_rank's linear span
-    "emb_intrinsic_dim" -> ((s, d) => EmbeddingStats.twoNNIntrinsicDim(s, d)),
-    // centroid-form silhouette (O(n·k), the shape that survives scale)
-    // over the same memoized k-means model
-    "emb_kmeans_silhouette" ->
-      ((s, d) => EmbeddingStats.kmeansSilhouette(s, d)),
-    // density clustering: deterministic DBSCAN (min-label border
-    // attachment) over the planted-density pair relation
-    "emb_dbscan" -> ((s, d) => Dedup.dbscanClusters(s, d)),
-    // the LSH-banded pair source with the identical downstream chain —
-    // the dbscan scale path, measured linear at the 10x tier
-    "emb_dbscan_lsh" -> ((s, d) => Dedup.dbscanClustersLsh(s, d)),
-    "events_topk_amounts" -> ((s, d) => EventOps.topAmounts(s, d)),
-    // same leaderboard, but the rows are PRODUCED BY the streaming
-    // engine (file stream source -> flatMapGroupsWithState keyed state
-    // -> memory sink, Trigger.AvailableNow) — streaming execution
-    // itself sits under the oracle's hash check
-    "events_topk_amounts_streamed" ->
-      ((s, d) => graft.streaming.EventStream.topAmountsStreamed(s, d)),
-    "events_tumbling_streamed" ->
-      ((s, d) => graft.streaming.EventStream.tumblingStreamed(s, d)),
-    // native session_window executed BY the streaming engine: sessions
-    // emit from keyed state when the (sentinel-driven) watermark passes
-    // their end — append-mode stateful execution under the hash gate
-    "events_sessions_streamed" ->
-      ((s, d) => graft.streaming.EventStream.sessionsNativeStreamed(s, d)),
-    // every event delivered TWICE through the stream; the watermarked
-    // dedup state must drop the re-deliveries exactly (oracle = the
-    // events table itself)
-    "events_dedup_streamed" ->
-      ((s, d) => graft.streaming.EventStream.dedupStreamed(s, d)),
-    // stream-stream interval join executed by the streaming engine
-    // (symmetric-hash join state) — oracle: the equivalent batch join
-    "events_interval_streamed" ->
-      ((s, d) => graft.streaming.EventStream.intervalJoinStreamed(s, d)),
-    // stream-STATIC enrichment join (per-micro-batch broadcast of the
-    // cohort dimension, no join state) — oracle: the batch equivalent
-    "events_enriched_streamed" ->
-      ((s, d) => graft.streaming.EventStream.enrichedStreamed(s, d)),
-  )
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    byName.map { case (n, d) => n -> d.run }
 
-  // ——— DuckDB oracle SQL (same tables, same column names) ———
-
-  /** Clamped cosine distance between list columns `b.emb` and `q.emb`,
-    * rounded to 6 — same fold + rounding as VectorFunctions (§7.4).
-    */
-  private val cosDistSql: String =
-    """round(1 - greatest(
-         list_sum(list_transform(list_zip(b.emb, q.emb), z -> z[1]*z[2])) /
-         (sqrt(list_sum(list_transform(b.emb, x -> x*x))) *
-          sqrt(list_sum(list_transform(q.emb, x -> x*x)))), 0), 6)"""
-
-  /** 2-decimal column -> exact integer cents (mirror of ExactNum.cents). */
-  private def c100(col: String): String =
-    s"CAST(round($col*100) AS BIGINT)"
-
-  /** Shared interpolated-Kneser-Ney chain: per-doc-bigram surprisal
-    * rows `sc(doc_id, nll)` — every margin off the bigram-type table,
-    * the identical left-assoc double arithmetic as the Spark side
-    * (D = 0.75 is exact in binary).
-    */
-  private val knChainSql: String = """
-      WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-      pr AS (SELECT doc_id,
-                    unnest([w[i] for i in range(1, len(w))]) AS w1,
-                    unnest([w[i+1] for i in range(1, len(w))]) AS w2
-             FROM d),
-      cb AS (SELECT w1, w2, count(*) AS cb FROM pr GROUP BY 1, 2),
-      cw AS (SELECT w1, CAST(sum(cb) AS BIGINT) AS cw, count(*) AS n1f
-             FROM cb GROUP BY 1),
-      ct AS (SELECT w2, count(*) AS cont FROM cb GROUP BY 1),
-      b AS (SELECT count(*) AS b FROM cb),
-      sc AS (SELECT doc_id,
-                    -ln(((cb - 0.75) + 0.75 * n1f * cont / b) / cw) AS nll
-             FROM pr JOIN cb USING (w1, w2) JOIN cw USING (w1)
-                     JOIN ct USING (w2) CROSS JOIN b)"""
-
-  /** One unrolled Lloyd step for the k-means oracles: assign to the
-    * nearest centroid by exact integer squared distance (ties to the
-    * smallest cid), then re-derive each centroid as the HALF_UP-rounded
-    * per-dimension mean, empty clusters keeping their previous centroid
-    * — the literal SQL mirror of EmbeddingStats.kmeansCentroids.
-    */
-  private def kmeansStep(i: Int): String = {
-    val p = i - 1
-    s"""
-      d$i AS (SELECT e.vec_id, c.cid,
-                 CAST(list_sum(list_transform(list_zip(e.q, c.q),
-                   z -> (z[1]-z[2])*(z[1]-z[2]))) AS BIGINT) AS d2
-              FROM e, c$p c),
-      a$i AS (SELECT vec_id, cid, d2 FROM (
-                SELECT *, row_number() OVER (PARTITION BY vec_id
-                            ORDER BY d2, cid) AS rn FROM d$i) WHERE rn = 1),
-      u$i AS (SELECT cid, i,
-                 CAST(round(CAST(sum(q[i]) AS DOUBLE) / count(*)) AS BIGINT) AS m
-              FROM a$i JOIN e USING (vec_id), generate_series(1, 64) AS gs(i)
-              GROUP BY cid, i),
-      c$i AS (SELECT p.cid, coalesce(n.q, p.q) AS q
-              FROM c$p p LEFT JOIN (SELECT cid, list(m ORDER BY i) AS q
-                                    FROM u$i GROUP BY cid) n USING (cid))"""
-  }
-
-  /** Shared CTE prefix of both k-means oracles: quantized vectors,
-    * deterministic init (k smallest vec_ids), three unrolled Lloyd
-    * steps, and the final-assignment distance relation `df`.
-    */
-  private def kmeansCtes: String = s"""
-      WITH e AS (
-        SELECT vec_id,
-               list_transform(embedding,
-                 x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS q
-        FROM embeddings),
-      c0 AS (
-        SELECT CAST(rn - 1 AS INT) AS cid, q FROM (
-          SELECT q, row_number() OVER (ORDER BY vec_id) AS rn FROM e)
-        WHERE rn <= 8),${kmeansStep(1)},${kmeansStep(2)},${kmeansStep(3)},
-      df AS (SELECT e.vec_id, c.cid,
-                CAST(list_sum(list_transform(list_zip(e.q, c.q),
-                  z -> (z[1]-z[2])*(z[1]-z[2]))) AS BIGINT) AS d2
-             FROM e, c3 c)"""
-
-  /** Shared by `text_quality` and `text_quality_streamed` (the
-    * streamed row is the same stateless projection executed by the
-    * streaming engine — one string, so the twins cannot diverge).
-    */
-  /** The end-to-end curation pipeline as one chained CTE — shared by
-    * `pipeline_end_to_end` (per-doc manifest) and its shard rollup.
-    * Stages mirror [[graft.operators.Pipeline.endToEndCuration]]
-    * exactly: exact dedup (min doc_id per md5), the dedup_keep_best
-    * recursive near-dup cluster chain restricted to exact survivors,
-    * the per-lang doubled-median quality gate over the DEDUPED corpus,
-    * whitespace token counts, rank + exclusive token prefix sum over
-    * (q6 desc, doc_id), and integer seq/shard arithmetic (budget 512
-    * tokens/seq, 32 seqs/shard).
-    */
-  private def endToEndOracleSql: String = """
-      WITH RECURSIVE
-      ex AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-      g AS (SELECT doc_id,
-              list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                             for i in range(1, len(w)-1)]) AS grams
-            FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-      e AS (SELECT doc_id, len(grams) AS ng, unnest(grams) AS gram FROM g),
-      p AS (SELECT doc_a, doc_b FROM (
-              SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared,
-                     max(a.ng) AS na, max(b.ng) AS nb
-              FROM e a JOIN e b ON a.gram = b.gram AND a.doc_id < b.doc_id
-              GROUP BY 1, 2)
-            WHERE round(shared / (na + nb - shared), 6) >= 0.8),
-      ed AS (SELECT doc_a AS s, doc_b AS d FROM p
-             UNION SELECT doc_b, doc_a FROM p),
-      reach(s, d) AS (
-        SELECT s, d FROM ed
-        UNION
-        SELECT r.s, e2.d FROM reach r JOIN ed e2 ON r.d = e2.s),
-      m AS (SELECT s, min(d) AS mn FROM reach GROUP BY s),
-      cl AS (SELECT doc.doc_id,
-                    least(doc.doc_id, coalesce(m.mn, doc.doc_id)) AS rep_id
-             FROM documents doc LEFT JOIN m ON doc.doc_id = m.s),
-      sv AS (SELECT cl.rep_id, cl.doc_id, d.n_chars
-             FROM cl JOIN ex ON cl.doc_id = ex.doc_id
-             JOIN documents d ON cl.doc_id = d.doc_id),
-      kb AS (SELECT doc_id, row_number() OVER (PARTITION BY rep_id
-               ORDER BY n_chars DESC, doc_id ASC) AS rn FROM sv),
-      q0 AS (SELECT d.doc_id, d.lang,
-               len(w) AS n_words,
-               len(list_filter(w, t -> list_contains(['the','a','of','and','to','in','on'], t))) / CAST(len(w) AS DOUBLE) AS stop_raw,
-               length(regexp_replace(d.text, '[^a-z]', '', 'g')) / CAST(length(d.text) AS DOUBLE) AS alpha_raw
-             FROM (SELECT doc_id, lang, text, string_split(text, ' ') AS w
-                   FROM documents) d
-             JOIN kb ON d.doc_id = kb.doc_id AND kb.rn = 1),
-      s2 AS (SELECT doc_id, lang,
-               CAST(round((least(stop_raw * 2.0, 1.0) * 0.4 + alpha_raw * 0.3
-                 + least(n_words / 50.0, 1.0) * 0.3) * 1000000) AS BIGINT) AS q6,
-               CAST(n_words AS BIGINT) AS n_tok
-             FROM q0),
-      md AS (SELECT lang,
-               CAST(round(quantile_cont(q6, 0.5) * 2) AS BIGINT) AS med2
-             FROM s2 GROUP BY 1),
-      gt AS (SELECT s2.doc_id, s2.lang, s2.q6, s2.n_tok
-             FROM s2 JOIN md USING (lang) WHERE 2 * q6 >= med2),
-      rk AS (SELECT doc_id, lang, q6, n_tok,
-               CAST(row_number() OVER (ORDER BY q6 DESC, doc_id ASC)
-                 AS BIGINT) AS curriculum_rank,
-               coalesce(CAST(sum(n_tok) OVER (ORDER BY q6 DESC, doc_id ASC
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                 AS BIGINT), 0) AS start_tok
-             FROM gt)
-      SELECT doc_id, lang, round(q6 / 1000000.0, 6) AS quality, n_tok,
-             curriculum_rank, start_tok,
-             start_tok // 512 AS start_seq,
-             (start_tok + n_tok - 1) // 512 AS end_seq,
-             (start_tok // 512) // 32 AS shard
-      FROM rk"""
-
-  private def qualityOracle: String = """
-      WITH q AS (
-        SELECT doc_id, len(w) AS n_words,
-          list_sum(list_transform(w, t -> length(t))) / CAST(len(w) AS DOUBLE) AS mean_wlen_raw,
-          len(list_filter(w, t -> list_contains(['the','a','of','and','to','in','on'], t))) / CAST(len(w) AS DOUBLE) AS stop_raw,
-          length(regexp_replace(text, '[^a-z]', '', 'g')) / CAST(length(text) AS DOUBLE) AS alpha_raw
-        FROM (SELECT doc_id, text, string_split(text, ' ') AS w FROM documents))
-      SELECT doc_id, CAST(n_words AS INT) AS n_words,
-             round(mean_wlen_raw, 6) AS mean_wlen,
-             round(stop_raw, 6) AS stopword_ratio,
-             round(alpha_raw, 6) AS alpha_ratio,
-             round(least(stop_raw * 2.0, 1.0) * 0.4 + alpha_raw * 0.3
-                   + least(n_words / 50.0, 1.0) * 0.3, 6) AS quality
-      FROM q"""
-
-  /** Shared by `emb_kmeans` and `emb_kmeans_streamed` (same unrolled
-    * Lloyd replay; the streamed row is the same per-row assignment).
-    */
-  /** Shared by the batch row and its streaming-executed twin: exact
-    * conditional counting over events (the value-band check is
-    * expected to FAIL — the long tail exceeds 250 by design).
-    */
-  private def eventsExpectationsOracle: String = """
-      WITH a AS (SELECT count(*) AS n,
-                   sum(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END) AS nu,
-                   sum(CASE WHEN ts IS NULL THEN 1 ELSE 0 END) AS nt,
-                   sum(CASE WHEN value < 0.0 OR value > 250.0
-                       THEN 1 ELSE 0 END) AS bv,
-                   sum(CASE WHEN event_type NOT IN
-                       ('click','view','purchase','error','signup','scroll')
-                       THEN 1 ELSE 0 END) AS bt
-                 FROM events),
-      r AS (SELECT 'events.user_id complete' AS "check",
-                   CAST(n AS BIGINT) AS n_checked,
-                   CAST(nu AS BIGINT) AS n_violations FROM a
-            UNION ALL SELECT 'events.ts complete',
-                   CAST(n AS BIGINT), CAST(nt AS BIGINT) FROM a
-            UNION ALL SELECT 'events.value in [0,250]',
-                   CAST(n AS BIGINT), CAST(bv AS BIGINT) FROM a
-            UNION ALL SELECT 'events.event_type in domain',
-                   CAST(n AS BIGINT), CAST(bt AS BIGINT) FROM a)
-      SELECT "check", n_checked, n_violations,
-             CASE WHEN n_violations = 0 THEN 1 ELSE 0 END AS passed
-      FROM r"""
-
-  /** Rocchio prediction relation replayed in SQL: the same
-    * quantization, HALF_UP per-label centroids over the 95% prefix,
-    * and exact integer argmin (ties to the smallest label) as
-    * `EmbeddingStats.centroidPredictions`.
-    */
-  private def centroidClassifierOracle: String = """
-      WITH sp AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s
-                  FROM embeddings),
-      q AS (SELECT vec_id, label,
-              generate_subscripts(embedding, 1) AS dim,
-              CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000)
-                AS BIGINT) AS x6
-            FROM embeddings),
-      tr AS (SELECT label AS cand, dim,
-               CAST(round(CAST(sum(x6) AS DOUBLE) / count(*)) AS BIGINT)
-                 AS m6
-             FROM q, sp WHERE vec_id < sp.s GROUP BY 1, 2),
-      te AS (SELECT vec_id, label, dim, x6 FROM q, sp WHERE vec_id >= sp.s),
-      d AS (SELECT te.vec_id, te.label, tr.cand,
-              sum((te.x6 - tr.m6) * (te.x6 - tr.m6)) AS d2
-            FROM te JOIN tr USING (dim) GROUP BY 1, 2, 3),
-      r AS (SELECT vec_id, label, cand,
-              row_number() OVER (PARTITION BY vec_id ORDER BY d2, cand)
-                AS rn
-            FROM d)
-      SELECT vec_id, label, CAST(cand AS INT) AS pred FROM r WHERE rn = 1"""
-
-  private def kmeansAssignOracle: String = s"""$kmeansCtes
-      SELECT vec_id, CAST(cid AS INT) AS cid, d2 FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id
-                    ORDER BY d2, cid) AS rn FROM df) WHERE rn = 1"""
-
-  /** The unrolled-Lloyd assignment joined to labels: per-cluster
-    * dominant-label contingency with integer-permille purity.
-    */
-  private def kmeansPurityOracle: String = s"""$kmeansCtes,
-      assign AS (SELECT vec_id, CAST(cid AS INT) AS cid FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id
-                    ORDER BY d2, cid) AS rn FROM df) WHERE rn = 1),
-      ct AS (SELECT a.cid, emb2.label, CAST(count(*) AS BIGINT) AS n
-             FROM assign a JOIN embeddings emb2 ON a.vec_id = emb2.vec_id
-             GROUP BY 1, 2),
-      tops AS (SELECT *,
-                 row_number() OVER (PARTITION BY cid
-                   ORDER BY n DESC, label ASC) AS rn,
-                 sum(n) OVER (PARTITION BY cid) AS n_vecs
-               FROM ct)
-      SELECT cid, CAST(n_vecs AS BIGINT) AS n_vecs, label AS top_label,
-             n AS n_top,
-             CAST(n * 1000 // n_vecs AS BIGINT) AS purity_permille
-      FROM tops WHERE rn = 1"""
-
-  /** Shared by `knn_exact_after_delete` and `knn_ivf_after_delete`
-    * (keyed delete then search, exact on both paths): the full-prefix
-    * knn with the deleted slab excluded by predicate.
-    */
-  private def afterDeleteOracle: String = s"""
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.80 * count(*)) AS BIGINT) AS s80,
-                   CAST(round(0.90 * count(*)) AS BIGINT) AS s90,
-                   CAST(round(0.95 * count(*)) AS BIGINT) AS s95 FROM e),
-      d AS (SELECT q.vec_id AS qid, b.vec_id, $cosDistSql AS dist
-            FROM e b, e q, p
-            WHERE b.vec_id < p.s95
-              AND NOT (b.vec_id >= p.s80 AND b.vec_id < p.s90)
-              AND q.vec_id >= p.s95 AND q.vec_id < p.s95 + 20)
-      SELECT qid, vec_id, dist,
-             CAST(row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id) AS INT) AS rk
-      FROM d
-      QUALIFY rk <= 10"""
-
-  /** Shared by `knn_exact_after_insert` (bag-union append then brute
-    * force) and `knn_ivf_after_insert` (IVF insert_many then EXHAUSTIVE
-    * probe — exact by construction): full-prefix knn of the first 20
-    * held-out queries.
-    */
-  private def afterInsertOracle: String = s"""
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s95 FROM e),
-      d AS (SELECT q.vec_id AS qid, b.vec_id, $cosDistSql AS dist
-            FROM e b, e q, p
-            WHERE b.vec_id < p.s95
-              AND q.vec_id >= p.s95 AND q.vec_id < p.s95 + 20)
-      SELECT qid, vec_id, dist,
-             CAST(row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id) AS INT) AS rk
-      FROM d
-      QUALIFY rk <= 10"""
-
-  /** Shared by `events_sessions_native` (batch session_window) and
-    * `events_sessions_streamed` (the same aggregation executed by the
-    * streaming engine): the lag/prefix-sum formulation of 30-minute
-    * inactivity sessions, sid dropped.
-    */
-  private def sessionsNativeOracle: String = s"""
-      WITH x AS (
-        SELECT user_id, event_id, ts, value,
-          CASE WHEN lag(ts) OVER w IS NULL
-                 OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-               THEN 1 ELSE 0 END AS new_s
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-      y AS (SELECT *, CAST(sum(new_s) OVER (PARTITION BY user_id
-              ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sid
-            FROM x)
-      SELECT user_id, epoch_us(min(ts)) AS session_start_us,
-             count(*) AS n_events, sum(${c100("value")})/100.0 AS sum_value
-      FROM y GROUP BY user_id, sid"""
-
-  /** BM25 oracle for an arbitrary term list — the same per-term
-    * arithmetic and left-to-right `t0 + t1 + ...` fold as the
-    * text_bm25_topk oracle, generated per term (k1=1.2, b=0.75).
-    * Matches TextOps.bm25TopKExploded bit-for-bit: absent terms add an
-    * exact 0.0, so the exploded term-index-ordered fold is the same
-    * IEEE sum.
-    */
-  /** The s/g/sc CTE bodies shared by the BM25 oracle and the hybrid
-    * fusion oracle (names prefixed bm_ to avoid collisions).
-    */
-  private def bm25Ctes(terms: Seq[String]): String = {
-    val tfDefs = terms.zipWithIndex.map { case (t, i) =>
-      s"CAST(len(list_filter(w, x -> x = '$t')) AS BIGINT) AS tf$i"
-    }.mkString(",\n               ")
-    val dfDefs = terms.indices.map(i =>
-      s"sum(CASE WHEN tf$i > 0 THEN 1 ELSE 0 END) AS df$i")
-      .mkString(",\n                   ")
-    val scoreSum = terms.indices.map(i => s"""
-            ln(CAST(1.0 AS DOUBLE) + (n - df$i + CAST(0.5 AS DOUBLE)) / (df$i + CAST(0.5 AS DOUBLE)))
-              * CAST(tf$i AS DOUBLE) * (CAST(1.2 AS DOUBLE) + CAST(1.0 AS DOUBLE))
-              / (CAST(tf$i AS DOUBLE) + CAST(1.2 AS DOUBLE) *
-                 (CAST(0.25 AS DOUBLE) + CAST(0.75 AS DOUBLE) * dl / (CAST(sumdl AS DOUBLE) / n)))""")
-      .mkString("\n          +")
-    s"""bm_s AS (
-        SELECT doc_id, CAST(len(w) AS BIGINT) AS dl,
-               $tfDefs
-        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-      bm_g AS (SELECT count(*) AS n, sum(dl) AS sumdl,
-                   $dfDefs
-            FROM bm_s),
-      bm_sc AS (SELECT doc_id, round($scoreSum, 6) AS score FROM bm_s, bm_g)"""
-  }
-
-  private def bm25Sql(terms: Seq[String], k: Int): String = s"""
-      WITH ${bm25Ctes(terms)}
-      SELECT doc_id, score FROM bm_sc WHERE score > 0
-      ORDER BY score DESC, doc_id ASC LIMIT $k"""
-
-  /** Reciprocal-rank fusion oracle: same two legs (BM25 at `depth`,
-    * exact cosine top-`depth` for held-out query 29) ranked and fused
-    * with every float constant cast to DOUBLE (DuckDB decimal-literal
-    * trap) and ranks cast to INT (Spark row_number type).
-    */
-  /** The fusion CTE chain shared by the rrf row and the composed
-    * serving flagship: both legs, both rank relations, and a `fused`
-    * relation holding the top-`fuseK` RRF results.
-    */
-  private def hybridFusionCtes(terms: Seq[String], depth: Int,
-      kRrf: Int, fuseK: Int): String = s"""
-      WITH ${bm25Ctes(terms)},
-      bm_top AS (SELECT doc_id, score FROM bm_sc WHERE score > 0
-                 ORDER BY score DESC, doc_id ASC LIMIT $depth),
-      bm_r AS (SELECT doc_id,
-                 CAST(row_number() OVER (ORDER BY score DESC, doc_id ASC)
-                   AS INT) AS bm25_rank
-               FROM bm_top),
-      e AS (SELECT vec_id,
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-            FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s,
-                   count(*) AS c FROM e),
-      v_top AS (SELECT b.vec_id, $cosDistSql AS dist
-                FROM e b, e q, p
-                WHERE b.vec_id < p.s AND q.vec_id = p.s + (29 % (p.c - p.s))
-                ORDER BY dist, b.vec_id LIMIT $depth),
-      v_r AS (SELECT vec_id AS doc_id,
-                CAST(row_number() OVER (ORDER BY dist, vec_id) AS INT)
-                  AS vec_rank
-              FROM v_top),
-      fused AS (
-        SELECT coalesce(bm_r.doc_id, v_r.doc_id) AS doc_id,
-               round(coalesce(CAST(1.0 AS DOUBLE) / (bm25_rank + $kRrf),
-                       CAST(0 AS DOUBLE))
-                   + coalesce(CAST(1.0 AS DOUBLE) / (vec_rank + $kRrf),
-                       CAST(0 AS DOUBLE)), 6) AS rrf,
-               bm25_rank, vec_rank
-        FROM bm_r FULL OUTER JOIN v_r ON bm_r.doc_id = v_r.doc_id
-        ORDER BY rrf DESC, doc_id ASC LIMIT $fuseK)"""
-
-  private def hybridRrfSql(terms: Seq[String], k: Int, depth: Int,
-      kRrf: Int): String =
-    hybridFusionCtes(terms, depth, kRrf, k) + """
-      SELECT doc_id, rrf, bm25_rank, vec_rank FROM fused"""
-
-  private def hybridEndToEndSql(terms: Seq[String], k: Int, depth: Int,
-      kRrf: Int, fuseK: Int, perSource: Int): String =
-    hybridFusionCtes(terms, depth, kRrf, fuseK) + s""",
-      ws AS (SELECT f.doc_id, d.source, f.rrf, f.bm25_rank, f.vec_rank,
-               row_number() OVER (PARTITION BY d.source
-                 ORDER BY f.rrf DESC, f.doc_id ASC) AS sr
-             FROM fused f JOIN documents d USING (doc_id)),
-      kept AS (SELECT *, CAST(row_number() OVER (ORDER BY rrf DESC,
-                 doc_id ASC) AS INT) AS rank
-               FROM ws WHERE sr <= $perSource)
-      SELECT rank, doc_id, source, rrf, bm25_rank, vec_rank
-      FROM kept WHERE rank <= $k"""
-
-  /** Generated DuckDB replay of [[graft.operators.Pipeline.qualityClassifier]]:
-    * one `g_i`/`w_i` CTE pair per GD round. Every per-row gradient term is
-    * quantized to integer millionths before its sum, so the chain is exactly
-    * reproducible from the features regardless of aggregation order; the
-    * weight update `w - lr*(g/1e6)/n` is the same left-associated double
-    * expression both engines evaluate. `lr` is spliced as text so the SQL
-    * literal matches the Scala double bit-for-bit.
-    */
-  private def qcOracleSql(iters: Int, lr: String): String =
-    qcChain(iters, lr) + s""",
-      acc AS (SELECT round(CAST(sum(CASE WHEN
-                (($qcDot) >= 0.0) = (y = 1.0)
-                THEN 1 ELSE 0 END) AS DOUBLE) / any_value(n), 6) AS ta
-              FROM f, w$iters, nn)
-      SELECT 'w0' AS term, round(a, 6) AS value FROM w$iters
-      UNION ALL SELECT 'w1', round(b, 6) FROM w$iters
-      UNION ALL SELECT 'w2', round(c, 6) FROM w$iters
-      UNION ALL SELECT 'w3', round(d, 6) FROM w$iters
-      UNION ALL SELECT 'w4', round(e, 6) FROM w$iters
-      UNION ALL SELECT 'train_acc', ta FROM acc"""
-
-  /** k-core oracle: GraphOps.kCore's fixed `rounds` unroll replayed as
-    * chained CTEs (degree filter + two survivor joins per round), so
-    * equality never depends on the peel having converged — the
-    * fixpoint is pinned separately in GraphOpsSpec.
-    */
-  private def kcoreOracleSql(k: Int, minShared: Int, rounds: Int): String = {
-    // MATERIALIZED is load-bearing: each round references the previous
-    // round ~3x (degree filter + two survivor joins), so an INLINED
-    // chain expands 3^rounds-fold and exhausts file handles re-scanning
-    // the base tables
-    val chain = (1 to rounds).map { r =>
-      s"""k$r AS MATERIALIZED (SELECT u FROM s${r - 1}
-              GROUP BY u HAVING count(*) >= $k),
-      s$r AS MATERIALIZED (SELECT s.u, s.v FROM s${r - 1} s
-              JOIN k$r a ON s.u = a.u JOIN k$r b ON s.v = b.u)"""
-    }.mkString(",\n      ")
-    s"""
-      WITH cp AS MATERIALIZED (
-        SELECT DISTINCT o.o_custkey AS c, l.l_partkey AS p
-        FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-      e AS MATERIALIZED (SELECT a.c AS u, b.c AS v FROM cp a
-            JOIN cp b ON a.p = b.p AND a.c < b.c
-            GROUP BY 1, 2 HAVING count(*) >= $minShared),
-      s0 AS MATERIALIZED (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
-      $chain
-      SELECT u AS node, count(*) AS deg FROM s$rounds GROUP BY u"""
-  }
-
-  /** Weighted-SSSP oracle: `rounds` FULL Bellman–Ford relaxations as
-    * chained MATERIALIZED CTEs. The engine runs the worklist form; both
-    * equal min cost over ≤ r-edge paths after round r, so the replay is
-    * exact without depending on convergence.
-    */
-  private def ssspOracleSql(rounds: Int, minShared: Int): String = {
-    val chain = (1 to rounds).map { r =>
-      s"""d$r AS MATERIALIZED (
-        SELECT node, min(d) AS d FROM (
-          SELECT node, d FROM d${r - 1}
-          UNION ALL
-          SELECT e.v, p.d + e.w FROM d${r - 1} p JOIN e ON p.node = e.u)
-        GROUP BY node)"""
-    }.mkString(",\n      ")
-    s"""
-      WITH cp AS MATERIALIZED (
-        SELECT DISTINCT o.o_custkey AS c, l.l_partkey AS p
-        FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-      e0 AS MATERIALIZED (
-        SELECT a.c AS u, b.c AS v, count(*) AS shared FROM cp a
-        JOIN cp b ON a.p = b.p AND a.c < b.c
-        GROUP BY 1, 2 HAVING count(*) >= $minShared),
-      e AS MATERIALIZED (
-        SELECT u, v, 1000 // shared AS w FROM e0
-        UNION ALL SELECT v, u, 1000 // shared FROM e0),
-      d0 AS (SELECT CAST(min(u) AS BIGINT) AS node, CAST(0 AS BIGINT) AS d
-             FROM e),
-      $chain
-      SELECT CAST(node AS BIGINT) AS node, CAST(d AS BIGINT) AS d
-      FROM d$rounds"""
-  }
-
-  /** k-center coreset oracle: the identical greedy farthest-point
-    * rounds as a generated chained CTE — per round one argmax pick
-    * (quantized distance desc, vec_id asc) and one incremental
-    * least(running-min, dist-to-new-center) update, the exact fold
-    * [[graft.operators.Pipeline.kCenterCoreset]] computes.
-    */
-  private def kcenterOracleSql(k: Int): String = {
-    def dist(p: String, c: String) =
-      s"round(1 - greatest(list_sum(list_transform(list_zip($p.nv, $c.nv), z -> z[1]*z[2])), 0), 6)"
-    val rounds = (2 until k).map { t =>
-      s"""p$t AS (SELECT vec_id, md FROM md${t - 1}
-              ORDER BY md DESC, vec_id ASC LIMIT 1),
-      d$t AS (SELECT p.vec_id, ${dist("p", "c")} AS d
-              FROM n p JOIN n c ON c.vec_id = (SELECT vec_id FROM p$t)),
-      md$t AS (SELECT m.vec_id, least(m.md, d.d) AS md
-               FROM md${t - 1} m JOIN d$t d USING (vec_id))"""
-    }.mkString(",\n      ")
-    val lastPick = s"""p$k AS (SELECT vec_id, md FROM md${k - 1}
-              ORDER BY md DESC, vec_id ASC LIMIT 1)"""
-    val picks = (2 to k).map(t =>
-      s"UNION ALL SELECT CAST($t AS BIGINT), vec_id, md FROM p$t")
-      .mkString("\n      ")
-    s"""
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                 FROM embeddings),
-      n AS (SELECT vec_id,
-                   list_transform(v, x -> x /
-                     nullif(sqrt(list_sum(list_transform(v, y -> y*y))), 0)) AS nv
-            FROM e),
-      c1 AS (SELECT min(vec_id) AS vec_id FROM n),
-      md1 AS (SELECT p.vec_id, ${dist("p", "c")} AS md
-              FROM n p JOIN n c ON c.vec_id = (SELECT vec_id FROM c1)),
-      $rounds,
-      $lastPick
-      SELECT CAST(1 AS BIGINT) AS pick_round,
-             (SELECT vec_id FROM c1) AS vec_id,
-             CAST(0.0 AS DOUBLE) AS radius
-      $picks"""
-  }
-
-  /** The identical fixed-width score binning as
-    * `Pipeline.binnedScores`: millionth-quantized scores (HALF_UP round
-    * then truncating BIGINT cast, the calibration discipline) bucketed
-    * by `(q−qmin)·1024 // (qmax−qmin+1)` — truncating integer division
-    * on non-negative operands, matching Spark's `DIV`.
-    */
-  private def qcBinnedSql(iters: Int, lr: String, bins: Int = 1024): String =
-    qcChain(iters, lr) + s""",
-      scored AS (SELECT y,
-                   CAST(round(($qcDot) * 1000000.0, 0) AS BIGINT) AS q
-                 FROM f, w$iters),
-      ext AS (SELECT min(q) AS qmin, max(q) AS qmax FROM scored),
-      binned AS (SELECT y,
-                   CAST(((q - qmin) * CAST($bins AS BIGINT))
-                     // (qmax - qmin + 1) AS BIGINT) AS bin
-                 FROM scored, ext)"""
-
-  /** Grouped tie-aware Mann–Whitney AUC over the binned scorer —
-    * integer until the single final division, like the Spark side;
-    * tie groups are the fixed-width buckets, so the window input is
-    * ≤ 1024 rows at any corpus size.
-    */
-  private def qcAucSql(iters: Int, lr: String): String =
-    qcBinnedSql(iters, lr) + s""",
-      bys AS (SELECT bin,
-                sum(CASE WHEN y = 1.0 THEN 1 ELSE 0 END) AS np,
-                sum(CASE WHEN y <> 1.0 THEN 1 ELSE 0 END) AS nn
-              FROM binned GROUP BY bin),
-      cum AS (SELECT np, nn,
-                coalesce(sum(nn) OVER (ORDER BY bin
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cnb
-              FROM bys)
-      SELECT CAST(sum(np) AS BIGINT) AS np, CAST(sum(nn) AS BIGINT) AS nn,
-             round(CAST(sum(np * (2 * cnb + nn)) AS DOUBLE)
-               / (2.0 * sum(np) * sum(nn)), 6) AS auc
-      FROM cum"""
-
-  /** Per-language SLICED AUC — the model-report-card row: GLOBAL
-    * fixed-width bin edges (comparable cuts across slices), then the
-    * tie-aware grouped Mann-Whitney per language; degenerate slices
-    * (single-class) report NULL.
-    */
-  private def qcAucByLangSql(iters: Int, lr: String): String =
-    qcChain(iters, lr) + s""",
-      scored AS (SELECT lang, y,
-                   CAST(round(($qcDot) * 1000000.0, 0) AS BIGINT) AS q
-                 FROM f, w$iters),
-      ext AS (SELECT min(q) AS qmin, max(q) AS qmax FROM scored),
-      binned AS (SELECT lang, y,
-                   CAST(((q - qmin) * CAST(1024 AS BIGINT))
-                     // (qmax - qmin + 1) AS BIGINT) AS bin
-                 FROM scored, ext),
-      bys AS (SELECT lang, bin,
-                sum(CASE WHEN y = 1.0 THEN 1 ELSE 0 END) AS np,
-                sum(CASE WHEN y <> 1.0 THEN 1 ELSE 0 END) AS nn
-              FROM binned GROUP BY 1, 2),
-      cum AS (SELECT lang, np, nn,
-                coalesce(sum(nn) OVER (PARTITION BY lang ORDER BY bin
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                  AS cnb
-              FROM bys)
-      SELECT lang, CAST(sum(np) AS BIGINT) AS np,
-             CAST(sum(nn) AS BIGINT) AS nn,
-             CASE WHEN sum(np) = 0 OR sum(nn) = 0 THEN NULL
-                  ELSE round(CAST(sum(np * (2 * cnb + nn)) AS DOUBLE)
-                    / (2.0 * sum(np) * sum(nn)), 6) END AS auc
-      FROM cum GROUP BY lang"""
-
-  /** Gains curve over the binned-score relation: exact cumulative
-    * long counts scanning buckets descending, one fixed-order division.
-    */
-  private def qcLiftSql(iters: Int, lr: String): String =
-    qcBinnedSql(iters, lr) + s""",
-      bys AS (SELECT bin, count(*) AS n,
-                sum(CASE WHEN y = 1.0 THEN 1 ELSE 0 END) AS np
-              FROM binned GROUP BY bin),
-      t AS (SELECT CAST(sum(n) AS BIGINT) AS tn,
-                   CAST(sum(np) AS BIGINT) AS tp FROM bys),
-      c AS (SELECT bin,
-              CAST(sum(n) OVER (ORDER BY bin DESC ROWS BETWEEN UNBOUNDED
-                PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_n,
-              CAST(sum(np) OVER (ORDER BY bin DESC ROWS BETWEEN UNBOUNDED
-                PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_np
-            FROM bys)
-      SELECT bin, cum_n, cum_np,
-             round((CAST(cum_np AS DOUBLE) / cum_n)
-               / (CAST(tp AS DOUBLE) / tn), 6) AS lift
-      FROM c CROSS JOIN t"""
-
-  /** Decile reliability bins of σ(w·x) with millionth-quantized mean
-    * predictions (order-free integer sums before the division).
-    */
-  private def qcCalibrationSql(iters: Int, lr: String): String =
-    qcChain(iters, lr) + s""",
-      scored AS (SELECT y,
-                   least(CAST(floor((1.0/(1.0+exp(-($qcDot)))) * 10.0) AS INT),
-                     9) AS bin,
-                   CAST(round((1.0/(1.0+exp(-($qcDot)))) * 1000000.0, 0)
-                     AS BIGINT) AS q
-                 FROM f, w$iters)
-      SELECT bin, count(*) AS n_docs,
-             round(CAST(sum(q) AS DOUBLE) / 1000000.0
-               / CAST(count(*) AS DOUBLE), 6) AS mean_pred,
-             round(CAST(sum(CAST(y AS BIGINT)) AS DOUBLE)
-               / CAST(count(*) AS DOUBLE), 6) AS pos_rate
-      FROM scored GROUP BY bin"""
-
-  /** Brier + Murphy decomposition over the same replayed fit: integer
-    * DECIMAL/HUGEINT sums for the brier numerator; per-bin REL/RES
-    * terms evaluated in the identical fixed-order double expression as
-    * the Spark side and quantized to picounit longs BEFORE the
-    * cross-bin sum (never sum raw doubles across rows).
-    */
-  private def qcBrierSql(iters: Int, lr: String): String =
-    qcChain(iters, lr) + s""",
-      scored AS (SELECT CAST(y AS BIGINT) AS y,
-                   least(CAST(floor((1.0/(1.0+exp(-($qcDot)))) * 10.0) AS INT),
-                     9) AS bin,
-                   CAST(round((1.0/(1.0+exp(-($qcDot)))) * 1000000.0, 0)
-                     AS BIGINT) AS q
-                 FROM f, w$iters),
-      b AS (SELECT bin, CAST(count(*) AS BIGINT) AS nk,
-              CAST(sum(CAST(q AS HUGEINT)) AS HUGEINT) AS sp,
-              CAST(sum(y) AS BIGINT) AS sy,
-              CAST(sum(CAST(q AS HUGEINT) * q) AS HUGEINT) AS spp,
-              CAST(sum(CAST(q AS HUGEINT) * y) AS HUGEINT) AS spy
-            FROM scored GROUP BY bin),
-      t AS (SELECT CAST(sum(nk) AS BIGINT) AS n,
-                   CAST(sum(sy) AS BIGINT) AS sytot
-            FROM b),
-      terms AS (SELECT n, sytot, spp, spy,
-                  CAST(round((CAST(sp AS DOUBLE) / 1000000.0 / CAST(nk AS DOUBLE)
-                      - CAST(sy AS DOUBLE) / CAST(nk AS DOUBLE))
-                    * (CAST(sp AS DOUBLE) / 1000000.0 / CAST(nk AS DOUBLE)
-                      - CAST(sy AS DOUBLE) / CAST(nk AS DOUBLE))
-                    * CAST(nk AS DOUBLE) * 1000000000000.0, 0) AS BIGINT) AS relq,
-                  CAST(round((CAST(sy AS DOUBLE) / CAST(nk AS DOUBLE)
-                      - CAST(sytot AS DOUBLE) / CAST(n AS DOUBLE))
-                    * (CAST(sy AS DOUBLE) / CAST(nk AS DOUBLE)
-                      - CAST(sytot AS DOUBLE) / CAST(n AS DOUBLE))
-                    * CAST(nk AS DOUBLE) * 1000000000000.0, 0) AS BIGINT) AS resq
-                FROM b CROSS JOIN t)
-      SELECT n AS n_docs,
-             round((CAST(sum(spp) AS DOUBLE) - 2000000.0 * CAST(sum(spy) AS DOUBLE)
-               + 1000000000000.0 * CAST(sytot AS DOUBLE))
-               / (1000000000000.0 * CAST(n AS DOUBLE)), 6) AS brier,
-             round(CAST(sytot AS DOUBLE) / CAST(n AS DOUBLE)
-               * (1.0 - CAST(sytot AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-               AS uncertainty,
-             round(CAST(sum(relq) AS DOUBLE)
-               / (1000000000000.0 * CAST(n AS DOUBLE)), 6) AS reliability,
-             round(CAST(sum(resq) AS DOUBLE)
-               / (1000000000000.0 * CAST(n AS DOUBLE)), 6) AS resolution
-      FROM terms GROUP BY n, sytot"""
-
-  private val qcDot = "a*f0+b*f1+c*f2+d*f3+e*f4"
-
-  /** The shared WITH-chain: features, n, and one MATERIALIZED
-    * `g_i`/`w_i` CTE pair per GD round (materialization keeps DuckDB
-    * from inlining the chain exponentially). Ends after `w<iters>`,
-    * WITHOUT a trailing comma.
-    */
-  private def qcChain(iters: Int, lr: String): String = {
-    val dot = qcDot
-    def gradCte(i: Int, prevW: String): String = {
-      val sums = (0 to 4).map { j =>
-        s"""sum(CAST(round((1.0/(1.0+exp(-($dot))) - y)
-           |          * f$j * 1000000.0, 0) AS BIGINT)) AS g$j""".stripMargin
-      }.mkString(",\n        ")
-      s"""g$i AS MATERIALIZED (SELECT
-         |        $sums
-         |        FROM f, $prevW)""".stripMargin
-    }
-    def stepCte(i: Int): String = {
-      val cols = "abcde".zipWithIndex.map { case (w, j) =>
-        s"$w - $lr*(g$j/1000000.0)/n AS $w" }.mkString(", ")
-      s"w$i AS MATERIALIZED (SELECT $cols FROM w${i - 1}, g$i, nn)"
-    }
-    val rounds = (1 to iters)
-      .map(i => gradCte(i, s"w${i - 1}") + ",\n      " + stepCte(i))
-      .mkString(",\n      ")
-    s"""
-      WITH f AS MATERIALIZED (
-        SELECT doc_id, lang,
-               CASE WHEN least(stop * 2.0, 1.0) * 0.4 + alpha * 0.3
-                       + least(wcnt / 50.0, 1.0) * 0.3 >= 0.5
-                    THEN 1.0 ELSE 0.0 END AS y,
-               1.0 AS f0,
-               least(CAST(length(text) AS DOUBLE) / 500.0, 1.0) AS f1,
-               least(wcnt / 100.0, 1.0) AS f2,
-               least(CAST(length(replace(text, ' ', '')) AS DOUBLE)
-                 / wcnt / 10.0, 1.0) AS f3,
-               dcnt / wcnt AS f4
-        FROM (SELECT doc_id, lang, text,
-                     CAST(len(w) AS DOUBLE) AS wcnt,
-                     CAST(len(list_distinct(w)) AS DOUBLE) AS dcnt,
-                     len(list_filter(w, t -> list_contains(
-                       ['the','a','of','and','to','in','on'], t)))
-                       / CAST(len(w) AS DOUBLE) AS stop,
-                     length(regexp_replace(text, '[^a-z]', '', 'g'))
-                       / CAST(length(text) AS DOUBLE) AS alpha
-              FROM (SELECT doc_id, lang, text, string_split(text, ' ') AS w
-                    FROM documents))),
-      nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM f),
-      w0 AS (SELECT 0.0 AS a, 0.0 AS b, 0.0 AS c, 0.0 AS d, 0.0 AS e),
-      $rounds"""
-  }
-
-  private val basketCompletionSql = """
-      WITH cp AS MATERIALIZED (SELECT DISTINCT o_custkey AS c, l_partkey AS p
-                  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-      ip AS MATERIALIZED (SELECT a.p AS p1, b.p AS p2, count(*) AS cnt
-             FROM cp a JOIN cp b ON a.c = b.c AND a.p < b.p
-             GROUP BY 1, 2 HAVING count(*) >= 2),
-      sym0 AS (SELECT p1 AS p, p2 AS rec, cnt FROM ip
-               UNION ALL SELECT p2, p1, cnt FROM ip),
-      sym AS MATERIALIZED (SELECT p, rec, cnt FROM sym0
-              QUALIFY row_number() OVER (PARTITION BY p
-                ORDER BY cnt DESC, rec) <= 20),
-      sc AS (SELECT cp.c, sym.rec, sum(sym.cnt) AS score
-             FROM cp JOIN sym USING (p) GROUP BY 1, 2),
-      f AS (SELECT * FROM sc WHERE NOT EXISTS
-              (SELECT 1 FROM cp WHERE cp.c = sc.c AND cp.p = sc.rec))
-      SELECT c AS custkey, rec AS partkey, CAST(score AS BIGINT) AS score,
-             CAST(row_number() OVER (PARTITION BY c
-               ORDER BY score DESC, rec) AS INT) AS rk
-      FROM f QUALIFY rk <= 5"""
-
-  /** The MMR greedy loop replayed as UNROLLED SQL (r14: was a
-    * generated literal at both tiers) — the kmeans-oracle discipline
-    * applied to re-ranking: candidates are the held-out query's exact
-    * top-`depth` (the knn_exact_single arithmetic, LIMIT depth), and
-    * each of the k selection rounds is one CTE pair
-    * (p_i = the argmax row by (score DESC, vec_id), r_i = the
-    * remaining candidates with the running max-similarity-to-selected
-    * folded in via greatest()). Float parity: the engine's
-    * `λ·(1−dist) − (1−λ)·maxSim` is replayed with explicit DOUBLE
-    * casts so (1.0 − 0.7) is the same binary 0.30000000000000004 on
-    * both sides; dots ride the corpus-standard list_zip fold; each
-    * per-chosen dot clamps to [0,1] before the max, and only the
-    * emitted score rounds (HALF_UP 6, like the engine's BigDecimal).
-    * O(depth·n + k·depth²) at any tier — replays where quadratic
-    * relations cannot.
-    */
-  private def mmrOracleSql(k: Int, depth: Int): String = {
-    val lam = "CAST(0.7 AS DOUBLE)"
-    val oml = "(CAST(1.0 AS DOUBLE) - CAST(0.7 AS DOUBLE))"
-    val score = s"$lam * (CAST(1.0 AS DOUBLE) - dist) - $oml * ms"
-    val head = s"""
-      WITH e AS MATERIALIZED (SELECT vec_id,
-        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s,
-                   count(*) AS c FROM e),
-      qv AS MATERIALIZED (SELECT vec_id, emb FROM e, p
-            WHERE vec_id = p.s + (29 % (p.c - p.s))),
-      cand0 AS (SELECT b.vec_id, $cosDistSql AS dist
-                FROM e b, qv q, p
-                WHERE b.vec_id < p.s
-                ORDER BY dist, b.vec_id LIMIT $depth),
-      nrm AS (SELECT vec_id,
-              list_transform(emb, x -> x /
-                nullif(sqrt(list_sum(list_transform(emb, y -> y*y))), 0))
-                AS nv
-              FROM e),
-      r0 AS MATERIALIZED (SELECT c.vec_id, c.dist, n.nv,
-              CAST(0.0 AS DOUBLE) AS ms
-            FROM cand0 c JOIN nrm n USING (vec_id))"""
-    val stages = (1 to k).flatMap { i =>
-      val pick = s"""
-      p$i AS MATERIALIZED (SELECT vec_id, dist, nv, ms, $score AS score
-        FROM r${i - 1} ORDER BY score DESC, vec_id LIMIT 1)"""
-      val next =
-        if (i == k) Nil
-        else Seq(s"""
-      r$i AS MATERIALIZED (SELECT r.vec_id, r.dist, r.nv,
-          greatest(r.ms, least(greatest(
-            list_sum(list_transform(list_zip(r.nv, s.nv), z -> z[1]*z[2])),
-            CAST(0.0 AS DOUBLE)), CAST(1.0 AS DOUBLE))) AS ms
-        FROM r${i - 1} r, p$i s WHERE r.vec_id <> s.vec_id)""")
-      pick +: next
-    }
-    val union = (1 to k).map(i =>
-      s"SELECT $i AS rank, vec_id, round(score, 6) AS mmr_score FROM p$i")
-      .mkString("\n      UNION ALL\n      ")
-    head + "," + stages.mkString(",") + "\n      " + union
-  }
-
-  /** DBSCAN replayed exactly over the deterministic planted PANEL
-    * universe (stride = ceil(n/2000) before planting — 1, the full
-    * historical fixture, at this tier; ≤ 4000 vectors at derived
-    * tiers so this quadratic reconstruction replays there instead of
-    * pinning, r13 verdict #1), parametric in the operating point: the
-    * same planted pair relation as neardup_embedding_lsh, degree-based
-    * core test, recursive-CTE components of the core-core graph
-    * (min-label, exact for any diameter), min-label border attachment.
-    * Shared by the exact leg (0.45 / minPts 3) and the LSH-legged
-    * scale path (0.98 / minPts 2 — the regime where banding has
-    * near-certain recall, so the exact reconstruction IS its oracle).
-    */
-  private def dbscanOracleSql(threshold: String, minPts: Int): String = s"""
-      WITH RECURSIVE st AS (SELECT (count(*) + 1999) // 2000 AS k
-                            FROM embeddings),
-      e0 AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings, st WHERE vec_id % st.k = 0),
-      u AS (SELECT vec_id, v FROM e0
-            UNION ALL
-            SELECT vec_id + 100000, list_transform(v, x -> x + 0.01) FROM e0),
-      n AS MATERIALIZED (SELECT vec_id,
-                   list_transform(v, x -> x /
-                     nullif(sqrt(list_sum(list_transform(v, y -> y*y))), 0)) AS nv
-            FROM u),
-      p AS MATERIALIZED (SELECT va, vb FROM (
-              SELECT a.vec_id AS va, b.vec_id AS vb,
-                     round(greatest(list_sum(list_transform(list_zip(a.nv, b.nv),
-                       z -> z[1]*z[2])), 0), 6) AS sim
-              FROM n a JOIN n b ON a.vec_id < b.vec_id)
-            WHERE sim >= $threshold),
-      sym AS (SELECT va AS vid, vb AS nbr FROM p UNION ALL SELECT vb, va FROM p),
-      deg AS (SELECT n.vec_id, count(s.nbr) AS d FROM n
-              LEFT JOIN sym s ON n.vec_id = s.vid GROUP BY 1),
-      cores AS (SELECT vec_id FROM deg WHERE d + 1 >= $minPts),
-      cc AS (SELECT va, vb FROM p
-             WHERE va IN (SELECT vec_id FROM cores)
-               AND vb IN (SELECT vec_id FROM cores)),
-      ccsym AS (SELECT va AS a, vb AS b FROM cc UNION ALL SELECT vb, va FROM cc),
-      reach(node, lbl) AS (
-        SELECT vec_id, vec_id FROM cores
-        UNION
-        SELECT e.b, reach.lbl FROM ccsym e JOIN reach ON reach.node = e.a),
-      corerep AS (SELECT node AS vec_id, min(lbl) AS rep FROM reach GROUP BY 1),
-      border AS (SELECT s.vid AS vec_id, min(c.rep) AS rep
-                 FROM sym s JOIN corerep c ON s.nbr = c.vec_id
-                 WHERE s.vid NOT IN (SELECT vec_id FROM cores)
-                 GROUP BY 1)
-      SELECT n.vec_id,
-             CASE WHEN cr.vec_id IS NOT NULL THEN 'core'
-                  WHEN b.vec_id IS NOT NULL THEN 'border'
-                  ELSE 'noise' END AS role,
-             coalesce(cr.rep, b.rep, -1) AS rep
-      FROM n LEFT JOIN corerep cr ON n.vec_id = cr.vec_id
-             LEFT JOIN border b ON n.vec_id = b.vec_id"""
-
-  private val gramContainmentSql = """
-      WITH g AS (
-        SELECT doc_id,
-               list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                              for i in range(1, len(w)-1)]) AS grams
-        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-      e AS (SELECT doc_id, len(grams) AS ng, unnest(grams) AS gram FROM g),
-      p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared,
-                   max(a.ng) AS na, max(b.ng) AS nb
-            FROM e a JOIN e b ON a.gram = b.gram AND a.doc_id < b.doc_id
-            GROUP BY 1, 2)
-      SELECT doc_a, doc_b, round(shared / na, 6) AS cont_a,
-             round(shared / nb, 6) AS cont_b
-      FROM p
-      WHERE greatest(round(shared / na, 6), round(shared / nb, 6)) >= 0.6"""
-
-  /** The winnowing replay's shared CTE chain — word rolling hashes
-    * (`h`), 4-gram shingles (`s`), window-min fingerprints (`fp`),
-    * df-capped buckets (`rare`) and the >=2-shared pair relation — ONE
-    * definition interpolated into every consumer oracle
-    * (text_winnowing, text_winnowing_pairs, the containment row, both
-    * detector cross-checks), so a hash-constant or window-arithmetic
-    * fix can never silently diverge the replays.
-    */
-  private val winnowHashCtes = """h AS (
-        SELECT doc_id,
-          list_transform(string_split(text, ' '), t ->
-            list_reduce(list_prepend(CAST(0 AS BIGINT),
-              list_transform(string_split(t, ''),
-                c -> CAST(unicode(c) AS BIGINT))),
-              (acc, c) -> (acc * 31 + c) % 1000000007)) AS wh
-        FROM documents),
-      s AS (
-        SELECT doc_id,
-          [list_reduce(list_prepend(CAST(0 AS BIGINT), wh[i:i+4]),
-            (acc, x) -> (acc * 131 + x) % 1000000007)
-           for i in range(1, len(wh) - 3)] AS sh
-        FROM h WHERE len(wh) >= 8)"""
-
-  private val winnowFpRareCtes = """fp AS (
-        SELECT DISTINCT doc_id,
-          unnest([list_min(sh[j:j+3]) for j in range(1, len(sh) - 2)]) AS h
-        FROM s),
-      rare AS (SELECT h FROM fp GROUP BY h
-               HAVING count(DISTINCT doc_id) <= 64)"""
-
-  private def winnowPairSql(alias: String) =
-    s"""SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               CAST(count(*) AS BIGINT) AS $alias
-             FROM (SELECT * FROM fp WHERE h IN (SELECT h FROM rare)) a
-             JOIN (SELECT * FROM fp WHERE h IN (SELECT h FROM rare)) b
-               ON a.h = b.h AND a.doc_id < b.doc_id
-             GROUP BY 1, 2 HAVING count(*) >= 2"""
-
-  private val winnowContainmentSql = s"""
-      WITH $winnowHashCtes,
-      $winnowFpRareCtes,
-      sz AS (SELECT doc_id, count(*) AS nfp FROM fp GROUP BY 1),
-      pr AS (${winnowPairSql("n_shared")})
-      SELECT pr.doc_a, pr.doc_b, pr.n_shared,
-             pr.n_shared * 1000 // sa.nfp AS cont_a_permille,
-             pr.n_shared * 1000 // sb.nfp AS cont_b_permille
-      FROM pr JOIN sz sa ON sa.doc_id = pr.doc_a
-      JOIN sz sb ON sb.doc_id = pr.doc_b"""
-
-  /** Cross-detector containment replay: the two detectors' full
-    * chains as CTE subqueries, full-outer-joined on the pair key.
-    */
-  // MinHash-vs-winnowing cross-check: the MinHash side reconstructed
-  // INDEPENDENTLY from brute-force exact word-3-gram Jaccard >= 0.8
-  // (banding completeness at the declared operating point is thereby
-  // under the hash gate, not assumed), the winnowing side the same
-  // rolling-hash fingerprint replay as text_winnowing_pairs
-  private val minhashWinnowCrossCheckSql = s"""
-      WITH g AS (
-        SELECT doc_id,
-               list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                              for i in range(1, len(w)-1)]) AS grams
-        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-      e AS (SELECT doc_id, len(grams) AS ng, unnest(grams) AS gram FROM g),
-      p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared,
-                   max(a.ng) AS na, max(b.ng) AS nb
-            FROM e a JOIN e b ON a.gram = b.gram AND a.doc_id < b.doc_id
-            GROUP BY 1, 2),
-      mh AS (SELECT doc_a, doc_b,
-                    round(shared / (na + nb - shared), 6) AS jaccard
-             FROM p WHERE round(shared / (na + nb - shared), 6) >= 0.8),
-      $winnowHashCtes,
-      $winnowFpRareCtes,
-      winn AS (${winnowPairSql("winn_shared")})
-      SELECT coalesce(m.doc_a, w.doc_a) AS doc_a,
-             coalesce(m.doc_b, w.doc_b) AS doc_b,
-             CAST(CASE WHEN m.doc_a IS NOT NULL THEN 1 ELSE 0 END
-               AS BIGINT) AS in_minhash,
-             CAST(CASE WHEN w.doc_a IS NOT NULL THEN 1 ELSE 0 END
-               AS BIGINT) AS in_winnow,
-             m.jaccard, w.winn_shared
-      FROM mh m FULL JOIN winn w
-        ON m.doc_a = w.doc_a AND m.doc_b = w.doc_b"""
-
-  private val containmentCrossCheckSql = s"""
-      WITH gram AS (SELECT * FROM ($gramContainmentSql)),
-      winn AS (SELECT * FROM ($winnowContainmentSql))
-      SELECT coalesce(g.doc_a, w.doc_a) AS doc_a,
-             coalesce(g.doc_b, w.doc_b) AS doc_b,
-             CAST(CASE WHEN g.doc_a IS NOT NULL THEN 1 ELSE 0 END
-               AS BIGINT) AS in_gram,
-             CAST(CASE WHEN w.doc_a IS NOT NULL THEN 1 ELSE 0 END
-               AS BIGINT) AS in_winnow,
-             g.cont_a AS gram_cont_a, g.cont_b AS gram_cont_b,
-             w.n_shared AS winn_shared,
-             w.cont_a_permille AS winn_cont_a_permille,
-             w.cont_b_permille AS winn_cont_b_permille
-      FROM gram g FULL JOIN winn w
-        ON g.doc_a = w.doc_a AND g.doc_b = w.doc_b"""
-
-  /** Every version boundary's state reconstructed relationally —
-    * shared by the copy-on-write chain row (orders_cdc_timetravel) and
-    * its merge-on-read twin (orders_mor_timetravel): the two physical
-    * strategies must implement IDENTICAL as-of semantics.
-    */
-  private val timeTravelSql = """
-      WITH vs AS (SELECT range AS v FROM range(-1, 4)),
-      base AS (SELECT o_orderkey AS k,
-                      CAST(round(o_totalprice * 100) AS BIGINT) AS c
-               FROM orders),
-      st AS (
-        SELECT vs.v,
-               CASE WHEN b.k % 500 = 0 AND ((b.k // 500) % 4) <= vs.v
-                 THEN (b.c * 11) // 10 ELSE b.c END AS c
-        FROM vs, base b
-        WHERE NOT (b.k % 700 = 0 AND b.k % 500 <> 0
-                   AND ((b.k // 500) % 4) <= vs.v)
-        UNION ALL
-        SELECT vs.v, (b.c * 11) // 10 AS c
-        FROM vs, base b
-        WHERE b.k % 500 = 0 AND ((b.k // 500) % 4) <= vs.v)
-      SELECT CAST(v AS BIGINT) AS version,
-             CAST(count(*) AS BIGINT) AS n_rows,
-             CAST(sum(c) AS BIGINT) AS total_cents
-      FROM st GROUP BY 1"""
-
-  /** The composed MOR end state + sidecar sizes — shared by the batch
-    * row (orders_merge_on_read) and its streamed twin
-    * (orders_mor_apply_streamed): one definition, one oracle.
-    */
-  private val morEndStateSql = """
-      WITH up AS (SELECT o_orderkey AS k,
-                    (CAST(round(o_totalprice * 100) AS BIGINT) * 11) // 10
-                      AS nc
-                  FROM orders WHERE o_orderkey % 500 = 0),
-      kept AS (SELECT CASE WHEN o_orderkey % 500 = 0
-                        THEN (CAST(round(o_totalprice * 100) AS BIGINT) * 11)
-                             // 10
-                        ELSE CAST(round(o_totalprice * 100) AS BIGINT)
-                      END AS c
-               FROM orders
-               WHERE NOT (o_orderkey % 700 = 0 AND o_orderkey % 500 <> 0)),
-      allr AS (SELECT c FROM kept UNION ALL SELECT nc FROM up),
-      nu AS (SELECT CAST(count(*) AS BIGINT) AS n FROM up),
-      nd AS (SELECT CAST(count(*) AS BIGINT) AS n FROM orders
-             WHERE o_orderkey % 700 = 0 AND o_orderkey % 500 <> 0)
-      SELECT CAST(count(*) AS BIGINT) AS n_rows,
-             (SELECT n FROM nu) + (SELECT n FROM nd) AS n_delete_keys,
-             (SELECT n FROM nu) * 2 AS n_insert_rows,
-             CAST(sum(c) AS BIGINT) AS total_cents
-      FROM allr"""
-
-  def oracleSql: Map[String, String] = Map(
-    // schema-evolution replay: generation 1 (even keys) landed before
-    // the priority column existed, so those rows roll up under the
-    // sentinel; generation 2 (odd keys) carries the real priority
-    "ingest_schema_evolution" -> """
-      SELECT CASE WHEN o_orderkey % 2 = 1 THEN o_orderpriority
-                  ELSE '(pre-evolution)' END AS o_orderpriority,
-             CAST(count(*) AS BIGINT) AS n_orders,
-             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS total_cents
-      FROM orders GROUP BY 1""",
-
-    // ingest-pipeline replay: the first 300 VALID ndjson records are
-    // vec_id 0..299 (planted malformed/vectorless lines drop at parse
-    // time), the split is round(0.95·n), the body's first sentence is
-    // 'Doc <id> label <label>' by construction of the render
-    "ingest_ndjson_topk" -> s"""
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb,
-                        'Doc ' || vec_id || ' label ' || label AS first_sentence
-                 FROM embeddings WHERE vec_id < 300),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s, count(*) AS c FROM e)
-      SELECT b.vec_id, $cosDistSql AS dist, b.first_sentence
-      FROM e b, e q, p
-      WHERE b.vec_id < p.s AND q.vec_id = p.s + (29 % (p.c - p.s))
-      ORDER BY dist, b.vec_id LIMIT 10""",
-
-    "knn_exact_single" -> s"""
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s, count(*) AS c FROM e)
-      SELECT b.vec_id, $cosDistSql AS dist
-      FROM e b, e q, p
-      WHERE b.vec_id < p.s AND q.vec_id = p.s + (29 % (p.c - p.s))
-      ORDER BY dist, b.vec_id LIMIT 10""",
-
-    // the 'search' backend's vector literal IS fixture row 29, so the
-    // oracle is full-table knn of that row (self at distance 0)
-    "sql_knn_search" -> s"""
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings)
-      SELECT b.vec_id, $cosDistSql AS dist
-      FROM e b, e q
-      WHERE q.vec_id = 29
-      ORDER BY dist, b.vec_id LIMIT 10""",
-
-    // the SQL-facing view over the exact backend answers the identical
-    // question, so it shares knn_exact_single's oracle
-    "sql_knn_exact" -> s"""
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s, count(*) AS c FROM e)
-      SELECT b.vec_id, $cosDistSql AS dist
-      FROM e b, e q, p
-      WHERE b.vec_id < p.s AND q.vec_id = p.s + (29 % (p.c - p.s))
-      ORDER BY dist, b.vec_id LIMIT 10""",
-
-    "knn_exact_batch" -> s"""
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s FROM e),
-      d AS (SELECT q.vec_id AS qid, b.vec_id, $cosDistSql AS dist
-            FROM e b, e q, p
-            WHERE b.vec_id < p.s AND q.vec_id >= p.s)
-      SELECT qid, vec_id, dist,
-             CAST(row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id) AS INT) AS rk
-      FROM d
-      QUALIFY rk <= 10""",
-
-    // the Matryoshka batch replayed with REAL SQL at ANY tier (the
-    // first quantizer-batch pin converted to a reconstruction — r12
-    // verdict ask #5): stage 1 coarse-scores on the 32-dim PREFIX
-    // (DuckDB's 1-based inclusive slice emb[1:32] is Spark's
-    // slice(emb,1,32)) with the identical clamp-then-round cosine,
-    // keeps k*overfetch=160 candidates per query under the same
-    // (cdist, vec_id) tie order as the bounded heap, then stage 2
-    // re-ranks only the survivors at full dimension — the same
-    // two-stage plan the engine runs, so the hash certifies BOTH
-    // stages including the coarse-boundary tie behavior
-    "knn_mrl_batch" -> s"""
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s FROM e),
-      cd AS (SELECT q.vec_id AS qid, b.vec_id,
-                    round(1 - greatest(
-                      list_sum(list_transform(list_zip(b.emb[1:32], q.emb[1:32]),
-                                              z -> z[1]*z[2])) /
-                      (sqrt(list_sum(list_transform(b.emb[1:32], x -> x*x))) *
-                       sqrt(list_sum(list_transform(q.emb[1:32], x -> x*x)))),
-                      0), 6) AS cdist
-             FROM e b, e q, p
-             WHERE b.vec_id < p.s AND q.vec_id >= p.s),
-      cand AS (SELECT qid, vec_id FROM cd
-               QUALIFY row_number()
-                 OVER (PARTITION BY qid ORDER BY cdist, vec_id) <= 160),
-      d AS (SELECT c.qid, b.vec_id, $cosDistSql AS dist
-            FROM cand c
-            JOIN e b ON b.vec_id = c.vec_id
-            JOIN e q ON q.vec_id = c.qid)
-      SELECT qid, vec_id, dist,
-             CAST(row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id)
-               AS INT) AS rk
-      FROM d
-      QUALIFY rk <= 10""",
-
-    // the SQ8 batch replayed with REAL SQL at ANY tier (second
-    // quantizer-batch pin converted — r12 verdict ask #5): the
-    // "training" is just per-dimension min/max over the base split, so
-    // the oracle re-derives the bounds, re-encodes (floor(x+0.5)
-    // replicates Java Math.round exactly; clamp [0,255]; degenerate
-    // span encodes the min), decodes base vectors, coarse-scores the
-    // decoded base against raw queries with the same clamp cosine,
-    // keeps k*overfetch=160 per query under the engine's
-    // (approx_dist, vec_id) tie order, and exact-re-ranks the
-    // survivors — certifying train+encode+decode+both rankings
-    "knn_sq_batch" -> s"""
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s FROM e),
-      dims AS (SELECT i AS dim, min(e.emb[i]) AS mn, max(e.emb[i]) AS mx
-               FROM e, p, range(1, 65) t(i)
-               WHERE e.vec_id < p.s
-               GROUP BY i),
-      db AS (SELECT e.vec_id,
-                    list(CASE WHEN d.mx - d.mn <= 0 THEN d.mn
-                              ELSE d.mn + LEAST(255, GREATEST(0,
-                                CAST(floor(255.0 * (e.emb[d.dim] - d.mn)
-                                           / (d.mx - d.mn) + 0.5) AS INT)))
-                                / 255.0 * (d.mx - d.mn)
-                         END ORDER BY d.dim) AS demb
-             FROM e, p, dims d
-             WHERE e.vec_id < p.s
-             GROUP BY e.vec_id),
-      cd AS (SELECT q.vec_id AS qid, b.vec_id,
-                    1 - greatest(
-                      list_sum(list_transform(list_zip(b.demb, q.emb),
-                                              z -> z[1]*z[2])) /
-                      (sqrt(list_sum(list_transform(b.demb, x -> x*x))) *
-                       sqrt(list_sum(list_transform(q.emb, x -> x*x)))),
-                      0) AS adist
-             FROM db b, e q, p
-             WHERE q.vec_id >= p.s),
-      cand AS (SELECT qid, vec_id FROM cd
-               QUALIFY row_number()
-                 OVER (PARTITION BY qid ORDER BY adist, vec_id) <= 160),
-      d AS (SELECT c.qid, b.vec_id, $cosDistSql AS dist
-            FROM cand c
-            JOIN e b ON b.vec_id = c.vec_id
-            JOIN e q ON q.vec_id = c.qid)
-      SELECT qid, vec_id, dist,
-             CAST(row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id)
-               AS INT) AS rk
-      FROM d
-      QUALIFY rk <= 10""",
-
-    // the 1-bit sign-quantization batch replayed with REAL SQL at ANY
-    // tier (third quantizer pin converted — r12 verdict ask #5): the
-    // quantizer is the CONSTANT sign-at-zero threshold, so the coarse
-    // stage is pure INTEGER Hamming — count of dimensions whose sign
-    // bit differs (exactly bit_count(code XOR qcode) on the packed
-    // words) — with zero float risk; k*overfetch=160 candidates per
-    // query under the engine's (hamming, vec_id) tie order, then the
-    // shared exact re-rank
-    "knn_bq_batch" -> s"""
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s FROM e),
-      cd AS (SELECT q.vec_id AS qid, b.vec_id,
-                    list_sum(list_transform(list_zip(b.emb, q.emb),
-                      z -> CASE WHEN (z[1] > 0) <> (z[2] > 0)
-                           THEN 1 ELSE 0 END)) AS hamming
-             FROM e b, e q, p
-             WHERE b.vec_id < p.s AND q.vec_id >= p.s),
-      cand AS (SELECT qid, vec_id FROM cd
-               QUALIFY row_number()
-                 OVER (PARTITION BY qid ORDER BY hamming, vec_id) <= 160),
-      d AS (SELECT c.qid, b.vec_id, $cosDistSql AS dist
-            FROM cand c
-            JOIN e b ON b.vec_id = c.vec_id
-            JOIN e q ON q.vec_id = c.qid)
-      SELECT qid, vec_id, dist,
-             CAST(row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id)
-               AS INT) AS rk
-      FROM d
-      QUALIFY rk <= 10""",
-
-    // the sampled exact GT replayed with REAL SQL: same split + top-k
-    // reconstruction as knn_exact_batch, restricted to the 1-in-10
-    // deterministic query sample — O(|sample|·n), the form that stays
-    // replayable at the 10x tier (r10 verdict ask #5)
-    "knn_exact_batch_sampled" -> s"""
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s FROM e),
-      d AS (SELECT q.vec_id AS qid, b.vec_id, $cosDistSql AS dist
-            FROM e b, e q, p
-            WHERE b.vec_id < p.s AND q.vec_id >= p.s
-              AND (q.vec_id - p.s) % 10 = 0)
-      SELECT qid, vec_id, dist,
-             CAST(row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id) AS INT) AS rk
-      FROM d
-      QUALIFY rk <= 10""",
-
-    // retrieved-set k-occurrence histogram over the same sampled GT
-    "emb_hubness_sampled" -> s"""
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s FROM e),
-      d AS (SELECT q.vec_id AS qid, b.vec_id, $cosDistSql AS dist
-            FROM e b, e q, p
-            WHERE b.vec_id < p.s AND q.vec_id >= p.s
-              AND (q.vec_id - p.s) % 10 = 0),
-      t AS (SELECT qid, vec_id,
-              row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id)
-                AS rk
-            FROM d QUALIFY rk <= 10),
-      o AS (SELECT vec_id, CAST(count(*) AS BIGINT) AS k_occ
-            FROM t GROUP BY 1)
-      SELECT k_occ, CAST(count(*) AS BIGINT) AS n_vectors
-      FROM o GROUP BY 1""",
-
-    // reciprocal filter replay: self top-5 within the deterministic
-    // ~2000-vector panel universe (stride = greatest(1, s // 2000) — 1,
-    // i.e. the full base, at this tier; bounds the quadratic leg so
-    // the SAME SQL replays at derived tiers, r13 verdict #1), then the
-    // (a,b)x(b,a) join with a < b
-    "knn_mutual_pairs" -> s"""
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s,
-                   greatest(1, CAST(round(0.95 * count(*)) AS BIGINT) // 2000)
-                     AS st
-            FROM e),
-      u AS MATERIALIZED (SELECT vec_id, emb FROM e, p
-            WHERE vec_id < p.s AND vec_id % p.st = 0),
-      d AS (SELECT q.vec_id AS qid, b.vec_id, $cosDistSql AS dist
-            FROM u b, u q
-            WHERE b.vec_id <> q.vec_id),
-      t AS (SELECT qid, vec_id, dist,
-              row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id)
-                AS rk
-            FROM d QUALIFY rk <= 5)
-      SELECT a.qid AS vec_a, a.vec_id AS vec_b, a.dist
-      FROM t a JOIN t r ON a.qid = r.vec_id AND a.vec_id = r.qid
-      WHERE a.qid < a.vec_id""",
-
-    // hubness replay: the anchored self top-5 relation — queries are
-    // the deterministic ~512-anchor stride panel (stride 1, i.e. every
-    // base vector, at this tier; bounds the oracle at O(panel·n) so it
-    // replays at derived tiers, r13 verdict #1), candidates the FULL
-    // base — zero-filled k-occurrence over the full base, exact
-    // integer moments, m2*sqrt(m2) denominator
-    "emb_hubness" -> s"""
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s,
-                   greatest(1, CAST(round(0.95 * count(*)) AS BIGINT) // 512)
-                     AS st
-            FROM e),
-      bb AS MATERIALIZED (SELECT vec_id, emb FROM e, p WHERE vec_id < p.s),
-      qq AS MATERIALIZED (SELECT vec_id, emb FROM e, p
-            WHERE vec_id < p.s AND vec_id % p.st = 0),
-      d AS (SELECT q.vec_id AS qid, b.vec_id, $cosDistSql AS dist
-            FROM bb b, qq q
-            WHERE b.vec_id <> q.vec_id),
-      t AS (SELECT qid, vec_id,
-              row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id)
-                AS rk
-            FROM d QUALIFY rk <= 5),
-      occ AS (SELECT b.vec_id, count(t.qid) AS n_occ
-              FROM (SELECT vec_id FROM e, p WHERE vec_id < p.s) b
-              LEFT JOIN t ON t.vec_id = b.vec_id GROUP BY 1),
-      m AS (SELECT count(*) AS n, sum(n_occ) AS s1,
-              sum(n_occ * n_occ) AS s2,
-              sum(n_occ * n_occ * n_occ) AS s3
-            FROM occ),
-      sk AS (SELECT round(
-               (CAST(s3 AS DOUBLE) / n
-                  - 3.0 * (CAST(s1 AS DOUBLE) / n)
-                        * (CAST(s2 AS DOUBLE) / n)
-                  + 2.0 * (CAST(s1 AS DOUBLE) / n)
-                        * (CAST(s1 AS DOUBLE) / n)
-                        * (CAST(s1 AS DOUBLE) / n))
-               / ((CAST(s2 AS DOUBLE) / n
-                     - (CAST(s1 AS DOUBLE) / n)
-                         * (CAST(s1 AS DOUBLE) / n))
-                  * sqrt(CAST(s2 AS DOUBLE) / n
-                     - (CAST(s1 AS DOUBLE) / n)
-                         * (CAST(s1 AS DOUBLE) / n))), 6) AS skewness
-             FROM m)
-      SELECT occ.n_occ AS n_occ, CAST(count(*) AS BIGINT) AS n_vecs,
-             any_value(sk.skewness) AS skewness
-      FROM occ CROSS JOIN sk GROUP BY 1""",
-
-    // component replay: the same panel-universe mutual-pair relation
-    // (identical stride arithmetic), closed by a RECURSIVE reach;
-    // cluster = min reachable label (the star-contraction fixpoint's
-    // invariant)
-    "emb_mutual_knn_clusters" -> s"""
-      WITH RECURSIVE e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s,
-                   greatest(1, CAST(round(0.95 * count(*)) AS BIGINT) // 2000)
-                     AS st
-            FROM e),
-      u AS MATERIALIZED (SELECT vec_id, emb FROM e, p
-            WHERE vec_id < p.s AND vec_id % p.st = 0),
-      d AS (SELECT q.vec_id AS qid, b.vec_id, $cosDistSql AS dist
-            FROM u b, u q
-            WHERE b.vec_id <> q.vec_id),
-      t AS (SELECT qid, vec_id,
-              row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id)
-                AS rk
-            FROM d QUALIFY rk <= 5),
-      mp AS (SELECT a.qid AS u, a.vec_id AS v
-             FROM t a JOIN t r ON a.qid = r.vec_id AND a.vec_id = r.qid
-             WHERE a.qid < a.vec_id),
-      sym AS (SELECT u, v FROM mp UNION ALL SELECT v, u FROM mp),
-      reach(node, lbl) AS (
-        SELECT DISTINCT u, u FROM sym
-        UNION
-        SELECT s.v, reach.lbl FROM sym s JOIN reach ON reach.node = s.u)
-      SELECT node AS vec_id, min(lbl) AS cluster
-      FROM reach GROUP BY node""",
-
-    // the V2 view fixes one held-out qid (s + 25 mod the query count),
-    // so the oracle is that query row's exact top-10 (same arithmetic
-    // as knn_exact_batch)
-    "sql_knn_v2" -> s"""
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s, count(*) AS c FROM e)
-      SELECT b.vec_id, $cosDistSql AS dist
-      FROM e b, e q, p
-      WHERE b.vec_id < p.s AND q.vec_id = p.s + (25 % (p.c - p.s))
-      ORDER BY dist, b.vec_id LIMIT 10""",
-
-    // the pushed top-5 of the same fixed held-out query's exact top-10
-    "sql_knn_v2_topn" -> s"""
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s, count(*) AS c FROM e)
-      SELECT b.vec_id, $cosDistSql AS dist
-      FROM e b, e q, p
-      WHERE b.vec_id < p.s AND q.vec_id = p.s + (25 % (p.c - p.s))
-      ORDER BY dist, b.vec_id LIMIT 5""",
-
-    // k rows per held-out query by construction, so the count is
-    // 10 x the query-split size — derived independently of the scan
-    "sql_knn_v2_count" -> """
-      SELECT CAST(10 * (c - s) AS BIGINT) AS n
-      FROM (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s,
-                   count(*) AS c
-            FROM embeddings)""",
-
-    // negatives = md5-ordered non-neighbors; positives replayed via
-    // the same exact-top-10 ranking the knn_exact_batch oracle uses
-    "pipeline_negative_sampling" -> s"""
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s FROM e),
-      d AS (SELECT q.vec_id AS qid, b.vec_id, $cosDistSql AS dist
-            FROM e b, e q, p
-            WHERE b.vec_id < p.s AND q.vec_id >= p.s),
-      pos AS (SELECT qid, vec_id FROM (
-                SELECT qid, vec_id,
-                       row_number() OVER (PARTITION BY qid
-                         ORDER BY dist, vec_id) AS rk
-                FROM d) WHERE rk <= 10),
-      cand AS (SELECT b.vec_id, q.vec_id AS qid,
-                      md5(CAST(q.vec_id AS VARCHAR) || ':' ||
-                          CAST(b.vec_id AS VARCHAR)) AS h
-               FROM e b, e q, p
-               WHERE b.vec_id < p.s AND q.vec_id >= p.s
-                 AND NOT EXISTS (SELECT 1 FROM pos
-                                 WHERE pos.qid = q.vec_id
-                                   AND pos.vec_id = b.vec_id))
-      SELECT qid, vec_id,
-             CAST(row_number() OVER (PARTITION BY qid ORDER BY h, vec_id)
-                  AS INT) AS rk
-      FROM cand QUALIFY rk <= 20""",
-
-    // the 20-query panel is carved out FIRST (materialized CTEs): as a
-    // flat cross-join + filter DuckDB evaluated the n x n pair space
-    // before pruning the query side — 400M list-dots at the sf1 tier
-    "knn_range_search" -> s"""
-      WITH e AS MATERIALIZED (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s FROM e),
-      q AS MATERIALIZED (SELECT * FROM e
-            WHERE vec_id >= (SELECT s FROM p)
-              AND vec_id < (SELECT s FROM p) + 20)
-      SELECT q.vec_id AS qid, b.vec_id, $cosDistSql AS dist
-      FROM e b, q
-      WHERE b.vec_id < (SELECT s FROM p)
-        AND $cosDistSql <= 0.7""",
-
-    // streaming-executed twin: every (query, base) pair is scored
-    // exactly once regardless of micro-batching, so the same relation
-    "knn_range_streamed" -> s"""
-      WITH e AS MATERIALIZED (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s FROM e),
-      q AS MATERIALIZED (SELECT * FROM e
-            WHERE vec_id >= (SELECT s FROM p)
-              AND vec_id < (SELECT s FROM p) + 20)
-      SELECT q.vec_id AS qid, b.vec_id, $cosDistSql AS dist
-      FROM e b, q
-      WHERE b.vec_id < (SELECT s FROM p)
-        AND $cosDistSql <= 0.7""",
-
-    "knn_filtered_batch" -> s"""
-      WITH e AS (SELECT vec_id, label,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s FROM e),
-      d AS (SELECT q.vec_id AS qid, b.vec_id, $cosDistSql AS dist
-            FROM e b, e q, p
-            WHERE b.vec_id < p.s AND b.label = 3
-              AND q.vec_id >= p.s AND q.vec_id < p.s + 50)
-      SELECT qid, vec_id, dist,
-             CAST(row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id) AS INT) AS rk
-      FROM d
-      QUALIFY rk <= 10""",
-
-    // hard-negative twin: the base-side predicate is label-INEQUALITY
-    // against the query's own label
-    "knn_hard_negatives" -> s"""
-      WITH e AS (SELECT vec_id, label,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s FROM e),
-      d AS (SELECT q.vec_id AS qid, b.vec_id, $cosDistSql AS dist
-            FROM e b, e q, p
-            WHERE b.vec_id < p.s AND b.label <> q.label
-              AND q.vec_id >= p.s AND q.vec_id < p.s + 50)
-      SELECT qid, vec_id, dist,
-             CAST(row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id) AS INT) AS rk
-      FROM d
-      QUALIFY rk <= 10""",
-
-    // faceted twin: the rank window partitions by (query, label)
-    "knn_per_label_batch" -> s"""
-      WITH e AS (SELECT vec_id, label,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s FROM e),
-      d AS (SELECT q.vec_id AS qid, b.label, b.vec_id, $cosDistSql AS dist
-            FROM e b, e q, p
-            WHERE b.vec_id < p.s
-              AND q.vec_id >= p.s AND q.vec_id < p.s + 20)
-      SELECT qid, label, vec_id, dist,
-             CAST(row_number() OVER (PARTITION BY qid, label
-                                     ORDER BY dist, vec_id) AS INT) AS rk
-      FROM d
-      QUALIFY rk <= 3""",
-
-    "knn_exact_after_insert" -> afterInsertOracle,
-    // IVF insert_many + exhaustive probe is exact -> same oracle; the
-    // hash gate covers the inverted-file mutation itself
-    "knn_ivf_after_insert" -> afterInsertOracle,
-
-    // after-insert oracle with the deleted 80-90% slab excluded by
-    // predicate instead of by anti-join; shared by the exact and the
-    // IVF (exhaustive-probe, exact by construction) delete paths
-    "knn_exact_after_delete" -> afterDeleteOracle,
-    "knn_ivf_after_delete" -> afterDeleteOracle,
-
-    "knn_euclidean_single" -> s"""
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s, count(*) AS c FROM e)
-      SELECT b.vec_id,
-             round(sqrt(list_sum(list_transform(list_zip(b.emb, q.emb),
-                   z -> (z[1]-z[2])*(z[1]-z[2])))), 6) AS dist
-      FROM e b, e q, p
-      WHERE b.vec_id < p.s AND q.vec_id = p.s + (29 % (p.c - p.s))
-      ORDER BY dist, b.vec_id LIMIT 10""",
-
-    "knn_mips_single" -> s"""
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s, count(*) AS c FROM e)
-      SELECT b.vec_id,
-             round(list_sum(list_transform(list_zip(b.emb, q.emb),
-                   z -> z[1]*z[2])), 6) AS score
-      FROM e b, e q, p
-      WHERE b.vec_id < p.s AND q.vec_id = p.s + (29 % (p.c - p.s))
-      ORDER BY score DESC, b.vec_id LIMIT 10""",
-
-    // recall/precision of the exact batch result against itself — the
-    // oracle recomputes the same top-k in DuckDB and evaluates the same
-    // semi-join + ratio, exercising E1-E3 end-to-end (both sides = 1.0).
-    "eval_recall_exact_self" -> s"""
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s FROM e),
-      d AS (SELECT q.vec_id AS qid, b.vec_id, $cosDistSql AS dist
-            FROM e b, e q, p
-            WHERE b.vec_id < p.s AND q.vec_id >= p.s),
-      t AS (SELECT qid, vec_id FROM (
-              SELECT qid, vec_id,
-                     row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id) AS rk
-              FROM d) WHERE rk <= 10)
-      SELECT round(CAST((SELECT count(*) FROM t a
-                         WHERE EXISTS (SELECT 1 FROM t b
-                                       WHERE b.qid = a.qid AND b.vec_id = a.vec_id)) AS DOUBLE)
-                   / (SELECT count(*) FROM t), 6) AS recall""",
-
-    // generic MAP SQL over the self pair: per-hit running-hit-count /
-    // rank summed per query, divided by |relevant| — every term is the
-    // exact value 1.0 here, so the mean is engine-exact
-    "eval_map_exact_self" -> s"""
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s FROM e),
-      d AS (SELECT q.vec_id AS qid, b.vec_id, $cosDistSql AS dist
-            FROM e b, e q, p
-            WHERE b.vec_id < p.s AND q.vec_id >= p.s),
-      t AS (SELECT qid, vec_id, rk FROM (
-              SELECT qid, vec_id,
-                     row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id) AS rk
-              FROM d) WHERE rk <= 10),
-      h AS (SELECT a.qid, a.rk,
-                   CAST(count(*) OVER (PARTITION BY a.qid ORDER BY a.rk)
-                     AS DOUBLE) / a.rk AS prec
-            FROM t a JOIN t r ON a.qid = r.qid AND a.vec_id = r.vec_id),
-      ap AS (SELECT h.qid, sum(prec) / max(n.n_rel) AS ap
-             FROM h JOIN (SELECT qid, count(*) AS n_rel FROM t GROUP BY 1) n
-               ON h.qid = n.qid
-             GROUP BY h.qid)
-      SELECT round(avg(ap), 6) AS map FROM ap""",
-
-    "eval_precision_exact_self" -> s"""
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      p AS (SELECT CAST(round(0.95 * count(*)) AS BIGINT) AS s FROM e),
-      d AS (SELECT q.vec_id AS qid, b.vec_id, $cosDistSql AS dist
-            FROM e b, e q, p
-            WHERE b.vec_id < p.s AND q.vec_id >= p.s),
-      t AS (SELECT qid, vec_id FROM (
-              SELECT qid, vec_id,
-                     row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id) AS rk
-              FROM d) WHERE rk <= 10)
-      SELECT round(CAST((SELECT count(*) FROM t a
-                         WHERE EXISTS (SELECT 1 FROM t b
-                                       WHERE b.qid = a.qid AND b.vec_id = a.vec_id)) AS DOUBLE)
-                   / (SELECT count(*) FROM t), 6) AS precision""",
-
-    "dedup_exact" -> """
-      SELECT doc_id,
-             min(doc_id) OVER (PARTITION BY text) AS keeper_id,
-             count(*) OVER (PARTITION BY text) AS group_size
-      FROM documents""",
-
-    "dedup_ngram_jaccard" -> """
-      WITH g AS (
-        SELECT doc_id,
-               list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                              for i in range(1, len(w)-1)]) AS grams
-        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-      e AS (SELECT doc_id, len(grams) AS ng, unnest(grams) AS gram FROM g),
-      p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared,
-                   max(a.ng) AS na, max(b.ng) AS nb
-            FROM e a JOIN e b ON a.gram = b.gram AND a.doc_id < b.doc_id
-            GROUP BY 1, 2)
-      SELECT doc_a, doc_b,
-             round(shared / (na + nb - shared), 6) AS jaccard
-      FROM p WHERE round(shared / (na + nb - shared), 6) >= 0.5""",
-
-    // the >= 0.8 slice of the mined pair relation, rolled up per
-    // unordered source pair; the mean replays the micro-unit sum
-    "dedup_cross_source" -> """
-      WITH g AS (
-        SELECT doc_id,
-               list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                              for i in range(1, len(w)-1)]) AS grams
-        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-      e AS (SELECT doc_id, len(grams) AS ng, unnest(grams) AS gram FROM g),
-      p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared,
-                   max(a.ng) AS na, max(b.ng) AS nb
-            FROM e a JOIN e b ON a.gram = b.gram AND a.doc_id < b.doc_id
-            GROUP BY 1, 2),
-      j AS (SELECT doc_a, doc_b,
-                   round(shared / (na + nb - shared), 6) AS jaccard
-            FROM p WHERE round(shared / (na + nb - shared), 6) >= 0.8),
-      t AS (SELECT least(da.source, db.source) AS source_a,
-                   greatest(da.source, db.source) AS source_b,
-                   CAST(round(j.jaccard * 1000000) AS BIGINT) AS jm
-            FROM j JOIN documents da ON da.doc_id = j.doc_a
-                   JOIN documents db ON db.doc_id = j.doc_b)
-      SELECT source_a, source_b, count(*) AS n_pairs,
-             round(CAST(sum(jm) AS BIGINT) / count(*) / 1000000.0, 6)
-               AS mean_jaccard
-      FROM t GROUP BY 1, 2""",
-
-    // the incremental (batch-vs-corpus) slice of the same exact-Jaccard
-    // relation: new docs are the doc_id % 10 = 7 batch, corpus is the
-    // rest; the engine mines candidates through the corpus band table
-    // (recall ~1 at j >= 0.9) and verifies exactly
-    "dedup_incremental_minhash" -> """
-      WITH g AS (
-        SELECT doc_id,
-               list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                              for i in range(1, len(w)-1)]) AS grams
-        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-      e AS (SELECT doc_id, len(grams) AS ng, unnest(grams) AS gram FROM g),
-      p AS (SELECT a.doc_id AS doc_new, b.doc_id AS doc_corpus,
-                   count(*) AS shared, max(a.ng) AS na, max(b.ng) AS nb
-            FROM e a JOIN e b ON a.gram = b.gram
-              AND a.doc_id % 10 = 7 AND b.doc_id % 10 <> 7
-            GROUP BY 1, 2)
-      SELECT doc_new, doc_corpus,
-             round(shared / (na + nb - shared), 6) AS jaccard
-      FROM p WHERE round(shared / (na + nb - shared), 6) >= 0.9""",
-
-    // streamed twin: per-micro-batch pure (no state), so the streamed
-    // pair set equals the batch miner's — same oracle text
-    "dedup_incremental_streamed" -> """
-      WITH g AS (
-        SELECT doc_id,
-               list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                              for i in range(1, len(w)-1)]) AS grams
-        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-      e AS (SELECT doc_id, len(grams) AS ng, unnest(grams) AS gram FROM g),
-      p AS (SELECT a.doc_id AS doc_new, b.doc_id AS doc_corpus,
-                   count(*) AS shared, max(a.ng) AS na, max(b.ng) AS nb
-            FROM e a JOIN e b ON a.gram = b.gram
-              AND a.doc_id % 10 = 7 AND b.doc_id % 10 <> 7
-            GROUP BY 1, 2)
-      SELECT doc_new, doc_corpus,
-             round(shared / (na + nb - shared), 6) AS jaccard
-      FROM p WHERE round(shared / (na + nb - shared), 6) >= 0.9""",
-
-    // string-gram replay of the hash-side df histogram (same
-    // collision-surfacing argument as the coverage row)
-    "dedup_gram_spectrum" -> """
-      WITH g AS (
-        SELECT doc_id,
-               list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                              for i in range(1, len(w)-1)]) AS grams
-        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-      e AS (SELECT doc_id, unnest(grams) AS gram FROM g),
-      d AS (SELECT gram, CAST(count(*) AS BIGINT) AS df FROM e GROUP BY 1)
-      SELECT df, CAST(count(*) AS BIGINT) AS n_grams
-      FROM d WHERE df >= 2 GROUP BY df""",
-
-    // string-gram replay of the hash-side coverage rollup (a 64-bit
-    // gram-hash collision on the Spark side would mismatch here)
-    "dedup_gram_coverage" -> """
-      WITH g AS (
-        SELECT doc_id,
-               list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                              for i in range(1, len(w)-1)]) AS grams
-        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-      e AS (SELECT doc_id, unnest(grams) AS gram FROM g),
-      df AS (SELECT gram, count(*) AS df FROM e GROUP BY 1)
-      SELECT doc_id, count(*) AS n_grams,
-             CAST(sum(CASE WHEN df > 1 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_dup_grams,
-             round(sum(CASE WHEN df > 1 THEN 1 ELSE 0 END) / count(*), 6)
-               AS dup_coverage
-      FROM e JOIN df USING (gram) GROUP BY doc_id""",
-
-    // the identical integer random-walk recurrence, 3 unrolled
-    // iterations over per-doc DISTINCT-neighbor adjacency
-    "text_textrank_keywords" -> """
-      WITH d AS (SELECT doc_id, string_split(text, ' ') AS w
-                 FROM documents),
-      e0 AS (SELECT doc_id,
-               unnest([w[i] for i in range(1, len(w))]) AS a,
-               unnest([w[i+1] for i in range(1, len(w))]) AS b
-             FROM d),
-      e AS (SELECT DISTINCT doc_id, a, b FROM (
-              SELECT doc_id, a, b FROM e0 WHERE a <> b
-              UNION ALL
-              SELECT doc_id, b AS a, a AS b FROM e0 WHERE a <> b)),
-      v AS (SELECT DISTINCT doc_id, unnest(w) AS word FROM d),
-      dg AS (SELECT doc_id, a AS word, CAST(count(*) AS BIGINT) AS deg
-             FROM e GROUP BY 1, 2),
-      s0 AS (SELECT v.doc_id, v.word,
-               CAST(1000000 AS BIGINT) AS s, coalesce(dg.deg, 0) AS deg
-             FROM v LEFT JOIN dg
-               ON dg.doc_id = v.doc_id AND dg.word = v.word),
-      s1 AS (SELECT p.doc_id, p.word, p.deg,
-               CAST(150000 + (850 * coalesce(c.sc, 0)) // 1000 AS BIGINT)
-                 AS s
-             FROM s0 p LEFT JOIN (
-               SELECT e.doc_id, e.a AS word, sum(q.s // q.deg) AS sc
-               FROM e JOIN s0 q ON q.doc_id = e.doc_id AND q.word = e.b
-               GROUP BY 1, 2) c
-               ON c.doc_id = p.doc_id AND c.word = p.word),
-      s2 AS (SELECT p.doc_id, p.word, p.deg,
-               CAST(150000 + (850 * coalesce(c.sc, 0)) // 1000 AS BIGINT)
-                 AS s
-             FROM s1 p LEFT JOIN (
-               SELECT e.doc_id, e.a AS word, sum(q.s // q.deg) AS sc
-               FROM e JOIN s1 q ON q.doc_id = e.doc_id AND q.word = e.b
-               GROUP BY 1, 2) c
-               ON c.doc_id = p.doc_id AND c.word = p.word),
-      s3 AS (SELECT p.doc_id, p.word,
-               CAST(150000 + (850 * coalesce(c.sc, 0)) // 1000 AS BIGINT)
-                 AS s
-             FROM s2 p LEFT JOIN (
-               SELECT e.doc_id, e.a AS word, sum(q.s // q.deg) AS sc
-               FROM e JOIN s2 q ON q.doc_id = e.doc_id AND q.word = e.b
-               GROUP BY 1, 2) c
-               ON c.doc_id = p.doc_id AND c.word = p.word)
-      SELECT doc_id, CAST(rk AS INT) AS rk, word AS keyword, s AS score
-      FROM (SELECT doc_id, word, s,
-              row_number() OVER (PARTITION BY doc_id
-                ORDER BY s DESC, word ASC) AS rk
-            FROM s3)
-      WHERE rk <= 3""",
-
-    // the same md5(8-gram) keys, >= 2 distinct docs, distinct covered
-    // positions — replayed with correlated range() laterals
-    "dedup_substring_spans" -> """
-      WITH d AS (SELECT doc_id, string_split(text, ' ') AS w
-                 FROM documents),
-      g AS (SELECT doc_id,
-              unnest([i for i in range(1, greatest(len(w) - 6, 1))]) AS pos,
-              unnest([md5(array_to_string(w[i:i+7], ' '))
-                      for i in range(1, greatest(len(w) - 6, 1))]) AS gk
-            FROM d),
-      dup AS (SELECT gk FROM g GROUP BY gk
-              HAVING count(DISTINCT doc_id) >= 2),
-      cov AS (SELECT doc_id, CAST(count(DISTINCT p) AS BIGINT) AS covered
-              FROM (SELECT doc_id,
-                      unnest([pos + j for j in range(0, 8)]) AS p
-                    FROM g JOIN dup USING (gk)) s
-              GROUP BY doc_id)
-      SELECT d.doc_id, CAST(len(w) AS BIGINT) AS n_tokens,
-             coalesce(covered, 0) AS covered_tokens,
-             coalesce(covered, 0) * 1000 // len(w) AS coverage_permille
-      FROM d LEFT JOIN cov USING (doc_id)""",
-
-    // add-1 bigram LM replayed with positional list comprehensions
-    "text_bigram_perplexity" -> """
-      WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-      pr AS (SELECT doc_id,
-                    unnest([w[i] for i in range(1, len(w))]) AS w1,
-                    unnest([w[i+1] for i in range(1, len(w))]) AS w2
-             FROM d),
-      cb AS (SELECT w1, w2, count(*) AS cb FROM pr GROUP BY 1, 2),
-      cw AS (SELECT w1, CAST(sum(cb) AS BIGINT) AS cw FROM cb GROUP BY 1),
-      v AS (SELECT count(DISTINCT t) AS v
-            FROM (SELECT unnest(w) AS t FROM d)),
-      sc AS (SELECT doc_id, -ln((cb + 1.0) / (cw + v)) AS nll
-             FROM pr JOIN cb USING (w1, w2) JOIN cw USING (w1) CROSS JOIN v)
-      SELECT doc_id, count(*) AS n_bigrams, round(avg(nll), 6) AS mean_nll,
-             round(exp(avg(nll)), 4) AS ppl
-      FROM sc GROUP BY doc_id""",
-
-    // interpolated Kneser-Ney replay: identical margin rollups off the
-    // bigram-type table, identical left-assoc double arithmetic (D=0.75
-    // is exact in binary, so both engines evaluate the same tree)
-    "text_kneser_ney" -> s"""$knChainSql
-      SELECT doc_id, count(*) AS n_bigrams, round(avg(nll), 6) AS kn_mean_nll,
-             round(exp(avg(nll)), 4) AS kn_ppl
-      FROM sc GROUP BY doc_id""",
-
-    // the same per-doc KN surprisal, micro-nat quantized, then the
-    // exact-integer 4x interquartile band per language
-    "pipeline_perplexity_band" -> s"""$knChainSql,
-      doc AS (SELECT doc_id,
-                CAST(round(round(avg(nll), 6) * 1000000.0) AS BIGINT) AS m6
-              FROM sc GROUP BY doc_id),
-      j AS (SELECT lang, m6 FROM doc JOIN documents USING (doc_id)),
-      q AS (SELECT lang,
-              CAST(round(quantile_cont(m6, 0.25) * 4) AS BIGINT) AS lo4,
-              CAST(round(quantile_cont(m6, 0.75) * 4) AS BIGINT) AS hi4
-            FROM j GROUP BY lang)
-      SELECT j.lang, count(*) AS n_docs,
-             CAST(sum(CASE WHEN m6 * 4 >= lo4 AND m6 * 4 <= hi4
-                           THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-             lo4, hi4
-      FROM j JOIN q USING (lang) GROUP BY j.lang, lo4, hi4""",
-
-    // the full A-ES draw replayed: same polyHash uniform, same rounded
-    // key, same (key desc, doc_id) ranking
-    "pipeline_weighted_sample" -> """
-      WITH d AS (SELECT doc_id, lang,
-                        len(string_split(text, ' ')) AS w,
-                        list_reduce(list_prepend(CAST(0 AS BIGINT),
-                          list_transform(string_split(
-                            CAST(doc_id AS VARCHAR) || ':wsample', ''),
-                            c -> CAST(unicode(c) AS BIGINT))),
-                          (acc, c) -> (acc * 31 + c) % 1000000007) AS h
-                 FROM documents),
-      s AS (SELECT lang, doc_id, CAST(w AS BIGINT) AS n_tokens,
-                   round(ln((h + 1.0) / 1000000008.0) / w, 9) AS es_key
-            FROM d)
-      SELECT lang, doc_id, n_tokens, es_key,
-             CAST(row_number() OVER (PARTITION BY lang
-               ORDER BY es_key DESC, doc_id) AS INT) AS rk
-      FROM s QUALIFY rk <= 20""",
-
-    // all 50 GD rounds replayed verbatim as a generated chained CTE:
-    // same features, same millionth-quantized per-row gradient terms
-    // (exact integer sums, order-free), same fixed-shape double
-    // weight update — see qcOracleSql below
-    "pipeline_quality_classifier" -> qcOracleSql(iters = 50, lr = "5.0"),
-    // boundary-distance replay off the same weight chain: identical
-    // micro-quantized score, abs margin, lexicographic tie cut
-    "pipeline_uncertainty_sample" -> (qcChain(50, "5.0") + s""",
-      sc AS (SELECT doc_id,
-               CAST(round(($qcDot) * 1000000.0, 0) AS BIGINT) AS q
-             FROM f, w50)
-      SELECT doc_id, abs(q) AS margin_micro,
-             CASE WHEN q >= 0 THEN 1 ELSE 0 END AS pred
-      FROM sc ORDER BY abs(q), doc_id LIMIT 50"""),
-    "eval_auc_classifier" -> qcAucSql(iters = 50, lr = "5.0"),
-    "eval_auc_by_lang" -> qcAucByLangSql(iters = 50, lr = "5.0"),
-    "eval_lift_classifier" -> qcLiftSql(iters = 50, lr = "5.0"),
-    "eval_calibration_classifier" -> qcCalibrationSql(iters = 50, lr = "5.0"),
-
-    // minimax isotonic regression over the 64-bin score relation:
-    // fit(i) = max_{j<=i} min_{k>=i} avg(j..k), every interval average
-    // ONE double division of exact integer prefix-sum differences —
-    // the identical formula the Spark side evaluates driver-side
-    "eval_isotonic_calibration" -> (qcBinnedSql(50, "5.0", 64) + s""",
-      bys AS (SELECT bin, count(*) AS nk,
-                sum(CASE WHEN y = 1.0 THEN 1 ELSE 0 END) AS sy
-              FROM binned GROUP BY bin),
-      pre AS (SELECT bin, nk, sy,
-                row_number() OVER (ORDER BY bin) AS rn,
-                sum(nk) OVER (ORDER BY bin) AS cnk,
-                sum(sy) OVER (ORDER BY bin) AS csy
-              FROM bys),
-      iv AS (SELECT j.rn AS j, k.rn AS k,
-               CAST(k.csy - j.csy + j.sy AS DOUBLE)
-                 / (k.cnk - j.cnk + j.nk) AS a
-             FROM pre j JOIN pre k ON j.rn <= k.rn),
-      mn AS (SELECT i.rn AS i, v.j, min(v.a) AS mr
-             FROM pre i JOIN iv v ON v.j <= i.rn AND v.k >= i.rn
-             GROUP BY 1, 2),
-      ft AS (SELECT i, max(mr) AS iso FROM mn GROUP BY 1)
-      SELECT p.bin, CAST(p.nk AS BIGINT) AS n_docs,
-             CAST(p.sy AS BIGINT) AS pos,
-             round(CAST(p.sy AS DOUBLE) / p.nk, 6) AS rate,
-             round(ft.iso, 6) AS iso_fit
-      FROM pre p JOIN ft ON ft.i = p.rn"""),
-    "eval_brier_classifier" -> qcBrierSql(iters = 50, lr = "5.0"),
-
-    // DSIR log-importance weights over md5-bucketed unigram features
-    "pipeline_dsir_weights" -> """
-      WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-                   FROM documents),
-      tb AS (SELECT t.doc_id, d.lang, substr(md5(t.w), 1, 2) AS b
-             FROM tok t JOIN documents d USING (doc_id)),
-      cr AS (SELECT b, count(*) AS cr FROM tb GROUP BY 1),
-      ct AS (SELECT b, count(*) AS ct FROM tb WHERE lang = 'en' GROUP BY 1),
-      c AS (SELECT b, cr, coalesce(ct, 0) AS ct FROM cr LEFT JOIN ct USING (b)),
-      t AS (SELECT CAST(sum(cr) AS BIGINT) AS tr,
-                   CAST(sum(ct) AS BIGINT) AS tt FROM c),
-      sc AS (SELECT doc_id, ln((ct + 1.0) / (tt + 256.0))
-                          - ln((cr + 1.0) / (tr + 256.0)) AS lw
-             FROM tb JOIN c USING (b) CROSS JOIN t)
-      SELECT doc_id, count(*) AS n_tokens, round(sum(lw), 6) AS log_weight
-      FROM sc GROUP BY doc_id""",
-
-    // same hash-boundary CASE over the identical md5 hex
-    "pipeline_train_val_test" -> """
-      SELECT doc_id, lang,
-             CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'b4'
-                    THEN 'train'
-                  WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'd9'
-                    THEN 'val'
-                  ELSE 'test' END AS split
-      FROM documents""",
-
-    // the same total order (q6 desc, doc_id) and exact decile integer
-    // arithmetic
-    "pipeline_curriculum" -> """
-      WITH q0 AS (
-        SELECT doc_id,
-          len(w) AS n_words,
-          len(list_filter(w, t -> list_contains(['the','a','of','and','to','in','on'], t))) / CAST(len(w) AS DOUBLE) AS stop_raw,
-          length(regexp_replace(text, '[^a-z]', '', 'g')) / CAST(length(text) AS DOUBLE) AS alpha_raw
-        FROM (SELECT doc_id, text, string_split(text, ' ') AS w
-              FROM documents)),
-      s AS (SELECT doc_id,
-              CAST(round((least(stop_raw * 2.0, 1.0) * 0.4 + alpha_raw * 0.3
-                + least(n_words / 50.0, 1.0) * 0.3) * 1000000) AS BIGINT) AS q6
-            FROM q0),
-      r AS (SELECT doc_id, q6,
-              CAST(row_number() OVER (ORDER BY q6 DESC, doc_id ASC)
-                AS BIGINT) AS curriculum_rank,
-              CAST(count(*) OVER () AS BIGINT) AS n
-            FROM s)
-      SELECT doc_id, round(q6 / 1000000.0, 6) AS quality,
-             curriculum_rank,
-             CAST((curriculum_rank - 1) * 10 // n AS BIGINT) AS decile
-      FROM r""",
-
-    // the full curation pipeline as one chained CTE: exact dedup ->
-    // near-dup keep-best (the dedup_keep_best recursive-CTE cluster
-    // chain) -> per-lang median gate -> rank + token prefix sum ->
-    // integer seq/shard arithmetic
-    "pipeline_end_to_end" -> endToEndOracleSql,
-    "pipeline_end_to_end_shards" -> s"""
-      WITH m AS ($endToEndOracleSql)
-      SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-             CAST(min(curriculum_rank) AS BIGINT) AS first_rank,
-             CAST(max(curriculum_rank) AS BIGINT) AS last_rank
-      FROM m GROUP BY shard""",
-
-    // greedy farthest-point rounds replayed as a generated chained CTE
-    "pipeline_kcenter_coreset" -> kcenterOracleSql(8),
-
-    // one exclusive prefix sum in doc_id order; integer div/mod only
-    // pad-efficiency replay: the same two total orders via
-    // row_number, same batch-of-32 bucketing, exact integer waste
-    "pipeline_pad_efficiency" -> """
-      WITH t AS (SELECT doc_id,
-                   CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-                 FROM documents),
-      ra AS (SELECT n_tok,
-               (row_number() OVER (ORDER BY doc_id) - 1) // 32 AS b
-             FROM t),
-      rs AS (SELECT n_tok,
-               (row_number() OVER (ORDER BY n_tok, doc_id) - 1) // 32 AS b
-             FROM t),
-      aa AS (SELECT b, count(*) AS bn, sum(n_tok) AS bt, max(n_tok) AS bm
-             FROM ra GROUP BY b),
-      sa AS (SELECT b, count(*) AS bn, sum(n_tok) AS bt, max(n_tok) AS bm
-             FROM rs GROUP BY b),
-      u AS (
-        SELECT 'arrival' AS strategy, CAST(count(*) AS BIGINT) AS n_batches,
-               CAST(sum(bt) AS BIGINT) AS total_tokens,
-               CAST(sum(bn * bm) AS BIGINT) AS padded_tokens
-        FROM aa
-        UNION ALL
-        SELECT 'length_sorted', CAST(count(*) AS BIGINT),
-               CAST(sum(bt) AS BIGINT), CAST(sum(bn * bm) AS BIGINT)
-        FROM sa)
-      SELECT strategy, n_batches, total_tokens, padded_tokens,
-             (padded_tokens - total_tokens) * 1000 // padded_tokens
-               AS waste_permille
-      FROM u""",
-
-    "pipeline_pack_sequences" -> """
-      WITH t AS (SELECT doc_id,
-                   CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-                 FROM documents),
-      p AS (SELECT doc_id, n_tok,
-              coalesce(CAST(sum(n_tok) OVER (ORDER BY doc_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                AS BIGINT), 0) AS start_tok
-            FROM t)
-      SELECT doc_id, n_tok, start_tok,
-             start_tok // 512 AS start_seq,
-             (start_tok + n_tok - 1) // 512 AS end_seq,
-             start_tok % 512 AS start_off,
-             (start_tok + n_tok - 1) // 512 - start_tok // 512 + 1
-               AS n_seqs
-      FROM p""",
-
-    // the dedup_clusters recursive CTE with the md5 split rule applied
-    // to the REPRESENTATIVE id instead of the doc id
-    "pipeline_leakage_safe_split" -> """
-      WITH RECURSIVE
-      g AS (SELECT doc_id,
-              list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                             for i in range(1, len(w)-1)]) AS grams
-            FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-      e AS (SELECT doc_id, len(grams) AS ng, unnest(grams) AS gram FROM g),
-      p AS (SELECT doc_a, doc_b FROM (
-              SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared,
-                     max(a.ng) AS na, max(b.ng) AS nb
-              FROM e a JOIN e b ON a.gram = b.gram AND a.doc_id < b.doc_id
-              GROUP BY 1, 2)
-            WHERE round(shared / (na + nb - shared), 6) >= 0.8),
-      ed AS (SELECT doc_a AS s, doc_b AS d FROM p
-             UNION SELECT doc_b, doc_a FROM p),
-      reach(s, d) AS (
-        SELECT s, d FROM ed
-        UNION
-        SELECT r.s, e2.d FROM reach r JOIN ed e2 ON r.d = e2.s),
-      m AS (SELECT s, min(d) AS mn FROM reach GROUP BY s),
-      c AS (SELECT doc.doc_id,
-                   least(doc.doc_id, coalesce(m.mn, doc.doc_id)) AS rep_id
-            FROM documents doc LEFT JOIN m ON doc.doc_id = m.s)
-      SELECT doc_id, rep_id,
-             CASE WHEN substr(md5(CAST(rep_id AS VARCHAR)), 1, 2) < 'b4'
-                    THEN 'train'
-                  WHEN substr(md5(CAST(rep_id AS VARCHAR)), 1, 2) < 'd9'
-                    THEN 'val'
-                  ELSE 'test' END AS split
-      FROM c""",
-
-    // string-gram replay of the containment join (the Spark side joins
-    // on 64-bit gram hashes; the string oracle would catch a collision)
-    "dedup_containment" -> gramContainmentSql,
-
-    // the two asymmetric-containment detectors (full gram sets vs the
-    // winnowed selection) cross-checked pair by pair under the gate
-    "dedup_containment_crosscheck" -> containmentCrossCheckSql,
-    "dedup_minhash_winnow_crosscheck" -> minhashWinnowCrossCheckSql,
-
-    // connected components of the jaccard>=0.8 pair graph via recursive
-    // transitive closure; rep = min doc_id of the component
-    "dedup_clusters" -> """
-      WITH RECURSIVE
-      g AS (SELECT doc_id,
-              list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                             for i in range(1, len(w)-1)]) AS grams
-            FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-      e AS (SELECT doc_id, len(grams) AS ng, unnest(grams) AS gram FROM g),
-      p AS (SELECT doc_a, doc_b FROM (
-              SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared,
-                     max(a.ng) AS na, max(b.ng) AS nb
-              FROM e a JOIN e b ON a.gram = b.gram AND a.doc_id < b.doc_id
-              GROUP BY 1, 2)
-            WHERE round(shared / (na + nb - shared), 6) >= 0.8),
-      ed AS (SELECT doc_a AS s, doc_b AS d FROM p
-             UNION SELECT doc_b, doc_a FROM p),
-      reach(s, d) AS (
-        SELECT s, d FROM ed
-        UNION
-        SELECT r.s, e2.d FROM reach r JOIN ed e2 ON r.d = e2.s),
-      m AS (SELECT s, min(d) AS mn FROM reach GROUP BY s)
-      SELECT doc.doc_id, least(doc.doc_id, coalesce(m.mn, doc.doc_id)) AS rep_id
-      FROM documents doc LEFT JOIN m ON doc.doc_id = m.s""",
-
-    // the same recursive cluster CTEs, collapsed to the size histogram
-    "dedup_cluster_sizes" -> """
-      WITH RECURSIVE
-      g AS (SELECT doc_id,
-              list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                             for i in range(1, len(w)-1)]) AS grams
-            FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-      e AS (SELECT doc_id, len(grams) AS ng, unnest(grams) AS gram FROM g),
-      p AS (SELECT doc_a, doc_b FROM (
-              SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared,
-                     max(a.ng) AS na, max(b.ng) AS nb
-              FROM e a JOIN e b ON a.gram = b.gram AND a.doc_id < b.doc_id
-              GROUP BY 1, 2)
-            WHERE round(shared / (na + nb - shared), 6) >= 0.8),
-      ed AS (SELECT doc_a AS s, doc_b AS d FROM p
-             UNION SELECT doc_b, doc_a FROM p),
-      reach(s, d) AS (
-        SELECT s, d FROM ed
-        UNION
-        SELECT r.s, e2.d FROM reach r JOIN ed e2 ON r.d = e2.s),
-      m AS (SELECT s, min(d) AS mn FROM reach GROUP BY s),
-      labels AS (SELECT doc.doc_id,
-                        least(doc.doc_id, coalesce(m.mn, doc.doc_id)) AS rep_id
-                 FROM documents doc LEFT JOIN m ON doc.doc_id = m.s),
-      sizes AS (SELECT rep_id, count(*) AS cluster_size
-                FROM labels GROUP BY 1)
-      SELECT cluster_size, count(*) AS n_clusters
-      FROM sizes GROUP BY 1""",
-
-    // per-source mean of the SAME per-doc quality expression, summed
-    // as exact integer micro-units (no float accumulation)
-    "text_quality_by_source" -> """
-      WITH q AS (
-        SELECT source,
-          CAST(round(round(
-            least(len(list_filter(w, t -> list_contains(
-                ['the','a','of','and','to','in','on'], t)))
-              / CAST(len(w) AS DOUBLE) * 2.0, 1.0) * 0.4
-            + length(regexp_replace(text, '[^a-z]', '', 'g'))
-              / CAST(length(text) AS DOUBLE) * 0.3
-            + least(len(w) / 50.0, 1.0) * 0.3, 6) * 1000000)
-            AS BIGINT) AS qmicro
-        FROM (SELECT source, text, string_split(text, ' ') AS w
-              FROM documents))
-      SELECT source, count(*) AS n_docs,
-             round(CAST(sum(qmicro) AS DOUBLE) / count(*) / 1000000.0, 6)
-               AS avg_quality
-      FROM q GROUP BY 1""",
-
-    // mid-rank quantile per (source, q6) cell: doubled-rank integers,
-    // one division, rounded 6 — identical arithmetic to the Spark side
-    "text_quality_quantile_norm" -> """
-      WITH q0 AS (
-        SELECT doc_id, source,
-          CAST(round((least(len(list_filter(w, t -> list_contains(
-                ['the','a','of','and','to','in','on'], t)))
-              / CAST(len(w) AS DOUBLE) * 2.0, 1.0) * 0.4
-            + length(regexp_replace(text, '[^a-z]', '', 'g'))
-              / CAST(length(text) AS DOUBLE) * 0.3
-            + least(len(w) / 50.0, 1.0) * 0.3) * 1000000)
-            AS BIGINT) AS q6
-        FROM (SELECT doc_id, source, text, string_split(text, ' ') AS w
-              FROM documents)),
-      cells AS (SELECT source, q6, CAST(count(*) AS BIGINT) AS cnt
-                FROM q0 GROUP BY 1, 2),
-      ranked AS (SELECT source, q6, cnt,
-                   coalesce(CAST(sum(cnt) OVER (PARTITION BY source
-                     ORDER BY q6 ROWS BETWEEN UNBOUNDED PRECEDING
-                     AND 1 PRECEDING) AS BIGINT), 0) AS prev
-                 FROM cells),
-      ns AS (SELECT source, CAST(count(*) AS BIGINT) AS n
-             FROM q0 GROUP BY 1)
-      SELECT q0.doc_id, q0.source,
-             round(q0.q6 / 1000000.0, 6) AS quality,
-             round(CAST(2 * r.prev + r.cnt + 1 AS DOUBLE)
-               / CAST(2 * ns.n AS DOUBLE), 6) AS qnorm
-      FROM q0 JOIN ranked r ON q0.source = r.source AND q0.q6 = r.q6
-      JOIN ns ON q0.source = ns.source""",
-
-    // the same recursive cluster CTEs, extended by the per-cluster
-    // keep-best election (max n_chars, tie min doc_id)
-    "dedup_keep_best" -> """
-      WITH RECURSIVE
-      g AS (SELECT doc_id,
-              list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                             for i in range(1, len(w)-1)]) AS grams
-            FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-      e AS (SELECT doc_id, len(grams) AS ng, unnest(grams) AS gram FROM g),
-      p AS (SELECT doc_a, doc_b FROM (
-              SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared,
-                     max(a.ng) AS na, max(b.ng) AS nb
-              FROM e a JOIN e b ON a.gram = b.gram AND a.doc_id < b.doc_id
-              GROUP BY 1, 2)
-            WHERE round(shared / (na + nb - shared), 6) >= 0.8),
-      ed AS (SELECT doc_a AS s, doc_b AS d FROM p
-             UNION SELECT doc_b, doc_a FROM p),
-      reach(s, d) AS (
-        SELECT s, d FROM ed
-        UNION
-        SELECT r.s, e2.d FROM reach r JOIN ed e2 ON r.d = e2.s),
-      m AS (SELECT s, min(d) AS mn FROM reach GROUP BY s),
-      cl AS (SELECT doc.doc_id,
-                    least(doc.doc_id, coalesce(m.mn, doc.doc_id)) AS rep_id
-             FROM documents doc LEFT JOIN m ON doc.doc_id = m.s),
-      j AS (SELECT cl.rep_id, cl.doc_id, d.n_chars
-            FROM cl JOIN documents d ON cl.doc_id = d.doc_id),
-      r AS (SELECT rep_id, doc_id, n_chars,
-                   row_number() OVER (PARTITION BY rep_id
-                     ORDER BY n_chars DESC, doc_id ASC) AS rn,
-                   count(*) OVER (PARTITION BY rep_id) AS n_docs,
-                   max(n_chars) OVER (PARTITION BY rep_id) AS max_chars
-            FROM j)
-      SELECT rep_id, doc_id AS keep_id, n_docs, max_chars FROM r WHERE rn = 1""",
-
-    // inverted index: uncapped df/cf stats joined to the first
-    // 16-entry posting segment per term (postings ordered by doc_id)
-    "text_inverted_index" -> """
-      WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-                   FROM documents),
-      tf AS (SELECT term, doc_id, count(*) AS tf FROM tok GROUP BY 1, 2),
-      stats AS (SELECT term, CAST(count(*) AS BIGINT) AS df,
-                       CAST(sum(tf) AS BIGINT) AS cf
-                FROM tf GROUP BY 1),
-      capped AS (SELECT term, doc_id, tf,
-                        row_number() OVER (PARTITION BY term
-                          ORDER BY doc_id) AS rn
-                 FROM tf),
-      post AS (SELECT term,
-                      string_agg(doc_id || ':' || tf, ',' ORDER BY doc_id)
-                        AS postings
-               FROM capped WHERE rn <= 16 GROUP BY term)
-      SELECT s.term, s.df, s.cf, p.postings
-      FROM stats s JOIN post p USING (term) WHERE s.df >= 50""",
-
-    // phrase search: each word's positions re-based to the phrase start,
-    // legs intersect on (doc_id, start); docs have <= 100 words (the
-    // range bound 128 is checked at generation time)
-    "text_phrase_search" -> """
-      WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-      tok AS (SELECT doc_id, CAST(i - 1 AS INT) AS pos, w[CAST(i AS INT)] AS term
-              FROM d, range(1, 128) t(i) WHERE i <= len(w)),
-      l0 AS (SELECT doc_id, pos AS start FROM tok WHERE term = 'table'),
-      l1 AS (SELECT doc_id, pos - 1 AS start FROM tok WHERE term = 'hash')
-      SELECT doc_id, count(*) AS n_hits
-      FROM l0 JOIN l1 USING (doc_id, start)
-      GROUP BY 1""",
-
-    // span-level dedup: first occurrence (by doc_id*1e6+idx) of every
-    // 4-word chunk survives; documents reassemble from survivors
-    "text_span_dedup" -> """
-      WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-      c AS (SELECT doc_id, unnest(list_transform(
-              range(greatest(CAST(ceil(CAST(len(w) AS DOUBLE) / 4) AS BIGINT), 1)),
-              i -> {'idx': i, 'chunk': array_to_string(w[i*4+1:i*4+4], ' ')}),
-              recursive := true)
-            FROM w),
-      ck AS (SELECT doc_id, idx, chunk, doc_id * 1000000 + idx AS pk FROM c),
-      f AS (SELECT chunk, min(pk) AS mk FROM ck GROUP BY chunk),
-      kept AS (SELECT ck.doc_id, ck.idx, ck.chunk
-               FROM ck JOIN f ON ck.chunk = f.chunk AND ck.pk = f.mk),
-      ka AS (SELECT doc_id, count(*) AS n_kept,
-                    string_agg(chunk, ' ' ORDER BY idx) AS clean_text
-             FROM kept GROUP BY doc_id),
-      tot AS (SELECT doc_id, count(*) AS n_spans FROM ck GROUP BY doc_id)
-      SELECT d.doc_id, coalesce(ka.clean_text, '') AS clean_text,
-             tot.n_spans, coalesce(ka.n_kept, 0) AS n_kept
-      FROM documents d JOIN tot ON d.doc_id = tot.doc_id
-      LEFT JOIN ka ON d.doc_id = ka.doc_id""",
-
-    // the oracle reproduces the deterministic panel (stride =
-    // ceil(n/2000) — 1, the full corpus, at this tier; r13 verdict #1)
-    // and the planted augmentation verbatim (+0.01 to every coordinate
-    // of a copy at vec_id+100000, BEFORE normalization), then
-    // brute-forces all panel pairs at >= 0.98 — ≤ 8M pair dots at any
-    // tier, so the reconstruction replays instead of pinning. The
-    // seeded 16x16 banding catches each planted pair with prob
-    // 1 - ~1e-8, so the LSH output equals this exact pair set
-    // deterministically. Normalize-then-dot uses the same fold order
-    // as the engine's norm cache, so values stay bit-identical.
-    "neardup_embedding_lsh" -> """
-      WITH st AS (SELECT (count(*) + 1999) // 2000 AS k FROM embeddings),
-      e AS (SELECT vec_id,
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-            FROM embeddings, st WHERE vec_id % st.k = 0),
-      u AS (SELECT vec_id, v FROM e
-            UNION ALL
-            SELECT vec_id + 100000, list_transform(v, x -> x + 0.01) FROM e),
-      n AS (SELECT vec_id,
-                   list_transform(v, x -> x /
-                     nullif(sqrt(list_sum(list_transform(v, y -> y*y))), 0)) AS nv
-            FROM u)
-      SELECT * FROM (
-        SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-               round(greatest(
-                 list_sum(list_transform(list_zip(a.nv, b.nv), z -> z[1]*z[2])),
-                 0), 6) AS sim
-        FROM n a JOIN n b ON a.vec_id < b.vec_id)
-      WHERE sim >= 0.98""",
-
-    // semantic decontamination: the planted twins of every 50th vector
-    // are the "benchmark"; same +0.01 / normalize-then-dot arithmetic
-    "text_decontaminate_embedding" -> """
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                 FROM embeddings),
-      p AS (SELECT vec_id + 100000 AS bench_id,
-                   list_transform(v, x -> x + 0.01) AS v
-            FROM e WHERE vec_id % 50 = 0),
-      nb AS (SELECT bench_id,
-                    list_transform(v, x -> x /
-                      nullif(sqrt(list_sum(list_transform(v, y -> y*y))), 0)) AS nv
-             FROM p),
-      nc AS (SELECT vec_id,
-                    list_transform(v, x -> x /
-                      nullif(sqrt(list_sum(list_transform(v, y -> y*y))), 0)) AS nv
-             FROM e)
-      SELECT * FROM (
-        SELECT c.vec_id, b.bench_id,
-               round(greatest(
-                 list_sum(list_transform(list_zip(c.nv, b.nv), z -> z[1]*z[2])),
-                 0), 6) AS sim
-        FROM nc c CROSS JOIN nb b)
-      WHERE sim >= 0.9""",
-
-    "neardup_embedding" -> """
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                 FROM embeddings),
-      n AS (SELECT vec_id,
-                   list_transform(v, x -> x /
-                     nullif(sqrt(list_sum(list_transform(v, y -> y*y))), 0)) AS nv
-            FROM e)
-      SELECT * FROM (
-        SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-               round(greatest(
-                 list_sum(list_transform(list_zip(a.nv, b.nv), z -> z[1]*z[2])),
-                 0), 6) AS sim
-        FROM n a JOIN n b ON a.vec_id < b.vec_id)
-      WHERE sim >= 0.4""",
-
-    // anchor-sampled dup-rate estimator: a fixed-COUNT anchor panel
-    // (vec_id ≡ 0 mod stride, stride = max(1, n // 50) — at sf0.01's
-    // 500 vectors the stride is 10) scored against the whole corpus —
-    // an O(n·C) reconstruction at every tier (r11 weak #1 closed);
-    // directional by design (an anchor-anchor pair appears per side)
-    "neardup_embedding_sampled" -> """
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                 FROM embeddings),
-      n AS MATERIALIZED (SELECT vec_id,
-                   list_transform(v, x -> x /
-                     nullif(sqrt(list_sum(list_transform(v, y -> y*y))), 0)) AS nv
-            FROM e),
-      s AS (SELECT greatest(1, count(*) // 50) AS stride FROM n),
-      a AS MATERIALIZED (SELECT vec_id, nv FROM n
-           WHERE vec_id % (SELECT stride FROM s) = 0)
-      SELECT * FROM (
-        SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-               round(greatest(
-                 list_sum(list_transform(list_zip(a.nv, b.nv), z -> z[1]*z[2])),
-                 0), 6) AS sim
-        FROM a, n b
-        WHERE a.vec_id <> b.vec_id)
-      WHERE sim >= 0.4""",
-
-
-    // GENERATED-LITERAL oracles for the two deterministic BPE rows:
-    // the algorithm is seeded and the sf0.01 fixture is frozen, so the
-    // expected output is a constant. Independence from the engine comes
-    // from TextOpsSpec's reference replay of the merge loop; this row
-    // moves cross-run stability under the driver's hash gate. (Literal
-    // is sf0.01-specific by the driver contract - Verify always runs
-    // at sf0.01.)
-    "text_bpe_vocab" -> """
-      SELECT * FROM (VALUES (1,'e','r',4568), (2,'e','</w>',4473), (3,'n','</w>',2834), (4,'er','</w>',2779), (5,'o','w',2747), (6,'ow','</w>',2747), (7,'o','r',2696), (8,'s','t',2676), (9,'h','</w>',1884), (10,'a','t',1845)) AS t(step, "left", "right", pair_count)""",
-
-    "text_bpe_encode" -> """
-      SELECT * FROM (VALUES (0,32,130), (1,72,330), (2,45,201), (3,27,122), (4,45,202), (5,56,262), (6,15,65), (7,72,310), (8,84,380), (9,74,314), (10,39,182), (11,58,251), (12,65,273), (13,60,281), (14,87,410), (15,41,185), (16,16,72), (17,77,341), (18,75,334), (19,11,48), (20,68,308), (21,37,164), (22,81,386), (23,30,133), (24,97,433), (25,94,406), (26,12,56), (27,64,287), (28,60,272), (29,34,156), (30,31,132), (31,43,204), (32,93,414), (33,46,196), (34,29,126), (35,85,360), (36,22,105), (37,69,297), (38,36,163), (39,23,101), (40,73,336), (41,61,274), (42,56,243), (43,28,127), (44,24,99), (45,80,350), (46,86,400), (47,41,181), (48,30,128), (49,46,212), (50,45,202), (51,58,258), (52,13,58), (53,34,156), (54,65,289), (55,37,151), (56,97,443), (57,83,358), (58,72,322), (59,24,98), (60,93,403), (61,59,250), (62,72,317), (63,96,424), (64,25,105), (65,19,78), (66,62,278), (67,61,276), (68,33,147), (69,57,242), (70,94,417), (71,60,273), (72,42,187), (73,93,396), (74,10,41), (75,60,252), (76,71,313), (77,57,258), (78,42,180), (79,12,54), (80,32,139), (81,63,285), (82,47,203), (83,15,69), (84,72,333), (85,31,127), (86,23,107), (87,23,102), (88,51,232), (89,27,122), (90,24,90), (91,77,344), (92,26,116), (93,25,109), (94,24,110), (95,55,236), (96,81,370), (97,59,268), (98,93,426), (99,38,157), (100,83,372), (101,42,182), (102,91,419), (103,93,421), (104,44,197), (105,60,268), (106,13,56), (107,40,176), (108,16,72), (109,70,321), (110,11,45), (111,94,442), (112,58,247), (113,79,343), (114,36,162), (115,24,107), (116,10,49), (117,47,198), (118,70,321), (119,16,71), (120,37,177), (121,30,132), (122,19,84), (123,28,123), (124,60,254), (125,34,151), (126,90,397), (127,83,359), (128,81,355), (129,81,359), (130,29,122), (131,54,230), (132,62,274), (133,94,402), (134,24,106), (135,97,436), (136,63,279), (137,43,188), (138,66,294), (139,56,247), (140,28,131), (141,75,351), (142,95,402), (143,72,344), (144,18,74), (145,72,320), (146,22,105), (147,84,356), (148,37,159), (149,27,121), (150,48,216), (151,94,422), (152,39,177), (153,78,359), (154,83,356), (155,67,290), (156,21,97), (157,17,73), (158,17,86), (159,69,312), (160,44,189), (161,86,377), (162,82,358), (163,45,202), (164,19,90), (165,21,89), (166,61,259), (167,85,385), (168,40,175), (169,69,318), (170,22,99), (171,61,267), (172,20,89), (173,97,438), (174,57,257), (175,29,129), (176,88,393), (177,49,209), (178,38,173), (179,87,389), (180,32,149), (181,19,89), (182,64,282), (183,20,80), (184,80,355), (185,58,246), (186,80,325), (187,91,393), (188,47,203), (189,37,174), (190,78,345), (191,21,96), (192,26,108), (193,31,136), (194,29,127), (195,58,264), (196,59,261), (197,95,418), (198,47,209), (199,30,127), (200,53,243), (201,56,251), (202,91,389), (203,24,101), (204,21,96), (205,69,297), (206,25,104), (207,73,317), (208,22,90), (209,44,182), (210,94,412), (211,51,225), (212,43,208), (213,88,386), (214,13,56), (215,98,405), (216,92,431), (217,66,287), (218,81,382), (219,29,138), (220,99,439), (221,42,176), (222,51,225), (223,85,383), (224,77,351), (225,76,342), (226,20,94), (227,81,374), (228,86,381), (229,74,339), (230,55,247), (231,27,121), (232,58,255), (233,83,376), (234,66,281), (235,39,186), (236,12,54), (237,79,332), (238,48,208), (239,30,130), (240,70,313), (241,92,417), (242,69,302), (243,33,141), (244,67,300), (245,83,376), (246,34,143), (247,80,339), (248,79,355), (249,82,341), (250,44,197), (251,94,421), (252,46,199), (253,38,159), (254,19,85), (255,28,121), (256,11,52), (257,21,92), (258,74,330), (259,45,215), (260,26,107), (261,84,376), (262,47,209), (263,83,366), (264,99,437), (265,47,224), (266,41,176), (267,78,342), (268,39,177), (269,86,372), (270,93,403), (271,53,243), (272,92,398), (273,28,136), (274,96,433), (275,10,37), (276,96,433), (277,32,140), (278,72,314), (279,51,221), (280,88,383), (281,30,131), (282,32,150), (283,84,379), (284,51,231), (285,94,417), (286,46,210), (287,18,86), (288,32,148), (289,38,181), (290,94,430), (291,76,343), (292,86,366), (293,71,318), (294,83,368), (295,32,147), (296,66,290), (297,62,266), (298,32,155), (299,94,401), (300,39,170), (301,93,413), (302,88,396), (303,83,363), (304,42,179), (305,11,52), (306,75,340), (307,54,243), (308,17,78), (309,44,189), (310,27,122), (311,90,405), (312,67,303), (313,18,71), (314,37,154), (315,87,369), (316,74,332), (317,72,318), (318,83,359), (319,87,408), (320,75,316), (321,50,236), (322,45,206), (323,62,263), (324,43,181), (325,60,266), (326,36,161), (327,33,143), (328,89,397), (329,66,284), (330,59,253), (331,51,242), (332,36,173), (333,32,142), (334,92,388), (335,61,267), (336,68,305), (337,43,201), (338,18,72), (339,32,150), (340,44,195), (341,80,337), (342,21,100), (343,29,120), (344,77,342), (345,59,254), (346,74,322), (347,51,227), (348,24,107), (349,84,365), (350,85,381), (351,67,298), (352,97,429), (353,59,251), (354,76,338), (355,61,287), (356,67,303), (357,47,212), (358,11,48), (359,60,268), (360,79,365), (361,65,297), (362,15,68), (363,64,281), (364,47,214), (365,12,54), (366,55,249), (367,39,168), (368,13,64), (369,50,221), (370,41,198), (371,65,283), (372,28,112), (373,70,307), (374,31,143), (375,63,267), (376,69,291), (377,43,191), (378,64,268), (379,72,316), (380,80,358), (381,63,279), (382,25,102), (383,44,208), (384,17,79), (385,70,306), (386,88,375), (387,39,172), (388,63,275), (389,28,126), (390,26,114), (391,43,188), (392,23,106), (393,81,371), (394,71,320), (395,81,381), (396,44,207), (397,53,238), (398,19,85), (399,57,251), (400,25,106), (401,76,350), (402,31,129), (403,85,374), (404,43,182), (405,56,252), (406,83,364), (407,20,88), (408,16,72), (409,53,231), (410,75,326), (411,79,332), (412,71,291), (413,79,346), (414,78,336), (415,58,255), (416,53,228), (417,93,411), (418,77,356), (419,20,92), (420,80,367), (421,83,363), (422,66,290), (423,65,300), (424,73,328), (425,24,109), (426,82,364), (427,79,350), (428,48,225), (429,95,446), (430,72,326), (431,56,243), (432,65,300), (433,31,142), (434,79,341), (435,31,135), (436,51,218), (437,81,354), (438,31,140), (439,33,150), (440,42,192), (441,99,439), (442,84,373), (443,51,218), (444,75,336), (445,58,252), (446,25,103), (447,93,413), (448,54,235), (449,33,140), (450,25,112), (451,20,90), (452,65,285), (453,97,415), (454,28,125), (455,11,52), (456,23,103), (457,37,165), (458,59,262), (459,69,310), (460,49,208), (461,67,292), (462,60,266), (463,91,404), (464,35,159), (465,62,261), (466,86,375), (467,66,291), (468,39,167), (469,10,46), (470,42,191), (471,63,280), (472,38,173), (473,53,240), (474,67,285), (475,15,67), (476,16,74), (477,28,120), (478,50,235), (479,69,304), (480,64,293), (481,16,72), (482,30,124), (483,47,206), (484,43,185), (485,23,106), (486,32,139), (487,59,264), (488,36,172), (489,57,260), (490,50,226), (491,67,289), (492,13,64), (493,88,367), (494,38,167), (495,70,313), (496,81,372), (497,20,94), (498,89,397), (499,33,143)) AS t(doc_id, n_words, n_bpe_tokens)""",
-
-    // GENERATED-LITERAL oracles for the remaining deterministic
-    // rows-only queries (the BPE-literal pattern): SemDeDup keep/drop
-    // labels and the HLL twin are exact functions of the frozen
-    // fixture whose defining computation is not SQL-replicable
-    // (Spark's HLL++ registers; the Lloyd-loop centroid path feeding
-    // SemDeDup). The four that WERE replicable left this block in r14
-    // — MinHash banding, SimHash, MMR, and n-gram language ID are now
-    // real SQL reconstructions at both tiers.
-    // Independence from the engine comes from each family's spec-level
-    // gate (brute-force equality / reference replay / accuracy bounds);
-    // these rows move cross-run stability under the driver's hash gate.
-    // REAL SQL since r14 (was a generated literal at both tiers): the
-    // engine's output is the exact word-3-gram Jaccard >= 0.8 relation
-    // — the 32x4 banding misses a j >= 0.8 pair with probability
-    // (1 - 0.8^4)^32 ~= 4.7e-8 and every candidate is verified exactly
-    // on the gram sets, so the banded miner equals this brute
-    // reconstruction (the same CTE chain dedup_cross_source and
-    // dedup_ngram_jaccard already replay green at both tiers; the
-    // gram join is O(shared-gram pairs), never docs²)
-    "dedup_minhash_lsh" -> """
-      WITH g AS (
-        SELECT doc_id,
-               list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                              for i in range(1, len(w)-1)]) AS grams
-        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-      e AS (SELECT doc_id, len(grams) AS ng, unnest(grams) AS gram FROM g),
-      p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared,
-                   max(a.ng) AS na, max(b.ng) AS nb
-            FROM e a JOIN e b ON a.gram = b.gram AND a.doc_id < b.doc_id
-            GROUP BY 1, 2)
-      SELECT doc_a, doc_b,
-             round(shared / (na + nb - shared), 6) AS jaccard
-      FROM p WHERE round(shared / (na + nb - shared), 6) >= 0.8""",
-
-    // REAL SQL since r14 (was a generated literal at both tiers): the
-    // full SimHash chain replayed relationally — FNV-1a 64 per DISTINCT
-    // token in HUGEINT (xor on the low byte, wrapping multiply as
-    // (h·prime) mod 2^64; products stay < 2^104, inside HUGEINT),
-    // tf-weighted bit voting via per-(doc, token) counts, sign
-    // assembly against an exact powers-of-two CTE (`**` is DOUBLE in
-    // DuckDB and silently corrupts bit extraction), unsigned→signed
-    // two's-complement fold, then the SAME 4x16-bit banding the engine
-    // uses — lossless here by pigeonhole (hamming <= 3 over 4 bands
-    // GUARANTEES a shared intact band), so the banded reconstruction
-    // IS the exact all-pairs relation without the docs² scan.
-    // Verified equal to the engine at 17 (sf0.01) and 35,084 (sf1)
-    // pairs; ~94 s at the 10x tier.
-    "dedup_simhash" -> """
-      WITH RECURSIVE pow2(j, p) AS (
-        SELECT 0, CAST(1 AS HUGEINT)
-        UNION ALL
-        SELECT j + 1, p * 2 FROM pow2 WHERE j < 63),
-      toks AS MATERIALIZED (
-        SELECT doc_id, tok, count(*) AS cnt
-        FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-              FROM documents)
-        GROUP BY 1, 2),
-      vh AS MATERIALIZED (
-        SELECT tok,
-          list_reduce(
-            list_prepend(CAST(14695981039346656037 AS HUGEINT),
-              list_transform(string_split(tok, ''),
-                c -> CAST(unicode(c) AS HUGEINT))),
-            (h, b) -> ((h - h % 256 +
-                        CAST(xor(CAST(h % 256 AS BIGINT), CAST(b AS BIGINT))
-                             AS HUGEINT))
-                       * 1099511628211)
-                      % CAST(18446744073709551616 AS HUGEINT)) AS h
-        FROM (SELECT DISTINCT tok FROM toks)),
-      votes AS (
-        SELECT t.doc_id, w.j,
-               sum(CASE WHEN (v.h // w.p) % 2 = 1 THEN t.cnt ELSE -t.cnt END) AS acc
-        FROM toks t JOIN vh v USING (tok), pow2 w
-        GROUP BY 1, 2),
-      sh AS MATERIALIZED (
-        SELECT doc_id,
-               CAST(CASE WHEN u >= CAST(9223372036854775808 AS HUGEINT)
-                         THEN u - CAST(18446744073709551616 AS HUGEINT)
-                         ELSE u END AS BIGINT) AS simhash,
-               u
-        FROM (SELECT v.doc_id,
-                     coalesce(sum(CASE WHEN v.acc > 0 THEN p2.p
-                       ELSE CAST(0 AS HUGEINT) END),
-                       CAST(0 AS HUGEINT)) AS u
-              FROM votes v JOIN pow2 p2 ON v.j = p2.j GROUP BY 1)),
-      bands AS MATERIALIZED (
-        SELECT doc_id, simhash, t.b,
-               CAST((u // (CASE t.b WHEN 0 THEN CAST(1 AS HUGEINT)
-                                    WHEN 1 THEN CAST(65536 AS HUGEINT)
-                                    WHEN 2 THEN CAST(4294967296 AS HUGEINT)
-                                    ELSE CAST(281474976710656 AS HUGEINT) END))
-                    % 65536 AS BIGINT) AS key
-        FROM sh, range(0, 4) t(b)),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, a.simhash AS sha,
-                        b.doc_id AS doc_b, b.simhash AS shb
-        FROM bands a JOIN bands b
-          ON a.b = b.b AND a.key = b.key AND a.doc_id < b.doc_id)
-      SELECT doc_a, doc_b, CAST(bit_count(xor(sha, shb)) AS INT) AS hamming
-      FROM cand
-      WHERE bit_count(xor(sha, shb)) <= 3""",
-
-    "dedup_semantic" -> """
-      SELECT * FROM (VALUES (0,0,0,TRUE), (1,1,1,TRUE), (10,3,10,TRUE), (100,2,100,TRUE), (101,4,101,TRUE), (102,6,102,TRUE), (103,7,103,TRUE), (104,3,104,TRUE), (105,6,105,TRUE), (106,3,106,TRUE), (107,7,107,TRUE), (108,0,108,TRUE), (109,6,109,TRUE), (11,6,11,TRUE), (110,1,110,TRUE), (111,5,111,TRUE), (112,2,112,TRUE), (113,7,113,TRUE), (114,4,114,TRUE), (115,6,115,TRUE), (116,4,116,TRUE), (117,2,117,TRUE), (118,2,118,TRUE), (119,6,119,TRUE), (12,5,12,TRUE), (120,3,120,TRUE), (121,5,121,TRUE), (122,4,122,TRUE), (123,6,123,TRUE), (124,1,124,TRUE), (125,3,125,TRUE), (126,5,126,TRUE), (127,5,127,TRUE), (128,2,128,TRUE), (129,3,129,TRUE), (13,1,13,TRUE), (130,3,130,TRUE), (131,0,131,TRUE), (132,0,132,TRUE), (133,5,133,TRUE), (134,3,134,TRUE), (135,0,135,TRUE), (136,6,136,TRUE), (137,7,137,TRUE), (138,1,138,TRUE), (139,4,139,TRUE), (14,0,14,TRUE), (140,3,140,TRUE), (141,2,141,TRUE), (142,0,108,FALSE), (143,5,143,TRUE), (144,3,144,TRUE), (145,6,145,TRUE), (146,6,146,TRUE), (147,3,147,TRUE), (148,0,148,TRUE), (149,2,149,TRUE), (15,3,15,TRUE), (150,5,150,TRUE), (151,0,151,TRUE), (152,5,150,FALSE), (153,7,153,TRUE), (154,7,154,TRUE), (155,6,155,TRUE), (156,7,156,TRUE), (157,5,157,TRUE), (158,3,158,TRUE), (159,6,159,TRUE), (16,1,16,TRUE), (160,0,160,TRUE), (161,1,161,TRUE), (162,5,162,TRUE), (163,0,163,TRUE), (164,4,164,TRUE), (165,0,165,TRUE), (166,1,166,TRUE), (167,7,167,TRUE), (168,7,168,TRUE), (169,7,169,TRUE), (17,4,17,TRUE), (170,7,170,TRUE), (171,4,171,TRUE), (172,2,172,TRUE), (173,5,173,TRUE), (174,3,174,TRUE), (175,0,175,TRUE), (176,7,176,TRUE), (177,6,177,TRUE), (178,2,178,TRUE), (179,6,179,TRUE), (18,5,18,TRUE), (180,7,180,TRUE), (181,1,181,TRUE), (182,5,182,TRUE), (183,2,183,TRUE), (184,2,184,TRUE), (185,7,185,TRUE), (186,2,186,TRUE), (187,5,187,TRUE), (188,2,188,TRUE), (189,7,189,TRUE), (19,4,19,TRUE), (190,0,84,FALSE), (191,4,191,TRUE), (192,3,192,TRUE), (193,2,193,TRUE), (194,4,194,TRUE), (195,1,195,TRUE), (196,1,196,TRUE), (197,2,197,TRUE), (198,5,198,TRUE), (199,1,199,TRUE), (2,2,2,TRUE), (20,2,20,TRUE), (200,5,200,TRUE), (201,3,201,TRUE), (202,2,202,TRUE), (203,1,203,TRUE), (204,6,204,TRUE), (205,1,205,TRUE), (206,6,206,TRUE), (207,3,207,TRUE), (208,5,208,TRUE), (209,7,209,TRUE), (21,5,21,TRUE), (210,3,70,FALSE), (211,7,211,TRUE), (212,4,212,TRUE), (213,7,213,TRUE), (214,6,214,TRUE), (215,1,215,TRUE), (216,7,216,TRUE), (217,6,217,TRUE), (218,3,218,TRUE), (219,6,219,TRUE), (22,5,22,TRUE), (220,1,220,TRUE), (221,7,221,TRUE), (222,1,222,TRUE), (223,1,223,TRUE), (224,3,224,TRUE), (225,5,225,TRUE), (226,6,226,TRUE), (227,6,227,TRUE), (228,4,228,TRUE), (229,0,229,TRUE), (23,3,23,TRUE), (230,0,230,TRUE), (231,3,231,TRUE), (232,6,232,TRUE), (233,1,233,TRUE), (234,4,234,TRUE), (235,0,235,TRUE), (236,0,236,TRUE), (237,4,237,TRUE), (238,6,238,TRUE), (239,2,239,TRUE), (24,5,24,TRUE), (240,7,240,TRUE), (241,2,241,TRUE), (242,5,242,TRUE), (243,6,243,TRUE), (244,2,244,TRUE), (245,2,202,FALSE), (246,5,246,TRUE), (247,4,247,TRUE), (248,2,248,TRUE), (249,4,249,TRUE), (25,5,25,TRUE), (250,4,250,TRUE), (251,5,251,TRUE), (252,6,252,TRUE), (253,1,253,TRUE), (254,5,254,TRUE), (255,0,255,TRUE), (256,5,75,FALSE), (257,4,257,TRUE), (258,1,258,TRUE), (259,7,259,TRUE), (26,5,26,TRUE), (260,6,260,TRUE), (261,0,261,TRUE), (262,5,262,TRUE), (263,5,263,TRUE), (264,0,264,TRUE), (265,6,265,TRUE), (266,5,266,TRUE), (267,6,267,TRUE), (268,1,268,TRUE), (269,7,7,FALSE), (27,1,27,TRUE), (270,6,270,TRUE), (271,0,271,TRUE), (272,3,272,TRUE), (273,7,273,TRUE), (274,6,274,TRUE), (275,7,275,TRUE), (276,6,276,TRUE), (277,6,277,TRUE), (278,4,278,TRUE), (279,5,279,TRUE), (28,6,28,TRUE), (280,4,280,TRUE), (281,6,281,TRUE), (282,1,282,TRUE), (283,3,283,TRUE), (284,1,284,TRUE), (285,1,285,TRUE), (286,7,286,TRUE), (287,6,238,FALSE), (288,7,288,TRUE), (289,0,289,TRUE), (29,0,29,TRUE), (290,2,290,TRUE), (291,2,291,TRUE), (292,7,292,TRUE), (293,2,293,TRUE), (294,1,294,TRUE), (295,5,295,TRUE), (296,3,296,TRUE), (297,6,297,TRUE), (298,4,298,TRUE), (299,7,299,TRUE), (3,3,3,TRUE), (30,5,30,TRUE), (300,1,300,TRUE), (301,3,44,FALSE), (302,7,302,TRUE), (303,6,303,TRUE), (304,6,304,TRUE), (305,4,305,TRUE), (306,4,306,TRUE), (307,7,307,TRUE), (308,1,308,TRUE), (309,3,309,TRUE), (31,3,31,TRUE), (310,0,83,FALSE), (311,7,311,TRUE), (312,5,312,TRUE), (313,6,313,TRUE), (314,1,314,TRUE), (315,3,315,TRUE), (316,5,316,TRUE), (317,4,317,TRUE), (318,0,318,TRUE), (319,7,319,TRUE), (32,0,32,TRUE), (320,0,320,TRUE), (321,2,321,TRUE), (322,6,322,TRUE), (323,4,323,TRUE), (324,1,166,FALSE), (325,2,290,FALSE), (326,3,207,FALSE), (327,1,327,TRUE), (328,2,328,TRUE), (329,1,329,TRUE), (33,5,33,TRUE), (330,5,330,TRUE), (331,2,290,FALSE), (332,7,332,TRUE), (333,4,333,TRUE), (334,7,156,FALSE), (335,2,335,TRUE), (336,0,336,TRUE), (337,5,337,TRUE), (338,3,338,TRUE), (339,7,339,TRUE), (34,1,34,TRUE), (340,7,7,FALSE), (341,3,341,TRUE), (342,2,342,TRUE), (343,3,343,TRUE), (344,0,344,TRUE), (345,6,345,TRUE), (346,4,346,TRUE), (347,3,347,TRUE), (348,0,348,TRUE), (349,3,349,TRUE), (35,0,35,TRUE), (350,6,350,TRUE), (351,0,35,FALSE), (352,1,352,TRUE), (353,1,353,TRUE), (354,2,354,TRUE), (355,4,355,TRUE), (356,5,356,TRUE), (357,7,357,TRUE), (358,2,358,TRUE), (359,4,359,TRUE), (36,0,36,TRUE), (360,6,360,TRUE), (361,1,361,TRUE), (362,5,362,TRUE), (363,3,363,TRUE), (364,0,364,TRUE), (365,0,365,TRUE), (366,4,366,TRUE), (367,1,367,TRUE), (368,4,368,TRUE), (369,6,369,TRUE), (37,2,37,TRUE), (370,6,370,TRUE), (371,6,371,TRUE), (372,3,372,TRUE), (373,7,373,TRUE), (374,6,374,TRUE), (375,2,375,TRUE), (376,3,376,TRUE), (377,3,377,TRUE), (378,0,378,TRUE), (379,5,379,TRUE), (38,1,38,TRUE), (380,0,380,TRUE), (381,6,381,TRUE), (382,7,156,FALSE), (383,0,383,TRUE), (384,4,234,FALSE), (385,1,253,FALSE), (386,1,386,TRUE), (387,0,387,TRUE), (388,1,388,TRUE), (389,2,389,TRUE), (39,1,39,TRUE), (390,3,390,TRUE), (391,3,391,TRUE), (392,0,392,TRUE), (393,1,393,TRUE), (394,4,394,TRUE), (395,2,395,TRUE), (396,3,396,TRUE), (397,3,397,TRUE), (398,1,398,TRUE), (399,6,399,TRUE), (4,4,4,TRUE), (40,6,40,TRUE), (400,1,400,TRUE), (401,0,401,TRUE), (402,1,16,FALSE), (403,6,403,TRUE), (404,5,404,TRUE), (405,1,405,TRUE), (406,3,338,FALSE), (407,1,407,TRUE), (408,4,408,TRUE), (409,5,409,TRUE), (41,3,41,TRUE), (410,3,410,TRUE), (411,2,411,TRUE), (412,0,412,TRUE), (413,6,413,TRUE), (414,1,203,FALSE), (415,0,415,TRUE), (416,2,416,TRUE), (417,2,417,TRUE), (418,2,418,TRUE), (419,5,419,TRUE), (42,4,42,TRUE), (420,7,420,TRUE), (421,3,120,FALSE), (422,0,422,TRUE), (423,0,423,TRUE), (424,4,424,TRUE), (425,7,7,FALSE), (426,2,426,TRUE), (427,7,427,TRUE), (428,0,428,TRUE), (429,6,429,TRUE), (43,5,43,TRUE), (430,6,53,FALSE), (431,5,431,TRUE), (432,4,432,TRUE), (433,5,433,TRUE), (434,7,434,TRUE), (435,7,435,TRUE), (436,5,436,TRUE), (437,3,437,TRUE), (438,7,156,FALSE), (439,3,439,TRUE), (44,3,44,TRUE), (440,2,172,FALSE), (441,3,441,TRUE), (442,7,442,TRUE), (443,6,443,TRUE), (444,2,444,TRUE), (445,7,445,TRUE), (446,6,446,TRUE), (447,6,447,TRUE), (448,3,448,TRUE), (449,3,449,TRUE), (45,7,45,TRUE), (450,2,450,TRUE), (451,5,451,TRUE), (452,7,452,TRUE), (453,5,453,TRUE), (454,5,454,TRUE), (455,5,455,TRUE), (456,1,456,TRUE), (457,6,457,TRUE), (458,4,458,TRUE), (459,6,459,TRUE), (46,5,46,TRUE), (460,3,460,TRUE), (461,0,461,TRUE), (462,2,462,TRUE), (463,3,463,TRUE), (464,5,464,TRUE), (465,6,465,TRUE), (466,7,169,FALSE), (467,1,467,TRUE), (468,2,468,TRUE), (469,3,469,TRUE), (47,4,47,TRUE), (470,4,470,TRUE), (471,2,471,TRUE), (472,1,472,TRUE), (473,1,473,TRUE), (474,3,474,TRUE), (475,1,475,TRUE), (476,2,476,TRUE), (477,1,477,TRUE), (478,0,478,TRUE), (479,7,479,TRUE), (48,7,48,TRUE), (480,5,480,TRUE), (481,1,481,TRUE), (482,4,482,TRUE), (483,0,483,TRUE), (484,7,484,TRUE), (485,1,205,FALSE), (486,4,486,TRUE), (487,3,487,TRUE), (488,4,488,TRUE), (489,5,489,TRUE), (49,7,49,TRUE), (490,3,490,TRUE), (491,3,491,TRUE), (492,4,492,TRUE), (493,5,493,TRUE), (494,3,494,TRUE), (495,3,495,TRUE), (496,4,496,TRUE), (497,1,497,TRUE), (498,0,498,TRUE), (499,3,499,TRUE), (5,5,5,TRUE), (50,3,50,TRUE), (51,3,51,TRUE), (52,3,52,TRUE), (53,6,53,TRUE), (54,2,54,TRUE), (55,7,55,TRUE), (56,0,56,TRUE), (57,5,57,TRUE), (58,0,58,TRUE), (59,7,59,TRUE), (6,6,6,TRUE), (60,7,60,TRUE), (61,3,61,TRUE), (62,6,62,TRUE), (63,3,63,TRUE), (64,1,64,TRUE), (65,5,65,TRUE), (66,4,66,TRUE), (67,0,67,TRUE), (68,2,68,TRUE), (69,2,69,TRUE), (7,7,7,TRUE), (70,3,70,TRUE), (71,2,71,TRUE), (72,6,72,TRUE), (73,0,73,TRUE), (74,0,74,TRUE), (75,5,75,TRUE), (76,4,76,TRUE), (77,0,77,TRUE), (78,6,78,TRUE), (79,3,79,TRUE), (8,1,8,TRUE), (80,1,80,TRUE), (81,4,81,TRUE), (82,6,82,TRUE), (83,0,83,TRUE), (84,0,84,TRUE), (85,6,85,TRUE), (86,5,86,TRUE), (87,7,87,TRUE), (88,6,88,TRUE), (89,4,89,TRUE), (9,7,9,TRUE), (90,6,90,TRUE), (91,7,91,TRUE), (92,5,92,TRUE), (93,6,93,TRUE), (94,5,94,TRUE), (95,7,95,TRUE), (96,4,96,TRUE), (97,2,97,TRUE), (98,2,98,TRUE), (99,7,99,TRUE)) AS t("vec_id", "cid", "rep_id", "kept")""",
-
-    "sketch_users_hll" -> """
-      SELECT * FROM (VALUES ('click',150,150), ('error',150,150), ('purchase',150,150), ('signup',150,150), ('view',150,150)) AS t("event_type", "hll_estimate", "exact_distinct")""",
-
-    // REAL SQL since r14: the unrolled greedy replay (see
-    // [[mmrOracleSql]]) — verified equal to the engine at both tiers
-    "hybrid_mmr_topk" -> mmrOracleSql(k = 10, depth = 50),
-
-    // REAL SQL since r14 (was a generated literal at both tiers — the
-    // classifier is fully relational): profiles = each language's 40
-    // most doc-frequent DISTINCT char trigrams (ties gram asc) over
-    // the labeled corpus; prediction = argmax profile overlap of the
-    // doc's distinct trigram set (ties lang asc). Pure ASCII corpus,
-    // so JVM code-unit and DuckDB code-point slicing agree; verified
-    // equal to the engine at 500 (sf0.01) and 50,000 (sf1) docs.
-    "text_langid_ngram" -> """
-      WITH tg AS MATERIALIZED (
-        SELECT doc_id, lang,
-               list_distinct([text[i:i+2]
-                              for i in range(1, length(text)-1)]) AS gs
-        FROM documents),
-      pg AS (SELECT lang, gram, count(*) AS n
-             FROM (SELECT lang, unnest(gs) AS gram FROM tg) GROUP BY 1, 2),
-      prof AS MATERIALIZED (SELECT lang, gram FROM (
-               SELECT lang, gram,
-                      row_number() OVER (PARTITION BY lang
-                        ORDER BY n DESC, gram) AS rk
-               FROM pg) WHERE rk <= 40),
-      dg AS (SELECT doc_id, unnest(gs) AS gram FROM tg),
-      ov AS (SELECT dg.doc_id, p.lang, count(*) AS hits
-             FROM dg JOIN prof p ON dg.gram = p.gram GROUP BY 1, 2),
-      langs AS (SELECT DISTINCT lang FROM documents),
-      scored AS (SELECT d.doc_id, l.lang, coalesce(o.hits, 0) AS hits
-                 FROM (SELECT doc_id FROM documents) d
-                 CROSS JOIN langs l
-                 LEFT JOIN ov o ON o.doc_id = d.doc_id AND o.lang = l.lang)
-      SELECT doc_id, lang AS pred_lang FROM (
-        SELECT doc_id, lang,
-               row_number() OVER (PARTITION BY doc_id
-                 ORDER BY hits DESC, lang) AS rk
-        FROM scored) WHERE rk = 1""",
-
-    // GENERATED-LITERAL oracles for the seeded ANN evaluation surface:
-    // every index family is engineered deterministic (seeded layer
-    // sampling / hyperplanes / codebook training with pid-sorted
-    // merges; DistributedQueriesSpec and the lifecycle specs pin
-    // bit-equality), so each family's recall/MAP/MRR/nDCG against the
-    // memoized exact ground truth, the ef sweep, the flagship HNSW
-    // single-query answer, and the shard-graph stats are constants of
-    // the frozen fixture. The literals also DOCUMENT the measured
-    // quality operating point per family (e.g. ivf 0.8, mrl 0.956,
-    // bq 0.912, bq256 0.98). The 250-row batch relations stay under
-    // their spec-level recall gates where approximate semantics, not
-    // byte equality, is the meaningful contract.
-    "eval_recall_hnsw" -> """
-      SELECT * FROM (VALUES (CAST(1.0 AS DOUBLE))) AS t("recall")""",
-
-    "eval_recall_hnsw_sampled" -> """
-      SELECT * FROM (VALUES (CAST(1.0 AS DOUBLE))) AS t("recall")""",
-
-    "eval_recall_ivf" -> """
-      SELECT * FROM (VALUES (CAST(0.8 AS DOUBLE))) AS t("recall")""",
-
-    "eval_recall_ivfpq" -> """
-      SELECT * FROM (VALUES (CAST(0.8 AS DOUBLE))) AS t("recall")""",
-
-    "eval_recall_pq" -> """
-      SELECT * FROM (VALUES (CAST(1.0 AS DOUBLE))) AS t("recall")""",
-
-    "eval_recall_opq" -> """
-      SELECT * FROM (VALUES (CAST(1.0 AS DOUBLE))) AS t("recall")""",
-
-    "eval_recall_vamana" -> """
-      SELECT * FROM (VALUES (CAST(1.0 AS DOUBLE))) AS t("recall")""",
-
-    "eval_recall_rp" -> """
-      SELECT * FROM (VALUES (CAST(0.88 AS DOUBLE))) AS t("recall")""",
-
-    "eval_recall_sq" -> """
-      SELECT * FROM (VALUES (CAST(1.0 AS DOUBLE))) AS t("recall")""",
-
-    "eval_recall_mrl" -> """
-      SELECT * FROM (VALUES (CAST(0.956 AS DOUBLE))) AS t("recall")""",
-
-    "eval_recall_bq" -> """
-      SELECT * FROM (VALUES (CAST(0.912 AS DOUBLE))) AS t("recall")""",
-
-    "eval_recall_bq256" -> """
-      SELECT * FROM (VALUES (CAST(0.98 AS DOUBLE))) AS t("recall")""",
-
-    "eval_recall_pca" -> """
-      SELECT * FROM (VALUES (CAST(0.992 AS DOUBLE))) AS t("recall")""",
-
-    "eval_map_hnsw" -> """
-      SELECT * FROM (VALUES (CAST(1.0 AS DOUBLE))) AS t("map")""",
-
-    "eval_mrr_hnsw" -> """
-      SELECT * FROM (VALUES (CAST(1.0 AS DOUBLE))) AS t("mrr")""",
-
-    "eval_ndcg_hnsw" -> """
-      SELECT * FROM (VALUES (CAST(1.0 AS DOUBLE))) AS t("ndcg")""",
-
-    "eval_hnsw_ef_sweep" -> """
-      SELECT * FROM (VALUES (10,CAST(1.0 AS DOUBLE)), (100,CAST(1.0 AS DOUBLE)), (50,CAST(1.0 AS DOUBLE))) AS t("ef", "recall")""",
-
-    // literal pin (fresh-JVM bit-stable, the sweep-twin discipline):
-    // the re-rank depth curve 0.672 -> 0.952 -> 1.0 at sf0.01
-    "eval_pq_overfetch_sweep" -> """
-      SELECT * FROM (VALUES (1,CAST(0.672 AS DOUBLE)), (16,CAST(1.0 AS DOUBLE)), (4,CAST(0.952 AS DOUBLE))) AS t("overfetch", "recall")""",
-
-    "knn_hnsw_stats" -> """
-      SELECT * FROM (VALUES (0,30,2,688,700,CAST(22.933333 AS DOUBLE)), (1,30,2,688,724,CAST(22.933333 AS DOUBLE)), (10,30,3,688,784,CAST(22.933333 AS DOUBLE)), (11,29,2,656,686,CAST(22.62069 AS DOUBLE)), (12,29,1,656,698,CAST(22.62069 AS DOUBLE)), (13,29,1,656,676,CAST(22.62069 AS DOUBLE)), (14,29,2,656,676,CAST(22.62069 AS DOUBLE)), (15,29,2,656,698,CAST(22.62069 AS DOUBLE)), (2,30,3,688,704,CAST(22.933333 AS DOUBLE)), (3,30,1,688,708,CAST(22.933333 AS DOUBLE)), (4,30,2,688,710,CAST(22.933333 AS DOUBLE)), (5,30,3,688,736,CAST(22.933333 AS DOUBLE)), (6,30,2,688,730,CAST(22.933333 AS DOUBLE)), (7,30,2,688,760,CAST(22.933333 AS DOUBLE)), (8,30,1,688,708,CAST(22.933333 AS DOUBLE)), (9,30,2,688,730,CAST(22.933333 AS DOUBLE))) AS t("shard", "n_nodes", "max_level", "l0_edges", "total_edges", "l0_mean_degree")""",
-
-    "knn_hnsw_single" -> """
-      SELECT * FROM (VALUES (13,CAST(0.665352 AS DOUBLE)), (14,CAST(0.712639 AS DOUBLE)), (150,CAST(0.69746 AS DOUBLE)), (270,CAST(0.664085 AS DOUBLE)), (298,CAST(0.742493 AS DOUBLE)), (319,CAST(0.739859 AS DOUBLE)), (327,CAST(0.745665 AS DOUBLE)), (350,CAST(0.557078 AS DOUBLE)), (413,CAST(0.699272 AS DOUBLE)), (96,CAST(0.681981 AS DOUBLE))) AS t("vec_id", "dist")""",
-
-    "text_tokens" -> """
-      SELECT doc_id,
-             CAST(len(string_split(text, ' ')) AS INT) AS n_ws_tokens,
-             CAST(len(regexp_extract_all(text, '[a-z0-9]+|[^a-z0-9\s]')) AS INT) AS n_bpe_tokens,
-             CAST(length(text) AS INT) AS len_chars
-      FROM documents""",
-
-    "text_quality" -> qualityOracle,
-
-    // per-row stateless scoring: the streamed twin shares the SAME
-    // oracle string as text_quality (one val — the twins can never
-    // silently diverge)
-    "text_quality_streamed" -> qualityOracle,
-
-    // same deterministic top-1000 vocabulary cut (freq desc, token asc)
-    "text_vocab_coverage" -> """
-      WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-                   FROM documents),
-      v AS (SELECT t FROM (SELECT t, count(*) AS f FROM tok GROUP BY 1)
-            ORDER BY f DESC, t ASC LIMIT 1000)
-      SELECT doc_id, count(*) AS n_tokens,
-             CAST(count(*) FILTER (tok.t NOT IN (SELECT t FROM v)) AS BIGINT)
-               AS n_oov,
-             round(CAST(count(*) FILTER (tok.t NOT IN (SELECT t FROM v))
-               AS DOUBLE) / count(*), 6) AS oov_rate
-      FROM tok GROUP BY 1""",
-
-    // same raw-quality arithmetic scaled to micro-unit longs; the *2
-    // trick keeps the even-count interpolated median exact (a+b)
-    "text_quality_gate" -> """
-      WITH q AS (
-        SELECT doc_id, lang,
-          len(w) AS n_words,
-          len(list_filter(w, t -> list_contains(['the','a','of','and','to','in','on'], t))) / CAST(len(w) AS DOUBLE) AS stop_raw,
-          length(regexp_replace(text, '[^a-z]', '', 'g')) / CAST(length(text) AS DOUBLE) AS alpha_raw
-        FROM (SELECT doc_id, lang, text, string_split(text, ' ') AS w
-              FROM documents)),
-      s AS (SELECT doc_id, lang,
-              CAST(round((least(stop_raw * 2.0, 1.0) * 0.4 + alpha_raw * 0.3
-                + least(n_words / 50.0, 1.0) * 0.3) * 1000000) AS BIGINT) AS q6
-            FROM q),
-      m AS (SELECT lang,
-              CAST(round(quantile_cont(q6, 0.5) * 2) AS BIGINT) AS med2
-            FROM s GROUP BY 1)
-      SELECT doc_id, lang, round(q6 / 1000000.0, 6) AS quality,
-             (2 * q6 >= med2) AS kept
-      FROM s JOIN m USING (lang)""",
-
-    "text_langid" -> """
-      WITH s AS (
-        SELECT doc_id,
-          round(len(list_filter(w, t -> list_contains(['the','a','of','and','to'], t))) / CAST(len(w) AS DOUBLE), 6) AS s_en,
-          round(len(list_filter(w, t -> list_contains(['el','la','de','y','que'], t))) / CAST(len(w) AS DOUBLE), 6) AS s_es,
-          round(len(list_filter(w, t -> list_contains(['der','die','und','das','ist'], t))) / CAST(len(w) AS DOUBLE), 6) AS s_de,
-          round(len(list_filter(w, t -> list_contains(['le','la','de','et','les'], t))) / CAST(len(w) AS DOUBLE), 6) AS s_fr
-        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents))
-      SELECT doc_id,
-        CASE WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
-             WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
-             WHEN s_de >= s_fr THEN 'de' ELSE 'fr' END AS pred_lang,
-        s_en, s_es, s_de, s_fr
-      FROM s""",
-
-    // same stopword-profile prediction CTE joined to the true labels;
-    // integer counts, permille via integer div
-    // NB replay: same 80/20 split, same dense vocab x class micro-nat
-    // grid, same integer posterior sums, same lexicographic tie rule
-    "text_naive_bayes_langid" -> """
-      WITH d AS (SELECT doc_id, lang, string_split(text, ' ') AS w
-                 FROM documents),
-      tr AS (SELECT lang, unnest(w) AS word FROM d WHERE doc_id % 5 <> 4),
-      tf AS (SELECT word, lang, count(*) AS tf FROM tr GROUP BY 1, 2),
-      ct AS (SELECT lang, count(*) AS tot FROM tr GROUP BY 1),
-      nd AS (SELECT lang, count(*) AS nd FROM d
-             WHERE doc_id % 5 <> 4 GROUP BY 1),
-      nt AS (SELECT count(*) AS n FROM d WHERE doc_id % 5 <> 4),
-      vv AS (SELECT count(DISTINCT word) AS v FROM tr),
-      cls AS (SELECT ct.lang AS c,
-                CAST(round(ln(CAST(nd.nd AS DOUBLE) / n) * 1000000.0)
-                  AS BIGINT) AS prior_q,
-                CAST(round(ln(CAST(1.0 AS DOUBLE) / (ct.tot + v))
-                  * 1000000.0) AS BIGINT) AS unseen_q,
-                ct.tot AS tot, v
-              FROM ct JOIN nd USING (lang) CROSS JOIN nt CROSS JOIN vv),
-      grid AS (SELECT vw.word AS mword, cls.c AS mlang,
-                 CAST(round(ln((coalesce(tf.tf, 0) + CAST(1.0 AS DOUBLE))
-                   / (cls.tot + cls.v)) * 1000000.0) AS BIGINT) AS qll
-               FROM (SELECT DISTINCT word FROM tr) vw
-               CROSS JOIN cls
-               LEFT JOIN tf ON tf.word = vw.word AND tf.lang = cls.c),
-      te AS (SELECT doc_id, lang, word, count(*) AS cnt
-             FROM (SELECT doc_id, lang, unnest(w) AS word FROM d
-                   WHERE doc_id % 5 = 4)
-             GROUP BY 1, 2, 3),
-      sc AS (SELECT te.doc_id, te.lang, cls.c,
-               any_value(cls.prior_q)
-                 + sum(te.cnt * coalesce(g.qll, cls.unseen_q)) AS score
-             FROM te CROSS JOIN cls
-             LEFT JOIN grid g ON g.mword = te.word AND g.mlang = cls.c
-             GROUP BY 1, 2, 3),
-      pr AS (SELECT doc_id, lang, c,
-               row_number() OVER (PARTITION BY doc_id
-                 ORDER BY score DESC, c ASC) AS rk
-             FROM sc)
-      SELECT lang, c AS pred_lang, count(*) AS n
-      FROM pr WHERE rk = 1 GROUP BY 1, 2""",
-
-    "text_langid_confusion" -> """
-      WITH s AS (
-        SELECT doc_id,
-          round(len(list_filter(w, t -> list_contains(['the','a','of','and','to'], t))) / CAST(len(w) AS DOUBLE), 6) AS s_en,
-          round(len(list_filter(w, t -> list_contains(['el','la','de','y','que'], t))) / CAST(len(w) AS DOUBLE), 6) AS s_es,
-          round(len(list_filter(w, t -> list_contains(['der','die','und','das','ist'], t))) / CAST(len(w) AS DOUBLE), 6) AS s_de,
-          round(len(list_filter(w, t -> list_contains(['le','la','de','et','les'], t))) / CAST(len(w) AS DOUBLE), 6) AS s_fr
-        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-      p AS (SELECT doc_id,
-              CASE WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
-                   WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
-                   WHEN s_de >= s_fr THEN 'de' ELSE 'fr' END AS pred_lang
-            FROM s),
-      cells AS (SELECT d.lang AS true_lang, p.pred_lang,
-                  CAST(count(*) AS BIGINT) AS n
-                FROM documents d JOIN p USING (doc_id)
-                GROUP BY 1, 2)
-      SELECT true_lang, pred_lang, n,
-             CAST(n * 1000 // sum(n) OVER (PARTITION BY true_lang)
-               AS BIGINT) AS permille
-      FROM cells""",
-
-    // redaction oracle generated from the SAME pattern constants the
-    // Spark plan folds over (portable regex subset; DuckDB needs the
-    // explicit 'g' flag for global replace)
-    "text_pii_scrub" -> {
-      def q(s: String) = "'" + s.replace("'", "''") + "'"
-      val ps = TextOps.redactionPatterns
-      val scrub = ps.foldLeft("text") { case (c, (pat, rep)) =>
-        s"regexp_replace($c, ${q(pat)}, ${q(rep)}, 'g')"
-      }
-      s"""
-      SELECT doc_id, $scrub AS scrubbed,
-             CAST(len(regexp_extract_all(text, ${q(ps(0)._1)})) AS INT) AS n_emails,
-             CAST(len(regexp_extract_all(text, ${q(ps(1)._1)})) AS INT) AS n_phones,
-             CAST(len(regexp_extract_all(text, ${q(ps(2)._1)})) AS INT) AS n_entities
-      FROM documents"""
-    },
-
-    "text_fingerprint" -> """
-      WITH h AS (
-        SELECT doc_id, text,
-          list_transform(string_split(text, ' '), t ->
-            list_reduce(list_prepend(CAST(0 AS BIGINT),
-              list_transform(string_split(t, ''), c -> CAST(unicode(c) AS BIGINT))),
-              (acc, c) -> (acc * 31 + c) % 1000000007)) AS wh
-        FROM documents)
-      SELECT doc_id,
-        list_reduce(list_prepend(CAST(0 AS BIGINT),
-          list_transform(string_split(text, ''), c -> CAST(unicode(c) AS BIGINT))),
-          (acc, c) -> (acc * 31 + c) % 1000000007) AS fp_text,
-        CASE WHEN len(wh) >= 5 THEN
-          list_min([list_reduce(list_prepend(CAST(0 AS BIGINT), wh[i:i+4]),
-            (acc, x) -> (acc * 131 + x) % 1000000007) for i in range(1, len(wh)-3)])
-        ELSE NULL END AS fp_min_shingle
-      FROM h""",
-
-    // winnowing replay: identical shingle fold, window minima via list
-    // slices, rightmost tie via reversed list_position
-    "text_winnowing" -> s"""
-      WITH $winnowHashCtes,
-      sel AS (
-        SELECT doc_id,
-          [struct_pack(
-             pos := j + 4 - list_position(list_reverse(sh[j:j+3]),
-                                          list_min(sh[j:j+3])),
-             h := list_min(sh[j:j+3]))
-           for j in range(1, len(sh) - 2)] AS fps
-        FROM s)
-      SELECT DISTINCT doc_id, CAST(f.pos AS BIGINT) AS pos, f.h AS h
-      FROM (SELECT doc_id, unnest(fps) AS f FROM sel)""",
-
-    // pair replay: distinct (doc, hash) selection, df-capped buckets,
-    // self-join, >= 2 shared hashes (the SHARED winnowing CTE chain —
-    // one definition across all five consumer oracles)
-    "text_winnowing_pairs" -> s"""
-      WITH $winnowHashCtes,
-      $winnowFpRareCtes
-      ${winnowPairSql("n_shared")}""",
-
-    // containment replay: the pair relation joined to per-doc
-    // distinct-fingerprint counts, integer permille both directions
-    "text_winnowing_containment" -> winnowContainmentSql,
-
-    // BM25: same operation order as the Spark plan; every constant cast
-    // to DOUBLE so DuckDB never routes through decimal arithmetic
-    "text_bm25_topk" -> """
-      WITH s AS (
-        SELECT doc_id, CAST(len(w) AS BIGINT) AS dl,
-               CAST(len(list_filter(w, x -> x = 'join')) AS BIGINT) AS tf0,
-               CAST(len(list_filter(w, x -> x = 'window')) AS BIGINT) AS tf1,
-               CAST(len(list_filter(w, x -> x = 'scan')) AS BIGINT) AS tf2
-        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-      g AS (SELECT count(*) AS n, sum(dl) AS sumdl,
-                   sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS df0,
-                   sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS df1,
-                   sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS df2
-            FROM s),
-      sc AS (
-        SELECT doc_id, round(
-            ln(CAST(1.0 AS DOUBLE) + (n - df0 + CAST(0.5 AS DOUBLE)) / (df0 + CAST(0.5 AS DOUBLE)))
-              * CAST(tf0 AS DOUBLE) * (CAST(1.2 AS DOUBLE) + CAST(1.0 AS DOUBLE))
-              / (CAST(tf0 AS DOUBLE) + CAST(1.2 AS DOUBLE) *
-                 (CAST(0.25 AS DOUBLE) + CAST(0.75 AS DOUBLE) * dl / (CAST(sumdl AS DOUBLE) / n)))
-          + ln(CAST(1.0 AS DOUBLE) + (n - df1 + CAST(0.5 AS DOUBLE)) / (df1 + CAST(0.5 AS DOUBLE)))
-              * CAST(tf1 AS DOUBLE) * (CAST(1.2 AS DOUBLE) + CAST(1.0 AS DOUBLE))
-              / (CAST(tf1 AS DOUBLE) + CAST(1.2 AS DOUBLE) *
-                 (CAST(0.25 AS DOUBLE) + CAST(0.75 AS DOUBLE) * dl / (CAST(sumdl AS DOUBLE) / n)))
-          + ln(CAST(1.0 AS DOUBLE) + (n - df2 + CAST(0.5 AS DOUBLE)) / (df2 + CAST(0.5 AS DOUBLE)))
-              * CAST(tf2 AS DOUBLE) * (CAST(1.2 AS DOUBLE) + CAST(1.0 AS DOUBLE))
-              / (CAST(tf2 AS DOUBLE) + CAST(1.2 AS DOUBLE) *
-                 (CAST(0.25 AS DOUBLE) + CAST(0.75 AS DOUBLE) * dl / (CAST(sumdl AS DOUBLE) / n)))
-          , 6) AS score
-        FROM s, g)
-      SELECT doc_id, score FROM sc WHERE score > 0
-      ORDER BY score DESC, doc_id ASC LIMIT 20""",
-
-    // Dirichlet query likelihood: per-term log-contribution quantized
-    // to integer micro-nats BEFORE the per-doc sum; one final division
-    "text_qlm_topk" -> """
-      WITH s AS (
-        SELECT doc_id, CAST(len(w) AS BIGINT) AS dl,
-               CAST(len(list_filter(w, x -> x = 'join')) AS BIGINT) AS tf0,
-               CAST(len(list_filter(w, x -> x = 'window')) AS BIGINT) AS tf1,
-               CAST(len(list_filter(w, x -> x = 'scan')) AS BIGINT) AS tf2
-        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-      g AS (SELECT CAST(sum(dl) AS BIGINT) AS ctot,
-                   CAST(sum(tf0) AS BIGINT) AS cf0,
-                   CAST(sum(tf1) AS BIGINT) AS cf1,
-                   CAST(sum(tf2) AS BIGINT) AS cf2
-            FROM s),
-      sc AS (
-        SELECT doc_id,
-          CAST(round(ln((CAST(tf0 AS DOUBLE)
-              + CAST(2000.0 AS DOUBLE) * CAST(cf0 AS DOUBLE) / CAST(ctot AS DOUBLE))
-              / (CAST(dl AS DOUBLE) + CAST(2000.0 AS DOUBLE))) * 1000000) AS BIGINT)
-          + CAST(round(ln((CAST(tf1 AS DOUBLE)
-              + CAST(2000.0 AS DOUBLE) * CAST(cf1 AS DOUBLE) / CAST(ctot AS DOUBLE))
-              / (CAST(dl AS DOUBLE) + CAST(2000.0 AS DOUBLE))) * 1000000) AS BIGINT)
-          + CAST(round(ln((CAST(tf2 AS DOUBLE)
-              + CAST(2000.0 AS DOUBLE) * CAST(cf2 AS DOUBLE) / CAST(ctot AS DOUBLE))
-              / (CAST(dl AS DOUBLE) + CAST(2000.0 AS DOUBLE))) * 1000000) AS BIGINT)
-            AS c6
-        FROM s, g)
-      SELECT doc_id, round(c6 / 1000000.0, 6) AS score
-      FROM sc ORDER BY score DESC, doc_id ASC LIMIT 20""",
-
-    // exact integer moments (N*s2 - cf^2)/(N*cf); one division
-    "text_term_burstiness" -> """
-      WITH tf AS (
-        SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-        FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-              FROM documents)
-        WHERE NOT list_contains(['the','a','of','and','to','in','on'], term)
-          AND length(term) >= 2
-        GROUP BY 1, 2),
-      bt AS (SELECT term, CAST(sum(tf) AS BIGINT) AS cf,
-                    CAST(sum(tf * tf) AS BIGINT) AS s2,
-                    CAST(count(*) AS BIGINT) AS df
-             FROM tf GROUP BY 1),
-      n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents)
-      SELECT term, cf, df,
-             round(CAST(n_docs * s2 - cf * cf AS DOUBLE)
-               / CAST(n_docs * cf AS DOUBLE), 6) AS vmr
-      FROM bt CROSS JOIN n
-      ORDER BY cf DESC, term ASC LIMIT 30""",
-
-    // same (doc, term) tf/df rollups; per-score micro-quantization
-    // BEFORE the rank; ties on term asc
-    "text_keywords_per_doc" -> """
-      WITH terms AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        FROM documents),
-      ft AS (SELECT doc_id, term FROM terms
-             WHERE NOT list_contains(['the','a','of','and','to','in','on'], term)
-               AND length(term) >= 2),
-      tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-             FROM ft GROUP BY 1, 2),
-      df AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-             FROM tf GROUP BY 1 HAVING count(*) >= 2),
-      n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-      sc AS (SELECT tf.doc_id, tf.term,
-               CAST(round(CAST(tf.tf AS DOUBLE)
-                 * ln(CAST(n.n_docs AS DOUBLE) / CAST(df.df AS DOUBLE))
-                 * 1000000) AS BIGINT) AS score6
-             FROM tf JOIN df USING (term) CROSS JOIN n),
-      rk AS (SELECT doc_id, term, score6,
-               CAST(row_number() OVER (PARTITION BY doc_id
-                 ORDER BY score6 DESC, term ASC) AS INT) AS rk
-             FROM sc)
-      SELECT doc_id, term, round(score6 / 1000000.0, 6) AS score, rk
-      FROM rk WHERE rk <= 3""",
-
-    // sliding 5-word windows (list comprehension), span-keyed rollup,
-    // total-ordered top 20
-    "text_repeated_spans" -> """
-      WITH sp AS (
-        SELECT doc_id,
-               unnest([array_to_string(w[i:i+4], ' ')
-                       for i in range(1, len(w) - 3)]) AS span
-        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
-        WHERE len(w) >= 5)
-      SELECT span, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-             CAST(count(*) AS BIGINT) AS n_occurrences
-      FROM sp GROUP BY span
-      HAVING count(DISTINCT doc_id) >= 2
-      ORDER BY n_docs DESC, n_occurrences DESC, span ASC LIMIT 20""",
-
-    "text_bm25_general" -> bm25Sql(TextOps.bm25GeneralTerms, 20),
-
-    // PRF: the feedback and expansion CTEs derive the SAME expanded
-    // term set; contributions quantize to micro-units before the
-    // per-doc sum, so the score is an exact integer in any order
-    "text_bm25_prf" -> s"""
-      WITH ${bm25Ctes(Seq("join", "vector", "stream"))},
-      fb AS (SELECT doc_id FROM bm_sc WHERE score > 0
-             ORDER BY score DESC, doc_id ASC LIMIT 5),
-      ft AS (SELECT unnest(string_split(text, ' ')) AS term
-             FROM documents JOIN fb USING (doc_id)),
-      ex AS (SELECT term, count(*) AS c FROM ft
-             WHERE term NOT IN ('join','vector','stream',
-                                'the','a','of','and','to','in','on')
-             GROUP BY 1 ORDER BY c DESC, term ASC LIMIT 3),
-      terms AS (SELECT term FROM (VALUES ('join'), ('vector'), ('stream'))
-                  s(term)
-                UNION ALL SELECT term FROM ex),
-      tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-              FROM documents),
-      dl2 AS (SELECT doc_id,
-                CAST(len(string_split(text, ' ')) AS BIGINT) AS dl
-              FROM documents),
-      tf2 AS (SELECT doc_id, term, count(*) AS tf
-              FROM tok JOIN terms USING (term) GROUP BY 1, 2),
-      dft AS (SELECT term, count(*) AS df FROM tf2 GROUP BY 1),
-      st AS (SELECT count(*) AS n, sum(dl) AS sumdl FROM dl2),
-      ctb AS (SELECT doc_id, CAST(round(
-                ln(CAST(1.0 AS DOUBLE) + (n - df + CAST(0.5 AS DOUBLE))
-                   / (df + CAST(0.5 AS DOUBLE)))
-                * CAST(tf AS DOUBLE) * (CAST(1.2 AS DOUBLE) + CAST(1.0 AS DOUBLE))
-                / (CAST(tf AS DOUBLE) + CAST(1.2 AS DOUBLE) *
-                   (CAST(0.25 AS DOUBLE) + CAST(0.75 AS DOUBLE) * dl
-                    / (CAST(sumdl AS DOUBLE) / n)))
-                * 1000000.0) AS BIGINT) AS qc
-              FROM tf2 JOIN dft USING (term) JOIN dl2 USING (doc_id)
-              CROSS JOIN st)
-      SELECT doc_id, CAST(sum(qc) AS BIGINT) AS score_micro
-      FROM ctb GROUP BY 1 HAVING sum(qc) > 0
-      ORDER BY score_micro DESC, doc_id ASC LIMIT 20""",
-    "hybrid_rrf_topk" -> hybridRrfSql(TextOps.bm25GeneralTerms,
-      k = 20, depth = 100, kRrf = 60),
-
-    // composed serving replay: the same fusion chain extended with the
-    // source join, the per-source window cap, and the final ranked cut
-    "hybrid_end_to_end" -> hybridEndToEndSql(TextOps.bm25GeneralTerms,
-      k = 10, depth = 100, kRrf = 60, fuseK = 30, perSource = 2),
-
-    // repetition: same gram counting, list-comprehension grams; ratios
-    // computed on the same doubles and rounded once
-    "text_repetition" -> """
-      WITH g AS (
-        SELECT doc_id,
-               CASE WHEN len(w) >= 3
-                    THEN [w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                          for i in range(1, len(w)-1)]
-                    ELSE [] END AS grams
-        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-      c AS (SELECT doc_id, len(grams) AS n_grams,
-                   len(list_distinct(grams)) AS n_distinct,
-                   CASE WHEN len(grams) > 0 THEN
-                     list_max(list_transform(list_distinct(grams),
-                       d -> len(list_filter(grams, x -> x = d))))
-                   ELSE 0 END AS top_count
-            FROM g)
-      SELECT doc_id, CAST(n_grams AS INT) AS n_grams,
-             CAST(n_distinct AS INT) AS n_distinct,
-             CASE WHEN n_grams > 0
-                  THEN round(1.0 - CAST(n_distinct AS DOUBLE) / n_grams, 6)
-                  ELSE 0.0 END AS dup_ratio,
-             CASE WHEN n_grams > 0
-                  THEN round(CAST(top_count AS DOUBLE) / n_grams, 6)
-                  ELSE 0.0 END AS top_gram_share
-      FROM c""",
-
-    "text_decontaminate" -> """
-      WITH g AS (
-        SELECT doc_id,
-               CASE WHEN len(w) >= 3
-                    THEN list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                        for i in range(1, len(w)-1)])
-                    ELSE [] END AS grams
-        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-      bench AS (SELECT doc_id AS bench_id, unnest(grams) AS gram FROM g
-                WHERE doc_id % 97 = 0),
-      corpus AS (SELECT doc_id, unnest(grams) AS gram FROM g
-                 WHERE doc_id % 97 <> 0),
-      shared AS (
-        SELECT doc_id, max(n_shared) AS max_shared FROM (
-          SELECT c.doc_id, b.bench_id, count(*) AS n_shared
-          FROM corpus c JOIN bench b ON c.gram = b.gram
-          GROUP BY 1, 2)
-        GROUP BY 1)
-      SELECT g.doc_id,
-             CAST(coalesce(s.max_shared, 0) AS BIGINT) AS max_shared,
-             coalesce(s.max_shared, 0) >= 5 AS contaminated
-      FROM g LEFT JOIN shared s ON g.doc_id = s.doc_id
-      WHERE g.doc_id % 97 <> 0""",
-
-    "pipeline_pack_shards" -> """
-      SELECT lang, doc_id,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-             CAST(coalesce(sum(CAST(len(string_split(text, ' ')) AS BIGINT))
-                     OVER (PARTITION BY lang ORDER BY doc_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                   0) // 2000 AS BIGINT) AS shard
-      FROM documents""",
-
-    // rollup of the same packing assignment; integer loads, one
-    // double division each for mean and imbalance
-    "pipeline_shard_balance" -> """
-      WITH ps AS (
-        SELECT lang, doc_id,
-               CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-               CAST(coalesce(sum(CAST(len(string_split(text, ' ')) AS BIGINT))
-                       OVER (PARTITION BY lang ORDER BY doc_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                     0) // 2000 AS BIGINT) AS shard
-        FROM documents),
-      g AS (SELECT lang, shard, CAST(sum(n_tokens) AS BIGINT) AS tok
-            FROM ps GROUP BY 1, 2)
-      SELECT lang, count(*) AS n_shards,
-             min(tok) AS min_tokens, max(tok) AS max_tokens,
-             round(CAST(sum(tok) AS DOUBLE) / count(*), 6) AS mean_tokens,
-             round(CAST(max(tok) * count(*) AS DOUBLE) / sum(tok), 6)
-               AS imbalance
-      FROM g GROUP BY 1""",
-
-    // k smallest distinct portable hashes -> same KMV estimate formula
-    "sketch_distinct_ngrams" -> """
-      WITH g AS (
-        SELECT DISTINCT unnest(list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                        for i in range(1, len(w)-1)])) AS gram
-        FROM (SELECT string_split(text, ' ') AS w FROM documents)),
-      h AS (SELECT DISTINCT
-              list_reduce(list_prepend(CAST(0 AS BIGINT),
-                list_transform(string_split(gram, ''), c -> CAST(unicode(c) AS BIGINT))),
-                (acc, c) -> (acc * 31 + c) % 1000000007) AS hv
-            FROM g),
-      km AS (SELECT count(*) AS kc, max(hv) AS hk
-             FROM (SELECT hv FROM h ORDER BY hv LIMIT 256)),
-      e AS (SELECT count(*) AS exact FROM h)
-      SELECT round(CASE WHEN kc < 256 THEN CAST(kc AS DOUBLE)
-                        ELSE 255 * 1000000007.0 / hk END, 6) AS kmv_estimate,
-             exact AS exact_distinct
-      FROM km, e""",
-
-    // at the declared 4x32768 grid an all-rows collision needs
-    // (n/width)^4 luck per key (~1e-9 for the fixture's key count), so
-    // the CMS estimate IS the exact count — the estimate==exact twin
-    // is the contract under the hash gate; the overestimate/eps-bound
-    // behavior at forced collision widths is pinned in CountMinSpec
-    "sketch_heavy_hitters_cms" -> """
-      SELECT CAST(user_id AS BIGINT) AS user_id,
-             count(*) AS cms_estimate, count(*) AS exact_count
-      FROM events GROUP BY 1
-      ORDER BY cms_estimate DESC, user_id LIMIT 10""",
-
-    // streamed == batch: the CMS monoid makes the streamed registers
-    // bit-identical, so the same collision-free-width oracle replays
-    "sketch_heavy_hitters_streamed" -> """
-      SELECT CAST(user_id AS BIGINT) AS user_id,
-             count(*) AS cms_estimate, count(*) AS exact_count
-      FROM events GROUP BY 1
-      ORDER BY cms_estimate DESC, user_id LIMIT 10""",
-
-    "sketch_users_per_type" -> """
-      WITH h AS (SELECT DISTINCT event_type,
-              list_reduce(list_prepend(CAST(0 AS BIGINT),
-                list_transform(string_split(CAST(user_id AS VARCHAR), ''),
-                  c -> CAST(unicode(c) AS BIGINT))),
-                (acc, c) -> (acc * 31 + c) % 1000000007) AS hv
-            FROM events),
-      r AS (SELECT event_type, hv,
-              row_number() OVER (PARTITION BY event_type ORDER BY hv) AS rn
-            FROM h),
-      km AS (SELECT event_type, count(*) FILTER (rn <= 256) AS kc,
-               max(hv) FILTER (rn <= 256) AS hk, count(*) AS exact
-             FROM r GROUP BY 1)
-      SELECT event_type,
-             round(CASE WHEN kc < 256 THEN CAST(kc AS DOUBLE)
-                        ELSE 255 * 1000000007.0 / hk END, 6) AS kmv_estimate,
-             CAST(exact AS BIGINT) AS exact_distinct
-      FROM km""",
-    // full KMV set-algebra replay: per-source k-min sketches over the
-    // same portable hashes, the pair's combined k-min list L, the
-    // membership count m, and the identical rho * est(union) formula
-    "sketch_source_overlap" -> """
-      WITH h AS (SELECT DISTINCT source,
-              list_reduce(list_prepend(CAST(0 AS BIGINT),
-                list_transform(string_split(t, ''),
-                  c -> CAST(unicode(c) AS BIGINT))),
-                (acc, c) -> (acc * 31 + c) % 1000000007) AS hv
-            FROM (SELECT source, unnest(string_split(text, ' ')) AS t
-                  FROM documents)),
-      r AS (SELECT source, hv,
-              row_number() OVER (PARTITION BY source ORDER BY hv) AS rn
-            FROM h),
-      sk AS (SELECT source, hv FROM r WHERE rn <= 256),
-      srcs AS (SELECT DISTINCT source FROM documents),
-      pr AS (SELECT a.source AS sa, b.source AS sb
-             FROM srcs a JOIN srcs b ON a.source < b.source),
-      u AS (SELECT sa, sb, hv,
-              row_number() OVER (PARTITION BY sa, sb ORDER BY hv) AS rn
-            FROM (SELECT DISTINCT pr.sa, pr.sb, s.hv
-                  FROM pr JOIN sk s ON s.source = pr.sa OR s.source = pr.sb)),
-      l AS (SELECT sa, sb, hv FROM u WHERE rn <= 256),
-      mm AS (SELECT l.sa, l.sb, count(*) AS lsz,
-               count(*) FILTER (ka.hv IS NOT NULL AND kb.hv IS NOT NULL) AS m,
-               max(l.hv) AS hk
-             FROM l LEFT JOIN sk ka ON ka.source = l.sa AND ka.hv = l.hv
-                    LEFT JOIN sk kb ON kb.source = l.sb AND kb.hv = l.hv
-             GROUP BY 1, 2),
-      ex AS (SELECT a.source AS sa, b.source AS sb, count(*) AS exact_overlap
-             FROM h a JOIN h b ON a.hv = b.hv AND a.source < b.source
-             GROUP BY 1, 2)
-      SELECT mm.sa AS source_a, mm.sb AS source_b,
-             round(CAST(m AS DOUBLE) / lsz, 6) AS kmv_jaccard,
-             round((CAST(m AS DOUBLE) / lsz) *
-                   (CASE WHEN lsz < 256 THEN CAST(lsz AS DOUBLE)
-                         ELSE 255 * 1000000007.0 / hk END), 6) AS kmv_overlap,
-             COALESCE(ex.exact_overlap, 0) AS exact_overlap
-      FROM mm LEFT JOIN ex ON ex.sa = mm.sa AND ex.sb = mm.sb""",
-
-    // the streamed sketch is bit-identical to the batch one (mergeable
-    // buffers; complete-mode sink), so it replays the same oracle
-    "sketch_users_streamed" -> """
-      WITH h AS (SELECT DISTINCT event_type,
-              list_reduce(list_prepend(CAST(0 AS BIGINT),
-                list_transform(string_split(CAST(user_id AS VARCHAR), ''),
-                  c -> CAST(unicode(c) AS BIGINT))),
-                (acc, c) -> (acc * 31 + c) % 1000000007) AS hv
-            FROM events),
-      r AS (SELECT event_type, hv,
-              row_number() OVER (PARTITION BY event_type ORDER BY hv) AS rn
-            FROM h),
-      km AS (SELECT event_type, count(*) FILTER (rn <= 256) AS kc,
-               max(hv) FILTER (rn <= 256) AS hk, count(*) AS exact
-             FROM r GROUP BY 1)
-      SELECT event_type,
-             round(CASE WHEN kc < 256 THEN CAST(kc AS DOUBLE)
-                        ELSE 255 * 1000000007.0 / hk END, 6) AS kmv_estimate,
-             CAST(exact AS BIGINT) AS exact_distinct
-      FROM km""",
-
-    // identical grouped-KMV replay (the UDAF resolves to the same
-    // Aggregator, so the SQL surface shares the oracle)
-    "sql_sketch_users" -> """
-      WITH h AS (SELECT DISTINCT event_type,
-              list_reduce(list_prepend(CAST(0 AS BIGINT),
-                list_transform(string_split(CAST(user_id AS VARCHAR), ''),
-                  c -> CAST(unicode(c) AS BIGINT))),
-                (acc, c) -> (acc * 31 + c) % 1000000007) AS hv
-            FROM events),
-      r AS (SELECT event_type, hv,
-              row_number() OVER (PARTITION BY event_type ORDER BY hv) AS rn
-            FROM h),
-      km AS (SELECT event_type, count(*) FILTER (rn <= 256) AS kc,
-               max(hv) FILTER (rn <= 256) AS hk, count(*) AS exact
-             FROM r GROUP BY 1)
-      SELECT event_type,
-             round(CASE WHEN kc < 256 THEN CAST(kc AS DOUBLE)
-                        ELSE 255 * 1000000007.0 / hk END, 6) AS kmv_estimate,
-             CAST(exact AS BIGINT) AS exact_distinct
-      FROM km""",
-
-
-    "q1_pricing_summary" -> s"""
-      WITH li AS (SELECT l_returnflag, l_linestatus,
-          ${c100("l_quantity")} AS q100, ${c100("l_extendedprice")} AS p100,
-          ${c100("(1-l_discount)")} AS dm100, ${c100("(1+l_tax)")} AS tp100,
-          ${c100("l_discount")} AS d100
-        FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02')
-      SELECT l_returnflag, l_linestatus,
-        sum(q100)/100.0 AS sum_qty,
-        sum(p100)/100.0 AS sum_base_price,
-        sum(p100*dm100)/10000.0 AS sum_disc_price,
-        sum(p100*dm100*tp100)/1000000.0 AS sum_charge,
-        sum(q100)/(count(*)*100.0) AS avg_qty,
-        sum(p100)/(count(*)*100.0) AS avg_price,
-        sum(d100)/(count(*)*100.0) AS avg_disc,
-        count(*) AS count_order
-      FROM li GROUP BY 1,2 ORDER BY 1,2""",
-
-    "q3_shipping_priority" -> s"""
-      SELECT l.l_orderkey,
-        CAST(epoch(o.o_orderdate) AS BIGINT) AS o_odate_epoch,
-        o.o_orderpriority,
-        sum(${c100("l.l_extendedprice")} * ${c100("(1-l.l_discount)")})/10000.0 AS revenue
-      FROM lineitem l
-      JOIN orders o ON l.l_orderkey = o.o_orderkey
-      JOIN customer c ON o.o_custkey = c.c_custkey
-      WHERE c.c_mktsegment = 'BUILDING'
-        AND o.o_orderdate < TIMESTAMP '1998-03-15'
-        AND l.l_shipdate > TIMESTAMP '1998-03-15'
-      GROUP BY 1,2,3 ORDER BY revenue DESC, l.l_orderkey LIMIT 10""",
-
-    "q5_region_revenue" -> s"""
-      SELECT n.n_name,
-        sum(${c100("l.l_extendedprice")} * ${c100("(1-l.l_discount)")})/10000.0 AS revenue
-      FROM lineitem l
-      JOIN orders o ON l.l_orderkey = o.o_orderkey
-      JOIN customer c ON o.o_custkey = c.c_custkey
-      JOIN supplier s ON l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
-      JOIN nation n ON s.s_nationkey = n.n_nationkey
-      JOIN region r ON n.n_regionkey = r.r_regionkey
-      WHERE r.r_name = 'EUROPE'
-        AND o.o_orderdate >= TIMESTAMP '1996-01-01'
-        AND o.o_orderdate < TIMESTAMP '1997-01-01'
-      GROUP BY 1 ORDER BY revenue DESC, n.n_name""",
-
-    "topk_orders_per_segment" -> """
-      SELECT c_mktsegment, CAST(rk AS INT) AS rk, o_orderkey, o_totalprice
-      FROM (SELECT c.c_mktsegment, o.o_orderkey, o.o_totalprice,
-              row_number() OVER (PARTITION BY c.c_mktsegment
-                ORDER BY o.o_totalprice DESC, o.o_orderkey) AS rk
-            FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey)
-      WHERE rk <= 5""",
-
-    "rollup_lineitem" -> s"""
-      SELECT l_returnflag, l_linestatus,
-             sum(q100)/100.0 AS sum_qty, count(*) AS n
-      FROM (SELECT l_returnflag, l_linestatus,
-              ${c100("l_quantity")} AS q100 FROM lineitem)
-      GROUP BY ROLLUP(l_returnflag, l_linestatus)""",
-
-    "setop_priority_custkeys" -> """
-      (SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
-       INTERSECT
-       SELECT o_custkey FROM orders WHERE o_orderpriority = '2-HIGH')
-      EXCEPT
-      SELECT o_custkey FROM orders WHERE o_orderpriority = '5-LOW'""",
-
-    "anti_customers_no_orders" -> """
-      SELECT c_custkey, c_name FROM customer c
-      WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
-                        AND o.o_orderdate >= TIMESTAMP '1998-06-01')""",
-
-    "semi_customers_urgent" -> """
-      SELECT c_custkey, c_mktsegment, c_acctbal FROM customer c
-      WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
-                    AND o.o_orderpriority = '1-URGENT')""",
-
-    // mirrors the stubbed byte-histogram decode: fixture text is ASCII,
-    // so utf-8 payload bytes == code points
-    "multimodal_stats" -> """
-      WITH m AS (
-        SELECT CASE WHEN doc_id % 3 = 0 THEN 'image'
-                    WHEN doc_id % 3 = 1 THEN 'audio'
-                    ELSE 'video' END AS kind,
-               length(text) AS n_bytes,
-               len(list_filter(list_transform(string_split(text, ''),
-                   c -> unicode(c)), x -> x % 16 = 0)) AS bin0
-        FROM documents)
-      SELECT kind, count(*) AS n,
-             CAST(sum(n_bytes) AS BIGINT) AS total_bytes,
-             CAST(sum(bin0) AS BIGINT) AS bin0_hits,
-             round(CAST(sum(bin0) AS BIGINT) / CAST(sum(n_bytes) AS DOUBLE), 6) AS bin0_ratio
-      FROM m GROUP BY 1""",
-
-    "sql_revenue_by_priority" -> s"""
-      SELECT o.o_orderpriority,
-             count(DISTINCT o.o_orderkey) AS n_orders,
-             sum(${c100("l.l_extendedprice")} * ${c100("(1-l.l_discount)")}) / 10000.0 AS revenue
-      FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-      GROUP BY 1""",
-
-    "fullouter_nation_coverage" -> """
-      WITH c AS (SELECT c_nationkey AS nationkey, count(*) AS n_cust
-                 FROM customer GROUP BY 1),
-           s AS (SELECT s_nationkey AS nationkey, count(*) AS n_supp
-                 FROM supplier GROUP BY 1)
-      SELECT coalesce(c.nationkey, s.nationkey) AS nationkey,
-             coalesce(n_cust, 0) AS n_cust,
-             coalesce(n_supp, 0) AS n_supp
-      FROM c FULL OUTER JOIN s ON c.nationkey = s.nationkey""",
-
-    "cube_lineitem" -> s"""
-      SELECT l_returnflag, l_linestatus,
-             sum(q100)/100.0 AS sum_qty, count(*) AS n
-      FROM (SELECT l_returnflag, l_linestatus,
-              ${c100("l_quantity")} AS q100 FROM lineitem)
-      GROUP BY CUBE(l_returnflag, l_linestatus)""",
-
-    // as-of: latest preceding click per error event (ties: max event_id);
-    // the oracle is the explicit inequality-join + window form — our
-    // engine computes the same thing with a single-shuffle union-merge
-    "asof_error_click" -> """
-      WITH err AS (SELECT event_id, user_id, ts FROM events
-                   WHERE event_type = 'error'),
-           clk AS (SELECT event_id, user_id, ts FROM events
-                   WHERE event_type = 'click')
-      SELECT e.event_id, e.user_id, epoch_us(e.ts) AS ts_us,
-             c.event_id AS prev_click_id,
-             epoch_us(e.ts) - epoch_us(c.ts) AS gap_us
-      FROM err e LEFT JOIN clk c
-        ON e.user_id = c.user_id AND c.ts <= e.ts
-      QUALIFY row_number() OVER (PARTITION BY e.event_id
-        ORDER BY c.ts DESC NULLS LAST, c.event_id DESC NULLS LAST) = 1""",
-
-    "asof_next_click" -> """
-      WITH err AS (SELECT event_id, user_id, ts FROM events
-                   WHERE event_type = 'error'),
-           clk AS (SELECT event_id, user_id, ts FROM events
-                   WHERE event_type = 'click')
-      SELECT e.event_id, e.user_id, epoch_us(e.ts) AS ts_us,
-             c.event_id AS next_click_id,
-             epoch_us(c.ts) - epoch_us(e.ts) AS gap_us
-      FROM err e LEFT JOIN clk c
-        ON e.user_id = c.user_id AND c.ts >= e.ts
-           AND epoch_us(c.ts) - epoch_us(e.ts) <= 600000000
-      QUALIFY row_number() OVER (PARTITION BY e.event_id
-        ORDER BY c.ts ASC NULLS LAST, c.event_id ASC NULLS LAST) = 1""",
-
-    "range_events_5min" -> """
-      SELECT a.user_id, a.event_id AS event_a, b.event_id AS event_b,
-             abs(epoch_us(a.ts) - epoch_us(b.ts)) AS gap_us
-      FROM events a JOIN events b
-        ON a.user_id = b.user_id AND a.event_id < b.event_id
-       AND abs(epoch_us(a.ts) - epoch_us(b.ts)) <= 300000000""",
-
-    "events_tumbling" -> s"""
-      SELECT CAST(epoch(time_bucket(INTERVAL '10 minutes', ts)) AS BIGINT) AS w_start,
-             event_type, count(*) AS n, sum(${c100("value")})/100.0 AS sum_value
-      FROM events GROUP BY 1,2""",
-
-    // streaming-executed twin (complete-mode window agg) — same answer
-    "events_tumbling_streamed" -> s"""
-      SELECT CAST(epoch(time_bucket(INTERVAL '10 minutes', ts)) AS BIGINT) AS w_start,
-             event_type, count(*) AS n, sum(${c100("value")})/100.0 AS sum_value
-      FROM events GROUP BY 1,2""",
-
-    "events_sliding" -> s"""
-      SELECT CAST(epoch(time_bucket(INTERVAL '5 minutes', ts)
-               - k.off * INTERVAL '5 minutes') AS BIGINT) AS w_start,
-             event_type, count(*) AS n, sum(${c100("value")})/100.0 AS sum_value
-      FROM events CROSS JOIN (VALUES (0),(1)) k(off)
-      GROUP BY 1,2""",
-
-    "events_sessions" -> s"""
-      WITH x AS (
-        SELECT user_id, event_id, ts, value,
-          CASE WHEN lag(ts) OVER w IS NULL
-                 OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-               THEN 1 ELSE 0 END AS new_s
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-      y AS (SELECT *, CAST(sum(new_s) OVER (PARTITION BY user_id
-              ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sid
-            FROM x)
-      SELECT user_id, sid, epoch_us(min(ts)) AS session_start_us,
-             count(*) AS n_events, sum(${c100("value")})/100.0 AS sum_value
-      FROM y GROUP BY 1,2""",
-
-    // the native session_window plan must produce the same sessions the
-    // analytic-window formulation does (same oracle, sid dropped)
-    "events_sessions_native" -> sessionsNativeOracle,
-    // the streaming-executed session_window run shares the same oracle:
-    // watermark-driven append-mode emission must reproduce the batch
-    // sessions exactly
-    "events_sessions_streamed" -> sessionsNativeOracle,
-
-    // duplicate-free projection of the doubled stream == the fixture
-    "events_dedup_streamed" -> """
-      SELECT event_id, user_id, event_type, value,
-             epoch_us(ts) AS ts_us
-      FROM events""",
-
-    // the batch equivalent of the streamed stream-stream interval join:
-    // every error joined to same-user clicks within +/- 30 minutes
-    "events_interval_streamed" -> """
-      SELECT e.user_id, e.event_id AS err_id, c.event_id AS click_id,
-             abs(epoch_us(e.ts) - epoch_us(c.ts)) AS gap_us
-      FROM events e JOIN events c
-        ON e.user_id = c.user_id
-       AND e.event_type = 'error' AND c.event_type = 'click'
-       AND abs(epoch_us(e.ts) - epoch_us(c.ts)) <= 1800000000""",
-
-    // batch LEFT JOIN twin of the streaming outer interval join —
-    // unmatched errors carry null click_id/gap_us on both engines
-    "events_interval_outer_streamed" -> """
-      WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events
-                 WHERE event_type = 'error'),
-      c AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events
-            WHERE event_type = 'click')
-      SELECT e.user_id, e.event_id AS err_id, c.event_id AS click_id,
-             abs(e.us - c.us) AS gap_us
-      FROM e LEFT JOIN c
-        ON e.user_id = c.user_id AND abs(e.us - c.us) <= 1800000000""",
-
-    // batch FULL JOIN twin of the streaming full-outer interval join —
-    // either side's unmatched rows null-pad; user_id coalesces
-    "events_interval_full_streamed" -> """
-      WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events
-                 WHERE event_type = 'error'),
-      c AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events
-            WHERE event_type = 'click')
-      SELECT coalesce(e.user_id, c.user_id) AS user_id,
-             e.event_id AS err_id, c.event_id AS click_id,
-             abs(e.us - c.us) AS gap_us
-      FROM e FULL JOIN c
-        ON e.user_id = c.user_id AND abs(e.us - c.us) <= 1800000000""",
-
-    // components via a RECURSIVE transitive closure (UNION set
-    // semantics terminate it): rep = min label reachable over the
-    // symmetric edge set — exact for ANY component diameter, unlike a
-    // fixed round count, which would silently diverge from the
-    // engine's fixpoint union-find on a fixture with a longer chain
-    "text_typo_clusters" -> """
-      WITH RECURSIVE v AS (SELECT DISTINCT lower(w) AS w FROM (
-          SELECT unnest(string_split(p_name, ' ')) AS w FROM part
-          UNION ALL SELECT unnest(string_split(p_type, ' ')) FROM part
-          UNION ALL SELECT n_name FROM nation
-          UNION ALL SELECT r_name FROM region)
-        WHERE length(w) > 0),
-      p AS (SELECT a.w AS w1, b.w AS w2 FROM v a JOIN v b ON a.w < b.w
-            WHERE levenshtein(a.w, b.w) <= 2),
-      e AS (SELECT w1 AS a, w2 AS b FROM p
-            UNION ALL SELECT w2, w1 FROM p),
-      reach(node, lbl) AS (
-        SELECT w, w FROM v
-        UNION
-        SELECT e.b, reach.lbl FROM e JOIN reach ON reach.node = e.a)
-      SELECT node AS w, min(lbl) AS rep_w FROM reach GROUP BY node""",
-
-    // identical start/size arithmetic over DuckDB list slicing
-    "text_chunking" -> """
-      WITH t AS (SELECT doc_id, string_split(text, ' ') AS w
-                 FROM documents),
-      k AS (SELECT doc_id, w,
-                   CAST(ceil(CAST(greatest(len(w) - 10, 1) AS DOUBLE)
-                             / 40.0) AS INT) AS k
-            FROM t),
-      g AS (SELECT doc_id, w,
-                   unnest(generate_series(0, k - 1)) AS i FROM k)
-      SELECT doc_id, CAST(i + 1 AS INT) AS chunk_idx,
-             CAST(len(w[i*40+1:i*40+50]) AS INT) AS n_tokens,
-             array_to_string(w[i*40+1:i*40+50], ' ') AS chunk_text
-      FROM g""",
-
-    // the generator's sliding bigrams replayed via list slicing
-    "text_word_ngrams" -> """
-      WITH t AS (SELECT doc_id, string_split(text, ' ') AS w
-                 FROM documents),
-      g AS (SELECT doc_id, unnest(generate_series(1, len(w) - 1)) AS i, w
-            FROM t)
-      SELECT doc_id, CAST(i AS INT) AS pos,
-             array_to_string(w[i:i+1], ' ') AS ngram
-      FROM g""",
-
-    // 3-iteration weighted PageRank on the u:/t: bipartite graph; every
-    // arithmetic step (double division, 0.85 damping, per-iteration 9dp
-    // quantization, final 6dp round) mirrors GraphOps.pageRank exactly
-    "graph_pagerank" -> """
-      WITH und AS (SELECT user_id, event_type, count(*) AS w
-                   FROM events GROUP BY 1, 2),
-      edges AS (SELECT 'u:' || user_id AS src, 't:' || event_type AS dst, w
-                FROM und
-                UNION ALL
-                SELECT 't:' || event_type, 'u:' || user_id, w FROM und),
-      trans AS (SELECT src, dst,
-                       CAST(w AS DOUBLE) / sum(w) OVER (PARTITION BY src) AS p
-                FROM edges),
-      nodes AS (SELECT DISTINCT src AS node FROM edges),
-      nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
-      r0 AS (SELECT node, CAST(1.0 AS DOUBLE) / n AS rank FROM nodes, nn),
-      r1 AS (SELECT n2.node,
-                    round((CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / nn.n
-                      + CAST(0.85 AS DOUBLE) * coalesce(c.inflow, 0), 9) AS rank
-             FROM nodes n2 CROSS JOIN nn
-             LEFT JOIN (SELECT t.dst, sum(r.rank * t.p) AS inflow
-                        FROM trans t JOIN r0 r ON t.src = r.node
-                        GROUP BY t.dst) c ON c.dst = n2.node),
-      r2 AS (SELECT n2.node,
-                    round((CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / nn.n
-                      + CAST(0.85 AS DOUBLE) * coalesce(c.inflow, 0), 9) AS rank
-             FROM nodes n2 CROSS JOIN nn
-             LEFT JOIN (SELECT t.dst, sum(r.rank * t.p) AS inflow
-                        FROM trans t JOIN r1 r ON t.src = r.node
-                        GROUP BY t.dst) c ON c.dst = n2.node),
-      r3 AS (SELECT n2.node,
-                    round((CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / nn.n
-                      + CAST(0.85 AS DOUBLE) * coalesce(c.inflow, 0), 9) AS rank
-             FROM nodes n2 CROSS JOIN nn
-             LEFT JOIN (SELECT t.dst, sum(r.rank * t.p) AS inflow
-                        FROM trans t JOIN r2 r ON t.src = r.node
-                        GROUP BY t.dst) c ON c.dst = n2.node)
-      SELECT node, round(rank, 6) AS rank FROM r3""",
-
-    // same unrolled 3-round chain as graph_pagerank with the teleport
-    // mass concentrated on the min-user seed; restart written as
-    // 1.0 - 0.85 in both engines so the IEEE value matches
-    "graph_ppr" -> """
-      WITH und AS (SELECT user_id, event_type, count(*) AS w
-                   FROM events GROUP BY 1, 2),
-      edges AS (SELECT 'u:' || user_id AS src, 't:' || event_type AS dst, w
-                FROM und
-                UNION ALL
-                SELECT 't:' || event_type, 'u:' || user_id, w FROM und),
-      trans AS (SELECT src, dst,
-                       CAST(w AS DOUBLE) / sum(w) OVER (PARTITION BY src) AS p
-                FROM edges),
-      nodes AS (SELECT DISTINCT src AS node FROM edges),
-      sd AS (SELECT 'u:' || min(user_id) AS seed FROM events),
-      r0 AS (SELECT node,
-                    CASE WHEN node = sd.seed THEN CAST(1.0 AS DOUBLE)
-                         ELSE CAST(0.0 AS DOUBLE) END AS rank
-             FROM nodes, sd),
-      r1 AS (SELECT n2.node,
-                    round(CASE WHEN n2.node = sd.seed
-                            THEN CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)
-                            ELSE CAST(0.0 AS DOUBLE) END
-                      + CAST(0.85 AS DOUBLE) * coalesce(c.inflow, 0), 9) AS rank
-             FROM nodes n2 CROSS JOIN sd
-             LEFT JOIN (SELECT t.dst, sum(r.rank * t.p) AS inflow
-                        FROM trans t JOIN r0 r ON t.src = r.node
-                        GROUP BY t.dst) c ON c.dst = n2.node),
-      r2 AS (SELECT n2.node,
-                    round(CASE WHEN n2.node = sd.seed
-                            THEN CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)
-                            ELSE CAST(0.0 AS DOUBLE) END
-                      + CAST(0.85 AS DOUBLE) * coalesce(c.inflow, 0), 9) AS rank
-             FROM nodes n2 CROSS JOIN sd
-             LEFT JOIN (SELECT t.dst, sum(r.rank * t.p) AS inflow
-                        FROM trans t JOIN r1 r ON t.src = r.node
-                        GROUP BY t.dst) c ON c.dst = n2.node),
-      r3 AS (SELECT n2.node,
-                    round(CASE WHEN n2.node = sd.seed
-                            THEN CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)
-                            ELSE CAST(0.0 AS DOUBLE) END
-                      + CAST(0.85 AS DOUBLE) * coalesce(c.inflow, 0), 9) AS rank
-             FROM nodes n2 CROSS JOIN sd
-             LEFT JOIN (SELECT t.dst, sum(r.rank * t.p) AS inflow
-                        FROM trans t JOIN r2 r ON t.src = r.node
-                        GROUP BY t.dst) c ON c.dst = n2.node)
-      SELECT node, round(rank, 6) AS rank FROM r3 WHERE rank > 0""",
-
-    // perceptual-signature buckets: 64-bit hash, bit b set iff byte
-    // class b is over-represented (64*count > len) — ASCII fixture so
-    // ord(char) == payload byte; groups with >1 member
-    "multimodal_signature_dedup" -> """
-      WITH ch AS (SELECT doc_id,
-                         list_transform(string_split(text, ''), c -> ord(c) % 64) AS cs,
-                         length(text) AS len,
-                         CASE doc_id % 3 WHEN 0 THEN 'image'
-                                         WHEN 1 THEN 'audio'
-                                         ELSE 'video' END AS kind
-                  FROM documents),
-      ph AS (SELECT doc_id, kind, len,
-                    CAST(list_sum(list_transform(range(64), b ->
-                      CASE WHEN 64 * len(list_filter(cs, c -> c = b)) > len
-                           THEN CAST(1 AS BIGINT) << b
-                           ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS signature
-             FROM ch)
-      SELECT kind, signature, count(*) AS n, min(doc_id) AS keep_id,
-             CAST(sum(len) AS BIGINT) AS total_bytes
-      FROM ph GROUP BY 1, 2 HAVING count(*) > 1""",
-
-    // the decoded-pixel aHash groups equal the title duplicate groups
-    // (rendering is injective per distinct title, PNG lossless), so
-    // the oracle derives them decoder-free from the first three words;
-    // a broken decode would merge unrelated groups and fail this
-    "multimodal_phash_dedup" -> """
-      SELECT min(doc_id) AS keep_id, count(*) AS n
-      FROM documents
-      GROUP BY array_to_string(string_split(text, ' ')[1:3], ' ')
-      HAVING count(*) > 1""",
-
-    // codec-free expectation for the IHDR parse: dims follow the same
-    // n_chars arithmetic the renderer used; truecolor 8-bit is the
-    // declared encode contract
-    "multimodal_png_meta" -> """
-      SELECT doc_id AS media_id,
-             CAST((n_chars % 24) + 8 AS INT) AS width,
-             CAST((n_chars % 17) + 8 AS INT) AS height,
-             CAST(8 AS INT) AS bit_depth,
-             CAST(2 AS INT) AS color_type
-      FROM documents""",
-
-    // same decoder-free title-identity argument as the image leg: the
-    // WAV render is injective per title and 16-bit PCM is lossless, so
-    // decoded-fingerprint groups == title groups
-    "multimodal_audio_dedup" -> """
-      SELECT min(doc_id) AS keep_id, count(*) AS n
-      FROM documents
-      GROUP BY array_to_string(string_split(text, ' ')[1:3], ' ')
-      HAVING count(*) > 1""",
-
-    // gray-palette animated GIF is lossless, render injective per
-    // title => temporal-fingerprint groups == title groups
-    "multimodal_video_dedup" -> """
-      SELECT min(doc_id) AS keep_id, count(*) AS n
-      FROM documents
-      GROUP BY array_to_string(string_split(text, ' ')[1:3], ' ')
-      HAVING count(*) > 1""",
-
-    // mediaTable: payload = utf-8 text bytes (ASCII fixture: len == chars),
-    // kind video <=> doc_id % 3 = 2; offsets = i * len / 4 in long division
-    "multimodal_frames" -> """
-      WITH v AS (SELECT doc_id AS media_id,
-                        greatest(octet_length(encode(text)), 1) AS len
-                 FROM documents WHERE doc_id % 3 = 2)
-      SELECT media_id, CAST(i AS INT) AS frame_idx,
-             CAST(i * len // 4 AS BIGINT) AS "offset"
-      FROM v, range(0, 4) t(i)""",
-
-    "pipeline_training_corpus" -> """
-      WITH kept AS (
-        SELECT doc_id, text
-        FROM (SELECT doc_id, text,
-                min(doc_id) OVER (PARTITION BY text) AS keeper
-              FROM documents)
-        WHERE keeper = doc_id),
-      m AS (
-        SELECT doc_id, text, string_split(text, ' ') AS w FROM kept),
-      s AS (
-        SELECT doc_id, text, w,
-          round(len(list_filter(w, t -> list_contains(['the','a','of','and','to'], t))) / CAST(len(w) AS DOUBLE), 6) AS s_en,
-          round(len(list_filter(w, t -> list_contains(['el','la','de','y','que'], t))) / CAST(len(w) AS DOUBLE), 6) AS s_es,
-          round(len(list_filter(w, t -> list_contains(['der','die','und','das','ist'], t))) / CAST(len(w) AS DOUBLE), 6) AS s_de,
-          round(len(list_filter(w, t -> list_contains(['le','la','de','et','les'], t))) / CAST(len(w) AS DOUBLE), 6) AS s_fr,
-          len(list_filter(w, t -> list_contains(['the','a','of','and','to','in','on'], t))) / CAST(len(w) AS DOUBLE) AS stop_raw,
-          length(regexp_replace(text, '[^a-z]', '', 'g')) / CAST(length(text) AS DOUBLE) AS alpha_raw
-        FROM m),
-      q AS (
-        SELECT doc_id,
-          CASE WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
-               WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
-               WHEN s_de >= s_fr THEN 'de' ELSE 'fr' END AS pred_lang,
-          round(least(stop_raw * 2.0, 1.0) * 0.4 + alpha_raw * 0.3
-                + least(len(w) / 50.0, 1.0) * 0.3, 6) AS quality,
-          CAST(len(regexp_extract_all(text, '[a-z0-9]+|[^a-z0-9\s]')) AS INT)
-            AS n_bpe_tokens
-        FROM s)
-      SELECT doc_id, pred_lang, quality, n_bpe_tokens
-      FROM q
-      WHERE quality >= 0.5 AND pred_lang = 'en'
-        AND n_bpe_tokens BETWEEN 10 AND 10000""",
-
-    "pipeline_stratified_sample" -> """
-      WITH h AS (
-        SELECT doc_id, lang,
-          list_reduce(list_prepend(CAST(0 AS BIGINT),
-            list_transform(string_split(text, ''), c -> CAST(unicode(c) AS BIGINT))),
-            (acc, c) -> (acc * 31 + c) % 1000000007) % 100 AS bucket
-        FROM documents)
-      SELECT doc_id, lang, CAST(bucket AS BIGINT) AS bucket
-      FROM h
-      WHERE bucket < CASE WHEN lang = 'en' THEN 10 ELSE 30 END""",
-
-    "pipeline_heavy_hitters" -> """
-      WITH t AS (
-        SELECT lang, unnest(string_split(text, ' ')) AS token FROM documents),
-      c AS (SELECT lang, token, count(*) AS n FROM t GROUP BY 1, 2),
-      r AS (SELECT *, CAST(row_number() OVER (PARTITION BY lang
-              ORDER BY n DESC, token) AS INT) AS rk FROM c)
-      SELECT lang, token, n, rk FROM r WHERE rk <= 10""",
-
-    // sqrt (not pow) on both sides: correctly rounded per IEEE-754, so
-    // the α=0.5 weights are bit-identical across engines
-    "pipeline_temperature_sample" -> """
-      WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang),
-      s AS (SELECT CAST(sum(sqrt(n)) AS DOUBLE) AS spa FROM c),
-      p AS (SELECT lang, n AS n_docs,
-                   round(sqrt(n) / spa, 6) AS q,
-                   CAST(round(least(1.0, 200 * (sqrt(n) / spa) / n) * 1000)
-                        AS BIGINT) AS keep_permille
-            FROM c CROSS JOIN s),
-      k AS (SELECT d.lang, count(*) AS kept
-            FROM documents d JOIN p ON d.lang = p.lang
-            WHERE d.doc_id % 1000 < p.keep_permille GROUP BY d.lang)
-      SELECT p.lang, n_docs, q, keep_permille,
-             coalesce(kept, CAST(0 AS BIGINT)) AS n_kept
-      FROM p LEFT JOIN k ON p.lang = k.lang""",
-
-    // α=0.5 mixture plan: micro-quantized sqrt weights over exact
-    // per-source token masses; every division on integer inputs
-    "pipeline_mixture_plan" -> """
-      WITH s AS (SELECT source, count(*) AS n_docs,
-                        CAST(sum(len(string_split(text, ' '))) AS BIGINT)
-                          AS n_tokens
-                 FROM documents GROUP BY 1),
-      w AS (SELECT source, n_docs, n_tokens,
-                   CAST(round(sqrt(CAST(n_tokens AS DOUBLE)) * 1000000)
-                        AS BIGINT) AS qw
-            FROM s),
-      t AS (SELECT CAST(sum(qw) AS BIGINT) AS tw FROM w)
-      SELECT source, n_docs, n_tokens,
-             round(CAST(qw AS DOUBLE) / tw, 6) AS share,
-             CAST(round((100000.0 * qw) / tw) AS BIGINT) AS sampled_tokens,
-             round(((100000.0 * qw) / tw) / CAST(n_tokens AS DOUBLE), 6)
-               AS epochs
-      FROM w CROSS JOIN t""",
-
-    // identical plan over the exact-dedup survivors (min doc_id per
-    // md5(text))
-    "pipeline_mixture_dedup" -> """
-      WITH ex AS (SELECT min(doc_id) AS doc_id FROM documents
-                  GROUP BY md5(text)),
-      d AS (SELECT doc.* FROM documents doc JOIN ex USING (doc_id)),
-      s AS (SELECT source, count(*) AS n_docs,
-                   CAST(sum(len(string_split(text, ' '))) AS BIGINT)
-                     AS n_tokens
-            FROM d GROUP BY 1),
-      w AS (SELECT source, n_docs, n_tokens,
-                   CAST(round(sqrt(CAST(n_tokens AS DOUBLE)) * 1000000)
-                        AS BIGINT) AS qw
-            FROM s),
-      t AS (SELECT CAST(sum(qw) AS BIGINT) AS tw FROM w)
-      SELECT source, n_docs, n_tokens,
-             round(CAST(qw AS DOUBLE) / tw, 6) AS share,
-             CAST(round((100000.0 * qw) / tw) AS BIGINT) AS sampled_tokens,
-             round(((100000.0 * qw) / tw) / CAST(n_tokens AS DOUBLE), 6)
-               AS epochs
-      FROM w CROSS JOIN t""",
-
-    // adjacent-pair PMI in integer micro-nats; unigram margins from
-    // the same whitespace tokens, top-20 cut total-ordered
-    "text_pmi_collocations" -> """
-      WITH tok AS (SELECT doc_id, string_split(text, ' ') AS w
-                   FROM documents),
-      pairs AS (SELECT w[i] AS w1, w[i+1] AS w2 FROM (
-                  SELECT w, unnest(generate_series(1, len(w) - 1)) AS i
-                  FROM tok)),
-      cb AS (SELECT w1, w2, count(*) AS cab FROM pairs GROUP BY 1, 2),
-      uni AS (SELECT unnest(w) AS t FROM tok),
-      uc AS (SELECT t, count(*) AS c FROM uni GROUP BY 1),
-      tot AS (SELECT CAST(sum(cab) AS BIGINT) AS nb FROM cb)
-      SELECT w1 || ' ' || w2 AS ngram, cab AS n_pair,
-             CAST(round(ln((CAST(cab AS DOUBLE) * nb) /
-                           (CAST(a.c AS DOUBLE) * b.c)) * 1000000)
-                  AS BIGINT) AS pmi_micro
-      FROM cb JOIN uc a ON cb.w1 = a.t JOIN uc b ON cb.w2 = b.t
-      CROSS JOIN tot
-      WHERE cab >= 5
-      ORDER BY pmi_micro DESC, ngram ASC
-      LIMIT 20""",
-
-    "text_unigram_logprob" -> """
-      WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-                   FROM documents),
-      freq AS (SELECT w, count(*) AS c FROM tok GROUP BY w),
-      tot AS (SELECT CAST(sum(c) AS BIGINT) AS t, count(*) AS v FROM freq)
-      SELECT doc_id, count(*) AS n_tokens,
-             round(avg(-ln((c + 1.0) / (t + v))), 6) AS mean_nll
-      FROM tok JOIN freq USING (w) CROSS JOIN tot
-      GROUP BY doc_id""",
-
-    "text_tfidf_terms" -> """
-      WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-                   FROM documents),
-      tf AS (SELECT doc_id, w AS term, count(*) AS c FROM tok GROUP BY 1, 2),
-      dl AS (SELECT doc_id, CAST(sum(c) AS DOUBLE) AS dl FROM tf GROUP BY 1),
-      dft AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      n AS (SELECT CAST(count(*) AS DOUBLE) AS nd FROM documents),
-      sc AS (SELECT t.doc_id, t.term,
-                    round((CAST(c AS DOUBLE) / dl) * ln(nd / df), 6) AS score
-             FROM tf t JOIN dl USING (doc_id) JOIN dft USING (term)
-             CROSS JOIN n)
-      SELECT doc_id, term, score,
-             CAST(row_number() OVER (PARTITION BY doc_id
-               ORDER BY score DESC, term) AS INT) AS rk
-      FROM sc QUALIFY rk <= 3""",
-
-    "q4_exists_late_discount" -> """
-      SELECT o_orderpriority, count(*) AS n_orders
-      FROM orders o
-      WHERE EXISTS (SELECT 1 FROM lineitem l
-                    WHERE l.l_orderkey = o.o_orderkey
-                      AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-                      AND l.l_discount >= 0.05)
-      GROUP BY 1""",
-
-    "q18_large_orders" -> s"""
-      WITH big AS (
-        SELECT l_orderkey, sum(${c100("l_quantity")}) AS q100
-        FROM lineitem GROUP BY 1 HAVING sum(${c100("l_quantity")}) > 30000)
-      SELECT c.c_custkey, c.c_name, o.o_orderkey,
-             CAST(epoch(o.o_orderdate) AS BIGINT) AS o_odate_epoch,
-             o.o_totalprice, big.q100 / 100.0 AS total_qty
-      FROM orders o
-      JOIN big ON o.o_orderkey = big.l_orderkey
-      JOIN customer c ON o.o_custkey = c.c_custkey""",
-
-    "window_customer_orders" -> s"""
-      SELECT o_custkey, o_orderkey,
-             CAST(epoch(o_orderdate) AS BIGINT) AS o_odate_epoch,
-             row_number() OVER w AS order_seq,
-             sum(${c100("o_totalprice")})
-               OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                     ROWS UNBOUNDED PRECEDING) / 100.0 AS run_spend,
-             CAST(date_diff('day', lag(o_orderdate) OVER w, o_orderdate)
-               AS BIGINT) AS gap_days
-      FROM orders
-      WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)""",
-
-    "window_analytics_extras" -> """
-      SELECT c.c_mktsegment, o.o_orderkey,
-             CAST(ntile(4) OVER w AS INT) AS quartile,
-             round(percent_rank() OVER w, 6) AS pct_rank,
-             round(cume_dist() OVER w, 6) AS cume,
-             first_value(o.o_orderkey) OVER w AS first_okey
-      FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-      WINDOW w AS (PARTITION BY c.c_mktsegment
-                   ORDER BY o.o_totalprice ASC, o.o_orderkey ASC)""",
-
-    "scalar_part_showcase" -> """
-      SELECT p_partkey,
-             upper(p_name) AS up_name,
-             length(p_name) AS name_len,
-             substr(p_name, 1, 8) AS name_pfx,
-             replace(p_type, ' ', '_') AS type_u,
-             split_part(p_type, ' ', 1) AS type_head,
-             strpos(p_name, 'a') AS pos_a,
-             concat_ws('-', p_brand, p_type) AS brand_type,
-             abs(p_size - 25) AS size_dist,
-             greatest(p_size, 25) AS size_hi,
-             round(p_retailprice * 7, 2) AS price_x7
-      FROM part""",
-
-    "pivot_priority_segment" -> """
-      SELECT c.c_mktsegment,
-             count(*) FILTER (o.o_orderpriority = '1-URGENT') AS "1-URGENT",
-             count(*) FILTER (o.o_orderpriority = '2-HIGH') AS "2-HIGH",
-             count(*) FILTER (o.o_orderpriority = '3-MEDIUM') AS "3-MEDIUM",
-             count(*) FILTER (o.o_orderpriority = '4-NOT SPECIFIED')
-               AS "4-NOT SPECIFIED",
-             count(*) FILTER (o.o_orderpriority = '5-LOW') AS "5-LOW"
-      FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-      GROUP BY 1""",
-
-    "setop_all_priorities" -> """
-      WITH b AS (SELECT o_orderpriority FROM orders o
-                 JOIN customer c ON o.o_custkey = c.c_custkey
-                 WHERE c.c_mktsegment = 'BUILDING'),
-           m AS (SELECT o_orderpriority FROM orders o
-                 JOIN customer c ON o.o_custkey = c.c_custkey
-                 WHERE c.c_mktsegment = 'MACHINERY'),
-           i AS (SELECT o_orderpriority, count(*) AS n_common
-                 FROM (SELECT * FROM b INTERSECT ALL SELECT * FROM m)
-                 GROUP BY 1),
-           x AS (SELECT o_orderpriority, count(*) AS n_only_building
-                 FROM (SELECT * FROM b EXCEPT ALL SELECT * FROM m)
-                 GROUP BY 1)
-      SELECT coalesce(i.o_orderpriority, x.o_orderpriority) AS o_orderpriority,
-             coalesce(i.n_common, 0) AS n_common,
-             coalesce(x.n_only_building, 0) AS n_only_building
-      FROM i FULL OUTER JOIN x ON i.o_orderpriority = x.o_orderpriority""",
-
-    "grouping_sets_lineitem" -> s"""
-      SELECT l_returnflag, l_linestatus,
-             sum(${c100("l_quantity")}) / 100.0 AS sum_qty,
-             count(*) AS n
-      FROM lineitem
-      GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))""",
-
-    "posexplode_tokens" -> """
-      SELECT doc_id, CAST(i - 1 AS INT) AS pos, w[CAST(i AS INT)] AS token
-      FROM (SELECT doc_id, string_split(text, ' ')[1:5] AS w FROM documents),
-           range(1, 6) t(i)
-      WHERE i <= len(w)""",
-
-    "argmax_events" -> s"""
-      WITH e AS (SELECT event_type, event_id,
-                        ${c100("value")} AS v100 FROM events)
-      SELECT event_type, event_id AS top_event_id,
-             max(v100) OVER (PARTITION BY event_type) / 100.0 AS max_value
-      FROM e
-      QUALIFY row_number() OVER (PARTITION BY event_type
-        ORDER BY v100 DESC, event_id DESC) = 1""",
-
-    "scalar_regex_showcase" -> """
-      SELECT p_partkey,
-             regexp_extract(p_name, '([a-z]+)$', 1) AS last_word,
-             regexp_replace(p_type, '[AEIOU]', '_', 'g') AS type_devowel,
-             CAST(regexp_matches(p_name, '^[a-z]+ ') AS INT)
-               AS starts_lower_word
-      FROM part""",
-
-    "scalar_order_dates" -> """
-      SELECT o_orderkey,
-             CAST(year(o_orderdate) AS INT) AS y,
-             CAST(month(o_orderdate) AS INT) AS m,
-             CAST(day(o_orderdate) AS INT) AS d,
-             CAST(quarter(o_orderdate) AS INT) AS q,
-             CAST(epoch(date_trunc('month', o_orderdate)) AS BIGINT)
-               AS month_start
-      FROM orders""",
-
-    "q6_forecast_revenue" -> s"""
-      SELECT sum(${c100("l_extendedprice")} * ${c100("l_discount")})
-               / CAST(10000 AS DOUBLE) AS revenue
-      FROM lineitem
-      WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        AND l_shipdate <  TIMESTAMP '1997-01-01'
-        AND l_discount >= 0.05 AND l_discount <= 0.07
-        AND l_quantity < 24""",
-
-    "q7_volume_shipping" -> s"""
-      SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-             CAST(year(l.l_shipdate) AS INT) AS l_year,
-             sum(${c100("l.l_extendedprice")} * ${c100("(1 - l.l_discount)")})
-               / CAST(10000 AS DOUBLE) AS revenue
-      FROM lineitem l
-      JOIN orders o   ON l.l_orderkey = o.o_orderkey
-      JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      JOIN nation sn  ON s.s_nationkey = sn.n_nationkey
-      JOIN customer c ON o.o_custkey = c.c_custkey
-      JOIN nation cn  ON c.c_nationkey = cn.n_nationkey
-      WHERE l.l_shipdate >= TIMESTAMP '1996-01-01'
-        AND l.l_shipdate <  TIMESTAMP '1998-01-01'
-        AND ((sn.n_name = 'NATION_6' AND cn.n_name = 'NATION_9')
-          OR (sn.n_name = 'NATION_9' AND cn.n_name = 'NATION_6'))
-      GROUP BY 1, 2, 3""",
-
-    "q8_market_share" -> s"""
-      SELECT CAST(year(o.o_orderdate) AS INT) AS o_year,
-             round(CAST(sum(CASE WHEN sn.n_name = 'NATION_7'
-                                 THEN ${c100("l.l_extendedprice")} * ${c100("(1 - l.l_discount)")}
-                                 ELSE 0 END) AS DOUBLE)
-                   / sum(${c100("l.l_extendedprice")} * ${c100("(1 - l.l_discount)")}),
-                   6) AS mkt_share
-      FROM lineitem l
-      JOIN part p     ON l.l_partkey = p.p_partkey AND p.p_type = 'PROMO'
-      JOIN orders o   ON l.l_orderkey = o.o_orderkey
-      JOIN customer c ON o.o_custkey = c.c_custkey
-      JOIN nation nc  ON c.c_nationkey = nc.n_nationkey
-      JOIN region r   ON nc.n_regionkey = r.r_regionkey AND r.r_name = 'ASIA'
-      JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      JOIN nation sn  ON s.s_nationkey = sn.n_nationkey
-      WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
-        AND o.o_orderdate <  TIMESTAMP '1998-01-01'
-      GROUP BY 1""",
-
-    "q10_returned_items" -> s"""
-      SELECT c.c_custkey, c.c_name, c.c_acctbal, n.n_name,
-             sum(${c100("l.l_extendedprice")} * ${c100("(1 - l.l_discount)")})
-               / CAST(10000 AS DOUBLE) AS revenue
-      FROM lineitem l
-      JOIN orders o   ON l.l_orderkey = o.o_orderkey
-      JOIN customer c ON o.o_custkey = c.c_custkey
-      JOIN nation n   ON c.c_nationkey = n.n_nationkey
-      WHERE o.o_orderdate >= TIMESTAMP '1996-07-01'
-        AND o.o_orderdate <  TIMESTAMP '1996-10-01'
-        AND l.l_returnflag = 'R'
-      GROUP BY 1, 2, 3, 4
-      ORDER BY revenue DESC, c.c_custkey ASC
-      LIMIT 20""",
-
-    "q13_customer_distribution" -> """
-      SELECT c_count, count(*) AS custdist FROM (
-        SELECT c.c_custkey, count(o.o_orderkey) AS c_count
-        FROM customer c LEFT JOIN orders o
-          ON c.c_custkey = o.o_custkey
-         AND o.o_orderpriority <> '4-NOT SPECIFIED'
-        GROUP BY 1)
-      GROUP BY 1""",
-
-    "q14_promo_effect" -> s"""
-      SELECT round(100.0 *
-               CAST(sum(CASE WHEN p.p_type = 'PROMO'
-                             THEN ${c100("l.l_extendedprice")} * ${c100("(1 - l.l_discount)")}
-                             ELSE 0 END) AS DOUBLE)
-               / sum(${c100("l.l_extendedprice")} * ${c100("(1 - l.l_discount)")}),
-               6) AS promo_revenue_pct
-      FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-      WHERE l.l_shipdate >= TIMESTAMP '1996-09-01'
-        AND l.l_shipdate <  TIMESTAMP '1996-10-01'""",
-
-    "q15_top_supplier" -> s"""
-      WITH rev AS (
-        SELECT l_suppkey,
-               sum(${c100("l_extendedprice")} * ${c100("(1 - l_discount)")}) AS r100
-        FROM lineitem
-        WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-          AND l_shipdate <  TIMESTAMP '1996-04-01'
-        GROUP BY 1)
-      SELECT s.s_suppkey, s.s_name, r100 / CAST(10000 AS DOUBLE) AS total_revenue
-      FROM rev JOIN supplier s ON rev.l_suppkey = s.s_suppkey
-      WHERE r100 = (SELECT max(r100) FROM rev)""",
-
-    "q16_supplier_diversity" -> """
-      SELECT p.p_brand, p.p_type, p.p_size,
-             count(DISTINCT l.l_suppkey) AS supplier_cnt
-      FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-      WHERE p.p_brand <> 'Brand#1' AND p.p_type <> 'PROMO'
-        AND p.p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
-        AND l.l_suppkey NOT IN
-            (SELECT s_suppkey FROM supplier WHERE s_acctbal < 600)
-      GROUP BY 1, 2, 3""",
-
-    "q17_small_qty_revenue" -> s"""
-      SELECT round(sum(p100) / 100.0 / 7.0, 2) AS avg_yearly FROM (
-        SELECT ${c100("l.l_extendedprice")} AS p100,
-               ${c100("l.l_quantity")} AS q100,
-               sum(${c100("l.l_quantity")})
-                 OVER (PARTITION BY l.l_partkey) AS sum_q100,
-               count(*) OVER (PARTITION BY l.l_partkey) AS n_li
-        FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-        WHERE p.p_brand = 'Brand#3' AND p.p_type = 'SMALL')
-      WHERE q100 * 5 * n_li < sum_q100""",
-
-    "q19_bracket_revenue" -> s"""
-      SELECT sum(${c100("l.l_extendedprice")} * ${c100("(1 - l.l_discount)")})
-               / CAST(10000 AS DOUBLE) AS revenue
-      FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-      WHERE (p.p_brand = 'Brand#3'  AND p.p_size BETWEEN 1 AND 5
-             AND l.l_quantity BETWEEN 1 AND 11)
-         OR (p.p_brand = 'Brand#13' AND p.p_size BETWEEN 1 AND 10
-             AND l.l_quantity BETWEEN 10 AND 20)
-         OR (p.p_brand = 'Brand#23' AND p.p_size BETWEEN 1 AND 15
-             AND l.l_quantity BETWEEN 20 AND 30)""",
-
-    "q22_idle_balance" -> s"""
-      WITH pos AS (
-        SELECT sum(${c100("c_acctbal")}) AS sum100, count(*) AS n
-        FROM customer WHERE ${c100("c_acctbal")} > 0)
-      SELECT c.c_nationkey, count(*) AS numcust,
-             sum(${c100("c.c_acctbal")}) / CAST(100 AS DOUBLE) AS totacctbal
-      FROM customer c, pos
-      WHERE ${c100("c.c_acctbal")} * pos.n > pos.sum100
-        AND NOT EXISTS (SELECT 1 FROM orders o
-                        WHERE o.o_custkey = c.c_custkey
-                          AND o.o_orderpriority = '1-URGENT')
-      GROUP BY 1""",
-
-    "lateral_top_orders" -> """
-      SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
-      FROM customer c
-      JOIN LATERAL (
-        SELECT o_orderkey, o_totalprice
-        FROM orders x
-        WHERE x.o_custkey = c.c_custkey
-        ORDER BY o_totalprice DESC, o_orderkey ASC
-        LIMIT 2) o ON true
-      WHERE c.c_mktsegment = 'BUILDING'""",
-
-    "scalar_subquery_max_qty" -> """
-      SELECT o.o_orderkey,
-             (SELECT CAST(round(max(l.l_quantity) * 100) AS BIGINT)
-              FROM lineitem l
-              WHERE l.l_orderkey = o.o_orderkey) AS max_qty100
-      FROM orders o
-      WHERE o.o_orderpriority = '1-URGENT'""",
-
-    "q2_min_cost_supplier" -> s"""
-      WITH l AS (
-        SELECT p.p_partkey, p.p_brand, p.p_size, li.l_suppkey,
-               ${c100("li.l_extendedprice")} AS p100,
-               ${c100("li.l_quantity")} AS q100
-        FROM lineitem li JOIN part p ON li.l_partkey = p.p_partkey
-        WHERE p.p_type = 'SMALL' AND p.p_size BETWEEN 10 AND 20),
-      r AS (
-        SELECT *, row_number() OVER (PARTITION BY p_partkey
-                 ORDER BY CAST(p100 AS DOUBLE) / q100, l_suppkey) AS rk,
-               min(CAST(p100 AS DOUBLE) / q100)
-                 OVER (PARTITION BY p_partkey) AS mn
-        FROM l)
-      SELECT r.p_partkey, r.p_brand, r.p_size, r.l_suppkey AS s_suppkey,
-             s.s_name, round(r.mn, 6) AS min_unit_price
-      FROM r JOIN supplier s ON r.l_suppkey = s.s_suppkey
-      WHERE r.rk = 1""",
-
-    "q9_profit_by_nation" -> s"""
-      SELECT n.n_name AS nation, CAST(year(o.o_orderdate) AS INT) AS o_year,
-             sum(${c100("l.l_extendedprice")} * ${c100("(1 - l.l_discount)")}
-                 - ${c100("p.p_retailprice")} * ${c100("l.l_quantity")})
-               / CAST(10000 AS DOUBLE) AS profit
-      FROM lineitem l
-      JOIN part p     ON l.l_partkey = p.p_partkey AND p.p_name LIKE '%a%'
-      JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      JOIN nation n   ON s.s_nationkey = n.n_nationkey
-      JOIN orders o   ON l.l_orderkey = o.o_orderkey
-      GROUP BY 1, 2""",
-
-    "q11_important_parts" -> s"""
-      WITH pp AS (
-        SELECT l.l_partkey AS p_partkey,
-               sum(${c100("l.l_extendedprice")} * ${c100("l.l_quantity")}) AS v10k
-        FROM lineitem l
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        JOIN nation n   ON s.s_nationkey = n.n_nationkey
-         AND n.n_name = 'NATION_3'
-        GROUP BY 1),
-      t AS (SELECT sum(v10k) AS total10k FROM pp)
-      SELECT pp.p_partkey, pp.v10k / CAST(10000 AS DOUBLE) AS value
-      FROM pp, t
-      WHERE pp.v10k * 1000 > t.total10k""",
-
-    "q12_priority_shipping" -> """
-      SELECT l.l_linestatus,
-             CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                           THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-             CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                           THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-      WHERE l.l_shipdate >= TIMESTAMP '1996-01-01'
-        AND l.l_shipdate <  TIMESTAMP '1997-01-01'
-      GROUP BY 1""",
-
-    "q20_excess_shippers" -> s"""
-      SELECT s.s_suppkey, s.s_name, s.s_acctbal
-      FROM supplier s
-      JOIN nation n ON s.s_nationkey = n.n_nationkey AND n.n_name = 'NATION_9'
-      WHERE s.s_suppkey IN (
-        SELECT l.l_suppkey
-        FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-        WHERE p.p_type = 'SMALL'
-          AND l.l_shipdate >= TIMESTAMP '1996-01-01'
-          AND l.l_shipdate <  TIMESTAMP '1997-01-01'
-        GROUP BY 1
-        HAVING sum(${c100("l.l_quantity")}) > 10000)""",
-
-    "q21_sole_suppliers" -> """
-      WITH po AS (
-        SELECT l.l_orderkey, count(*) AS n_lines,
-               count(DISTINCT l.l_suppkey) AS n_supps,
-               max(l.l_suppkey) AS the_supp
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-         AND o.o_orderstatus = 'F'
-        GROUP BY 1)
-      SELECT the_supp AS s_suppkey, count(*) AS numwait
-      FROM po WHERE n_lines > 1 AND n_supps = 1
-      GROUP BY 1""",
-
-    // the salted two-stage aggregation must equal the plain GROUP BY
-    "events_salted_agg" -> s"""
-      SELECT event_type, count(*) AS n,
-             sum(${c100("value")})/100.0 AS sum_value
-      FROM events GROUP BY 1""",
-
-    // the PLAIN join — the Bloom prune must not change the answer
-    "orders_bloom_pruned_join" -> s"""
-      SELECT strftime(CAST(o.o_orderdate AS DATE), '%Y-%m-%d') AS day,
-             count(*) AS n_lines,
-             sum(${c100("l.l_extendedprice")}) / 100.0 AS revenue
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-      WHERE o.o_orderpriority = '1-URGENT'
-        AND o.o_orderdate >= TIMESTAMP '1998-06-01'
-      GROUP BY 1""",
-
-    // bucketing is pure physical layout: the oracle is the plain join
-    "orders_bucketed_join" -> s"""
-      SELECT o_orderpriority, count(*) AS n_lines,
-             sum(${c100("l_extendedprice")}) / 100.0 AS revenue
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      GROUP BY 1""",
-
-    // the dim-filtered pruning join collapses to a direct quarter
-    // filter over the unpartitioned source rows (same rows by
-    // construction of the partitioned artifact)
-    "orders_dpp_pruned" -> s"""
-      SELECT strftime(CAST(o_orderdate AS DATE), '%Y-%m') AS o_month,
-             count(*) AS n_orders,
-             sum(${c100("o_totalprice")}) / 100.0 AS revenue
-      FROM orders
-      WHERE year(o_orderdate) = 1996 AND quarter(o_orderdate) = 1
-      GROUP BY 1""",
-
-    // bit-exact replay of the Morton interleave, generated term-by-term
-    "layout_zorder_stats" -> ScaleTechniques.zorderOracleSql(),
-    "layout_hilbert_stats" -> ScaleTechniques.hilbertOracleSql(),
-    "layout_curve_read_amp" -> ScaleTechniques.curveReadAmpOracleSql(),
-
-    // the interleaved-layout answer to the tradeoff matrix: box
-    // predicate on all four layouts, zorder replayed term-by-term
-    "layout_zorder_box" -> ScaleTechniques.zorderBoxOracleSql(),
-    // pruning changes I/O, never results: the plain filtered rollup
-    "layout_zorder_dpp" -> ScaleTechniques.zorderDppOracleSql(),
-    "layout_hilbert_dpp" -> ScaleTechniques.hilbertDppOracleSql(),
-
-    // zone-map replay: same epoch-day band, same 4096-row file model
-    // under both total orders (row_number = the rank primitive's value)
-    "layout_minmax_skipping" -> """
-      WITH li AS (SELECT l_orderkey, l_linenumber,
-                    epoch_us(l_shipdate) // 86400000000 AS epday
-                  FROM lineitem),
-      m AS (SELECT CAST(sum(CASE WHEN epday BETWEEN 9190 AND 9220
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_match FROM li),
-      rn AS (SELECT epday,
-               row_number() OVER (ORDER BY l_orderkey, l_linenumber) AS grk
-             FROM li),
-      fn AS (SELECT (grk - 1) // 4096 AS fid, min(epday) AS mn,
-               max(epday) AS mx, count(*) AS c FROM rn GROUP BY 1),
-      rs AS (SELECT epday,
-               row_number() OVER (ORDER BY epday, l_orderkey, l_linenumber)
-                 AS grk
-             FROM li),
-      fs AS (SELECT (grk - 1) // 4096 AS fid, min(epday) AS mn,
-               max(epday) AS mx, count(*) AS c FROM rs GROUP BY 1),
-      a AS (
-        SELECT 'natural' AS layout, CAST(count(*) AS BIGINT) AS n_files,
-               CAST(sum(CASE WHEN mx < 9190 OR mn > 9220 THEN 1 ELSE 0 END)
-                 AS BIGINT) AS n_skipped,
-               CAST(sum(CASE WHEN mx >= 9190 AND mn <= 9220 THEN c ELSE 0
-                 END) AS BIGINT) AS n_rows_scanned
-        FROM fn
-        UNION ALL
-        SELECT 'shipdate_sorted', CAST(count(*) AS BIGINT),
-               CAST(sum(CASE WHEN mx < 9190 OR mn > 9220 THEN 1 ELSE 0 END)
-                 AS BIGINT),
-               CAST(sum(CASE WHEN mx >= 9190 AND mn <= 9220 THEN c ELSE 0
-                 END) AS BIGINT)
-        FROM fs)
-      SELECT layout, n_files, n_skipped,
-             n_skipped * 1000 // n_files AS skip_permille,
-             n_rows_scanned, n_match
-      FROM a CROSS JOIN m""",
-
-    // layout tradeoff replay: same three row_number layouts, one
-    // dual-key envelope rollup per layout, two conditional-sum legs
-    "layout_tradeoff_matrix" -> """
-      WITH li AS (SELECT l_orderkey, l_linenumber,
-                    epoch_us(l_shipdate) // 86400000000 AS epday,
-                    CAST(l_suppkey AS BIGINT) AS supp
-                  FROM lineitem),
-      m AS (SELECT CAST(sum(CASE WHEN epday BETWEEN 9190 AND 9220
-                     THEN 1 ELSE 0 END) AS BIGINT) AS m_date,
-                   CAST(sum(CASE WHEN supp BETWEEN 0 AND 9
-                     THEN 1 ELSE 0 END) AS BIGINT) AS m_supp
-            FROM li),
-      rn AS (SELECT epday, supp,
-               row_number() OVER (ORDER BY l_orderkey, l_linenumber) AS grk
-             FROM li),
-      rd AS (SELECT epday, supp,
-               row_number() OVER (ORDER BY epday, l_orderkey, l_linenumber)
-                 AS grk
-             FROM li),
-      rs AS (SELECT epday, supp,
-               row_number() OVER (ORDER BY supp, l_orderkey, l_linenumber)
-                 AS grk
-             FROM li),
-      env AS (
-        SELECT 'natural' AS layout, (grk - 1) // 4096 AS fid,
-               min(epday) AS dmn, max(epday) AS dmx,
-               min(supp) AS smn, max(supp) AS smx, count(*) AS c
-        FROM rn GROUP BY 1, 2
-        UNION ALL
-        SELECT 'shipdate_sorted', (grk - 1) // 4096,
-               min(epday), max(epday), min(supp), max(supp), count(*)
-        FROM rd GROUP BY 1, 2
-        UNION ALL
-        SELECT 'supplier_sorted', (grk - 1) // 4096,
-               min(epday), max(epday), min(supp), max(supp), count(*)
-        FROM rs GROUP BY 1, 2),
-      a AS (
-        SELECT layout, 'date_band' AS predicate,
-               CAST(count(*) AS BIGINT) AS n_files,
-               CAST(sum(CASE WHEN dmx < 9190 OR dmn > 9220 THEN 1 ELSE 0
-                 END) AS BIGINT) AS n_skipped,
-               CAST(sum(CASE WHEN dmx >= 9190 AND dmn <= 9220 THEN c
-                 ELSE 0 END) AS BIGINT) AS n_rows_scanned
-        FROM env GROUP BY 1
-        UNION ALL
-        SELECT layout, 'supp_band', CAST(count(*) AS BIGINT),
-               CAST(sum(CASE WHEN smx < 0 OR smn > 9 THEN 1 ELSE 0 END)
-                 AS BIGINT),
-               CAST(sum(CASE WHEN smx >= 0 AND smn <= 9 THEN c ELSE 0 END)
-                 AS BIGINT)
-        FROM env GROUP BY 1)
-      SELECT layout, predicate, n_files, n_skipped,
-             n_skipped * 1000 // n_files AS skip_permille, n_rows_scanned,
-             CASE WHEN predicate = 'date_band' THEN m_date ELSE m_supp END
-               AS n_match
-      FROM a CROSS JOIN m""",
-
-    // holdout replay: same lag pairs, same argmax tie rule, same
-    // prior-only baseline, same integer permille
-    "events_markov_holdout" -> """
-      WITH o AS (SELECT user_id, event_type AS nxt,
-                        lag(event_type) OVER (PARTITION BY user_id
-                          ORDER BY ts, event_id) AS prev
-                 FROM events),
-      p AS (SELECT user_id, prev, nxt FROM o WHERE prev IS NOT NULL),
-      tr AS (SELECT prev, nxt FROM p WHERE user_id % 5 <> 4),
-      model AS (SELECT prev, nxt AS predicted FROM (
-                  SELECT prev, nxt, row_number() OVER (PARTITION BY prev
-                    ORDER BY count(*) DESC, nxt ASC) AS rk
-                  FROM tr GROUP BY prev, nxt)
-                WHERE rk = 1),
-      base AS (SELECT nxt AS base_pred FROM (
-                 SELECT nxt, row_number() OVER (
-                   ORDER BY count(*) DESC, nxt ASC) AS rk
-                 FROM tr GROUP BY nxt)
-               WHERE rk = 1)
-      SELECT p.prev AS from_type, m.predicted,
-             count(*) AS n_test,
-             CAST(sum(CASE WHEN p.nxt = m.predicted THEN 1 ELSE 0 END)
-               AS BIGINT) AS n_correct,
-             CAST(sum(CASE WHEN p.nxt = m.predicted THEN 1 ELSE 0 END)
-               * 1000 // count(*) AS BIGINT) AS acc_permille,
-             CAST(sum(CASE WHEN p.nxt = b.base_pred THEN 1 ELSE 0 END)
-               * 1000 // count(*) AS BIGINT) AS baseline_permille
-      FROM p JOIN model m ON p.prev = m.prev CROSS JOIN base b
-      WHERE p.user_id % 5 = 4
-      GROUP BY 1, 2""",
-
-    "events_type_transitions" -> """
-      WITH o AS (SELECT user_id, event_type,
-                        lag(event_type) OVER (PARTITION BY user_id
-                          ORDER BY ts, event_id) AS prev
-                 FROM events)
-      SELECT prev AS from_type, event_type AS to_type, count(*) AS n,
-             round(count(*) / (sum(count(*)) OVER (PARTITION BY prev)), 6) AS p
-      FROM o WHERE prev IS NOT NULL GROUP BY prev, event_type""",
-
-    // integer-cleared CUSUM replay: S' = n*cumsum - t*total, all BIGINT
-    "events_cusum_changepoint" -> s"""
-      WITH daily AS (SELECT event_type, (epoch_us(ts) // 86400000000) AS day,
-                            CAST(sum(${c100("value")}) AS BIGINT) AS dc
-                     FROM events GROUP BY 1, 2),
-      tot AS (SELECT event_type, CAST(sum(dc) AS BIGINT) AS sx, count(*) AS nd
-              FROM daily GROUP BY 1),
-      sc AS (SELECT d.event_type, d.day, tt.nd, tt.sx,
-                    row_number() OVER (PARTITION BY d.event_type
-                      ORDER BY d.day) AS ti,
-                    sum(d.dc) OVER (PARTITION BY d.event_type ORDER BY d.day
-                      ROWS UNBOUNDED PRECEDING) AS cum
-             FROM daily d JOIN tot tt USING (event_type)),
-      s2 AS (SELECT event_type, day, nd, (nd * cum - ti * sx) AS s FROM sc),
-      pick AS (SELECT event_type, day, nd, s,
-                      row_number() OVER (PARTITION BY event_type
-                        ORDER BY abs(s) DESC, day) AS rk FROM s2)
-      SELECT event_type, day AS change_day,
-             round(abs(s) / (nd * 100.0), 6) AS peak_dev
-      FROM pick WHERE rk = 1""",
-
-    // identical ln-moment OLS over the same (freq desc, token) top-N
-    "text_zipf_fit" -> """
-      WITH f AS (SELECT w AS t, count(*) AS f
-                 FROM (SELECT unnest(string_split(text, ' ')) AS w
-                       FROM documents)
-                 GROUP BY 1),
-      r AS (SELECT f, row_number() OVER (ORDER BY f DESC, t) AS rk
-            FROM f ORDER BY f DESC, t LIMIT 200),
-      m AS (SELECT count(*) AS n, sum(ln(rk)) AS sx, sum(ln(f)) AS sy,
-                   sum(ln(rk) * ln(rk)) AS sxx, sum(ln(rk) * ln(f)) AS sxy
-            FROM r)
-      SELECT CAST(n AS BIGINT) AS n_ranks,
-             round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS slope,
-             round((sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx)
-               / n, 6) AS intercept
-      FROM m""",
-
-    "events_pattern_match" -> """
-      WITH s AS (
-        SELECT user_id, count(*) AS n_events,
-               string_agg(substr(event_type, 1, 1), '' ORDER BY ts, event_id)
-                 AS seq
-        FROM events GROUP BY user_id)
-      SELECT user_id, n_events,
-             CAST(len(regexp_extract_all(seq, 'v+p')) AS BIGINT)
-               AS n_conversions,
-             CAST(list_max(list_transform(regexp_extract_all(seq, 'v+'),
-               x -> len(x))) AS BIGINT) AS max_view_run
-      FROM s""",
-
-    "events_quantiles" -> s"""
-      SELECT event_type,
-             round(quantile_cont(${c100("value")}, 0.5) / 100.0, 6) AS p50,
-             round(quantile_cont(${c100("value")}, 0.9) / 100.0, 6) AS p90,
-             max(${c100("value")}) / 100.0 AS max_value
-      FROM events GROUP BY 1""",
-
-    // same fixed-width binning, cumulative ranks, and integer ceil-div
-    // rank targets as the engine — all integer until the final /100.0
-    "events_quantiles_hist" -> s"""
-      WITH hb AS (SELECT event_type,
-                         CAST(floor(${c100("value")} / 500.0) AS BIGINT) AS b
-                  FROM events),
-      g AS (SELECT event_type, b, count(*) AS n FROM hb GROUP BY 1, 2),
-      c AS (SELECT *,
-              sum(n) OVER (PARTITION BY event_type ORDER BY b) AS cum,
-              sum(n) OVER (PARTITION BY event_type) AS total
-            FROM g),
-      r AS (SELECT *, (total + 1) // 2 AS r50, (9 * total + 9) // 10 AS r90
-            FROM c)
-      SELECT event_type,
-             min(CASE WHEN cum >= r50 THEN b END) * 500 / 100.0 AS p50_lo,
-             (min(CASE WHEN cum >= r50 THEN b END) + 1) * 500 / 100.0 AS p50_hi,
-             min(CASE WHEN cum >= r90 THEN b END) * 500 / 100.0 AS p90_lo,
-             (min(CASE WHEN cum >= r90 THEN b END) + 1) * 500 / 100.0 AS p90_hi
-      FROM r GROUP BY 1""",
-
-    // identical histogram state + in-bucket linear interpolation:
-    // exact integers until one fixed-order double division per type
-    "events_quantiles_sketch" -> s"""
-      WITH hb AS (SELECT event_type, ${c100("value")} AS c FROM events),
-      g AS (SELECT event_type, CAST(floor(c / 500.0) AS BIGINT) AS b,
-                   count(*) AS n, max(c) AS mx
-            FROM hb GROUP BY 1, 2),
-      c2 AS (SELECT *,
-               sum(n) OVER (PARTITION BY event_type ORDER BY b) AS cum,
-               sum(n) OVER (PARTITION BY event_type) AS total
-             FROM g),
-      r AS (SELECT *, (total + 1) // 2 AS r50, (9 * total + 9) // 10 AS r90
-            FROM c2)
-      SELECT event_type,
-             min(CASE WHEN cum >= r50 AND cum - n < r50 THEN
-               round((CAST(b * 500 AS DOUBLE)
-                 + CAST((r50 - cum + n) * 500 AS DOUBLE) / CAST(n AS DOUBLE))
-                 / 100.0, 6) END) AS p50,
-             min(CASE WHEN cum >= r90 AND cum - n < r90 THEN
-               round((CAST(b * 500 AS DOUBLE)
-                 + CAST((r90 - cum + n) * 500 AS DOUBLE) / CAST(n AS DOUBLE))
-                 / 100.0, 6) END) AS p90,
-             max(mx) / 100.0 AS max_value
-      FROM r GROUP BY 1""",
-
-    "events_enriched_streamed" -> s"""
-      WITH c AS (SELECT user_id,
-                        strftime(min(CAST(ts AS DATE)), '%Y-%m-%d') AS cohort
-                 FROM events GROUP BY 1)
-      SELECT cohort, count(*) AS n,
-             sum(${c100("value")}) / 100.0 AS sum_value
-      FROM events JOIN c USING (user_id)
-      GROUP BY 1""",
-
-    "events_expectations" -> eventsExpectationsOracle,
-    "events_expectations_streamed" -> eventsExpectationsOracle,
-
-    "events_lag_features" -> s"""
-      WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
-                            sum(${c100("value")}) AS s
-                     FROM events GROUP BY 1, 2),
-      d2 AS (SELECT *, date_diff('day', DATE '1970-01-01', day) AS epday
-             FROM daily)
-      SELECT event_type, strftime(day, '%Y-%m-%d') AS day,
-             s / 100.0 AS y,
-             max(s) OVER a1 / 100.0 AS lag1,
-             max(s) OVER a7 / 100.0 AS lag7,
-             round(CAST(sum(s) OVER t AS DOUBLE)
-               / (count(s) OVER t) / 100.0, 6) AS trail7_mean
-      FROM d2
-      WINDOW a1 AS (PARTITION BY event_type ORDER BY epday
-                    RANGE BETWEEN 1 PRECEDING AND 1 PRECEDING),
-             a7 AS (PARTITION BY event_type ORDER BY epday
-                    RANGE BETWEEN 7 PRECEDING AND 7 PRECEDING),
-             t AS (PARTITION BY event_type ORDER BY epday
-                   RANGE BETWEEN 7 PRECEDING AND 1 PRECEDING)""",
-
-    "events_rolling_7d" -> s"""
-      WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
-                            count(*) AS n, sum(${c100("value")}) AS s
-                     FROM events GROUP BY 1, 2),
-      d2 AS (SELECT *, date_diff('day', DATE '1970-01-01', day) AS epday
-             FROM daily)
-      SELECT event_type, strftime(day, '%Y-%m-%d') AS day, n,
-             s / 100.0 AS sum_value,
-             sum(s) OVER w / 100.0 AS roll7_sum,
-             round(CAST(sum(s) OVER w AS DOUBLE) / (sum(n) OVER w) / 100.0, 6)
-               AS roll7_avg_event
-      FROM d2
-      WINDOW w AS (PARTITION BY event_type ORDER BY epday
-                   RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)""",
-
-    "events_state_islands" -> """
-      WITH e AS (SELECT user_id, event_type, event_id, epoch_us(ts) AS us
-                 FROM events),
-      f AS (SELECT *, CASE WHEN lag(event_type) OVER w IS NULL
-                             OR lag(event_type) OVER w <> event_type
-                           THEN 1 ELSE 0 END AS chg
-            FROM e
-            WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-      i AS (SELECT *, sum(chg) OVER (PARTITION BY user_id ORDER BY us, event_id
-                        ROWS UNBOUNDED PRECEDING) AS island
-            FROM f)
-      SELECT user_id, CAST(island AS BIGINT) AS island,
-             min(event_type) AS event_type,
-             min(us) AS start_us, max(us) AS end_us, count(*) AS n_events
-      FROM i GROUP BY user_id, island""",
-
-    "events_histogram" -> s"""
-      SELECT event_type,
-             CAST(floor(CAST(${c100("value")} AS DOUBLE) / 5000) AS BIGINT)
-               AS bucket,
-             CAST(floor(CAST(${c100("value")} AS DOUBLE) / 5000) AS BIGINT)
-               * 5000 / 100.0 AS lo_value,
-             count(*) AS n
-      FROM events GROUP BY 1, 2, 3""",
-
-    // the mean is assembled from exact pieces (BIGINT in-range sum +
-    // clamp-count × bound) in one fixed-association double expression —
-    // no cross-row float accumulation to diverge between engines
-    "events_winsorized" -> s"""
-      WITH e AS (SELECT event_type, ${c100("value")} AS c FROM events),
-      b AS (SELECT event_type, quantile_cont(c, 0.05) AS blo,
-                   quantile_cont(c, 0.95) AS bhi FROM e GROUP BY 1)
-      SELECT event_type, count(*) AS n,
-             round((sum(CASE WHEN c >= blo AND c <= bhi THEN c ELSE 0 END)
-                    + sum(CASE WHEN c < blo THEN 1 ELSE 0 END) * blo
-                    + sum(CASE WHEN c > bhi THEN 1 ELSE 0 END) * bhi)
-                   / count(*) / 100.0, 6) AS wmean
-      FROM e JOIN b USING (event_type) GROUP BY event_type, blo, bhi""",
-
-    // same first-occurrence-flag construction (DuckDB CAN window a
-    // DISTINCT count, but per-frame re-dedup is the plan that dies at
-    // scale — both engines run the flag + running-sum form instead)
-    "events_cumulative_distinct" -> """
-      WITH tud AS (SELECT DISTINCT event_type, user_id,
-                          CAST(ts AS DATE) AS day FROM events),
-      f AS (SELECT event_type, day,
-                   CASE WHEN row_number() OVER
-                     (PARTITION BY event_type, user_id ORDER BY day) = 1
-                     THEN 1 ELSE 0 END AS is_first
-            FROM tud),
-      d AS (SELECT event_type, day, sum(is_first) AS new_users,
-                   count(*) AS active_users
-            FROM f GROUP BY 1, 2)
-      SELECT event_type, strftime(day, '%Y-%m-%d') AS day,
-             CAST(new_users AS BIGINT) AS new_users, active_users,
-             CAST(sum(new_users) OVER
-               (PARTITION BY event_type ORDER BY day
-                ROWS UNBOUNDED PRECEDING) AS BIGINT)
-               AS cum_distinct_users
-      FROM d""",
-
-    // identical integer products and single divisions on both engines
-    // MERGE DELETE replay: the remaining relation is the key filter
-    "orders_merge_delete" -> """
-      SELECT CAST(count(*) AS BIGINT) AS n_rows,
-             CAST(sum(CASE WHEN o_orderkey % 500 = 0 THEN 1 ELSE 0 END)
-               AS BIGINT) AS n_deleted_present,
-             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-               AS BIGINT) AS total_cents
-      FROM orders WHERE o_orderkey % 500 <> 0""",
-
-    // MERGE replay: merged relation reconstructed relationally — every
-    // 500th order re-priced to cents*11 div 10 with a sentinel status,
-    // a clone appended per update, untouched rows carried through
-    "orders_merge_upsert" -> """
-      WITH up AS (SELECT o_orderkey,
-                    (CAST(round(o_totalprice * 100) AS BIGINT) * 11) // 10
-                      AS nc
-                  FROM orders WHERE o_orderkey % 500 = 0),
-      m AS (SELECT CASE WHEN o.o_orderkey % 500 = 0 THEN up.nc
-                        ELSE CAST(round(o.o_totalprice * 100) AS BIGINT)
-                   END AS c,
-                   CASE WHEN o.o_orderkey % 500 = 0 THEN 'U!'
-                        ELSE o.o_orderstatus END AS st
-            FROM orders o LEFT JOIN up ON up.o_orderkey = o.o_orderkey
-            UNION ALL
-            SELECT nc, 'I!' FROM up)
-      SELECT CAST(count(*) AS BIGINT) AS n_rows,
-             CAST(sum(CASE WHEN st = 'U!' THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_updated,
-             CAST(sum(CASE WHEN st = 'I!' THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_inserted,
-             CAST(sum(c) AS BIGINT) AS total_cents
-      FROM m""",
-
-    // CDC apply replay: the composed end state (updates re-priced,
-    // clones appended, the disjoint every-700th set removed) plus the
-    // changelog's own action counts
-    "orders_cdc_apply_streamed" -> """
-      WITH up AS (SELECT o_orderkey AS k,
-                    (CAST(round(o_totalprice * 100) AS BIGINT) * 11) // 10
-                      AS nc
-                  FROM orders WHERE o_orderkey % 500 = 0),
-      kept AS (SELECT CASE WHEN o_orderkey % 500 = 0
-                        THEN (CAST(round(o_totalprice * 100) AS BIGINT) * 11)
-                             // 10
-                        ELSE CAST(round(o_totalprice * 100) AS BIGINT)
-                      END AS c
-               FROM orders
-               WHERE NOT (o_orderkey % 700 = 0 AND o_orderkey % 500 <> 0)),
-      allr AS (SELECT c FROM kept UNION ALL SELECT nc FROM up),
-      nu AS (SELECT CAST(count(*) AS BIGINT) AS n FROM up),
-      nd AS (SELECT CAST(count(*) AS BIGINT) AS n FROM orders
-             WHERE o_orderkey % 700 = 0 AND o_orderkey % 500 <> 0)
-      SELECT CAST(count(*) AS BIGINT) AS n_rows,
-             (SELECT n FROM nu) AS n_updated,
-             (SELECT n FROM nu) AS n_inserted,
-             (SELECT n FROM nd) AS n_deleted,
-             CAST(sum(c) AS BIGINT) AS total_cents
-      FROM allr""",
-
-    // CDC compaction replay: the composed end table keyed (the snapshot
-    // holds keys, so buckets = occupied pmod-16 cells); versions folded
-    // = distinct pmod-4 staging chunks carrying at least one action
-    "orders_cdc_compacted" -> """
-      WITH up AS (SELECT o_orderkey AS k,
-                    (CAST(round(o_totalprice * 100) AS BIGINT) * 11) // 10
-                      AS nc
-                  FROM orders WHERE o_orderkey % 500 = 0),
-      fin AS (SELECT o_orderkey AS k,
-                     CASE WHEN o_orderkey % 500 = 0
-                       THEN (CAST(round(o_totalprice * 100) AS BIGINT) * 11)
-                            // 10
-                       ELSE CAST(round(o_totalprice * 100) AS BIGINT)
-                     END AS c
-              FROM orders
-              WHERE NOT (o_orderkey % 700 = 0 AND o_orderkey % 500 <> 0)
-              UNION ALL
-              SELECT -(k + 1), nc FROM up),
-      chunks AS (SELECT DISTINCT ((k0 % 4) + 4) % 4 AS ch FROM (
-                   SELECT o_orderkey AS k0 FROM orders
-                   WHERE o_orderkey % 500 = 0
-                   UNION ALL
-                   SELECT -(o_orderkey + 1) FROM orders
-                   WHERE o_orderkey % 500 = 0
-                   UNION ALL
-                   SELECT o_orderkey FROM orders
-                   WHERE o_orderkey % 700 = 0 AND o_orderkey % 500 <> 0))
-      SELECT CAST(count(*) AS BIGINT) AS n_rows,
-             CAST(count(DISTINCT ((k % 16) + 16) % 16) AS BIGINT)
-               AS n_buckets,
-             (SELECT CAST(count(*) AS BIGINT) FROM chunks)
-               AS n_versions_folded,
-             CAST(sum(c) AS BIGINT) AS total_cents
-      FROM fin""",
-
-    // IVM replay: the view re-aggregated from the composed end table
-    // from scratch — hash match proves delta maintenance == recompute
-    "orders_cdc_ivm_streamed" -> """
-      WITH up AS (SELECT o_orderkey AS k,
-                    (CAST(round(o_totalprice * 100) AS BIGINT) * 11) // 10
-                      AS nc
-                  FROM orders WHERE o_orderkey % 500 = 0),
-      fin AS (SELECT o_orderkey AS k,
-                     CASE WHEN o_orderkey % 500 = 0
-                       THEN (CAST(round(o_totalprice * 100) AS BIGINT) * 11)
-                            // 10
-                       ELSE CAST(round(o_totalprice * 100) AS BIGINT)
-                     END AS c
-              FROM orders
-              WHERE NOT (o_orderkey % 700 = 0 AND o_orderkey % 500 <> 0)
-              UNION ALL
-              SELECT -(k + 1), nc FROM up)
-      SELECT CAST(((k % 8) + 8) % 8 AS BIGINT) AS segment,
-             CAST(count(*) AS BIGINT) AS n_rows,
-             CAST(sum(c) AS BIGINT) AS total_cents
-      FROM fin GROUP BY 1""",
-
-    // time-travel replay: each version boundary's state reconstructed
-    // relationally — actions whose key-chunk ((|key| div 500) mod 4)
-    // <= v applied; v = -1 is the untouched base snapshot. An insert
-    // clone -(k+1) has |clone| = k+1 in the same 500-block as its
-    // update key k, so the pair always lands in one version.
-    "orders_cdc_timetravel" -> timeTravelSql,
-    // the MOR sidecar chain must resolve EVERY as-of boundary to the
-    // same state as the copy-on-write chain — one oracle, two physical
-    // strategies under the same gate
-    "orders_mor_timetravel" -> timeTravelSql,
-    // time travel THROUGH the minor fold: the retained boundaries
-    // (v >= 2, the foldK=3 high-water over the 4-chunk chain) must
-    // read back off the folded layout exactly as the pristine chain
-    // serves them — the same boundary reconstruction restricted to
-    // the retained window; fold_upto pins the fold horizon
-    "orders_mor_timetravel_folded" -> """
-      WITH vs AS (SELECT range AS v FROM range(2, 4)),
-      base AS (SELECT o_orderkey AS k,
-                      CAST(round(o_totalprice * 100) AS BIGINT) AS c
-               FROM orders),
-      st AS (
-        SELECT vs.v,
-               CASE WHEN b.k % 500 = 0 AND ((b.k // 500) % 4) <= vs.v
-                 THEN (b.c * 11) // 10 ELSE b.c END AS c
-        FROM vs, base b
-        WHERE NOT (b.k % 700 = 0 AND b.k % 500 <> 0
-                   AND ((b.k // 500) % 4) <= vs.v)
-        UNION ALL
-        SELECT vs.v, (b.c * 11) // 10 AS c
-        FROM vs, base b
-        WHERE b.k % 500 = 0 AND ((b.k // 500) % 4) <= vs.v)
-      SELECT CAST(v AS BIGINT) AS version,
-             CAST(count(*) AS BIGINT) AS n_rows,
-             CAST(sum(c) AS BIGINT) AS total_cents,
-             CAST(2 AS BIGINT) AS fold_upto
-      FROM st GROUP BY 1""",
-    // retention: the horizon boundary (v=1, served by the folded base
-    // alone) and every live version above it must read back exactly as
-    // the unexpired chain would serve them; the expired count (v0, v1)
-    // is the structural design pin of the keepFrom=2 horizon
-    "orders_cdc_expired" -> """
-      WITH vs AS (SELECT range AS v FROM range(1, 4)),
-      base AS (SELECT o_orderkey AS k,
-                      CAST(round(o_totalprice * 100) AS BIGINT) AS c
-               FROM orders),
-      st AS (
-        SELECT vs.v,
-               CASE WHEN b.k % 500 = 0 AND ((b.k // 500) % 4) <= vs.v
-                 THEN (b.c * 11) // 10 ELSE b.c END AS c
-        FROM vs, base b
-        WHERE NOT (b.k % 700 = 0 AND b.k % 500 <> 0
-                   AND ((b.k // 500) % 4) <= vs.v)
-        UNION ALL
-        SELECT vs.v, (b.c * 11) // 10 AS c
-        FROM vs, base b
-        WHERE b.k % 500 = 0 AND ((b.k // 500) % 4) <= vs.v)
-      SELECT CAST(v AS BIGINT) AS version,
-             CAST(count(*) AS BIGINT) AS n_rows,
-             CAST(sum(c) AS BIGINT) AS total_cents,
-             CAST(2 AS BIGINT) AS n_versions_expired
-      FROM st GROUP BY 1""",
-    // minor compaction: the end state survives the fold untouched
-    // (same composed-state core as the MOR family); the 8 -> 4
-    // sidecar fan-in drop is the structural design pin of the
-    // 4-chunk chain folded 3-oldest (2 consolidated + 2 remaining)
-    "orders_mor_minor_compacted" -> """
-      WITH up AS (SELECT o_orderkey AS k,
-                    (CAST(round(o_totalprice * 100) AS BIGINT) * 11) // 10
-                      AS nc
-                  FROM orders WHERE o_orderkey % 500 = 0),
-      kept AS (SELECT CASE WHEN o_orderkey % 500 = 0
-                        THEN (CAST(round(o_totalprice * 100) AS BIGINT) * 11)
-                             // 10
-                        ELSE CAST(round(o_totalprice * 100) AS BIGINT)
-                      END AS c
-               FROM orders
-               WHERE NOT (o_orderkey % 700 = 0 AND o_orderkey % 500 <> 0)),
-      allr AS (SELECT c FROM kept UNION ALL SELECT nc FROM up)
-      SELECT CAST(count(*) AS BIGINT) AS n_rows,
-             CAST(8 AS BIGINT) AS n_sidecars_before,
-             CAST(4 AS BIGINT) AS n_sidecars_after,
-             CAST(sum(c) AS BIGINT) AS total_cents
-      FROM allr""",
-    // the auto-compacting stream: same composed end state; the fold
-    // count (generations g0+g1 at maxLive=1 over 4 chunks) and the
-    // zero live-batch tail are the structural pins of repeated folds
-    "orders_mor_autocompact_streamed" -> """
-      WITH up AS (SELECT o_orderkey AS k,
-                    (CAST(round(o_totalprice * 100) AS BIGINT) * 11) // 10
-                      AS nc
-                  FROM orders WHERE o_orderkey % 500 = 0),
-      kept AS (SELECT CASE WHEN o_orderkey % 500 = 0
-                        THEN (CAST(round(o_totalprice * 100) AS BIGINT) * 11)
-                             // 10
-                        ELSE CAST(round(o_totalprice * 100) AS BIGINT)
-                      END AS c
-               FROM orders
-               WHERE NOT (o_orderkey % 700 = 0 AND o_orderkey % 500 <> 0)),
-      allr AS (SELECT c FROM kept UNION ALL SELECT nc FROM up)
-      SELECT CAST(count(*) AS BIGINT) AS n_rows,
-             CAST(2 AS BIGINT) AS n_folds,
-             CAST(0 AS BIGINT) AS n_live_batches,
-             CAST(sum(c) AS BIGINT) AS total_cents
-      FROM allr""",
-    // the BYTE-triggered twin (r13 verdict #3): count trigger inert at
-    // maxLive = 100, 1-byte budget — a fold per chunk (4 generations),
-    // zero live tail, identical composed end state
-    "orders_mor_autocompact_bytes" -> """
-      WITH up AS (SELECT o_orderkey AS k,
-                    (CAST(round(o_totalprice * 100) AS BIGINT) * 11) // 10
-                      AS nc
-                  FROM orders WHERE o_orderkey % 500 = 0),
-      kept AS (SELECT CASE WHEN o_orderkey % 500 = 0
-                        THEN (CAST(round(o_totalprice * 100) AS BIGINT) * 11)
-                             // 10
-                        ELSE CAST(round(o_totalprice * 100) AS BIGINT)
-                      END AS c
-               FROM orders
-               WHERE NOT (o_orderkey % 700 = 0 AND o_orderkey % 500 <> 0)),
-      allr AS (SELECT c FROM kept UNION ALL SELECT nc FROM up)
-      SELECT CAST(count(*) AS BIGINT) AS n_rows,
-             CAST(4 AS BIGINT) AS n_folds,
-             CAST(0 AS BIGINT) AS n_live_batches,
-             CAST(sum(c) AS BIGINT) AS total_cents
-      FROM allr""",
-
-    // merge-on-read replay: identical end state to the apply row (the
-    // strategies differ physically, never logically) plus the sidecar
-    // sizes — delete keys = updates' old images + deletes; insert rows
-    // = updates' new images + insert clones
-    "orders_merge_on_read" -> morEndStateSql,
-    // the streamed sidecar apply converges to the identical end state
-    "orders_mor_apply_streamed" -> morEndStateSql,
-    // the compacted snapshot alone must reconstruct the same end state
-    "orders_mor_compacted" -> morEndStateSql,
-
-
-    // CDC changelog replay: the update leg reads old cents off orders
-    // directly (the batch derives from orders, so the reconstruction
-    // needs no join); inserts are the -(k+1)-keyed clones; deletes the
-    // disjoint every-700th set — all values exact BIGINT cents
-    "orders_merge_changelog" -> """
-      WITH up AS (SELECT o_orderkey AS k,
-                    CAST(round(o_totalprice * 100) AS BIGINT) AS oc,
-                    (CAST(round(o_totalprice * 100) AS BIGINT) * 11) // 10
-                      AS nc
-                  FROM orders WHERE o_orderkey % 500 = 0)
-      SELECT k AS o_orderkey, 'update' AS action, oc AS old_cents,
-             nc AS new_cents
-      FROM up
-      UNION ALL
-      SELECT -(k + 1), 'insert', CAST(NULL AS BIGINT), nc FROM up
-      UNION ALL
-      SELECT o_orderkey, 'delete',
-             CAST(round(o_totalprice * 100) AS BIGINT),
-             CAST(NULL AS BIGINT)
-      FROM orders WHERE o_orderkey % 700 = 0 AND o_orderkey % 500 <> 0""",
-
-    "orders_market_basket" -> """
-      WITH ob AS (SELECT DISTINCT l.l_orderkey AS o, p.p_brand AS b
-                  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
-      n AS (SELECT count(DISTINCT o) AS total FROM ob),
-      item AS (SELECT b, count(*) AS n_item FROM ob GROUP BY 1),
-      pairs AS (SELECT x.b AS ba, y.b AS bb, count(*) AS n_ab
-                FROM ob x JOIN ob y ON x.o = y.o AND x.b < y.b
-                GROUP BY 1, 2)
-      SELECT ba, bb, n_ab,
-             round(CAST(n_ab AS DOUBLE) / a.n_item, 6) AS conf_ab,
-             round(CAST(n_ab * total AS DOUBLE)
-                   / (a.n_item * b2.n_item), 6) AS lift
-      FROM pairs
-      JOIN item a ON a.b = ba
-      JOIN item b2 ON b2.b = bb
-      CROSS JOIN n
-      WHERE n_ab >= 50""",
-
-    // lag over the identical daily rollup; pct is one division of
-    // exact cent sums
-    "events_day_over_day" -> s"""
-      WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
-                            sum(${c100("value")}) AS s, count(*) AS n
-                     FROM events GROUP BY 1, 2),
-      l AS (SELECT *, lag(s) OVER (PARTITION BY event_type ORDER BY day)
-                        AS prev_s
-            FROM daily)
-      SELECT event_type, strftime(day, '%Y-%m-%d') AS day, n,
-             s / 100.0 AS sum_value, prev_s / 100.0 AS prev_sum_value,
-             (s - prev_s) / 100.0 AS delta,
-             round(CAST(s - prev_s AS DOUBLE) / prev_s * 100.0, 6)
-               AS pct_change
-      FROM l""",
-
-    // same rollup + broadcast-dimension shape in plain SQL
-    "orders_customer_ltv" -> s"""
-      WITH a AS (SELECT o_custkey,
-                        count(*) AS n_orders,
-                        sum(${c100("o_totalprice")}) / 100.0 AS total_spend,
-                        round(CAST(sum(${c100("o_totalprice")}) AS DOUBLE)
-                              / count(*) / 100.0, 6) AS avg_order_value,
-                        min(CAST(date_diff('day', DATE '1970-01-01',
-                              CAST(o_orderdate AS DATE)) AS BIGINT))
-                          AS first_order_epday,
-                        max(CAST(date_diff('day', DATE '1970-01-01',
-                              CAST(o_orderdate AS DATE)) AS BIGINT))
-                          AS last_order_epday
-                 FROM orders GROUP BY 1)
-      SELECT a.o_custkey AS custkey, c.c_mktsegment, a.n_orders,
-             a.total_spend, a.avg_order_value, a.first_order_epday,
-             a.last_order_epday,
-             a.last_order_epday - a.first_order_epday AS tenure_days
-      FROM a JOIN customer c ON a.o_custkey = c.c_custkey""",
-
-    // exact-cents rollup, then global-order windows on the rollup only
-    "orders_revenue_pareto" -> s"""
-      WITH s AS (SELECT o_custkey AS custkey,
-                        CAST(sum(${c100("o_totalprice")}) AS BIGINT) AS cents
-                 FROM orders GROUP BY 1),
-      r AS (SELECT custkey, cents,
-                   row_number() OVER (ORDER BY cents DESC, custkey) AS rk,
-                   sum(cents) OVER (ORDER BY cents DESC, custkey
-                     ROWS UNBOUNDED PRECEDING) AS cum,
-                   sum(cents) OVER () AS tot
-            FROM s)
-      SELECT custkey, cents / 100.0 AS spend, CAST(rk AS BIGINT) AS rk,
-             round(cum / CAST(tot AS DOUBLE), 6) AS cum_share,
-             CASE WHEN round(cum / CAST(tot AS DOUBLE), 6) <= 0.8
-                  THEN 1 ELSE 0 END AS top80
-      FROM r""",
-
-    // unigram entropy/TTR replay (identical whitespace tokenization)
-    "text_word_entropy" -> """
-      WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-                   FROM documents),
-      c AS (SELECT doc_id, w, count(*) AS c FROM tok GROUP BY 1, 2),
-      n AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n,
-                   count(*) AS types FROM c GROUP BY 1)
-      SELECT doc_id, n AS n_tokens, CAST(types AS BIGINT) AS n_types,
-             round(types / CAST(n AS DOUBLE), 6) AS ttr,
-             round(-sum((c / CAST(n AS DOUBLE))
-               * ln(c / CAST(n AS DOUBLE))), 6) AS entropy
-      FROM c JOIN n USING (doc_id) GROUP BY doc_id, n, types""",
-
-    // the LTV CTE re-quartiled with identical custkey tie-breaks
-    // HHI replay: same cent revenue rollup, same picounit-quantized
-    // squared shares, same x10000 scaling and 2500 flag
-    "orders_supplier_hhi" -> """
-      WITH rev AS (SELECT p.p_type, l.l_suppkey,
-                     sum(CAST(round(l.l_extendedprice * 100) AS BIGINT))
-                       AS r
-                   FROM lineitem l JOIN part p
-                     ON l.l_partkey = p.p_partkey
-                   GROUP BY 1, 2),
-      tot AS (SELECT p_type, sum(r) AS t, count(*) AS ns
-              FROM rev GROUP BY 1),
-      q AS (SELECT rev.p_type, any_value(tot.ns) AS ns,
-              sum(CAST(round((CAST(rev.r AS DOUBLE) / tot.t)
-                * (CAST(rev.r AS DOUBLE) / tot.t)
-                * 1000000000000.0) AS BIGINT)) AS qsum
-            FROM rev JOIN tot USING (p_type) GROUP BY 1)
-      SELECT p_type, CAST(ns AS BIGINT) AS n_suppliers,
-             round(CAST(qsum AS DOUBLE) / 1000000000000.0 * 10000.0, 2)
-               AS hhi,
-             CASE WHEN round(CAST(qsum AS DOUBLE) / 1000000000000.0
-               * 10000.0, 2) > 2500.0 THEN 1 ELSE 0 END AS concentrated
-      FROM q""",
-
-    // aging replay: same epoch-day ages, same bucket bounds, exact
-    // cent sums divided once
-    "orders_backlog_aging" -> """
-      WITH o AS (SELECT o_orderstatus AS status,
-                   epoch_us(o_orderdate) // 86400000000 AS d,
-                   CAST(round(o_totalprice * 100) AS BIGINT) AS c
-                 FROM orders WHERE o_orderstatus IN ('O', 'P')),
-      mx AS (SELECT max(epoch_us(o_orderdate) // 86400000000) AS mx
-             FROM orders)
-      SELECT status,
-             CASE WHEN mx - d <= 30 THEN 'a_0_30'
-                  WHEN mx - d <= 90 THEN 'b_31_90'
-                  WHEN mx - d <= 365 THEN 'c_91_365'
-                  ELSE 'd_over_365' END AS age_bucket,
-             count(*) AS n_orders,
-             sum(c) / 100.0 AS open_value
-      FROM o CROSS JOIN mx GROUP BY 1, 2""",
-
-    "orders_rfm_segments" -> s"""
-      WITH a AS (SELECT o_custkey AS custkey,
-                        count(*) AS n_orders,
-                        sum(${c100("o_totalprice")}) / 100.0 AS total_spend,
-                        max(CAST(date_diff('day', DATE '1970-01-01',
-                              CAST(o_orderdate AS DATE)) AS BIGINT))
-                          AS last_order_epday
-                 FROM orders GROUP BY 1)
-      SELECT custkey, n_orders, total_spend, last_order_epday,
-             CAST(ntile(4) OVER (ORDER BY last_order_epday, custkey)
-                  AS INT) AS r,
-             CAST(ntile(4) OVER (ORDER BY n_orders, custkey) AS INT) AS f,
-             CAST(ntile(4) OVER (ORDER BY total_spend, custkey) AS INT) AS m,
-             CAST(ntile(4) OVER (ORDER BY last_order_epday, custkey) AS VARCHAR)
-               || CAST(ntile(4) OVER (ORDER BY n_orders, custkey) AS VARCHAR)
-               || CAST(ntile(4) OVER (ORDER BY total_spend, custkey) AS VARCHAR)
-               AS rfm
-      FROM a""",
-
-    // 16-byte hash distinct per source; one division of exact counts
-    "text_dup_rate_by_source" -> """
-      SELECT source, count(*) AS n_docs,
-             count(DISTINCT md5(text)) AS n_unique,
-             round(CAST(count(*) - count(DISTINCT md5(text)) AS DOUBLE)
-                   / count(*), 6) AS dup_rate
-      FROM documents GROUP BY 1""",
-
-    // same two rollups and single-op error arithmetic
-    "events_forecast_naive" -> s"""
-      WITH e AS (SELECT event_type, CAST(ts AS DATE) AS day,
-                        CAST(extract(hour FROM ts) AS INT) AS hod,
-                        ${c100("value")} AS c FROM events),
-      mx AS (SELECT max(day) AS dmax FROM e),
-      hist AS (SELECT event_type, hod, sum(c) AS s, count(*) AS n
-               FROM e, mx WHERE day < dmax GROUP BY 1, 2),
-      actual AS (SELECT event_type, hod, sum(c) AS sa, count(*) AS na
-                 FROM e, mx WHERE day = dmax GROUP BY 1, 2)
-      SELECT a.event_type, a.hod,
-             round(CAST(a.sa AS DOUBLE) / a.na / 100.0, 6) AS actual_avg,
-             round(CAST(h.s AS DOUBLE) / h.n / 100.0, 6) AS forecast_avg,
-             round(abs(round(CAST(a.sa AS DOUBLE) / a.na / 100.0, 6)
-                       - round(CAST(h.s AS DOUBLE) / h.n / 100.0, 6)), 6)
-               AS abs_err
-      FROM actual a JOIN hist h USING (event_type, hod)""",
-
-    // the card's scalars replayed as a UNION of aggregates
-    "pipeline_dataset_card" -> """
-      WITH d AS (SELECT doc_id, lang, source,
-                        len(string_split(text, ' ')) AS nw,
-                        md5(text) AS h FROM documents),
-      w AS (SELECT count(*) AS n_docs,
-                   count(DISTINCT lang) AS n_languages,
-                   count(DISTINCT source) AS n_sources,
-                   sum(nw) AS total_words,
-                   count(DISTINCT h) AS n_unique_texts FROM d)
-      SELECT 'n_docs' AS metric, CAST(n_docs AS DOUBLE) AS value FROM w
-      UNION ALL SELECT 'n_languages', CAST(n_languages AS DOUBLE) FROM w
-      UNION ALL SELECT 'n_sources', CAST(n_sources AS DOUBLE) FROM w
-      UNION ALL SELECT 'total_words', CAST(total_words AS DOUBLE) FROM w
-      UNION ALL SELECT 'exact_dup_docs',
-                       CAST(n_docs - n_unique_texts AS DOUBLE) FROM w
-      UNION ALL SELECT 'avg_words',
-                       round(CAST(total_words AS DOUBLE) / n_docs, 6)
-                       FROM w""",
-
-    // hour-of-day rollup; exact-sum average
-    "events_seasonality" -> s"""
-      SELECT event_type, CAST(extract(hour FROM ts) AS INT) AS hod,
-             count(*) AS n,
-             round(CAST(sum(${c100("value")}) AS DOUBLE) / count(*)
-                   / 100.0, 6) AS avg_value
-      FROM events GROUP BY 1, 2""",
-
-    // melt replayed as UNION ALL (the portable unpivot)
-    "unpivot_lineitem_measures" -> {
-      val wide = s"""SELECT l_returnflag,
-          sum(${c100("l_quantity")}) / 100.0 AS sum_qty,
-          sum(${c100("l_extendedprice")}) / 100.0 AS sum_price,
-          sum(${c100("l_discount")}) / 100.0 AS sum_disc
-        FROM lineitem GROUP BY 1"""
-      s"""WITH w AS ($wide)
-          SELECT l_returnflag, 'sum_qty' AS measure, sum_qty AS value FROM w
-          UNION ALL
-          SELECT l_returnflag, 'sum_price', sum_price FROM w
-          UNION ALL
-          SELECT l_returnflag, 'sum_disc', sum_disc FROM w"""
-    },
-
-    // open/close via first_value/last_value under the same total
-    // (us, event_id) order the Spark min_by/max_by struct key uses;
-    // all four prices are selected cent values — no float accumulation
-    "events_ohlc" -> s"""
-      WITH e AS (SELECT event_type, epoch_us(ts) AS us, event_id,
-                        ${c100("value")} AS c FROM events),
-      h AS (SELECT *, CAST(floor(CAST(us AS DOUBLE) / 3600000000.0)
-                           AS BIGINT) AS hour FROM e),
-      w AS (SELECT event_type, hour, c,
-                   first_value(c) OVER
-                     (PARTITION BY event_type, hour ORDER BY us, event_id)
-                     AS o,
-                   last_value(c) OVER
-                     (PARTITION BY event_type, hour ORDER BY us, event_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND UNBOUNDED FOLLOWING) AS cl
-            FROM h)
-      SELECT event_type, hour, min(o) / 100.0 AS open,
-             max(c) / 100.0 AS high, min(c) / 100.0 AS low,
-             min(cl) / 100.0 AS close, count(*) AS n
-      FROM w GROUP BY event_type, hour""",
-
-    // z-scores from exact BIGINT moment sums; the z expression below is
-    // associated EXACTLY like the Spark column (same IEEE op order), so
-    // the unrounded > 2.5 comparison agrees bit-for-bit
-    "events_anomaly_zscore" -> s"""
-      WITH e AS (SELECT event_type, event_id, ${c100("value")} AS c
-                 FROM events),
-      st AS (SELECT event_type, count(*) AS n, sum(c) AS s,
-                    sum(c * c) AS ss FROM e GROUP BY 1)
-      SELECT event_type, event_id, c / 100.0 AS value,
-             round((CAST(c AS DOUBLE) * n - s)
-                   / (CAST(n AS DOUBLE)
-                      * sqrt((CAST(ss AS DOUBLE) * n - CAST(s AS DOUBLE) * s)
-                             / (CAST(n AS DOUBLE) * (n - 1)))), 6) AS z
-      FROM e JOIN st USING (event_type)
-      WHERE abs((CAST(c AS DOUBLE) * n - s)
-                / (CAST(n AS DOUBLE)
-                   * sqrt((CAST(ss AS DOUBLE) * n - CAST(s AS DOUBLE) * s)
-                          / (CAST(n AS DOUBLE) * (n - 1))))) > 2.5""",
-
-    // the same n-cleared integer moments; HUGEINT carries what Spark
-    // holds in DECIMAL(38,0)
-    "events_autocorrelation" -> s"""
-      WITH daily AS (SELECT event_type,
-                            CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT)
-                              AS day,
-                            ${c100("value")} AS c
-                     FROM events),
-      d2 AS (SELECT event_type, day, sum(c) AS dc
-             FROM daily GROUP BY 1, 2),
-      idx AS (SELECT event_type,
-                     CAST(row_number() OVER (PARTITION BY event_type
-                       ORDER BY day) AS BIGINT) AS i,
-                     CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT)
-                       AS n,
-                     CAST(sum(dc) OVER (PARTITION BY event_type) AS BIGINT)
-                       AS s,
-                     dc
-              FROM d2),
-      dd AS (SELECT event_type, i, n,
-                    CAST(n * dc - s AS HUGEINT) AS d
-             FROM idx),
-      den AS (SELECT event_type, sum(d * d) AS den, max(n) AS n_days
-              FROM dd GROUP BY 1),
-      lags AS (SELECT a.event_type, k.lag, sum(a.d * b.d) AS num
-               FROM dd a
-               JOIN (SELECT unnest(generate_series(1, 7)) AS lag) k ON true
-               JOIN dd b ON b.event_type = a.event_type
-                        AND b.i = a.i + k.lag
-               GROUP BY 1, 2)
-      SELECT l.event_type, CAST(l.lag AS BIGINT) AS lag,
-             den.n_days,
-             round(CAST(l.num AS DOUBLE) / CAST(den.den AS DOUBLE), 6) AS acf
-      FROM lags l JOIN den USING (event_type)""",
-
-    // the identical day-ordered recursion replayed as a recursive CTE
-    // (DuckDB 1.0's list_reduce mishandles struct accumulators, so the
-    // state threads through (i, l, t) rows instead)
-    "events_holt_forecast" -> s"""
-      WITH RECURSIVE daily AS (SELECT event_type,
-                            CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT)
-                              AS day,
-                            ${c100("value")} AS c
-                     FROM events),
-      d2 AS (SELECT event_type, day, sum(c) AS dc
-             FROM daily GROUP BY 1, 2),
-      idx AS (SELECT event_type,
-                     CAST(row_number() OVER (PARTITION BY event_type
-                       ORDER BY day) AS BIGINT) AS i,
-                     CAST(dc AS DOUBLE) / 100.0 AS x
-              FROM d2),
-      nn AS (SELECT event_type, CAST(count(*) AS BIGINT) AS nd
-             FROM idx GROUP BY 1),
-      rec(event_type, i, l, t) AS (
-        SELECT a.event_type, CAST(2 AS BIGINT), a.x, b.x - a.x
-        FROM idx a JOIN idx b USING (event_type)
-        WHERE a.i = 1 AND b.i = 2
-        UNION ALL
-        SELECT r.event_type, r.i + 1,
-               CAST(0.5 AS DOUBLE) * d.x
-                 + CAST(0.5 AS DOUBLE) * (r.l + r.t),
-               CAST(0.5 AS DOUBLE) * ((CAST(0.5 AS DOUBLE) * d.x
-                 + CAST(0.5 AS DOUBLE) * (r.l + r.t)) - r.l)
-                 + CAST(0.5 AS DOUBLE) * r.t
-        FROM rec r JOIN idx d ON d.event_type = r.event_type AND d.i = r.i)
-      SELECT r.event_type, nn.nd AS n_days,
-             round(r.l, 6) AS level, round(r.t, 6) AS trend,
-             round(r.l + CAST(3.0 AS DOUBLE) * r.t, 6) AS forecast_h3
-      FROM rec r JOIN nn USING (event_type) WHERE r.i = nn.nd + 1""",
-
-    // the identical three-model recursion as one recursive CTE
-    // threading (l, t, e, prev) plus micro-quantized error sums
-    "events_forecast_backtest" -> s"""
-      WITH RECURSIVE daily AS (SELECT event_type,
-                            CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT)
-                              AS day,
-                            ${c100("value")} AS c
-                     FROM events),
-      d2 AS (SELECT event_type, day, sum(c) AS dc
-             FROM daily GROUP BY 1, 2),
-      idx AS (SELECT event_type,
-                     CAST(row_number() OVER (PARTITION BY event_type
-                       ORDER BY day) AS BIGINT) AS i,
-                     CAST(dc AS DOUBLE) / 100.0 AS x
-              FROM d2),
-      nn AS (SELECT event_type, CAST(count(*) AS BIGINT) AS nd
-             FROM idx GROUP BY 1),
-      rec(event_type, i, l, t, e, prev, sn, se, sh) AS (
-        SELECT a.event_type, CAST(2 AS BIGINT), a.x, b.x - a.x, a.x, a.x,
-               CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT)
-        FROM idx a JOIN idx b USING (event_type)
-        JOIN nn USING (event_type)
-        WHERE a.i = 1 AND b.i = 2 AND nn.nd >= 14
-        UNION ALL
-        SELECT r.event_type, r.i + 1,
-          CAST(0.5 AS DOUBLE) * d.x
-            + CAST(0.5 AS DOUBLE) * (r.l + r.t),
-          CAST(0.5 AS DOUBLE) * ((CAST(0.5 AS DOUBLE) * d.x
-              + CAST(0.5 AS DOUBLE) * (r.l + r.t)) - r.l)
-            + CAST(0.5 AS DOUBLE) * r.t,
-          r.e + CAST(0.5 AS DOUBLE) * (d.x - r.e),
-          d.x,
-          r.sn + CASE WHEN d.i >= nn.nd - 6 THEN
-            CAST(round(abs(d.x - r.prev) * 1000000) AS BIGINT)
-            ELSE 0 END,
-          r.se + CASE WHEN d.i >= nn.nd - 6 THEN
-            CAST(round(abs(d.x - r.e) * 1000000) AS BIGINT)
-            ELSE 0 END,
-          r.sh + CASE WHEN d.i >= nn.nd - 6 THEN
-            CAST(round(abs(d.x - (r.l + r.t)) * 1000000) AS BIGINT)
-            ELSE 0 END
-        FROM rec r JOIN idx d ON d.event_type = r.event_type
-          AND d.i = r.i
-        JOIN nn ON nn.event_type = r.event_type)
-      SELECT r.event_type, m.model, CAST(7 AS BIGINT) AS n_evals,
-             round(CAST(CASE m.model WHEN 'naive' THEN r.sn
-                                     WHEN 'ewma' THEN r.se
-                                     ELSE r.sh END AS DOUBLE)
-               / 7.0 / 1000000.0, 6) AS mae
-      FROM rec r JOIN nn USING (event_type)
-      CROSS JOIN (SELECT unnest(['naive', 'ewma', 'holt']) AS model) m
-      WHERE r.i = nn.nd + 1""",
-
-    // the identical triple-smoothing recursion as a recursive CTE
-    // threading (i, l, b, seasonal ring as a LIST column); integer
-    // init sums, every double op in the same written order
-    "events_holt_winters" -> s"""
-      WITH RECURSIVE daily AS (SELECT event_type,
-                            CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT)
-                              AS day,
-                            ${c100("value")} AS c
-                     FROM events),
-      d2 AS (SELECT event_type, day, sum(c) AS dc
-             FROM daily GROUP BY 1, 2),
-      idx AS (SELECT event_type,
-                     CAST(row_number() OVER (PARTITION BY event_type
-                       ORDER BY day) AS BIGINT) AS i,
-                     CAST(dc AS BIGINT) AS c,
-                     CAST(dc AS DOUBLE) / 100.0 AS x
-              FROM d2),
-      nn AS (SELECT event_type, CAST(count(*) AS BIGINT) AS nd
-             FROM idx GROUP BY 1),
-      i1 AS (SELECT event_type,
-               CAST(sum(CASE WHEN i <= 7 THEN c ELSE 0 END) AS BIGINT)
-                 AS sc1,
-               CAST(sum(CASE WHEN i > 7 AND i <= 14 THEN c ELSE 0 END)
-                 AS BIGINT) AS sc2
-             FROM idx GROUP BY 1),
-      lb AS (SELECT event_type,
-               CAST(sc1 AS DOUBLE) / 100.0 / 7.0 AS lm,
-               CAST(sc2 - sc1 AS DOUBLE) / 100.0 / 49.0 AS bm
-             FROM i1),
-      s0 AS (SELECT i.event_type,
-               list(CAST(i.c AS DOUBLE) / 100.0 - lb.lm ORDER BY i.i) AS s
-             FROM idx i JOIN lb ON lb.event_type = i.event_type
-             WHERE i.i <= 7 GROUP BY i.event_type),
-      rec(event_type, i, l, b, s) AS (
-        SELECT lb.event_type, CAST(7 AS BIGINT), lb.lm, lb.bm, s0.s
-        FROM lb JOIN s0 USING (event_type) JOIN nn USING (event_type)
-        WHERE nn.nd >= 14
-        UNION ALL
-        SELECT r.event_type, r.i + 1,
-          CAST(0.5 AS DOUBLE) * (d.x - r.s[1])
-            + CAST(0.5 AS DOUBLE) * (r.l + r.b),
-          CAST(0.5 AS DOUBLE) * ((CAST(0.5 AS DOUBLE) * (d.x - r.s[1])
-              + CAST(0.5 AS DOUBLE) * (r.l + r.b)) - r.l)
-            + CAST(0.5 AS DOUBLE) * r.b,
-          r.s[2:] || [CAST(0.5 AS DOUBLE) * (d.x
-              - (CAST(0.5 AS DOUBLE) * (d.x - r.s[1])
-                 + CAST(0.5 AS DOUBLE) * (r.l + r.b)))
-            + CAST(0.5 AS DOUBLE) * r.s[1]]
-        FROM rec r JOIN idx d ON d.event_type = r.event_type
-          AND d.i = r.i + 1)
-      SELECT r.event_type, nn.nd AS n_days,
-             round(r.l, 6) AS level, round(r.b, 6) AS trend,
-             round(r.l + CAST(3.0 AS DOUBLE) * r.b + r.s[3], 6)
-               AS forecast_h3
-      FROM rec r JOIN nn USING (event_type) WHERE r.i = nn.nd""",
-
-    // same lag-pair transition relation; 3 unrolled power rounds with
-    // per-round 9dp quantization (the graph_pagerank discipline)
-    "events_markov_stationary" -> """
-      WITH pairs AS (SELECT user_id, event_type,
-               lag(event_type) OVER (PARTITION BY user_id
-                 ORDER BY ts, event_id) AS prev
-             FROM events),
-      tr AS (SELECT prev AS src, event_type AS dst, count(*) AS n
-             FROM pairs WHERE prev IS NOT NULL GROUP BY 1, 2),
-      trans AS (SELECT src, dst,
-                  CAST(n AS DOUBLE) / sum(n) OVER (PARTITION BY src) AS p
-                FROM tr),
-      types AS (SELECT src AS t FROM trans UNION SELECT dst FROM trans),
-      tr2 AS (SELECT * FROM trans
-              UNION ALL
-              SELECT t, t, CAST(1.0 AS DOUBLE) FROM types
-              WHERE t NOT IN (SELECT DISTINCT src FROM trans)),
-      kk AS (SELECT CAST(count(*) AS DOUBLE) AS k FROM types),
-      p0 AS (SELECT t, CAST(1.0 AS DOUBLE) / kk.k AS pi FROM types, kk),
-      p1 AS (SELECT tt.dst AS t, round(sum(p0.pi * tt.p), 9) AS pi
-             FROM tr2 tt JOIN p0 ON tt.src = p0.t GROUP BY 1),
-      p2 AS (SELECT tt.dst AS t, round(sum(p1.pi * tt.p), 9) AS pi
-             FROM tr2 tt JOIN p1 ON tt.src = p1.t GROUP BY 1),
-      p3 AS (SELECT tt.dst AS t, round(sum(p2.pi * tt.p), 9) AS pi
-             FROM tr2 tt JOIN p2 ON tt.src = p2.t GROUP BY 1)
-      SELECT types.t AS event_type,
-             round(coalesce(p3.pi, 0.0), 6) AS stationary
-      FROM types LEFT JOIN p3 ON types.t = p3.t""",
-
-    // same strict (ts, event_id) row-order window; IGNORE NULLS
-    // first/last over the unbounded-preceding frame, exact cents
-    "events_attribution" -> s"""
-      WITH e AS (SELECT user_id, ts, event_id, event_type,
-                        ${c100("value")} AS c,
-                        CASE WHEN event_type IN ('click', 'view')
-                             THEN event_type END AS touch
-                 FROM events),
-      conv AS (SELECT event_type, c,
-                 first_value(touch IGNORE NULLS) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                   AS first_touch,
-                 last_value(touch IGNORE NULLS) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                   AS last_touch
-               FROM e),
-      p AS (SELECT * FROM conv WHERE event_type = 'purchase')
-      SELECT 'first_touch' AS model, coalesce(first_touch, 'none') AS channel,
-             CAST(count(*) AS BIGINT) AS n_conversions,
-             CAST(sum(c) AS BIGINT) AS revenue_cents
-      FROM p GROUP BY 2
-      UNION ALL
-      SELECT 'last_touch', coalesce(last_touch, 'none'),
-             CAST(count(*) AS BIGINT), CAST(sum(c) AS BIGINT)
-      FROM p GROUP BY 2""",
-
-    // the streaming-executed twin answers the SAME question (keyed
-    // state, strict-order replay at watermark eviction) -> same oracle
-    "events_attribution_streamed" -> s"""
-      WITH e AS (SELECT user_id, ts, event_id, event_type,
-                        ${c100("value")} AS c,
-                        CASE WHEN event_type IN ('click', 'view')
-                             THEN event_type END AS touch
-                 FROM events),
-      conv AS (SELECT event_type, c,
-                 first_value(touch IGNORE NULLS) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                   AS first_touch,
-                 last_value(touch IGNORE NULLS) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                   AS last_touch
-               FROM e),
-      p AS (SELECT * FROM conv WHERE event_type = 'purchase')
-      SELECT 'first_touch' AS model, coalesce(first_touch, 'none') AS channel,
-             CAST(count(*) AS BIGINT) AS n_conversions,
-             CAST(sum(c) AS BIGINT) AS revenue_cents
-      FROM p GROUP BY 2
-      UNION ALL
-      SELECT 'last_touch', coalesce(last_touch, 'none'),
-             CAST(count(*) AS BIGINT), CAST(sum(c) AS BIGINT)
-      FROM p GROUP BY 2""",
-
-    // same >= 0.4 pair relation as neardup_embedding; per-threshold
-    // conditional counts
-    "dedup_threshold_curve" -> """
-      WITH e AS (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                 FROM embeddings),
-      n AS (SELECT vec_id,
-                   list_transform(v, x -> x /
-                     nullif(sqrt(list_sum(list_transform(v, y -> y*y))), 0)) AS nv
-            FROM e),
-      p AS (SELECT * FROM (
-              SELECT round(greatest(
-                       list_sum(list_transform(list_zip(a.nv, b.nv),
-                                z -> z[1]*z[2])), 0), 6) AS sim
-              FROM n a JOIN n b ON a.vec_id < b.vec_id)
-            WHERE sim >= 0.4)
-      SELECT CAST(t AS DOUBLE) AS threshold,
-             CAST(sum(CASE WHEN sim >= CAST(t AS DOUBLE) THEN 1 ELSE 0 END)
-               AS BIGINT) AS n_pairs
-      FROM p CROSS JOIN (SELECT unnest([0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS t)
-      GROUP BY 1""",
-
-    // micro-quantized step hazards, integer prefix sum, one division
-    "events_nelson_aalen" -> """
-      WITH life AS (SELECT user_id,
-                      CAST(max(day) - min(day) AS BIGINT) AS lt
-                    FROM (SELECT user_id,
-                            CAST(floor(epoch_us(ts) / 86400000000)
-                              AS BIGINT) AS day
-                          FROM events)
-                    GROUP BY user_id),
-      hist AS (SELECT lt, CAST(count(*) AS BIGINT) AS d
-               FROM life GROUP BY 1),
-      steps AS (SELECT lt, d,
-                  CAST(sum(d) OVER (ORDER BY lt ROWS BETWEEN CURRENT ROW
-                    AND UNBOUNDED FOLLOWING) AS BIGINT) AS n
-                FROM hist),
-      h AS (SELECT lt, d, n,
-              CAST(round(CAST(d AS DOUBLE) / CAST(n AS DOUBLE) * 1000000)
-                AS BIGINT) AS h6
-            FROM steps)
-      SELECT lt AS lifetime_days, n AS n_risk, d AS n_churn,
-             round(CAST(sum(h6) OVER (ORDER BY lt ROWS BETWEEN UNBOUNDED
-               PRECEDING AND CURRENT ROW) AS BIGINT) / 1000000.0, 6)
-               AS cum_hazard
-      FROM h""",
-
-    // same ordered factor list; survival = left fold of the prefix
-    // slice, seeded 1.0, in identical order
-    "events_kaplan_meier" -> """
-      WITH life AS (SELECT user_id,
-                      CAST(max(day) - min(day) AS BIGINT) AS lt
-                    FROM (SELECT user_id,
-                            CAST(floor(epoch_us(ts) / 86400000000)
-                              AS BIGINT) AS day
-                          FROM events)
-                    GROUP BY user_id),
-      hist AS (SELECT lt, CAST(count(*) AS BIGINT) AS d
-               FROM life GROUP BY 1),
-      steps AS (SELECT lt, d,
-                  CAST(sum(d) OVER (ORDER BY lt ROWS BETWEEN CURRENT ROW
-                    AND UNBOUNDED FOLLOWING) AS BIGINT) AS n
-                FROM hist),
-      f AS (SELECT lt, d, n,
-              CAST(n - d AS DOUBLE) / CAST(n AS DOUBLE) AS f
-            FROM steps),
-      packed AS (SELECT list(f ORDER BY lt) AS fs FROM f),
-      idx AS (SELECT lt, d, n,
-                CAST(row_number() OVER (ORDER BY lt) AS BIGINT) AS i
-              FROM f)
-      SELECT x.lt AS lifetime_days, x.n AS n_risk, x.d AS n_churn,
-             round(list_reduce(
-               list_prepend(CAST(1.0 AS DOUBLE),
-                 p.fs[1:CAST(x.i AS INT)]),
-               (acc, y) -> acc * y), 6) AS survival
-      FROM idx x CROSS JOIN packed p""",
-
-    // x2 exact-interpolated rolling median over the same centered-7
-    // ROWS frame, full windows only
-    "events_rolling_median" -> s"""
-      WITH daily AS (SELECT event_type,
-                       CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT)
-                         AS day,
-                       ${c100("value")} AS c
-                     FROM events),
-      d2 AS (SELECT event_type, day, CAST(sum(c) AS BIGINT) AS daily_cents
-             FROM daily GROUP BY 1, 2),
-      ma AS (SELECT event_type, day, daily_cents,
-               CAST(round(quantile_cont(daily_cents, 0.5) OVER w * 2)
-                 AS BIGINT) AS med2,
-               CAST(count(*) OVER w AS BIGINT) AS nw
-             FROM d2
-             WINDOW w AS (PARTITION BY event_type ORDER BY day
-               ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING))
-      SELECT event_type, day, daily_cents, med2 FROM ma WHERE nw = 7""",
-
-    // centered-7 ROWS moving average over the daily rollup (integer
-    // cent sums, full windows only), micro-quantized detrended values,
-    // one division per output row
-    "events_seasonal_decompose" -> s"""
-      WITH daily AS (SELECT event_type,
-                       CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT)
-                         AS day,
-                       ${c100("value")} AS c
-                     FROM events),
-      d2 AS (SELECT event_type, day, CAST(sum(c) AS BIGINT) AS dc
-             FROM daily GROUP BY 1, 2),
-      ma AS (SELECT event_type, day, dc,
-               CAST(sum(dc) OVER w AS BIGINT) AS t7,
-               CAST(count(*) OVER w AS BIGINT) AS nw
-             FROM d2
-             WINDOW w AS (PARTITION BY event_type ORDER BY day
-               ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-      det AS (SELECT event_type, day % 7 AS weekday,
-                CAST(round((CAST(dc AS DOUBLE) / 100.0
-                  - CAST(t7 AS DOUBLE) / 700.0) * 1000000) AS BIGINT)
-                  AS det6
-              FROM ma WHERE nw = 7)
-      SELECT event_type, weekday,
-             CAST(count(*) AS BIGINT) AS n_days,
-             round(CAST(sum(det6) AS DOUBLE) / count(*) / 1000000.0, 6)
-               AS seasonal
-      FROM det GROUP BY 1, 2""",
-
-    // pairwise slopes over the daily rollup quantized to integer
-    // 1e-4-cent/day units, x2 exact-interpolated median, one division
-    "events_theilsen_trend" -> s"""
-      WITH daily AS (SELECT event_type,
-                       CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT)
-                         AS day,
-                       ${c100("value")} AS c
-                     FROM events),
-      d2 AS (SELECT event_type, day, CAST(sum(c) AS BIGINT) AS dc
-             FROM daily GROUP BY 1, 2),
-      nd AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_days
-             FROM d2 GROUP BY 1),
-      p AS (SELECT a.event_type,
-              CAST(round(CAST(b.dc - a.dc AS DOUBLE)
-                / CAST(b.day - a.day AS DOUBLE) * 10000) AS BIGINT) AS s4
-            FROM d2 a JOIN d2 b ON a.event_type = b.event_type
-              AND a.day < b.day),
-      m AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_pairs,
-              CAST(round(quantile_cont(s4, 0.5) * 2) AS BIGINT) AS med2
-            FROM p GROUP BY 1)
-      SELECT m.event_type, nd.n_days, m.n_pairs,
-             round(CAST(med2 AS DOUBLE) / 2000000.0, 6) AS slope_per_day
-      FROM m JOIN nd USING (event_type)""",
-
-    // median/MAD via the x2 exact-interpolation trick; one fixed
-    // expression order for the modified z
-    "events_anomaly_mad" -> s"""
-      WITH e AS (SELECT event_type, event_id, ${c100("value")} AS c
-                 FROM events),
-      m AS (SELECT event_type,
-                   CAST(round(quantile_cont(c, 0.5) * 2) AS BIGINT) AS med2
-            FROM e GROUP BY 1),
-      d AS (SELECT e.event_type, e.event_id, e.c, m.med2,
-                   abs(e.c * 2 - m.med2) AS d2
-            FROM e JOIN m USING (event_type)),
-      md AS (SELECT event_type,
-                    CAST(round(quantile_cont(d2, 0.5) * 2) AS BIGINT) AS mad4
-             FROM d GROUP BY 1)
-      SELECT event_type, event_id, c / 100.0 AS value,
-             round(0.6745 * (CAST(c AS DOUBLE) * 2 - med2) * 2 / mad4, 6)
-               AS mz
-      FROM d JOIN md USING (event_type)
-      WHERE mad4 > 0
-        AND abs(0.6745 * (CAST(c AS DOUBLE) * 2 - med2) * 2 / mad4) > 3.5""",
-
-    // per-column profile: one SELECT per column, engine-portable
-    // representations (cents / epoch days) so min/max stringify alike
-    "quality_profile_orders" -> {
-      val prep = s"""SELECT o_orderkey, o_custkey, o_orderstatus,
-          ${c100("o_totalprice")} AS o_totalprice_cents,
-          CAST(date_diff('day', DATE '1970-01-01',
-                         CAST(o_orderdate AS DATE)) AS BIGINT)
-            AS o_orderdate_epday,
-          o_orderpriority FROM orders"""
-      val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
-        "o_totalprice_cents", "o_orderdate_epday", "o_orderpriority")
-      cols.map { c =>
-        s"""SELECT '$c' AS column_name, count(*) AS n_rows,
-            count($c) AS n_nonnull, count(DISTINCT $c) AS n_distinct,
-            CAST(min($c) AS VARCHAR) AS min_repr,
-            CAST(max($c) AS VARCHAR) AS max_repr FROM o"""
-      }.mkString(s"WITH o AS ($prep)\n", "\nUNION ALL\n", "")
-    },
-
-    // the islands relation + one lead() = SCD2 intervals
-    "events_scd2" -> """
-      WITH e AS (SELECT user_id, event_type, event_id, epoch_us(ts) AS us
-                 FROM events),
-      f AS (SELECT *, CASE WHEN lag(event_type) OVER w IS NULL
-                             OR lag(event_type) OVER w <> event_type
-                           THEN 1 ELSE 0 END AS chg
-            FROM e
-            WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-      i AS (SELECT *, sum(chg) OVER (PARTITION BY user_id ORDER BY us, event_id
-                        ROWS UNBOUNDED PRECEDING) AS island
-            FROM f),
-      isl AS (SELECT user_id, CAST(island AS BIGINT) AS island,
-                     min(event_type) AS event_type,
-                     min(us) AS start_us, count(*) AS n_events
-              FROM i GROUP BY user_id, island)
-      SELECT user_id, island AS version, event_type AS state,
-             start_us AS valid_from_us,
-             lead(start_us) OVER w2 AS valid_to_us,
-             CAST(lead(start_us) OVER w2 IS NULL AS INT) AS is_current,
-             n_events
-      FROM isl WINDOW w2 AS (PARTITION BY user_id ORDER BY island)""",
-
-    // two snapshot aggregates full-outer-joined; FULL JOIN USING
-    // coalesces the key columns like Spark's full_outer on Seq(keys)
-    "events_cdc_diff" -> s"""
-      WITH ev AS (SELECT user_id, event_type, ${c100("value")} AS c,
-                         day(ts) AS dom FROM events),
-      so AS (SELECT user_id, event_type, count(*) AS n_old,
-                    sum(c) AS s_old FROM ev WHERE dom % 2 = 0 GROUP BY 1, 2),
-      sn AS (SELECT user_id, event_type, count(*) AS n_new,
-                    sum(c) AS s_new FROM ev WHERE dom % 2 = 1 GROUP BY 1, 2)
-      SELECT user_id, event_type, n_old, s_old / 100.0 AS sum_old,
-             n_new, s_new / 100.0 AS sum_new,
-             CASE WHEN n_old IS NULL THEN 'insert'
-                  WHEN n_new IS NULL THEN 'delete'
-                  WHEN n_old <> n_new OR s_old <> s_new THEN 'update'
-                  ELSE 'unchanged' END AS change
-      FROM so FULL JOIN sn USING (user_id, event_type)""",
-
-    // grid densify + IGNORE NULLS forward fill, mirroring the Spark
-    // sequence/explode + last(ignoreNulls) plan
-    "events_resample" -> s"""
-      WITH e AS (SELECT event_type,
-                        CAST(floor(CAST(epoch_us(ts) AS DOUBLE)
-                                   / 3600000000.0) AS BIGINT) AS hour,
-                        ${c100("value")} AS c FROM events),
-      h AS (SELECT event_type, hour, count(*) AS n, sum(c) AS s
-            FROM e GROUP BY 1, 2),
-      b AS (SELECT event_type, min(hour) AS lo, max(hour) AS hi
-            FROM h GROUP BY 1),
-      grid AS (SELECT event_type, unnest(generate_series(lo, hi)) AS hour
-               FROM b),
-      j AS (SELECT g.event_type, g.hour, coalesce(h.n, 0) AS n, h.s AS s
-            FROM grid g LEFT JOIN h
-              ON g.event_type = h.event_type AND g.hour = h.hour)
-      SELECT event_type, hour, n, s / 100.0 AS sum_value,
-             last_value(s IGNORE NULLS) OVER
-               (PARTITION BY event_type ORDER BY hour) / 100.0 AS ffill_sum
-      FROM j""",
-
-    // same ntile semantics (SQL standard: leading buckets absorb the
-    // remainder) over the same exact (c, event_id) total order
-    "events_equidepth" -> s"""
-      WITH e AS (SELECT event_type, event_id, ${c100("value")} AS c
-                 FROM events),
-      t AS (SELECT event_type, c, CAST(ntile(10) OVER
-              (PARTITION BY event_type ORDER BY c, event_id) AS BIGINT)
-              AS bucket FROM e)
-      SELECT event_type, bucket, count(*) AS n,
-             min(c) / 100.0 AS lo, max(c) / 100.0 AS hi
-      FROM t GROUP BY 1, 2""",
-
-    // list_reduce over the identically-sorted list, identical
-    // fixed-association update acc + 0.3*(x - acc) -> bit-equal doubles
-    "events_ewma" -> s"""
-      WITH e AS (SELECT user_id, epoch_us(ts) AS us, event_id,
-                        ${c100("value")} AS c FROM events),
-      l AS (SELECT user_id,
-                   list(CAST(c AS DOUBLE) ORDER BY us, event_id) AS xs,
-                   count(*) AS n FROM e GROUP BY 1)
-      SELECT user_id, n,
-             round(list_reduce(xs, (acc, x) -> acc + 0.3 * (x - acc))
-                   / 100.0, 6) AS ewma
-      FROM l""",
-
-    // the streaming-executed twin answers the SAME question (keyed
-    // state + event-time-timeout fold) -> same oracle text
-    "events_ewma_streamed" -> s"""
-      WITH e AS (SELECT user_id, epoch_us(ts) AS us, event_id,
-                        ${c100("value")} AS c FROM events),
-      l AS (SELECT user_id,
-                   list(CAST(c AS DOUBLE) ORDER BY us, event_id) AS xs,
-                   count(*) AS n FROM e GROUP BY 1)
-      SELECT user_id, n,
-             round(list_reduce(xs, (acc, x) -> acc + 0.3 * (x - acc))
-                   / 100.0, 6) AS ewma
-      FROM l""",
-
-    // both engines order by the identical md5 hex of the identical
-    // string rendering of event_id
-    "pipeline_ksample" -> """
-      SELECT event_type, event_id, value, rk FROM (
-        SELECT event_type, event_id, value,
-               CAST(row_number() OVER (PARTITION BY event_type
-                 ORDER BY md5(CAST(event_id AS VARCHAR)), event_id)
-                 AS INT) AS rk
-        FROM events)
-      WHERE rk <= 20""",
-
-    // ordered-edge triangle enumeration (x<y<z matched exactly once)
-    "graph_triangles" -> """
-      WITH cp AS (SELECT DISTINCT o.o_custkey AS c, l.l_partkey AS p
-                  FROM lineitem l JOIN orders o
-                    ON l.l_orderkey = o.o_orderkey),
-      e AS (SELECT a.c AS u, b.c AS v FROM cp a
-            JOIN cp b ON a.p = b.p AND a.c < b.c
-            GROUP BY 1, 2 HAVING count(*) >= 2)
-      SELECT (SELECT count(*) FROM e) AS n_edges,
-             (SELECT count(*) FROM e e1
-              JOIN e e2 ON e2.u = e1.v
-              JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v) AS n_triangles""",
-
-    // Adamic-Adar over the same co-purchase edge relation: per-middle-
-    // node contributions quantized to micro-unit BIGINTs (the pagerank
-    // exact-arithmetic discipline) so the sum is order-independent
-    "graph_link_prediction" -> """
-      WITH cp AS MATERIALIZED (SELECT DISTINCT o.o_custkey AS c,
-                    l.l_partkey AS p
-                  FROM lineitem l JOIN orders o
-                    ON l.l_orderkey = o.o_orderkey),
-      e AS MATERIALIZED (SELECT a.c AS u, b.c AS v FROM cp a
-            JOIN cp b ON a.p = b.p AND a.c < b.c
-            GROUP BY 1, 2 HAVING count(*) >= 4),
-      bidir AS MATERIALIZED (SELECT u, v FROM e
-            UNION ALL SELECT v, u FROM e),
-      deg AS MATERIALIZED (SELECT u AS z,
-              CAST(round(1e9 / ln(count(*))) AS BIGINT) AS aa
-              FROM bidir GROUP BY u),
-      paths AS MATERIALIZED (SELECT a.u AS u, a.v AS z, c.v AS w
-                FROM bidir a JOIN bidir c ON a.v = c.u
-                WHERE a.u < c.v),
-      scored AS (SELECT p.u, p.w, count(*) AS common,
-                        CAST(sum(d.aa) AS BIGINT) AS aa_micro
-                 FROM paths p JOIN deg d ON d.z = p.z
-                 GROUP BY 1, 2)
-      SELECT s.u, s.w, s.common, s.aa_micro
-      FROM scored s LEFT JOIN e ON e.u = s.u AND e.v = s.w
-      WHERE e.u IS NULL
-      ORDER BY s.aa_micro DESC, s.u, s.w LIMIT 20""",
-
-    // basket-completion replay: item-pair counts off the same distinct
-    // (customer, part) incidence, symmetrized then CAPPED to each
-    // item's 20 strongest neighbors (affinity desc, part ties asc —
-    // the truncated-neighbor-list serving discipline), summed per
-    // (customer, candidate), owned parts removed, top-5 per customer
-    // with ties to the smaller part key
-    "orders_basket_completion" -> basketCompletionSql,
-
-    // the past-cutover serving leg under the SAME oracle: the fallback
-    // must be semantically invisible, so it earns its own gated row
-    "orders_basket_completion_dist" -> basketCompletionSql,
-
-    // related-items replay: same pair counts, same popularity
-    // normalization (exact BIGINT product under one sqrt), rounded 6
-    // BEFORE ranking, ties to the smaller neighbor key
-    "orders_item_similarity" -> """
-      WITH cp AS (SELECT DISTINCT o_custkey AS c, l_partkey AS p
-                  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-      ip AS (SELECT a.p AS p1, b.p AS p2, count(*) AS cnt
-             FROM cp a JOIN cp b ON a.c = b.c AND a.p < b.p
-             GROUP BY 1, 2 HAVING count(*) >= 2),
-      sym AS (SELECT p1 AS p, p2 AS rec, cnt FROM ip
-              UNION ALL SELECT p2, p1, cnt FROM ip),
-      pop AS (SELECT p, count(*) AS n FROM cp GROUP BY 1),
-      s AS (SELECT sym.p, sym.rec, sym.cnt,
-              round(sym.cnt / sqrt(CAST(a.n * b.n AS DOUBLE)), 6)
-                AS cosine
-            FROM sym JOIN pop a ON a.p = sym.p
-            JOIN pop b ON b.p = sym.rec)
-      SELECT p AS partkey, rec AS neighbor, cnt AS n_common, cosine,
-             CAST(row_number() OVER (PARTITION BY p
-               ORDER BY cosine DESC, rec) AS INT) AS rk
-      FROM s QUALIFY rk <= 10""",
-
-    // three unrolled synchronous LPA rounds: per round, neighbor-label
-    // counts then mode with ties to the smallest label — the same
-    // deterministic-iteration oracle pattern as emb_kmeans. The shared
-    // CTEs are MATERIALIZED (r11 sweep finding: DuckDB inlines plain
-    // CTEs, so the chained rounds re-evaluated the co-purchase pair
-    // join once per reference — at the sf1 tier that blew the oracle's
-    // time/spill budget; materialized, the same replay runs in ~23 s)
-    "graph_communities" -> s"""
-      WITH cp AS MATERIALIZED (SELECT DISTINCT o_custkey AS c, l_partkey AS p
-                  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-      e AS MATERIALIZED (SELECT a.c AS u, b.c AS v FROM cp a JOIN cp b
-            ON a.p = b.p AND a.c < b.c
-            GROUP BY 1, 2 HAVING count(*) >= 4),
-      nodes AS (SELECT u AS n FROM e UNION SELECT v FROM e),
-      sym AS MATERIALIZED (SELECT u AS a, v AS b FROM e
-            UNION ALL SELECT v, u FROM e),
-      l0 AS MATERIALIZED (SELECT n AS node, n AS lbl FROM nodes),${Seq(1, 2, 3).map(i => s"""
-      r$i AS MATERIALIZED (SELECT s.a AS node, l.lbl, count(*) AS c
-              FROM sym s JOIN l${i - 1} l ON s.b = l.node GROUP BY 1, 2),
-      l$i AS MATERIALIZED (SELECT node, lbl FROM (
-                SELECT *, row_number() OVER (PARTITION BY node
-                  ORDER BY c DESC, lbl ASC) AS rn FROM r$i) WHERE rn = 1)""")
-        .mkString(",")}
-      SELECT node, lbl AS community FROM l3""",
-
-    // the same unrolled LPA chain, then the exact integer modularity
-    // contributions (4*m*e_in - d_sum^2, one final half-up round);
-    // CTEs materialized like graph_communities (l3 is referenced three
-    // times here — inlined, that re-ran the whole chain per reference)
-    "graph_modularity" -> s"""
-      WITH cp AS MATERIALIZED (SELECT DISTINCT o_custkey AS c, l_partkey AS p
-                  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-      e AS MATERIALIZED (SELECT a.c AS u, b.c AS v FROM cp a JOIN cp b
-            ON a.p = b.p AND a.c < b.c
-            GROUP BY 1, 2 HAVING count(*) >= 4),
-      nodes AS (SELECT u AS n FROM e UNION SELECT v FROM e),
-      sym AS MATERIALIZED (SELECT u AS a, v AS b FROM e
-            UNION ALL SELECT v, u FROM e),
-      l0 AS MATERIALIZED (SELECT n AS node, n AS lbl FROM nodes),${Seq(1, 2, 3).map(i => s"""
-      r$i AS MATERIALIZED (SELECT s.a AS node, l.lbl, count(*) AS c
-              FROM sym s JOIN l${i - 1} l ON s.b = l.node GROUP BY 1, 2),
-      l$i AS MATERIALIZED (SELECT node, lbl FROM (
-                SELECT *, row_number() OVER (PARTITION BY node
-                  ORDER BY c DESC, lbl ASC) AS rn FROM r$i) WHERE rn = 1)""")
-        .mkString(",")},
-      deg AS (SELECT node, count(*) AS d FROM (
-                SELECT u AS node FROM e UNION ALL SELECT v FROM e)
-              GROUP BY 1),
-      mm AS (SELECT count(*) AS m FROM e),
-      ein AS (SELECT la.lbl AS community, count(*) AS e_in
-              FROM e JOIN l3 la ON la.node = e.u
-                     JOIN l3 lb ON lb.node = e.v
-              WHERE la.lbl = lb.lbl GROUP BY 1),
-      ds AS (SELECT l3.lbl AS community, CAST(sum(d) AS BIGINT) AS d_sum,
-               count(*) AS n_nodes
-             FROM deg JOIN l3 ON deg.node = l3.node GROUP BY 1)
-      SELECT ds.community, n_nodes, COALESCE(e_in, 0) AS e_in, d_sum,
-             CAST(round((4 * m * COALESCE(e_in, 0) - d_sum * d_sum)
-               * 1000000.0 / (4.0 * m * m)) AS BIGINT) AS q_micro
-      FROM ds LEFT JOIN ein USING (community) CROSS JOIN mm""",
-
-    // min-label transitive closure (UNION set semantics) — exact for
-    // any component diameter; certifies the star-contraction fixpoint
-    "graph_components" -> """
-      WITH RECURSIVE cp AS (SELECT DISTINCT o_custkey AS c, l_partkey AS p
-                            FROM lineitem JOIN orders
-                              ON l_orderkey = o_orderkey),
-      e AS (SELECT a.c AS u, b.c AS v FROM cp a JOIN cp b
-            ON a.p = b.p AND a.c < b.c
-            GROUP BY 1, 2 HAVING count(*) >= 6),
-      nodes AS (SELECT u AS n FROM e UNION SELECT v FROM e),
-      sym AS (SELECT u AS a, v AS b FROM e UNION ALL SELECT v, u FROM e),
-      reach(node, lbl) AS (
-        SELECT n, n FROM nodes
-        UNION
-        SELECT s.b, reach.lbl FROM sym s JOIN reach ON reach.node = s.a)
-      SELECT node, min(lbl) AS component FROM reach GROUP BY 1""",
-
-    // fixed-unroll peel replay — see kcoreOracleSql
-    "graph_kcore" -> kcoreOracleSql(k = 2, minShared = 3, rounds = 10),
-
-    "graph_degree_distribution" -> """
-      WITH cp AS (SELECT DISTINCT o.o_custkey AS c, l.l_partkey AS p
-                  FROM lineitem l JOIN orders o
-                    ON l.l_orderkey = o.o_orderkey),
-      e AS (SELECT a.c AS u, b.c AS v FROM cp a
-            JOIN cp b ON a.p = b.p AND a.c < b.c
-            GROUP BY 1, 2 HAVING count(*) >= 2),
-      deg AS (SELECT node, count(*) AS degree FROM (
-                SELECT u AS node FROM e UNION ALL SELECT v FROM e)
-              GROUP BY 1),
-      hist AS (SELECT degree, count(*) AS n_nodes FROM deg GROUP BY 1),
-      t AS (SELECT CAST(sum(n_nodes) AS BIGINT) AS tn FROM hist)
-      SELECT CAST(degree AS BIGINT) AS degree,
-             CAST(n_nodes AS BIGINT) AS n_nodes,
-             CAST(round(CAST(n_nodes AS DOUBLE) * 1000 / tn) AS BIGINT)
-               AS permille
-      FROM hist CROSS JOIN t""",
-
-    // endpoint-degree Pearson over directed stubs; HUGEINT moments,
-    // identical num/sqrt/sqrt division order
-    "graph_assortativity" -> """
-      WITH cp AS MATERIALIZED (SELECT DISTINCT o.o_custkey AS c,
-                    l.l_partkey AS p
-                  FROM lineitem l JOIN orders o
-                    ON l.l_orderkey = o.o_orderkey),
-      e AS MATERIALIZED (SELECT a.c AS u, b.c AS v FROM cp a
-            JOIN cp b ON a.p = b.p AND a.c < b.c
-            GROUP BY 1, 2 HAVING count(*) >= 2),
-      deg AS MATERIALIZED (SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
-                SELECT u AS node FROM e UNION ALL SELECT v FROM e)
-              GROUP BY 1),
-      bidir AS MATERIALIZED (SELECT u, v FROM e
-            UNION ALL SELECT v, u FROM e),
-      dd AS (SELECT du.deg AS dx, dv.deg AS dy
-             FROM bidir b
-             JOIN deg du ON du.node = b.u
-             JOIN deg dv ON dv.node = b.v),
-      m AS (SELECT CAST(count(*) AS HUGEINT) AS n,
-              CAST(sum(dx) AS HUGEINT) AS sx,
-              CAST(sum(dy) AS HUGEINT) AS sy,
-              CAST(sum(dx * dx) AS HUGEINT) AS sxx,
-              CAST(sum(dy * dy) AS HUGEINT) AS syy,
-              CAST(sum(dx * dy) AS HUGEINT) AS sxy
-            FROM dd)
-      SELECT CAST(n AS BIGINT) AS n_stubs,
-             round(CAST(n * sxy - sx * sy AS DOUBLE)
-               / sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-               / sqrt(CAST(n * syy - sy * sy AS DOUBLE)), 6)
-               AS assortativity
-      FROM m""",
-
-    // same ordered x<y<z triangle enumeration exploded to corners;
-    // exact integers until one final division. cp/e/t MATERIALIZED
-    // (r11 sweep finding: inlined, the wedge join re-derived the 4M-
-    // edge relation per reference and exhausted spill disk at sf1;
-    // materialized, the replay runs in ~36 s)
-    "graph_clustering_coeff" -> """
-      WITH cp AS MATERIALIZED (SELECT DISTINCT o.o_custkey AS c,
-                    l.l_partkey AS p
-                  FROM lineitem l JOIN orders o
-                    ON l.l_orderkey = o.o_orderkey),
-      e AS MATERIALIZED (SELECT a.c AS u, b.c AS v FROM cp a
-            JOIN cp b ON a.p = b.p AND a.c < b.c
-            GROUP BY 1, 2 HAVING count(*) >= 2),
-      t AS MATERIALIZED (SELECT e1.u AS x, e1.v AS y, e2.v AS z
-            FROM e e1 JOIN e e2 ON e2.u = e1.v
-            JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v),
-      corners AS (SELECT node, count(*) AS n_tri FROM (
-                    SELECT x AS node FROM t
-                    UNION ALL SELECT y FROM t
-                    UNION ALL SELECT z FROM t) GROUP BY 1),
-      deg AS (SELECT node, count(*) AS deg FROM (
-                SELECT u AS node FROM e UNION ALL SELECT v FROM e)
-              GROUP BY 1)
-      SELECT CAST(d.node AS BIGINT) AS node, CAST(d.deg AS BIGINT) AS deg,
-             CAST(coalesce(c.n_tri, 0) AS BIGINT) AS n_triangles,
-             round(CAST(2.0 AS DOUBLE) * CAST(coalesce(c.n_tri, 0) AS DOUBLE)
-               / CAST(d.deg * (d.deg - 1) AS DOUBLE), 6) AS coeff
-      FROM deg d LEFT JOIN corners c USING (node)
-      WHERE d.deg >= 2""",
-
-    // bounded WITH RECURSIVE walk, UNION-dedup on (node, hop), then
-    // min(hop) per node — the same BFS the frontier loop computes,
-    // on the declared minShared=4 signal cut
-    // full-relaxation Bellman-Ford unroll; equals the worklist engine
-    // result after the same round count by construction
-    "graph_weighted_sssp" -> ssspOracleSql(rounds = 6, minShared = 4),
-
-    "graph_shortest_paths" -> """
-      WITH RECURSIVE cp AS (SELECT DISTINCT o.o_custkey AS c,
-                                   l.l_partkey AS p
-                  FROM lineitem l JOIN orders o
-                    ON l.l_orderkey = o.o_orderkey),
-      e AS (SELECT a.c AS u, b.c AS v FROM cp a
-            JOIN cp b ON a.p = b.p AND a.c < b.c
-            GROUP BY 1, 2 HAVING count(*) >= 4),
-      bidir AS (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
-      walk(node, d) AS (
-        SELECT min(u), 0 FROM e
-        UNION
-        SELECT b.v, w.d + 1 FROM walk w JOIN bidir b ON b.u = w.node
-        WHERE w.d < 4)
-      SELECT CAST(node AS BIGINT) AS node, CAST(min(d) AS BIGINT) AS d
-      FROM walk GROUP BY node""",
-
-    // same candidate blocking (2-char prefix + length band), DuckDB's
-    // native jaro_winkler_similarity (same standard definition: 0.7
-    // boost threshold, 4-char prefix cap, p=0.1); both sides filter
-    // on the ROUNDED value so a last-ulp difference cannot flip
-    // membership at the threshold
-    "text_jaro_winkler_pairs" -> """
-      WITH v AS (
-        SELECT DISTINCT lower(w) AS w FROM (
-          SELECT unnest(string_split(p_name, ' ')) AS w FROM part
-          UNION ALL SELECT unnest(string_split(p_type, ' ')) FROM part
-          UNION ALL SELECT n_name FROM nation
-          UNION ALL SELECT r_name FROM region)
-        WHERE length(w) >= 4)
-      SELECT a.w AS w1, b.w AS w2,
-             round(jaro_winkler_similarity(a.w, b.w), 6) AS jw
-      FROM v a JOIN v b
-        ON substr(a.w, 1, 2) = substr(b.w, 1, 2)
-       AND a.w < b.w
-       AND abs(length(a.w) - length(b.w)) <= 2
-      WHERE round(jaro_winkler_similarity(a.w, b.w), 6) >= 0.92""",
-
-    // same quality binning as text_quality, same Laplace-smoothed
-    // ratios, each bin's (p-q)*ln(p/q) quantized to integer millionths
-    // before the per-source sum (the Adamic-Adar discipline)
-    // same pooled-distinct-value window; doubled tie-averaged rank
-    // sums stay exact longs, one final division
-    "stats_mann_whitney_quality" -> """
-      WITH q0 AS (
-        SELECT source,
-          len(w) AS n_words,
-          len(list_filter(w, t -> list_contains(['the','a','of','and','to','in','on'], t))) / CAST(len(w) AS DOUBLE) AS stop_raw,
-          length(regexp_replace(text, '[^a-z]', '', 'g')) / CAST(length(text) AS DOUBLE) AS alpha_raw
-        FROM (SELECT source, text, string_split(text, ' ') AS w
-              FROM documents)
-        WHERE source IN ('src0', 'src1')),
-      q AS (SELECT source,
-              CAST(round((least(stop_raw * 2.0, 1.0) * 0.4 + alpha_raw * 0.3
-                + least(n_words / 50.0, 1.0) * 0.3) * 1000000) AS BIGINT) AS q6
-            FROM q0),
-      cells AS (SELECT q6,
-                  sum(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS ca,
-                  sum(CASE WHEN source = 'src1' THEN 1 ELSE 0 END) AS cb
-                FROM q GROUP BY 1),
-      c AS (SELECT q6, ca, cb, ca + cb AS cnt,
-              coalesce(CAST(sum(ca + cb) OVER (ORDER BY q6 ROWS BETWEEN
-                UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0) AS prev
-            FROM cells),
-      a AS (SELECT CAST(sum(ca) AS BIGINT) AS n_a,
-                   CAST(sum(cb) AS BIGINT) AS n_b,
-                   CAST(sum(ca * (2 * prev + cnt + 1)) AS BIGINT) AS r2a
-            FROM c)
-      SELECT n_a, n_b, r2a - n_a * (n_a + 1) AS u2,
-             round(CAST(r2a - n_a * (n_a + 1) AS DOUBLE)
-               / (2.0 * CAST(n_a AS DOUBLE) * n_b), 6) AS effect
-      FROM a""",
-
-    // same quantized means + integer MSW; per-pair one fixed-shape
-    // formula; total-ordered top 10
-    "stats_anova_contrasts" -> """
-      WITH q0 AS (
-        SELECT source,
-          len(w) AS n_words,
-          len(list_filter(w, t -> list_contains(['the','a','of','and','to','in','on'], t))) / CAST(len(w) AS DOUBLE) AS stop_raw,
-          length(regexp_replace(text, '[^a-z]', '', 'g')) / CAST(length(text) AS DOUBLE) AS alpha_raw
-        FROM (SELECT source, text, string_split(text, ' ') AS w
-              FROM documents)),
-      q AS (SELECT source,
-              CAST(round((least(stop_raw * 2.0, 1.0) * 0.4 + alpha_raw * 0.3
-                + least(n_words / 50.0, 1.0) * 0.3) * 1000000) AS BIGINT) AS q6
-            FROM q0),
-      byg AS (SELECT source, CAST(count(*) AS BIGINT) AS ng,
-                CAST(sum(q6) AS BIGINT) AS s,
-                CAST(sum(q6 * q6) AS HUGEINT) AS x2
-              FROM q GROUP BY 1),
-      m AS (SELECT source, ng, s, x2,
-              CAST(round(CAST(s AS DOUBLE) / ng) AS BIGINT) AS m6
-            FROM byg),
-      msw AS (SELECT CAST(sum(x2 - CAST(2 * m6 * s AS HUGEINT)
-                  + CAST(ng * m6 * m6 AS HUGEINT)) AS DOUBLE)
-                / CAST(sum(ng) - count(*) AS DOUBLE) AS msw
-              FROM m)
-      SELECT a.source AS source_a, b.source AS source_b,
-             round(CAST(a.m6 - b.m6 AS DOUBLE) / 1000000.0, 6) AS mean_diff,
-             round(CAST(a.m6 - b.m6 AS DOUBLE)
-               / sqrt(msw.msw * (CAST(1.0 AS DOUBLE) / a.ng
-                                 + CAST(1.0 AS DOUBLE) / b.ng)), 6) AS z
-      FROM m a JOIN m b ON a.source < b.source
-      CROSS JOIN msw
-      ORDER BY abs(round(CAST(a.m6 - b.m6 AS DOUBLE)
-               / sqrt(msw.msw * (CAST(1.0 AS DOUBLE) / a.ng
-                                 + CAST(1.0 AS DOUBLE) / b.ng)), 6)) DESC,
-               source_a ASC, source_b ASC
-      LIMIT 10""",
-
-    // quantized-mean integer scatter sums (the Fisher discipline),
-    // one final division for F
-    "stats_anova_quality" -> """
-      WITH q0 AS (
-        SELECT source,
-          len(w) AS n_words,
-          len(list_filter(w, t -> list_contains(['the','a','of','and','to','in','on'], t))) / CAST(len(w) AS DOUBLE) AS stop_raw,
-          length(regexp_replace(text, '[^a-z]', '', 'g')) / CAST(length(text) AS DOUBLE) AS alpha_raw
-        FROM (SELECT source, text, string_split(text, ' ') AS w
-              FROM documents)),
-      q AS (SELECT source,
-              CAST(round((least(stop_raw * 2.0, 1.0) * 0.4 + alpha_raw * 0.3
-                + least(n_words / 50.0, 1.0) * 0.3) * 1000000) AS BIGINT) AS q6
-            FROM q0),
-      byg AS (SELECT source, CAST(count(*) AS BIGINT) AS ng,
-                CAST(sum(q6) AS BIGINT) AS s,
-                CAST(sum(q6 * q6) AS HUGEINT) AS x2
-              FROM q GROUP BY 1),
-      m AS (SELECT source, ng, s, x2,
-              CAST(round(CAST(s AS DOUBLE) / ng) AS BIGINT) AS m6
-            FROM byg),
-      t AS (SELECT CAST(round(CAST(sum(s) AS DOUBLE) / sum(ng)) AS BIGINT)
-              AS g6
-            FROM byg),
-      agg AS (SELECT CAST(count(*) AS BIGINT) AS k,
-                CAST(sum(ng) AS BIGINT) AS n,
-                CAST(sum(CAST(ng * (m6 - t.g6) * (m6 - t.g6) AS HUGEINT))
-                  AS HUGEINT) AS ssb,
-                CAST(sum(x2 - CAST(2 * m6 * s AS HUGEINT)
-                  + CAST(ng * m6 * m6 AS HUGEINT)) AS HUGEINT) AS ssw
-              FROM m CROSS JOIN t)
-      SELECT k, n, CAST(ssb AS BIGINT) AS ssb, CAST(ssw AS BIGINT) AS ssw,
-             round((CAST(ssb AS DOUBLE) / (k - 1))
-               / (CAST(ssw AS DOUBLE) / (n - k)), 6) AS f_stat
-      FROM agg""",
-
-    // per-source doubled tie-averaged ranks over distinct values, then
-    // Pearson over the doubled ranks with HUGEINT moments and the
-    // identical num/sqrt/sqrt division order
-    "stats_spearman_length_quality" -> """
-      WITH q0 AS (
-        SELECT source,
-          len(w) AS n_words,
-          len(list_filter(w, t -> list_contains(['the','a','of','and','to','in','on'], t))) / CAST(len(w) AS DOUBLE) AS stop_raw,
-          length(regexp_replace(text, '[^a-z]', '', 'g')) / CAST(length(text) AS DOUBLE) AS alpha_raw
-        FROM (SELECT source, text, string_split(text, ' ') AS w
-              FROM documents)),
-      base AS (SELECT source, CAST(n_words AS BIGINT) AS len,
-          CAST(round((least(stop_raw * 2.0, 1.0) * 0.4 + alpha_raw * 0.3
-            + least(n_words / 50.0, 1.0) * 0.3) * 1000000) AS BIGINT) AS q6
-        FROM q0),
-      cx AS (SELECT source, len AS v, CAST(count(*) AS BIGINT) AS cnt
-             FROM base GROUP BY 1, 2),
-      rx AS (SELECT source, v AS len,
-               2 * coalesce(CAST(sum(cnt) OVER (PARTITION BY source
-                 ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND
-                 1 PRECEDING) AS BIGINT), 0) + cnt + 1 AS r2x
-             FROM cx),
-      cy AS (SELECT source, q6 AS v, CAST(count(*) AS BIGINT) AS cnt
-             FROM base GROUP BY 1, 2),
-      ry AS (SELECT source, v AS q6,
-               2 * coalesce(CAST(sum(cnt) OVER (PARTITION BY source
-                 ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND
-                 1 PRECEDING) AS BIGINT), 0) + cnt + 1 AS r2y
-             FROM cy),
-      j AS (SELECT b.source, rx.r2x, ry.r2y
-            FROM base b
-            JOIN rx ON rx.source = b.source AND rx.len = b.len
-            JOIN ry ON ry.source = b.source AND ry.q6 = b.q6),
-      m AS (SELECT source, CAST(count(*) AS HUGEINT) AS n,
-              CAST(sum(r2x) AS HUGEINT) AS sx,
-              CAST(sum(r2y) AS HUGEINT) AS sy,
-              CAST(sum(r2x * r2x) AS HUGEINT) AS sxx,
-              CAST(sum(r2y * r2y) AS HUGEINT) AS syy,
-              CAST(sum(r2x * r2y) AS HUGEINT) AS sxy
-            FROM j GROUP BY 1)
-      SELECT source, CAST(n AS BIGINT) AS n_docs,
-             round(CAST(n * sxy - sx * sy AS DOUBLE)
-               / sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-               / sqrt(CAST(n * syy - sy * sy AS DOUBLE)), 6) AS rho
-      FROM m""",
-
-    // pooled-distinct-value ECDFs, difference kept in integer
-    // numerator form |cum_a*n_b - cum_b*n_a| until one final division
-    "stats_ks_quality" -> """
-      WITH q0 AS (
-        SELECT source,
-          len(w) AS n_words,
-          len(list_filter(w, t -> list_contains(['the','a','of','and','to','in','on'], t))) / CAST(len(w) AS DOUBLE) AS stop_raw,
-          length(regexp_replace(text, '[^a-z]', '', 'g')) / CAST(length(text) AS DOUBLE) AS alpha_raw
-        FROM (SELECT source, text, string_split(text, ' ') AS w
-              FROM documents)
-        WHERE source IN ('src0', 'src1')),
-      q AS (SELECT source,
-              CAST(round((least(stop_raw * 2.0, 1.0) * 0.4 + alpha_raw * 0.3
-                + least(n_words / 50.0, 1.0) * 0.3) * 1000000) AS BIGINT) AS q6
-            FROM q0),
-      cells AS (SELECT q6,
-                  sum(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS ca,
-                  sum(CASE WHEN source = 'src1' THEN 1 ELSE 0 END) AS cb
-                FROM q GROUP BY 1),
-      t AS (SELECT CAST(sum(ca) AS BIGINT) AS n_a,
-                   CAST(sum(cb) AS BIGINT) AS n_b FROM cells),
-      c AS (SELECT q6,
-              CAST(sum(ca) OVER (ORDER BY q6 ROWS BETWEEN UNBOUNDED
-                PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_a,
-              CAST(sum(cb) OVER (ORDER BY q6 ROWS BETWEEN UNBOUNDED
-                PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_b
-            FROM cells)
-      SELECT n_a, n_b,
-             round(CAST(max(abs(cum_a * n_b - cum_b * n_a)) AS DOUBLE)
-               / (CAST(n_a AS DOUBLE) * n_b), 6) AS ks_d
-      FROM c CROSS JOIN t GROUP BY n_a, n_b""",
-
-    // engagement replay: same distinct activity relation, same
-    // 30-day calendar fan-out, same conditional distincts
-    "events_dau_wau_mau" -> """
-      WITH act AS (SELECT DISTINCT user_id,
-                     epoch_us(ts) // 86400000000 AS d
-                   FROM events),
-      days AS (SELECT DISTINCT d AS day FROM act),
-      fan AS (SELECT a.user_id, a.d, y.day
-              FROM act a JOIN days y
-                ON y.day >= a.d AND y.day <= a.d + 29)
-      SELECT day AS epday,
-             CAST(count(DISTINCT CASE WHEN d = day THEN user_id END)
-               AS BIGINT) AS dau,
-             CAST(count(DISTINCT CASE WHEN day - d <= 6 THEN user_id END)
-               AS BIGINT) AS wau,
-             CAST(count(DISTINCT user_id) AS BIGINT) AS mau,
-             count(DISTINCT CASE WHEN d = day THEN user_id END) * 1000
-               // count(DISTINCT user_id) AS stickiness_permille
-      FROM fan GROUP BY 1""",
-
-    // SRM replay: same distinct-user arm counts, same chi-square chain
-    "events_srm_check" -> """
-      WITH a AS (SELECT
-          sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END) AS nt,
-          sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS nc
-        FROM (SELECT DISTINCT user_id FROM events))
-      SELECT CAST(nt AS BIGINT) AS n_treat, CAST(nc AS BIGINT) AS n_ctrl,
-        round((CAST(nt AS DOUBLE) - CAST(nt + nc AS DOUBLE) / 2.0)
-            * (CAST(nt AS DOUBLE) - CAST(nt + nc AS DOUBLE) / 2.0)
-            / (CAST(nt + nc AS DOUBLE) / 2.0)
-          + (CAST(nc AS DOUBLE) - CAST(nt + nc AS DOUBLE) / 2.0)
-            * (CAST(nc AS DOUBLE) - CAST(nt + nc AS DOUBLE) / 2.0)
-            / (CAST(nt + nc AS DOUBLE) / 2.0), 6) AS chi2,
-        CASE WHEN (CAST(nt AS DOUBLE) - CAST(nt + nc AS DOUBLE) / 2.0)
-            * (CAST(nt AS DOUBLE) - CAST(nt + nc AS DOUBLE) / 2.0)
-            / (CAST(nt + nc AS DOUBLE) / 2.0)
-          + (CAST(nc AS DOUBLE) - CAST(nt + nc AS DOUBLE) / 2.0)
-            * (CAST(nc AS DOUBLE) - CAST(nt + nc AS DOUBLE) / 2.0)
-            / (CAST(nt + nc AS DOUBLE) / 2.0) > 3.841
-          THEN 1 ELSE 0 END AS srm_flag
-      FROM a""",
-
-    // MDE replay: same zero-filled post-period cent moments, same
-    // pooled variance, same 2.8-sigma chain
-    "events_mde" -> """
-      WITH ev AS (SELECT user_id, event_type,
-                    CAST(round(value * 100) AS BIGINT) AS c,
-                    (epoch_us(ts) // 86400000000) < 19738 AS pre
-                  FROM events),
-      s AS (SELECT user_id, sum(c) AS y FROM ev
-            WHERE event_type = 'purchase' AND NOT pre GROUP BY 1),
-      u AS (SELECT DISTINCT user_id FROM events),
-      pu AS (SELECT u.user_id % 2 AS arm, coalesce(s.y, 0) AS y
-             FROM u LEFT JOIN s USING (user_id)),
-      m AS (SELECT count(*) AS n,
-              sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS nt,
-              sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS nc,
-              sum(y) AS sy, sum(CAST(y AS HUGEINT) * y) AS syy,
-              sum(CASE WHEN arm = 0 THEN y ELSE 0 END) AS syc
-            FROM pu)
-      SELECT CAST(nt AS BIGINT) AS n_treat, CAST(nc AS BIGINT) AS n_ctrl,
-        round(sqrt(
-            ((CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * sy / n) / n)
-              / CAST(nt AS DOUBLE)
-          + ((CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * sy / n) / n)
-              / CAST(nc AS DOUBLE)) / 100.0, 6) AS se,
-        round(2.8 * (sqrt(
-            ((CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * sy / n) / n)
-              / CAST(nt AS DOUBLE)
-          + ((CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * sy / n) / n)
-              / CAST(nc AS DOUBLE)) / 100.0), 6) AS mde_abs,
-        CAST(round(2.8 * (sqrt(
-            ((CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * sy / n) / n)
-              / CAST(nt AS DOUBLE)
-          + ((CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * sy / n) / n)
-              / CAST(nc AS DOUBLE)) / 100.0) * 1000.0
-          / (CAST(syc AS DOUBLE) / nc / 100.0)) AS BIGINT)
-          AS mde_rel_permille
-      FROM m""",
-
-    // BH-FDR replay: same per-source CDF grid, same integer sup-gap,
-    // same 3-term asymptotic p, same rank/running-min q chain
-    "stats_ks_fdr" -> """
-      WITH q0 AS (
-        SELECT source,
-          len(w) AS n_words,
-          len(list_filter(w, t -> list_contains(['the','a','of','and','to','in','on'], t))) / CAST(len(w) AS DOUBLE) AS stop_raw,
-          length(regexp_replace(text, '[^a-z]', '', 'g')) / CAST(length(text) AS DOUBLE) AS alpha_raw
-        FROM (SELECT source, text, string_split(text, ' ') AS w
-              FROM documents)),
-      q AS (SELECT source,
-              CAST(round((least(stop_raw * 2.0, 1.0) * 0.4 + alpha_raw * 0.3
-                + least(n_words / 50.0, 1.0) * 0.3) * 1000000) AS BIGINT) AS q6
-            FROM q0),
-      cells AS (SELECT source, q6, count(*) AS c FROM q GROUP BY 1, 2),
-      grid AS (SELECT g.q6, s.source, coalesce(cells.c, 0) AS c
-               FROM (SELECT DISTINCT q6 FROM cells) g
-               CROSS JOIN (SELECT DISTINCT source FROM cells) s
-               LEFT JOIN cells ON cells.q6 = g.q6
-                 AND cells.source = s.source),
-      cdf AS (SELECT source, q6,
-                CAST(sum(c) OVER (PARTITION BY source ORDER BY q6
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                  AS BIGINT) AS cum
-              FROM grid),
-      tot AS (SELECT source, CAST(sum(c) AS BIGINT) AS n
-              FROM cells GROUP BY 1),
-      pd AS (SELECT a.source AS sa, b.source AS sb,
-               ta.n AS na, tb.n AS nb,
-               max(abs(a.cum * tb.n - b.cum * ta.n)) AS dint
-             FROM cdf a JOIN cdf b ON a.q6 = b.q6 AND a.source < b.source
-             JOIN tot ta ON ta.source = a.source
-             JOIN tot tb ON tb.source = b.source
-             GROUP BY 1, 2, 3, 4),
-      pp AS (SELECT sa, sb,
-               CAST(dint AS DOUBLE) / (CAST(na AS DOUBLE) * nb) AS d,
-               least(1.0, greatest(0.0, 2.0 * (
-                 exp(-2.0 * (((sqrt(CAST(na AS DOUBLE) * nb / (na + nb))
-                     + 0.12 + 0.11 / sqrt(CAST(na AS DOUBLE) * nb
-                       / (na + nb)))
-                   * (CAST(dint AS DOUBLE) / (CAST(na AS DOUBLE) * nb)))
-                   * ((sqrt(CAST(na AS DOUBLE) * nb / (na + nb))
-                     + 0.12 + 0.11 / sqrt(CAST(na AS DOUBLE) * nb
-                       / (na + nb)))
-                   * (CAST(dint AS DOUBLE) / (CAST(na AS DOUBLE) * nb)))))
-                 - exp(-8.0 * (((sqrt(CAST(na AS DOUBLE) * nb / (na + nb))
-                     + 0.12 + 0.11 / sqrt(CAST(na AS DOUBLE) * nb
-                       / (na + nb)))
-                   * (CAST(dint AS DOUBLE) / (CAST(na AS DOUBLE) * nb)))
-                   * ((sqrt(CAST(na AS DOUBLE) * nb / (na + nb))
-                     + 0.12 + 0.11 / sqrt(CAST(na AS DOUBLE) * nb
-                       / (na + nb)))
-                   * (CAST(dint AS DOUBLE) / (CAST(na AS DOUBLE) * nb)))))
-                 + exp(-18.0 * (((sqrt(CAST(na AS DOUBLE) * nb / (na + nb))
-                     + 0.12 + 0.11 / sqrt(CAST(na AS DOUBLE) * nb
-                       / (na + nb)))
-                   * (CAST(dint AS DOUBLE) / (CAST(na AS DOUBLE) * nb)))
-                   * ((sqrt(CAST(na AS DOUBLE) * nb / (na + nb))
-                     + 0.12 + 0.11 / sqrt(CAST(na AS DOUBLE) * nb
-                       / (na + nb)))
-                   * (CAST(dint AS DOUBLE) / (CAST(na AS DOUBLE) * nb)))))
-                 ))) AS p
-             FROM pd),
-      rk AS (SELECT sa, sb, d, p,
-               row_number() OVER (ORDER BY p, sa, sb) AS rk,
-               count(*) OVER () AS m
-             FROM pp)
-      SELECT sa AS source_a, sb AS source_b,
-             round(d, 6) AS d, round(p, 6) AS p_raw,
-             round(least(1.0, min(p * m / rk) OVER (ORDER BY rk
-               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)), 6)
-               AS q_value,
-             CASE WHEN least(1.0, min(p * m / rk) OVER (ORDER BY rk
-               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)) <= 0.05
-               THEN 1 ELSE 0 END AS significant
-      FROM rk""",
-
-    // mSPRT replay: same daily cent/HUGEINT rollup, same cumulative
-    // windows over the calendar-bounded day relation, same Λ chain
-    // (streamed twin shares it: the stream maintains the identical
-    // daily moment state, so the chain output matches bit-for-bit)
-    "events_msprt_monitor_streamed" -> msprtOracle,
-    "events_msprt_monitor" -> msprtOracle,
-  ) ++ oracleSqlRest
-
-  /** mSPRT oracle shared by the batch row and its streamed twin. */
-  private val msprtOracle: String = """
-      WITH daily AS (
-        SELECT epoch_us(ts) // 86400000000 AS epday,
-          sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END) AS nt,
-          sum(CASE WHEN user_id % 2 = 1
-              THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END) AS st,
-          sum(CASE WHEN user_id % 2 = 1
-              THEN CAST(round(value * 100) AS HUGEINT)
-                   * CAST(round(value * 100) AS BIGINT) ELSE 0 END) AS qt,
-          sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS nc,
-          sum(CASE WHEN user_id % 2 = 0
-              THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END) AS sc,
-          sum(CASE WHEN user_id % 2 = 0
-              THEN CAST(round(value * 100) AS HUGEINT)
-                   * CAST(round(value * 100) AS BIGINT) ELSE 0 END) AS qc
-        FROM events WHERE event_type = 'purchase' GROUP BY 1),
-      cum AS (
-        SELECT epday,
-          sum(nt) OVER w AS cnt, sum(st) OVER w AS cst,
-          sum(qt) OVER w AS cqt,
-          sum(nc) OVER w AS cnc, sum(sc) OVER w AS csc,
-          sum(qc) OVER w AS cqc
-        FROM daily
-        WINDOW w AS (ORDER BY epday
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-      f AS (SELECT * FROM cum WHERE cnt > 1 AND cnc > 1),
-      x AS (
-        SELECT epday, cnt, cnc,
-          CAST(cst AS DOUBLE) / cnt / 100.0
-            - CAST(csc AS DOUBLE) / cnc / 100.0 AS eff,
-          (CAST(cqt AS DOUBLE) / 10000.0
-             - (CAST(cst AS DOUBLE) / 100.0) * (CAST(cst AS DOUBLE) / 100.0)
-               / cnt) / cnt / CAST(cnt AS DOUBLE)
-          + (CAST(cqc AS DOUBLE) / 10000.0
-             - (CAST(csc AS DOUBLE) / 100.0) * (CAST(csc AS DOUBLE) / 100.0)
-               / cnc) / cnc / CAST(cnc AS DOUBLE) AS v
-        FROM f),
-      lr AS (
-        SELECT epday, cnt, cnc, eff,
-          sqrt(v / (v + 100.0))
-            * exp(eff * eff * 100.0 / (2.0 * v * (v + 100.0))) AS lam
-        FROM x)
-      SELECT epday, CAST(cnt AS BIGINT) AS n_treat,
-             CAST(cnc AS BIGINT) AS n_ctrl,
-             round(eff, 6) AS effect, round(lam, 6) AS lam,
-             round(min(least(1.0, 1.0 / lam)) OVER
-               (ORDER BY epday
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6)
-               AS p_always_valid
-      FROM lr"""
-
-  /** Daily PSI drift oracle shared by the batch row and its streamed
-    * twin: same fixed cent bins, same dense |days|×10 grid, same
-    * smoothed micro-quantized term sum.
-    */
-  private val psiDriftOracle: String = """
-      WITH e AS (SELECT epoch_us(ts) // 86400000000 AS epday,
-                   least(CAST(round(value * 100) AS BIGINT) // 5000, 9)
-                     AS bin
-                 FROM events WHERE event_type = 'purchase'),
-      g AS (SELECT epday, bin, count(*) AS c FROM e GROUP BY 1, 2),
-      t AS (SELECT epday, sum(c) AS nd FROM g GROUP BY 1),
-      grid AS (SELECT t.epday, t.nd,
-                 unnest(generate_series(0, 9)) AS bin FROM t),
-      d AS (SELECT grid.epday, grid.nd, grid.bin, coalesce(g.c, 0) AS c
-            FROM grid LEFT JOIN g
-              ON g.epday = grid.epday AND g.bin = grid.bin),
-      j AS (SELECT a.epday, a.nd AS n_curr, p.nd AS n_prev,
-                   (a.c + 1) / CAST(a.nd + 10 AS DOUBLE) AS pc,
-                   (p.c + 1) / CAST(p.nd + 10 AS DOUBLE) AS pp
-            FROM d a JOIN d p
-              ON p.epday = a.epday - 1 AND p.bin = a.bin)
-      SELECT epday, CAST(max(n_curr) AS BIGINT) AS n_curr,
-             CAST(max(n_prev) AS BIGINT) AS n_prev,
-             round(sum(CAST(round((pc - pp) * ln(pc / pp) * 1000000.0)
-               AS BIGINT)) / 1000000.0, 6) AS psi
-      FROM j GROUP BY 1"""
-
-  private val oracleSqlRest: Map[String, String] = Map(
-    // DiD replay: same per-user deltas, same population variances of
-    // the deltas, same fixed-order interval chain
-    "events_did_lift" -> """
-      WITH ev AS (SELECT user_id, event_type,
-                    CAST(round(value * 100) AS BIGINT) AS c,
-                    (epoch_us(ts) // 86400000000) < 19738 AS pre
-                  FROM events),
-      s AS (SELECT user_id,
-              sum(CASE WHEN pre THEN c ELSE 0 END) AS x,
-              sum(CASE WHEN NOT pre THEN c ELSE 0 END) AS y
-            FROM ev WHERE event_type = 'purchase' GROUP BY 1),
-      u AS (SELECT DISTINCT user_id FROM events),
-      pu AS (SELECT u.user_id % 2 AS arm,
-               coalesce(s.y, 0) - coalesce(s.x, 0) AS d
-             FROM u LEFT JOIN s USING (user_id)),
-      a AS (SELECT arm, count(*) AS n, sum(d) AS sd,
-              sum(CAST(d AS HUGEINT) * d) AS sdd
-            FROM pu GROUP BY 1),
-      t AS (SELECT n AS nt, sd AS sdt, sdd AS sddt FROM a WHERE arm = 1),
-      c AS (SELECT n AS nc, sd AS sdc, sdd AS sddc FROM a WHERE arm = 0)
-      SELECT CAST(nt AS BIGINT) AS n_treat, CAST(nc AS BIGINT) AS n_ctrl,
-        round((CAST(sdt AS DOUBLE) / nt - CAST(sdc AS DOUBLE) / nc)
-          / 100.0, 6) AS did,
-        round(sqrt(
-            ((CAST(sddt AS DOUBLE) - CAST(sdt AS DOUBLE)
-                * CAST(sdt AS DOUBLE) / nt) / nt) / CAST(nt AS DOUBLE)
-          + ((CAST(sddc AS DOUBLE) - CAST(sdc AS DOUBLE)
-                * CAST(sdc AS DOUBLE) / nc) / nc) / CAST(nc AS DOUBLE))
-          / 100.0, 6) AS se,
-        round((CAST(sdt AS DOUBLE) / nt - CAST(sdc AS DOUBLE) / nc)
-          / 100.0 - 1.96 * (sqrt(
-            ((CAST(sddt AS DOUBLE) - CAST(sdt AS DOUBLE)
-                * CAST(sdt AS DOUBLE) / nt) / nt) / CAST(nt AS DOUBLE)
-          + ((CAST(sddc AS DOUBLE) - CAST(sdc AS DOUBLE)
-                * CAST(sdc AS DOUBLE) / nc) / nc) / CAST(nc AS DOUBLE))
-          / 100.0), 6) AS lo95,
-        round((CAST(sdt AS DOUBLE) / nt - CAST(sdc AS DOUBLE) / nc)
-          / 100.0 + 1.96 * (sqrt(
-            ((CAST(sddt AS DOUBLE) - CAST(sdt AS DOUBLE)
-                * CAST(sdt AS DOUBLE) / nt) / nt) / CAST(nt AS DOUBLE)
-          + ((CAST(sddc AS DOUBLE) - CAST(sdc AS DOUBLE)
-                * CAST(sdc AS DOUBLE) / nc) / nc) / CAST(nc AS DOUBLE))
-          / 100.0), 6) AS hi95
-      FROM t CROSS JOIN c""",
-
-    // CUPED replay: same cent moments, same fixed-order IEEE chain for
-    // theta / adjusted means / rho^2 (num*num, never pow)
-    "events_cuped_lift" -> """
-      WITH ev AS (SELECT user_id, event_type,
-                    CAST(round(value * 100) AS BIGINT) AS c,
-                    (epoch_us(ts) // 86400000000) < 19738 AS pre
-                  FROM events),
-      s AS (SELECT user_id,
-              sum(CASE WHEN pre THEN c ELSE 0 END) AS x,
-              sum(CASE WHEN NOT pre THEN c ELSE 0 END) AS y
-            FROM ev WHERE event_type = 'purchase' GROUP BY 1),
-      u AS (SELECT DISTINCT user_id FROM events),
-      pu AS (SELECT u.user_id, u.user_id % 2 AS arm,
-               coalesce(s.x, 0) AS x, coalesce(s.y, 0) AS y
-             FROM u LEFT JOIN s USING (user_id)),
-      p AS (SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-              sum(x * y) AS sxy, sum(x * x) AS sxx, sum(y * y) AS syy
-            FROM pu),
-      a AS (SELECT arm, count(*) AS na, sum(x) AS sxa, sum(y) AS sya
-            FROM pu GROUP BY 1)
-      SELECT arm, CAST(na AS BIGINT) AS n_users,
-        round(CAST(sxa AS DOUBLE) / na / 100.0, 6) AS mean_x,
-        round(CAST(sya AS DOUBLE) / na / 100.0, 6) AS mean_y,
-        round(CAST(sya AS DOUBLE) / na / 100.0 -
-          ((CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-           / (CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx))
-          * (CAST(sxa AS DOUBLE) / na / 100.0
-             - CAST(sx AS DOUBLE) / n / 100.0), 6) AS mean_y_adj,
-        round((CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-          / (CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx), 6)
-          AS theta,
-        CAST(round(((CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-            * (CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy))
-          / ((CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx)
-             * (CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy))
-          * 1000.0) AS BIGINT) AS var_reduction_permille
-      FROM a CROSS JOIN p""",
-
-    // envelope existential replay: same min/max rollup, same strict
-    // precedence test, same permille integer division
-    "events_sequence_support" -> """
-      WITH env AS (SELECT user_id, event_type,
-                     min(ts) AS mn, max(ts) AS mx
-                   FROM events GROUP BY 1, 2),
-      tot AS (SELECT count(DISTINCT user_id) AS n_total FROM events),
-      sup AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-                count(*) AS n_users
-              FROM env a JOIN env b ON a.user_id = b.user_id
-              WHERE a.mn < b.mx GROUP BY 1, 2)
-      SELECT type_a, type_b, n_users,
-             n_users * 1000 // n_total AS permille
-      FROM sup CROSS JOIN tot""",
-
-    // integer rule replay: identical word-count / summed-length /
-    // alpha-word / distinct-stopword bounds, cross-multiplied
-    "text_gopher_rules" -> """
-      WITH d AS (SELECT doc_id, text, string_split(text, ' ') AS w
-                 FROM documents),
-      f AS (SELECT doc_id,
-              len(w) AS n,
-              length(text) - (len(w) - 1) AS sum_len,
-              len(list_filter(w, t -> regexp_matches(t, '[a-z]')))
-                AS alpha_words,
-              len(list_intersect(list_distinct(w),
-                ['the','a','of','and','to','in','on'])) AS n_stops
-            FROM d)
-      SELECT doc_id, CAST(n AS BIGINT) AS n_words,
-             n >= 20 AND n <= 1000 AS wc_ok,
-             sum_len >= n * 3 AND sum_len <= n * 10 AS mwl_ok,
-             alpha_words * 1000 >= n * 800 AS alpha_ok,
-             n_stops >= 2 AS stop_ok,
-             (n >= 20 AND n <= 1000) AND
-               (sum_len >= n * 3 AND sum_len <= n * 10) AND
-               (alpha_words * 1000 >= n * 800) AND (n_stops >= 2) AS pass
-      FROM f""",
-
-    // full bootstrap replay: identical hash-derived Exp(1) weights,
-    // identical milli-cent/nano-weight quantization before the
-    // per-replicate sums, identical rank-3/rank-98 cut of B=100
-    // delta-method replay: same integer moments, same fixed-order
-    // linearized-variance chain, population divisors
-    "stats_ratio_ci_delta" -> """
-      WITH per AS (SELECT o_custkey,
-                     sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS y,
-                     count(*) AS k
-                   FROM orders GROUP BY 1),
-      pu AS (SELECT c.c_custkey, coalesce(p.y, 0) AS y,
-               coalesce(p.k, 0) AS k
-             FROM customer c LEFT JOIN per p ON c.c_custkey = p.o_custkey),
-      m AS (SELECT count(*) AS n, sum(y) AS sy, sum(k) AS sk,
-              sum(CAST(y AS HUGEINT) * k) AS syk,
-              sum(CAST(y AS HUGEINT) * y) AS syy,
-              sum(k * k) AS skk
-            FROM pu),
-      d AS (SELECT n, CAST(sy AS DOUBLE) / sk AS r,
-              (CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * sy / n) / n
-                AS vy,
-              (CAST(skk AS DOUBLE) - CAST(sk AS DOUBLE) * sk / n) / n
-                AS vk,
-              (CAST(syk AS DOUBLE) - CAST(sy AS DOUBLE) * sk / n) / n
-                AS cyk,
-              CAST(sk AS DOUBLE) / n AS mk
-            FROM m),
-      s AS (SELECT n, r,
-              sqrt((vy - 2.0 * r * cyk + r * r * vk)
-                   / (CAST(n AS DOUBLE) * mk * mk)) AS se
-            FROM d)
-      SELECT CAST(n AS BIGINT) AS n_customers,
-             round(r / 100.0, 6) AS ratio,
-             round(se / 100.0, 6) AS se,
-             round((r - 1.96 * se) / 100.0, 6) AS lo95,
-             round((r + 1.96 * se) / 100.0, 6) AS hi95
-      FROM s""",
-
-    "stats_bootstrap_ci" -> """
-      WITH r AS (SELECT o_orderkey,
-                   CAST(round(o_totalprice * 100) AS BIGINT) AS x100,
-                   unnest(generate_series(1, 100)) AS b
-                 FROM orders),
-      h AS (SELECT b, x100,
-              list_reduce(list_prepend(CAST(0 AS BIGINT),
-                list_transform(string_split(
-                  CAST(o_orderkey AS VARCHAR) || ':bs' ||
-                    CAST(b AS VARCHAR), ''),
-                  c -> CAST(unicode(c) AS BIGINT))),
-                (acc, c) -> (acc * 31 + c) % 1000000007) AS hv
-            FROM r),
-      h2 AS (SELECT b, x100,
-               (hv * hv + hv) % 1000000007 AS hv2 FROM h),
-      w AS (SELECT b,
-              CAST(round(-(ln((CAST(hv2 AS DOUBLE) + 1.0) / 1000000008.0))
-                * x100 * 1000.0) AS BIGINT) AS qwx,
-              CAST(round(-(ln((CAST(hv2 AS DOUBLE) + 1.0) / 1000000008.0))
-                * 1000000000.0) AS BIGINT) AS qw
-            FROM h2),
-      m AS (SELECT b, CAST(sum(qwx) AS DOUBLE) * 1000000.0
-                        / CAST(sum(qw) AS DOUBLE) / 100.0 AS m
-            FROM w GROUP BY b),
-      rk AS (SELECT m, row_number() OVER (ORDER BY m, b) AS rk FROM m),
-      t AS (SELECT count(*) AS n_orders,
-              sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0
-                / count(*) AS mean_raw
-            FROM orders)
-      SELECT n_orders, round(mean_raw, 6) AS mean,
-             (SELECT round(m, 6) FROM rk WHERE rk = 3) AS lo95,
-             (SELECT round(m, 6) FROM rk WHERE rk = 98) AS hi95
-      FROM t""",
-
-    // JSD replay: same 8-bin quality histogram, identical per-bin
-    // double term quantized to picounit longs before the pair sum
-    "stats_jsd_sources" -> """
-      WITH d AS (
-        SELECT source,
-          least(CAST(floor(round(least(stop_raw * 2.0, 1.0) * 0.4
-                  + alpha_raw * 0.3 + least(n_words / 50.0, 1.0) * 0.3,
-                6) * 8) AS INT), 7) AS bin
-        FROM (SELECT source, len(w) AS n_words,
-                len(list_filter(w, t -> list_contains(
-                  ['the','a','of','and','to','in','on'], t)))
-                  / CAST(len(w) AS DOUBLE) AS stop_raw,
-                length(regexp_replace(text, '[^a-z]', '', 'g'))
-                  / CAST(length(text) AS DOUBLE) AS alpha_raw
-              FROM (SELECT source, text, string_split(text, ' ') AS w
-                    FROM documents))),
-      g AS (SELECT source, bin, count(*) AS c FROM d GROUP BY 1, 2),
-      st AS (SELECT source, sum(c) AS ns FROM g GROUP BY 1),
-      grid AS (SELECT gg.source, gg.ns, gg.bin, coalesce(g.c, 0) AS c
-               FROM (SELECT source, ns,
-                       unnest(generate_series(0, 7)) AS bin
-                     FROM st) gg
-               LEFT JOIN g ON g.source = gg.source AND g.bin = gg.bin),
-      a AS (SELECT source AS source_a, bin, c AS ca, ns AS na FROM grid),
-      b AS (SELECT source AS source_b, bin, c AS cb, ns AS nb FROM grid),
-      t AS (SELECT source_a, source_b,
-              CAST(round((
-                (CASE WHEN ca > 0 THEN (CAST(ca AS DOUBLE) / na)
-                   * ln(2.0 * (CAST(ca AS DOUBLE) / na)
-                        / ((CAST(ca AS DOUBLE) / na)
-                           + (CAST(cb AS DOUBLE) / nb)))
-                 ELSE 0 END)
-              + (CASE WHEN cb > 0 THEN (CAST(cb AS DOUBLE) / nb)
-                   * ln(2.0 * (CAST(cb AS DOUBLE) / nb)
-                        / ((CAST(ca AS DOUBLE) / na)
-                           + (CAST(cb AS DOUBLE) / nb)))
-                 ELSE 0 END)) * 1000000000000.0) AS BIGINT) AS t12
-            FROM a JOIN b USING (bin) WHERE source_a < source_b)
-      SELECT source_a, source_b,
-             round(CAST(sum(t12) AS DOUBLE) / 2000000000000.0, 6) AS jsd
-      FROM t GROUP BY 1, 2""",
-
-    // identical keyed-hash tokens (sha256 over the same concatenated
-    // string), identical (n_events desc, user_id) top-3 cut
-    "privacy_pseudonymize" -> """
-      WITH base AS (SELECT event_type, user_id,
-              sha256('graft-pseu-k1:' || CAST(user_id AS VARCHAR)) AS tok
-            FROM events),
-      aud AS (SELECT event_type, count(DISTINCT user_id) AS n_users,
-                count(DISTINCT tok) AS n_tokens
-              FROM base GROUP BY 1),
-      cnt AS (SELECT event_type, user_id, tok, count(*) AS n_events
-              FROM base GROUP BY 1, 2, 3),
-      top AS (SELECT *, row_number() OVER (PARTITION BY event_type
-                ORDER BY n_events DESC, user_id ASC) AS rk FROM cnt)
-      SELECT t.event_type, t.user_id, substr(t.tok, 1, 16) AS token16,
-             t.n_events, a.n_users, a.n_tokens
-      FROM top t JOIN aud a USING (event_type) WHERE t.rk <= 3""",
-
-    // daily PSI drift replay: same fixed cent bins, same dense
-    // |days|x10 grid, same smoothed micro-quantized term sum
-    // (streamed twin shares it: the stream maintains the identical
-    // cell state, so the chain output matches bit-for-bit)
-    "stats_psi_drift_daily" -> psiDriftOracle,
-    "stats_psi_drift_streamed" -> psiDriftOracle,
-
-    "stats_psi_by_source" -> """
-      WITH d AS (
-        SELECT source,
-          least(CAST(floor(round(least(stop_raw * 2.0, 1.0) * 0.4
-                  + alpha_raw * 0.3 + least(n_words / 50.0, 1.0) * 0.3,
-                6) * 5) AS INT), 4) AS bin
-        FROM (SELECT source, len(w) AS n_words,
-                len(list_filter(w, t -> list_contains(
-                  ['the','a','of','and','to','in','on'], t)))
-                  / CAST(len(w) AS DOUBLE) AS stop_raw,
-                length(regexp_replace(text, '[^a-z]', '', 'g'))
-                  / CAST(length(text) AS DOUBLE) AS alpha_raw
-              FROM (SELECT source, text, string_split(text, ' ') AS w
-                    FROM documents))),
-      g AS (SELECT source, bin, count(*) AS c FROM d GROUP BY 1, 2),
-      st AS (SELECT source, sum(c) AS ns FROM g GROUP BY 1),
-      cb AS (SELECT bin, sum(c) AS cbn FROM g GROUP BY 1),
-      nn AS (SELECT sum(c) AS n FROM g),
-      grid AS (SELECT source, ns, unnest(generate_series(0, 4)) AS bin
-               FROM st),
-      j AS (SELECT grid.source, grid.ns, grid.bin,
-                   coalesce(g.c, 0) AS c, cb.cbn, nn.n
-            FROM grid LEFT JOIN g
-              ON g.source = grid.source AND g.bin = grid.bin
-            JOIN cb ON cb.bin = grid.bin, nn),
-      t AS (SELECT source, CAST(round(
-              ((c + 1) / CAST(ns + 5 AS DOUBLE)
-                - (cbn + 1) / CAST(n + 5 AS DOUBLE))
-              * ln(((c + 1) / CAST(ns + 5 AS DOUBLE))
-                   / ((cbn + 1) / CAST(n + 5 AS DOUBLE)))
-              * 1000000.0) AS BIGINT) AS m
-            FROM j)
-      SELECT source, round(CAST(sum(m) AS DOUBLE) / 1000000.0, 6) AS psi
-      FROM t GROUP BY source""",
-
-    // identical exact-integer moments (DuckDB integer sums promote to
-    // HUGEINT; Spark sums DECIMAL(38,0)) and the identical final
-    // double formula — corr is scale-invariant so cent-space == raw
-    "stats_correlation_matrix" -> """
-      WITH q AS (SELECT CAST(round(l_quantity * 100, 0) AS BIGINT) AS q,
-                        CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS e,
-                        CAST(round(l_discount * 100, 0) AS BIGINT) AS dd,
-                        CAST(round(l_tax * 100, 0) AS BIGINT) AS t
-                 FROM lineitem),
-      m AS (SELECT CAST(count(*) AS HUGEINT) AS n,
-                   sum(q) AS s_q, sum(e) AS s_e, sum(dd) AS s_d,
-                   sum(t) AS s_t,
-                   sum(q*q) AS ss_q, sum(e*e) AS ss_e, sum(dd*dd) AS ss_d,
-                   sum(t*t) AS ss_t,
-                   sum(q*e) AS x_qe, sum(q*dd) AS x_qd, sum(q*t) AS x_qt,
-                   sum(e*dd) AS x_ed, sum(e*t) AS x_et, sum(dd*t) AS x_dt
-            FROM q)
-      SELECT 'l_quantity' AS col_x, 'l_extendedprice' AS col_y,
-             round(CAST(n*x_qe - s_q*s_e AS DOUBLE)
-               / sqrt(CAST(n*ss_q - s_q*s_q AS DOUBLE))
-               / sqrt(CAST(n*ss_e - s_e*s_e AS DOUBLE)), 6) AS corr FROM m
-      UNION ALL
-      SELECT 'l_quantity', 'l_discount',
-             round(CAST(n*x_qd - s_q*s_d AS DOUBLE)
-               / sqrt(CAST(n*ss_q - s_q*s_q AS DOUBLE))
-               / sqrt(CAST(n*ss_d - s_d*s_d AS DOUBLE)), 6) FROM m
-      UNION ALL
-      SELECT 'l_quantity', 'l_tax',
-             round(CAST(n*x_qt - s_q*s_t AS DOUBLE)
-               / sqrt(CAST(n*ss_q - s_q*s_q AS DOUBLE))
-               / sqrt(CAST(n*ss_t - s_t*s_t AS DOUBLE)), 6) FROM m
-      UNION ALL
-      SELECT 'l_extendedprice', 'l_discount',
-             round(CAST(n*x_ed - s_e*s_d AS DOUBLE)
-               / sqrt(CAST(n*ss_e - s_e*s_e AS DOUBLE))
-               / sqrt(CAST(n*ss_d - s_d*s_d AS DOUBLE)), 6) FROM m
-      UNION ALL
-      SELECT 'l_extendedprice', 'l_tax',
-             round(CAST(n*x_et - s_e*s_t AS DOUBLE)
-               / sqrt(CAST(n*ss_e - s_e*s_e AS DOUBLE))
-               / sqrt(CAST(n*ss_t - s_t*s_t AS DOUBLE)), 6) FROM m
-      UNION ALL
-      SELECT 'l_discount', 'l_tax',
-             round(CAST(n*x_dt - s_d*s_t AS DOUBLE)
-               / sqrt(CAST(n*ss_d - s_d*s_d AS DOUBLE))
-               / sqrt(CAST(n*ss_t - s_t*s_t AS DOUBLE)), 6) FROM m""",
-
-    // window-sum totals over the 25-cell contingency table; per-cell
-    // (O-E)^2/E quantized to integer millionths before the exact sum
-    "stats_chi_square" -> """
-      WITH cells AS (SELECT o_orderpriority AS a, c_mktsegment AS b,
-                            count(*) AS o
-                     FROM orders JOIN customer ON o_custkey = c_custkey
-                     GROUP BY 1, 2),
-      w AS (SELECT a, b, o,
-                   sum(o) OVER (PARTITION BY a) AS r,
-                   sum(o) OVER (PARTITION BY b) AS c,
-                   sum(o) OVER () AS n FROM cells),
-      k AS (SELECT count(DISTINCT a) AS n_a, count(DISTINCT b) AS n_b
-            FROM cells),
-      s AS (SELECT sum(CAST(round(pow(CAST(o AS DOUBLE)
-                - CAST(r AS DOUBLE) * CAST(c AS DOUBLE) / CAST(n AS DOUBLE), 2)
-              / (CAST(r AS DOUBLE) * CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
-              * 1000000, 0) AS BIGINT)) AS cm,
-            max(n) AS n FROM w)
-      SELECT CAST(cm AS DOUBLE) / 1000000.0 AS chi2,
-             CAST((n_a - 1) * (n_b - 1) AS BIGINT) AS dof,
-             CAST(n AS BIGINT) AS n
-      FROM s, k""",
-
-    // two-level quantization (micro coords, micro re-quantized means),
-    // DECIMAL scatter sums, one final division
-    "emb_fisher_separability" -> """
-      WITH e AS (SELECT label,
-                   generate_subscripts(embedding, 1) AS dim,
-                   CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000)
-                     AS BIGINT) AS x6
-                 FROM embeddings),
-      byld AS (SELECT label, dim, CAST(count(*) AS BIGINT) AS nl,
-                 CAST(sum(x6) AS BIGINT) AS s,
-                 CAST(sum(x6 * x6) AS HUGEINT) AS x2
-               FROM e GROUP BY 1, 2),
-      m AS (SELECT label, dim, nl, s, x2,
-              CAST(round(CAST(s AS DOUBLE) / nl) AS BIGINT) AS m6
-            FROM byld),
-      byd AS (SELECT dim,
-                CAST(round(CAST(sum(s) AS DOUBLE) / sum(nl)) AS BIGINT)
-                  AS g6
-              FROM byld GROUP BY 1),
-      agg AS (SELECT CAST(count(DISTINCT m.label) AS BIGINT) AS n_labels,
-                CAST(count(DISTINCT m.dim) AS BIGINT) AS n_dims,
-                CAST(sum(CAST(m.nl * (m.m6 - byd.g6) * (m.m6 - byd.g6)
-                  AS HUGEINT)) AS HUGEINT) AS b,
-                CAST(sum(m.x2 - CAST(2 * m.m6 * m.s AS HUGEINT)
-                  + CAST(m.nl * m.m6 * m.m6 AS HUGEINT)) AS HUGEINT) AS w
-              FROM m JOIN byd USING (dim))
-      SELECT n_labels, n_dims,
-             CAST(b AS BIGINT) AS between_ss,
-             CAST(w AS BIGINT) AS within_ss,
-             round(CAST(b AS DOUBLE) / CAST(w AS DOUBLE), 6)
-               AS fisher_ratio
-      FROM agg""",
-
-    // every check replayed as exact integer counting over the same
-    // tables; referential edges as NOT IN orphan counts
-    // NULL semantics pinned on BOTH sides: NULL-component rows count
-    // out explicitly, distinct runs over the non-NULL remainder only
-    // FD audit replay: the same per-candidate two-phase rollup
-    // (groupBy lhs, countDistinct rhs) folded to one audit row each
-    "quality_fd_violations" -> """
-      WITH
-      a1 AS (SELECT n_nationkey AS l, count(DISTINCT n_regionkey) AS d,
-               count(*) AS c FROM nation GROUP BY 1),
-      a2 AS (SELECT p_brand AS l, count(DISTINCT p_type) AS d,
-               count(*) AS c FROM part GROUP BY 1),
-      a3 AS (SELECT c_nationkey AS l, count(DISTINCT c_mktsegment) AS d,
-               count(*) AS c FROM customer GROUP BY 1),
-      a4 AS (SELECT o_custkey AS l, count(DISTINCT o_orderpriority) AS d,
-               count(*) AS c FROM orders GROUP BY 1),
-      a5 AS (SELECT o_orderdate AS l, count(DISTINCT o_orderstatus) AS d,
-               count(*) AS c FROM orders GROUP BY 1),
-      a6 AS (SELECT l_orderkey AS l, count(DISTINCT l_shipdate) AS d,
-               count(*) AS c FROM lineitem GROUP BY 1),
-      f AS (
-        SELECT 'nation.n_nationkey -> n_regionkey' AS fd, * FROM a1
-        UNION ALL SELECT 'part.p_brand -> p_type', * FROM a2
-        UNION ALL SELECT 'customer.c_nationkey -> c_mktsegment', * FROM a3
-        UNION ALL SELECT 'orders.o_custkey -> o_orderpriority', * FROM a4
-        UNION ALL SELECT 'orders.o_orderdate -> o_orderstatus', * FROM a5
-        UNION ALL SELECT 'lineitem.l_orderkey -> l_shipdate', * FROM a6)
-      SELECT fd, CAST(sum(c) AS BIGINT) AS n_rows,
-             CAST(count(*) AS BIGINT) AS n_groups,
-             CAST(sum(CASE WHEN d > 1 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_violating_groups,
-             CAST(sum(CASE WHEN d > 1 THEN c ELSE 0 END) AS BIGINT)
-               AS n_violating_rows,
-             CASE WHEN sum(CASE WHEN d > 1 THEN 1 ELSE 0 END) = 0
-               THEN 1 ELSE 0 END AS holds
-      FROM f GROUP BY fd""",
-
-    "quality_expectations_nullkeys" -> """
-      WITH k AS (SELECT nullif(l_orderkey % 1000, 0) AS k1,
-                        nullif(l_linenumber, 7) AS k2
-                 FROM lineitem)
-      SELECT 'lineitem.(k1,k2) unique among non-NULL' AS check,
-             CAST(count(*) AS BIGINT) AS n_rows,
-             CAST(sum(CASE WHEN k1 IS NULL OR k2 IS NULL THEN 1 ELSE 0 END)
-               AS BIGINT) AS n_nullkey_rows,
-             CAST(count(*) - sum(CASE WHEN k1 IS NULL OR k2 IS NULL
-               THEN 1 ELSE 0 END) AS BIGINT) AS n_nonnull_rows,
-             CAST(count(DISTINCT (k1, k2))
-               FILTER (WHERE k1 IS NOT NULL AND k2 IS NOT NULL)
-               AS BIGINT) AS n_distinct_keys,
-             CAST(count(*) - sum(CASE WHEN k1 IS NULL OR k2 IS NULL
-                 THEN 1 ELSE 0 END)
-               - count(DISTINCT (k1, k2))
-                 FILTER (WHERE k1 IS NOT NULL AND k2 IS NOT NULL)
-               AS BIGINT) AS n_duplicates,
-             CASE WHEN count(*) = count(DISTINCT (k1, k2))
-               FILTER (WHERE k1 IS NOT NULL AND k2 IS NOT NULL)
-               THEN 1 ELSE 0 END AS passed
-      FROM k""",
-
-    "quality_expectations" -> """
-      WITH oc AS (SELECT count(*) AS n,
-                    sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS nc,
-                    count(DISTINCT o_orderkey) AS dk,
-                    sum(CASE WHEN CAST(round(o_totalprice*100) AS BIGINT) <= 0
-                        THEN 1 ELSE 0 END) AS np,
-                    sum(CASE WHEN o_orderstatus NOT IN ('O','F','P')
-                        THEN 1 ELSE 0 END) AS bs
-                  FROM orders),
-      lc AS (SELECT count(*) AS n,
-               count(DISTINCT (l_orderkey, l_linenumber)) AS dk,
-               sum(CASE WHEN CAST(round(l_quantity*100) AS BIGINT) <= 0
-                   THEN 1 ELSE 0 END) AS nq,
-               sum(CASE WHEN l_discount < 0.0 OR l_discount > 0.5
-                   THEN 1 ELSE 0 END) AS bd
-             FROM lineitem),
-      ro AS (SELECT count(*) AS v FROM orders
-             WHERE o_custkey NOT IN (SELECT c_custkey FROM customer)),
-      rl AS (SELECT count(*) AS v FROM lineitem
-             WHERE l_orderkey NOT IN (SELECT o_orderkey FROM orders)),
-      rows0 AS (
-        SELECT 'orders.o_custkey complete' AS "check",
-               CAST(n AS BIGINT) AS n_checked,
-               CAST(nc AS BIGINT) AS n_violations FROM oc
-        UNION ALL SELECT 'orders.o_orderkey unique',
-               CAST(n AS BIGINT), CAST(n - dk AS BIGINT) FROM oc
-        UNION ALL SELECT 'orders.o_totalprice positive',
-               CAST(n AS BIGINT), CAST(np AS BIGINT) FROM oc
-        UNION ALL SELECT 'orders.o_orderstatus in (O,F,P)',
-               CAST(n AS BIGINT), CAST(bs AS BIGINT) FROM oc
-        UNION ALL SELECT 'lineitem.(l_orderkey,l_linenumber) unique',
-               CAST(n AS BIGINT), CAST(n - dk AS BIGINT) FROM lc
-        UNION ALL SELECT 'lineitem.l_quantity positive',
-               CAST(n AS BIGINT), CAST(nq AS BIGINT) FROM lc
-        UNION ALL SELECT 'lineitem.l_discount in [0,0.5]',
-               CAST(n AS BIGINT), CAST(bd AS BIGINT) FROM lc
-        UNION ALL SELECT 'orders.o_custkey -> customer',
-               (SELECT CAST(count(*) AS BIGINT) FROM orders),
-               CAST(v AS BIGINT) FROM ro
-        UNION ALL SELECT 'lineitem.l_orderkey -> orders',
-               (SELECT CAST(count(*) AS BIGINT) FROM lineitem),
-               CAST(v AS BIGINT) FROM rl)
-      SELECT "check", n_checked, n_violations,
-             CASE WHEN n_violations = 0 THEN 1 ELSE 0 END AS passed
-      FROM rows0""",
-
-    // pure integer counting; risk as integer permille (div)
-    "privacy_k_anonymity" -> """
-      WITH g AS (SELECT c_mktsegment, n_name, CAST(count(*) AS BIGINT) AS sz
-                 FROM customer JOIN nation ON c_nationkey = n_nationkey
-                 GROUP BY 1, 2)
-      SELECT CAST(sum(sz) AS BIGINT) AS n_rows,
-             CAST(count(*) AS BIGINT) AS n_groups,
-             CAST(min(sz) AS BIGINT) AS min_group_size,
-             CAST(sum(CASE WHEN sz < 10 THEN 1 ELSE 0 END) AS BIGINT)
-               AS groups_below_k,
-             CAST(sum(CASE WHEN sz < 10 THEN sz ELSE 0 END) AS BIGINT)
-               AS rows_below_k,
-             CAST(sum(CASE WHEN sz < 10 THEN sz ELSE 0 END) * 1000
-               // sum(sz) AS BIGINT) AS risk_permille
-      FROM g""",
-
-    // same two integer rollups: (class, sensitive) cells then class
-    "privacy_l_diversity" -> """
-      WITH cells AS (
-        SELECT c_mktsegment AS mktsegment, n_name AS nation,
-               CASE WHEN c_acctbal < 0 THEN 'debt'
-                    WHEN c_acctbal < 5000 THEN 'mid'
-                    ELSE 'high' END AS s,
-               CAST(count(*) AS BIGINT) AS n
-        FROM customer JOIN nation ON c_nationkey = n_nationkey
-        GROUP BY 1, 2, 3)
-      SELECT mktsegment, nation,
-             CAST(sum(n) AS BIGINT) AS sz,
-             CAST(count(*) AS BIGINT) AS l_distinct,
-             CAST(max(n) * 1000 // sum(n) AS BIGINT) AS top_share_permille,
-             CASE WHEN count(*) < 2 THEN 1 ELSE 0 END AS homogeneous
-      FROM cells GROUP BY 1, 2""",
-
-    // ordered-attribute EMD (Li et al.): cumulative-band counts
-    // cross-multiplied against corpus totals, HUGEINT-exact, one
-    // integral division to permille
-    "privacy_t_closeness" -> """
-      WITH cells AS (
-        SELECT c_mktsegment AS mktsegment, n_name AS nation,
-               CAST(count(*) AS BIGINT) AS sz,
-               CAST(sum(CASE WHEN c_acctbal < 0 THEN 1 ELSE 0 END)
-                 AS BIGINT) AS cum1,
-               CAST(sum(CASE WHEN c_acctbal < 5000 THEN 1 ELSE 0 END)
-                 AS BIGINT) AS cum2
-        FROM customer JOIN nation ON c_nationkey = n_nationkey
-        GROUP BY 1, 2),
-      tot AS (SELECT CAST(sum(sz) AS BIGINT) AS n,
-                     CAST(sum(cum1) AS BIGINT) AS t1,
-                     CAST(sum(cum2) AS BIGINT) AS t2
-              FROM cells)
-      SELECT mktsegment, nation, sz,
-             CAST((abs(CAST(cum1 AS HUGEINT) * n - CAST(t1 AS HUGEINT) * sz)
-                 + abs(CAST(cum2 AS HUGEINT) * n - CAST(t2 AS HUGEINT) * sz))
-                * 1000 // (2 * CAST(sz AS HUGEINT) * n) AS BIGINT)
-               AS t_permille
-      FROM cells CROSS JOIN tot""",
-
-    // identical unit vectors, lead-per-label positives, 64-probe
-    // panel; every cross-row sum is an exact quantized integer
-    "emb_alignment_uniformity" -> """
-      WITH e AS (SELECT vec_id, label,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                 FROM embeddings),
-      n AS (SELECT vec_id, label,
-                   list_transform(v, x -> x /
-                     nullif(sqrt(list_sum(list_transform(v, y -> y*y))), 0)) AS nv
-            FROM e),
-      p AS (SELECT nv,
-              lead(nv) OVER (PARTITION BY label ORDER BY vec_id) AS nxt
-            FROM n),
-      pos AS (SELECT CAST(count(*) AS BIGINT) AS n_pos,
-                CAST(sum(CAST(round(round(2.0 - 2.0 *
-                  list_sum(list_transform(list_zip(nv, nxt),
-                    z -> z[1]*z[2])), 6) * 1000000.0, 0) AS BIGINT))
-                  AS BIGINT) AS s6
-              FROM p WHERE nxt IS NOT NULL),
-      panel AS (SELECT vec_id AS pid, nv AS pv FROM n
-                ORDER BY vec_id LIMIT 64),
-      uni AS (SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-                CAST(sum(CAST(round(exp(-2.0 * round(2.0 - 2.0 *
-                  list_sum(list_transform(list_zip(a.nv, panel.pv),
-                    z -> z[1]*z[2])), 6)) * 1000000000.0, 0) AS BIGINT))
-                  AS BIGINT) AS se9
-              FROM n a, panel WHERE a.vec_id <> panel.pid)
-      SELECT n_pos,
-             round(CAST(s6 AS DOUBLE) / n_pos / 1000000.0, 6) AS alignment,
-             n_pairs,
-             round(ln(CAST(se9 AS DOUBLE) / n_pairs / 1000000000.0), 6)
-               AS uniformity
-      FROM pos, uni""",
-
-    // the same md5(doc_id:epoch) total order, tie-broken by doc_id
-    "pipeline_epoch_shuffle" -> """
-      SELECT doc_id,
-             CAST(row_number() OVER (
-               ORDER BY md5(CAST(doc_id AS VARCHAR) || ':epoch:1'), doc_id)
-               AS BIGINT) AS shuffle_pos
-      FROM documents""",
-
-    // the identical poly-hash-seeded Laplace inverse-CDF release
-    "privacy_dp_counts" -> """
-      WITH c AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n
-                 FROM events GROUP BY 1),
-      h AS (SELECT event_type, n,
-              list_reduce(list_prepend(CAST(0 AS BIGINT),
-                list_transform(string_split(event_type || ':dp1', ''),
-                  ch -> CAST(unicode(ch) AS BIGINT))),
-                (acc, ch) -> (acc * 31 + ch) % 1000000007) AS hv
-            FROM c),
-      u AS (SELECT event_type, n,
-              (CAST(hv AS DOUBLE) + 1.0) / 1000000009.0 AS u FROM h)
-      SELECT event_type, n AS n_true, CAST(1.0 AS DOUBLE) AS epsilon,
-             round(CAST(n AS DOUBLE)
-               + CAST(-1.0 AS DOUBLE) * sign(u - CAST(0.5 AS DOUBLE))
-                 * ln(CAST(1.0 AS DOUBLE)
-                      - CAST(2.0 AS DOUBLE) * abs(u - CAST(0.5 AS DOUBLE))),
-               6) AS noisy_count
-      FROM u""",
-
-    // same micro-quantized chi-square aggregate; V = sqrt(chi2 /
-    // (n * (min(r,c)-1))) in one fixed-shape formula
-    "stats_cramers_v" -> """
-      WITH cells AS (SELECT o_orderpriority AS a, c_mktsegment AS b,
-                            count(*) AS o
-                     FROM orders JOIN customer ON o_custkey = c_custkey
-                     GROUP BY 1, 2),
-      w AS (SELECT a, b, o,
-                   sum(o) OVER (PARTITION BY a) AS r,
-                   sum(o) OVER (PARTITION BY b) AS c,
-                   sum(o) OVER () AS n FROM cells),
-      k AS (SELECT count(DISTINCT a) AS n_a, count(DISTINCT b) AS n_b
-            FROM cells),
-      s AS (SELECT sum(CAST(round(pow(CAST(o AS DOUBLE)
-                - CAST(r AS DOUBLE) * CAST(c AS DOUBLE) / CAST(n AS DOUBLE), 2)
-              / (CAST(r AS DOUBLE) * CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
-              * 1000000, 0) AS BIGINT)) AS cm,
-            max(n) AS n FROM w)
-      SELECT CAST(cm AS DOUBLE) / 1000000.0 AS chi2,
-             CAST(n AS BIGINT) AS n,
-             round(sqrt((CAST(cm AS DOUBLE) / 1000000.0)
-               / (CAST(n AS DOUBLE)
-                  * CAST(least(n_a, n_b) - 1 AS DOUBLE))), 6) AS v
-      FROM s, k""",
-
-    // exact integer rank formula: ranks and cent sums are integers on
-    // both engines; the single division is the only floating-point op
-    "stats_gini_revenue" -> """
-      WITH s AS (SELECT o_custkey AS custkey,
-                        sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS c
-                 FROM orders GROUP BY 1),
-      r AS (SELECT c, CAST(row_number() OVER (ORDER BY c, custkey) AS BIGINT)
-                   AS rk
-            FROM s),
-      m AS (SELECT CAST(count(*) AS HUGEINT) AS n, sum(c) AS sx,
-                   sum(rk * c) AS srx
-            FROM r)
-      SELECT round(CAST(2 * srx - (n + 1) * sx AS DOUBLE)
-               / CAST(n * sx AS DOUBLE), 6) AS gini,
-             CAST(n AS BIGINT) AS n_customers
-      FROM m""",
-
-    // leading digit from the exact cent value's decimal string —
-    // integer-to-string is identical across engines, float log10 near
-    // a power of ten is not
-    "stats_benford_digits" -> """
-      WITH d AS (SELECT CAST(substr(CAST(CAST(round(o_totalprice * 100, 0)
-                        AS BIGINT) AS VARCHAR), 1, 1) AS INT) AS digit
-                 FROM orders),
-      g AS (SELECT digit, count(*) AS n_orders FROM d GROUP BY 1),
-      t AS (SELECT sum(n_orders) AS total FROM g)
-      SELECT digit, n_orders,
-             round(CAST(n_orders AS DOUBLE) / CAST(total AS DOUBLE), 6)
-               AS freq,
-             round(log10(1.0 + 1.0 / digit), 6) AS expected
-      FROM g, t""",
-
-    // UNBLOCKED brute-force pair set: equality proves the Spark side's
-    // deletion-neighborhood blocking is lossless; DuckDB's levenshtein
-    // is the same classic DP as Spark's built-in
-    "text_fuzzy_word_pairs" -> """
-      WITH v AS (
-        SELECT DISTINCT lower(w) AS w FROM (
-          SELECT unnest(string_split(p_name, ' ')) AS w FROM part
-          UNION ALL SELECT unnest(string_split(p_type, ' ')) FROM part
-          UNION ALL SELECT n_name FROM nation
-          UNION ALL SELECT r_name FROM region)
-        WHERE length(w) > 0)
-      SELECT a.w AS w1, b.w AS w2,
-             CAST(levenshtein(a.w, b.w) AS BIGINT) AS dist
-      FROM v a JOIN v b ON a.w < b.w
-      WHERE levenshtein(a.w, b.w) <= 2""",
-
-    // centroids from integer-quantized coordinates (exact BIGINT sums
-    // in any accumulation order), distance as a fixed-order list fold
-    // same quantized centroids, then the per-vector distance fold and
-    // the global (dist desc, vec_id) top-20
-    "emb_outlier_topk" -> """
-      WITH d AS (SELECT label, CAST(i AS INT) AS dim,
-                        CAST(round(CAST(embedding[CAST(i AS INT)] AS DOUBLE)
-                          * 1000000) AS BIGINT) AS qv
-                 FROM embeddings, range(1, 65) t(i)
-                 WHERE i <= len(embedding)),
-      c AS (SELECT label, dim,
-                   CAST(sum(qv) AS DOUBLE) / (count(*) * 1000000) AS m
-            FROM d GROUP BY 1, 2),
-      l AS (SELECT label, list(m ORDER BY dim) AS cv FROM c GROUP BY 1),
-      s AS (SELECT e.vec_id, e.label,
-                   round(sqrt(list_sum(list_transform(
-                     list_zip(list_transform(e.embedding,
-                       x -> CAST(x AS DOUBLE)), l.cv),
-                     z -> (z[1]-z[2])*(z[1]-z[2])))), 6) AS dist
-            FROM embeddings e JOIN l USING (label))
-      SELECT vec_id, label, dist,
-             CAST(row_number() OVER (ORDER BY dist DESC, vec_id) AS INT) AS rk
-      FROM s QUALIFY rk <= 20""",
-
-    "emb_centroid_distances" -> """
-      WITH d AS (SELECT label, CAST(i AS INT) AS dim,
-                        CAST(round(CAST(embedding[CAST(i AS INT)] AS DOUBLE)
-                          * 1000000) AS BIGINT) AS qv
-                 FROM embeddings, range(1, 65) t(i)
-                 WHERE i <= len(embedding)),
-      c AS (SELECT label, dim,
-                   CAST(sum(qv) AS DOUBLE) / (count(*) * 1000000) AS m
-            FROM d GROUP BY 1, 2),
-      l AS (SELECT label, list(m ORDER BY dim) AS cv FROM c GROUP BY 1)
-      SELECT a.label AS label_a, b.label AS label_b,
-             round(sqrt(list_sum(list_transform(list_zip(a.cv, b.cv),
-               z -> (z[1]-z[2])*(z[1]-z[2])))), 6) AS centroid_dist
-      FROM l a JOIN l b ON a.label < b.label""",
-
-    // deterministic DBSCAN replayed in full: the same planted pair
-    // relation as neardup_embedding_lsh, degree-based core test,
-    // recursive-CTE components of the core-core graph (min-label,
-    // exact for any diameter), min-label border attachment
-    "emb_dbscan" -> dbscanOracleSql("0.45", 3),
-
-    // the LSH-legged scale path at the high-similarity operating point
-    "emb_dbscan_lsh" -> dbscanOracleSql("0.98", 2),
-
-    // the engine's distributed Lloyd loop (integer-exact arithmetic)
-    // replayed serially: three unrolled assign/update CTE stages from
-    // the k-smallest-vec_id init, then the final nearest-centroid
-    // assignment — every output column an integer, so the hash gate
-    // certifies the whole iteration history, not just the last step
-    "emb_kmeans" -> kmeansAssignOracle,
-
-    // the same quantize -> per-label HALF_UP centroid -> exact integer
-    // argmin chain, replayed relationally; split point = round(0.95 n)
-    "emb_centroid_classifier" -> centroidClassifierOracle,
-
-    "emb_centroid_confusion" -> s"""
-      WITH preds AS ($centroidClassifierOracle)
-      SELECT label, pred, CAST(count(*) AS BIGINT) AS n
-      FROM preds GROUP BY 1, 2""",
-    "emb_cluster_label_purity" -> kmeansPurityOracle,
-
-    // the streamed assignment is per-row stateless: one shared val, so
-    // the batch and streamed twins can never gate on diverged oracles
-    "emb_kmeans_streamed" -> kmeansAssignOracle,
-
-    // mean-unit-vector norm with the engine's two-level integer
-    // TwoNN replay, PROBE-STRIDE-PARAMETERIZED like the engine (r13
-    // verdict #1: the former SQL hard-coded the stride-1 all-pairs
-    // form this tier happens to resolve to, so it could not replay at
-    // derived tiers): stride = greatest(1, n // 512), probes =
-    // vec_id % stride = 0 against the FULL corpus — same round-6
-    // cosine distances, same (r1, r2) read off the sorted per-probe
-    // distance multiset (tie order cannot change the position-1/2
-    // VALUES), micro-nat integer log quantization before the sum, one
-    // final division
-    "emb_intrinsic_dim" -> s"""
-      WITH e AS MATERIALIZED (SELECT vec_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                 FROM embeddings),
-      n AS (SELECT count(*) AS n_points,
-                   greatest(1, count(*) // 512) AS st
-            FROM e),
-      qq AS MATERIALIZED (SELECT vec_id, emb FROM e, n
-            WHERE vec_id % n.st = 0),
-      d AS (SELECT q.vec_id AS qid, b.vec_id, $cosDistSql AS dist
-            FROM e b, qq q
-            WHERE b.vec_id <> q.vec_id),
-      r AS (SELECT qid, dist, row_number() OVER (PARTITION BY qid
-              ORDER BY dist, vec_id) AS rk FROM d),
-      t AS (SELECT qid,
-              max(CASE WHEN rk = 1 THEN dist END) AS r1,
-              max(CASE WHEN rk = 2 THEN dist END) AS r2
-            FROM r WHERE rk <= 2 GROUP BY qid),
-      u AS (SELECT CAST(round(ln(r2 / r1) * 1000000.0) AS BIGINT) AS lg
-            FROM t WHERE r1 > 0),
-      s AS (SELECT count(*) AS n_used, CAST(sum(lg) AS BIGINT) AS sm FROM u)
-      SELECT n_points, n_used, sm AS sum_log_mu_micro,
-             round(n_used * 1000000.0 / sm, 4) AS twonn_dim
-      FROM n CROSS JOIN s""",
-
-    // quantization: micro-unit longs per coordinate before the per-dim
-    // sum, 1e-12-unit longs per squared-mean term before the
-    // cross-dim sum — bit-for-bit the Spark arithmetic
-    "emb_isotropy" -> """
-      WITH n AS (SELECT vec_id,
-                   list_transform(list_transform(embedding,
-                       x -> CAST(x AS DOUBLE)),
-                     x -> x / nullif(sqrt(list_sum(list_transform(
-                       list_transform(embedding, y -> CAST(y AS DOUBLE)),
-                       y -> y*y))), 0)) AS nv
-                 FROM embeddings),
-      d AS (SELECT CAST(i AS INT) AS pos,
-                   CAST(round(nv[CAST(i AS INT)] * 1000000) AS BIGINT) AS qc
-            FROM n, range(1, 65) t(i) WHERE i <= len(nv)),
-      p AS (SELECT pos, sum(qc) AS qsum, count(*) AS cnt FROM d GROUP BY 1),
-      t AS (SELECT cnt, CAST(round(pow(CAST(qsum AS DOUBLE)/(cnt*1000000), 2)
-                                   * 1e12) AS BIGINT) AS term FROM p),
-      s AS (SELECT cnt AS n_vectors, sum(term) AS t2 FROM t GROUP BY 1)
-      SELECT n_vectors,
-             round(sqrt(CAST(t2 AS DOUBLE)/1e12), 6) AS mean_norm,
-             round(1 - sqrt(CAST(t2 AS DOUBLE)/1e12), 6) AS isotropy
-      FROM s""",
-
-    // centroid-form silhouette over the same final centroids: per
-    // vector, a = dist to own centroid, b = dist to nearest other,
-    // s = (b-a)/max(a,b) quantized to micro-units BEFORE the cluster
-    // mean so the aggregation is an exact integer sum in any order
-    "emb_kmeans_silhouette" -> s"""$kmeansCtes,
-      w AS (SELECT vec_id, cid, d2, row_number() OVER (PARTITION BY vec_id
-              ORDER BY d2, cid) AS rn FROM df),
-      own AS (SELECT vec_id, cid, d2 AS d2own FROM w WHERE rn = 1),
-      oth AS (SELECT w.vec_id, min(w.d2) AS d2oth
-              FROM w JOIN own USING (vec_id) WHERE w.cid <> own.cid
-              GROUP BY w.vec_id),
-      s AS (SELECT own.cid, CAST(round(
-              (sqrt(CAST(d2oth AS DOUBLE)) - sqrt(CAST(d2own AS DOUBLE)))
-                / greatest(sqrt(CAST(d2own AS DOUBLE)),
-                           sqrt(CAST(d2oth AS DOUBLE)), 1e-300)
-              * 1000000) AS BIGINT) AS sm
-            FROM own JOIN oth USING (vec_id))
-      SELECT CAST(cid AS INT) AS cid, count(*) AS n,
-             round(CAST(sum(sm) AS DOUBLE) / count(*) / 1000000, 6)
-               AS mean_sil
-      FROM s GROUP BY cid""",
-
-    // full recompute — the incremental query must merge its two partial
-    // states to exactly this
-    "events_incremental_agg" -> s"""
-      SELECT strftime(ts, '%Y-%m-%d') AS day, event_type,
-             count(*) AS n,
-             sum(${c100("value")}) / 100.0 AS sum_value,
-             min(${c100("value")}) / 100.0 AS min_value,
-             max(${c100("value")}) / 100.0 AS max_value,
-             round(CAST(sum(${c100("value")}) AS DOUBLE) / count(*) / 100.0, 6)
-               AS avg_value
-      FROM events GROUP BY 1, 2""",
-
-    "events_retention_cohorts" -> """
-      WITH e AS (SELECT user_id, CAST(ts AS DATE) AS day FROM events),
-      c AS (SELECT user_id, min(day) AS cohort FROM e GROUP BY 1)
-      SELECT strftime(cohort, '%Y-%m-%d') AS cohort,
-             CAST(date_diff('day', cohort, day) AS INT) AS offset_days,
-             count(DISTINCT e.user_id) AS n_users
-      FROM e JOIN c USING (user_id)
-      GROUP BY 1, 2""",
-
-    "events_funnel" -> """
-      WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
-      fv AS (SELECT user_id, min(us) AS fv_us FROM e
-             WHERE event_type = 'view' GROUP BY 1),
-      fc AS (SELECT e.user_id, min(us) AS fc_us FROM e JOIN fv USING (user_id)
-             WHERE event_type = 'click' AND us > fv_us GROUP BY 1),
-      fp AS (SELECT e.user_id, min(us) AS fp_us FROM e JOIN fc USING (user_id)
-             WHERE event_type = 'purchase' AND us > fc_us GROUP BY 1)
-      SELECT fv.user_id, fv_us, fc_us, fp_us,
-             CAST(1 + CASE WHEN fc_us IS NULL THEN 0 ELSE 1 END
-                    + CASE WHEN fp_us IS NULL THEN 0 ELSE 1 END AS INT) AS stage
-      FROM fv LEFT JOIN fc USING (user_id) LEFT JOIN fp USING (user_id)""",
-
-    "events_topk_amounts" -> """
-      SELECT event_type, event_id, value, rk FROM (
-        SELECT event_type, event_id, value,
-               CAST(row_number() OVER (PARTITION BY event_type
-                 ORDER BY value DESC, event_id) AS INT) AS rk
-        FROM events)
-      WHERE rk <= 5""",
-
-    // the streaming-executed twin answers the SAME question (the keyed
-    // leaderboard fold is order-insensitive), so it shares the oracle
-    "events_topk_amounts_streamed" -> """
-      SELECT event_type, event_id, value, rk FROM (
-        SELECT event_type, event_id, value,
-               CAST(row_number() OVER (PARTITION BY event_type
-                 ORDER BY value DESC, event_id) AS INT) AS rk
-        FROM events)
-      WHERE rk <= 5""",
-
-    "events_json_stats" -> """
-      SELECT event_type, count(*) AS n,
-             CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT))
-               AS BIGINT) AS sum_k,
-             CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT))
-               AS BIGINT)
-               / count(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS avg_k
-      FROM events GROUP BY 1""",
-  ) ++ GeneratedOracles.sql
+  val oracleSql: Map[String, String] = byName.map { case (n, d) => n -> d.oracle }
 }

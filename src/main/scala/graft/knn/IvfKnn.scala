@@ -261,12 +261,8 @@ object IvfKnn {
     // one-time checkpoint per (dataset, nC): the inverted-file write is
     // index publication (bench_build_ivf_ckpt pays it), so the declared
     // query's time measures load + partition-pruned probe
-    val path = IndexCache.getOrBuild(spark, "ivf-ckpt", dir, nC) {
-      val p = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-        s"/graft-ivf-lifecycle-${Integer.toHexString(dir.hashCode)}-$nC"
-      saveIndex(memoIndex(spark, dir, nC), p)
-      p
-    }
+    val path = IndexCache.checkpoint(spark, "ivf", dir, nC)(
+      saveIndex(memoIndex(spark, dir, nC), _))
     val reloaded = loadIndex(spark, path)
     searchIndexDF(reloaded, queries, k, nP)
   }

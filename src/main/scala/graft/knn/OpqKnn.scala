@@ -198,13 +198,10 @@ object OpqKnn {
   def topKBatchLifecycle(spark: SparkSession, dir: String, k: Int = 10,
       m: Int = 8, ksub: Int = 256, overfetch: Int = 16): DataFrame = {
     val (base, queries, _, _) = ExactKnn.split(spark, dir)
-    val path = IndexCache.getOrBuild(spark, "opq-ckpt", dir, m, ksub) {
+    val path = IndexCache.checkpoint(spark, "opq", dir, m, ksub) { p =>
       val rot = rotation(spark, dir, m)
       val (cb, codes) = cachedIndex(spark, dir, m, ksub)
-      val p = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-        s"/graft-opq-lifecycle-${Integer.toHexString(dir.hashCode)}-$m-$ksub"
       saveIndex(rot, cb, codes, p)
-      p
     }
     val (rot, cb, enc) = IndexCache.getOrBuild(spark, "opq-reloaded", dir, m,
       ksub)(loadIndex(spark, path))

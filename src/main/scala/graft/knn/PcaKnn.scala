@@ -120,17 +120,14 @@ object PcaKnn {
     * the checkpoint surface to the projection family. Bit-equal to
     * [[topKBatch]] by construction (same [[search]] body over the
     * reloaded basis/projection); PcaKnnSpec pins the equality. The save
-    * is memoized per dataset and charged to bench_build_pca_ckpt, so
-    * this query times load + probe.
+    * is memoized per dataset and charged to bench_build_pca_ckpt; the
+    * reloaded basis is memoized too (`pca-reloaded`), so after the first
+    * call this query times the probe.
     */
   def topKBatchLifecycle(spark: SparkSession, dir: String, k: Int = 10,
       outDim: Int = 32, overfetch: Int = 16): DataFrame = {
-    val path = IndexCache.getOrBuild(spark, "pca-ckpt", dir, outDim) {
-      val p = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-        s"/graft-pca-lifecycle-${Integer.toHexString(dir.hashCode)}-$outDim"
-      saveIndex(basis(spark, dir, outDim), memoProjected(spark, dir, outDim), p)
-      p
-    }
+    val path = IndexCache.checkpoint(spark, "pca", dir, outDim)(
+      saveIndex(basis(spark, dir, outDim), memoProjected(spark, dir, outDim), _))
     val (matrix, p0) = IndexCache.getOrBuild(spark, "pca-reloaded", dir,
       outDim)(loadIndex(spark, path))
     val pBase = IndexCache.persisted(spark, "pca-reloaded", dir, outDim,

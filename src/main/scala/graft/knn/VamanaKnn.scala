@@ -189,12 +189,8 @@ object VamanaKnn {
   def topKBatchLifecycle(spark: SparkSession, dir: String, k: Int = 10,
       ef: Int = 100, shards: Int = 16): DataFrame = {
     val (_, queries, _, _) = ExactKnn.split(spark, dir)
-    val path = graft.IndexCache.getOrBuild(spark, "vamana-ckpt", dir, shards) {
-      val p = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-        s"/graft-vamana-lifecycle-${Integer.toHexString(dir.hashCode)}-$shards"
-      saveIndex(memoIndex(spark, dir, shards), p)
-      p
-    }
+    val path = graft.IndexCache.checkpoint(spark, "vamana", dir, shards)(
+      saveIndex(memoIndex(spark, dir, shards), _))
     val index = graft.IndexCache.getOrBuild(spark, "vamana-reloaded", dir,
         shards) {
       val ix = loadIndex(spark, path).persist()

@@ -709,7 +709,7 @@ object Pipeline {
     * Training is FULLY deterministic cross-engine, which makes this
     * the rare trainable model with a DuckDB oracle (the SQL replays
     * all 50 rounds as a generated chained CTE — see
-    * [[graft.SparkEntry.qcOracleSql]]):
+    * `qcOracleSql` in [[graft.queries.PipelineQueries]]):
     *   - fixed iteration count, fixed learning rate, zero init;
     *   - each per-row gradient contribution `(σ(w·x) − y)·x_j` is
     *     quantized to integer MILLIONTHS before the sum, so the only

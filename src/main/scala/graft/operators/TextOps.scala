@@ -1030,7 +1030,7 @@ object TextOps {
 
   /** The declared general-retrieval query: an 8-term request through
     * the arbitrary-|terms| plan (same oracle arithmetic as
-    * [[bm25TopK]], generated per term list in SparkEntry).
+    * [[bm25TopK]], generated per term list in [[graft.queries.TextQueries]]).
     */
   val bm25GeneralTerms: Seq[String] = Seq(
     "join", "window", "scan", "filter", "merge", "sort", "vector", "stream")

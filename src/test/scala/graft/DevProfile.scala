@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-loop micro-profiler (test scope, never shipped): times the
   * pieces named on the command line at a given sf dir. Usage:
   * `sbt "Test/runMain graft.DevProfile /root/testdata/sf0.01 name..."`.
@@ -9,10 +7,7 @@ import org.apache.spark.sql.SparkSession
 object DevProfile {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     def t(name: String)(f: => Long): Unit = {
       val t0 = System.nanoTime(); val n = f
