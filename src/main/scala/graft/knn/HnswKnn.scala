@@ -1,31 +1,35 @@
 package graft.knn
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Distributed approximate kNN: the sharded-HNSW formulation of the
   * reference's single-process index (`/root/reference/src/hnsw.rs:304-327`).
   *
-  * Plan shape:
-  *   base --repartition(shards)--> mapPartitions:
-  *       build one [[HnswIndex]] per partition (seeded by partition id),
-  *       search every broadcast query against the local graph,
-  *       emit per-partition top-k candidates (qid, vec_id, dist)
-  *   --> window top-k per qid over the union of shard candidates.
+  * Build: base --groupByKey(vec_id mod shards)--> one [[HnswIndex]] per
+  * shard (seeded by shard id), then [[HnswDistIndex.placed]] pins shard
+  * i to partition i once per index, so the graphs never move again.
   *
-  * Scale notes (100 TB thinking):
-  *   - Each executor core builds/owns one shard graph — build is
-  *     embarrassingly parallel and never leaves the executor; only
-  *     (qid, id, dist) candidate triples (shards × k per query, no
-  *     vectors) cross the shuffle for the global merge.
-  *   - Queries travel via broadcast, so search cost is one local graph
-  *     walk per (shard, query) — the standard scatter-gather ANN layout;
-  *     recall is ≥ a single global graph's because every shard is probed.
-  *   - At 100 TB the same plan holds with shards = number of cores, and
-  *     the built graphs can be persisted per-partition for reuse rather
-  *     than rebuilt per batch (build once, search many).
+  * Search walks every shard graph for every query ([[probeShard]]) and
+  * keeps the top k per query by (dist rounded 6, vec_id). Two legs:
+  *   - DataFrame queries: scatter-gather. Each query row shuffles to
+  *     every shard partition, `zipPartitions` probes the placed graphs,
+  *     and the per-shard candidates merge through the bounded-heap
+  *     top-k exchange. No query vector visits the driver.
+  *   - Driver-held query arrays: one wave. A single shuffle-free
+  *     `mapPartitions` job over the placed graphs carries the batch in
+  *     its closure, returns k (qid, vec_id, dist) triples per query per
+  *     shard, and the driver merges them (REPOSE-style local top-k,
+  *     coordinator merge). The batch is already on the driver, and the
+  *     merged candidates are proportional to it; a query set too large
+  *     to hold there belongs in the DataFrame leg.
+  *
+  * Scale notes: each executor core owns one shard graph, so build is
+  * embarrassingly parallel and only (qid, id, dist) triples (shards × k
+  * per query, no base vectors) leave a shard. Recall is ≥ a single
+  * global graph's because every shard is probed.
   */
 object HnswKnn {
 
@@ -49,16 +53,19 @@ object HnswKnn {
 
     /** The shard graphs pinned to a FIXED partition layout — partition i
       * holds exactly shard i (`HashPartitioner(shards)` on the shard id).
-      * Built and persisted once per index: every search batch then
-      * zipPartitions against this layout, so the graphs NEVER move
-      * again — only query replicas shuffle (at 100 TB: index placement
-      * is decided once; query waves stream past it).
+      * Built and persisted once per index, and persisted again on the
+      * next call after a release unpersisted it: every search batch then
+      * runs against this layout, so the graphs NEVER move again — only
+      * queries travel (at 100 TB: index placement is decided once; query
+      * waves stream past it).
       */
     def placed: org.apache.spark.rdd.RDD[(Int, HnswIndex)] = synchronized {
       if (placedCache == null)
         placedCache = graphs.rdd.map(s => (s.shard, s.graph))
           .partitionBy(new org.apache.spark.HashPartitioner(shards))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // re-marked after a release unpersisted it, like IndexCache.persisted
+      if (placedCache.getStorageLevel == StorageLevel.NONE)
+        placedCache.persist(StorageLevel.MEMORY_AND_DISK)
       placedCache
     }
 
@@ -181,11 +188,7 @@ object HnswKnn {
       .flatMap(q => Iterator.range(0, nShards).map(sh => (sh, q)))
       .partitionBy(new org.apache.spark.HashPartitioner(nShards))
     val cand = index.placed.zipPartitions(qrep) { (git, qit) =>
-      val graphs = git.map(_._2).toArray // 0 or 1 graphs per partition
-      qit.flatMap { case (_, (qid, qv)) =>
-        graphs.iterator.flatMap(g =>
-          g.search(qv, k, ef).iterator.map { case (id, d) => (qid, id, d) })
-      }
+      probeShard(git, qit.map(_._2), k, ef)
     }
     spark.createDataset(cand).toDF("qid", "vec_id", "dist")
       .withColumn("dist", round(col("dist"), 6))
@@ -193,18 +196,57 @@ object HnswKnn {
         Seq("dist" -> true, "vec_id" -> true), k))
   }
 
-  /** Driver-array convenience form (tests, single ad-hoc batches):
-    * wraps the array as a local Dataset and runs the SAME distributed
-    * search, so the two forms are bit-equal by construction.
+  /** Driver-array form (serve batches, tests): ONE shuffle-free job.
+    * `mapPartitions` over [[HnswDistIndex.placed]] with the batch in the
+    * task closure returns each shard's k candidates per query, and the
+    * driver rounds `dist` like Spark's `round(_, 6)`, keeps the top k per
+    * qid by (dist, vec_id) and numbers `rk`. Returns the same rows and
+    * schema as the DataFrame form (HnswSpec pins the equality).
     */
   def searchIndex(index: HnswDistIndex,
       queries: Array[(Long, Array[Double])], k: Int = 10,
       ef: Int = 100): DataFrame = {
-    val spark = index.graphs.sparkSession
-    import spark.implicits._
-    searchIndex(index,
-      spark.createDataset(queries.toSeq).toDF("vec_id", "emb"), k, ef)
+    val cand = index.placed
+      .mapPartitions(git => probeShard(git, queries.iterator, k, ef)).collect()
+    val rows = cand.groupBy(_._1).valuesIterator.flatMap { c =>
+      c.map { case (q, id, dist) => (q, id, round6(dist)) }
+        .sortBy(t => (t._3, t._2))(
+          Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+        .iterator.take(k)
+        .zipWithIndex.map { case ((q, id, dist), i) => Row(q, id, dist, i + 1) }
+    }.toList
+    import scala.jdk.CollectionConverters._
+    index.graphs.sparkSession.createDataFrame(rows.asJava, SearchSchema)
   }
+
+  /** Walk the partition's shard graph (0 or 1 per placed partition) for
+    * every query: k (qid, vec_id, dist) triples per query. The one graph
+    * walk both search legs share.
+    */
+  private def probeShard(graphs: Iterator[(Int, HnswIndex)],
+      queries: Iterator[(Long, Array[Double])], k: Int,
+      ef: Int): Iterator[(Long, Long, Double)] = {
+    val gs = graphs.map(_._2).toArray
+    queries.flatMap { case (qid, qv) =>
+      gs.iterator.flatMap(g =>
+        g.search(qv, k, ef).iterator.map { case (id, dist) => (qid, id, dist) })
+    }
+  }
+
+  /** Spark's `round(_, 6)` on a double: HALF_UP on the decimal form. */
+  private[graft] def round6(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** The scatter-gather leg's output schema: `round` makes `dist`
+    * nullable, the top-k rank is a non-null int.
+    */
+  private val SearchSchema = StructType(Seq(
+    StructField("qid", LongType, nullable = false),
+    StructField("vec_id", LongType, nullable = false),
+    StructField("dist", DoubleType),
+    StructField("rk", IntegerType, nullable = false)))
 
   /** The persisted shard graphs over `dir`'s split base, built once per
     * (dataset, shards): the one build site every HNSW entry point (batch,

@@ -73,6 +73,10 @@ class CollectSiteLintSpec extends AnyFunSuite {
       (1, "mutual-pair edges, panel-bounded (<= panel*k rows) and " +
         "cutover-gated at 10M edges (star-contraction leg above; " +
         "family:mutual-knn-clusters caps the memoized result)"),
+    ("HnswKnn.scala",
+      ".mapPartitions(git => probeShard(git, queries.iterator, k, ef)).collect()") ->
+      (1, "|q|·shards·k candidate triples, proportional to the " +
+        "driver-held query batch"),
     // --- pipeline / retrieval ---------------------------------------
     ("Pipeline.scala",
       ".as[(Long, Double, Array[Double])].collect().headOption") ->

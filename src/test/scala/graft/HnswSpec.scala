@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.knn.{ExactKnn, HnswIndex, HnswKnn}
 import graft.operators.Evaluation
@@ -144,6 +145,69 @@ class HnswSpec extends SparkSpec {
       val row = hits.find(_.getLong(0) == id).get
       assert(row.getLong(1) == id && row.getDouble(2) == 0.0,
         s"inserted vector $id not its own nearest neighbor: $row")
+    }
+  }
+
+  test("array and DataFrame search forms return equal rows and schema") {
+    import spark.implicits._
+    val (base, queries, _, _) = ExactKnn.split(spark, sf0001)
+    val qs = queries.as[(Long, Array[Double])].collect()
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).sorted.toSeq
+    for (shards <- Seq(4, 5, 16)) {
+      val index = HnswKnn.buildIndex(base, shards).persist()
+      try for (k <- Seq(1, 10, 50)) {
+        val viaArray = HnswKnn.searchIndex(index, qs, k, 100)
+        val viaFrame = HnswKnn.searchIndex(index, queries, k, 100)
+        assert(viaArray.schema == viaFrame.schema, s"shards=$shards k=$k")
+        val (a, f) = (rows(viaArray), rows(viaFrame))
+        assert(a.nonEmpty && a == f, s"shards=$shards k=$k")
+      } finally index.unpersist()
+    }
+  }
+
+  test("the one-wave merge rounds dist exactly like Spark's round(_, 6)") {
+    import spark.implicits._
+    // exact 6-decimal halves (HALF_UP and HALF_EVEN differ on the even
+    // ones), signed zero, and the non-finite values Spark passes through
+    val xs = Seq(0.0000005, -0.0000005, 1.2345665, 1.2345675, -1.2345665,
+      0.0000015, 2.5e-7, 123456.0000005, 0.0, -0.0, 1e300,
+      Double.MinPositiveValue, Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity)
+    val viaSpark = xs.toDF("x").select(round(col("x"), 6)).as[Double].collect()
+    for ((x, r) <- xs.zip(viaSpark)) {
+      val mine = HnswKnn.round6(x)
+      assert(java.lang.Double.doubleToLongBits(mine) ==
+        java.lang.Double.doubleToLongBits(r), s"round6($x) = $mine, Spark: $r")
+    }
+  }
+
+  test("one-wave serve batch: one job, no shuffle, also after a cache " +
+      "release re-persists placed") {
+    import spark.implicits._
+    val (base, queries, _, _) = ExactKnn.split(spark, sf0001)
+    val qs = queries.as[(Long, Array[Double])].collect().take(8)
+    val index = HnswKnn.buildIndex(base, shards = 4).persist()
+    try {
+      val placed = index.placed
+      placed.count()
+      val m0 = QueryMetrics.measure(spark)(HnswKnn.searchIndex(index, qs).collect())
+      assert(m0.jobs == 1 && m0.shuffleBytesWritten == 0, m0)
+      // Bench.releaseCaches: drop every cached relation and RDD
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      assert(placed.getStorageLevel == StorageLevel.NONE)
+      HnswKnn.searchIndex(index, qs).collect()
+      assert(index.placed eq placed)
+      assert(placed.getStorageLevel == StorageLevel.MEMORY_AND_DISK)
+      assert(spark.sparkContext.getRDDStorageInfo.exists(i =>
+        i.id == placed.id && i.numCachedPartitions == index.shards),
+        "the search after the release cached every shard graph again")
+      val m = QueryMetrics.measure(spark)(HnswKnn.searchIndex(index, qs).collect())
+      assert(m.jobs == 1 && m.shuffleBytesWritten == 0, m)
+    } finally {
+      index.unpersist()
+      IndexCache.clear() // later suites rebuild from scratch
     }
   }
 
