@@ -184,7 +184,7 @@ object IndexCache {
 
   private[graft] val driverArtifactBounds: Map[String, (String, Long)] = Map(
     // --- handles to persisted distributed datasets (+ O(1) scalars) ---
-    "hnsw" -> ("shards int + Dataset[HnswShard] handle", 8L),
+    "hnsw" -> ("shards int + placed RDD[(Int, HnswIndex)] handle", 8L),
     "hnsw-ckpt" -> ("shards int + Dataset handle", 8L),
     "vamana" -> ("shards int + Dataset[VamanaShard] handle", 8L),
     "vamana-ckpt" -> ("shards int + Dataset handle", 8L),
@@ -227,7 +227,7 @@ object IndexCache {
     "fuzzy-keyed" -> ("persisted deletion-keyed vocab handle", 8L),
     "fuzzy-pairs" -> ("persisted verified ed-join pair handle", 8L),
     "fuzzy-labels" -> ("persisted vocab-bounded label-dictionary handle", 8L),
-    "hnsw-reloaded" -> ("shards int + reloaded Dataset handle", 8L),
+    "hnsw-reloaded" -> ("shards int + reloaded placed RDD handle", 8L),
     "vamana-reloaded" -> ("shards int + reloaded Dataset handle", 8L),
     // --- paths / names (O(1) strings) ---
     "ndjson-fixture" -> ("tempfile path string", 4L),

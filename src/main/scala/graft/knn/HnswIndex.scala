@@ -25,9 +25,9 @@ import scala.collection.mutable.{ArrayBuffer, PriorityQueue}
   *
   * The metric is the engine-wide clamped cosine distance in [0, 1]
   * (`graft.functions.VectorFunctions.distance`). One instance indexes one
-  * Spark partition (see [[HnswKnn]]); the class is Serializable only so
-  * closures may capture a config-bearing empty instance — graphs are
-  * always built executor-side.
+  * Spark partition (see [[HnswKnn]]) and is built, extended and searched
+  * where it lives; graphs are serialized only by [[HnswKnn.saveIndex]]
+  * and by the disk tier of the cache.
   */
 @SerialVersionUID(1L) // pinned: saveIndex checkpoints java-serialized graphs
 final class HnswIndex(
@@ -46,7 +46,7 @@ final class HnswIndex(
     val heuristic: Boolean = false)
     extends Serializable {
 
-  private val rng = new java.util.Random(seed)
+  private var rng = new java.util.Random(seed)
   private val ids = ArrayBuffer.empty[Long]
   private val vecs = ArrayBuffer.empty[Array[Double]]
   private val norms = ArrayBuffer.empty[Double]
@@ -220,6 +220,24 @@ final class HnswIndex(
   def insertAll(points: Iterator[(Long, Array[Double])]): this.type = {
     points.foreach { case (id, v) => insert(id, v) }
     this
+  }
+
+  /** A deep copy of the adjacency and the RNG state: inserting into the
+    * copy grows the graph this instance would have grown, and leaves
+    * this instance as it was. Vectors are shared; nothing mutates them.
+    */
+  def copy(): HnswIndex = {
+    val c = new HnswIndex(m, mMax, efConstruction, maxLevel, mL, 0L, heuristic)
+    val bos = new java.io.ByteArrayOutputStream()
+    val oos = new java.io.ObjectOutputStream(bos)
+    oos.writeObject(rng); oos.close()
+    c.rng = new java.io.ObjectInputStream(
+      new java.io.ByteArrayInputStream(bos.toByteArray))
+      .readObject().asInstanceOf[java.util.Random]
+    c.ids ++= ids; c.vecs ++= vecs; c.norms ++= norms; c.levels ++= levels
+    c.neighbors ++= neighbors.map(_.map(_.clone()))
+    c.entry = entry
+    c
   }
 
   /** Algorithm 5: k-NN search. Returns (id, distance) ascending by

@@ -1,6 +1,8 @@
 package graft.knn
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -8,9 +10,13 @@ import org.apache.spark.storage.StorageLevel
 /** Distributed approximate kNN: the sharded-HNSW formulation of the
   * reference's single-process index (`/root/reference/src/hnsw.rs:304-327`).
   *
-  * Build: base --groupByKey(vec_id mod shards)--> one [[HnswIndex]] per
-  * shard (seeded by shard id), then [[HnswDistIndex.placed]] pins shard
-  * i to partition i once per index, so the graphs never move again.
+  * Build: base rows route to `HashPartitioner(shards)` on their shard id
+  * (vec_id mod shards), so partition i holds shard i's vectors, and each
+  * partition builds its [[HnswIndex]] (seeded by shard id) in place. That
+  * placed RDD is the index: only vectors are shuffled, once, and the
+  * graphs never move again. An insert shuffles only the new rows onto
+  * the same partitioner and extends a copy of each receiving shard's
+  * graph where it lives.
   *
   * Search walks every shard graph for every query ([[probeShard]]) and
   * keeps the top k per query by (dist rounded 6, vec_id). Two legs:
@@ -33,101 +39,92 @@ import org.apache.spark.storage.StorageLevel
   */
 object HnswKnn {
 
-  /** One shard's built graph. Kryo-encoded (the graph is an opaque
-    * serializable object, not a row).
-    */
-  @SerialVersionUID(1L)
-  case class HnswShard(shard: Int, graph: HnswIndex)
-  private implicit val shardEncoder: org.apache.spark.sql.Encoder[HnswShard] =
-    org.apache.spark.sql.Encoders.kryo[HnswShard]
-
   /** A built distributed index: the shard graphs PLUS the fixed routing
     * modulus they were built with — carried together so incremental
     * inserts can never route new vectors to a different shard than their
     * neighbors went to (the co-sharding invariant is structural, not a
     * caller-supplied parameter).
+    *
+    * `graphs` is placed on `HashPartitioner(shards)`: partition i holds
+    * exactly shard i's graph, or nothing if shard i is empty.
     */
-  final case class HnswDistIndex(shards: Int, graphs: Dataset[HnswShard]) {
+  final case class HnswDistIndex(shards: Int, graphs: RDD[(Int, HnswIndex)]) {
 
-    @transient private var placedCache: org.apache.spark.rdd.RDD[(Int, HnswIndex)] = _
-
-    /** The shard graphs pinned to a FIXED partition layout — partition i
-      * holds exactly shard i (`HashPartitioner(shards)` on the shard id).
-      * Built and persisted once per index, and persisted again on the
-      * next call after a release unpersisted it: every search batch then
-      * runs against this layout, so the graphs NEVER move again — only
-      * queries travel (at 100 TB: index placement is decided once; query
-      * waves stream past it).
+    /** The shard graphs, persisted again if a release unpersisted them:
+      * every search batch runs against this layout, so only queries
+      * travel (at 100 TB: index placement is decided once; query waves
+      * stream past it).
       */
-    def placed: org.apache.spark.rdd.RDD[(Int, HnswIndex)] = synchronized {
-      if (placedCache == null)
-        placedCache = graphs.rdd.map(s => (s.shard, s.graph))
-          .partitionBy(new org.apache.spark.HashPartitioner(shards))
-      // re-marked after a release unpersisted it, like IndexCache.persisted
-      if (placedCache.getStorageLevel == StorageLevel.NONE)
-        placedCache.persist(StorageLevel.MEMORY_AND_DISK)
-      placedCache
-    }
+    def placed: RDD[(Int, HnswIndex)] = persist().graphs
 
-    def persist(level: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): HnswDistIndex = {
-      graphs.persist(level); this
-    }
-    def unpersist(): HnswDistIndex = {
-      graphs.unpersist()
+    /** Marks the graphs for caching at `level`; a no-op while they are
+      * persisted, since Spark throws on a storage-level change.
+      */
+    def persist(level: StorageLevel = StorageLevel.MEMORY_AND_DISK): HnswDistIndex =
       synchronized {
-        if (placedCache != null) { placedCache.unpersist(); placedCache = null }
+        if (graphs.getStorageLevel == StorageLevel.NONE) graphs.persist(level)
+        this
       }
-      this
-    }
+
+    def unpersist(): HnswDistIndex = { graphs.unpersist(); this }
   }
 
-  /** Explicit, reproducible shard assignment: `vec_id mod shards`.
-    * A FIXED rule (not the engine's internal repartition hash) so later
-    * incremental inserts route new vectors to the same shard their
-    * neighbors went to.
+  /** Explicit, reproducible shard assignment: `vec_id mod shards`, as
+    * (shard, (vec_id, emb)) rows shuffled onto `HashPartitioner(shards)`,
+    * so shard s lands in partition s. A FIXED rule (not the engine's
+    * internal repartition hash) so later incremental inserts route new
+    * vectors to the same shard their neighbors went to.
     */
-  private def withShard(rows: DataFrame, shards: Int): DataFrame =
-    rows.select(col("vec_id"), col("emb"))
-      .withColumn("shard", pmod(col("vec_id"), lit(shards)).cast("int"))
+  private def routed(rows: DataFrame,
+      shards: Int): RDD[(Int, (Long, Array[Double]))] = {
+    import rows.sparkSession.implicits._
+    rows.select(col("vec_id"), col("emb")).as[(Long, Array[Double])].rdd
+      .map { case (id, v) => (Math.floorMod(id, shards.toLong).toInt, (id, v)) }
+      .partitionBy(new HashPartitioner(shards))
+  }
+
+  /** One shard's routed rows, ascending by vec_id: insert order is fixed,
+    * so the graphs are bit-reproducible run to run.
+    */
+  private def sortedById(rows: Iterator[(Int, (Long, Array[Double]))]) =
+    rows.map(_._2).toArray.sortBy(_._1).iterator
 
   /** Build one HNSW graph per shard — the build-once half of
     * build-once/search-many: `.persist()` the result and run any number
     * of [[searchIndex]] batches against it without re-inserting; extend
     * with [[insertIntoIndex]]; checkpoint with [[saveIndex]]/[[loadIndex]].
-    * Inserts are ordered by vec_id within each shard, so the graphs are
-    * bit-reproducible run to run.
+    * Each partition builds its own shard's graph, seeded `42 + shard`.
     */
-  def buildIndex(base: DataFrame, shards: Int = 16): HnswDistIndex = {
-    import base.sparkSession.implicits._
-    HnswDistIndex(shards, withShard(base, shards)
-      .as[(Long, Array[Double], Int)]
-      .groupByKey(_._3)
-      .mapGroups { (s, rows) =>
-        val sorted = rows.toArray.sortBy(_._1)
-        HnswShard(s, new HnswIndex(seed = 42L + s)
-          .insertAll(sorted.iterator.map(r => (r._1, r._2))))
-      })
-  }
+  def buildIndex(base: DataFrame, shards: Int = 16): HnswDistIndex =
+    HnswDistIndex(shards, routed(base, shards).mapPartitionsWithIndex({
+      (s, rows) =>
+        if (!rows.hasNext) Iterator.empty
+        else Iterator.single(s -> new HnswIndex(seed = 42L + s).insertAll(sortedById(rows)))
+    }, preservesPartitioning = true))
 
   /** Incremental `insert_many` (`/root/reference/src/index.rs:7-9`):
-    * route new vectors to their shard by the same fixed rule and extend
-    * each existing graph — no rebuild of prior points. Shards receiving
-    * no new rows pass through; new shard ids (never the case under the
-    * mod rule, but harmless) start empty graphs.
+    * route new vectors to their shard by the same fixed rule (only they
+    * are shuffled) and extend a [[HnswIndex.copy]] of each receiving
+    * shard's graph in its partition — no rebuild of prior points, and
+    * `index` itself is never mutated. Shards receiving no new rows pass
+    * their graph through; a shard that had no graph (fewer base rows
+    * than shards) starts an empty one.
     */
   def insertIntoIndex(index: HnswDistIndex, rows: DataFrame): HnswDistIndex = {
-    import index.graphs.sparkSession.implicits._
     // routing modulus comes from the index itself (never a parameter —
     // a mismatched value would silently break co-sharding)
-    val newRows = withShard(rows, index.shards).as[(Long, Array[Double], Int)]
+    val added = routed(rows, index.shards)
     HnswDistIndex(index.shards,
-      index.graphs.groupByKey(_.shard).cogroup(newRows.groupByKey(_._3)) {
-        (s, graphs, added) =>
-          val graph = graphs.toSeq.headOption.map(_.graph)
-            .getOrElse(new HnswIndex(seed = 42L + s))
-          added.toArray.sortBy(_._1).foreach { case (id, v, _) => graph.insert(id, v) }
-          Iterator.single(HnswShard(s, graph))
+      index.placed.zipPartitions(added, preservesPartitioning = true) {
+        (graphs, adds) =>
+          if (!adds.hasNext) graphs
+          else {
+            val in = adds.buffered
+            val s = in.head._1
+            val graph = if (graphs.hasNext) graphs.next()._2.copy()
+              else new HnswIndex(seed = 42L + s)
+            Iterator.single(s -> graph.insertAll(sortedById(in)))
+          }
       })
   }
 
@@ -137,28 +134,33 @@ object HnswKnn {
     * difference between an index build and a metadata read).
     */
   def saveIndex(index: HnswDistIndex, path: String): Unit = {
-    import index.graphs.sparkSession.implicits._
+    val spark = SparkSession.active
+    import spark.implicits._
     val n = index.shards
-    index.graphs.map { s =>
+    index.graphs.map { case (s, g) =>
       val bos = new java.io.ByteArrayOutputStream()
       val oos = new java.io.ObjectOutputStream(bos)
-      oos.writeObject(s.graph); oos.close()
-      (s.shard, n, bos.toByteArray)
+      oos.writeObject(g); oos.close()
+      (s, n, bos.toByteArray)
     }.toDF("shard", "n_shards", "graph_bytes").write.mode("overwrite").parquet(path)
   }
 
-  /** Reload a [[saveIndex]] checkpoint (one task per shard blob). The
-    * routing modulus travels with the checkpoint; reading it prunes to
-    * the tiny `n_shards` column (no blob deserialization).
+  /** Reload a [[saveIndex]] checkpoint: the blobs shuffle onto
+    * `HashPartitioner(n_shards)` and decode in their partition, so the
+    * reloaded index has the built one's layout. The routing modulus
+    * travels with the checkpoint; reading it prunes to the tiny
+    * `n_shards` column (no blob deserialization).
     */
   def loadIndex(spark: SparkSession, path: String): HnswDistIndex = {
     import spark.implicits._
     val stored = spark.read.parquet(path)
     val n = stored.select("n_shards").head.getInt(0)
     HnswDistIndex(n, stored.select("shard", "graph_bytes")
-      .as[(Int, Array[Byte])].map { case (s, b) =>
+      .as[(Int, Array[Byte])].rdd
+      .partitionBy(new HashPartitioner(n))
+      .mapValues { b =>
         val ois = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(b))
-        HnswShard(s, ois.readObject().asInstanceOf[HnswIndex])
+        ois.readObject().asInstanceOf[HnswIndex]
       })
   }
 
@@ -180,13 +182,13 @@ object HnswKnn {
     */
   def searchIndex(index: HnswDistIndex, queries: DataFrame, k: Int,
       ef: Int): DataFrame = {
-    val spark = index.graphs.sparkSession
+    val spark = queries.sparkSession
     import spark.implicits._
     val nShards = index.shards
     val qrep = queries.select(col("vec_id"), col("emb"))
       .as[(Long, Array[Double])].rdd
       .flatMap(q => Iterator.range(0, nShards).map(sh => (sh, q)))
-      .partitionBy(new org.apache.spark.HashPartitioner(nShards))
+      .partitionBy(new HashPartitioner(nShards))
     val cand = index.placed.zipPartitions(qrep) { (git, qit) =>
       probeShard(git, qit.map(_._2), k, ef)
     }
@@ -216,7 +218,7 @@ object HnswKnn {
         .zipWithIndex.map { case ((q, id, dist), i) => Row(q, id, dist, i + 1) }
     }.toList
     import scala.jdk.CollectionConverters._
-    index.graphs.sparkSession.createDataFrame(rows.asJava, SearchSchema)
+    SparkSession.active.createDataFrame(rows.asJava, SearchSchema)
   }
 
   /** Walk the partition's shard graph (0 or 1 per placed partition) for

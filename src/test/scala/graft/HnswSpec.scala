@@ -127,9 +127,10 @@ class HnswSpec extends SparkSpec {
 
   test("incremental insert: new vectors become searchable in their shard") {
     import spark.implicits._
-    val (base, _, _, _) = ExactKnn.split(spark, sf0001)
-    val head = base.filter(col("vec_id") < 700)
-    val tail = base.filter(col("vec_id") >= 700)
+    val (base, _, splitAt, _) = ExactKnn.split(spark, sf0001)
+    val cut = splitAt * 3 / 4
+    val head = base.filter(col("vec_id") < cut)
+    val tail = base.filter(col("vec_id") >= cut)
     // non-default shard count: the routing modulus travels inside the
     // index, so inserts land in the same shards the build used
     val built = HnswKnn.buildIndex(head, shards = 5)
@@ -138,6 +139,7 @@ class HnswSpec extends SparkSpec {
     val probe = tail.orderBy("vec_id").limit(3)
       .as[(Long, Array[Double])].collect()
       .map { case (id, v) => (id, v) }
+    assert(probe.length == 3, s"no tail rows above vec_id $cut")
     // querying with an inserted vector itself must return it at distance 0
     val hits = HnswKnn.searchIndex(extended, probe, k = 1)
       .select("qid", "vec_id", "dist").collect()
@@ -146,6 +148,69 @@ class HnswSpec extends SparkSpec {
       assert(row.getLong(1) == id && row.getDouble(2) == 0.0,
         s"inserted vector $id not its own nearest neighbor: $row")
     }
+  }
+
+  test("insert equals a full build when the new ids follow the old, and " +
+      "leaves the input index as it was") {
+    import spark.implicits._
+    val (base, queries, splitAt, _) = ExactKnn.split(spark, sf0001)
+    val cut = splitAt * 3 / 4
+    val qs = queries.as[(Long, Array[Double])].collect()
+    def answers(ix: HnswKnn.HnswDistIndex) =
+      HnswKnn.searchIndex(ix, qs, 10, 100).collect().toSeq
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).sorted
+    // per-shard levels and edge counts: a graph grown from another RNG
+    // state holds the same vectors and may answer alike, but links apart
+    def shape(ix: HnswKnn.HnswDistIndex) =
+      ix.placed.mapValues(_.stats).collect().sortBy(_._1).toSeq
+    val built = HnswKnn.buildIndex(base.filter(col("vec_id") < cut), 5).persist()
+    val full = HnswKnn.buildIndex(base, 5).persist()
+    try {
+      val before = answers(built)
+      val extended = HnswKnn.insertIntoIndex(built,
+        base.filter(col("vec_id") >= cut))
+      val want = answers(full)
+      def differ(a: Seq[(Long, Long, Double, Int)]) =
+        s"${a.diff(want).size} of ${want.size} rows differ from the full build"
+      assert(before != want, "the head-only index already answers like " +
+        "the full build; the comparison below would prove nothing")
+      // per shard the tail ids sort after the head ids, so the insert
+      // continues the build's insert order and RNG stream exactly
+      val got = answers(extended)
+      assert(got == want, differ(got))
+      assert(shape(extended) == shape(full))
+      val after = answers(built)
+      assert(after == before, s"insertIntoIndex mutated its input: " +
+        s"${after.diff(before).size} of ${before.size} rows changed")
+    } finally { built.unpersist(); full.unpersist() }
+  }
+
+  test("build and insert shuffle only vectors, and the input index stays " +
+      "cached") {
+    import spark.implicits._
+    val (base, queries, _, _) = ExactKnn.split(spark, sf0001)
+    val nBase = base.count()
+    var index: HnswKnn.HnswDistIndex = null
+    val build = QueryMetrics.measure(spark) {
+      index = HnswKnn.buildIndex(base, shards = 4)
+      index.placed.count()
+    }
+    try {
+      assert(build.jobs == 1 && build.shuffleRecordsWritten == nBase, build)
+      val rows = queries.as[(Long, Array[Double])].collect().take(6)
+      val added = rows.toSeq.toDF("vec_id", "emb")
+      var next: HnswKnn.HnswDistIndex = null
+      val insert = QueryMetrics.measure(spark) {
+        next = HnswKnn.insertIntoIndex(index, added)
+        next.placed.count()
+      }
+      assert(insert.jobs == 1 && insert.shuffleRecordsWritten == rows.length,
+        insert)
+      assert(spark.sparkContext.getRDDStorageInfo.exists(i =>
+        i.id == index.graphs.id && i.numCachedPartitions == index.shards),
+        "the input index's placed graphs are no longer cached")
+      next.unpersist()
+    } finally index.unpersist()
   }
 
   test("array and DataFrame search forms return equal rows and schema") {
@@ -226,6 +291,23 @@ class HnswSpec extends SparkSpec {
       val after = HnswKnn.searchIndex(loaded, qs).collect().toSet
       assert(before == after, "reloaded index must answer identically")
     } finally index.unpersist()
+  }
+
+  test("a reloaded index is placed like the built one: partition i holds " +
+      "only shard i") {
+    val (base, _, _, _) = ExactKnn.split(spark, sf0001)
+    val index = HnswKnn.buildIndex(base, shards = 5)
+    val dir = java.nio.file.Files.createTempDirectory("graft-hnsw").toString
+    HnswKnn.saveIndex(index, dir)
+    val loaded = HnswKnn.loadIndex(spark, dir)
+    try {
+      assert(loaded.placed.partitioner ==
+        Some(new org.apache.spark.HashPartitioner(5)))
+      val where = loaded.placed
+        .mapPartitionsWithIndex((i, it) => it.map(p => (i, p._1))).collect()
+      assert(where.map(_._2).sorted.toSeq == (0 until 5), where.toSeq)
+      assert(where.forall { case (i, s) => i == s }, where.toSeq)
+    } finally loaded.unpersist()
   }
 
   test("declared lifecycle query equals the in-memory batch, bit for bit") {

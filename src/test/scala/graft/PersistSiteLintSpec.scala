@@ -17,14 +17,14 @@ class PersistSiteLintSpec extends AnyFunSuite {
   /** (source file basename, trimmed line) -> (multiplicity, reason). */
   private val allow: Map[(String, String), (Int, String)] = Map(
     // --- index structures: shard graphs + placed layouts ------------
-    ("HnswKnn.scala", "placedCache.persist(StorageLevel.MEMORY_AND_DISK)") ->
-      (1, "index structure: HNSW placed shard-graph layout (re-persisted " +
-        "after a release)"),
     ("HnswKnn.scala",
-      "org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): HnswDistIndex = {") ->
-      (1, "index structure: HnswDistIndex.persist default level"),
-    ("HnswKnn.scala", "graphs.persist(level); this") ->
-      (1, "index structure: HnswDistIndex.persist body"),
+      "def persist(level: StorageLevel = StorageLevel.MEMORY_AND_DISK): HnswDistIndex =") ->
+      (1, "index structure: HnswDistIndex.persist default level (the " +
+        "placed shard graphs)"),
+    ("HnswKnn.scala",
+      "if (graphs.getStorageLevel == StorageLevel.NONE) graphs.persist(level)") ->
+      (1, "index structure: HnswDistIndex.persist body, also re-persisting " +
+        "placed after a release; a no-op while persisted"),
     ("HnswKnn.scala",
       "val ix = buildIndex(ExactKnn.split(spark, dir)._1, shards).persist()") ->
       (1, "index structure: the one hnsw shard-graph memo (memoIndex)"),
