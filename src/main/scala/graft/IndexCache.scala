@@ -19,7 +19,7 @@ import org.apache.spark.storage.StorageLevel
   *     handle was unpersisted (the bench's between-section cache release)
   *     is re-marked for caching, so later readers never silently rebuild.
   *   - [[getOrBuild]] memoizes DRIVER VALUES and INDEX STRUCTURES
-  *     (centroids, codebooks, shard-graph datasets, staging paths); the
+  *     (centroids, codebooks, placed shard graphs, staging paths); the
   *     build owns whatever persistence its structure needs.
   *
   * Keys are typed: (owning applicationId, family, parts). The family is
@@ -186,9 +186,9 @@ object IndexCache {
     // --- handles to persisted distributed datasets (+ O(1) scalars) ---
     "hnsw" -> ("shards int + placed RDD[(Int, HnswIndex)] handle", 8L),
     "hnsw-ckpt" -> ("shards int + Dataset handle", 8L),
-    "vamana" -> ("shards int + Dataset[VamanaShard] handle", 8L),
+    "vamana" -> ("shards int + placed RDD[(Int, VamanaIndex)] handle", 8L),
     "vamana-ckpt" -> ("shards int + Dataset handle", 8L),
-    "vamana-ins" -> ("shards int + Dataset handle", 8L),
+    "vamana-ins" -> ("shards int + grown placed RDD handle", 8L),
     "split" -> ("persisted base split handle + queries handle + 2 longs", 8L),
     "exact-topk" -> ("persisted ground-truth DataFrame handle", 8L),
     "exact-topk-sampled" -> ("persisted sampled ground-truth handle", 8L),
@@ -228,7 +228,7 @@ object IndexCache {
     "fuzzy-pairs" -> ("persisted verified ed-join pair handle", 8L),
     "fuzzy-labels" -> ("persisted vocab-bounded label-dictionary handle", 8L),
     "hnsw-reloaded" -> ("shards int + reloaded placed RDD handle", 8L),
-    "vamana-reloaded" -> ("shards int + reloaded Dataset handle", 8L),
+    "vamana-reloaded" -> ("shards int + reloaded placed RDD handle", 8L),
     // --- paths / names (O(1) strings) ---
     "ndjson-fixture" -> ("tempfile path string", 4L),
     "documents-stream-dir" -> ("staging dir path string", 4L),

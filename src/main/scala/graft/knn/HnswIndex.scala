@@ -2,6 +2,8 @@ package graft.knn
 
 import scala.collection.mutable.{ArrayBuffer, PriorityQueue}
 
+import ShardGraph.{byDistAsc, dist, l2}
+
 /** In-memory HNSW (Hierarchical Navigable Small World) approximate
   * nearest-neighbor index — a fresh Scala implementation of Algorithms 1,
   * 2, 3 and 5 of the HNSW paper (Malkov & Yashunin, arXiv:1603.09320),
@@ -26,7 +28,7 @@ import scala.collection.mutable.{ArrayBuffer, PriorityQueue}
   * The metric is the engine-wide clamped cosine distance in [0, 1]
   * (`graft.functions.VectorFunctions.distance`). One instance indexes one
   * Spark partition (see [[HnswKnn]]) and is built, extended and searched
-  * where it lives; graphs are serialized only by [[HnswKnn.saveIndex]]
+  * where it lives; graphs are serialized only by [[ShardedKnn.saveIndex]]
   * and by the disk tier of the cache.
   */
 @SerialVersionUID(1L) // pinned: saveIndex checkpoints java-serialized graphs
@@ -44,7 +46,7 @@ final class HnswIndex(
       * the paper's diversity pruning for clustered data.
       */
     val heuristic: Boolean = false)
-    extends Serializable {
+    extends ShardGraph[HnswIndex] {
 
   private var rng = new java.util.Random(seed)
   private val ids = ArrayBuffer.empty[Long]
@@ -76,31 +78,8 @@ final class HnswIndex(
     (ids.length, maxLvl, l0, tot)
   }
 
-  private def l2(v: Array[Double]): Double = {
-    var s = 0.0; var i = 0
-    while (i < v.length) { s += v(i) * v(i); i += 1 }
-    math.sqrt(s)
-  }
-
-  /** Clamped cosine distance; zips to the shorter length like the
-    * reference's dot (`src/vector.rs:9-11`). Clamped on BOTH ends:
-    * dot/denom of a vector with itself can exceed 1 by an ulp, which
-    * would make the distance spuriously negative.
-    */
-  private def dist(a: Array[Double], na: Double, b: Array[Double], nb: Double): Double = {
-    val n = math.min(a.length, b.length)
-    var d = 0.0; var i = 0
-    while (i < n) { d += a(i) * b(i); i += 1 }
-    val denom = na * nb
-    if (denom == 0.0) 1.0
-    else math.max(1.0 - math.max(d / denom, 0.0), 0.0)
-  }
-
   private def distTo(q: Array[Double], nq: Double, node: Int): Double =
     dist(q, nq, vecs(node), norms(node))
-
-  private val byDistAsc: Ordering[(Double, Int)] =
-    Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int)
 
   /** Algorithm 2: best-first beam search within one layer. Returns up to
     * `ef` nearest nodes, ascending by (distance, node).

@@ -1,303 +1,21 @@
 package graft.knn
 
-import org.apache.spark.HashPartitioner
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed approximate kNN: the sharded-HNSW formulation of the
-  * reference's single-process index (`/root/reference/src/hnsw.rs:304-327`).
-  *
-  * Build: base rows route to `HashPartitioner(shards)` on their shard id
-  * (vec_id mod shards), so partition i holds shard i's vectors, and each
-  * partition builds its [[HnswIndex]] (seeded by shard id) in place. That
-  * placed RDD is the index: only vectors are shuffled, once, and the
-  * graphs never move again. An insert shuffles only the new rows onto
-  * the same partitioner and extends a copy of each receiving shard's
-  * graph where it lives.
-  *
-  * Search walks every shard graph for every query ([[probeShard]]) and
-  * keeps the top k per query by (dist rounded 6, vec_id). Two legs:
-  *   - DataFrame queries: scatter-gather. Each query row shuffles to
-  *     every shard partition, `zipPartitions` probes the placed graphs,
-  *     and the per-shard candidates merge through the bounded-heap
-  *     top-k exchange. No query vector visits the driver.
-  *   - Driver-held query arrays: one wave. A single shuffle-free
-  *     `mapPartitions` job over the placed graphs carries the batch in
-  *     its closure, returns k (qid, vec_id, dist) triples per query per
-  *     shard, and the driver merges them (REPOSE-style local top-k,
-  *     coordinator merge). The batch is already on the driver, and the
-  *     merged candidates are proportional to it; a query set too large
-  *     to hold there belongs in the DataFrame leg.
-  *
-  * Scale notes: each executor core owns one shard graph, so build is
-  * embarrassingly parallel and only (qid, id, dist) triples (shards × k
-  * per query, no base vectors) leave a shard. Recall is ≥ a single
-  * global graph's because every shard is probed.
+  * reference's single-process index (`src/hnsw.rs:304-327`) on the
+  * [[ShardedKnn]] harness — each shard's [[HnswIndex]] is seeded
+  * `42 + shard`, so the graphs are bit-reproducible run to run. Beyond
+  * the harness's build / insert / save / load / search and the batch
+  * and lifecycle rows, HNSW adds filtered and single-query search and
+  * per-shard graph stats.
   */
-object HnswKnn {
+object HnswKnn extends ShardedKnn[HnswIndex]("hnsw",
+    s => new HnswIndex(seed = 42L + s)) {
 
-  /** A built distributed index: the shard graphs PLUS the fixed routing
-    * modulus they were built with — carried together so incremental
-    * inserts can never route new vectors to a different shard than their
-    * neighbors went to (the co-sharding invariant is structural, not a
-    * caller-supplied parameter).
-    *
-    * `graphs` is placed on `HashPartitioner(shards)`: partition i holds
-    * exactly shard i's graph, or nothing if shard i is empty.
-    */
-  final case class HnswDistIndex(shards: Int, graphs: RDD[(Int, HnswIndex)]) {
-
-    /** The shard graphs, persisted again if a release unpersisted them:
-      * every search batch runs against this layout, so only queries
-      * travel (at 100 TB: index placement is decided once; query waves
-      * stream past it).
-      */
-    def placed: RDD[(Int, HnswIndex)] = persist().graphs
-
-    /** Marks the graphs for caching at `level`; a no-op while they are
-      * persisted, since Spark throws on a storage-level change.
-      */
-    def persist(level: StorageLevel = StorageLevel.MEMORY_AND_DISK): HnswDistIndex =
-      synchronized {
-        if (graphs.getStorageLevel == StorageLevel.NONE) graphs.persist(level)
-        this
-      }
-
-    def unpersist(): HnswDistIndex = { graphs.unpersist(); this }
-  }
-
-  /** Explicit, reproducible shard assignment: `vec_id mod shards`, as
-    * (shard, (vec_id, emb)) rows shuffled onto `HashPartitioner(shards)`,
-    * so shard s lands in partition s. A FIXED rule (not the engine's
-    * internal repartition hash) so later incremental inserts route new
-    * vectors to the same shard their neighbors went to.
-    */
-  private def routed(rows: DataFrame,
-      shards: Int): RDD[(Int, (Long, Array[Double]))] = {
-    import rows.sparkSession.implicits._
-    rows.select(col("vec_id"), col("emb")).as[(Long, Array[Double])].rdd
-      .map { case (id, v) => (Math.floorMod(id, shards.toLong).toInt, (id, v)) }
-      .partitionBy(new HashPartitioner(shards))
-  }
-
-  /** One shard's routed rows, ascending by vec_id: insert order is fixed,
-    * so the graphs are bit-reproducible run to run.
-    */
-  private def sortedById(rows: Iterator[(Int, (Long, Array[Double]))]) =
-    rows.map(_._2).toArray.sortBy(_._1).iterator
-
-  /** Build one HNSW graph per shard — the build-once half of
-    * build-once/search-many: `.persist()` the result and run any number
-    * of [[searchIndex]] batches against it without re-inserting; extend
-    * with [[insertIntoIndex]]; checkpoint with [[saveIndex]]/[[loadIndex]].
-    * Each partition builds its own shard's graph, seeded `42 + shard`.
-    */
-  def buildIndex(base: DataFrame, shards: Int = 16): HnswDistIndex =
-    HnswDistIndex(shards, routed(base, shards).mapPartitionsWithIndex({
-      (s, rows) =>
-        if (!rows.hasNext) Iterator.empty
-        else Iterator.single(s -> new HnswIndex(seed = 42L + s).insertAll(sortedById(rows)))
-    }, preservesPartitioning = true))
-
-  /** Incremental `insert_many` (`/root/reference/src/index.rs:7-9`):
-    * route new vectors to their shard by the same fixed rule (only they
-    * are shuffled) and extend a [[HnswIndex.copy]] of each receiving
-    * shard's graph in its partition — no rebuild of prior points, and
-    * `index` itself is never mutated. Shards receiving no new rows pass
-    * their graph through; a shard that had no graph (fewer base rows
-    * than shards) starts an empty one.
-    */
-  def insertIntoIndex(index: HnswDistIndex, rows: DataFrame): HnswDistIndex = {
-    // routing modulus comes from the index itself (never a parameter —
-    // a mismatched value would silently break co-sharding)
-    val added = routed(rows, index.shards)
-    HnswDistIndex(index.shards,
-      index.placed.zipPartitions(added, preservesPartitioning = true) {
-        (graphs, adds) =>
-          if (!adds.hasNext) graphs
-          else {
-            val in = adds.buffered
-            val s = in.head._1
-            val graph = if (graphs.hasNext) graphs.next()._2.copy()
-              else new HnswIndex(seed = 42L + s)
-            Iterator.single(s -> graph.insertAll(sortedById(in)))
-          }
-      })
-  }
-
-  /** Persist the shard graphs as a parquet table of java-serialized
-    * blobs — the index-as-a-table checkpoint that lets a later job
-    * [[loadIndex]] and search without rebuilding (at 100 TB this is the
-    * difference between an index build and a metadata read).
-    */
-  def saveIndex(index: HnswDistIndex, path: String): Unit = {
-    val spark = SparkSession.active
-    import spark.implicits._
-    val n = index.shards
-    index.graphs.map { case (s, g) =>
-      val bos = new java.io.ByteArrayOutputStream()
-      val oos = new java.io.ObjectOutputStream(bos)
-      oos.writeObject(g); oos.close()
-      (s, n, bos.toByteArray)
-    }.toDF("shard", "n_shards", "graph_bytes").write.mode("overwrite").parquet(path)
-  }
-
-  /** Reload a [[saveIndex]] checkpoint: the blobs shuffle onto
-    * `HashPartitioner(n_shards)` and decode in their partition, so the
-    * reloaded index has the built one's layout. The routing modulus
-    * travels with the checkpoint; reading it prunes to the tiny
-    * `n_shards` column (no blob deserialization).
-    */
-  def loadIndex(spark: SparkSession, path: String): HnswDistIndex = {
-    import spark.implicits._
-    val stored = spark.read.parquet(path)
-    val n = stored.select("n_shards").head.getInt(0)
-    HnswDistIndex(n, stored.select("shard", "graph_bytes")
-      .as[(Int, Array[Byte])].rdd
-      .partitionBy(new HashPartitioner(n))
-      .mapValues { b =>
-        val ois = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(b))
-        ois.readObject().asInstanceOf[HnswIndex]
-      })
-  }
-
-  /** Fully distributed scatter-gather search of a QUERY DATAFRAME
-    * (`vec_id`, `emb`) against every shard graph:
-    *
-    *   - scatter: each query row is replicated to all `shards` shard
-    *     ids and shuffled to the shard's fixed partition — one shuffle
-    *     of (qid, vec) pairs, the inherent cost of probing every shard;
-    *   - probe: `zipPartitions` against [[HnswDistIndex.placed]] walks
-    *     the partition's local graph per query, STREAMING the query
-    *     iterator (no per-task materialization of the query set — task
-    *     memory is one graph + one in-flight query);
-    *   - gather: per-shard candidates (qid, id, dist triples, never
-    *     vectors) merge through the bounded-heap top-k.
-    *
-    * No query vector ever visits the driver, at any query-split size.
-    * Output: (qid, vec_id, dist rounded 6, rk).
-    */
-  def searchIndex(index: HnswDistIndex, queries: DataFrame, k: Int,
-      ef: Int): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val nShards = index.shards
-    val qrep = queries.select(col("vec_id"), col("emb"))
-      .as[(Long, Array[Double])].rdd
-      .flatMap(q => Iterator.range(0, nShards).map(sh => (sh, q)))
-      .partitionBy(new HashPartitioner(nShards))
-    val cand = index.placed.zipPartitions(qrep) { (git, qit) =>
-      probeShard(git, qit.map(_._2), k, ef)
-    }
-    spark.createDataset(cand).toDF("qid", "vec_id", "dist")
-      .withColumn("dist", round(col("dist"), 6))
-      .transform(df => graft.plans.GraftOps.topKPerGroup(df, Seq("qid"),
-        Seq("dist" -> true, "vec_id" -> true), k))
-  }
-
-  /** Driver-array form (serve batches, tests): ONE shuffle-free job.
-    * `mapPartitions` over [[HnswDistIndex.placed]] with the batch in the
-    * task closure returns each shard's k candidates per query, and the
-    * driver rounds `dist` like Spark's `round(_, 6)`, keeps the top k per
-    * qid by (dist, vec_id) and numbers `rk`. Returns the same rows and
-    * schema as the DataFrame form (HnswSpec pins the equality).
-    */
-  def searchIndex(index: HnswDistIndex,
-      queries: Array[(Long, Array[Double])], k: Int = 10,
-      ef: Int = 100): DataFrame = {
-    val cand = index.placed
-      .mapPartitions(git => probeShard(git, queries.iterator, k, ef)).collect()
-    val rows = cand.groupBy(_._1).valuesIterator.flatMap { c =>
-      c.map { case (q, id, dist) => (q, id, round6(dist)) }
-        .sortBy(t => (t._3, t._2))(
-          Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
-        .iterator.take(k)
-        .zipWithIndex.map { case ((q, id, dist), i) => Row(q, id, dist, i + 1) }
-    }.toList
-    import scala.jdk.CollectionConverters._
-    SparkSession.active.createDataFrame(rows.asJava, SearchSchema)
-  }
-
-  /** Walk the partition's shard graph (0 or 1 per placed partition) for
-    * every query: k (qid, vec_id, dist) triples per query. The one graph
-    * walk both search legs share.
-    */
-  private def probeShard(graphs: Iterator[(Int, HnswIndex)],
-      queries: Iterator[(Long, Array[Double])], k: Int,
-      ef: Int): Iterator[(Long, Long, Double)] = {
-    val gs = graphs.map(_._2).toArray
-    queries.flatMap { case (qid, qv) =>
-      gs.iterator.flatMap(g =>
-        g.search(qv, k, ef).iterator.map { case (id, dist) => (qid, id, dist) })
-    }
-  }
-
-  /** Spark's `round(_, 6)` on a double: HALF_UP on the decimal form. */
-  private[graft] def round6(x: Double): Double =
-    if (x.isNaN || x.isInfinite) x
-    else java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  /** The scatter-gather leg's output schema: `round` makes `dist`
-    * nullable, the top-k rank is a non-null int.
-    */
-  private val SearchSchema = StructType(Seq(
-    StructField("qid", LongType, nullable = false),
-    StructField("vec_id", LongType, nullable = false),
-    StructField("dist", DoubleType),
-    StructField("rk", IntegerType, nullable = false)))
-
-  /** The persisted shard graphs over `dir`'s split base, built once per
-    * (dataset, shards): the one build site every HNSW entry point (batch,
-    * lifecycle, filtered, single, stats, streamed) shares — k and ef are
-    * search-time knobs.
-    */
-  private[graft] def memoIndex(spark: SparkSession, dir: String,
-      shards: Int): HnswDistIndex =
-    graft.IndexCache.getOrBuild(spark, "hnsw", dir, shards) {
-      val ix = buildIndex(ExactKnn.split(spark, dir)._1, shards).persist()
-      ix.graphs.count()
-      ix
-    }
-
-  /** Per-shard top-k candidates for every held-out query (one-shot
-    * build + search). Output: (qid, vec_id, dist rounded 6, rk),
-    * rk <= k — same shape as [[ExactKnn.topKBatch]] so the two are
-    * directly joinable for recall.
-    */
-  def topKBatch(spark: SparkSession, dir: String, k: Int = 10, ef: Int = 100,
-      shards: Int = 16): DataFrame = {
-    val (_, queries, _, _) = ExactKnn.split(spark, dir)
-    searchIndex(memoIndex(spark, dir, shards), queries, k, ef)
-  }
-
-  /** Declared end-to-end index LIFECYCLE: build (or reuse) the shard
-    * graphs, checkpoint them with [[saveIndex]], [[loadIndex]] the
-    * checkpoint, and search every held-out query with the RELOADED
-    * index (`/root/reference/src/index.rs:7-9`'s trait surface as one
-    * query). Output: (qid, vec_id, dist, rk) — bit-equal to
-    * [[topKBatch]]: the checkpoint round-trip must not change a single
-    * neighbor (HnswSpec pins the equality; the driver's correctness
-    * row re-proves the reloaded index answers every round).
-    */
-  def topKBatchLifecycle(spark: SparkSession, dir: String, k: Int = 10,
-      ef: Int = 100, shards: Int = 16): DataFrame = {
-    val (_, queries, _, _) = ExactKnn.split(spark, dir)
-    // checkpoint once per (dataset, shards) — in Bench the first call is
-    // charged to bench_build_hnsw_ckpt; the reload below is memoized
-    // too, so after the first call the declared query times the probe
-    val path = graft.IndexCache.checkpoint(spark, "hnsw", dir, shards)(
-      saveIndex(memoIndex(spark, dir, shards), _))
-    // the reloaded index is memoized per (dataset, shards) like every
-    // other cache: without this, each invocation would persist another
-    // `placed` copy of all shard graphs and never release it
-    val reloaded = graft.IndexCache.getOrBuild(spark, "hnsw-reloaded", dir,
-      shards)(loadIndex(spark, path))
-    searchIndex(reloaded, queries, k, ef)
-  }
+  /** The HNSW shard index. */
+  type HnswDistIndex = ShardedIndex[HnswIndex]
 
   /** Filtered ANN (predicate + vector) on the SHARED shard graphs —
     * the index-path sibling of [[ExactKnn.topKBatchFiltered]]: search

@@ -137,7 +137,7 @@ object IvfKnn {
   }
 
   /** A built IVF index: the k-means centroids plus the assigned
-    * inverted file (vec_id, emb, cid). Like [[HnswKnn.HnswDistIndex]],
+    * inverted file (vec_id, emb, cid). Like [[ShardedIndex]],
     * the structure travels as one value so search/insert/save can never
     * pair mismatched halves.
     */

@@ -2,6 +2,8 @@ package graft.knn
 
 import scala.collection.mutable.{ArrayBuffer, PriorityQueue}
 
+import ShardGraph.{byDistAsc, dist, l2}
+
 /** In-memory Vamana graph index — the DiskANN family's flat navigable
   * graph (Subramanya et al., "DiskANN: Fast Accurate Billion-point
   * Nearest Neighbor Search on a Single Node", NeurIPS 2019), built
@@ -20,7 +22,9 @@ import scala.collection.mutable.{ArrayBuffer, PriorityQueue}
   *
   * The metric is the engine-wide clamped cosine distance in [0, 1],
   * matching [[HnswIndex]]. One instance indexes one Spark partition
-  * (see [[VamanaKnn]]).
+  * (see [[VamanaKnn]]) and is built, extended and searched where it
+  * lives; graphs are serialized only by [[ShardedKnn.saveIndex]] and by
+  * the disk tier of the cache.
   */
 @SerialVersionUID(1L) // pinned: saveIndex checkpoints java-serialized graphs
 final class VamanaIndex(
@@ -30,7 +34,7 @@ final class VamanaIndex(
     val lBuild: Int = 64,
     /** Diversity slack for the second build pass. */
     val alpha: Double = 1.2)
-    extends Serializable {
+    extends ShardGraph[VamanaIndex] {
 
   private val ids = ArrayBuffer.empty[Long]
   private val vecs = ArrayBuffer.empty[Array[Double]]
@@ -45,30 +49,11 @@ final class VamanaIndex(
     (ids.length, nbrs.iterator.map(_.length.toLong).sum,
       if (start < 0) -1L else ids(start))
 
-  private def l2(v: Array[Double]): Double = {
-    var s = 0.0; var i = 0
-    while (i < v.length) { s += v(i) * v(i); i += 1 }
-    math.sqrt(s)
-  }
-
-  private def dist(a: Array[Double], na: Double, b: Array[Double],
-      nb: Double): Double = {
-    val n = math.min(a.length, b.length)
-    var d = 0.0; var i = 0
-    while (i < n) { d += a(i) * b(i); i += 1 }
-    val denom = na * nb
-    if (denom == 0.0) 1.0
-    else math.max(1.0 - math.max(d / denom, 0.0), 0.0)
-  }
-
   private def distBetween(x: Int, y: Int): Double =
     dist(vecs(x), norms(x), vecs(y), norms(y))
 
   private def distTo(q: Array[Double], nq: Double, node: Int): Double =
     dist(q, nq, vecs(node), norms(node))
-
-  private val byDistAsc: Ordering[(Double, Int)] =
-    Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int)
 
   /** Alg 1 GreedySearch from `start`: best-first with list size `l`.
     * Returns (beam ascending by (dist, node), visited nodes with their
@@ -164,13 +149,30 @@ final class VamanaIndex(
 
   def insert(id: Long, v: Array[Double]): Unit = insert(id, v, alpha)
 
+  def insertAll(points: Iterator[(Long, Array[Double])]): this.type = {
+    points.foreach { case (id, v) => insert(id, v) }
+    this
+  }
+
+  /** A deep copy of every adjacency list: inserting into the copy grows
+    * the graph this instance would have grown, and leaves this instance
+    * as it was. Vectors are shared; nothing mutates them.
+    */
+  def copy(): VamanaIndex = {
+    val c = new VamanaIndex(r, lBuild, alpha)
+    c.ids ++= ids; c.vecs ++= vecs; c.norms ++= norms
+    c.nbrs ++= nbrs.map(_.clone())
+    c.start = start
+    c
+  }
+
   /** Two-pass build (Alg 3): insert everything at α = 1 (pure nearest
     * pruning), then re-prune every node's neighborhood at α — the
     * paper's refinement pass that plants the long-range highway edges.
     * After both passes the start point is re-anchored to the point
     * closest to the dataset mean.
     */
-  def build(points: Iterator[(Long, Array[Double])]): this.type = {
+  override def build(points: Iterator[(Long, Array[Double])]): this.type = {
     points.foreach { case (id, v) => insert(id, v, 1.0) }
     if (size == 0) return this
     // re-anchor the entry to the point nearest the mean (O(n))

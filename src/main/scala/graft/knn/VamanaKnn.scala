@@ -1,14 +1,14 @@
 package graft.knn
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Distributed Vamana (DiskANN-family) ANN: the [[HnswKnn]] sharded
-  * scatter-gather layout with the flat α-pruned graph inside each
-  * shard. Same co-sharding rule (vec_id mod shards), same fixed
-  * partition placement, same streaming query replication — only the
-  * per-partition index differs, which is exactly the point: the shard
-  * harness is index-agnostic, so a new graph family costs one class.
+/** Distributed Vamana (DiskANN-family) ANN: the flat α-pruned graph
+  * inside each shard of the [[ShardedKnn]] harness (ShardedIndex.scala)
+  * that HNSW runs on. Same co-sharding rule (vec_id mod shards), same
+  * fixed partition placement, same search legs — only the per-partition
+  * index differs, so a graph family costs one [[ShardGraph]] class and
+  * this object.
   *
   * Scale notes: Vamana is the disk-native family — ONE flat adjacency
   * per node means a shard graph serializes to a contiguous block and
@@ -17,71 +17,17 @@ import org.apache.spark.sql.functions._
   * checkpoint written by [[saveIndex]] is that layout as a parquet
   * blob table.
   */
-object VamanaKnn {
-
-  @SerialVersionUID(1L)
-  case class VamanaShard(shard: Int, graph: VamanaIndex)
-  private implicit val shardEncoder: org.apache.spark.sql.Encoder[VamanaShard] =
-    org.apache.spark.sql.Encoders.kryo[VamanaShard]
-
-  final case class VamanaDistIndex(shards: Int, graphs: Dataset[VamanaShard]) {
-    @transient private var placedCache: org.apache.spark.rdd.RDD[(Int, VamanaIndex)] = _
-    def placed: org.apache.spark.rdd.RDD[(Int, VamanaIndex)] = synchronized {
-      if (placedCache == null)
-        placedCache = graphs.rdd.map(s => (s.shard, s.graph))
-          .partitionBy(new org.apache.spark.HashPartitioner(shards))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      placedCache
-    }
-    def persist(): VamanaDistIndex = { graphs.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK); this }
-  }
-
-  /** Build one two-pass Vamana graph per shard (vec_id-mod routing,
-    * id-sorted inserts — bit-reproducible run to run).
-    */
-  def buildIndex(base: DataFrame, shards: Int = 16): VamanaDistIndex = {
-    import base.sparkSession.implicits._
-    VamanaDistIndex(shards, base.select(col("vec_id"), col("emb"))
-      .withColumn("shard", pmod(col("vec_id"), lit(shards)).cast("int"))
-      .as[(Long, Array[Double], Int)]
-      .groupByKey(_._3)
-      .mapGroups { (s, rows) =>
-        val sorted = rows.toArray.sortBy(_._1)
-        VamanaShard(s, new VamanaIndex()
-          .build(sorted.iterator.map(r => (r._1, r._2))))
-      })
-  }
-
-  /** Incremental `insert_many`: route new vectors by the same fixed
-    * mod rule and extend each shard graph through the paper's α-pass
-    * insert (GreedySearch + RobustPrune — the identical code path the
-    * build runs, which is Vamana's selling point: insertion IS the
-    * build step).
-    */
-  def insertIntoIndex(index: VamanaDistIndex,
-      rows: DataFrame): VamanaDistIndex = {
-    import index.graphs.sparkSession.implicits._
-    val newRows = rows.select(col("vec_id"), col("emb"))
-      .withColumn("shard", pmod(col("vec_id"), lit(index.shards)).cast("int"))
-      .as[(Long, Array[Double], Int)]
-    VamanaDistIndex(index.shards,
-      index.graphs.groupByKey(_.shard).cogroup(newRows.groupByKey(_._3)) {
-        (s, graphs, added) =>
-          val g = graphs.toSeq.headOption.map(_.graph)
-            .getOrElse(new VamanaIndex())
-          added.toArray.sortBy(_._1)
-            .foreach { case (id, v, _) => g.insert(id, v) }
-          Iterator.single(VamanaShard(s, g))
-      })
-  }
+object VamanaKnn extends ShardedKnn[VamanaIndex]("vamana",
+    _ => new VamanaIndex()) {
 
   /** `insert_many` into a BUILT Vamana index, then search: graphs
     * build on the first 90% prefix, the 90-95% slab arrives through
-    * [[insertIntoIndex]], and the held-out queries search the grown
-    * graphs — the mutation path on the flat-graph family, literal-
-    * pinned (deterministic) with a recall gate against the exact
-    * after-insert ground truth in VamanaKnnSpec.
+    * [[insertIntoIndex]] (the α-pass insert IS the build step), and the
+    * held-out queries search the grown graphs — the mutation path on
+    * the flat-graph family, literal-pinned (deterministic) with a recall
+    * gate against the exact after-insert ground truth in VamanaKnnSpec.
+    * Only the grown index is cached: the head-only build is never
+    * persisted, and the insert reads its graphs without placing them.
     */
   def topKAfterInsert(spark: SparkSession, dir: String, k: Int = 10,
       nq: Int = 20, ef: Int = 100, shards: Int = 16): DataFrame = {
@@ -98,105 +44,10 @@ object VamanaKnn {
         s"[${stats.getLong(1)}, ${stats.getLong(2)}]")
     val s90 = math.round(0.90 * n)
     val s95 = math.round(0.95 * n)
-    val index = graft.IndexCache.getOrBuild(spark, "vamana-ins", dir, shards) {
-      val built = buildIndex(emb.filter(col("vec_id") < s90), shards)
-      val grown = insertIntoIndex(built,
-        emb.filter(col("vec_id") >= s90 && col("vec_id") < s95)).persist()
-      grown.graphs.count()
-      grown
-    }
+    val index = memo(spark, "vamana-ins", dir, shards)(insertIntoIndex(
+      buildIndex(emb.filter(col("vec_id") < s90), shards),
+      emb.filter(col("vec_id") >= s90 && col("vec_id") < s95)))
     val queries = emb.filter(col("vec_id") >= s95 && col("vec_id") < s95 + nq)
-    searchIndex(index, queries, k, ef)
-  }
-
-  /** Checkpoint the shard graphs as java-serialized parquet blobs —
-    * the [[HnswKnn.saveIndex]] layout.
-    */
-  def saveIndex(index: VamanaDistIndex, path: String): Unit = {
-    import index.graphs.sparkSession.implicits._
-    val n = index.shards
-    index.graphs.map { s =>
-      val bos = new java.io.ByteArrayOutputStream()
-      val oos = new java.io.ObjectOutputStream(bos)
-      oos.writeObject(s.graph); oos.close()
-      (s.shard, n, bos.toByteArray)
-    }.toDF("shard", "n_shards", "graph_bytes")
-      .write.mode("overwrite").parquet(path)
-  }
-
-  def loadIndex(spark: SparkSession, path: String): VamanaDistIndex = {
-    import spark.implicits._
-    val stored = spark.read.parquet(path)
-    val n = stored.select("n_shards").head.getInt(0)
-    VamanaDistIndex(n, stored.select("shard", "graph_bytes")
-      .as[(Int, Array[Byte])].map { case (s, b) =>
-        val ois = new java.io.ObjectInputStream(
-          new java.io.ByteArrayInputStream(b))
-        VamanaShard(s, ois.readObject().asInstanceOf[VamanaIndex])
-      })
-  }
-
-  /** Scatter-gather search: query rows replicate to every shard's
-    * fixed partition, walk the local flat graph, merge candidates
-    * through the bounded-heap top-k. No query vector visits the
-    * driver. Output: (qid, vec_id, dist rounded 6, rk).
-    */
-  def searchIndex(index: VamanaDistIndex, queries: DataFrame, k: Int,
-      ef: Int): DataFrame = {
-    val spark = index.graphs.sparkSession
-    import spark.implicits._
-    val nShards = index.shards
-    val qrep = queries.select(col("vec_id"), col("emb"))
-      .as[(Long, Array[Double])].rdd
-      .flatMap(q => Iterator.range(0, nShards).map(sh => (sh, q)))
-      .partitionBy(new org.apache.spark.HashPartitioner(nShards))
-    val cand = index.placed.zipPartitions(qrep) { (git, qit) =>
-      val graphs = git.map(_._2).toArray
-      qit.flatMap { case (_, (qid, qv)) =>
-        graphs.iterator.flatMap(g =>
-          g.search(qv, k, ef).iterator.map { case (id, d) => (qid, id, d) })
-      }
-    }
-    spark.createDataset(cand).toDF("qid", "vec_id", "dist")
-      .withColumn("dist", round(col("dist"), 6))
-      .transform(df => graft.plans.GraftOps.topKPerGroup(df, Seq("qid"),
-        Seq("dist" -> true, "vec_id" -> true), k))
-  }
-
-  /** The persisted shard graphs over `dir`'s split base, built once per
-    * (dataset, shards) — the one build site batch and lifecycle share.
-    */
-  private def memoIndex(spark: SparkSession, dir: String,
-      shards: Int): VamanaDistIndex =
-    graft.IndexCache.getOrBuild(spark, "vamana", dir, shards) {
-      val ix = buildIndex(ExactKnn.split(spark, dir)._1, shards).persist()
-      ix.graphs.count()
-      ix
-    }
-
-  /** One-shot build + batch search over the held-out queries — the
-    * family-standard declared shape.
-    */
-  def topKBatch(spark: SparkSession, dir: String, k: Int = 10,
-      ef: Int = 100, shards: Int = 16): DataFrame = {
-    val (_, queries, _, _) = ExactKnn.split(spark, dir)
-    searchIndex(memoIndex(spark, dir, shards), queries, k, ef)
-  }
-
-  /** Build → save → load → search with the RELOADED graphs, bit-equal
-    * to [[topKBatch]] (same search body; VamanaKnnSpec pins it).
-    */
-  def topKBatchLifecycle(spark: SparkSession, dir: String, k: Int = 10,
-      ef: Int = 100, shards: Int = 16): DataFrame = {
-    val (_, queries, _, _) = ExactKnn.split(spark, dir)
-    val path = graft.IndexCache.checkpoint(spark, "vamana", dir, shards)(
-      saveIndex(memoIndex(spark, dir, shards), _))
-    val index = graft.IndexCache.getOrBuild(spark, "vamana-reloaded", dir,
-        shards) {
-      val ix = loadIndex(spark, path).persist()
-      ix.graphs.count()
-      ix
-    }
     searchIndex(index, queries, k, ef)
   }
 }

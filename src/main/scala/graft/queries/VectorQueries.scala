@@ -868,9 +868,9 @@ object VectorQueries {
     row("knn_opq_lifecycle", (s, d) => OpqKnn.topKBatchLifecycle(s, d),
       GeneratedOracles.pins("knn_opq_batch")),
 
-    // Vamana (DiskANN family): flat alpha-pruned graph per shard, the
-    // HnswKnn scatter-gather harness with a different index inside
-    // the same relation as the knn_opq_batch pin at sf0.01
+    // Vamana (DiskANN family): a flat alpha-pruned graph per shard on
+    // the ShardedKnn harness HNSW runs on; at sf0.01 its rows equal the
+    // knn_opq_batch pin
     row("knn_vamana_batch", vamanaBatch, GeneratedOracles.pins("knn_opq_batch")),
 
     // same bit-equal reload contract for the Vamana checkpoint

@@ -147,7 +147,7 @@ object VectorStream {
 
   /** STREAMING ANN serving over the HNSW index — the production
     * serving-tier shape: the shard graphs stay PINNED to their fixed
-    * executor partitions ([[graft.knn.HnswKnn.HnswDistIndex.placed]] —
+    * executor partitions ([[graft.knn.ShardedIndex.placed]] —
     * placement decided once per index), and each arriving micro-batch
     * of query vectors runs the SAME distributed scatter-gather as the
     * batch path ([[graft.knn.HnswKnn.searchIndex]] inside

@@ -73,7 +73,7 @@ class CollectSiteLintSpec extends AnyFunSuite {
       (1, "mutual-pair edges, panel-bounded (<= panel*k rows) and " +
         "cutover-gated at 10M edges (star-contraction leg above; " +
         "family:mutual-knn-clusters caps the memoized result)"),
-    ("HnswKnn.scala",
+    ("ShardedIndex.scala",
       ".mapPartitions(git => probeShard(git, queries.iterator, k, ef)).collect()") ->
       (1, "|q|·shards·k candidate triples, proportional to the " +
         "driver-held query batch"),

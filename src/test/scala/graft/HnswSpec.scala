@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.knn.{ExactKnn, HnswIndex, HnswKnn}
+import graft.knn.{ExactKnn, HnswIndex, HnswKnn, ShardGraph, ShardedIndex, ShardedKnn, VamanaIndex, VamanaKnn}
 import graft.operators.Evaluation
 
 /** HNSW quality gates — the reference's own correctness mechanism is
@@ -185,34 +185,6 @@ class HnswSpec extends SparkSpec {
     } finally { built.unpersist(); full.unpersist() }
   }
 
-  test("build and insert shuffle only vectors, and the input index stays " +
-      "cached") {
-    import spark.implicits._
-    val (base, queries, _, _) = ExactKnn.split(spark, sf0001)
-    val nBase = base.count()
-    var index: HnswKnn.HnswDistIndex = null
-    val build = QueryMetrics.measure(spark) {
-      index = HnswKnn.buildIndex(base, shards = 4)
-      index.placed.count()
-    }
-    try {
-      assert(build.jobs == 1 && build.shuffleRecordsWritten == nBase, build)
-      val rows = queries.as[(Long, Array[Double])].collect().take(6)
-      val added = rows.toSeq.toDF("vec_id", "emb")
-      var next: HnswKnn.HnswDistIndex = null
-      val insert = QueryMetrics.measure(spark) {
-        next = HnswKnn.insertIntoIndex(index, added)
-        next.placed.count()
-      }
-      assert(insert.jobs == 1 && insert.shuffleRecordsWritten == rows.length,
-        insert)
-      assert(spark.sparkContext.getRDDStorageInfo.exists(i =>
-        i.id == index.graphs.id && i.numCachedPartitions == index.shards),
-        "the input index's placed graphs are no longer cached")
-      next.unpersist()
-    } finally index.unpersist()
-  }
-
   test("array and DataFrame search forms return equal rows and schema") {
     import spark.implicits._
     val (base, queries, _, _) = ExactKnn.split(spark, sf0001)
@@ -241,38 +213,9 @@ class HnswSpec extends SparkSpec {
       Double.NegativeInfinity)
     val viaSpark = xs.toDF("x").select(round(col("x"), 6)).as[Double].collect()
     for ((x, r) <- xs.zip(viaSpark)) {
-      val mine = HnswKnn.round6(x)
+      val mine = ShardedIndex.round6(x)
       assert(java.lang.Double.doubleToLongBits(mine) ==
         java.lang.Double.doubleToLongBits(r), s"round6($x) = $mine, Spark: $r")
-    }
-  }
-
-  test("one-wave serve batch: one job, no shuffle, also after a cache " +
-      "release re-persists placed") {
-    import spark.implicits._
-    val (base, queries, _, _) = ExactKnn.split(spark, sf0001)
-    val qs = queries.as[(Long, Array[Double])].collect().take(8)
-    val index = HnswKnn.buildIndex(base, shards = 4).persist()
-    try {
-      val placed = index.placed
-      placed.count()
-      val m0 = QueryMetrics.measure(spark)(HnswKnn.searchIndex(index, qs).collect())
-      assert(m0.jobs == 1 && m0.shuffleBytesWritten == 0, m0)
-      // Bench.releaseCaches: drop every cached relation and RDD
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      assert(placed.getStorageLevel == StorageLevel.NONE)
-      HnswKnn.searchIndex(index, qs).collect()
-      assert(index.placed eq placed)
-      assert(placed.getStorageLevel == StorageLevel.MEMORY_AND_DISK)
-      assert(spark.sparkContext.getRDDStorageInfo.exists(i =>
-        i.id == placed.id && i.numCachedPartitions == index.shards),
-        "the search after the release cached every shard graph again")
-      val m = QueryMetrics.measure(spark)(HnswKnn.searchIndex(index, qs).collect())
-      assert(m.jobs == 1 && m.shuffleBytesWritten == 0, m)
-    } finally {
-      index.unpersist()
-      IndexCache.clear() // later suites rebuild from scratch
     }
   }
 
@@ -291,23 +234,6 @@ class HnswSpec extends SparkSpec {
       val after = HnswKnn.searchIndex(loaded, qs).collect().toSet
       assert(before == after, "reloaded index must answer identically")
     } finally index.unpersist()
-  }
-
-  test("a reloaded index is placed like the built one: partition i holds " +
-      "only shard i") {
-    val (base, _, _, _) = ExactKnn.split(spark, sf0001)
-    val index = HnswKnn.buildIndex(base, shards = 5)
-    val dir = java.nio.file.Files.createTempDirectory("graft-hnsw").toString
-    HnswKnn.saveIndex(index, dir)
-    val loaded = HnswKnn.loadIndex(spark, dir)
-    try {
-      assert(loaded.placed.partitioner ==
-        Some(new org.apache.spark.HashPartitioner(5)))
-      val where = loaded.placed
-        .mapPartitionsWithIndex((i, it) => it.map(p => (i, p._1))).collect()
-      assert(where.map(_._2).sorted.toSeq == (0 until 5), where.toSeq)
-      assert(where.forall { case (i, s) => i == s }, where.toSeq)
-    } finally loaded.unpersist()
   }
 
   test("declared lifecycle query equals the in-memory batch, bit for bit") {
@@ -367,5 +293,129 @@ class HnswSpec extends SparkSpec {
       case _ => ()
     }
     assert(rows.last._2 >= 0.85, s"recall@ef=100 ${rows.last._2}")
+  }
+
+  /** The shard-harness cases, registered once per graph family: the
+    * HNSW names carry no prefix, the Vamana ones "vamana: ".
+    */
+  private def harnessCases[G <: ShardGraph[G]](knn: ShardedKnn[G],
+      prefix: String): Unit = {
+
+    test(prefix + "build and insert shuffle only vectors, and the input " +
+        "index stays cached") {
+      import spark.implicits._
+      val (base, queries, _, _) = ExactKnn.split(spark, sf0001)
+      val nBase = base.count()
+      var index: ShardedIndex[G] = null
+      val build = QueryMetrics.measure(spark) {
+        index = knn.buildIndex(base, shards = 4)
+        index.placed.count()
+      }
+      try {
+        assert(build.jobs == 1 && build.shuffleRecordsWritten == nBase, build)
+        val rows = queries.as[(Long, Array[Double])].collect().take(6)
+        val added = rows.toSeq.toDF("vec_id", "emb")
+        var next: ShardedIndex[G] = null
+        val insert = QueryMetrics.measure(spark) {
+          next = knn.insertIntoIndex(index, added)
+          next.placed.count()
+        }
+        assert(insert.jobs == 1 && insert.shuffleRecordsWritten == rows.length,
+          insert)
+        assert(spark.sparkContext.getRDDStorageInfo.exists(i =>
+          i.id == index.graphs.id && i.numCachedPartitions == index.shards),
+          "the input index's placed graphs are no longer cached")
+        next.unpersist()
+      } finally index.unpersist()
+    }
+
+    test(prefix + "one-wave serve batch: one job, no shuffle, also after a " +
+        "cache release re-persists placed") {
+      import spark.implicits._
+      val (base, queries, _, _) = ExactKnn.split(spark, sf0001)
+      val qs = queries.as[(Long, Array[Double])].collect().take(8)
+      val index = knn.buildIndex(base, shards = 4).persist()
+      try {
+        val placed = index.placed
+        placed.count()
+        val m0 = QueryMetrics.measure(spark)(knn.searchIndex(index, qs).collect())
+        assert(m0.jobs == 1 && m0.shuffleBytesWritten == 0, m0)
+        val legs = Seq[(String, () => Unit)](
+          "array" -> (() => knn.searchIndex(index, qs).collect()),
+          "DataFrame" -> (() => knn.searchIndex(index, queries, 10, 100).collect()))
+        for ((leg, search) <- legs) {
+          // Bench.releaseCaches: drop every cached relation and RDD
+          spark.catalog.clearCache()
+          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+          assert(placed.getStorageLevel == StorageLevel.NONE)
+          search()
+          assert(index.placed eq placed, leg)
+          assert(placed.getStorageLevel == StorageLevel.MEMORY_AND_DISK, leg)
+          assert(spark.sparkContext.getRDDStorageInfo.exists(i =>
+            i.id == placed.id && i.numCachedPartitions == index.shards),
+            s"the $leg search after the release cached every shard graph again")
+        }
+        val m = QueryMetrics.measure(spark)(knn.searchIndex(index, qs).collect())
+        assert(m.jobs == 1 && m.shuffleBytesWritten == 0, m)
+      } finally {
+        index.unpersist()
+        IndexCache.clear() // later suites rebuild from scratch
+      }
+    }
+
+    test(prefix + "a reloaded index is placed like the built one: partition " +
+        "i holds only shard i") {
+      val (base, _, _, _) = ExactKnn.split(spark, sf0001)
+      val index = knn.buildIndex(base, shards = 5)
+      val dir = java.nio.file.Files.createTempDirectory("graft-shards").toString
+      knn.saveIndex(index, dir)
+      val loaded = knn.loadIndex(spark, dir)
+      try {
+        assert(loaded.placed.partitioner ==
+          Some(new org.apache.spark.HashPartitioner(5)))
+        val where = loaded.placed
+          .mapPartitionsWithIndex((i, it) => it.map(p => (i, p._1))).collect()
+        assert(where.map(_._2).sorted.toSeq == (0 until 5), where.toSeq)
+        assert(where.forall { case (i, s) => i == s }, where.toSeq)
+      } finally loaded.unpersist()
+    }
+  }
+
+  harnessCases(HnswKnn, "")
+  harnessCases(VamanaKnn, "vamana: ")
+
+  test("vamana: insert leaves the input index answering as before") {
+    import spark.implicits._
+    val (base, queries, splitAt, _) = ExactKnn.split(spark, sf0001)
+    val cut = splitAt * 3 / 4
+    val qs = queries.as[(Long, Array[Double])].collect()
+    def answers(ix: ShardedIndex[VamanaIndex]) =
+      VamanaKnn.searchIndex(ix, qs, 10, 100).collect().toSeq
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).sorted
+    val built = VamanaKnn.buildIndex(base.filter(col("vec_id") < cut), 5).persist()
+    try {
+      val before = answers(built)
+      val extended = VamanaKnn.insertIntoIndex(built,
+        base.filter(col("vec_id") >= cut)).persist()
+      try {
+        assert(answers(extended) != before, "the insert changed no answer; " +
+          "the check below would prove nothing")
+        val after = answers(built)
+        assert(after == before, s"insertIntoIndex mutated its input: " +
+          s"${after.diff(before).size} of ${before.size} rows changed")
+      } finally extended.unpersist()
+    } finally built.unpersist()
+  }
+
+  test("vamana: topKAfterInsert caches only the grown index") {
+    IndexCache.clear()
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    VamanaKnn.topKAfterInsert(spark, sf0001).collect()
+    val grown = IndexCache.getOrBuild[ShardedIndex[VamanaIndex]](spark,
+      "vamana-ins", sf0001, 16)(fail("topKAfterInsert memoized no grown index"))
+    val cached = spark.sparkContext.getRDDStorageInfo.map(_.id).toSeq
+    assert(cached == Seq(grown.graphs.id),
+      s"cached RDDs $cached, want only the grown index ${grown.graphs.id}")
   }
 }

@@ -17,33 +17,17 @@ class PersistSiteLintSpec extends AnyFunSuite {
   /** (source file basename, trimmed line) -> (multiplicity, reason). */
   private val allow: Map[(String, String), (Int, String)] = Map(
     // --- index structures: shard graphs + placed layouts ------------
-    ("HnswKnn.scala",
-      "def persist(level: StorageLevel = StorageLevel.MEMORY_AND_DISK): HnswDistIndex =") ->
-      (1, "index structure: HnswDistIndex.persist default level (the " +
-        "placed shard graphs)"),
-    ("HnswKnn.scala",
+    ("ShardedIndex.scala",
+      "def persist(level: StorageLevel = StorageLevel.MEMORY_AND_DISK): ShardedIndex[G] =") ->
+      (1, "index structure: ShardedIndex.persist default level (the " +
+        "placed shard graphs of every graph family)"),
+    ("ShardedIndex.scala",
       "if (graphs.getStorageLevel == StorageLevel.NONE) graphs.persist(level)") ->
-      (1, "index structure: HnswDistIndex.persist body, also re-persisting " +
+      (1, "index structure: ShardedIndex.persist body, also re-persisting " +
         "placed after a release; a no-op while persisted"),
-    ("HnswKnn.scala",
-      "val ix = buildIndex(ExactKnn.split(spark, dir)._1, shards).persist()") ->
-      (1, "index structure: the one hnsw shard-graph memo (memoIndex)"),
-    ("VamanaKnn.scala",
-      ".persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)") ->
-      (1, "index structure: Vamana placed shard-graph layout"),
-    ("VamanaKnn.scala", "def persist(): VamanaDistIndex = { graphs.persist(") ->
-      (1, "index structure: VamanaDistIndex.persist body"),
-    ("VamanaKnn.scala",
-      "org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK); this }") ->
-      (1, "index structure: VamanaDistIndex.persist level"),
-    ("VamanaKnn.scala",
-      "emb.filter(col(\"vec_id\") >= s90 && col(\"vec_id\") < s95)).persist()") ->
-      (1, "index structure: the vamana-ins grown shard graphs"),
-    ("VamanaKnn.scala",
-      "val ix = buildIndex(ExactKnn.split(spark, dir)._1, shards).persist()") ->
-      (1, "index structure: the one vamana shard-graph memo (memoIndex)"),
-    ("VamanaKnn.scala", "val ix = loadIndex(spark, path).persist()") ->
-      (1, "index structure: the vamana-reloaded shard graphs"),
+    ("ShardedIndex.scala", "val ix = build.persist()") ->
+      (1, "index structure: the one shard-graph memo step (ShardedKnn.memo: " +
+        "hnsw, hnsw-reloaded, vamana, vamana-reloaded, vamana-ins)"),
     ("IvfKnn.scala", "assigned.persist(StorageLevel.MEMORY_AND_DISK).count(); this") ->
       (1, "index structure: IvfIndex.persist (centroids + inverted file)"),
     ("IvfKnn.scala", "buildIndex(ExactKnn.split(spark, dir)._1, nC).persist())") ->
