@@ -185,9 +185,7 @@ object IndexCache {
   private[graft] val driverArtifactBounds: Map[String, (String, Long)] = Map(
     // --- handles to persisted distributed datasets (+ O(1) scalars) ---
     "hnsw" -> ("shards int + placed RDD[(Int, HnswIndex)] handle", 8L),
-    "hnsw-ckpt" -> ("shards int + Dataset handle", 8L),
     "vamana" -> ("shards int + placed RDD[(Int, VamanaIndex)] handle", 8L),
-    "vamana-ckpt" -> ("shards int + Dataset handle", 8L),
     "vamana-ins" -> ("shards int + grown placed RDD handle", 8L),
     "split" -> ("persisted base split handle + queries handle + 2 longs", 8L),
     "exact-topk" -> ("persisted ground-truth DataFrame handle", 8L),
@@ -229,7 +227,20 @@ object IndexCache {
     "fuzzy-labels" -> ("persisted vocab-bounded label-dictionary handle", 8L),
     "hnsw-reloaded" -> ("shards int + reloaded placed RDD handle", 8L),
     "vamana-reloaded" -> ("shards int + reloaded placed RDD handle", 8L),
+    "ivf-del" -> ("persisted shrunken inverted-file handle", 8L),
+    "pca" -> ("persisted projected-base handle", 8L),
+    "mrl" -> ("persisted coarse-prefix handle", 8L),
+    "bq" -> ("persisted packed-code handle", 8L),
+    "bq-wide" -> ("persisted wide packed-code handle", 8L),
     // --- paths / names (O(1) strings) ---
+    // IndexCache.checkpoint memoizes only the path it wrote
+    "hnsw-ckpt" -> ("checkpoint path string", 4L),
+    "vamana-ckpt" -> ("checkpoint path string", 4L),
+    "ivf-ckpt" -> ("checkpoint path string", 4L),
+    "ivfpq-ckpt" -> ("checkpoint path string", 4L),
+    "pq-ckpt" -> ("checkpoint path string", 4L),
+    "opq-ckpt" -> ("checkpoint path string", 4L),
+    "pca-ckpt" -> ("checkpoint path string", 4L),
     "ndjson-fixture" -> ("tempfile path string", 4L),
     "documents-stream-dir" -> ("staging dir path string", 4L),
     "embeddings-stream-dir" -> ("staging dir path string", 4L),
@@ -255,14 +266,12 @@ object IndexCache {
     "orders-mor-compacted" -> ("major-compacted snapshot path string", 4L),
     "orders-evolved" -> ("two-generation schema-evolution dir path string", 4L),
     // --- genuinely driver-side artifacts, each with its design bound ---
-    "ivf" -> ("nCentroids x dim doubles (KMEANS_CENTROIDS cap)", 1000000L),
-    "ivf-ckpt" -> ("nCentroids x dim doubles", 1000000L),
-    "ivf-ins" -> ("nCentroids x dim doubles", 1000000L),
-    "ivf-del" -> ("nCentroids x dim doubles", 1000000L),
+    "ivf" -> ("nCentroids x dim doubles (KMEANS_CENTROIDS cap) + " +
+      "inverted-file handle", 1000000L),
+    "ivf-ins" -> ("nCentroids x dim doubles + grown inverted-file handle",
+      1000000L),
     "ivfpq" -> ("coarse centroids + m x ksub x dsub codebooks", 2000000L),
-    "ivfpq-ckpt" -> ("coarse centroids + PQ codebooks", 2000000L),
     "pq" -> ("m x ksub x dsub codebook doubles", 1000000L),
-    "pq-ckpt" -> ("m x ksub x dsub codebook doubles", 1000000L),
     "pq-reloaded" -> ("reloaded codebook doubles + code handle", 1000000L),
     "ivfpq-reloaded" -> ("reloaded centroids + codebooks", 2000000L),
     "opq-reloaded" -> ("reloaded rotation + codebooks", 2000000L),
@@ -282,16 +291,10 @@ object IndexCache {
     "neardup-oracle-corpus" -> ("whole-corpus n x dim flat matrix " +
       "(oracle-baseline exemption, cutover-gated consumers)", 32000000L),
     "opq" -> ("rotation dim^2 + codebook doubles", 2000000L),
-    "opq-ckpt" -> ("rotation + codebook doubles", 2000000L),
     "opq-rot" -> ("dim x dim rotation doubles", 1000000L),
     "pca-basis" -> ("dim x outDim basis + dim means", 1000000L),
-    "pca" -> ("basis doubles + projected-base handle", 1000000L),
-    "pca-ckpt" -> ("basis doubles + projected-base handle", 1000000L),
-    "mrl" -> ("coarse-dim handle + O(1) scalars", 1000000L),
     "rp" -> ("persisted projected-base handle (matrix is re-derived)", 8L),
     "sq" -> ("2 x dim quantile bounds", 100000L),
-    "bq" -> ("dim threshold doubles + packed-code handle", 100000L),
-    "bq-wide" -> ("nBits x dim hyperplane doubles", 1000000L),
     "kmeans-cents" -> ("k x dim centroid doubles", 1000000L),
     "kmeans-quant" -> ("persisted quantized-vector handle", 8L),
     "rocchio-cents" -> ("|labels| x dim centroid doubles", 1000000L),

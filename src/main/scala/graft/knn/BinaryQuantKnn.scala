@@ -10,8 +10,8 @@ import graft.IndexCache
   * [[SqKnn]] and PQ's codebook [[PqKnn]]): each dimension collapses to
   * its sign bit, a 64-dim vector becomes ONE 64-bit word, and the coarse
   * distance is a single `XOR` + `popcount` per comparison. Candidates
-  * mined under Hamming distance are then re-ranked exactly, the same
-  * coarse-scan/re-rank shape as [[RandomProjection.topKBatch]].
+  * mined under Hamming distance are then cut and re-ranked exactly by
+  * [[TwoStage.search]], like every compressed family.
   *
   * Sign-at-zero is the right quantizer here because the fixture
   * embeddings are zero-centered per dimension (measured |mean| < 1e-4);
@@ -27,10 +27,9 @@ import graft.IndexCache
   *     `bit_count` compare stays inside whole-stage codegen (both are
   *     codegen'd built-ins; no UDF, no boxing).
   *   - Map-only coarse scan: query codes broadcast (8 bytes per query),
-  *     per-query candidates pruned by the bounded-heap
-  *     [[graft.plans.TopKPerGroup]] in its two-phase form, so the
-  *     shuffle carries <= partitions x queries x overfetch (qid, id,
-  *     hamming) triples — never the codes, never the vectors.
+  *     per-query candidates cut by [[TwoStage.candidates]]'s bounded
+  *     heap, so the shuffle carries (qid, id, hamming) triples — never
+  *     the codes, never the vectors.
   *   - Exact re-rank touches only (queries x k x overfetch) full
   *     vectors via an id equi-join against the base table.
   *   - Deterministic end to end: constant quantizer, integer Hamming
@@ -90,15 +89,15 @@ object BinaryQuantKnn {
         (0 until words).map(i => col("codes")(i).as(s"code$i")): _*)
   }
 
-  /** Top-k per held-out query: Hamming-space candidate mining
-    * (k * overfetch) over the packed codes + exact re-rank. Output:
+  /** Top-k per held-out query: Hamming-space candidate mining over the
+    * packed codes, cut and re-ranked by [[TwoStage.search]]. Output:
     * (qid, vec_id, dist, rk) — the recall-evaluation shape shared by
     * every ANN family.
     *
     * Overfetch is high (16x) for the same reason as
     * [[RandomProjection.topKBatch]]: near-random fixture geometry gives
     * tiny neighbor margins, and a 1-bit code keeps only the orthant.
-    * The candidate FRACTION k*overfetch/n vanishes as n grows — and so,
+    * The candidate FRACTION k·overfetch/n vanishes as n grows — and so,
     * eventually, does recall: with a FIXED 64-bit code the Hamming
     * ranking's resolution is constant while the number of competing
     * rows is not (ScaleSpec measures the decay at 10x sf0.1). The scale
@@ -113,22 +112,9 @@ object BinaryQuantKnn {
     val qCodes = broadcast(encode(queries)
       .select(col("vec_id").as("qid"), col("code").as("qcode")))
 
-    val cand = graft.plans.GraftOps.topKPerGroup(
-      codes.crossJoin(qCodes)
-        .select(col("qid"), col("vec_id"),
-          bit_count(col("code").bitwiseXOR(col("qcode"))).as("hamming")),
-      Seq("qid"), Seq("hamming" -> true, "vec_id" -> true), k * overfetch,
-      partialFirst = true)
-
-    // exact re-rank of the candidate set only
-    val q = broadcast(queries.select(col("vec_id").as("qid"), col("emb").as("qvec")))
-    val rescored = cand.select("qid", "vec_id")
-      .join(base, "vec_id")
-      .join(q, "qid")
-      .select(col("qid"), col("vec_id"),
-        ExactKnn.dist(col("emb"), col("qvec")).as("dist"))
-    graft.plans.GraftOps.topKPerGroup(rescored, Seq("qid"),
-      Seq("dist" -> true, "vec_id" -> true), k)
+    val scored = codes.crossJoin(qCodes).select(col("qid"), col("vec_id"),
+      bit_count(col("code").bitwiseXOR(col("qcode"))).as("coarse"))
+    TwoStage.search(scored, k, overfetch, base, queries)
   }
 
   /** [[topKBatch]] on `nBits`-plane codes (default 256 = 4 long words):
@@ -153,20 +139,9 @@ object BinaryQuantKnn {
 
     val hamming = (0 until words).map(i =>
         bit_count(col(s"code$i").bitwiseXOR(col(s"qcode$i"))))
-      .reduce(_ + _).as("hamming")
-    val cand = graft.plans.GraftOps.topKPerGroup(
-      codes.crossJoin(qCodes)
-        .select(col("qid"), col("vec_id"), hamming),
-      Seq("qid"), Seq("hamming" -> true, "vec_id" -> true), k * overfetch,
-      partialFirst = true)
-
-    val q = broadcast(queries.select(col("vec_id").as("qid"), col("emb").as("qvec")))
-    val rescored = cand.select("qid", "vec_id")
-      .join(base, "vec_id")
-      .join(q, "qid")
-      .select(col("qid"), col("vec_id"),
-        ExactKnn.dist(col("emb"), col("qvec")).as("dist"))
-    graft.plans.GraftOps.topKPerGroup(rescored, Seq("qid"),
-      Seq("dist" -> true, "vec_id" -> true), k)
+      .reduce(_ + _).as("coarse")
+    TwoStage.search(
+      codes.crossJoin(qCodes).select(col("qid"), col("vec_id"), hamming),
+      k, overfetch, base, queries)
   }
 }

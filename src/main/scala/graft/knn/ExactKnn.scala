@@ -1,7 +1,6 @@
 package graft.knn
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -22,9 +21,9 @@ import graft.functions.VectorFunctions._
   *   - Single-query top-k goes through `orderBy().limit(k)` which Catalyst
   *     plans as `TakeOrderedAndProject` (bounded heap per partition + driver
   *     merge of P*k rows, no global sort).
-  *   - Batch top-k uses a window `row_number` over (qid) partitions; the
-  *     shuffle carries only (qid, id, dist) triples, never the vectors.
-  *     (A heap-based partial Aggregator variant is in TopK.scala.)
+  *   - Batch top-k runs the bounded-heap [[graft.plans.TopKPerGroup]]
+  *     operator over (qid) groups; the shuffle carries only
+  *     (qid, id, dist) triples, never the vectors.
   *
   * Distances are rounded to 6 decimals BEFORE ranking so that rank order
   * and output hash-match the DuckDB oracle despite FP fold-order noise,
@@ -331,9 +330,10 @@ object ExactKnn {
         Seq("dist" -> true, "vec_id" -> true), k)
     }
 
-  /** Exact re-rank of an overfetched candidate set (the shared tail of
-    * the PQ/SQ/IVF-PQ scale paths): fetch only the candidates' full
-    * vectors, score them against the query relation, keep top-k.
+  /** Exact re-rank of an overfetched candidate set (the refine step of
+    * [[TwoStage.search]], shared by every compressed family): fetch
+    * only the candidates' full vectors, score them against the query
+    * relation, keep top-k.
     * Touches (queries x overfetch*k) vectors, never the base table.
     * The join strategy is left to the optimizer: at typical batch
     * sizes it broadcasts the small side; at a huge query split AQE
@@ -349,11 +349,6 @@ object ExactKnn {
       Seq("dist" -> true, "vec_id" -> true), k)
   }
 
-  /** Top-k for EVERY held-out query at once (batch form of T1), via the
-    * custom bounded-heap operator (graft.plans.TopKPerGroup) — one
-    * shuffle on qid, O(queries x k) memory instead of a per-group sort.
-    * Output: (qid, vec_id, dist, rk).
-    */
   /** MUTUAL (reciprocal) k-nearest-neighbor pairs over the base split:
     * (a, b) with a < b where b ∈ topk(a) AND a ∈ topk(b) — the
     * high-precision neighborhood evidence clustering and dedup layers
@@ -486,6 +481,11 @@ object ExactKnn {
     topk
   }
 
+  /** Top-k for EVERY held-out query at once (batch form of T1), via the
+    * custom bounded-heap operator (graft.plans.TopKPerGroup) — one
+    * shuffle on qid, O(queries x k) memory instead of a per-group sort.
+    * Output: (qid, vec_id, dist, rk).
+    */
   def topKBatch(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
     // the exact batch result is the ground-truth table every recall /
     // precision evaluation joins against — derive it once per dataset

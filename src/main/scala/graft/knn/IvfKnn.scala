@@ -3,7 +3,6 @@ package graft.knn
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.IndexCache
 
@@ -82,7 +81,8 @@ object IvfKnn {
     * partial sums combine on the driver in (cid, partitionId) order so
     * the floating-point fold order is fixed.
     */
-  def trainCentroids(base: DataFrame, k: Int, iters: Int = 3): Seq[Seq[Double]] = {
+  def trainCentroids(base: DataFrame, k: Int,
+      iters: Int = 3): Array[Array[Double]] = {
     import base.sparkSession.implicits._
     val sc = base.sparkSession.sparkContext
     val typed = base.select(col("vec_id"), col("emb")).as[(Long, Array[Double])]
@@ -122,7 +122,7 @@ object IvfKnn {
         }
       }.toArray
     }
-    centroids.map(_.toSeq).toSeq
+    centroids
   }
 
   /** (vec_id, emb, cid) — the inverted-file assignment (map-only). */
@@ -141,17 +141,23 @@ object IvfKnn {
     * the structure travels as one value so search/insert/save can never
     * pair mismatched halves.
     */
-  final case class IvfIndex(centroids: Array[Array[Double]], assigned: DataFrame) {
-    /** Persist and materialize the inverted file once (the memo form). */
-    def persist(): IvfIndex = {
-      assigned.persist(StorageLevel.MEMORY_AND_DISK).count(); this
-    }
+  final case class IvfIndex(centroids: Array[Array[Double]], assigned: DataFrame)
+
+  /** Train centroids and assign the inverted file. */
+  def buildIndex(base: DataFrame, nCentroids: Int, iters: Int = 3): IvfIndex = {
+    val cs = trainCentroids(base, nCentroids, iters)
+    IvfIndex(cs, assignCids(base, cs))
   }
 
-  /** Train centroids and materialize the inverted file. */
-  def buildIndex(base: DataFrame, nCentroids: Int, iters: Int = 3): IvfIndex = {
-    val cs = trainCentroids(base, nCentroids, iters).map(_.toArray).toArray
-    IvfIndex(cs, assignCids(base, cs))
+  /** The (nC, nP) defaults every IVF-routed family shares: sqrt(n)
+    * centroids (at least 4) over `n` rows, half of them probed (at
+    * least 2); a positive argument overrides its default.
+    */
+  private[knn] def defaults(n: Long, nCentroids: Int,
+      nprobe: Int): (Int, Int) = {
+    val nC = if (nCentroids > 0) nCentroids
+             else math.max(4, math.sqrt(n.toDouble).toInt)
+    (nC, if (nprobe > 0) nprobe else math.max(2, nC / 2))
   }
 
   /** Incremental insert: assign new vectors to their nearest existing
@@ -162,17 +168,14 @@ object IvfKnn {
     index.copy(assigned =
       index.assigned.unionByName(assignCids(rows, index.centroids)))
 
-  /** Persist the index: centroids as one tiny parquet, the inverted
-    * file PARTITIONED BY cid — so a probe of nprobe clusters on the
-    * reloaded index is a partition-pruned scan touching nprobe/k of the
-    * files (at 100 TB, this directory layout IS the index).
+  /** Persist the index: centroids as a matrix file, the inverted file
+    * PARTITIONED BY cid — so a probe of nprobe clusters on the reloaded
+    * index is a partition-pruned scan touching nprobe/k of the files (at
+    * 100 TB, this directory layout IS the index).
     */
   def saveIndex(index: IvfIndex, path: String): Unit = {
-    val spark = index.assigned.sparkSession
-    import spark.implicits._
-    index.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cid", "emb")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+    IndexFiles.saveMatrix(index.assigned.sparkSession, index.centroids,
+      s"$path/centroids")
     // co-locate each cluster before the hive-partitioned write: one
     // file per cid instead of tasks x cids small files (the write-time
     // twin of the probe-side partition pruning)
@@ -181,52 +184,20 @@ object IvfKnn {
   }
 
   /** Reload a [[saveIndex]] checkpoint. */
-  def loadIndex(spark: SparkSession, path: String): IvfIndex = {
-    import spark.implicits._
-    val cs = spark.read.parquet(s"$path/centroids")
-      .as[(Int, Seq[Double])].collect().sortBy(_._1).map(_._2.toArray)
-    IvfIndex(cs, spark.read.parquet(s"$path/assigned")
-      .select("vec_id", "emb", "cid"))
-  }
+  def loadIndex(spark: SparkSession, path: String): IvfIndex =
+    IvfIndex(IndexFiles.loadMatrix(spark, s"$path/centroids"),
+      spark.read.parquet(s"$path/assigned").select("vec_id", "emb", "cid"))
 
-  /** Probe-limited search over a built index: each query visits only
-    * its `nprobe` nearest clusters. On a [[loadIndex]]-ed index the
-    * literal cid set prunes partitions statically (PartitionFilters in
-    * the scan — checked in IvfKnnSpec).
-    * Output: (qid, vec_id, dist rounded 6, rk).
-    */
-  def searchIndex(index: IvfIndex, queries: Array[(Long, Array[Double])],
-      k: Int = 10, nprobe: Int = 2): DataFrame = {
-    val spark = index.assigned.sparkSession
-    import spark.implicits._
-    val probes: Array[(Long, Array[Double], Array[Int])] =
-      queries.map { case (qid, qv) =>
-        (qid, qv, probeCids(index.centroids, qv, nprobe))
-      }
-    val allCids = probes.flatMap(_._3).distinct.toSeq
-    val q = probes.toSeq
-      .flatMap { case (qid, qv, cids) => cids.map(c => (qid, qv.toSeq, c)) }
-      .toDF("qid", "qvec", "cid")
-    val scored = index.assigned
-      .filter(col("cid").isin(allCids: _*)) // static partition pruning
-      .join(broadcast(q), "cid")
-      .select(col("qid"), col("vec_id"),
-        ExactKnn.dist(col("emb"), col("qvec")).as("dist"))
-    graft.plans.GraftOps.topKPerGroup(scored, Seq("qid"),
-      Seq("dist" -> true, "vec_id" -> true), k)
-  }
-
-  /** DataFrame-native probe of a built index: each query routes to its
+  /** Probe-limited search over a built index: each query routes to its
     * `nprobe` nearest clusters EXECUTOR-SIDE (map-only over the query
     * split, centroids broadcast), and the (qid, qvec, cid) probe
-    * relation broadcast-joins the inverted file on cid — each code row
-    * fans out only to the queries probing its cluster, and no query
-    * vector ever visits the driver. On a [[loadIndex]]-ed table the cid
-    * equi-join prunes partition directories at runtime (the
-    * static-literal variant of the same pruning is [[searchIndex]]).
-    * Output: (qid, vec_id, dist rounded 6, rk).
+    * relation broadcast-joins the inverted file on cid — each row fans
+    * out only to the queries probing its cluster, and no query vector
+    * ever visits the driver. On a [[loadIndex]]-ed table the cid
+    * equi-join prunes partition directories at runtime (dynamic
+    * partition pruning). Output: (qid, vec_id, dist rounded 6, rk).
     */
-  def searchIndexDF(index: IvfIndex, queries: DataFrame, k: Int = 10,
+  def searchIndex(index: IvfIndex, queries: DataFrame, k: Int = 10,
       nprobe: Int = 2): DataFrame = {
     val spark = index.assigned.sparkSession
     import spark.implicits._
@@ -249,22 +220,19 @@ object IvfKnn {
   /** Declared end-to-end IVF lifecycle: build (or reuse) the index,
     * [[saveIndex]] it once per dataset (inverted file PARTITIONED BY
     * cid), [[loadIndex]] the checkpoint, and search every held-out
-    * query against the RELOADED index via [[searchIndexDF]] — fully
+    * query against the RELOADED index via [[searchIndex]] — fully
     * distributed, bit-equal to [[topKBatch]].
     */
   def topKBatchLifecycle(spark: SparkSession, dir: String, k: Int = 10,
       nCentroids: Int = 0, nprobe: Int = 0): DataFrame = {
     val (_, queries, _, n) = ExactKnn.split(spark, dir)
-    val nC = if (nCentroids > 0) nCentroids
-             else math.max(4, math.sqrt(n.toDouble).toInt)
-    val nP = if (nprobe > 0) nprobe else math.max(2, nC / 2)
+    val (nC, nP) = defaults(n, nCentroids, nprobe)
     // one-time checkpoint per (dataset, nC): the inverted-file write is
     // index publication (bench_build_ivf_ckpt pays it), so the declared
     // query's time measures load + partition-pruned probe
     val path = IndexCache.checkpoint(spark, "ivf", dir, nC)(
       saveIndex(memoIndex(spark, dir, nC), _))
-    val reloaded = loadIndex(spark, path)
-    searchIndexDF(reloaded, queries, k, nP)
+    searchIndex(loadIndex(spark, path), queries, k, nP)
   }
 
   /** `insert_many` into a BUILT IVF index, then search (the reference's
@@ -289,11 +257,10 @@ object IvfKnn {
     val n = emb.count()
     val s90 = math.round(0.90 * n)
     val s95 = math.round(0.95 * n)
-    val nC = if (nCentroids > 0) nCentroids
-             else math.max(4, math.sqrt(s90.toDouble).toInt)
+    val nC = defaults(s90, nCentroids, 0)._1
     val index = memoInsertedIndex(spark, dir, emb, s90, s95, nC)
     val queries = emb.filter(col("vec_id") >= s95 && col("vec_id") < s95 + nq)
-    searchIndexDF(index, queries, k, nprobe = nC)
+    searchIndex(index, queries, k, nprobe = nC)
   }
 
   /** `delete` on the INVERTED FILE then search — the index-side twin
@@ -317,8 +284,7 @@ object IvfKnn {
     val s80 = math.round(0.80 * n)
     val s90 = math.round(0.90 * n)
     val s95 = math.round(0.95 * n)
-    val nC = if (nCentroids > 0) nCentroids
-             else math.max(4, math.sqrt(s90.toDouble).toInt)
+    val nC = defaults(s90, nCentroids, 0)._1
     val grown = memoInsertedIndex(spark, dir, emb, s90, s95, nC)
     val shrunk = grown.copy(assigned =
       IndexCache.persisted(spark, "ivf-del", dir, nC) {
@@ -327,40 +293,47 @@ object IvfKnn {
             .select(col("vec_id")), "vec_id")
       })
     val queries = emb.filter(col("vec_id") >= s95 && col("vec_id") < s95 + nq)
-    searchIndexDF(shrunk, queries, k, nprobe = nC)
+    searchIndex(shrunk, queries, k, nprobe = nC)
   }
 
   /** Top-k for every held-out query, probing `nprobe` of `nCentroids`
-    * clusters (defaults: sqrt(n) centroids, a quarter of them probed).
+    * clusters (defaults: sqrt(n) centroids, half of them probed).
     * Output: (qid, vec_id, dist rounded 6, rk) — same shape as
     * [[ExactKnn.topKBatch]] for direct recall evaluation.
     */
   def topKBatch(spark: SparkSession, dir: String, k: Int = 10,
       nCentroids: Int = 0, nprobe: Int = 0): DataFrame = {
     val (_, queries, _, n) = ExactKnn.split(spark, dir)
-    val nC = if (nCentroids > 0) nCentroids
-             else math.max(4, math.sqrt(n.toDouble).toInt)
-    val nP = if (nprobe > 0) nprobe else math.max(2, nC / 2)
-    searchIndexDF(memoIndex(spark, dir, nC), queries, k, nP)
+    val (nC, nP) = defaults(n, nCentroids, nprobe)
+    searchIndex(memoIndex(spark, dir, nC), queries, k, nP)
   }
 
   /** The IVF index over `dir`'s split base, built once per (dataset,
-    * nC) — the one build site batch and lifecycle share.
+    * nC) — the one build site batch and lifecycle share: centroids
+    * under `ivf`, the inverted file a persisted `ivf` relation (so a
+    * hit after a cache release is cached again).
     */
-  private def memoIndex(spark: SparkSession, dir: String,
-      nC: Int): IvfIndex =
-    IndexCache.getOrBuild(spark, "ivf", dir, nC)(
-      buildIndex(ExactKnn.split(spark, dir)._1, nC).persist())
+  private[graft] def memoIndex(spark: SparkSession, dir: String,
+      nC: Int): IvfIndex = {
+    val base = ExactKnn.split(spark, dir)._1
+    val cs = IndexCache.getOrBuild(spark, "ivf", dir, nC)(
+      trainCentroids(base, nC))
+    IvfIndex(cs, IndexCache.persisted(spark, "ivf", dir, nC, "assigned")(
+      assignCids(base, cs)))
+  }
 
   /** The after-insert IVF index (centroids trained on the first 90%,
     * the 90–95% slab inserted), built once per (dataset, nC) — the one
-    * build site the insert and delete rows share.
+    * build site the insert and delete rows share, memoized like
+    * [[memoIndex]] under `ivf-ins`.
     */
   private def memoInsertedIndex(spark: SparkSession, dir: String,
-      emb: DataFrame, s90: Long, s95: Long, nC: Int): IvfIndex =
-    IndexCache.getOrBuild(spark, "ivf-ins", dir, nC) {
-      val built = buildIndex(emb.filter(col("vec_id") < s90), nC)
-      insertIntoIndex(built,
-        emb.filter(col("vec_id") >= s90 && col("vec_id") < s95)).persist()
-    }
+      emb: DataFrame, s90: Long, s95: Long, nC: Int): IvfIndex = {
+    val head = emb.filter(col("vec_id") < s90)
+    val cs = IndexCache.getOrBuild(spark, "ivf-ins", dir, nC)(
+      trainCentroids(head, nC))
+    IvfIndex(cs, IndexCache.persisted(spark, "ivf-ins", dir, nC, "assigned")(
+      insertIntoIndex(IvfIndex(cs, assignCids(head, cs)),
+        emb.filter(col("vec_id") >= s90 && col("vec_id") < s95)).assigned))
+  }
 }

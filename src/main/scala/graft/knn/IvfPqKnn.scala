@@ -12,7 +12,7 @@ import graft.IndexCache
   * (FAISS's IndexIVFPQ; Jégou et al. 2011 §IV): at 100 TB of raw
   * embeddings the probed fraction of the code table is all that moves,
   * and the full-precision vectors are touched only for the final
-  * re-rank of `overfetch * k` candidates per query.
+  * [[TwoStage]] re-rank of `k·overfetch` candidates per query.
   *
   * Candidate scoring is MAP-ONLY: the per-query lookup tables are
   * grouped by probed cluster and broadcast, so each code row fans out
@@ -30,18 +30,14 @@ object IvfPqKnn {
     * code row fans out ONLY to the queries probing its cluster — and a
     * second broadcast join attaches the per-query flattened ADC table,
     * scored in codegen by [[graft.functions.PqAdcDistance]]. The probe
-    * and LUT relations travel as ENGINE-MANAGED broadcasts (bounded by
-    * nprobe x queries pairs and queries x m x ksub doubles); a query
-    * split too large for a broadcast runs as waves of this plan or
-    * flips to the zipPartitions replication [[PqKnn.topKBatch]] uses.
+    * and LUT relations travel as ENGINE-MANAGED broadcasts, bounded by
+    * nprobe x queries pairs and queries x m x ksub doubles.
     */
   def topKBatch(spark: SparkSession, dir: String, k: Int = 10,
       nCentroids: Int = 0, nprobe: Int = 0, m: Int = 8, ksub: Int = 256,
       overfetch: Int = 16): DataFrame = {
     val (base, queries, _, n) = ExactKnn.split(spark, dir)
-    val nC = if (nCentroids > 0) nCentroids
-             else math.max(4, math.sqrt(n.toDouble).toInt)
-    val nP = if (nprobe > 0) nprobe else math.max(2, nC / 2)
+    val (nC, nP) = IvfKnn.defaults(n, nCentroids, nprobe)
     val (centroids, cb, lists) = builtIndex(spark, base, dir, nC, m, ksub)
     searchLists(spark, centroids, cb, lists, base, queries, k, nP, ksub,
       overfetch)
@@ -55,7 +51,7 @@ object IvfPqKnn {
       : (Array[Array[Double]], PqKnn.PqCodebooks, DataFrame) =
   {
     val (cs, books) = IndexCache.getOrBuild(spark, "ivfpq", dir, nC, m, ksub) {
-      (IvfKnn.trainCentroids(base, nC).map(_.toArray).toArray,
+      (IvfKnn.trainCentroids(base, nC),
         PqKnn.trainCodebooks(base, m, ksub))
     }
     (cs, books, IndexCache.persisted(spark, "ivfpq", dir, nC, m, ksub,
@@ -88,30 +84,20 @@ object IvfPqKnn {
       .join(broadcast(PqKnn.queryLutsDF(queries, cb, ksub)), "qid")
       .select(col("qid"), col("vec_id"),
         graft.functions.QuantizedDistances
-          .pqAdcDistance(col("codes"), col("lut"), ksub).as("approx_dist"))
-    val cand = graft.plans.GraftOps.topKPerGroup(scored, Seq("qid"),
-      Seq("approx_dist" -> true, "vec_id" -> true), overfetch * k)
-      .select("qid", "vec_id")
-    ExactKnn.rerank(cand, base, queries, k)
+          .pqAdcDistance(col("codes"), col("lut"), ksub).as("coarse"))
+    TwoStage.search(scored, k, overfetch, base, queries)
   }
 
   /** Checkpoint the composed index: driver-tiny centroid and codebook
-    * relations plus the code lists PARTITIONED BY cluster id — the
+    * files plus the code lists PARTITIONED BY cluster id — the
     * FAISS-style on-disk IVF-PQ layout where a probe of the reloaded
     * table is a partition-pruned scan (only the probed clusters' files
     * are read).
     */
   def saveIndex(centroids: Array[Array[Double]], cb: PqKnn.PqCodebooks,
       lists: DataFrame, path: String): Unit = {
-    val spark = lists.sparkSession
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cid", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    val cbRows = for (j <- 0 until cb.m; c <- cb.books(j).indices)
-      yield (j, c, cb.dim, cb.books(j)(c).toSeq)
-    cbRows.toDF("j", "c", "dim", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
+    IndexFiles.saveMatrix(lists.sparkSession, centroids, s"$path/centroids")
+    IndexFiles.saveCodebooks(lists.sparkSession, cb, s"$path/codebooks")
     // one file per cid, not tasks x cids (see IvfKnn.saveIndex)
     lists.repartition(col("cid")).write.mode("overwrite").partitionBy("cid")
       .parquet(s"$path/lists")
@@ -122,19 +108,10 @@ object IvfPqKnn {
     * table).
     */
   def loadIndex(spark: SparkSession, path: String)
-      : (Array[Array[Double]], PqKnn.PqCodebooks, DataFrame) = {
-    import spark.implicits._
-    val cs = spark.read.parquet(s"$path/centroids")
-      .as[(Int, Seq[Double])].collect().sortBy(_._1).map(_._2.toArray)
-    val cbRows = spark.read.parquet(s"$path/codebooks")
-      .as[(Int, Int, Int, Seq[Double])].collect()
-    val m = cbRows.map(_._1).max + 1
-    val books = Array.tabulate(m) { j =>
-      cbRows.filter(_._1 == j).sortBy(_._2).map(_._4.toArray)
-    }
-    (cs, PqKnn.PqCodebooks(m, cbRows.head._3, books),
+      : (Array[Array[Double]], PqKnn.PqCodebooks, DataFrame) =
+    (IndexFiles.loadMatrix(spark, s"$path/centroids"),
+      IndexFiles.loadCodebooks(spark, s"$path/codebooks"),
       spark.read.parquet(s"$path/lists"))
-  }
 
   /** Declared end-to-end IVF-PQ LIFECYCLE (build → save → load →
     * search) — the checkpoint surface for the COMPOSED billion-scale
@@ -149,9 +126,7 @@ object IvfPqKnn {
       nCentroids: Int = 0, nprobe: Int = 0, m: Int = 8, ksub: Int = 256,
       overfetch: Int = 16): DataFrame = {
     val (base, queries, _, n) = ExactKnn.split(spark, dir)
-    val nC = if (nCentroids > 0) nCentroids
-             else math.max(4, math.sqrt(n.toDouble).toInt)
-    val nP = if (nprobe > 0) nprobe else math.max(2, nC / 2)
+    val (nC, nP) = IvfKnn.defaults(n, nCentroids, nprobe)
     val path = IndexCache.checkpoint(spark, "ivfpq", dir, nC, m, ksub) { p =>
       val (cs, cb, lists) = builtIndex(spark, base, dir, nC, m, ksub)
       saveIndex(cs, cb, lists, p)

@@ -21,9 +21,9 @@ import graft.IndexCache
   * (one distributed pass + a 64×64 driver solve), rotation applied by
   * [[RandomProjection.project]] (map-only, matrix broadcast), training/
   * encoding/ADC scan from [[PqKnn]] verbatim. The coarse scan runs on
-  * ROTATED queries against rotated codebooks; the exact re-rank runs in
-  * the ORIGINAL space (cosine is rotation-invariant), so the exact leg
-  * stays bit-identical to every other family's.
+  * ROTATED queries against rotated codebooks; [[TwoStage.search]]
+  * re-ranks in the ORIGINAL space (cosine is rotation-invariant), so
+  * the exact leg stays bit-identical to every other family's.
   *
   * Scale notes: identical to [[PqKnn]] — the rotation adds one
   * broadcast d×d matrix and one map-only projection pass; codes stay
@@ -64,33 +64,35 @@ object OpqKnn {
       buckets.flatten.map(c => Array.tabulate(d)(r => v(r)(c))).toArray
     }
 
-  /** Top-k per held-out query: rotate → ADC-coarse-scan (rotated
-    * codebooks) → exact re-rank in the original space. Output:
-    * (qid, vec_id, dist rounded 6, rk) — the family-standard shape.
-    */
+  /** `df`'s (vec_id, emb) rows rotated by `rot`, still (vec_id, emb). */
+  private def rotate(df: DataFrame, rot: Array[Array[Double]]): DataFrame =
+    RandomProjection.project(df, rot)
+      .select(col("vec_id"), col("pvec").as("emb"))
+
   /** The per-dataset rotated (codebooks, persisted codes) pair —
     * shared by the search paths and the distortion report.
     */
   private[knn] def cachedIndex(spark: SparkSession, dir: String,
       m: Int = 8, ksub: Int = 256): (PqKnn.PqCodebooks, DataFrame) = {
     val (base, _, _, _) = ExactKnn.split(spark, dir)
-    val rot = rotation(spark, dir, m)
-    lazy val rBase = RandomProjection.project(base, rot)
-      .select(col("vec_id"), col("pvec").as("emb"))
+    lazy val rBase = rotate(base, rotation(spark, dir, m))
     val b = IndexCache.getOrBuild(spark, "opq", dir, m, ksub)(
       PqKnn.trainCodebooks(rBase, m, ksub))
     (b, IndexCache.persisted(spark, "opq", dir, m, ksub, "codes")(
       PqKnn.encode(rBase, b)))
   }
 
+  /** Top-k per held-out query: rotate → ADC-coarse-scan (rotated
+    * codebooks) → [[TwoStage.search]] in the original space. Output:
+    * (qid, vec_id, dist rounded 6, rk) — the family-standard shape.
+    */
   def topKBatch(spark: SparkSession, dir: String, k: Int = 10,
       m: Int = 8, ksub: Int = 256, overfetch: Int = 16): DataFrame = {
     val (base, queries, _, _) = ExactKnn.split(spark, dir)
-    val rot = rotation(spark, dir, m)
     val (cb, codes) = cachedIndex(spark, dir, m, ksub)
-    val rQueries = RandomProjection.project(queries, rot)
-      .select(col("vec_id"), col("pvec").as("emb"))
-    PqKnn.searchCodesWith(cb, codes, rQueries, base, queries, k, overfetch)
+    TwoStage.search(
+      PqKnn.adcScan(cb, codes, rotate(queries, rotation(spark, dir, m))),
+      k, overfetch, base, queries)
   }
 
   /** Quantization-distortion report: mean squared reconstruction error
@@ -155,25 +157,19 @@ object OpqKnn {
 
     val (pqCb, pqCodes) = PqKnn.cachedIndex(spark, dir)
     val (opqCb, opqCodes) = cachedIndex(spark, dir)
-    val rot = rotation(spark, dir)
-    val rBase = RandomProjection.project(base, rot)
-      .select(col("vec_id"), col("pvec").as("emb"))
     mseOf("pq", base, pqCb, pqCodes)
-      .unionAll(mseOf("opq", rBase, opqCb, opqCodes))
+      .unionAll(mseOf("opq", rotate(base, rotation(spark, dir)), opqCb,
+        opqCodes))
   }
 
-  /** Persist the OPQ index: the rotation as tiny (r, vec) rows (the
-    * PCA-basis layout), codebooks + codes through the PQ checkpoint
-    * format — the full index a serving fleet reloads without touching
-    * raw embeddings except to re-rank survivors.
+  /** Persist the OPQ index: the rotation as a matrix file, codebooks +
+    * codes through the PQ checkpoint format — the full index a serving
+    * fleet reloads without touching raw embeddings except to re-rank
+    * survivors.
     */
   def saveIndex(rot: Array[Array[Double]], cb: PqKnn.PqCodebooks,
       codes: DataFrame, path: String): Unit = {
-    val spark = codes.sparkSession
-    import spark.implicits._
-    rot.zipWithIndex.map { case (row, r) => (r, row.toSeq) }.toSeq
-      .toDF("r", "vec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/rotation")
+    IndexFiles.saveMatrix(codes.sparkSession, rot, s"$path/rotation")
     PqKnn.saveIndex(cb, codes, s"$path/pq")
   }
 
@@ -182,11 +178,8 @@ object OpqKnn {
     */
   def loadIndex(spark: SparkSession, path: String)
       : (Array[Array[Double]], PqKnn.PqCodebooks, DataFrame) = {
-    import spark.implicits._
-    val rot = spark.read.parquet(s"$path/rotation").as[(Int, Seq[Double])]
-      .collect().sortBy(_._1).map(_._2.toArray)
     val (cb, codes) = PqKnn.loadIndex(spark, s"$path/pq")
-    (rot, cb, codes)
+    (IndexFiles.loadMatrix(spark, s"$path/rotation"), cb, codes)
   }
 
   /** Declared OPQ LIFECYCLE (train rotation + codebooks → save → load
@@ -207,8 +200,7 @@ object OpqKnn {
       ksub)(loadIndex(spark, path))
     val codes = IndexCache.persisted(spark, "opq-reloaded", dir, m, ksub,
       "codes")(enc)
-    val rQueries = RandomProjection.project(queries, rot)
-      .select(col("vec_id"), col("pvec").as("emb"))
-    PqKnn.searchCodesWith(cb, codes, rQueries, base, queries, k, overfetch)
+    TwoStage.search(PqKnn.adcScan(cb, codes, rotate(queries, rot)),
+      k, overfetch, base, queries)
   }
 }

@@ -23,9 +23,9 @@ import graft.IndexCache
   *     d + d² doubles of state per partition and a 64×64 driver
   *     eigensolve — no shuffle, no iteration, corpus-size-independent
   *     driver state. The basis is then broadcast like any projection.
-  *   - Everything downstream (projected scan, bounded-heap candidate
-  *     mining, exact re-rank of queries × k·overfetch rows) reuses the
-  *     [[RandomProjection]] machinery unchanged.
+  *   - Everything downstream is RandomProjection's plan: the
+  *     projection, then [[TwoStage.cosineScan]] and [[TwoStage.search]]
+  *     (bounded-heap cut, exact re-rank of queries × k·overfetch rows).
   */
 object PcaKnn {
 
@@ -45,15 +45,17 @@ object PcaKnn {
       order.map(c => Array.tabulate(d)(r => v(r)(c))).toArray
     }
 
-  /** Top-k per held-out query through the PCA basis: projected-space
-    * candidate mining (k·overfetch) + exact re-rank — identical plan
-    * shape to [[RandomProjection.topKBatch]], only the matrix differs.
-    * Output: (qid, vec_id, dist, rk).
+  /** Top-k per held-out query through the PCA basis: the projected
+    * [[TwoStage.cosineScan]], cut and exactly re-ranked by
+    * [[TwoStage.search]] — the plan of [[RandomProjection.topKBatch]],
+    * only the matrix differs. Output: (qid, vec_id, dist, rk).
     */
   def topKBatch(spark: SparkSession, dir: String, k: Int = 10,
       outDim: Int = 32, overfetch: Int = 16): DataFrame = {
-    val matrix = basis(spark, dir, outDim)
-    search(spark, dir, matrix, memoProjected(spark, dir, outDim), k, overfetch)
+    val (base, queries, _, _) = ExactKnn.split(spark, dir)
+    val pQueries = RandomProjection.project(queries, basis(spark, dir, outDim))
+    TwoStage.search(TwoStage.cosineScan(memoProjected(spark, dir, outDim),
+      pQueries), k, overfetch, base, queries)
   }
 
   /** The base split projected through [[basis]], persisted once per
@@ -64,44 +66,13 @@ object PcaKnn {
     IndexCache.persisted(spark, "pca", dir, outDim)(RandomProjection.project(
       ExactKnn.split(spark, dir)._1, basis(spark, dir, outDim)))
 
-  /** Shared mine + re-rank body: projected-space bounded-heap candidate
-    * mining, then exact re-rank of queries × k·overfetch rows.
-    */
-  private def search(spark: SparkSession, dir: String,
-      matrix: Array[Array[Double]], pBase: DataFrame, k: Int,
-      overfetch: Int): DataFrame = {
-    val (base, queries, _, _) = ExactKnn.split(spark, dir)
-    val pq = broadcast(RandomProjection.project(queries, matrix)
-      .select(col("vec_id").as("qid"), col("pvec").as("qpvec")))
-
-    val cand = graft.plans.GraftOps.topKPerGroup(
-      pBase.crossJoin(pq)
-        .select(col("qid"), col("vec_id"),
-          round(graft.functions.ArrayMath.cosineDistance(
-            col("pvec"), col("qpvec")), 6).as("pdist")),
-      Seq("qid"), Seq("pdist" -> true, "vec_id" -> true), k * overfetch)
-
-    val q = broadcast(queries.select(col("vec_id").as("qid"), col("emb").as("qvec")))
-    val rescored = cand.select("qid", "vec_id")
-      .join(base, "vec_id")
-      .join(q, "qid")
-      .select(col("qid"), col("vec_id"),
-        ExactKnn.dist(col("emb"), col("qvec")).as("dist"))
-    graft.plans.GraftOps.topKPerGroup(rescored, Seq("qid"),
-      Seq("dist" -> true, "vec_id" -> true), k)
-  }
-
-  /** Persist the trained basis (driver-tiny rows) and the projected
-    * base table — index publication, same split as the PQ checkpoint
+  /** Persist the trained basis as a matrix file and the projected base
+    * table — index publication, same split as the PQ checkpoint
     * (codebook-like metadata small and single-file, codes distributed).
     */
   def saveIndex(matrix: Array[Array[Double]], pBase: DataFrame,
       path: String): Unit = {
-    val spark = pBase.sparkSession
-    import spark.implicits._
-    matrix.zipWithIndex.map { case (row, r) => (r, row.toSeq) }.toSeq
-      .toDF("r", "vec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/basis")
+    IndexFiles.saveMatrix(pBase.sparkSession, matrix, s"$path/basis")
     pBase.write.mode("overwrite").parquet(s"$path/projected")
   }
 
@@ -109,20 +80,18 @@ object PcaKnn {
     * small), the projected table stays distributed.
     */
   def loadIndex(spark: SparkSession, path: String)
-      : (Array[Array[Double]], DataFrame) = {
-    import spark.implicits._
-    val m = spark.read.parquet(s"$path/basis").as[(Int, Seq[Double])]
-      .collect().sortBy(_._1).map(_._2.toArray)
-    (m, spark.read.parquet(s"$path/projected"))
-  }
+      : (Array[Array[Double]], DataFrame) =
+    (IndexFiles.loadMatrix(spark, s"$path/basis"),
+      spark.read.parquet(s"$path/projected"))
 
   /** Declared PCA LIFECYCLE (train → save → load → search), extending
     * the checkpoint surface to the projection family. Bit-equal to
-    * [[topKBatch]] by construction (same [[search]] body over the
-    * reloaded basis/projection); PcaKnnSpec pins the equality. The save
-    * is memoized per dataset and charged to bench_build_pca_ckpt; the
-    * reloaded basis is memoized too (`pca-reloaded`), so after the first
-    * call this query times the probe.
+    * [[topKBatch]] by construction (same scan and [[TwoStage.search]]
+    * over the reloaded basis/projection); PcaKnnSpec pins the equality.
+    * The save is memoized per dataset and charged to
+    * bench_build_pca_ckpt; the reloaded basis is memoized too
+    * (`pca-reloaded`), so after the first call this query times the
+    * probe.
     */
   def topKBatchLifecycle(spark: SparkSession, dir: String, k: Int = 10,
       outDim: Int = 32, overfetch: Int = 16): DataFrame = {
@@ -132,6 +101,8 @@ object PcaKnn {
       outDim)(loadIndex(spark, path))
     val pBase = IndexCache.persisted(spark, "pca-reloaded", dir, outDim,
       "projected")(p0)
-    search(spark, dir, matrix, pBase, k, overfetch)
+    val (base, queries, _, _) = ExactKnn.split(spark, dir)
+    TwoStage.search(TwoStage.cosineScan(pBase,
+      RandomProjection.project(queries, matrix)), k, overfetch, base, queries)
   }
 }

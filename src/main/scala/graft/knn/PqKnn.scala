@@ -22,11 +22,11 @@ import graft.IndexCache
   *     m x ksub lookup table of subspace dot products per query turns
   *     each candidate's approximate cosine into `m` byte-indexed adds —
   *     no decode, no sqrt, no per-candidate multiplication;
-  *   - the PQ scan overfetches `overfetch * k` candidates which are
-  *     exactly re-ranked (same rounded-distance contract as every other
-  *     kNN path), so approximation error costs recall only when the
-  *     true neighbor falls outside the overfetch, never precision of
-  *     the reported distances.
+  *   - the ADC scan's candidates are cut and exactly re-ranked by
+  *     [[TwoStage]] (same rounded-distance contract as every other kNN
+  *     path), so approximation error costs recall only when the true
+  *     neighbor misses the cut, never precision of the reported
+  *     distances.
   *
   * Everything is seeded/deterministic: codebook seeds are the first
   * distinct subvectors in vec_id order, Lloyd runs a fixed iteration
@@ -183,18 +183,6 @@ object PqKnn {
       }.toDF("qid", "lut")
   }
 
-  /** Top-k for every held-out query: PQ-scored overfetch over the code
-    * table, then exact re-rank of the candidates. Output: (qid, vec_id,
-    * dist rounded 6, rk) — same shape as [[ExactKnn.topKBatch]].
-    *
-    * Fully distributed query side (same mechanism as
-    * [[HnswKnn.searchIndex]]): query rows are replicated to every code
-    * partition in one shuffle and zipPartitions streams them past the
-    * partition's resident codes — one ADC table per (partition, query)
-    * computed on the executor, task memory = one cached code partition
-    * + one in-flight query. No query vector or LUT ever crosses the
-    * driver, at any query-split size.
-    */
   /** The per-dataset (codebooks, persisted codes) pair, built once —
     * shared by the search paths and the distortion report.
     */
@@ -207,67 +195,32 @@ object PqKnn {
       encode(base, b)))
   }
 
+  /** Top-k for every held-out query: the ADC scan over the code table,
+    * cut and exactly re-ranked by [[TwoStage.search]]. Output: (qid,
+    * vec_id, dist rounded 6, rk) — same shape as [[ExactKnn.topKBatch]].
+    */
   def topKBatch(spark: SparkSession, dir: String, k: Int = 10,
       m: Int = 8, ksub: Int = 256, overfetch: Int = 16): DataFrame = {
     val (base, queries, _, _) = ExactKnn.split(spark, dir)
     val (cb, codes) = cachedIndex(spark, dir, m, ksub)
-    searchCodes(cb, codes, base, queries, k, overfetch)
+    TwoStage.search(adcScan(cb, codes, queries), k, overfetch, base, queries)
   }
 
-  /** The distributed ADC scan + exact re-rank over a (codebooks, codes)
-    * pair — shared verbatim by the in-memory and reloaded index paths,
-    * so the lifecycle round-trip cannot drift from the live index.
+  /** The ADC coarse scan, (qid, vec_id, coarse = 1 - clamped approximate
+    * cosine), as a [[TwoStage.replicatedScan]]: one lookup table per
+    * (code partition, query), built on the executor, so no query vector
+    * or table crosses the driver. [[OpqKnn]] passes ROTATED queries
+    * (matching its rotated codebooks).
     */
-  private def searchCodes(cb: PqCodebooks, codes: DataFrame,
-      base: DataFrame, queries: DataFrame, k: Int,
-      overfetch: Int): DataFrame =
-    searchCodesWith(cb, codes, queries, base, queries, k, overfetch)
-
-  /** [[searchCodes]] with the coarse-scan query frame decoupled from
-    * the re-rank frames — [[OpqKnn]] scans with ROTATED queries
-    * (matching its rotated codebooks) but re-ranks in the ORIGINAL
-    * space (cosine is rotation-invariant, so the exact leg stays
-    * bit-identical to every other family's).
-    */
-  private[knn] def searchCodesWith(cb: PqCodebooks, codes: DataFrame,
-      scanQueries: DataFrame, rerankBase: DataFrame,
-      rerankQueries: DataFrame, k: Int, overfetch: Int): DataFrame = {
-    val cand = coarseScan(cb, codes, scanQueries, k, overfetch)
-      .select("qid", "vec_id")
-    ExactKnn.rerank(cand, rerankBase, rerankQueries, k)
-  }
-
-  /** The ADC coarse scan alone, candidates RANKED — (qid, vec_id, rk),
-    * rk over (approx_dist asc, vec_id asc) cut at `overfetch * k`. A
-    * smaller overfetch's candidate set is exactly the rk-prefix of a
-    * larger one (same sort keys, same ties), which is what lets the
-    * overfetch sweep pay for ONE scan.
-    */
-  private[knn] def coarseScan(cb: PqCodebooks, codes: DataFrame,
-      scanQueries: DataFrame, k: Int, overfetch: Int): DataFrame = {
+  private[knn] def adcScan(cb: PqCodebooks, codes: DataFrame,
+      queries: DataFrame): DataFrame = {
     val spark = codes.sparkSession
     import spark.implicits._
     val bcCb = spark.sparkContext.broadcast(cb)
-    val codesRdd = codes.as[(Long, Array[Byte])].rdd
-    val numP = codesRdd.getNumPartitions
-    val qrep = scanQueries.select(col("vec_id"), col("emb"))
-      .as[(Long, Array[Double])].rdd
-      .flatMap(q => Iterator.range(0, numP).map(p => (p, q)))
-      .partitionBy(new org.apache.spark.HashPartitioner(numP))
-    val scoredRdd = codesRdd.zipPartitions(qrep) { (cit, qit) =>
-      val local = cit.toArray // one cached code partition per task
-      val b = bcCb.value
-      qit.flatMap { case (_, (qid, qv)) =>
-        val lut = queryLut(b, qv)
-        local.iterator.map { case (id, cs) =>
-          (qid, id, 1.0 - math.max(adcSim(lut, cs), 0.0))
-        }
-      }
+    TwoStage.replicatedScan(codes.as[(Long, Array[Byte])].rdd, queries) { qv =>
+      val lut = queryLut(bcCb.value, qv)
+      cs => 1.0 - math.max(adcSim(lut, cs), 0.0)
     }
-    val scored = spark.createDataset(scoredRdd)
-      .toDF("qid", "vec_id", "approx_dist")
-    graft.plans.GraftOps.topKPerGroup(scored, Seq("qid"),
-      Seq("approx_dist" -> true, "vec_id" -> true), overfetch * k)
   }
 
   /** Ranked coarse candidates for every held-out query at `overfetch`
@@ -280,44 +233,32 @@ object PqKnn {
       overfetch: Int = 16): DataFrame = {
     val (_, queries, _, _) = ExactKnn.split(spark, dir)
     val (cb, codes) = cachedIndex(spark, dir, m, ksub)
-    coarseScan(cb, codes, queries, k, overfetch)
+    TwoStage.candidates(adcScan(cb, codes, queries), k, overfetch)
   }
 
-  /** Persist the PQ index: codebooks flatten to a tiny
-    * (j, c, dim, centroid) parquet; the byte-code table writes as-is
-    * (the 64×-compressed form IS the index payload — at 100 TB of raw
-    * vectors this checkpoint is ~1.6 TB and the raw embeddings never
-    * need to be re-read to serve searches, only to re-rank survivors).
+  /** Persist the PQ index: codebooks as one tiny parquet; the byte-code
+    * table writes as-is (the 64×-compressed form IS the index payload —
+    * at 100 TB of raw vectors this checkpoint is ~1.6 TB and the raw
+    * embeddings never need to be re-read to serve searches, only to
+    * re-rank survivors).
     */
   def saveIndex(cb: PqCodebooks, codes: DataFrame, path: String): Unit = {
-    val spark = codes.sparkSession
-    import spark.implicits._
-    val rows = for (j <- 0 until cb.m; c <- cb.books(j).indices)
-      yield (j, c, cb.dim, cb.books(j)(c).toSeq)
-    rows.toDF("j", "c", "dim", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
+    IndexFiles.saveCodebooks(codes.sparkSession, cb, s"$path/codebooks")
     codes.write.mode("overwrite").parquet(s"$path/codes")
   }
 
-  /** Reload a [[saveIndex]] checkpoint (codebooks are m×ksub rows — a
-    * driver-side read like IVF centroids; codes stay distributed).
+  /** Reload a [[saveIndex]] checkpoint (codebooks driver-side, codes
+    * stay distributed).
     */
-  def loadIndex(spark: SparkSession, path: String): (PqCodebooks, DataFrame) = {
-    import spark.implicits._
-    val cbRows = spark.read.parquet(s"$path/codebooks")
-      .as[(Int, Int, Int, Seq[Double])].collect()
-    val m = cbRows.map(_._1).max + 1
-    val books = Array.tabulate(m) { j =>
-      cbRows.filter(_._1 == j).sortBy(_._2).map(_._4.toArray)
-    }
-    (PqCodebooks(m, cbRows.head._3, books),
+  def loadIndex(spark: SparkSession, path: String): (PqCodebooks, DataFrame) =
+    (IndexFiles.loadCodebooks(spark, s"$path/codebooks"),
       spark.read.parquet(s"$path/codes"))
-  }
 
   /** Declared end-to-end PQ LIFECYCLE (build → save → load → search),
     * completing the Index-trait checkpoint surface across the graph
     * (HNSW), routing (IVF), and compression (PQ) families. Bit-equal
-    * to [[topKBatch]] by construction (same [[searchCodes]] body);
+    * to [[topKBatch]] by construction (same [[adcScan]] and
+    * [[TwoStage.search]]);
     * PqKnnSpec pins the equality. The save is memoized per dataset and
     * charged to bench_build_pq_ckpt; the reloaded index is memoized too
     * (`pq-reloaded`), so after the first call this query times the probe.
@@ -333,6 +274,6 @@ object PqKnn {
       ksub)(loadIndex(spark, path))
     val codes = IndexCache.persisted(spark, "pq-reloaded", dir, m, ksub,
       "codes")(enc)
-    searchCodes(cb, codes, base, queries, k, overfetch)
+    TwoStage.search(adcScan(cb, codes, queries), k, overfetch, base, queries)
   }
 }

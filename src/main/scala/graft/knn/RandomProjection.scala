@@ -8,8 +8,9 @@ import graft.IndexCache
 /** Random-projection (Johnson-Lindenstrauss) approximate kNN — the
   * third ANN family next to graph-based [[HnswKnn]] and cluster-pruned
   * [[IvfKnn]]: project embeddings through a seeded Gaussian matrix to a
-  * low dimension, mine top-(k*overfetch) candidates with the cheap
-  * projected distance, then re-rank the candidates exactly.
+  * low dimension, mine top-(k·overfetch) candidates with the cheap
+  * projected distance, then re-rank the candidates exactly
+  * ([[TwoStage]]).
   *
   * Scale notes (100 TB thinking):
   *   - The projected table is dim/outDim smaller than the base — at
@@ -17,7 +18,7 @@ import graft.IndexCache
   *     mining IO and FLOPs by that factor (default 64 -> 32 = 2x).
   *   - The projection matrix is driver-tiny and broadcast; projection
   *     is map-only (one tight JVM loop per row, no shuffle).
-  *   - Re-ranking touches only (queries x k*overfetch) full vectors —
+  *   - Re-ranking touches only (queries x k·overfetch) full vectors —
   *     a broadcast-join-sized set, never the base table.
   *   - Deterministic end to end: seeded matrix, distances rounded to
   *     6dp before ranking, vec_id tie-break (SURVEY.md §7.4).
@@ -56,14 +57,15 @@ object RandomProjection {
       }.toDF("vec_id", "pvec")
   }
 
-  /** Top-k per held-out query: projected-space candidate mining
-    * (k * overfetch) + exact re-rank. Output: (qid, vec_id, dist, rk) —
+  /** Top-k per held-out query: the projected-space
+    * [[TwoStage.cosineScan]], cut and exactly re-ranked by
+    * [[TwoStage.search]]. Output: (qid, vec_id, dist, rk) —
     * same shape as [[ExactKnn.topKBatch]] for recall evaluation.
     *
     * Default overfetch is high (16x) because the fixture embeddings are
     * near-random: neighbor margins are tiny, so projected rankings
     * scramble easily (same geometry that forces IvfKnn's wide nprobe).
-    * The candidate FRACTION k*overfetch/n still vanishes as n grows —
+    * The candidate FRACTION k·overfetch/n still vanishes as n grows —
     * on a real clustered corpus a 4x overfetch at this reduction is
     * typical.
     */
@@ -76,24 +78,7 @@ object RandomProjection {
     // the projected table is the scan target: materialized once
     val pBase = IndexCache.persisted(spark, "rp", dir, outDim, seed)(
       project(base, matrix))
-    val pq = broadcast(project(queries, matrix)
-      .select(col("vec_id").as("qid"), col("pvec").as("qpvec")))
-
-    val cand = graft.plans.GraftOps.topKPerGroup(
-      pBase.crossJoin(pq)
-        .select(col("qid"), col("vec_id"),
-          round(graft.functions.ArrayMath.cosineDistance(
-            col("pvec"), col("qpvec")), 6).as("pdist")),
-      Seq("qid"), Seq("pdist" -> true, "vec_id" -> true), k * overfetch)
-
-    // exact re-rank of the candidate set only
-    val q = broadcast(queries.select(col("vec_id").as("qid"), col("emb").as("qvec")))
-    val rescored = cand.select("qid", "vec_id")
-      .join(base, "vec_id")
-      .join(q, "qid")
-      .select(col("qid"), col("vec_id"),
-        ExactKnn.dist(col("emb"), col("qvec")).as("dist"))
-    graft.plans.GraftOps.topKPerGroup(rescored, Seq("qid"),
-      Seq("dist" -> true, "vec_id" -> true), k)
+    TwoStage.search(TwoStage.cosineScan(pBase, project(queries, matrix)),
+      k, overfetch, base, queries)
   }
 }

@@ -8,17 +8,17 @@ import graft.IndexCache
 /** SQ8 scalar-quantization ANN (FAISS's IndexScalarQuantizer family):
   * each dimension linearly quantized to one byte against per-dimension
   * [min, max] bounds learned in one pass — 8x compression on double
-  * vectors (the standard first lever before PQ's 64x), with exact
-  * re-rank of an overfetched candidate set, same as [[PqKnn]].
+  * vectors (the standard first lever before PQ's 64x), with the
+  * [[TwoStage]] cut and exact re-rank, same as [[PqKnn]].
   *
   * Scale notes:
   *   - Training is a per-partition min/max fold reduced on the driver:
   *     2 x dim doubles per partition cross the wire, one scan.
   *   - Encoding is map-only; the code table is dim bytes per vector.
   *   - Scoring decodes on the fly in a typed tight loop (no HOFs) per
-  *     (code row, query) pair — map-only over the code table with the
-  *     query block broadcast, exactly PqKnn's ADC shape without the
-  *     codebook indirection.
+  *     (code row, query) pair, streamed past the resident code
+  *     partitions by [[TwoStage.replicatedScan]] — PqKnn's ADC scan
+  *     without the codebook indirection.
   */
 object SqKnn {
 
@@ -102,16 +102,10 @@ object SqKnn {
     if (denom == 0) 1.0 else 1.0 - math.max(dot / denom, 0.0)
   }
 
-  /** Top-k for every held-out query: SQ-scored overfetch over the code
-    * table, then exact re-rank. Output: (qid, vec_id, dist rounded 6,
-    * rk) — same shape as [[ExactKnn.topKBatch]].
-    *
-    * Fully distributed query side (same mechanism as
-    * [[HnswKnn.searchIndex]]): query rows are replicated to every code
-    * partition in one shuffle and zipPartitions streams them past the
-    * partition's resident codes, scoring each pair with the fused
-    * decode+cosine loop — task memory = one cached code partition +
-    * one in-flight query; no query vector ever crosses the driver.
+  /** Top-k for every held-out query: the fused decode+cosine score of
+    * every (code row, query) pair in a [[TwoStage.replicatedScan]],
+    * cut and exactly re-ranked by [[TwoStage.search]]. Output: (qid,
+    * vec_id, dist rounded 6, rk) — same shape as [[ExactKnn.topKBatch]].
     */
   def topKBatch(spark: SparkSession, dir: String, k: Int = 10,
       overfetch: Int = 16): DataFrame = {
@@ -121,26 +115,11 @@ object SqKnn {
     val codes = IndexCache.persisted(spark, "sq", dir, "codes")(
       encode(base, bounds))
     val bcBounds = spark.sparkContext.broadcast(bounds)
-    val codesRdd = codes.as[(Long, Array[Byte])].rdd
-    val numP = codesRdd.getNumPartitions
-    val qrep = queries.select(col("vec_id"), col("emb"))
-      .as[(Long, Array[Double])].rdd
-      .flatMap(q => Iterator.range(0, numP).map(p => (p, q)))
-      .partitionBy(new org.apache.spark.HashPartitioner(numP))
-    val scoredRdd = codesRdd.zipPartitions(qrep) { (cit, qit) =>
-      val local = cit.toArray
+    val scored = TwoStage.replicatedScan(
+        codes.as[(Long, Array[Byte])].rdd, queries) { qv =>
       val b = bcBounds.value
-      qit.flatMap { case (_, (qid, qv)) =>
-        local.iterator.map { case (id, cs) =>
-          (qid, id, approxDist(cs, qv, b.mins, b.maxs))
-        }
-      }
+      cs => approxDist(cs, qv, b.mins, b.maxs)
     }
-    val scored = spark.createDataset(scoredRdd)
-      .toDF("qid", "vec_id", "approx_dist")
-    val cand = graft.plans.GraftOps.topKPerGroup(scored, Seq("qid"),
-      Seq("approx_dist" -> true, "vec_id" -> true), overfetch * k)
-      .select("qid", "vec_id")
-    ExactKnn.rerank(cand, base, queries, k)
+    TwoStage.search(scored, k, overfetch, base, queries)
   }
 }

@@ -1472,7 +1472,7 @@ object Dedup {
       .select(col("vec_id"), col("nv").as("emb"))
     val cents = graft.IndexCache.getOrBuild(spark,
         "semdedup-cents", dir, nClusters) {
-      graft.knn.IvfKnn.trainCentroids(base, nClusters).map(_.toArray).toArray
+      graft.knn.IvfKnn.trainCentroids(base, nClusters)
     }
     val assigned = graft.knn.IvfKnn.assignCids(base, cents)
       .select(col("vec_id"), col("emb"), col("cid"))

@@ -747,9 +747,9 @@ object VectorQueries {
 
     row("knn_ivf_batch", ivfBatch, GeneratedOracles.pins("knn_ivf_batch")),
 
-    // save (partitioned by cid) -> load -> probe: the reloaded scan
-    // prunes to the probed partitions (IvfKnnSpec pins PartitionFilters
-    // and bit-equality with the in-memory batch)
+    // save (partitioned by cid) -> load -> probe: the cid join prunes
+    // the reloaded scan to the probed partitions at runtime (IvfKnnSpec
+    // pins dynamic pruning and bit-equality with the in-memory batch)
     // the same relation as the knn_ivf_batch pin at sf0.01
     row("knn_ivf_lifecycle", (s, d) => IvfKnn.topKBatchLifecycle(s, d),
       GeneratedOracles.pins("knn_ivf_batch")),
@@ -1012,7 +1012,7 @@ object VectorQueries {
     // span encodes the min), decodes base vectors, coarse-scores the
     // decoded base against raw queries with the same clamp cosine,
     // keeps k*overfetch=160 per query under the engine's
-    // (approx_dist, vec_id) tie order, and exact-re-ranks the
+    // (coarse, vec_id) tie order, and exact-re-ranks the
     // survivors — certifying train+encode+decode+both rankings
     row("knn_sq_batch", sqBatch, s"""
       WITH e AS (SELECT vec_id,

@@ -55,7 +55,8 @@ class BoundAuditSweepSpec extends SparkSpec {
     // handle families must stay handle-sized — a persist swapped for a
     // collect would show up here as a count explosion
     val handleFams = Seq("cust-part-pairs", "copurchase-itempairs",
-      "item-nbr-df", "winnow-fp", "gram-sets", "layout-env", "rp")
+      "item-nbr-df", "winnow-fp", "gram-sets", "layout-env", "rp", "bq",
+      "bq-wide", "mrl", "pca")
     handleFams.foreach { fam =>
       val rows = log.filter(_._2 == fam)
       assert(rows.nonEmpty, s"handle family $fam never built")

@@ -43,26 +43,19 @@ class CollectSiteLintSpec extends AnyFunSuite {
     ("PqKnn.scala",
       ".as[(Long, Array[Double])].collect().map(r => l2normalize(r._2))") ->
       (1, "sampleRows-capped (10k) codebook training sample"),
-    ("PqKnn.scala", ".as[(Int, Int, Int, Seq[Double])].collect()") ->
-      (1, "m x ksub codebook rows (checkpoint reload; family:pq-reloaded " +
-        "caps the memoized result)"),
+    ("IndexFiles.scala", ".as[(Int, Int, Int, Seq[Double])].collect()") ->
+      (1, "m x ksub codebook rows (checkpoint reload codec; " +
+        "family:pq-reloaded, family:opq-reloaded and " +
+        "family:ivfpq-reloaded cap the memoized results)"),
+    ("IndexFiles.scala", ".collect().sortBy(_._1).map(_._2.toArray)") ->
+      (1, "matrix rows (checkpoint reload codec): k centroid rows " +
+        "(family:ivf bound, family:ivfpq-reloaded), d x d rotation rows " +
+        "(family:opq-reloaded), outDim x d basis rows (family:pca-reloaded)"),
     ("IvfKnn.scala",
       ".select(\"emb\").collect().map(_.getSeq[Double](0).toArray)") ->
       (1, "limit(k) seed centroids"),
     ("IvfKnn.scala", "}.collect()") ->
       (1, "O(|partitions| x k) k-means fold partials"),
-    ("IvfKnn.scala",
-      ".as[(Int, Seq[Double])].collect().sortBy(_._1).map(_._2.toArray)") ->
-      (1, "k centroid rows (checkpoint reload; family:ivf bound)"),
-    ("IvfPqKnn.scala",
-      ".as[(Int, Seq[Double])].collect().sortBy(_._1).map(_._2.toArray)") ->
-      (1, "coarse centroid rows (reload; family:ivfpq-reloaded)"),
-    ("IvfPqKnn.scala", ".as[(Int, Int, Int, Seq[Double])].collect()") ->
-      (1, "m x ksub codebook rows (reload; family:ivfpq-reloaded)"),
-    ("OpqKnn.scala", ".collect().sortBy(_._1).map(_._2.toArray)") ->
-      (1, "d x d rotation rows (reload; family:opq-reloaded)"),
-    ("PcaKnn.scala", ".collect().sortBy(_._1).map(_._2.toArray)") ->
-      (1, "outDim x d basis rows (reload; family:pca-reloaded)"),
     ("SqKnn.scala", "}.collect()") ->
       (1, "O(|partitions|) per-dim min/max fold partials"),
     ("ExactKnn.scala", "val side = rows.collect().sortBy(_._1)") ->

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.knn.IvfKnn
 import graft.operators.{GraphOps, HybridSearch}
 
 /** The memo contract every cached relation relies on: typed keys never
@@ -53,19 +54,24 @@ class IndexCacheSpec extends SparkSpec {
     assert(memo().storageLevel == StorageLevel.MEMORY_AND_DISK)
   }
 
-  test("a graph-deg hit after a cache release is re-persisted") {
-    try {
-      val before = GraphOps.degreesOf(spark, sf0001)
-      val n = before.count()
-      // Bench.releaseCaches: drop every cached relation and RDD
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      assert(before.storageLevel == StorageLevel.NONE)
-      val after = GraphOps.degreesOf(spark, sf0001)
-      assert(after eq before, "the hit hands back the memoized handle")
-      assert(after.storageLevel == StorageLevel.MEMORY_AND_DISK)
-      assert(after.count() == n)
-    } finally IndexCache.clear() // later suites rebuild from scratch
-  }
+  // two memoized relations a bench release unpersists: the GraphOps
+  // degree table and the IVF inverted file
+  for ((what, memo) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "a graph-deg" -> (() => GraphOps.degreesOf(spark, sf0001)),
+      "an ivf" -> (() => IvfKnn.memoIndex(spark, sf0001, 8).assigned)))
+    test(s"$what hit after a cache release is re-persisted") {
+      try {
+        val before = memo()
+        val n = before.count()
+        // Bench.releaseCaches: drop every cached relation and RDD
+        spark.catalog.clearCache()
+        spark.sparkContext.getPersistentRDDs.values
+          .foreach(_.unpersist(blocking = true))
+        assert(before.storageLevel == StorageLevel.NONE)
+        val after = memo()
+        assert(after eq before, "the hit hands back the memoized handle")
+        assert(after.storageLevel == StorageLevel.MEMORY_AND_DISK)
+        assert(after.count() == n)
+      } finally IndexCache.clear() // later suites rebuild from scratch
+    }
 }

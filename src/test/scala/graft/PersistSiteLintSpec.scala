@@ -28,13 +28,6 @@ class PersistSiteLintSpec extends AnyFunSuite {
     ("ShardedIndex.scala", "val ix = build.persist()") ->
       (1, "index structure: the one shard-graph memo step (ShardedKnn.memo: " +
         "hnsw, hnsw-reloaded, vamana, vamana-reloaded, vamana-ins)"),
-    ("IvfKnn.scala", "assigned.persist(StorageLevel.MEMORY_AND_DISK).count(); this") ->
-      (1, "index structure: IvfIndex.persist (centroids + inverted file)"),
-    ("IvfKnn.scala", "buildIndex(ExactKnn.split(spark, dir)._1, nC).persist())") ->
-      (1, "index structure: the one ivf memo (memoIndex)"),
-    ("IvfKnn.scala",
-      "emb.filter(col(\"vec_id\") >= s90 && col(\"vec_id\") < s95)).persist()") ->
-      (1, "index structure: the one ivf-ins memo (memoInsertedIndex)"),
     // --- iterative-loop state ---------------------------------------
     ("GraphOps.scala",
       "val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK") ->
