@@ -142,8 +142,7 @@ object ScaleTechniques {
     */
   private[graft] def partitionedOrdersPath(spark: SparkSession, dir: String): String =
     graft.IndexCache.getOrBuild(spark, "dpp_orders", dir) {
-      val p = graft.streaming.EventStream.cleanupOnExit(
-        java.nio.file.Files.createTempDirectory("graft_part_orders")).toString
+      val p = graft.streaming.OneShot.tempDir("graft_part_orders")
       Tables.orders(spark, dir)
         .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
         .write.mode("overwrite").partitionBy("o_month").parquet(p)
@@ -287,8 +286,7 @@ object ScaleTechniques {
   private[graft] def zorderPartitionedEventsPath(spark: SparkSession,
       dir: String, bits: Int = 8, shift: Int = 4): String =
     graft.IndexCache.getOrBuild(spark, "zorder-part", dir, bits, shift) {
-      val p = graft.streaming.EventStream.cleanupOnExit(
-        java.nio.file.Files.createTempDirectory("graft_zpart_events")).toString
+      val p = graft.streaming.OneShot.tempDir("graft_zpart_events")
       val mask = (1L << bits) - 1
       val x = col("user_id").bitwiseAND(lit(mask))
       val d = floor(unix_micros(col("ts")) / lit(86400000000L)).cast("long")
@@ -391,8 +389,7 @@ object ScaleTechniques {
   private[graft] def hilbertPartitionedEventsPath(spark: SparkSession,
       dir: String, bits: Int = 8, shift: Int = 4): String =
     graft.IndexCache.getOrBuild(spark, "hilbert-part", dir, bits, shift) {
-      val p = graft.streaming.EventStream.cleanupOnExit(
-        java.nio.file.Files.createTempDirectory("graft_hpart_events")).toString
+      val p = graft.streaming.OneShot.tempDir("graft_hpart_events")
       val mask = (1L << bits) - 1
       val x = col("user_id").bitwiseAND(lit(mask))
       val d = floor(unix_micros(col("ts")) / lit(86400000000L)).cast("long")

@@ -364,7 +364,7 @@ object EventQueries {
     // ratio, monotone peeking-safe p per experiment day
     row("events_msprt_monitor", (s, d) => EventOps.msprtMonitor(s, d), msprtOracle),
 
-    // the NINETEENTH streaming-executed row: the same per-day moment
+    // streaming-executed twin: the same per-day moment
     // rollup maintained as complete-mode aggregation state, the Λ
     // chain read off the drained state; shares the batch oracle
     // mSPRT replay: same daily cent/HUGEINT rollup, same cumulative
@@ -646,7 +646,7 @@ object EventQueries {
       graft.streaming.EventStream.eventsExpectations(Tables.events(sp, d)),
       eventsExpectationsOracle),
 
-    // the FIFTEENTH streaming-executed row: the same check sheet
+    // streaming-executed twin: the same check sheet
     // maintained by the engine's global aggregation state (complete
     // mode); shares the batch oracle
     row("events_expectations_streamed", (sp, d) =>
@@ -1310,7 +1310,7 @@ object EventQueries {
 
     // same leaderboard, but the rows are PRODUCED BY the streaming
     // engine (file stream source -> flatMapGroupsWithState keyed state
-    // -> memory sink, Trigger.AvailableNow) — streaming execution
+    // -> one-shot memory sink) — streaming execution
     // itself sits under the oracle's hash check
     // the streaming-executed twin answers the SAME question (the keyed
     // leaderboard fold is order-insensitive), so it shares the oracle

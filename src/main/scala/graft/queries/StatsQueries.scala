@@ -292,7 +292,7 @@ object StatsQueries {
     // cell state, so the chain output matches bit-for-bit)
     row("stats_psi_drift_daily", (s, d) => Stats.psiDriftDaily(s, d), psiDriftOracle),
 
-    // the TWENTIETH streaming-executed row: the (day, bin) histogram
+    // streaming-executed twin: the (day, bin) histogram
     // cells maintained as complete-mode state, the PSI chain read off
     // the drained state; shares the batch oracle
     row("stats_psi_drift_streamed", (s, d) =>

@@ -386,8 +386,7 @@ object Ingest {
   private[graft] def evolvedOrdersDir(spark: SparkSession,
       dir: String): String =
     graft.IndexCache.getOrBuild(spark, "orders-evolved", dir) {
-      val out = graft.streaming.EventStream.cleanupOnExit(
-        java.nio.file.Files.createTempDirectory("graft-evolved")).toString
+      val out = graft.streaming.OneShot.tempDir("graft-evolved")
       val o = graft.Tables.orders(spark, dir)
         .select(col("o_orderkey"),
           expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"),

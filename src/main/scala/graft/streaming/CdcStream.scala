@@ -58,8 +58,7 @@ object CdcStream {
   private def stagedChangelogDir(spark: SparkSession, dir: String,
       nChunks: Int = 4): String =
     graft.IndexCache.getOrBuild(spark, "orders-cdc-dir", dir, nChunks) {
-      val out = EventStream.cleanupOnExit(
-        java.nio.file.Files.createTempDirectory("graft-cdc-log")).toString
+      val out = OneShot.tempDir("graft-cdc-log")
       val log = graft.sources.Ingest.mergeChangelogShowcase(spark, dir)
         .localCheckpoint(true)
       // append-mode writes race on the output _temporary dir — stage
@@ -103,8 +102,7 @@ object CdcStream {
     */
   private def baseStateDir(spark: SparkSession, dir: String): String =
     graft.IndexCache.getOrBuild(spark, "orders-cdc-base", dir, NStateBuckets) {
-      val base = EventStream.cleanupOnExit(
-        java.nio.file.Files.createTempDirectory("graft-cdc-base")).toString
+      val base = OneShot.tempDir("graft-cdc-base")
       graft.Tables.orders(spark, dir)
         .select(col("o_orderkey"),
           expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"),
@@ -250,23 +248,32 @@ object CdcStream {
       baseDir: String, stateRoot: String, ckpt: String,
       crashAt: Long = -1L,
       crashed: java.util.concurrent.atomic.AtomicBoolean = null): Unit = {
-    val q = spark.readStream.schema(logSchema)
+    tailChangelog(spark, stagedDir, ckpt, crashAt, crashed) { (batch, id) =>
+      mergeSliceIntoState(batch.localCheckpoint(true), id,
+        stateRoot, baseDir)
+    }
+  }
+
+  /** Tail the staged changelog at `stagedDir` one chunk per trigger
+    * through `body`, as a one-shot run checkpointed at `ckpt`. The crash
+    * specs' hook: with `crashAt >= 0`, the first batch at or past it
+    * throws AFTER `body` ran — its output durable, its commit lost.
+    */
+  private def tailChangelog(spark: SparkSession, stagedDir: String,
+      ckpt: String, crashAt: Long,
+      crashed: java.util.concurrent.atomic.AtomicBoolean)(
+      body: (Dataset[Row], Long) => Unit): Unit =
+    OneShot.foreachBatch(spark, ckpt, spark.readStream.schema(logSchema)
       .option("maxFilesPerTrigger", 1)
       .parquet(stagedDir)
       .writeStream
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        mergeSliceIntoState(batch.localCheckpoint(true), id,
-          stateRoot, baseDir)
+        body(batch, id)
         if (crashAt >= 0 && id >= crashAt
             && crashed.compareAndSet(false, true))
           throw new RuntimeException("graft-injected-crash")
         ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      })
 
   /** Summary of the final state under `stateRoot` (per bucket, its
     * newest writer; base snapshot for never-touched buckets).
@@ -279,7 +286,7 @@ object CdcStream {
         sum(col("cents")).as("total_cents"))
 
   /** The declared STREAMING-EXECUTED CDC apply
-    * (`orders_cdc_apply_streamed`, the twenty-first streaming row):
+    * (`orders_cdc_apply_streamed`):
     * tail the changelog, MERGE each chunk into the bucketed versioned
     * state, and summarize the final table alongside the per-action
     * counts the log itself carries. The oracle reconstructs the
@@ -291,12 +298,8 @@ object CdcStream {
   def applyChangelogStreamed(spark: SparkSession, dir: String): DataFrame = {
     val staged = stagedChangelogDir(spark, dir)
     val base = baseStateDir(spark, dir)
-    val stateRoot = EventStream.cleanupOnExit(
-      java.nio.file.Files.createTempDirectory("graft-cdc-state")).toString
-    EventStream.withStreamPartitions(spark, 4, noData = false) {
-      runApply(spark, staged, base, stateRoot,
-        EventStream.ckptDir("graft-ckpt-cdc"))
-    }
+    val stateRoot = OneShot.tempDir("graft-cdc-state")
+    runApply(spark, staged, base, stateRoot, OneShot.ckptDir("graft-ckpt-cdc"))
     val counts = graft.sources.Ingest.mergeChangelogShowcase(spark, dir)
       .groupBy()
       .agg(sum(when(col("action") === "update", 1L).otherwise(0L))
@@ -367,12 +370,9 @@ object CdcStream {
         "orders-cdc-applied", dir, NStateBuckets) {
       val staged = stagedChangelogDir(spark, dir)
       val base = baseStateDir(spark, dir)
-      val stateRoot = EventStream.cleanupOnExit(
-        java.nio.file.Files.createTempDirectory("graft-cdc-applied")).toString
-      EventStream.withStreamPartitions(spark, 4, noData = false) {
-        runApply(spark, staged, base, stateRoot,
-          EventStream.ckptDir("graft-ckpt-cdc-applied"))
-      }
+      val stateRoot = OneShot.tempDir("graft-cdc-applied")
+      runApply(spark, staged, base, stateRoot,
+        OneShot.ckptDir("graft-ckpt-cdc-applied"))
       (stateRoot, base)
     }
 
@@ -441,8 +441,7 @@ object CdcStream {
     graft.IndexCache.getOrBuild(spark,
         "orders-cdc-chain", dir, NStateBuckets, NLogChunks) {
       val base = baseStateDir(spark, dir)
-      val stateRoot = EventStream.cleanupOnExit(
-        java.nio.file.Files.createTempDirectory("graft-cdc-chain")).toString
+      val stateRoot = OneShot.tempDir("graft-cdc-chain")
       val log = graft.sources.Ingest.mergeChangelogShowcase(spark, dir)
         .localCheckpoint(true)
       (0 until NLogChunks).foreach { c =>
@@ -535,8 +534,7 @@ object CdcStream {
     val (root, base, nExpired) = graft.IndexCache.getOrBuild(spark,
         "orders-cdc-expired", dir, NLogChunks, keepFrom) {
       val (chainRoot, chainBase) = versionChainDirs(spark, dir)
-      val root = EventStream.cleanupOnExit(
-        java.nio.file.Files.createTempDirectory("graft-cdc-expire")).toString
+      val root = OneShot.tempDir("graft-cdc-expire")
       copyTree(chainRoot, root)
       val (newBase, expired) = expireSnapshots(spark, root, chainBase,
         keepFrom)
@@ -578,8 +576,7 @@ object CdcStream {
       dir: String): (String, String, String) =
     graft.IndexCache.getOrBuild(spark, "orders-cdc-mor", dir, NStateBuckets) {
       val base = baseStateDir(spark, dir)
-      val root = EventStream.cleanupOnExit(
-        java.nio.file.Files.createTempDirectory("graft-cdc-mor")).toString
+      val root = OneShot.tempDir("graft-cdc-mor")
       val log = graft.sources.Ingest.mergeChangelogShowcase(spark, dir)
         .localCheckpoint(true)
       concurrently(
@@ -676,8 +673,7 @@ object CdcStream {
     // measures the read-back proof that the fold lost nothing
     val out = graft.IndexCache.getOrBuild(spark,
         "orders-mor-compacted", dir, NStateBuckets) {
-      val o = EventStream.cleanupOnExit(
-        java.nio.file.Files.createTempDirectory("graft-mor-compact")).toString
+      val o = OneShot.tempDir("graft-mor-compact")
       morRead(spark, base, dels, ins)
         .withColumn("bucket", pmod(col("o_orderkey"), lit(NStateBuckets)))
         .write.partitionBy("bucket").mode("overwrite").parquet(o)
@@ -716,8 +712,7 @@ object CdcStream {
       dir: String): (String, String) =
     graft.IndexCache.getOrBuild(spark, "orders-mor-chain", dir, NLogChunks) {
       val base = baseStateDir(spark, dir)
-      val root = EventStream.cleanupOnExit(
-        java.nio.file.Files.createTempDirectory("graft-mor-chain")).toString
+      val root = OneShot.tempDir("graft-mor-chain")
       val log = graft.sources.Ingest.mergeChangelogShowcase(spark, dir)
         .localCheckpoint(true)
       // the 8 per-chunk sidecar writes are independent single-file
@@ -1053,8 +1048,7 @@ object CdcStream {
       dir: String): (String, String, Long, Long, Long) =
     graft.IndexCache.getOrBuild(spark, "orders-mor-minor", dir, NLogChunks) {
       val (baseDir, chainRoot) = morChainDirs(spark, dir)
-      val root = EventStream.cleanupOnExit(
-        java.nio.file.Files.createTempDirectory("graft-mor-minor")).toString
+      val root = OneShot.tempDir("graft-mor-minor")
       copyTree(chainRoot, root)
       val before =
         batchIds(s"$root/deletes").size + batchIds(s"$root/inserts").size
@@ -1090,17 +1084,6 @@ object CdcStream {
     }.reduce(_ unionByName _)
   }
 
-  /** Drive the STREAMING merge-on-read apply: tail `stagedDir` one
-    * chunk per trigger; each micro-batch APPENDS its slice as sidecar
-    * files — superseded keys under `deletes/batch=<id>`, new row images
-    * under `inserts/batch=<id>` — and never touches the base or any
-    * earlier sidecar. Per-trigger write volume is exactly |batch| rows:
-    * the true O(changes) point of the CDC write-strategy spectrum
-    * (the copy-on-write loop above pays bucket granularity). Crash
-    * discipline: a replayed batch overwrites ITS OWN batch=<id> dirs —
-    * idempotent by construction, no read-prev dependency at all.
-    * Exposed for the crash spec.
-    */
   /** Run independent write thunks concurrently (guide §2.6): each is
     * a small job whose wall-clock is dominated by fixed per-job driver
     * costs (planning + commit protocol), so overlapping the two sidecar
@@ -1120,34 +1103,37 @@ object CdcStream {
     } finally pool.shutdown()
   }
 
+  /** Drive the STREAMING merge-on-read apply: tail `stagedDir` one
+    * chunk per trigger; each micro-batch APPENDS its slice as sidecar
+    * files — superseded keys under `deletes/batch=<id>`, new row images
+    * under `inserts/batch=<id>` — and never touches the base or any
+    * earlier sidecar. Per-trigger write volume is exactly |batch| rows:
+    * the true O(changes) point of the CDC write-strategy spectrum
+    * (the copy-on-write loop above pays bucket granularity). Crash
+    * discipline: a replayed batch overwrites ITS OWN batch=<id> dirs —
+    * idempotent by construction, no read-prev dependency at all.
+    * Exposed for the crash spec.
+    */
   private[graft] def runMorApply(spark: SparkSession, stagedDir: String,
       morRoot: String, ckpt: String, crashAt: Long = -1L,
       crashed: java.util.concurrent.atomic.AtomicBoolean = null): Unit = {
-    val q = spark.readStream.schema(logSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stagedDir)
-      .writeStream
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val slice = batch.localCheckpoint(true)
-        concurrently(
-          () => slice.filter(col("action").isin("update", "delete"))
-            .select(col("o_orderkey"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$morRoot/deletes/batch=$id"),
-          () => slice.filter(col("action").isin("update", "insert"))
-            .select(col("o_orderkey"), col("new_cents").as("cents"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$morRoot/inserts/batch=$id"))
-        if (crashAt >= 0 && id >= crashAt
-            && crashed.compareAndSet(false, true))
-          throw new RuntimeException("graft-injected-crash")
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    tailChangelog(spark, stagedDir, ckpt, crashAt, crashed) { (batch, id) =>
+      writeSidecars(batch.localCheckpoint(true), morRoot, id)
+    }
   }
+
+  /** One micro-batch's sidecar writes (see [[runMorApply]]). */
+  private def writeSidecars(slice: DataFrame, morRoot: String,
+      id: Long): Unit =
+    concurrently(
+      () => slice.filter(col("action").isin("update", "delete"))
+        .select(col("o_orderkey"))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$morRoot/deletes/batch=$id"),
+      () => slice.filter(col("action").isin("update", "insert"))
+        .select(col("o_orderkey"), col("new_cents").as("cents"))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$morRoot/inserts/batch=$id"))
 
   /** The merge-on-read resolution over streamed sidecars (partition
     * discovery turns the batch=<id> dirs into one relation each).
@@ -1161,7 +1147,7 @@ object CdcStream {
       morFacts(spark, s"$morRoot/deletes", s"$morRoot/inserts"))
 
   /** The declared STREAMING merge-on-read row
-    * (`orders_mor_apply_streamed`, the twenty-third streaming row):
+    * (`orders_mor_apply_streamed`):
     * the changelog consumed incrementally with |batch|-row sidecar
     * appends per trigger, then resolved read-side. Hash-matches the
     * SAME oracle as the batch MOR row — the streaming sidecar appends
@@ -1170,12 +1156,8 @@ object CdcStream {
   def morApplyStreamed(spark: SparkSession, dir: String): DataFrame = {
     val staged = stagedChangelogDir(spark, dir)
     val base = baseStateDir(spark, dir)
-    val morRoot = EventStream.cleanupOnExit(
-      java.nio.file.Files.createTempDirectory("graft-cdc-mor-stream")).toString
-    EventStream.withStreamPartitions(spark, 4, noData = false) {
-      runMorApply(spark, staged, morRoot,
-        EventStream.ckptDir("graft-ckpt-mor"))
-    }
+    val morRoot = OneShot.tempDir("graft-cdc-mor-stream")
+    runMorApply(spark, staged, morRoot, OneShot.ckptDir("graft-ckpt-mor"))
     morStreamedSummary(spark, base, morRoot)
   }
 
@@ -1214,37 +1196,16 @@ object CdcStream {
       maxLiveBytes: Long = Long.MaxValue,
       crashAt: Long = -1L,
       crashed: java.util.concurrent.atomic.AtomicBoolean = null): Unit = {
-    val q = spark.readStream.schema(logSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stagedDir)
-      .writeStream
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val slice = batch.localCheckpoint(true)
-        concurrently(
-          () => slice.filter(col("action").isin("update", "delete"))
-            .select(col("o_orderkey"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$morRoot/deletes/batch=$id"),
-          () => slice.filter(col("action").isin("update", "insert"))
-            .select(col("o_orderkey"), col("new_cents").as("cents"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$morRoot/inserts/batch=$id"))
-        val curUpto = currentMinor(morRoot).map(_._2).getOrElse(-1L)
-        val live = batchIds(s"$morRoot/deletes")
-          .union(batchIds(s"$morRoot/inserts"))
-          .distinct.count(_ > curUpto)
-        if (live > maxLive
-            || (live > 0 && liveSidecarBytes(morRoot, curUpto) > maxLiveBytes))
-          morMinorCompact(spark, morRoot, foldK = live)
-        if (crashAt >= 0 && id >= crashAt
-            && crashed.compareAndSet(false, true))
-          throw new RuntimeException("graft-injected-crash")
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    tailChangelog(spark, stagedDir, ckpt, crashAt, crashed) { (batch, id) =>
+      writeSidecars(batch.localCheckpoint(true), morRoot, id)
+      val curUpto = currentMinor(morRoot).map(_._2).getOrElse(-1L)
+      val live = batchIds(s"$morRoot/deletes")
+        .union(batchIds(s"$morRoot/inserts"))
+        .distinct.count(_ > curUpto)
+      if (live > maxLive
+          || (live > 0 && liveSidecarBytes(morRoot, curUpto) > maxLiveBytes))
+        morMinorCompact(spark, morRoot, foldK = live)
+    }
   }
 
   /** The declared AUTO-COMPACTING streamed MOR row
@@ -1261,12 +1222,9 @@ object CdcStream {
   def morAutoCompactStreamed(spark: SparkSession, dir: String): DataFrame = {
     val staged = stagedChangelogDir(spark, dir)
     val base = baseStateDir(spark, dir)
-    val morRoot = EventStream.cleanupOnExit(
-      java.nio.file.Files.createTempDirectory("graft-mor-auto")).toString
-    EventStream.withStreamPartitions(spark, 4, noData = false) {
-      runMorApplyAutoCompact(spark, staged, morRoot,
-        EventStream.ckptDir("graft-ckpt-mor-auto"), maxLive = 1)
-    }
+    val morRoot = OneShot.tempDir("graft-mor-auto")
+    runMorApplyAutoCompact(spark, staged, morRoot,
+      OneShot.ckptDir("graft-ckpt-mor-auto"), maxLive = 1)
     val (genDir, upto) = currentMinor(morRoot).getOrElse(("minor-g-1", -1L))
     val nFolds = genIndex(genDir) + 1
     val nLive = batchIds(s"$morRoot/deletes")
@@ -1295,13 +1253,10 @@ object CdcStream {
       : DataFrame = {
     val staged = stagedChangelogDir(spark, dir)
     val base = baseStateDir(spark, dir)
-    val morRoot = EventStream.cleanupOnExit(
-      java.nio.file.Files.createTempDirectory("graft-mor-autob")).toString
-    EventStream.withStreamPartitions(spark, 4, noData = false) {
-      runMorApplyAutoCompact(spark, staged, morRoot,
-        EventStream.ckptDir("graft-ckpt-mor-autob"), maxLive = 100,
-        maxLiveBytes = 1L)
-    }
+    val morRoot = OneShot.tempDir("graft-mor-autob")
+    runMorApplyAutoCompact(spark, staged, morRoot,
+      OneShot.ckptDir("graft-ckpt-mor-autob"), maxLive = 100,
+      maxLiveBytes = 1L)
     val (genDir, upto) = currentMinor(morRoot).getOrElse(("minor-g-1", -1L))
     val nFolds = genIndex(genDir) + 1
     val nLive = batchIds(s"$morRoot/deletes")
@@ -1339,8 +1294,7 @@ object CdcStream {
   private def ivmBaseAggDir(spark: SparkSession, dir: String): String =
     graft.IndexCache.getOrBuild(spark,
         "orders-cdc-ivm-base", dir, NIvmSegments) {
-      val out = EventStream.cleanupOnExit(
-        java.nio.file.Files.createTempDirectory("graft-cdc-ivm-base")).toString
+      val out = OneShot.tempDir("graft-cdc-ivm-base")
       graft.Tables.orders(spark, dir)
         .groupBy(pmod(col("o_orderkey"), lit(NIvmSegments)).as("segment"))
         .agg(count(lit(1)).as("n_rows"),
@@ -1375,40 +1329,27 @@ object CdcStream {
       baseDir: String, aggRoot: String, ckpt: String,
       crashAt: Long = -1L,
       crashed: java.util.concurrent.atomic.AtomicBoolean = null): Unit = {
-    val q = spark.readStream.schema(logSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stagedDir)
-      .writeStream
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val s = batch.sparkSession
-        val delta = batch.localCheckpoint(true)
-          .groupBy(pmod(col("o_orderkey"), lit(NIvmSegments)).as("segment"))
-          .agg(
-            sum(when(col("action") === "insert", 1L)
-              .when(col("action") === "delete", -1L)
-              .otherwise(0L)).as("d_rows"),
-            sum(when(col("action") === "update",
-                col("new_cents") - col("old_cents"))
-              .when(col("action") === "insert", col("new_cents"))
-              .otherwise(-col("old_cents"))).as("d_cents"))
-        val prev = ivmStateAt(s, aggRoot, baseDir, id)
-        prev.join(delta, Seq("segment"), "full_outer")
-          .select(col("segment"),
-            (coalesce(col("n_rows"), lit(0L))
-              + coalesce(col("d_rows"), lit(0L))).as("n_rows"),
-            (coalesce(col("total_cents"), lit(0L))
-              + coalesce(col("d_cents"), lit(0L))).as("total_cents"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$aggRoot/v=$id")
-        if (crashAt >= 0 && id >= crashAt
-            && crashed.compareAndSet(false, true))
-          throw new RuntimeException("graft-injected-crash")
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    tailChangelog(spark, stagedDir, ckpt, crashAt, crashed) { (batch, id) =>
+      val delta = batch.localCheckpoint(true)
+        .groupBy(pmod(col("o_orderkey"), lit(NIvmSegments)).as("segment"))
+        .agg(
+          sum(when(col("action") === "insert", 1L)
+            .when(col("action") === "delete", -1L)
+            .otherwise(0L)).as("d_rows"),
+          sum(when(col("action") === "update",
+              col("new_cents") - col("old_cents"))
+            .when(col("action") === "insert", col("new_cents"))
+            .otherwise(-col("old_cents"))).as("d_cents"))
+      val prev = ivmStateAt(batch.sparkSession, aggRoot, baseDir, id)
+      prev.join(delta, Seq("segment"), "full_outer")
+        .select(col("segment"),
+          (coalesce(col("n_rows"), lit(0L))
+            + coalesce(col("d_rows"), lit(0L))).as("n_rows"),
+          (coalesce(col("total_cents"), lit(0L))
+            + coalesce(col("d_cents"), lit(0L))).as("total_cents"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$aggRoot/v=$id")
+    }
   }
 
   /** The declared STREAMING-EXECUTED IVM row
@@ -1423,12 +1364,8 @@ object CdcStream {
   def ivmChangelogStreamed(spark: SparkSession, dir: String): DataFrame = {
     val staged = stagedChangelogDir(spark, dir)
     val base = ivmBaseAggDir(spark, dir)
-    val aggRoot = EventStream.cleanupOnExit(
-      java.nio.file.Files.createTempDirectory("graft-cdc-ivm")).toString
-    EventStream.withStreamPartitions(spark, 4, noData = false) {
-      runIvm(spark, staged, base, aggRoot,
-        EventStream.ckptDir("graft-ckpt-ivm"))
-    }
+    val aggRoot = OneShot.tempDir("graft-cdc-ivm")
+    runIvm(spark, staged, base, aggRoot, OneShot.ckptDir("graft-ckpt-ivm"))
     ivmStateAt(spark, aggRoot, base, Long.MaxValue)
       .filter(col("n_rows") > 0)
       .select(col("segment"), col("n_rows"), col("total_cents"))

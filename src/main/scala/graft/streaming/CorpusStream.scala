@@ -31,21 +31,6 @@ object CorpusStream {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  /** The file stream source tails a DIRECTORY; stage the fixture file
-    * into one, once per (session, dataset).
-    */
-  private def stagedDocsDir(spark: SparkSession, dir: String): String = {
-    val src = java.nio.file.Paths.get(s"$dir/documents.parquet")
-    graft.IndexCache.getOrBuild(spark, "documents-stream-dir", dir) {
-      if (java.nio.file.Files.isDirectory(src)) src.toString
-      else {
-        val d = java.nio.file.Files.createTempDirectory("graft-docs-stream")
-        java.nio.file.Files.copy(src, d.resolve("documents.parquet"))
-        d.toString
-      }
-    }
-  }
-
   /** STREAMING quality scoring — the ingest-time quality gate every
     * production corpus pipeline runs (filter junk BEFORE it lands, not
     * in a later batch sweep): each arriving document computes its word
@@ -62,30 +47,14 @@ object CorpusStream {
     * stopword_ratio, alpha_ratio, quality).
     */
   def qualityScoresStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stagedDocsDir(spark, dir)
-    val name = s"graft_quality_stream_${EventStream.streamRunSeq.incrementAndGet()}"
-    EventStream.withStreamPartitions(spark, 4, noData = false) {
-      val q = graft.operators.TextOps.qualityScoresOf(
-          spark.readStream.schema(docSchema).parquet(staged))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", EventStream.ckptDir("graft-ckpt-quality"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val out = spark.table(name).select(col("doc_id"), col("n_words"),
-      col("mean_wlen"), col("stopword_ratio"), col("alpha_ratio"),
-      col("quality"))
-    out.queryExecution.assertAnalyzed()
-    spark.catalog.dropTempView(name)
-    out
+    val staged = OneShot.stageFixture(spark, dir, "documents.parquet")
+    OneShot.memorySink(spark, "quality", "append", noData = false)(
+      graft.operators.TextOps.qualityScoresOf(
+        spark.readStream.schema(docSchema).parquet(staged)))(
+      _.select(col("doc_id"), col("n_words"), col("mean_wlen"),
+        col("stopword_ratio"), col("alpha_ratio"), col("quality")))
   }
 
-  /** Streamed [[Dedup.incrementalMinhashPairs]] (shares
-    * `dedup_incremental_minhash`'s oracle). Output:
-    * (doc_new, doc_corpus, jaccard) with exact Jaccard >= `threshold`.
-    */
   /** The streaming dedup FRAME — the stream-static plan pre-sink,
     * shared by the declared memory-sink row below and the
     * crash-recovery spec's checkpointed foreachBatch harness (both
@@ -132,27 +101,17 @@ object CorpusStream {
       .filter(col("jaccard") >= threshold)
   }
 
+  /** Streamed [[Dedup.incrementalMinhashPairs]] (shares
+    * `dedup_incremental_minhash`'s oracle). Output:
+    * (doc_new, doc_corpus, jaccard) with exact Jaccard >= `threshold`.
+    */
   def incrementalMinhashStreamed(spark: SparkSession, dir: String,
       mod: Int = 10, slot: Int = 7, threshold: Double = 0.9): DataFrame = {
-    val staged = stagedDocsDir(spark, dir)
-    val name = s"graft_incdedup_stream_${EventStream.streamRunSeq.incrementAndGet()}"
-    EventStream.withStreamPartitions(spark, 4, noData = false) {
-      val q = incrementalMinhashFrame(spark, dir, staged, mod, slot, threshold)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", EventStream.ckptDir("graft-ckpt-incdedup-q"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    // a pair colliding in several bands appends one (identical,
-    // exactly-verified) row per band — distinct restores the pair set
-    val out = spark.table(name)
-      .select(col("doc_new"), col("doc_corpus"), col("jaccard")).distinct()
-    // bind the sink relation into the plan, then drop the catalog entry
-    // so repeated invocations don't accumulate driver-resident tables
-    out.queryExecution.assertAnalyzed()
-    spark.catalog.dropTempView(name)
-    out
+    val staged = OneShot.stageFixture(spark, dir, "documents.parquet")
+    OneShot.memorySink(spark, "incdedup", "append", noData = false)(
+      incrementalMinhashFrame(spark, dir, staged, mod, slot, threshold))(
+      // a pair colliding in several bands appends one (identical,
+      // exactly-verified) row per band — distinct restores the pair set
+      _.select(col("doc_new"), col("doc_corpus"), col("jaccard")).distinct())
   }
 }

@@ -133,168 +133,45 @@ object EventStream {
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(update)
   }
 
-  private[streaming] val streamRunSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Ephemeral dirs (checkpoints, foreachBatch result sinks) registered
-    * for recursive deletion at JVM exit — repeated invocations no
-    * longer accumulate disk for the life of the machine, only the life
-    * of the process (they cannot be deleted eagerly: the returned
-    * DataFrames read the result sinks lazily).
-    */
-  private val tempDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private lazy val cleanupHook: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      tempDirs.forEach { d =>
-        try {
-          java.nio.file.Files.walk(d)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        } catch { case _: Exception => () }
-      }
-    }, "graft-stream-tmp-cleanup"))
-  }
-  private[graft] def cleanupOnExit(p: java.nio.file.Path): java.nio.file.Path = {
-    cleanupHook
-    tempDirs.add(p)
-    p
-  }
-
-  /** Checkpoint location for the declared one-shot (AvailableNow)
-    * streamed queries: tmpfs when the platform has it. The offset/commit
-    * WAL and per-partition state-store commits are fsync-bound and
-    * dominate the fixed cost of a seconds-long run; these checkpoints
-    * are ephemeral by construction (fresh dir per run, state is KBs), so
-    * RAM-backed files lose nothing — a production job supplies its own
-    * durable checkpointLocation and never passes through here.
-    */
-  private[streaming] def ckptDir(prefix: String): String = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val base =
-      if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm)) shm
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    cleanupOnExit(java.nio.file.Files.createTempDirectory(base, prefix)).toString
-  }
-
-  /** Stateful streaming cost tracks the state-store count, which Spark
-    * sizes from `spark.sql.shuffle.partitions` at plan time — one store
-    * (x4 for a stream-stream join) per partition, each with its own
-    * checkpoint directory and maintenance thread. The declared streamed
-    * queries run the fixture through a handful of keys, so they pin a
-    * small store count for the duration of the stream (measured 3-4x
-    * on the interval join) and restore the session default after. At
-    * real scale this is the same knob a production job sets per stream
-    * from its key cardinality and executor count — NOT the batch
-    * engine's shuffle width.
-    */
-  /** `noData = false` additionally skips the trailing no-data
-    * micro-batch — safe ONLY for queries whose emission does not wait on
-    * the watermark: update/complete-mode sinks and INNER stream joins
-    * (rows emit in the data batch that produced them). Append-mode
-    * watermark-gated plans (outer joins, event-time timeouts) MUST keep
-    * it: their final rows only surface in that batch.
-    */
-  private[streaming] def withStreamPartitions[T](spark: SparkSession, n: Int,
-      noData: Boolean = true)(f: => T): T = {
-    val pKey = "spark.sql.shuffle.partitions"
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevP = spark.conf.get(pKey)
-    val prevNd = spark.conf.get(ndKey)
-    // dev knob for A/B-ing the state-store width (a production job sets
-    // this per stream from key cardinality × executor count; the
-    // constant below is the measured local optimum — see
-    // OPTIMIZATION_r14.md)
-    val width = sys.env.get("SPARK_GRAFT_STREAM_PARTS")
-      .map(_.toInt).getOrElse(n)
-    spark.conf.set(pKey, width.toString)
-    spark.conf.set(ndKey, noData.toString)
-    try f finally {
-      spark.conf.set(pKey, prevP)
-      spark.conf.set(ndKey, prevNd)
-    }
-  }
-
   /** The declared STREAMING-EXECUTED leaderboard (shares
     * `events_topk_amounts`' oracle): the fixture events flow through the
     * file stream source -> [[streamTopKAmounts]]'s keyed state ->
-    * a memory sink under `Trigger.AvailableNow`, and the returned frame
-    * is each key's final standing (its rows at `max(upd)`) — so the
-    * rows the driver hashes were produced by the streaming engine
+    * a one-shot memory sink ([[OneShot.memorySink]]), and the returned
+    * frame is each key's final standing (its rows at `max(upd)`) — so
+    * the rows the driver hashes were produced by the streaming engine
     * itself, not a batch twin. Deterministic because the leaderboard
     * fold is order-insensitive (value DESC, event_id ASC total order)
     * regardless of how the source splits micro-batches.
     */
-  /** The file stream source tails a DIRECTORY; stage the fixture file
-    * into one, once per (session, dataset).
-    */
-  private def stagedEventsDir(spark: SparkSession, dir: String): String = {
-    val src = java.nio.file.Paths.get(s"$dir/events.parquet")
-    graft.IndexCache.getOrBuild(spark, "events-stream-dir", dir) {
-      if (java.nio.file.Files.isDirectory(src)) src.toString
-      else {
-        val d = java.nio.file.Files.createTempDirectory("graft-events-stream")
-        java.nio.file.Files.copy(src, d.resolve("events.parquet"))
-        d.toString
-      }
-    }
-  }
-
   def topAmountsStreamed(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     import spark.implicits._
-    val staged = stagedEventsDir(spark, dir)
-    val name = s"graft_topk_stream_${streamRunSeq.incrementAndGet()}"
-    withStreamPartitions(spark, 4, noData = false) {
-      val q = streamTopKAmounts(
-          readEventsStreamConfigured(spark, staged)
-            .select(col("event_id"), col("ts"), col("user_id"),
-              col("event_type"), col("value"))
-            .as[Ev], k)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation",
-          ckptDir("graft-ckpt-topk-q"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val out = spark.table(name)
-      .withColumn("mx", max(col("upd")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("event_type"))))
-      .filter(col("upd") === col("mx"))
-      .select(col("event_type"), col("event_id"), col("value"), col("rk"))
-    // bind the sink relation into the plan, then drop the catalog entry
-    // so repeated invocations don't accumulate driver-resident tables
-    out.queryExecution.assertAnalyzed()
-    spark.catalog.dropTempView(name)
-    out
+    val staged = OneShot.stageFixture(spark, dir, "events.parquet")
+    OneShot.memorySink(spark, "topk", "update", noData = false)(
+      streamTopKAmounts(
+        readEventsStreamConfigured(spark, staged)
+          .select(col("event_id"), col("ts"), col("user_id"),
+            col("event_type"), col("value"))
+          .as[Ev], k).toDF())(
+      _.withColumn("mx", max(col("upd")).over(
+          org.apache.spark.sql.expressions.Window.partitionBy(col("event_type"))))
+        .filter(col("upd") === col("mx"))
+        .select(col("event_type"), col("event_id"), col("value"), col("rk")))
   }
 
   /** The declared STREAMING-EXECUTED tumbling aggregation (shares
     * `events_tumbling`'s oracle): the fixture events flow through the
     * file stream source -> the SAME [[EventOps.windowedAgg]] plan the
-    * batch row uses (plus a watermark) -> a complete-mode memory sink
-    * under `Trigger.AvailableNow`. Complete mode re-emits the whole
+    * batch row uses (plus a watermark) -> a complete-mode one-shot
+    * memory sink. Complete mode re-emits the whole
     * standing result each micro-batch, so the sink table after the last
     * batch IS the full aggregation — the stateless-window sibling of
     * [[topAmountsStreamed]]'s keyed-state row.
     */
   def tumblingStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stagedEventsDir(spark, dir)
-    val name = s"graft_tumbling_stream_${streamRunSeq.incrementAndGet()}"
-    withStreamPartitions(spark, 4, noData = false) {
-      val q = windowedAgg(readEventsStreamConfigured(spark, staged), "10 minutes", None)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation",
-          ckptDir("graft-ckpt-tumbling-q"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val out = spark.table(name)
-    out.queryExecution.assertAnalyzed()
-    spark.catalog.dropTempView(name)
-    out
+    val staged = OneShot.stageFixture(spark, dir, "events.parquet")
+    OneShot.memorySink(spark, "tumbling", "complete", noData = false)(
+      windowedAgg(readEventsStreamConfigured(spark, staged), "10 minutes", None))(
+      identity)
   }
 
   /** The declared STREAMING-EXECUTED KMV distinct sketch
@@ -315,35 +192,25 @@ object EventStream {
     */
   def sketchUsersStreamed(spark: SparkSession, dir: String,
       k: Int = 256): DataFrame = {
-    val staged = stagedEventsDir(spark, dir)
-    val name = s"graft_kmv_stream_${streamRunSeq.incrementAndGet()}"
+    val staged = OneShot.stageFixture(spark, dir, "events.parquet")
     val kmv = org.apache.spark.sql.functions.udaf(
       graft.functions.KmvDistinct(k))
-    withStreamPartitions(spark, 4, noData = false) {
-      val q = readEventsStreamConfigured(spark, staged)
+    OneShot.memorySink(spark, "kmv", "complete", noData = false)(
+      readEventsStreamConfigured(spark, staged)
         .select(col("event_type"),
           graft.operators.TextOps.polyHash(col("user_id").cast("string"))
             .as("h"))
         .groupBy(col("event_type"))
-        .agg(round(kmv(col("h")), 6).as("kmv_estimate"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckptDir("graft-ckpt-kmv-q"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .agg(round(kmv(col("h")), 6).as("kmv_estimate"))) { sink =>
+      val exact = graft.Tables.events(spark, dir)
+        .select(col("event_type"),
+          graft.operators.TextOps.polyHash(col("user_id").cast("string"))
+            .as("h"))
+        .groupBy(col("event_type"))
+        .agg(countDistinct(col("h")).as("exact_distinct"))
+      sink.join(exact, "event_type")
+        .select(col("event_type"), col("kmv_estimate"), col("exact_distinct"))
     }
-    val exact = graft.Tables.events(spark, dir)
-      .select(col("event_type"),
-        graft.operators.TextOps.polyHash(col("user_id").cast("string"))
-          .as("h"))
-      .groupBy(col("event_type"))
-      .agg(countDistinct(col("h")).as("exact_distinct"))
-    val out = spark.table(name).join(exact, "event_type")
-      .select(col("event_type"), col("kmv_estimate"), col("exact_distinct"))
-    out.queryExecution.assertAnalyzed()
-    spark.catalog.dropTempView(name)
-    out
   }
 
   /** The declared STREAMING-EXECUTED Count-Min heavy hitters
@@ -361,32 +228,24 @@ object EventStream {
   def cmsHeavyHittersStreamed(spark: SparkSession, dir: String,
       depth: Int = 4, width: Int = 32768, topK: Int = 10): DataFrame = {
     import spark.implicits._
-    val staged = stagedEventsDir(spark, dir)
-    val name = s"graft_cms_stream_${streamRunSeq.incrementAndGet()}"
+    val staged = OneShot.stageFixture(spark, dir, "events.parquet")
     val cms = graft.functions.CountMin(depth, width)
     val cmsUdaf = org.apache.spark.sql.functions.udaf(cms)
-    withStreamPartitions(spark, 4, noData = false) {
-      val q = readEventsStreamConfigured(spark, staged)
+    OneShot.memorySink(spark, "cms", "complete", noData = false)(
+      readEventsStreamConfigured(spark, staged)
         .select(col("user_id").cast("long").as("k"))
-        .agg(cmsUdaf(col("k")).as("sk"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckptDir("graft-ckpt-cms-q"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .agg(cmsUdaf(col("k")).as("sk"))) { sink =>
+      val bc = spark.sparkContext.broadcast(
+        sink.head().getSeq[Long](0).toArray)
+      graft.Tables.events(spark, dir)
+        .select(col("user_id").cast("long").as("k"))
+        .groupBy(col("k")).agg(count(lit(1)).as("exact_count"))
+        .as[(Long, Long)]
+        .map { case (k, c) => (k, cms.estimate(bc.value, k), c) }
+        .toDF("user_id", "cms_estimate", "exact_count")
+        .orderBy(col("cms_estimate").desc, col("user_id"))
+        .limit(topK)
     }
-    val sketch = spark.table(name).head().getSeq[Long](0).toArray
-    spark.catalog.dropTempView(name)
-    val bc = spark.sparkContext.broadcast(sketch)
-    graft.Tables.events(spark, dir)
-      .select(col("user_id").cast("long").as("k"))
-      .groupBy(col("k")).agg(count(lit(1)).as("exact_count"))
-      .as[(Long, Long)]
-      .map { case (k, c) => (k, cms.estimate(bc.value, k), c) }
-      .toDF("user_id", "cms_estimate", "exact_count")
-      .orderBy(col("cms_estimate").desc, col("user_id"))
-      .limit(topK)
   }
 
   /** The declared STREAMING-EXECUTED stream–static enrichment
@@ -402,48 +261,22 @@ object EventStream {
     */
   def enrichedStreamed(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.ExactNum.cents
-    val staged = stagedEventsDir(spark, dir)
+    val staged = OneShot.stageFixture(spark, dir, "events.parquet")
     val cohorts = graft.Tables.events(spark, dir)
       .groupBy(col("user_id"))
       .agg(date_format(min(to_date(col("ts"))), "yyyy-MM-dd").as("cohort"))
-    val name = s"graft_enriched_stream_${streamRunSeq.incrementAndGet()}"
-    withStreamPartitions(spark, 4, noData = false) {
-      val q = readEventsStreamConfigured(spark, staged)
+    OneShot.memorySink(spark, "enriched", "complete", noData = false)(
+      readEventsStreamConfigured(spark, staged)
         .join(broadcast(cohorts), "user_id")
         .groupBy(col("cohort"))
         .agg(count(lit(1)).as("n"),
-          (sum(cents(col("value"))) / 100.0).as("sum_value"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation",
-          ckptDir("graft-ckpt-enrich-q"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val out = spark.table(name)
-    out.queryExecution.assertAnalyzed()
-    spark.catalog.dropTempView(name)
-    out
+          (sum(cents(col("value"))) / 100.0).as("sum_value")))(identity)
   }
 
-  /** Stage the fixture TWICE (two identical files) so the stream
-    * delivers every event as a genuine duplicate pair — the declared
-    * dedup row must actually drop rows, not pass a unique-key fixture
-    * through untouched.
-    */
-  private def stagedDupEventsDir(spark: SparkSession, dir: String): String =
-    graft.IndexCache.getOrBuild(spark, "events-stream-dup-dir", dir) {
-      val src = java.nio.file.Paths.get(s"$dir/events.parquet")
-      val d = java.nio.file.Files.createTempDirectory("graft-events-dup")
-      java.nio.file.Files.copy(src, d.resolve("events.parquet"))
-      java.nio.file.Files.copy(src, d.resolve("events_dup.parquet"))
-      d.toString
-    }
-
   /** The declared STREAMING-EXECUTED exact dedup (oracle: the events
-    * table itself): every fixture event arrives twice through the file
-    * stream source; [[dedupEvents]]' watermarked
+    * table itself): the fixture is staged twice, so every event arrives
+    * as a genuine duplicate pair through the file stream source and the
+    * row must actually drop rows; [[dedupEvents]]' watermarked
     * `dropDuplicatesWithinWatermark` state emits each event_id's first
     * occurrence and drops the re-delivery — so the sink holding exactly
     * one copy of every event is the streaming engine's dedup state
@@ -451,24 +284,11 @@ object EventStream {
     * ingest pattern).
     */
   def dedupStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stagedDupEventsDir(spark, dir)
-    val name = s"graft_dedup_stream_${streamRunSeq.incrementAndGet()}"
-    withStreamPartitions(spark, 4, noData = false) {
-      val q = dedupEvents(readEventsStreamConfigured(spark, staged))
+    val staged = OneShot.stageFixture(spark, dir, "events.parquet", twice = true)
+    OneShot.memorySink(spark, "dedup", "append", noData = false)(
+      dedupEvents(readEventsStreamConfigured(spark, staged))
         .select(col("event_id"), col("user_id"), col("event_type"),
-          col("value"), unix_micros(col("ts")).as("ts_us"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation",
-          ckptDir("graft-ckpt-dedup-q"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val out = spark.table(name)
-    out.queryExecution.assertAnalyzed()
-    spark.catalog.dropTempView(name)
-    out
+          col("value"), unix_micros(col("ts")).as("ts_us")))(identity)
   }
 
   /** Stream-stream interval self-join: every 'error' event joined to the
@@ -502,33 +322,19 @@ object EventStream {
     * through the file stream source into BOTH sides of
     * [[streamErrorClickWithin]] — two watermarked filtered projections
     * of one stream, joined on user_id with an event-time range
-    * condition — and matches land in an append-mode memory sink under
-    * `Trigger.AvailableNow`. The rows the driver hashes were emitted by
-    * the streaming engine's symmetric-hash join state (the fourth
-    * stateful-operator family under the gate, after keyed state,
-    * windowed aggregation, and dedup state). Inner joins emit eagerly
+    * condition — and matches land in an append-mode one-shot memory
+    * sink. The rows the driver hashes were emitted by the streaming
+    * engine's symmetric-hash join state. Inner joins emit eagerly
     * on match, so the sink holds exactly the batch answer once the
     * source drains.
     */
   def intervalJoinStreamed(spark: SparkSession, dir: String,
       withinMinutes: Int = 30): DataFrame = {
-    val staged = stagedEventsDir(spark, dir)
-    val name = s"graft_ivj_stream_${streamRunSeq.incrementAndGet()}"
-    withStreamPartitions(spark, 4, noData = false) {
-      val q = streamErrorClickWithin(
-          readEventsStreamConfigured(spark, staged), withinMinutes, watermark = "1 hour")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation",
-          ckptDir("graft-ckpt-ivj-q"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val out = spark.table(name)
-    out.queryExecution.assertAnalyzed()
-    spark.catalog.dropTempView(name)
-    out
+    val staged = OneShot.stageFixture(spark, dir, "events.parquet")
+    OneShot.memorySink(spark, "ivj", "append", noData = false)(
+      streamErrorClickWithin(
+        readEventsStreamConfigured(spark, staged), withinMinutes,
+        watermark = "1 hour"))(identity)
   }
 
   /** [[streamErrorClickWithin]] as a LEFT OUTER stream-stream join:
@@ -584,7 +390,7 @@ object EventStream {
       sentinels: Long => Seq[(Long, Long, Long, String, Double, String)])
       : String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory(prefix)
+    val d = java.nio.file.Paths.get(OneShot.tempDir(prefix))
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"), col("props"))
@@ -607,7 +413,7 @@ object EventStream {
     * streaming engine, not file staging.
     */
   def prestageSources(spark: SparkSession, dir: String): Unit = {
-    stagedEventsDir(spark, dir)
+    OneShot.stageFixture(spark, dir, "events.parquet")
     stagedOuterEventsDir(spark, dir)
     ()
   }
@@ -617,29 +423,16 @@ object EventStream {
     * [[intervalJoinStreamed]], but unmatched errors surface null-padded
     * from the join STATE STORE when the (sentinel-driven) watermark
     * passes their horizon — outer-eviction semantics themselves sit
-    * under the driver's hash gate, the fifth stateful-operator family
-    * after keyed state, windowed aggregation, dedup state, and the
-    * symmetric-hash inner join.
+    * under the driver's hash gate.
     */
   def intervalOuterStreamed(spark: SparkSession, dir: String,
       withinMinutes: Int = 30): DataFrame = {
     val staged = stagedOuterEventsDir(spark, dir)
-    val name = s"graft_ivo_stream_${streamRunSeq.incrementAndGet()}"
-    withStreamPartitions(spark, 4) {
-      val q = streamErrorClickLeftOuter(
-          readEventsStreamConfigured(spark, staged), withinMinutes, watermark = "1 hour")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation",
-          ckptDir("graft-ckpt-ivo-q"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val out = spark.table(name).filter(col("user_id") >= 0)
-    out.queryExecution.assertAnalyzed()
-    spark.catalog.dropTempView(name)
-    out
+    OneShot.memorySink(spark, "ivo", "append", noData = true)(
+      streamErrorClickLeftOuter(
+        readEventsStreamConfigured(spark, staged), withinMinutes,
+        watermark = "1 hour"))(
+      _.filter(col("user_id") >= 0))
   }
 
   /** [[streamErrorClickWithin]] as a FULL OUTER stream-stream join —
@@ -679,23 +472,11 @@ object EventStream {
   def intervalFullStreamed(spark: SparkSession, dir: String,
       withinMinutes: Int = 30): DataFrame = {
     val staged = stagedOuterEventsDir(spark, dir)
-    val name = s"graft_ivf_stream_${streamRunSeq.incrementAndGet()}"
-    withStreamPartitions(spark, 4) {
-      val q = streamErrorClickFullOuter(
-          readEventsStreamConfigured(spark, staged), withinMinutes,
-          watermark = "1 hour")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation",
-          ckptDir("graft-ckpt-ivf-q"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val out = spark.table(name).filter(col("user_id") >= 0)
-    out.queryExecution.assertAnalyzed()
-    spark.catalog.dropTempView(name)
-    out
+    OneShot.memorySink(spark, "ivf", "append", noData = true)(
+      streamErrorClickFullOuter(
+        readEventsStreamConfigured(spark, staged), withinMinutes,
+        watermark = "1 hour"))(
+      _.filter(col("user_id") >= 0))
   }
 
   /** Streaming exact dedup: duplicate event_ids arriving within the
@@ -749,27 +530,15 @@ object EventStream {
     * maintained by the streaming engine's global aggregation state in
     * complete mode — the sink table after the last micro-batch IS the
     * exact check sheet (commutative integer sums: any batch split
-    * yields identical counts). The FIFTEENTH streaming-executed row:
-    * a data-quality release gate running as a live monitor.
+    * yields identical counts): a data-quality release gate running as
+    * a live monitor.
     */
   def expectationsStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stagedEventsDir(spark, dir)
-    val name = s"graft_expect_stream_${streamRunSeq.incrementAndGet()}"
-    withStreamPartitions(spark, 4, noData = false) {
-      val q = eventsExpectations(readEventsStreamConfigured(spark, staged))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckptDir("graft-ckpt-expect-q"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val out = spark.table(name)
-      .select(col("check"), col("n_checked"), col("n_violations"),
-        col("passed"))
-    out.queryExecution.assertAnalyzed()
-    spark.catalog.dropTempView(name)
-    out
+    val staged = OneShot.stageFixture(spark, dir, "events.parquet")
+    OneShot.memorySink(spark, "expect", "complete", noData = false)(
+      eventsExpectations(readEventsStreamConfigured(spark, staged)))(
+      _.select(col("check"), col("n_checked"), col("n_violations"),
+        col("passed")))
   }
 
   /** The declared STREAMING-EXECUTED mSPRT always-valid monitor
@@ -785,44 +554,21 @@ object EventStream {
     * experimentation dashboard consumes it: the stream keeps the
     * moments current; every look recomputes the always-valid p from
     * them, and the peeking guarantee is the statistic's, not the
-    * scheduler's. The NINETEENTH streaming-executed row, composing the
-    * experimentation suite with the streaming engine.
+    * scheduler's.
     */
   def msprtMonitorStreamed(spark: SparkSession, dir: String,
       tau2: Double = 100.0): DataFrame = {
-    val staged = stagedEventsDir(spark, dir)
-    val name = s"graft_msprt_stream_${streamRunSeq.incrementAndGet()}"
-    withStreamPartitions(spark, 4, noData = false) {
-      val q = graft.operators.EventOps
-        .msprtDaily(readEventsStreamConfigured(spark, staged))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckptDir("graft-ckpt-msprt-q"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      recordCompleteStateRows("msprt", q)
-    }
-    val out = graft.operators.EventOps.msprtChain(spark.table(name), tau2)
-    out.queryExecution.assertAnalyzed()
-    spark.catalog.dropTempView(name)
-    out
+    val staged = OneShot.stageFixture(spark, dir, "events.parquet")
+    OneShot.memorySink(spark, "msprt", "complete", noData = false)(
+      graft.operators.EventOps
+        .msprtDaily(readEventsStreamConfigured(spark, staged)))(
+      graft.operators.EventOps.msprtChain(_, tau2))
   }
 
-  /** State-store row counts of the complete-mode monitors' last run,
-    * keyed by monitor tag — recorded so EventStreamSpec can PIN the
-    * design claim that their state is rollup-bounded (|days| /
-    * |days|×bins rows of integer moments), never |events|-proportional.
+  /** [[OneShot.lastCompleteStateRows]], where EventStreamSpec reads the
+    * monitors' state-store row counts.
     */
-  private[graft] val lastCompleteStateRows =
-    new java.util.concurrent.ConcurrentHashMap[String, Long]()
-
-  private def recordCompleteStateRows(tag: String,
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val p = q.lastProgress
-    if (p != null && p.stateOperators != null)
-      lastCompleteStateRows.put(tag, p.stateOperators.map(_.numRowsTotal).sum)
-  }
+  private[graft] def lastCompleteStateRows = OneShot.lastCompleteStateRows
 
   /** The declared STREAMING-EXECUTED day-over-day PSI drift monitor
     * (`stats_psi_drift_streamed`, shares the batch row's oracle): the
@@ -834,30 +580,17 @@ object EventStream {
     * sum run batch-side on the drained state, which is how a drift
     * dashboard consumes it: the stream keeps the histogram cells
     * current, every look recomputes the day-over-day index from them.
-    * The TWENTIETH streaming-executed row.
     */
   def psiDriftStreamed(spark: SparkSession, dir: String,
       bins: Int = 10): DataFrame = {
-    val staged = stagedEventsDir(spark, dir)
-    val name = s"graft_psidrift_stream_${streamRunSeq.incrementAndGet()}"
-    withStreamPartitions(spark, 4, noData = false) {
-      val q = graft.operators.Stats
-        .psiDailyCells(readEventsStreamConfigured(spark, staged), bins)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckptDir("graft-ckpt-psidrift-q"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      recordCompleteStateRows("psidrift", q)
-    }
-    // localCheckpoint like the batch wrapper: the chain self-joins the
-    // cell relation, so both sides need fresh attribute ids
-    val out = graft.operators.Stats.psiDriftChain(
-      spark.table(name).localCheckpoint(true), bins)
-    out.queryExecution.assertAnalyzed()
-    spark.catalog.dropTempView(name)
-    out
+    val staged = OneShot.stageFixture(spark, dir, "events.parquet")
+    OneShot.memorySink(spark, "psidrift", "complete", noData = false)(
+      graft.operators.Stats
+        .psiDailyCells(readEventsStreamConfigured(spark, staged), bins))(
+      // localCheckpoint like the batch wrapper: the chain self-joins the
+      // cell relation, so both sides need fresh attribute ids
+      cells => graft.operators.Stats.psiDriftChain(
+        cells.localCheckpoint(true), bins))
   }
 
   /** File-source streaming read over a DIRECTORY of events parquet files
@@ -1005,40 +738,25 @@ object EventStream {
     * `events_sessions_native`'s oracle): the fixture events plus the
     * watermark sentinel flow through the file stream source -> the SAME
     * native session_window aggregation the batch row uses
-    * ([[sessionWindowAgg]]) -> an append-mode memory sink under
-    * `Trigger.AvailableNow`. Sessions merge in keyed state and emit
-    * exactly once when the watermark passes their end — so every row
-    * the driver hashes was produced by the streaming engine's stateful
-    * session operator, the strongest of the three streamed rows (topk =
-    * custom keyed state, tumbling = stateless windows re-emitted in
-    * complete mode, sessions = watermark-driven append-mode state
-    * eviction).
+    * ([[sessionWindowAgg]]) -> an append-mode one-shot memory sink.
+    * Sessions merge in keyed state and emit exactly once when the
+    * watermark passes their end — so every row the driver hashes was
+    * produced by the streaming engine's watermark-driven append-mode
+    * state eviction.
     */
   def sessionsNativeStreamed(spark: SparkSession, dir: String): DataFrame = {
     val staged = stagedSessionsDir(spark, dir)
-    val name = s"graft_sessions_stream_${streamRunSeq.incrementAndGet()}"
     // NOTE: the sentinel must be excluded AFTER the sink, not here — a
     // `user_id != -1` filter on the streaming frame is a grouping-key
     // predicate, so Catalyst pushes it below the aggregation AND the
     // watermark operator, and the watermark never sees the sentinel
     // (observed: the final ~90 min of real sessions never emit)
-    withStreamPartitions(spark, 4) {
-      val q = sessionWindowAgg(readEventsStreamConfigured(spark, staged), "30 minutes")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation",
-          ckptDir("graft-ckpt-sess-q"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    // the sentinel's own session never closes (no event after it), so
-    // it can't appear in the sink — the filter is belt-and-braces, and
-    // safe here because the sink table is a BATCH relation
-    val out = spark.table(name).filter(col("user_id") =!= -1L)
-    out.queryExecution.assertAnalyzed()
-    spark.catalog.dropTempView(name)
-    out
+    OneShot.memorySink(spark, "sessions", "append", noData = true)(
+      sessionWindowAgg(readEventsStreamConfigured(spark, staged), "30 minutes"))(
+      // the sentinel's own session never closes (no event after it), so
+      // it can't appear in the sink — the filter is belt-and-braces, and
+      // safe here because the sink table is a BATCH relation
+      _.filter(col("user_id") =!= -1L))
   }
 
   /** Accumulated per-user history for the streaming EWMA fold. */
@@ -1104,33 +822,20 @@ object EventStream {
     * `events_ewma`'s oracle): fixture events + the watermark sentinel
     * flow through the file stream source into [[ewmaStream]]'s keyed
     * state; each user's history folds exactly once, when the
-    * sentinel-driven watermark fires its event-time timeout — the
-    * EIGHTH streaming-executed row, and the first whose state carries
-    * an order-sensitive fold.
+    * sentinel-driven watermark fires its event-time timeout, so the
+    * state carries an order-sensitive fold.
     */
   def ewmaStreamed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val staged = stagedSessionsDir(spark, dir)
-    val name = s"graft_ewma_stream_${streamRunSeq.incrementAndGet()}"
-    withStreamPartitions(spark, 4) {
-      val q = ewmaStream(
-          readEventsStreamConfigured(spark, staged)
-            .select(col("event_id"), col("ts"), col("user_id"),
-              col("event_type"), col("value"))
-            .as[Ev])
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation",
-          ckptDir("graft-ckpt-ewma-q"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val out = spark.table(name).filter(col("user_id") =!= -1L)
-      .select(col("user_id"), col("n"), round(col("ewma"), 6).as("ewma"))
-    out.queryExecution.assertAnalyzed()
-    spark.catalog.dropTempView(name)
-    out
+    OneShot.memorySink(spark, "ewma", "append", noData = true)(
+      ewmaStream(
+        readEventsStreamConfigured(spark, staged)
+          .select(col("event_id"), col("ts"), col("user_id"),
+            col("event_type"), col("value"))
+          .as[Ev]).toDF())(
+      _.filter(col("user_id") =!= -1L)
+        .select(col("user_id"), col("n"), round(col("ewma"), 6).as("ewma")))
   }
 
   case class AttState(firstT: String, lastT: String, maxUs: Long,
@@ -1230,28 +935,16 @@ object EventStream {
   def attributionStreamed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val staged = stagedSessionsDir(spark, dir)
-    val name = s"graft_attribution_stream_${streamRunSeq.incrementAndGet()}"
-    withStreamPartitions(spark, 4) {
-      val q = attributionStream(
-          readEventsStreamConfigured(spark, staged)
-            .select(col("event_id"), col("ts"), col("user_id"),
-              col("event_type"), col("value"))
-            .as[Ev])
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation",
-          ckptDir("graft-ckpt-attribution-q"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val out = spark.table(name).filter(col("user_id") =!= -1L)
-      .groupBy(col("model"), col("channel"))
-      .agg(count(lit(1)).as("n_conversions"),
-        sum(col("c")).as("revenue_cents"))
-    out.queryExecution.assertAnalyzed()
-    spark.catalog.dropTempView(name)
-    out
+    OneShot.memorySink(spark, "attribution", "append", noData = true)(
+      attributionStream(
+        readEventsStreamConfigured(spark, staged)
+          .select(col("event_id"), col("ts"), col("user_id"),
+            col("event_type"), col("value"))
+          .as[Ev]).toDF())(
+      _.filter(col("user_id") =!= -1L)
+        .groupBy(col("model"), col("channel"))
+        .agg(count(lit(1)).as("n_conversions"),
+          sum(col("c")).as("revenue_cents")))
   }
 
   /** Watermarked streaming sessionization via the NATIVE session_window

@@ -31,14 +31,6 @@ object VectorStream {
     StructField("embedding", ArrayType(FloatType)),
     StructField("label", IntegerType)))
 
-  /** Result-sink root for a foreachBatch-written serving stream,
-    * registered for JVM-exit deletion (the returned DataFrame reads it
-    * lazily, so eager deletion is impossible).
-    */
-  private def resultDir(prefix: String): String =
-    EventStream.cleanupOnExit(
-      java.nio.file.Files.createTempDirectory(prefix)).toString
-
   /** foreachBatch is AT-LEAST-ONCE: a retried micro-batch (task or
     * stage failure after a partial/complete write) re-runs the whole
     * batch function. Blind `mode("append")` would then duplicate
@@ -69,21 +61,6 @@ object VectorStream {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
-  /** The file stream source tails a DIRECTORY; stage the fixture file
-    * into one, once per (session, dataset).
-    */
-  private def stagedEmbeddingsDir(spark: SparkSession, dir: String): String = {
-    val src = java.nio.file.Paths.get(s"$dir/embeddings.parquet")
-    graft.IndexCache.getOrBuild(spark, "embeddings-stream-dir", dir) {
-      if (java.nio.file.Files.isDirectory(src)) src.toString
-      else {
-        val d = java.nio.file.Files.createTempDirectory("graft-emb-stream")
-        java.nio.file.Files.copy(src, d.resolve("embeddings.parquet"))
-        d.toString
-      }
-    }
-  }
-
   /** Streamed [[ExactKnn.rangeSearch]] (shares `knn_range_search`'s
     * oracle): held-out query vectors flow through the file stream
     * source and each micro-batch runs the BATCH range scan inside
@@ -104,15 +81,15 @@ object VectorStream {
     */
   def rangeSearchStreamed(spark: SparkSession, dir: String,
       radius: Double = 0.7, nq: Int = 20): DataFrame = {
-    val staged = stagedEmbeddingsDir(spark, dir)
+    val staged = OneShot.stageFixture(spark, dir, "embeddings.parquet")
     val (base, _, splitAt, _) = ExactKnn.split(spark, dir)
     val b = base.select(col("vec_id"), col("emb"))
-    val outDir = resultDir("graft-range-serve")
+    val outDir = OneShot.tempDir("graft-range-serve")
     val outSchema = StructType(Seq(
       StructField("qid", LongType), StructField("vec_id", LongType),
       StructField("dist", DoubleType)))
-    EventStream.withStreamPartitions(spark, 4, noData = false) {
-      val q = spark.readStream.schema(embSchema).parquet(staged)
+    OneShot.foreachBatch(spark, OneShot.ckptDir("graft-ckpt-knn-q"),
+      spark.readStream.schema(embSchema).parquet(staged)
         .filter(col("vec_id") >= splitAt && col("vec_id") < splitAt + nq)
         .select(col("vec_id").as("qid"),
           graft.functions.VectorFunctions.toDoubleArray(col("embedding"))
@@ -127,12 +104,7 @@ object VectorStream {
               .filter(col("dist") <= radius),
             outDir, batchId)
           ()
-        }
-        .option("checkpointLocation", EventStream.ckptDir("graft-ckpt-knn-q"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+        })
     readResultSink(spark, outDir, outSchema)
       .select(col("qid"), col("vec_id"), col("dist"))
   }
@@ -169,16 +141,16 @@ object VectorStream {
     */
   def hnswTopKStreamed(spark: SparkSession, dir: String, k: Int = 10,
       ef: Int = 100, shards: Int = 16): DataFrame = {
-    val staged = stagedEmbeddingsDir(spark, dir)
+    val staged = OneShot.stageFixture(spark, dir, "embeddings.parquet")
     val (_, _, splitAt, _) = graft.knn.ExactKnn.split(spark, dir)
     // same memo as the batch path: one build serves both
     val index = graft.knn.HnswKnn.memoIndex(spark, dir, shards)
-    val outDir = resultDir("graft-hnsw-serve")
+    val outDir = OneShot.tempDir("graft-hnsw-serve")
     val outSchema = StructType(Seq(
       StructField("qid", LongType), StructField("vec_id", LongType),
       StructField("dist", DoubleType), StructField("rk", IntegerType)))
-    EventStream.withStreamPartitions(spark, 4, noData = false) {
-      val q = spark.readStream.schema(embSchema).parquet(staged)
+    OneShot.foreachBatch(spark, OneShot.ckptDir("graft-ckpt-hnswq"),
+      spark.readStream.schema(embSchema).parquet(staged)
         .filter(col("vec_id") >= splitAt)
         .select(col("vec_id"),
           graft.functions.VectorFunctions.toDoubleArray(col("embedding"))
@@ -192,12 +164,7 @@ object VectorStream {
             outDir, batchId)
           scatterGatherBatches.incrementAndGet()
           ()
-        }
-        .option("checkpointLocation", EventStream.ckptDir("graft-ckpt-hnswq"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+        })
     readResultSink(spark, outDir, outSchema)
       .select(col("qid"), col("vec_id"), col("dist"), col("rk"))
   }
@@ -226,13 +193,12 @@ object VectorStream {
   def kmeansAssignStreamed(spark: SparkSession, dir: String, k: Int = 8,
       iters: Int = 3, q: Long = 1000000L): DataFrame = {
     import spark.implicits._
-    val staged = stagedEmbeddingsDir(spark, dir)
+    val staged = OneShot.stageFixture(spark, dir, "embeddings.parquet")
     val cents = graft.operators.EmbeddingStats.kmeansCentroids(
       spark, dir, k, iters, q)
     val bc = spark.sparkContext.broadcast(cents)
-    val name = s"graft_kmeans_stream_${EventStream.streamRunSeq.incrementAndGet()}"
-    EventStream.withStreamPartitions(spark, 4, noData = false) {
-      val assigned = spark.readStream.schema(embSchema).parquet(staged)
+    OneShot.memorySink(spark, "kmeans", "append", noData = false)(
+      spark.readStream.schema(embSchema).parquet(staged)
         .select(col("vec_id"),
           transform(col("embedding").cast("array<double>"),
             x => round(x * q, 0).cast("long")).as("qv"))
@@ -241,17 +207,7 @@ object VectorStream {
           val (c, d2) = graft.operators.EmbeddingStats.nearest(bc.value, v)
           (id, c, d2)
         }
-        .toDF("vec_id", "cid", "d2")
-      val sq = assigned.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", EventStream.ckptDir("graft-ckpt-kmeans"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-    }
-    val out = spark.table(name).select(col("vec_id"), col("cid"), col("d2"))
-    out.queryExecution.assertAnalyzed()
-    spark.catalog.dropTempView(name)
-    out
+        .toDF("vec_id", "cid", "d2"))(
+      _.select(col("vec_id"), col("cid"), col("d2")))
   }
 }
