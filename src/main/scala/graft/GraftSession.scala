@@ -9,9 +9,9 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   /** A `local[cpus]` session with `cpus` shuffle partitions, UTC
-    * timestamps, no UI, WARN logging and a temp warehouse, so managed
-    * tables (the bucketed-layout rows) never land in the working
-    * directory.
+    * timestamps, no UI, WARN logging and a temp warehouse (deleted at
+    * JVM exit), so managed tables (the bucketed-layout rows) never land
+    * in the working directory.
     */
   def local(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
@@ -20,7 +20,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+        graft.streaming.OneShot.tempDir("graft-warehouse"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -574,80 +574,24 @@ object Dedup {
   /** Near-dup CLUSTER assignment: every doc mapped to the minimum
     * doc_id of its connected component in the jaccard>=threshold pair
     * graph (the "keep one representative per near-dup cluster" step of
-    * a dedup pipeline). Min-label propagation to convergence — each
-    * iteration is one join+agg on the (tiny) edge set, so the loop is
-    * bounded by the component diameter, not the corpus size.
+    * a dedup pipeline). The thresholded pair graph is orders of
+    * magnitude smaller than the corpus, so [[GraphOps.componentLabels]]
+    * labels it on the driver and broadcast-joins the labels onto every
+    * doc; docs in no pair are their own representative.
     */
   def nearDupClusters(spark: SparkSession, dir: String,
-      threshold: Double = 0.8, maxIters: Int = 20): DataFrame =
+      threshold: Double = 0.8): DataFrame =
     // label relation memoized per (dataset, threshold): dedup_clusters
-    // and dedup_keep_best both consume it, and the union-find/
-    // propagation pass is deterministic — one build, many readers
-    // (charged to bench_build_clusters)
+    // and dedup_keep_best both consume it, and the labeling is
+    // deterministic — one build, many readers (charged to
+    // bench_build_clusters)
     graft.IndexCache.persisted(spark, "clusters", dir, threshold) {
-      computeNearDupClusters(spark, dir, threshold, maxIters)
+      GraphOps.componentLabels(
+          ngramJaccardPairs(spark, dir, threshold)
+            .select(col("doc_a"), col("doc_b")),
+          Some(Tables.documents(spark, dir).select(col("doc_id"))))
+        .withColumnRenamed("component", "rep_id")
     }
-
-  private def computeNearDupClusters(spark: SparkSession, dir: String,
-      threshold: Double, maxIters: Int): DataFrame = {
-    import spark.implicits._
-    // propagate only over vertices that have at least one edge — every
-    // other doc is trivially its own representative and joins back in at
-    // the end, so iteration cost tracks the (small) near-dup subgraph,
-    // not the corpus.
-    val pairs = ngramJaccardPairs(spark, dir, threshold)
-      .select(col("doc_a"), col("doc_b")).as[(Long, Long)]
-    // The thresholded near-dup edge set is orders of magnitude smaller
-    // than the corpus (it only has one row per SURVIVING pair). When it
-    // fits comfortably on the driver, path-compressed union-find beats
-    // any distributed loop: zero scheduled stages per iteration vs
-    // ~4 stages/round for label propagation. 10M edges = 160 MB — cheap
-    // against a driver sized for a 1000-executor cluster; beyond that,
-    // fall through to the distributed loop below.
-    val edgeCount = pairs.count()
-    if (edgeCount <= 10_000_000L) {
-      val labels = unionFindReps(pairs.collect()).toDF("doc_id", "rep0")
-      return Tables.documents(spark, dir).select(col("doc_id"))
-        .join(broadcast(labels), Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("rep0"), col("doc_id")).as("rep_id"))
-    }
-    // Distributed min-label propagation on co-partitioned RDDs (the
-    // GraphX pattern): the per-round plan is fixed, so nothing is
-    // re-analyzed or re-codegen'd each iteration, edges⋈labels is a
-    // narrow join, and the only shuffle per round is the reduceByKey.
-    val part = new org.apache.spark.HashPartitioner(
-      math.min(spark.sparkContext.defaultParallelism, 32))
-    // (labelProvider, labelReceiver) in both directions
-    val edges = pairs.rdd
-      .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-      .partitionBy(part).cache()
-    var labels = edges.keys.map(v => (v, v))
-      .reduceByKey(part, (a, _) => a).cache()
-    // min-propagation is monotone (labels only ever decrease), so an
-    // unchanged sum(rep) witnesses convergence — a scalar fold per round
-    // instead of a pairing join against the previous labels. MinValue
-    // sentinel: round 1 always runs, no action spent on the initial sum.
-    var prevSum = Long.MinValue
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      val msgs = edges.join(labels)
-        .map { case (_, (recv, rep)) => (recv, rep) }
-      val next = msgs.union(labels)
-        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b)).cache()
-      val s = next.values.fold(0L)(_ + _)
-      converged = s == prevSum
-      prevSum = s
-      labels.unpersist(blocking = false)
-      labels = next
-      i += 1
-    }
-    val out = Tables.documents(spark, dir).select(col("doc_id"))
-      .join(labels.toDF("doc_id", "rep0"), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("rep0"), col("doc_id")).as("rep_id"))
-    edges.unpersist(blocking = false)
-    out
-  }
 
   // — SimHash —
 
@@ -1090,7 +1034,7 @@ object Dedup {
     * through the driver, so verification cuts over to the fully
     * distributed join form below — slower per candidate, unbounded in
     * corpus size. Same cutover discipline as the CF neighbor lists and
-    * the union-find edge bound.
+    * [[GraphOps.ComponentsDriverMaxEdges]].
     */
   private[graft] val LshBroadcastMaxEntries = 32000000L
 
@@ -1291,13 +1235,6 @@ object Dedup {
         col("n_docs"), col("max_chars"))
   }
 
-  // — SemDeDup (semantic dedup: cluster, then compare within clusters) —
-
-  /** Driver-side union-find over a (small, thresholded) edge list:
-    * rep = component minimum. Same cutover argument as
-    * [[nearDupClusters]] — the SURVIVING near-dup edges are orders of
-    * magnitude smaller than the corpus.
-    */
   /** Deterministic DBSCAN over the embedding cloud in cosine space —
     * the density-based curation screen (dense regions = semantic
     * clusters, sparse points = outliers/noise). ε-neighbors are pairs
@@ -1331,10 +1268,9 @@ object Dedup {
     * the gate is spec-pinned on [[dbscanPairSource]] directly).
     * Candidates are exactly verified, so past-cutover output loses
     * only recall, never precision. Degrees and border attachment are
-    * one groupBy each; component labeling runs driver-side union-find
-    * on the THRESHOLDED core-core edge list (bounded like
-    * [[nearDupClusters]]' below-cutover path, with the same
-    * distributed min-label propagation swap above it).
+    * one groupBy each; the THRESHOLDED core-core edge list is labeled
+    * by [[GraphOps.componentLabels]] (driver union-find under its edge
+    * bound, star contraction past it).
     */
   def dbscanClusters(spark: SparkSession, dir: String,
       simThreshold: Double = 0.45, minPts: Int = 3): DataFrame = {
@@ -1393,8 +1329,6 @@ object Dedup {
     */
   private[graft] def dbscanOverPairs(n: DataFrame, minedPairs: DataFrame,
       minPts: Int): DataFrame = {
-    val spark = n.sparkSession
-    import spark.implicits._
     // the mined pair relation is referenced four times downstream
     // (symmetrization x2, core-core edges, border attachment) — without
     // materialization each reference re-executes the full pair scan;
@@ -1413,10 +1347,8 @@ object Dedup {
       .join(cores.select(col("vec_id").as("vec_a")), Seq("vec_a"), "left_semi")
       .join(cores.select(col("vec_id").as("vec_b")), Seq("vec_b"), "left_semi")
       .select(col("vec_a"), col("vec_b"))
-    val reps = unionFindReps(ccEdges.as[(Long, Long)].collect())
-      .toDF("vec_id", "rep0")
-    val coreReps = cores.join(broadcast(reps), Seq("vec_id"), "left")
-      .select(col("vec_id"), coalesce(col("rep0"), col("vec_id")).as("rep"))
+    val coreReps = GraphOps.componentLabels(ccEdges, Some(cores))
+      .withColumnRenamed("component", "rep")
     val borderReps = sym.toDF("vec_id", "nbr")
       .join(cores, Seq("vec_id"), "left_anti")
       .join(broadcast(coreReps.select(col("vec_id").as("nbr"), col("rep"))),
@@ -1432,22 +1364,7 @@ object Dedup {
         coalesce(col("rep"), lit(-1L)).as("rep"))
   }
 
-  private[operators] def unionFindReps(es: Array[(Long, Long)]): Seq[(Long, Long)] = {
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    es.foreach { case (a, b) =>
-      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
-    parent.keysIterator.map(v => (v, find(v))).toSeq
-  }
+  // — SemDeDup (semantic dedup: cluster, then compare within clusters) —
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     * deduplication = k-means-cluster the embedding space, then mine
@@ -1467,7 +1384,6 @@ object Dedup {
     */
   def semanticDedup(spark: SparkSession, dir: String,
       threshold: Double = 0.4, nClusters: Int = 8): DataFrame = {
-    import spark.implicits._
     val base = normalizedEmbeddings(spark, dir)
       .select(col("vec_id"), col("nv").as("emb"))
     val cents = graft.IndexCache.getOrBuild(spark,
@@ -1486,13 +1402,9 @@ object Dedup {
         round(greatest(ArrayMath.dotProduct(col("na"), col("nb")), lit(0.0)), 6)
           .as("sim"))
       .filter(col("sim") >= threshold)
-    val reps = unionFindReps(
-      pairs.select(col("vec_a"), col("vec_b")).as[(Long, Long)].collect())
-      .toDF("vec_id", "rep0")
-    assigned.select(col("vec_id"), col("cid"))
-      .join(broadcast(reps), Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cid"),
-        coalesce(col("rep0"), col("vec_id")).as("rep_id"))
+    GraphOps.componentLabels(pairs.select(col("vec_a"), col("vec_b")),
+        Some(assigned.select(col("vec_id"), col("cid"))))
+      .withColumnRenamed("component", "rep_id")
       .withColumn("kept", col("rep_id") === col("vec_id"))
   }
 

@@ -12,20 +12,6 @@ import graft.Tables
   */
 object EmbeddingStats {
 
-  /** Connected components of the MUTUAL-kNN graph — embedding-space
-    * clustering without a k hyperparameter (Brito et al. 1997: mutual
-    * neighborhood graphs consistently recover high-density clusters;
-    * reciprocal edges kill hub links, so components are tight groups,
-    * not the giant blob one-directional kNN collapses into). Nodes in
-    * no mutual pair are singletons and stay out of the output.
-    *
-    * Scale shape: the edge list is ≤ n·k/2 rows out of
-    * [[graft.knn.ExactKnn.mutualKnnPairs]] (ANN-swappable at corpus
-    * scale); components run the distributed star-contraction fixpoint
-    * — per round two self-joins of the edge relation, O(log n) rounds,
-    * never a driver union-find. Output: (vec_id, cluster = component
-    * minimum).
-    */
   /** HUBNESS diagnostic (Radovanović et al. 2010, JMLR): the
     * k-occurrence distribution — N_k(v) = how many querying vectors
     * list v in their top-k — with its population skewness. The query
@@ -96,33 +82,29 @@ object EmbeddingStats {
       .select(col("k_occ").cast("long").as("k_occ"),
         col("n_vectors").cast("long").as("n_vectors"))
 
+  /** Connected components of the MUTUAL-kNN graph — embedding-space
+    * clustering without a k hyperparameter (Brito et al. 1997: mutual
+    * neighborhood graphs consistently recover high-density clusters;
+    * reciprocal edges kill hub links, so components are tight groups,
+    * not the giant blob one-directional kNN collapses into). Nodes in
+    * no mutual pair are singletons and stay out of the output.
+    *
+    * Scale shape: the edge list is ≤ n·k/2 rows out of
+    * [[graft.knn.ExactKnn.mutualKnnPairs]] (ANN-swappable at corpus
+    * scale), labeled by [[GraphOps.componentLabels]]: driver union-find
+    * under its edge bound, star contraction past it. Output: (vec_id,
+    * cluster = component minimum).
+    */
   def mutualKnnClusters(spark: SparkSession, dir: String, k: Int = 5)
       : DataFrame =
     // memoized like the dedup cluster relation ("clusters"): the
-    // star-contraction fixpoint is a build (charged to
-    // bench_build_mutual_knn with the pair relation it contracts);
-    // the declared row serves the persisted labels
+    // labeling is a build (charged to bench_build_mutual_knn with the
+    // pair relation it labels); the declared row serves the persisted
+    // labels
     graft.IndexCache.persisted(spark, "mutual-knn-clusters", dir, k) {
-      import spark.implicits._
-      val mutual = graft.knn.ExactKnn.mutualKnnPairs(spark, dir, k)
-        .select(col("vec_a").as("u"), col("vec_b").as("v"))
-      // the self-join runs once: the cutover count and the collect both
-      // read the checkpointed edges (same idiom as Dedup's LSH leg)
-      val pairs = mutual.localCheckpoint(true)
-      // same cutover as Dedup.nearDupClusters: the mutual-pair edge
-      // set is panel-bounded (<= panel·k rows at every tier) — far
-      // under the 10M-edge driver bound — so path-compressed
-      // union-find labels it with zero scheduled stages; the
-      // star-contraction loop stays as the past-cutover leg (identical
-      // output: component = min node id in both). That leg keeps the
-      // uncheckpointed lineage, so its persisted labels can be
-      // recomputed after a bench cache release drops checkpoint blocks.
-      if (pairs.count() <= 10000000L)
-        Dedup.unionFindReps(pairs.as[(Long, Long)].collect())
-          .toDF("vec_id", "cluster")
-      else
-        GraphOps.starContractionComponents(mutual)
-          .select(col("node").as("vec_id"), col("component").as("cluster"))
+      GraphOps.componentLabels(graft.knn.ExactKnn.mutualKnnPairs(spark, dir, k)
+          .select(col("vec_a"), col("vec_b")))
+        .select(col("node").as("vec_id"), col("component").as("cluster"))
     }
 
   /** Pairwise euclidean distances between per-label centroids — the

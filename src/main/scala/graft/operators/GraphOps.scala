@@ -8,8 +8,9 @@ import graft.Tables
 /** Graph analytics over the interaction graph implied by `events` —
   * training-corpus pipelines rank/score entities this way (domain
   * authority for crawl prioritization, user/item importance). The
-  * reference has no graph surface (north-star extension alongside the
-  * connected-components pass in [[Dedup.nearDupClusters]]).
+  * reference has no graph surface (north-star extension). Also home of
+  * [[componentLabels]], the one connected-components labeler every
+  * min-label clustering (near-dup, mutual-kNN, DBSCAN, SemDeDup) runs.
   *
   * Scale notes: PageRank is the canonical iterative-shuffle workload.
   * The edge relation is normalized ONCE (transition probability
@@ -232,10 +233,10 @@ object GraphOps {
     * leg: the capped neighbor lists hold at most |items| × nbrCap
     * entries — collected as a driver map only while that product stays
     * under this bound (4M entries of 3 boxed longs ≈ low hundreds of
-    * MB driver heap, the same order as the 10M-edge union-find
-    * cutover in [[Dedup]]). Past it [[basketCompletion]] switches to
-    * the co-partitioned relational leg
-    * ([[basketCompletionDistributed]]) and nothing collects.
+    * MB driver heap, the same order as [[ComponentsDriverMaxEdges]]).
+    * Past it [[basketCompletion]] switches to the co-partitioned
+    * relational leg ([[basketCompletionDistributed]]) and nothing
+    * collects.
     */
   private[graft] val ItemNbrDriverMaxEntries = 4000000L
 
@@ -849,53 +850,88 @@ object GraphOps {
           6).as("assortativity"))
   }
 
-  /** One LARGE-STAR round (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond"): every node links its strictly-LARGER
-    * neighbors to the minimum of its closed neighborhood. One groupBy
-    * + one self-join; output canonicalized (hi, lo) and deduped so
-    * the edge multiset stays bounded by the input.
+  /** Edge bound of [[componentLabels]]' driver leg: 10M (Long, Long)
+    * edges = 160 MB, cheap against a driver sized for a 1000-executor
+    * cluster. Thresholded similarity edges (near-dup, mutual-kNN,
+    * DBSCAN core-core, SemDeDup pairs) are orders of magnitude fewer
+    * than the nodes they connect; past the bound the star-contraction
+    * leg runs.
     */
-  private def largeStar(e: DataFrame): DataFrame = {
-    val sym = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
-    val m = sym.groupBy(col("u"))
-      .agg(min(col("v")).as("mn"))
-      .select(col("u"), least(col("mn"), col("u")).as("m"))
-    sym.join(m, Seq("u"))
-      .filter(col("v") > col("u"))
-      .select(col("v").as("u"), col("m").as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
+  private[graft] val ComponentsDriverMaxEdges = 10000000L
+
+  /** Connected components of a two-column Long edge relation: every
+    * node labeled with the minimum id of its component. Without a
+    * `universe` the output is (node, component) for every node incident
+    * to an edge. With one, the output is the universe's columns (the
+    * first holds the node ids) plus `component`, and a universe id with
+    * no edge labels itself.
+    *
+    * The driver leg labels up to [[ComponentsDriverMaxEdges]] edges
+    * with [[unionFind]] and broadcast-joins the labels to the universe;
+    * past the bound [[starContractionComponents]] labels them in
+    * O(log n) distributed rounds, joined without a broadcast hint.
+    * GraphOpsSpec pins both legs to the same labels.
+    */
+  private[graft] def componentLabels(edges: DataFrame,
+      universe: Option[DataFrame] = None): DataFrame =
+    componentsDriver(edges, universe)
+      .getOrElse(componentsDistributed(edges, universe))
+
+  /** Driver leg of [[componentLabels]], None past the bound: one
+    * `limit(bound + 1)` collect both decides the leg and, under the
+    * bound, IS the edge list (the envelope of
+    * [[Dedup.embeddingNearDupLshNormalized]]; no separate count job).
+    */
+  private[graft] def componentsDriver(edges: DataFrame,
+      universe: Option[DataFrame]): Option[DataFrame] = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val limitN = (ComponentsDriverMaxEdges + 1).toInt
+    val es = edges.as[(Long, Long)].limit(limitN).collect()
+    if (es.length > ComponentsDriverMaxEdges) None
+    else {
+      val labels = unionFind(es).toDF("node", "component")
+      Some(universe.fold(labels)(labelUniverse(_, broadcast(labels))))
+    }
   }
 
-  /** One SMALL-STAR round: with edges directed (hi → lo), every node
-    * relinks its smaller neighbors (and itself) to its minimum
-    * neighbor. Together with [[largeStar]] the alternation converges
-    * to a star forest in O(log n) rounds — the distributed connected
-    * components algorithm whose round count does NOT depend on
-    * component diameter (min-label propagation, the other declared
-    * labeler, pays O(diameter) rounds; on a 100 TB path-shaped graph
-    * that difference is the whole game).
-    */
-  private def smallStar(e: DataFrame): DataFrame = {
-    val dir = e.select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-      .filter(col("u") =!= col("v"))
-    val m = dir.groupBy(col("u")).agg(min(col("v")).as("m"))
-    dir.join(m, Seq("u"))
-      .select(col("v").as("u"), col("m").as("v"))
-      .filter(col("u") =!= col("v"))
-      .unionAll(m.select(col("u"), col("m").as("v")))
-      .distinct()
+  /** Past-bound leg of [[componentLabels]]. */
+  private[graft] def componentsDistributed(edges: DataFrame,
+      universe: Option[DataFrame]): DataFrame = {
+    val labels = starContractionComponents(edges)
+    universe.fold(labels)(labelUniverse(_, labels))
   }
 
-  /** Connected components by alternating star contractions, run to a
-    * fixpoint with per-round materialization (the iterative-join
-    * discipline: persist, force, drop the previous round). Returns
-    * (node, component) for every node incident to an edge, component =
-    * the component's minimum node id.
+  private def labelUniverse(universe: DataFrame, labels: DataFrame)
+      : DataFrame = {
+    val id = universe.columns.head
+    universe.join(labels.withColumnRenamed("node", id), Seq(id), "left")
+      .select(universe.columns.map(col) :+
+        coalesce(col("component"), col(id)).as("component"): _*)
+  }
+
+  /** Path-compressed union-find over an edge list: every node incident
+    * to an edge mapped to its component's minimum. The one driver
+    * union-find: [[componentLabels]] runs it on Long ids,
+    * [[TextOps.typoLabelDictionary]] on vocabulary words.
     */
-  private[graft] def starContractionComponents(edges: DataFrame): DataFrame =
-    starContractionLoop(edges)
+  private[graft] def unionFind[T](es: Array[(T, T)])(
+      implicit ord: Ordering[T]): Seq[(T, T)] = {
+    val parent = scala.collection.mutable.HashMap.empty[T, T]
+    def find(x: T): T = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    es.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+    }
+    parent.keysIterator.map(v => (v, find(v))).toSeq
+  }
 
   /** Execution scope for node-bounded ITERATIVE loops: every round
     * plans against a fresh LogicalRDD, so whole-stage codegen
@@ -922,7 +958,16 @@ object GraphOps {
     }
   }
 
-  /** The fixpoint runs as a PURE RDD loop over (Long, Long) pairs —
+  /** Connected components by alternating star contractions (Kiveris
+    * et al., "Connected Components in MapReduce and Beyond"), run to a
+    * fixpoint with per-round materialization (persist, force, drop the
+    * previous round). Returns (node, component) for every node incident
+    * to an edge of the two-column Long relation, component = the
+    * component's minimum node id. The round count is O(log n) whatever
+    * the component diameter, where min-label propagation pays one
+    * round per hop.
+    *
+    * The fixpoint runs as a PURE RDD loop over (Long, Long) pairs —
     * the textbook justified RDD use: a DataFrame loop re-plans every
     * round against a fresh LogicalRDD (Catalyst analysis + optimizer +
     * ~6 recompiled codegen classes per round on relations of a few
@@ -931,10 +976,9 @@ object GraphOps {
     * pairs (the GraphX shape). A shared HashPartitioner keeps the
     * star joins co-partitioned, so per round only the symmetrized /
     * re-directed edge set shuffles. At 100 TB node counts the
-    * partition count moves with the graph; the alternation still
-    * converges in O(log n) rounds independent of component diameter.
+    * partition count moves with the graph.
     */
-  private def starContractionLoop(edges: DataFrame): DataFrame = {
+  private[graft] def starContractionComponents(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val parts = math.max(spark.sparkContext.defaultParallelism / 4, 2)
@@ -971,9 +1015,12 @@ object GraphOps {
         .distinct(parts)
     }
 
-    var e = edges.select(col("u"), col("v")).as[(Long, Long)].rdd
+    val canon = edges.as[(Long, Long)].rdd
       .map { case (u, v) => (math.max(u, v), math.min(u, v)) }
-      .filter { case (u, v) => u != v }
+    // a node whose only edge is a self-loop never enters a star; it
+    // still labels itself
+    val loops = canon.filter { case (u, v) => u == v }
+    var e = canon.filter { case (u, v) => u != v }
       .distinct(parts)
       .persist(lvl)
     var eCount = e.count()
@@ -994,11 +1041,10 @@ object GraphOps {
     }
     // fixpoint is a star forest: every surviving edge points a node at
     // its component minimum; the minima themselves are their own label
-    val out = e
-      .flatMap { case (u, v) => Iterator((u, v), (v, v)) }
-      .distinct(parts)
+    e.flatMap { case (u, v) => Iterator((u, v), (v, v)) }
+      .union(loops)
+      .reduceByKey(part, math.min(_: Long, _: Long))
       .toDF("node", "component")
-    out
   }
 
   /** Declared star-contraction components of the co-purchase graph at
@@ -1037,10 +1083,10 @@ object GraphOps {
     }
 
   /** The LPA fixpoint as a PURE RDD loop over primitive pairs — the
-    * same justification as [[starContractionLoop]]: the DataFrame loop
-    * re-planned every round against a fresh LogicalRDD and paid one
-    * localCheckpoint materialization per round, on a relation of a few
-    * thousand rows. Here the adjacency is keyed by neighbor under a
+    * same justification as [[starContractionComponents]]: the
+    * DataFrame loop re-planned every round against a fresh LogicalRDD
+    * and paid one localCheckpoint materialization per round, on a
+    * relation of a few thousand rows. Here the adjacency is keyed by neighbor under a
     * shared HashPartitioner once, labels come back keyed by node under
     * the SAME partitioner, so every round's join is co-partitioned
     * (zero join shuffle) and only the two reduceByKey passes move data.

@@ -1853,14 +1853,13 @@ object TextOps {
     * [[fuzzyWordPairs]] similarity graph, each token labeled with its
     * component's lexicographic minimum — the canonicalization step that
     * turns pairwise fuzzy matches into an entity-resolution dictionary
-    * (composes the ed-join with the same component machinery the
-    * near-dup clusters use, [[Dedup.nearDupClusters]]).
+    * (composes the ed-join with the one driver union-find,
+    * [[GraphOps.unionFind]]).
     *
     * Scale shape: the vocabulary (and so the edge set) is bounded by
-    * the language, not the corpus — the driver-side path-compressed
-    * union-find is the right plan under the same 10M-edge cutover
-    * argument as Dedup's; past that, Dedup's distributed min-label
-    * loop applies unchanged.
+    * the language, not the corpus, so the dictionary is built on the
+    * driver only, under the vocabulary bound registered for its
+    * `fuzzy-labels` memo family.
     */
   def typoClusters(spark: SparkSession, dir: String,
       maxDist: Int = 2): DataFrame =
@@ -1879,24 +1878,8 @@ object TextOps {
       maxDist: Int = 2): DataFrame =
     graft.IndexCache.persisted(spark, "fuzzy-labels", dir, maxDist) {
       import spark.implicits._
-      val es = fuzzyWordPairs(spark, dir, maxDist)
-        .select("w1", "w2").as[(String, String)].collect()
-      val parent = scala.collection.mutable.HashMap.empty[String, String]
-      def find(x: String): String = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      es.foreach { case (a, b) =>
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) {
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-      }
-      parent.keysIterator.map(v => (v, find(v))).toSeq
+      GraphOps.unionFind(fuzzyWordPairs(spark, dir, maxDist)
+          .select("w1", "w2").as[(String, String)].collect())
         .toDF("w", "rep0")
     }
 

@@ -1,12 +1,12 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.FileTime
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.streaming.CdcStream
+import graft.streaming.{CdcStream, OneShot}
 
 /** Structural pin of the CDC apply's write-amplification contract
   * (r10 verdict weak #2): each micro-batch's version directory holds
@@ -21,7 +21,7 @@ class CdcBucketSpec extends SparkSpec {
 
   private def stageChunk(df: DataFrame, destDir: Path, name: String,
       mtimeMs: Long): Unit = {
-    val tmp = Files.createTempDirectory("graft-cdcb-chunk")
+    val tmp = Paths.get(OneShot.tempDir("graft-cdcb-chunk"))
     df.coalesce(1).write.mode("overwrite").parquet(tmp.resolve("p").toString)
     val part = {
       val s = Files.list(tmp.resolve("p"))
@@ -49,7 +49,7 @@ class CdcBucketSpec extends SparkSpec {
     // chunks keyed by pmod(key, 4): chunk i can only touch state
     // buckets b with b % 4 == i % 4 — disjoint by construction, so the
     // per-version assertion below is non-vacuous
-    val staged = Files.createTempDirectory("graft-cdcb-src")
+    val staged = Paths.get(OneShot.tempDir("graft-cdcb-src"))
     val t0 = System.currentTimeMillis() - 60000L
     val expectedTouched = (0 until 4).map { i =>
       val slice = log.filter(pmod(col("o_orderkey"), lit(4)) === i)
@@ -57,14 +57,14 @@ class CdcBucketSpec extends SparkSpec {
       slice.select(pmod(col("o_orderkey"), lit(nB)).cast("int"))
         .distinct().collect().map(_.getInt(0)).toSet
     }
-    val base = Files.createTempDirectory("graft-cdcb-base").toString
+    val base = OneShot.tempDir("graft-cdcb-base")
     Tables.orders(spark, sf0001)
       .select(col("o_orderkey"),
         expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"),
         pmod(col("o_orderkey"), lit(nB)).as("bucket"))
       .write.partitionBy("bucket").mode("overwrite").parquet(base)
-    val stateRoot = Files.createTempDirectory("graft-cdcb-state").toString
-    val ckpt = Files.createTempDirectory("graft-cdcb-ckpt").toString
+    val stateRoot = OneShot.tempDir("graft-cdcb-state")
+    val ckpt = OneShot.tempDir("graft-cdcb-ckpt")
     CdcStream.runApply(spark, staged.toString, base, stateRoot, ckpt)
 
     // 1) per version: exactly the touched buckets, and (chunk keying)
@@ -83,10 +83,10 @@ class CdcBucketSpec extends SparkSpec {
     //    state root, snapshotting every file's (path, length, sha256)
     //    after each merge — each later merge must leave every earlier
     //    file byte-identical, the strongest form of "untouched"
-    val stateRoot2 = Files.createTempDirectory("graft-cdcb-inv").toString
+    val stateRoot2 = OneShot.tempDir("graft-cdcb-inv")
     def inventory(): Map[String, (Long, String)] = {
       import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(stateRoot2)
+      val root = Paths.get(stateRoot2)
       val s = Files.walk(root)
       try s.iterator().asScala.filter(p => Files.isRegularFile(p)).map { p =>
         val bytes = Files.readAllBytes(p)
@@ -134,7 +134,7 @@ class CdcBucketSpec extends SparkSpec {
     import spark.implicits._
     val nB = CdcStream.NStateBuckets
     // tiny base: keys 0..31 -> two keys per pmod-16 bucket
-    val base = Files.createTempDirectory("graft-cdce-base").toString
+    val base = OneShot.tempDir("graft-cdce-base")
     (0L until 32L).map(k => (k, 100L + k)).toDF("o_orderkey", "cents")
       .withColumn("bucket", pmod(col("o_orderkey"), lit(nB)))
       .write.partitionBy("bucket").mode("overwrite").parquet(base)
@@ -147,10 +147,10 @@ class CdcBucketSpec extends SparkSpec {
       .toDF("o_orderkey", "action", "old_cents", "new_cents")
       .select(col("o_orderkey"), col("action"),
         col("old_cents").cast("long"), col("new_cents").cast("long"))
-    val staged = Files.createTempDirectory("graft-cdce-src")
+    val staged = Paths.get(OneShot.tempDir("graft-cdce-src"))
     stageChunk(log, staged, "c0.parquet", System.currentTimeMillis())
-    val stateRoot = Files.createTempDirectory("graft-cdce-state").toString
-    val ckpt = Files.createTempDirectory("graft-cdce-ckpt").toString
+    val stateRoot = OneShot.tempDir("graft-cdce-state")
+    val ckpt = OneShot.tempDir("graft-cdce-ckpt")
     CdcStream.runApply(spark, staged.toString, base, stateRoot, ckpt)
     // the emptied bucket's version dir must exist (the empty marker)
     assert(new java.io.File(s"$stateRoot/v=0/bucket=3").exists(),
@@ -213,7 +213,7 @@ class CdcBucketSpec extends SparkSpec {
       // (the stateAt missing-path shape)
       val baseKeys = (0L until 200L).filter(_ => rnd.nextDouble() < 0.12)
       var model = baseKeys.map(k => k -> (rnd.nextInt(1000) + 1).toLong).toMap
-      val base = Files.createTempDirectory(s"graft-cdcp-base$trial").toString
+      val base = OneShot.tempDir(s"graft-cdcp-base$trial")
       model.toSeq.toDF("o_orderkey", "cents")
         .withColumn("bucket", pmod(col("o_orderkey"), lit(CdcStream.NStateBuckets)))
         .write.partitionBy("bucket").mode("overwrite").parquet(base)
@@ -230,7 +230,7 @@ class CdcBucketSpec extends SparkSpec {
         else Some((k, "insert", null.asInstanceOf[java.lang.Long],
           (rnd.nextInt(1000) + 1).toLong: java.lang.Long, rnd.nextInt(3)))
       }
-      val stateRoot = Files.createTempDirectory(s"graft-cdcp-st$trial").toString
+      val stateRoot = OneShot.tempDir(s"graft-cdcp-st$trial")
       (0 until 3).foreach { c =>
         val slice = acts.filter(_._5 == c)
           .map(a => (a._1, a._2, a._3, a._4))

@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
 
-import graft.streaming.CdcStream
+import graft.streaming.{CdcStream, OneShot}
 
 /** Pins the two round-11 CDC extensions structurally.
   *
@@ -26,7 +26,7 @@ class CdcCompactSpec extends SparkSpec {
 
   private def stageChunk(df: DataFrame, destDir: Path, name: String,
       mtimeMs: Long): Unit = {
-    val tmp = Files.createTempDirectory("graft-cpt-chunk")
+    val tmp = Paths.get(OneShot.tempDir("graft-cpt-chunk"))
     df.coalesce(1).write.mode("overwrite").parquet(tmp.resolve("p").toString)
     val part = {
       val s = Files.list(tmp.resolve("p"))
@@ -46,21 +46,21 @@ class CdcCompactSpec extends SparkSpec {
     val nB = CdcStream.NStateBuckets
     val log = graft.sources.Ingest.mergeChangelogShowcase(spark, sf0001)
       .localCheckpoint(true)
-    val staged = Files.createTempDirectory("graft-cpt-src")
+    val staged = Paths.get(OneShot.tempDir("graft-cpt-src"))
     val t0 = System.currentTimeMillis() - 60000L
     (0 until 4).foreach { i =>
       stageChunk(log.filter(pmod(col("o_orderkey"), lit(4)) === i),
         staged, s"c$i.parquet", t0 + i * 10000L)
     }
-    val base = Files.createTempDirectory("graft-cpt-base").toString
+    val base = OneShot.tempDir("graft-cpt-base")
     Tables.orders(spark, sf0001)
       .select(col("o_orderkey"),
         expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"),
         pmod(col("o_orderkey"), lit(nB)).as("bucket"))
       .write.partitionBy("bucket").mode("overwrite").parquet(base)
-    val stateRoot = Files.createTempDirectory("graft-cpt-state").toString
+    val stateRoot = OneShot.tempDir("graft-cpt-state")
     CdcStream.runApply(spark, staged.toString, base, stateRoot,
-      Files.createTempDirectory("graft-cpt-ckpt").toString)
+      OneShot.tempDir("graft-cpt-ckpt"))
     (stateRoot, base)
   }
 
@@ -121,11 +121,11 @@ class CdcCompactSpec extends SparkSpec {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("new_cents",
           org.apache.spark.sql.types.LongType))))
-    val staged2 = Files.createTempDirectory("graft-cpt-src2")
+    val staged2 = Paths.get(OneShot.tempDir("graft-cpt-src2"))
     stageChunk(extra, staged2, "c0.parquet", System.currentTimeMillis())
-    val stateRoot2 = Files.createTempDirectory("graft-cpt-state2").toString
+    val stateRoot2 = OneShot.tempDir("graft-cpt-state2")
     CdcStream.runApply(spark, staged2.toString, cdir, stateRoot2,
-      Files.createTempDirectory("graft-cpt-ckpt2").toString)
+      OneShot.tempDir("graft-cpt-ckpt2"))
     val after = CdcStream.endState(spark, stateRoot2, cdir).collect().head
     assert(after.getLong(0) == resolvedPre.getLong(0) - 1)
     assert(after.getLong(1) == resolvedPre.getLong(1) - c0)
@@ -148,9 +148,9 @@ class CdcCompactSpec extends SparkSpec {
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema)
         .coalesce(1).write.mode("overwrite").parquet(path)
-    val base = Files.createTempDirectory("graft-seq-base").toString
+    val base = OneShot.tempDir("graft-seq-base")
     write((1L to 6L).map(k => Row(k, 10L * k)), schema2, base)
-    val root = Files.createTempDirectory("graft-seq-mor").toString
+    val root = OneShot.tempDir("graft-seq-mor")
     write(Seq(Row(100L, 1L)), schema2, s"$root/inserts/batch=0")
     write(Seq(Row(1L)), schema1, s"$root/deletes/batch=0")
     write(Seq(Row(2L, 999L)), schema2, s"$root/inserts/batch=1")
@@ -200,9 +200,9 @@ class CdcCompactSpec extends SparkSpec {
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema)
         .coalesce(1).write.mode("overwrite").parquet(path)
-    val base = Files.createTempDirectory("graft-ftt-base").toString
+    val base = OneShot.tempDir("graft-ftt-base")
     write((1L to 6L).map(k => Row(k, 10L * k)), schema2, base)
-    val root = Files.createTempDirectory("graft-ftt-mor").toString
+    val root = OneShot.tempDir("graft-ftt-mor")
     write(Seq(Row(100L, 1L)), schema2, s"$root/inserts/batch=0")
     write(Seq(Row(1L)), schema1, s"$root/deletes/batch=0")
     write(Seq(Row(2L, 999L)), schema2, s"$root/inserts/batch=1")
@@ -263,23 +263,23 @@ class CdcCompactSpec extends SparkSpec {
       "policy alone would not, through the same fold path") {
     val log = graft.sources.Ingest.mergeChangelogShowcase(spark, sf0001)
       .localCheckpoint(true)
-    val staged = Files.createTempDirectory("graft-szt-src")
+    val staged = Paths.get(OneShot.tempDir("graft-szt-src"))
     val t0 = System.currentTimeMillis() - 60000L
     (0 until 4).foreach { i =>
       stageChunk(log.filter(pmod(col("o_orderkey"), lit(4)) === i),
         staged, s"c$i.parquet", t0 + i * 10000L)
     }
     // control: count-only policy with a huge threshold — never folds
-    val rootCount = Files.createTempDirectory("graft-szt-cnt").toString
+    val rootCount = OneShot.tempDir("graft-szt-cnt")
     CdcStream.runMorApplyAutoCompact(spark, staged.toString, rootCount,
-      Files.createTempDirectory("graft-szt-ck1").toString, maxLive = 100)
+      OneShot.tempDir("graft-szt-ck1"), maxLive = 100)
     assert(CdcStream.currentMinor(rootCount).isEmpty,
       "count policy must not fire at maxLive=100")
     // size policy: 1-byte budget — every non-empty live set exceeds it,
     // so each micro-batch folds (count threshold still never reached)
-    val rootSize = Files.createTempDirectory("graft-szt-sz").toString
+    val rootSize = OneShot.tempDir("graft-szt-sz")
     CdcStream.runMorApplyAutoCompact(spark, staged.toString, rootSize,
-      Files.createTempDirectory("graft-szt-ck2").toString, maxLive = 100,
+      OneShot.tempDir("graft-szt-ck2"), maxLive = 100,
       maxLiveBytes = 1L)
     val (gen, upto) = CdcStream.currentMinor(rootSize).getOrElse(
       fail("size policy never folded"))
@@ -288,7 +288,7 @@ class CdcCompactSpec extends SparkSpec {
     assert(CdcStream.liveSidecarBytes(rootSize, upto) == 0L)
     // both policies converge to the identical end state
     val nB = CdcStream.NStateBuckets
-    val base = Files.createTempDirectory("graft-szt-base").toString
+    val base = OneShot.tempDir("graft-szt-base")
     Tables.orders(spark, sf0001)
       .select(col("o_orderkey"),
         expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"),
@@ -339,7 +339,7 @@ class CdcCompactSpec extends SparkSpec {
         .coalesce(1).write.mode("overwrite").parquet(path)
     // the r12-advice trap: a caller-supplied root whose PATH contains
     // the generation prefix (split-on-substring parsing misread this)
-    val root = Files.createTempDirectory("graft-minor-g7-trap").toString
+    val root = OneShot.tempDir("graft-minor-g7-trap")
     write(Seq(Row(9L, 1L)), schema2, s"$root/inserts/batch=0")
     write(Seq.empty[Row], schema1, s"$root/deletes/batch=0")
     write(Seq(Row(10L, 2L)), schema2, s"$root/inserts/batch=1")
@@ -355,22 +355,22 @@ class CdcCompactSpec extends SparkSpec {
       "crash: replay converges to the from-scratch re-aggregation") {
     val log = graft.sources.Ingest.mergeChangelogShowcase(spark, sf0001)
       .localCheckpoint(true)
-    val staged = Files.createTempDirectory("graft-ivm-src")
+    val staged = Paths.get(OneShot.tempDir("graft-ivm-src"))
     val t0 = System.currentTimeMillis() - 60000L
     (0 until 4).foreach { i =>
       stageChunk(log.filter(pmod(col("o_orderkey"), lit(4)) === i),
         staged, s"c$i.parquet", t0 + i * 10000L)
     }
     val nSeg = CdcStream.NIvmSegments
-    val base = Files.createTempDirectory("graft-ivm-base").toString
+    val base = OneShot.tempDir("graft-ivm-base")
     Tables.orders(spark, sf0001)
       .groupBy(pmod(col("o_orderkey"), lit(nSeg)).as("segment"))
       .agg(count(lit(1)).as("n_rows"),
         sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
           .as("total_cents"))
       .coalesce(1).write.mode("overwrite").parquet(base)
-    val aggRoot = Files.createTempDirectory("graft-ivm-state").toString
-    val ckpt = Files.createTempDirectory("graft-ivm-ckpt").toString
+    val aggRoot = OneShot.tempDir("graft-ivm-state")
+    val ckpt = OneShot.tempDir("graft-ivm-ckpt")
     val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
     intercept[StreamingQueryException] {
       CdcStream.runIvm(spark, staged.toString, base, aggRoot, ckpt,

@@ -61,11 +61,6 @@ class CollectSiteLintSpec extends AnyFunSuite {
     ("ExactKnn.scala", "val side = rows.collect().sortBy(_._1)") ->
       (1, "transient flat yardstick kernel inside the ONE-TIME " +
         "family:self-topk build (scale path = ANN batch + LSH near-dup)"),
-    ("EmbeddingStats.scala",
-      "Dedup.unionFindReps(pairs.as[(Long, Long)].collect())") ->
-      (1, "mutual-pair edges, panel-bounded (<= panel*k rows) and " +
-        "cutover-gated at 10M edges (star-contraction leg above; " +
-        "family:mutual-knn-clusters caps the memoized result)"),
     ("ShardedIndex.scala",
       ".mapPartitions(git => probeShard(git, queries.iterator, k, ef)).collect()") ->
       (1, "|q|·shards·k candidate triples, proportional to the " +
@@ -102,18 +97,15 @@ class CollectSiteLintSpec extends AnyFunSuite {
     ("TextOps.scala", ".limit(1).collect()") ->
       (1, "limit(1) best merge pair per BPE round"),
     ("TextOps.scala",
-      ".select(\"w1\", \"w2\").as[(String, String)].collect()") ->
-      (1, "vocab-bounded ed-join pairs inside the family:fuzzy-labels build"),
+      ".select(\"w1\", \"w2\").as[(String, String)].collect())") ->
+      (1, "vocab-bounded ed-join pairs of the String union-find " +
+        "dictionary, inside the family:fuzzy-labels build"),
     ("TextOps.scala", "bpeVocab(spark, dir, nMerges).collect()") ->
       (1, "nMerges rule rows inside the family:bpe-merges build"),
     // --- dedup ---------------------------------------------------------
     ("Dedup.scala",
       ".collect().map(r => r.getLong(0) -> r.getLong(1)).toMap") ->
       (1, "limit(TopFreqGrams) df map inside the family:gram-topfreq build"),
-    ("Dedup.scala",
-      "val labels = unionFindReps(pairs.collect()).toDF(\"doc_id\", \"rep0\")") ->
-      (1, "<=10M-edge cutover-gated union-find leg (distributed " +
-        "min-label propagation above)"),
     ("Dedup.scala",
       "collectFlat(n.filter(pmod(col(\"vec_id\"), lit(stride)) === 0))") ->
       (1, "~AnchorTarget-row panel inside the family:anchor-flat build"),
@@ -127,13 +119,6 @@ class CollectSiteLintSpec extends AnyFunSuite {
     ("Dedup.scala", ".as[(Long, Array[Double])].collect())") ->
       (1, "body of collectFlat — both callers ride registered " +
         "IndexCache families (anchor-flat, neardup-oracle-corpus)"),
-    ("Dedup.scala",
-      "val reps = unionFindReps(ccEdges.as[(Long, Long)].collect())") ->
-      (1, "thresholded core-core edges, cutover-bounded like " +
-        "nearDupClusters (DbscanExactMaxRows)"),
-    ("Dedup.scala",
-      "pairs.select(col(\"vec_a\"), col(\"vec_b\")).as[(Long, Long)].collect())") ->
-      (1, "LSH-leg core-core edges, same cutover-bounded union-find"),
     // --- embedding stats ----------------------------------------------
     ("EmbeddingStats.scala", "}.collect()") ->
       (1, "O(|partitions|) Gram-matrix partials (d^2 each)"),
@@ -149,6 +134,11 @@ class CollectSiteLintSpec extends AnyFunSuite {
         "(ItemNbrDriverMaxEntries; distributed CF leg above cutover)"),
     ("GraphOps.scala", ".as[(Long, Long)].collect()") ->
       (1, "k-core driver leg, cutover-gated (distributed peel above)"),
+    ("GraphOps.scala",
+      "val es = edges.as[(Long, Long)].limit(limitN).collect()") ->
+      (1, "limit(ComponentsDriverMaxEdges+1) decide-and-reuse envelope " +
+        "of the one component labeler (star-contraction leg past it); " +
+        "serves the near-dup, mutual-kNN, DBSCAN and SemDeDup clusters"),
     // --- layout / ingest -------------------------------------------------
     ("ScaleTechniques.scala", ".collect().head") ->
       (1, "1-row max() aggregate (layout-width assertion)"),
@@ -195,6 +185,23 @@ class CollectSiteLintSpec extends AnyFunSuite {
           "collect reused an allowlisted line verbatim; audit it")
       assert(bound.nonEmpty)
     }
+  }
+
+  test("the only union-find root-chase loop in src/main is " +
+      "GraphOps.unionFind, the component labeler's") {
+    // `while (parent(r) != r)`: the find step of any union-find copy,
+    // whatever its map is called
+    val chase = """while\s*\(\s*(\w+)\((\w+)\)\s*!=\s*\2\s*\)""".r
+    val hits = mainSources.flatMap { p =>
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.readAllLines(p).asScala.map(_.trim)
+        .filterNot(t => t.startsWith("//") || t.startsWith("*"))
+        .filter(t => chase.findFirstIn(t).nonEmpty)
+        .map(t => s"${p.getFileName}: $t")
+    }
+    assert(hits == Seq("GraphOps.scala: while (parent(r) != r) r = parent(r)"),
+      "union-find copies outside GraphOps.unionFind — label components " +
+        s"with GraphOps.componentLabels or call unionFind:\n  ${hits.mkString("\n  ")}")
   }
 
   test("every family a bound cites is registered in " +

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 import graft.operators.{Dedup, EventOps}
-import graft.streaming.{CorpusStream, EventStream}
+import graft.streaming.{CorpusStream, EventStream, OneShot}
 import graft.streaming.EventStream.Ev
 
 /** Crash-recovery proof for the streaming engine: the fifteen declared
@@ -42,7 +42,7 @@ class CrashRecoverySpec extends SparkSpec {
     */
   private def stageChunk(df: DataFrame, destDir: Path, name: String,
       mtimeMs: Long): Unit = {
-    val tmp = Files.createTempDirectory("graft-chunk")
+    val tmp = Paths.get(OneShot.tempDir("graft-chunk"))
     df.coalesce(1).write.mode("overwrite").parquet(tmp.resolve("p").toString)
     val part = {
       val s = Files.list(tmp.resolve("p"))
@@ -103,7 +103,7 @@ class CrashRecoverySpec extends SparkSpec {
       .toDF("event_id", "ts_us", "user_id", "event_type", "value")
       .select(col("event_id"), timestamp_micros(col("ts_us")).as("ts"),
         col("user_id"), col("event_type"), col("value"))
-    val staged = Files.createTempDirectory("graft-crash-att-src")
+    val staged = Paths.get(OneShot.tempDir("graft-crash-att-src"))
     val t0 = System.currentTimeMillis() - 60000L
     stageChunk(ev.filter(unix_micros(col("ts")) <= cutUs), staged,
       "e0.parquet", t0)
@@ -111,8 +111,8 @@ class CrashRecoverySpec extends SparkSpec {
       "e1.parquet", t0 + 10000L)
     stageChunk(sentinel, staged, "e2.parquet", t0 + 20000L)
 
-    val sinkDir = Files.createTempDirectory("graft-crash-att-sink").toString
-    val ckptDir = Files.createTempDirectory("graft-crash-att-ckpt").toString
+    val sinkDir = OneShot.tempDir("graft-crash-att-sink")
+    val ckptDir = OneShot.tempDir("graft-crash-att-ckpt")
     val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
     def frame: DataFrame = {
       val schema = spark.read.parquet(staged.toString).schema
@@ -157,15 +157,15 @@ class CrashRecoverySpec extends SparkSpec {
     // recovery here is offsets-only — no state store, the standing
     // corpus relations are reused as-is.
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
-    val staged = Files.createTempDirectory("graft-crash-dedup-src")
+    val staged = Paths.get(OneShot.tempDir("graft-crash-dedup-src"))
     val t0 = System.currentTimeMillis() - 60000L
     stageChunk(docs.filter((col("doc_id") / 10).cast("long") % 2 === 0),
       staged, "d0.parquet", t0)
     stageChunk(docs.filter((col("doc_id") / 10).cast("long") % 2 === 1),
       staged, "d1.parquet", t0 + 10000L)
 
-    val sinkDir = Files.createTempDirectory("graft-crash-dedup-sink").toString
-    val ckptDir = Files.createTempDirectory("graft-crash-dedup-ckpt").toString
+    val sinkDir = OneShot.tempDir("graft-crash-dedup-sink")
+    val ckptDir = OneShot.tempDir("graft-crash-dedup-ckpt")
     val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
     def frame: DataFrame = CorpusStream.incrementalMinhashFrame(
       spark, sf001, staged.toString, maxFilesPerTrigger = Some(1))
@@ -200,13 +200,13 @@ class CrashRecoverySpec extends SparkSpec {
   private def stageCdcFixture(prefix: String): (String, String) = {
     val log = graft.sources.Ingest.mergeChangelogShowcase(spark, sf0001)
       .localCheckpoint(true)
-    val staged = Files.createTempDirectory(s"$prefix-src")
+    val staged = Paths.get(OneShot.tempDir(s"$prefix-src"))
     val t0 = System.currentTimeMillis() - 60000L
     (0 until 4).foreach { i =>
       stageChunk(log.filter(pmod(col("o_orderkey"), lit(4)) === i),
         staged, s"c$i.parquet", t0 + i * 10000L)
     }
-    val base = Files.createTempDirectory(s"$prefix-base").toString
+    val base = OneShot.tempDir(s"$prefix-base")
     Tables.orders(spark, sf0001)
       .select(col("o_orderkey"),
         expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"),
@@ -240,8 +240,8 @@ class CrashRecoverySpec extends SparkSpec {
       "recovery converges to the batch MERGE end state exactly once") {
     import graft.streaming.CdcStream
     val (staged, base) = stageCdcFixture("graft-crash-cdc")
-    val stateRoot = Files.createTempDirectory("graft-crash-cdc-state").toString
-    val ckptDir = Files.createTempDirectory("graft-crash-cdc-ckpt").toString
+    val stateRoot = OneShot.tempDir("graft-crash-cdc-state")
+    val ckptDir = OneShot.tempDir("graft-crash-cdc-ckpt")
     val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
     // crash AFTER v=3 — the DATA-CARRYING batch (the insert-clone
     // chunk) — is written but before its commit: the restart must
@@ -273,8 +273,8 @@ class CrashRecoverySpec extends SparkSpec {
       "replayed batch overwrites its own sidecar dirs, end state exact") {
     import graft.streaming.CdcStream
     val (staged, base) = stageCdcFixture("graft-crash-mor")
-    val morRoot = Files.createTempDirectory("graft-crash-mor-st").toString
-    val ckptDir = Files.createTempDirectory("graft-crash-mor-ckpt").toString
+    val morRoot = OneShot.tempDir("graft-crash-mor-st")
+    val ckptDir = OneShot.tempDir("graft-crash-mor-ckpt")
     val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
     // crash AFTER batch 3 — the DATA-CARRYING insert-clone chunk —
     // writes its sidecars but before its commit: the restart replays
@@ -309,10 +309,10 @@ class CrashRecoverySpec extends SparkSpec {
   private def morLayout(tag: String): (String, String) = {
     import graft.streaming.CdcStream
     val (staged, base) = stageCdcFixture(tag)
-    val morRoot = Files.createTempDirectory(s"$tag-root").toString
+    val morRoot = OneShot.tempDir(s"$tag-root")
     withShufflePartitions(4) {
       CdcStream.runMorApply(spark, staged, morRoot,
-        Files.createTempDirectory(s"$tag-ckpt").toString)
+        OneShot.tempDir(s"$tag-ckpt"))
     }
     (base, morRoot)
   }
@@ -378,8 +378,8 @@ class CrashRecoverySpec extends SparkSpec {
       "are dead files behind the pointer") {
     import graft.streaming.CdcStream
     val (staged, base) = stageCdcFixture("graft-crash-mor-auto")
-    val morRoot = Files.createTempDirectory("graft-crash-auto-root").toString
-    val ckptDir = Files.createTempDirectory("graft-crash-auto-ckpt").toString
+    val morRoot = OneShot.tempDir("graft-crash-auto-root")
+    val ckptDir = OneShot.tempDir("graft-crash-auto-ckpt")
     val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
     // crash in batch 3, AFTER its sidecar append and the second fold
     // (maxLive=1 folds at batches 1 and 3) but before its commit: the

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.GraphOps
@@ -290,18 +291,30 @@ class GraphOpsSpec extends SparkSpec {
     import spark.implicits._
     // 40-node path (diameter 39: min-label propagation would need 39
     // rounds; star contraction converges in O(log n)), a triangle, a
-    // star, and an isolated edge
+    // star, an isolated edge, a duplicate edge and a self-loop — run
+    // through both legs of the component labeler
     val path = (1L until 40L).map(i => (i, i + 1))
     val tri = Seq((100L, 101L), (101L, 102L), (100L, 102L))
     val star = Seq((200L, 201L), (200L, 202L), (200L, 203L))
     val iso = Seq((300L, 301L))
-    val edges = (path ++ tri ++ star ++ iso).toDF("u", "v")
-    val got = GraphOps.starContractionComponents(edges)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val expect = unionFind(path ++ tri ++ star ++ iso)
-    assert(got == expect)
-    assert(got(40L) == 1L && got(102L) == 100L &&
-      got(203L) == 200L && got(301L) == 300L)
+    val dupAndLoop = Seq((101L, 100L), (400L, 400L))
+    val all = path ++ tri ++ star ++ iso ++ dupAndLoop
+    val edges = all.toDF("u", "v")
+    val expect = unionFind(all)
+    def labels(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val driver = labels(GraphOps.componentsDriver(edges, None).get)
+    val distributed = labels(GraphOps.componentsDistributed(edges, None))
+    assert(driver == expect, "driver leg")
+    assert(distributed == expect, "star-contraction leg")
+    assert(expect(40L) == 1L && expect(102L) == 100L &&
+      expect(203L) == 200L && expect(301L) == 300L && expect(400L) == 400L)
+    // with a universe: every id labeled, an id with no edge by itself
+    val universe = (all.flatMap(e => Seq(e._1, e._2)) :+ 500L).distinct
+      .toDF("id")
+    val withU = expect + (500L -> 500L)
+    assert(labels(GraphOps.componentsDriver(edges, Some(universe)).get) == withU)
+    assert(labels(GraphOps.componentsDistributed(edges, Some(universe))) == withU)
   }
 
   test("basket completion replays a driver-side item-item CF exactly") {
