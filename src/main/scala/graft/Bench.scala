@@ -148,8 +148,8 @@ object Bench {
         () => SparkEntry.queries("knn_bq256_batch")(spark, sfDir).count()),
       // first lifecycle call pays the one-time checkpoint WRITE (index
       // publication) and the memoized reload; the declared
-      // knn_*_lifecycle queries then measure the probe (IVF, which
-      // reloads on every call: load + probe)
+      // knn_*_lifecycle queries then measure the probe (for the non-graph
+      // families a read-through scan of the checkpoint table)
       buildTimed("bench_build_hnsw_ckpt",
         () => knn.HnswKnn.topKBatchLifecycle(spark, sfDir).count()),
       buildTimed("bench_build_ivf_ckpt",

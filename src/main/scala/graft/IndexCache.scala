@@ -114,20 +114,15 @@ object IndexCache {
   }
 
   /** Write an index checkpoint once per (session, family, parts) and
-    * return its path, `<tmpdir>/graft-<family>-lifecycle-<parts>`, where
-    * a String part (the dataset dir) contributes its hash in hex. The
-    * path is memoized under `<family>-ckpt`, so later callers only read
-    * it: the save is index publication, never part of a search.
+    * return its path, a fresh `graft-<family>-lifecycle-*` directory
+    * under `java.io.tmpdir` that is deleted at JVM exit. The path is
+    * memoized under `<family>-ckpt`, so later callers only read it: the
+    * save is index publication, never part of a search.
     */
   def checkpoint(spark: SparkSession, family: String, parts: Any*)(
       save: String => Unit): String =
     getOrBuild(spark, s"$family-ckpt", parts: _*) {
-      val tag = parts.map {
-        case s: String => Integer.toHexString(s.hashCode)
-        case p => p.toString
-      }.mkString("-")
-      val path = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-        s"/graft-$family-lifecycle-$tag"
+      val path = graft.streaming.OneShot.tempDir(s"graft-$family-lifecycle-")
       save(path)
       path
     }
@@ -272,10 +267,15 @@ object IndexCache {
       1000000L),
     "ivfpq" -> ("coarse centroids + m x ksub x dsub codebooks", 2000000L),
     "pq" -> ("m x ksub x dsub codebook doubles", 1000000L),
-    "pq-reloaded" -> ("reloaded codebook doubles + code handle", 1000000L),
-    "ivfpq-reloaded" -> ("reloaded centroids + codebooks", 2000000L),
-    "opq-reloaded" -> ("reloaded rotation + codebooks", 2000000L),
-    "pca-reloaded" -> ("reloaded basis doubles + handle", 1000000L),
+    // IndexFiles.reloaded: the checkpoint's model plus its parquet
+    // table handle, read through (never persisted)
+    "ivf-reloaded" -> ("reloaded centroid doubles + parquet handle", 1000000L),
+    "pq-reloaded" -> ("reloaded codebook doubles + parquet handle", 1000000L),
+    "ivfpq-reloaded" -> ("reloaded centroids + codebooks + parquet handle",
+      2000000L),
+    "opq-reloaded" -> ("reloaded rotation + codebooks + parquet handle",
+      2000000L),
+    "pca-reloaded" -> ("reloaded basis doubles + parquet handle", 1000000L),
     "semdedup-cents" -> ("k x dim SemDeDup centroid doubles", 1000000L),
     "anchor-flat" -> ("~AnchorTarget x dim anchor-panel doubles " +
       "(count-derived stride, corpus-independent)", 1000000L),

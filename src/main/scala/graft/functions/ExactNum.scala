@@ -25,10 +25,4 @@ object ExactNum {
 
   /** Exact 2-decimal column -> integer hundredths (cents). */
   def cents(c: Column): Column = round(c * 100, 0).cast(LongType)
-
-  /** Sum of a 2-decimal column, exact: sum cents, divide once. */
-  def sumExact(c: Column): Column = sum(cents(c)) / 100.0
-
-  /** Average of a 2-decimal column, exact-sum based. */
-  def avgExact(c: Column): Column = sum(cents(c)) / (count(lit(1)) * 100.0)
 }

@@ -1,50 +1,73 @@
 package graft.knn
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
-/** The driver-side halves of the ANN checkpoints, one codec each: a
-  * matrix (IVF and IVF-PQ centroids, the PCA basis, the OPQ rotation)
-  * and a PQ codebook set (PQ, OPQ, IVF-PQ). Both write one small
-  * single-file parquet; the distributed half of each index (codes,
-  * inverted file, projected table) is written by its family.
+import graft.IndexCache
+
+/** The one checkpoint lifecycle of the non-graph indexes (IVF, IVF-PQ,
+  * PQ, OPQ, PCA), each a driver model (centroids, codebooks, a rotation
+  * or a basis) plus one distributed table (inverted file, codes,
+  * projected base). A checkpoint directory holds the model as one
+  * Java-serialized blob (`model`, the codec the graph families' shard
+  * blobs use too) and the table as parquet (`table`), partitioned by
+  * `cid` when the table has that column (IVF, IVF-PQ), so a probe of
+  * the reloaded table is a partition-pruned scan.
   */
-private[knn] object IndexFiles {
+private[graft] object IndexFiles {
 
-  /** `rows` as (r, vec) parquet rows. */
-  def saveMatrix(spark: SparkSession, rows: Array[Array[Double]],
-      path: String): Unit = {
-    import spark.implicits._
-    rows.zipWithIndex.map { case (row, r) => (r, row.toSeq) }.toSeq
-      .toDF("r", "vec")
-      .coalesce(1).write.mode("overwrite").parquet(path)
+  /** Java serialization of one value: the one checkpoint blob codec. */
+  def toBytes(v: AnyRef): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val oos = new java.io.ObjectOutputStream(bos)
+    oos.writeObject(v); oos.close()
+    bos.toByteArray
   }
 
-  /** Reload a [[saveMatrix]] file: the rows in r order, driver-side. */
-  def loadMatrix(spark: SparkSession, path: String): Array[Array[Double]] = {
-    import spark.implicits._
-    spark.read.parquet(path).as[(Int, Seq[Double])]
-      .collect().sortBy(_._1).map(_._2.toArray)
+  /** Decode a [[toBytes]] blob. */
+  def fromBytes[T](b: Array[Byte]): T = {
+    val ois = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(b))
+    try ois.readObject().asInstanceOf[T] finally ois.close()
   }
 
-  /** Codebooks flattened to (j, c, dim, centroid) rows. */
-  def saveCodebooks(spark: SparkSession, cb: PqKnn.PqCodebooks,
-      path: String): Unit = {
-    import spark.implicits._
-    val rows = for (j <- 0 until cb.m; c <- cb.books(j).indices)
-      yield (j, c, cb.dim, cb.books(j)(c).toSeq)
-    rows.toDF("j", "c", "dim", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(path)
+  /** Write `model` and `table` as a checkpoint under `path`. */
+  def save(model: AnyRef, table: DataFrame, path: String): Unit = {
+    val p = new Path(s"$path/model")
+    val out = p.getFileSystem(table.sparkSession.sparkContext.hadoopConfiguration)
+      .create(p, true)
+    try out.write(toBytes(model)) finally out.close()
+    // co-locate each cluster before the hive-partitioned write: one
+    // file per cid instead of tasks x cids small files
+    val w = if (table.columns.contains("cid"))
+      table.repartition(col("cid")).write.partitionBy("cid")
+    else table.write
+    w.mode("overwrite").parquet(s"$path/table")
   }
 
-  /** Reload a [[saveCodebooks]] file (m x ksub rows, driver-side). */
-  def loadCodebooks(spark: SparkSession, path: String): PqKnn.PqCodebooks = {
-    import spark.implicits._
-    val rows = spark.read.parquet(path)
-      .as[(Int, Int, Int, Seq[Double])].collect()
-    val m = rows.map(_._1).max + 1
-    val books = Array.tabulate(m) { j =>
-      rows.filter(_._1 == j).sortBy(_._2).map(_._4.toArray)
+  /** Reload a [[save]] checkpoint: the model driver-side, the table a
+    * parquet scan (never cached, so every reader goes to the files and
+    * a `cid` join prunes them).
+    */
+  def load[M](spark: SparkSession, path: String): (M, DataFrame) = {
+    val p = new Path(s"$path/model")
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    val model = try fromBytes[M](in.readAllBytes()) finally in.close()
+    (model, spark.read.parquet(s"$path/table"))
+  }
+
+  /** The lifecycle: [[save]] `built` once per (session, family, parts)
+    * through [[IndexCache.checkpoint]], then [[load]] it once under
+    * `<family>-reloaded`. The memo holds the model and the table
+    * handle; the table is read through on every call.
+    */
+  def reloaded[M <: AnyRef](spark: SparkSession, family: String, parts: Any*)(
+      built: => (M, DataFrame)): (M, DataFrame) = {
+    val path = IndexCache.checkpoint(spark, family, parts: _*) { p =>
+      val (model, table) = built
+      save(model, table, p)
     }
-    PqKnn.PqCodebooks(m, rows.head._3, books)
+    IndexCache.getOrBuild(spark, s"$family-reloaded", parts: _*)(
+      load[M](spark, path))
   }
 }

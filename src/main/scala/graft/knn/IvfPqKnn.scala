@@ -38,23 +38,23 @@ object IvfPqKnn {
       overfetch: Int = 16): DataFrame = {
     val (base, queries, _, n) = ExactKnn.split(spark, dir)
     val (nC, nP) = IvfKnn.defaults(n, nCentroids, nprobe)
-    val (centroids, cb, lists) = builtIndex(spark, base, dir, nC, m, ksub)
+    val ((centroids, cb), lists) = builtIndex(spark, base, dir, nC, m, ksub)
     searchLists(spark, centroids, cb, lists, base, queries, k, nP, ksub,
       overfetch)
   }
 
-  /** Build (or reuse) the composed index: centroids + per-vector
-    * (cid, codes), memoized per dataset.
+  /** Build (or reuse) the composed index: (centroids, codebooks) +
+    * per-vector (cid, codes), memoized per dataset.
     */
   def builtIndex(spark: SparkSession, base: DataFrame, dir: String,
       nC: Int, m: Int, ksub: Int)
-      : (Array[Array[Double]], PqKnn.PqCodebooks, DataFrame) =
+      : ((Array[Array[Double]], PqKnn.PqCodebooks), DataFrame) =
   {
     val (cs, books) = IndexCache.getOrBuild(spark, "ivfpq", dir, nC, m, ksub) {
       (IvfKnn.trainCentroids(base, nC),
         PqKnn.trainCodebooks(base, m, ksub))
     }
-    (cs, books, IndexCache.persisted(spark, "ivfpq", dir, nC, m, ksub,
+    ((cs, books), IndexCache.persisted(spark, "ivfpq", dir, nC, m, ksub,
       "lists") {
       PqKnn.encode(base, books)
         .join(IvfKnn.assignCids(base, cs).select("vec_id", "cid"), "vec_id")
@@ -88,53 +88,23 @@ object IvfPqKnn {
     TwoStage.search(scored, k, overfetch, base, queries)
   }
 
-  /** Checkpoint the composed index: driver-tiny centroid and codebook
-    * files plus the code lists PARTITIONED BY cluster id — the
-    * FAISS-style on-disk IVF-PQ layout where a probe of the reloaded
-    * table is a partition-pruned scan (only the probed clusters' files
-    * are read).
-    */
-  def saveIndex(centroids: Array[Array[Double]], cb: PqKnn.PqCodebooks,
-      lists: DataFrame, path: String): Unit = {
-    IndexFiles.saveMatrix(lists.sparkSession, centroids, s"$path/centroids")
-    IndexFiles.saveCodebooks(lists.sparkSession, cb, s"$path/codebooks")
-    // one file per cid, not tasks x cids (see IvfKnn.saveIndex)
-    lists.repartition(col("cid")).write.mode("overwrite").partitionBy("cid")
-      .parquet(s"$path/lists")
-  }
-
-  /** Reload a [[saveIndex]] checkpoint (centroids/codebooks driver-read
-    * like IVF's; the code lists stay a distributed, cid-partitioned
-    * table).
-    */
-  def loadIndex(spark: SparkSession, path: String)
-      : (Array[Array[Double]], PqKnn.PqCodebooks, DataFrame) =
-    (IndexFiles.loadMatrix(spark, s"$path/centroids"),
-      IndexFiles.loadCodebooks(spark, s"$path/codebooks"),
-      spark.read.parquet(s"$path/lists"))
-
   /** Declared end-to-end IVF-PQ LIFECYCLE (build → save → load →
-    * search) — the checkpoint surface for the COMPOSED billion-scale
-    * layout, next to the graph (HNSW), routing (IVF), and compression
-    * (PQ) families. Bit-equal to [[topKBatch]] by construction (same
-    * [[searchLists]] body); IvfPqKnnSpec pins the equality. The save
-    * is memoized and charged to bench_build_ivfpq_ckpt; the reloaded
-    * index is memoized too (`ivfpq-reloaded`), so after the first call
-    * this query times the probe.
+    * search) through [[IndexFiles.reloaded]]: the model is (centroids,
+    * codebooks), the table the code lists, written PARTITIONED BY
+    * cluster id — the FAISS-style on-disk IVF-PQ layout — so the probe
+    * join's cid key prunes the reloaded scan to the probed clusters'
+    * files (dynamic partition pruning). Bit-equal to [[topKBatch]] by
+    * construction (same [[searchLists]] body); IvfPqKnnSpec pins the
+    * equality and the pruning. The save is charged to
+    * bench_build_ivfpq_ckpt.
     */
   def topKBatchLifecycle(spark: SparkSession, dir: String, k: Int = 10,
       nCentroids: Int = 0, nprobe: Int = 0, m: Int = 8, ksub: Int = 256,
       overfetch: Int = 16): DataFrame = {
     val (base, queries, _, n) = ExactKnn.split(spark, dir)
     val (nC, nP) = IvfKnn.defaults(n, nCentroids, nprobe)
-    val path = IndexCache.checkpoint(spark, "ivfpq", dir, nC, m, ksub) { p =>
-      val (cs, cb, lists) = builtIndex(spark, base, dir, nC, m, ksub)
-      saveIndex(cs, cb, lists, p)
-    }
-    val (cs, cb, l0) = IndexCache.getOrBuild(spark, "ivfpq-reloaded", dir,
-      nC, m, ksub)(loadIndex(spark, path))
-    val lists = IndexCache.persisted(spark, "ivfpq-reloaded", dir, nC, m,
-      ksub, "lists")(l0)
+    val ((cs, cb), lists) = IndexFiles.reloaded(spark, "ivfpq", dir, nC, m,
+      ksub)(builtIndex(spark, base, dir, nC, m, ksub))
     searchLists(spark, cs, cb, lists, base, queries, k, nP, ksub, overfetch)
   }
 }

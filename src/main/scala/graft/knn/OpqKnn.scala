@@ -162,44 +162,20 @@ object OpqKnn {
         opqCodes))
   }
 
-  /** Persist the OPQ index: the rotation as a matrix file, codebooks +
-    * codes through the PQ checkpoint format — the full index a serving
-    * fleet reloads without touching raw embeddings except to re-rank
-    * survivors.
-    */
-  def saveIndex(rot: Array[Array[Double]], cb: PqKnn.PqCodebooks,
-      codes: DataFrame, path: String): Unit = {
-    IndexFiles.saveMatrix(codes.sparkSession, rot, s"$path/rotation")
-    PqKnn.saveIndex(cb, codes, s"$path/pq")
-  }
-
-  /** Reload a [[saveIndex]] checkpoint: rotation rows driver-side
-    * (d×d doubles — tiny), codes stay distributed.
-    */
-  def loadIndex(spark: SparkSession, path: String)
-      : (Array[Array[Double]], PqKnn.PqCodebooks, DataFrame) = {
-    val (cb, codes) = PqKnn.loadIndex(spark, s"$path/pq")
-    (IndexFiles.loadMatrix(spark, s"$path/rotation"), cb, codes)
-  }
-
   /** Declared OPQ LIFECYCLE (train rotation + codebooks → save → load
-    * → search), extending the checkpoint surface to the rotated
-    * family. Bit-equal to [[topKBatch]] by construction (same scan
-    * body over the reloaded artifacts); OpqKnnSpec pins the equality
-    * and the declared row shares knn_opq_batch's literal oracle.
+    * → search): the model is (rotation, codebooks), the table the
+    * rotated codes, through [[IndexFiles.reloaded]]. Bit-equal to
+    * [[topKBatch]] by construction (same scan body over the reloaded
+    * artifacts); OpqKnnSpec pins the equality and the declared row
+    * shares knn_opq_batch's literal oracle.
     */
   def topKBatchLifecycle(spark: SparkSession, dir: String, k: Int = 10,
       m: Int = 8, ksub: Int = 256, overfetch: Int = 16): DataFrame = {
     val (base, queries, _, _) = ExactKnn.split(spark, dir)
-    val path = IndexCache.checkpoint(spark, "opq", dir, m, ksub) { p =>
-      val rot = rotation(spark, dir, m)
+    val ((rot, cb), codes) = IndexFiles.reloaded(spark, "opq", dir, m, ksub) {
       val (cb, codes) = cachedIndex(spark, dir, m, ksub)
-      saveIndex(rot, cb, codes, p)
+      ((rotation(spark, dir, m), cb), codes)
     }
-    val (rot, cb, enc) = IndexCache.getOrBuild(spark, "opq-reloaded", dir, m,
-      ksub)(loadIndex(spark, path))
-    val codes = IndexCache.persisted(spark, "opq-reloaded", dir, m, ksub,
-      "codes")(enc)
     TwoStage.search(PqKnn.adcScan(cb, codes, rotate(queries, rot)),
       k, overfetch, base, queries)
   }

@@ -66,41 +66,16 @@ object PcaKnn {
     IndexCache.persisted(spark, "pca", dir, outDim)(RandomProjection.project(
       ExactKnn.split(spark, dir)._1, basis(spark, dir, outDim)))
 
-  /** Persist the trained basis as a matrix file and the projected base
-    * table — index publication, same split as the PQ checkpoint
-    * (codebook-like metadata small and single-file, codes distributed).
-    */
-  def saveIndex(matrix: Array[Array[Double]], pBase: DataFrame,
-      path: String): Unit = {
-    IndexFiles.saveMatrix(pBase.sparkSession, matrix, s"$path/basis")
-    pBase.write.mode("overwrite").parquet(s"$path/projected")
-  }
-
-  /** Reload a [[saveIndex]] checkpoint: basis rows driver-side (outDim
-    * small), the projected table stays distributed.
-    */
-  def loadIndex(spark: SparkSession, path: String)
-      : (Array[Array[Double]], DataFrame) =
-    (IndexFiles.loadMatrix(spark, s"$path/basis"),
-      spark.read.parquet(s"$path/projected"))
-
-  /** Declared PCA LIFECYCLE (train → save → load → search), extending
-    * the checkpoint surface to the projection family. Bit-equal to
-    * [[topKBatch]] by construction (same scan and [[TwoStage.search]]
-    * over the reloaded basis/projection); PcaKnnSpec pins the equality.
-    * The save is memoized per dataset and charged to
-    * bench_build_pca_ckpt; the reloaded basis is memoized too
-    * (`pca-reloaded`), so after the first call this query times the
-    * probe.
+  /** Declared PCA LIFECYCLE (train → save → load → search): the basis
+    * and the projected base go through [[IndexFiles.reloaded]], and the
+    * scan reads the reloaded table through. Bit-equal to [[topKBatch]]
+    * by construction (same scan and [[TwoStage.search]]); PcaKnnSpec
+    * pins the equality. The save is charged to bench_build_pca_ckpt.
     */
   def topKBatchLifecycle(spark: SparkSession, dir: String, k: Int = 10,
       outDim: Int = 32, overfetch: Int = 16): DataFrame = {
-    val path = IndexCache.checkpoint(spark, "pca", dir, outDim)(
-      saveIndex(basis(spark, dir, outDim), memoProjected(spark, dir, outDim), _))
-    val (matrix, p0) = IndexCache.getOrBuild(spark, "pca-reloaded", dir,
-      outDim)(loadIndex(spark, path))
-    val pBase = IndexCache.persisted(spark, "pca-reloaded", dir, outDim,
-      "projected")(p0)
+    val (matrix, pBase) = IndexFiles.reloaded(spark, "pca", dir, outDim)(
+      (basis(spark, dir, outDim), memoProjected(spark, dir, outDim)))
     val (base, queries, _, _) = ExactKnn.split(spark, dir)
     TwoStage.search(TwoStage.cosineScan(pBase,
       RandomProjection.project(queries, matrix)), k, overfetch, base, queries)

@@ -168,12 +168,8 @@ abstract class ShardedKnn[G <: ShardGraph[G]](family: String,
     val spark = SparkSession.active
     import spark.implicits._
     val n = index.shards
-    index.graphs.map { case (s, g) =>
-      val bos = new java.io.ByteArrayOutputStream()
-      val oos = new java.io.ObjectOutputStream(bos)
-      oos.writeObject(g); oos.close()
-      (s, n, bos.toByteArray)
-    }.toDF("shard", "n_shards", "graph_bytes").write.mode("overwrite").parquet(path)
+    index.graphs.map { case (s, g) => (s, n, IndexFiles.toBytes(g)) }
+      .toDF("shard", "n_shards", "graph_bytes").write.mode("overwrite").parquet(path)
   }
 
   /** Reload a [[saveIndex]] checkpoint: the blobs shuffle onto
@@ -189,10 +185,7 @@ abstract class ShardedKnn[G <: ShardGraph[G]](family: String,
     ShardedIndex(n, stored.select("shard", "graph_bytes")
       .as[(Int, Array[Byte])].rdd
       .partitionBy(new HashPartitioner(n))
-      .mapValues { b =>
-        val ois = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(b))
-        ois.readObject().asInstanceOf[G]
-      })
+      .mapValues(IndexFiles.fromBytes[G]))
   }
 
   /** Fully distributed scatter-gather search of a QUERY DATAFRAME

@@ -419,7 +419,10 @@ object Dedup {
     (draw(1L), draw(0L))
   }
 
-  /** MinHash signature of a gram set as one tight JVM loop.
+  /** MinHash signature of a gram set, from its pre-computed FNV-64
+    * gram hashes (so the signature pass reuses the memoized
+    * [[gramHashSets]] instead of re-splitting and re-hashing every
+    * text), as one tight JVM loop.
     *
     * This is deliberately NOT a Column expression: the 128-permutation
     * min-update is interpreted per element under Spark's higher-order
@@ -427,13 +430,6 @@ object Dedup {
     * this loop does the same 128 x |grams| multiply-mod-min updates in
     * ~10 us. Per-row imperative compute is exactly the mapPartitions
     * escape hatch's purpose (SURVEY.md §7.5).
-    */
-  def minhashSig(grams: Seq[String]): Array[Long] =
-    minhashSigFromHashes(grams.iterator.map(fnv64))
-
-  /** Same signature from pre-computed FNV-64 gram hashes — lets the
-    * signature pass reuse the memoized [[gramHashSets]] instead of
-    * re-splitting and re-hashing every text.
     */
   def minhashSigFromHashes(ghashes: Iterator[Long]): Array[Long] = {
     val sig = Array.fill(NumPerms)(Long.MaxValue)

@@ -44,18 +44,6 @@ object Evaluation {
       .select(round(col("hits") / col("total"), 6).as("precision"))
   }
 
-  /** Macro-averaged per-query recall (one row per qid), for diagnostics:
-    * exposes which queries an approximate index misses.
-    */
-  def recallPerQuery(retrieved: DataFrame, relevant: DataFrame): DataFrame = {
-    val hits = retrieved.join(relevant, Seq("qid", "vec_id"), "left_semi")
-      .groupBy(col("qid")).agg(count(lit(1)).as("hits"))
-    val rel = relevant.groupBy(col("qid")).agg(count(lit(1)).as("n_rel"))
-    rel.join(hits, Seq("qid"), "left")
-      .select(col("qid"),
-        round(coalesce(col("hits"), lit(0)) / col("n_rel"), 6).as("recall"))
-  }
-
   /** Mean reciprocal rank: `retrieved` carries a 1-based rank column
     * `rk`; MRR = mean over queries of 1/rank-of-first-relevant hit
     * (0 for queries with none). 1-row output (column mrr, rounded 6).

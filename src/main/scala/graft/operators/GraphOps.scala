@@ -621,19 +621,15 @@ object GraphOps {
     * itself, exposed so GraphOpsSpec can demonstrate it on a synthetic
     * pendant-chain graph where the cascade provably removes nodes.
     */
-  def kCoreOf(adjacency: DataFrame, k: Int, rounds: Int,
-      cutover: Long = 10000000L): DataFrame = {
-    // small-graph cutover (the nearDupClusters discipline): an
-    // iterative peel pays ~4 scheduler round-trips per round, which
-    // dominates sub-cutover graphs (measured: 3.4 s for 9 rounds over
-    // a 30k-edge adjacency, ~0.3 s driver-side). Below the explicit
-    // edge cutover the edge list is BOUNDED BY CONSTRUCTION, so
-    // collecting it is not a scale leak; above it the distributed loop
-    // below runs unchanged. GraphOpsSpec pins both legs equal.
-    val nEdges = adjacency.count()
-    if (nEdges <= cutover) return kCoreDriver(adjacency, k, rounds)
-    kCoreDistributed(adjacency, k, rounds)
-  }
+  def kCoreOf(adjacency: DataFrame, k: Int, rounds: Int): DataFrame =
+    // small-graph cutover: an iterative peel pays ~4 scheduler
+    // round-trips per round, which dominates small graphs (measured:
+    // 3.4 s for 9 rounds over a 30k-edge adjacency, ~0.3 s
+    // driver-side). Up to the labeler's edge bound the edge list is
+    // collected and peeled on the driver; past it the distributed loop
+    // runs. GraphOpsSpec pins both legs equal.
+    kCoreDriver(adjacency, k, rounds)
+      .getOrElse(kCoreDistributed(adjacency, k, rounds))
 
   /** The distributed leg of [[kCoreOf]] — per round: one degree
     * aggregate + two broadcast semi-joins + a lineage-cutting
@@ -673,15 +669,20 @@ object GraphOps {
       .select(col("u").as("node"), col("deg"))
   }
 
-  /** The sub-cutover leg of [[kCoreOf]]: the same fixed-unroll peel on
-    * the collected edge multiset (same early exit, same output shape).
+  /** The driver leg of [[kCoreOf]], None past
+    * [[ComponentsDriverMaxEdges]]: one `limit(bound + 1)` collect both
+    * decides the leg and, under the bound, IS the edge multiset (the
+    * [[componentsDriver]] envelope), peeled with the same fixed unroll
+    * and early exit as [[kCoreDistributed]] (same output shape).
     */
   private[graft] def kCoreDriver(adjacency: DataFrame, k: Int,
-      rounds: Int): DataFrame = {
+      rounds: Int): Option[DataFrame] = {
     val spark = adjacency.sparkSession
     import spark.implicits._
+    val limitN = (ComponentsDriverMaxEdges + 1).toInt
     var edges = adjacency.select(col("u").cast("long"), col("v").cast("long"))
-      .as[(Long, Long)].collect()
+      .as[(Long, Long)].limit(limitN).collect()
+    if (edges.length > ComponentsDriverMaxEdges) return None
     var prevEdges = -1
     var r = 0
     while (r < rounds && prevEdges != 0) {
@@ -691,9 +692,8 @@ object GraphOps {
       if (edges.length == prevEdges) r = rounds
       else { prevEdges = edges.length; r += 1 }
     }
-    edges.groupBy(_._1).view.mapValues(_.length.toLong).toSeq
-      .map { case (u, d) => (u, d) }
-      .toDF("node", "deg")
+    Some(edges.groupBy(_._1).view.mapValues(_.length.toLong).toSeq
+      .toDF("node", "deg"))
   }
 
   /** Triangle census of the co-purchase graph: edge and triangle

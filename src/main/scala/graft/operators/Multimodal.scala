@@ -78,12 +78,6 @@ object Multimodal {
       }
       hist
     }
-
-    /** STUB resize — a real one reshapes pixels; this rescales the
-      * metadata and re-derives features at the "new resolution".
-      */
-    def resizeStub(row: MediaRow, w: Int, h: Int): MediaRow =
-      row.copy(width = w, height = h)
   }
 
   /** Deterministic media table derived from `documents` (no media

@@ -956,7 +956,8 @@ object VectorQueries {
       SELECT * FROM (VALUES (CAST(0.98 AS DOUBLE))) AS t("recall")"""),
 
     // composed-layout checkpoint: build -> save (cid-partitioned code
-    // lists) -> load -> search, bit-equal to the in-memory index
+    // lists) -> load -> partition-pruned search, bit-equal to the
+    // in-memory index (IvfPqKnnSpec pins both)
     // the same relation as the knn_ivf_batch pin at sf0.01
     row("knn_ivfpq_lifecycle", (s, d) => IvfPqKnn.topKBatchLifecycle(s, d),
       GeneratedOracles.pins("knn_ivf_batch")),

@@ -43,14 +43,6 @@ class CollectSiteLintSpec extends AnyFunSuite {
     ("PqKnn.scala",
       ".as[(Long, Array[Double])].collect().map(r => l2normalize(r._2))") ->
       (1, "sampleRows-capped (10k) codebook training sample"),
-    ("IndexFiles.scala", ".as[(Int, Int, Int, Seq[Double])].collect()") ->
-      (1, "m x ksub codebook rows (checkpoint reload codec; " +
-        "family:pq-reloaded, family:opq-reloaded and " +
-        "family:ivfpq-reloaded cap the memoized results)"),
-    ("IndexFiles.scala", ".collect().sortBy(_._1).map(_._2.toArray)") ->
-      (1, "matrix rows (checkpoint reload codec): k centroid rows " +
-        "(family:ivf bound, family:ivfpq-reloaded), d x d rotation rows " +
-        "(family:opq-reloaded), outDim x d basis rows (family:pca-reloaded)"),
     ("IvfKnn.scala",
       ".select(\"emb\").collect().map(_.getSeq[Double](0).toArray)") ->
       (1, "limit(k) seed centroids"),
@@ -132,8 +124,9 @@ class CollectSiteLintSpec extends AnyFunSuite {
     ("GraphOps.scala", ".as[(Long, Long, Long)].collect()") ->
       (1, "nbrCap-capped lists inside the family:item-nbr-lists build " +
         "(ItemNbrDriverMaxEntries; distributed CF leg above cutover)"),
-    ("GraphOps.scala", ".as[(Long, Long)].collect()") ->
-      (1, "k-core driver leg, cutover-gated (distributed peel above)"),
+    ("GraphOps.scala", ".as[(Long, Long)].limit(limitN).collect()") ->
+      (1, "limit(ComponentsDriverMaxEdges+1) decide-and-reuse envelope " +
+        "of the k-core driver leg (distributed peel past it)"),
     ("GraphOps.scala",
       "val es = edges.as[(Long, Long)].limit(limitN).collect()") ->
       (1, "limit(ComponentsDriverMaxEdges+1) decide-and-reuse envelope " +

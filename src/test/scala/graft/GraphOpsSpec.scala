@@ -178,7 +178,7 @@ class GraphOpsSpec extends SparkSpec {
     // constant-factor dispatch, never a semantic fork
     val adj = GraphOps.bidirAdjacency(spark, sf0001, 3)
     val dist = GraphOps.kCoreDistributed(adj, 2, 10)
-    val drv = GraphOps.kCoreDriver(adj, 2, 10)
+    val drv = GraphOps.kCoreDriver(adj, 2, 10).get
     assert(dist.exceptAll(drv).count() == 0 && drv.exceptAll(dist).count() == 0,
       "driver and distributed k-core legs diverged")
   }

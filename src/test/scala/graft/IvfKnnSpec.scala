@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.knn.{ExactKnn, IvfKnn}
+import graft.knn.{ExactKnn, IndexFiles, IvfKnn}
 import graft.operators.Evaluation
 
 class IvfKnnSpec extends SparkSpec {
@@ -33,9 +33,10 @@ class IvfKnnSpec extends SparkSpec {
     val qs = queries.orderBy("vec_id").limit(5)
     val before = IvfKnn.searchIndex(index, qs, k = 5, nprobe = 3).collect().toSet
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
-    IvfKnn.saveIndex(index, dir)
-    val loaded = IvfKnn.loadIndex(spark, dir)
+    val dir = graft.streaming.OneShot.tempDir("graft-ivf")
+    IndexFiles.save(index.centroids, index.assigned, dir)
+    val (cs, assigned) = IndexFiles.load[Array[Array[Double]]](spark, dir)
+    val loaded = IvfKnn.IvfIndex(cs, assigned)
     assert(loaded.centroids.length == 8)
     assert(loaded.centroids.zip(index.centroids)
       .forall { case (a, b) => a.sameElements(b) },

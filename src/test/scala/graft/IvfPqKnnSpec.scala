@@ -27,9 +27,14 @@ class IvfPqKnnSpec extends SparkSpec {
     val key = (r: org.apache.spark.sql.Row) =>
       (r.getLong(0), r.getInt(3))
     val live = IvfPqKnn.topKBatch(spark, sf0001).collect().sortBy(key)
-    val reloaded = IvfPqKnn.topKBatchLifecycle(spark, sf0001)
-      .collect().sortBy(key)
+    val lifecycle = IvfPqKnn.topKBatchLifecycle(spark, sf0001)
+    val reloaded = lifecycle.collect().sortBy(key)
     assert(live.sameElements(reloaded),
       s"live ${live.length} rows != reloaded ${reloaded.length}")
+    // the probe relation's cid join must prune the reloaded,
+    // cid-partitioned code lists at runtime
+    val plan = lifecycle.queryExecution.executedPlan.toString
+    assert(plan.contains("dynamicpruning"),
+      s"reloaded code lists not dynamically pruned:\n$plan")
   }
 }

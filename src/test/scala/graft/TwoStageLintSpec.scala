@@ -10,7 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * may appear only in `TwoStage.scala`. A compressed family that cuts
   * or re-ranks its own candidates again fails the suite, and stale
   * entries fail so the list never drifts above the code. Same shape as
-  * [[PersistSiteLintSpec]].
+  * [[PersistSiteLintSpec]]. `IndexCache.checkpoint(` lines ride the same
+  * allowlist: a checkpoint is written only by the two lifecycles,
+  * `IndexFiles.reloaded` and the shard harness, so a family that saves
+  * and reloads on its own fails too.
   */
 class TwoStageLintSpec extends AnyFunSuite {
 
@@ -19,6 +22,7 @@ class TwoStageLintSpec extends AnyFunSuite {
   private val ShardMerge = "shard merge"
   private val CoarseCut = "coarse cut"
   private val Rerank = "re-rank"
+  private val Checkpoint = "checkpoint"
 
   /** (source file basename, trimmed line) -> (multiplicity, role, reason). */
   private val allow: Map[(String, String), (Int, String, String)] = Map(
@@ -43,7 +47,15 @@ class TwoStageLintSpec extends AnyFunSuite {
       (1, CoarseCut, "TwoStage.candidates: k·overfetch by (coarse, vec_id)"),
     ("TwoStage.scala",
       "ExactKnn.rerank(candidates(scored, k, overfetch).select(\"qid\", \"vec_id\"),") ->
-      (1, Rerank, "TwoStage.search: exact re-rank of the candidates"))
+      (1, Rerank, "TwoStage.search: exact re-rank of the candidates"),
+    ("IndexFiles.scala",
+      "val path = IndexCache.checkpoint(spark, family, parts: _*) { p =>") ->
+      (1, Checkpoint, "IndexFiles.reloaded: the IVF, IVF-PQ, PQ, OPQ and " +
+        "PCA lifecycle"),
+    ("ShardedIndex.scala",
+      "val path = graft.IndexCache.checkpoint(spark, family, dir, shards)(") ->
+      (1, Checkpoint, "ShardedKnn.topKBatchLifecycle: the graph families' " +
+        "lifecycle"))
 
   private def knnSources: Seq[java.nio.file.Path] = {
     val root = java.nio.file.Paths.get("src/main/scala/graft/knn")
@@ -65,19 +77,22 @@ class TwoStageLintSpec extends AnyFunSuite {
         val t = raw.trim
         val comment = t.startsWith("//") || t.startsWith("*")
         if (!comment && (t.contains("topKPerGroup(")
-            || t.contains("ExactKnn.rerank(")))
+            || t.contains("ExactKnn.rerank(")
+            || t.contains("IndexCache.checkpoint(")))
           found((name, t)) += 1
       }
     }
     val extras = found.keys.filterNot(allow.contains).toSeq.sorted
     assert(extras.isEmpty,
-      "unlisted top-k / re-rank site(s) — a compressed family answers " +
-        "through TwoStage.search; anything else needs an entry WITH " +
-        "ITS ROLE:\n  " + extras.mkString("\n  "))
+      "unlisted top-k / re-rank / checkpoint site(s) — a compressed " +
+        "family answers through TwoStage.search and checkpoints through " +
+        "IndexFiles.reloaded; anything else needs an entry WITH ITS " +
+        "ROLE:\n  " + extras.mkString("\n  "))
     val stale = allow.keys.filterNot(found.contains).toSeq.sorted
     assert(stale.isEmpty, s"stale allowlist entries (code moved on — " +
       s"prune them):\n  ${stale.mkString("\n  ")}")
-    val roles = Set(ExactScan, IvfProbe, ShardMerge, CoarseCut, Rerank)
+    val roles = Set(ExactScan, IvfProbe, ShardMerge, CoarseCut, Rerank,
+      Checkpoint)
     allow.foreach { case (k @ (file, _), (n, role, reason)) =>
       assert(found(k) == n,
         s"$k: expected $n occurrence(s), found ${found(k)} — a NEW " +
@@ -86,6 +101,10 @@ class TwoStageLintSpec extends AnyFunSuite {
       if (role == CoarseCut || role == Rerank)
         assert(file == "TwoStage.scala",
           s"$k: the $role belongs to TwoStage.scala only")
+      if (role == Checkpoint)
+        assert(Set("IndexFiles.scala", "ShardedIndex.scala")(file),
+          s"$k: checkpoints are written by IndexFiles.reloaded and the " +
+            "shard harness only")
     }
     assert(allow.values.count(_._2 == CoarseCut) == 1 &&
       allow.values.count(_._2 == Rerank) == 1,
