@@ -212,15 +212,10 @@ object Bench {
         () => {
           val nbrs = operators.GraphOps.itemNeighborListsDF(spark, sfDir)
             .count()
-          // the driver broadcast exists only below basketCompletion's
-          // cutover — past it the serving row takes the distributed leg,
-          // so collecting here would trip the build bound on an artifact
-          // nothing reads (ADVICE r10)
-          val bcSize =
-            if (nbrs <= operators.GraphOps.ItemNbrDriverMaxEntries)
-              operators.GraphOps.itemNeighborBroadcast(spark, sfDir)
-                .value.size.toLong
-            else 0L
+          // the memo makes basketCompletion's cutover decision: past
+          // the `item-nbr-bc` bound it holds no broadcast
+          val bcSize = operators.GraphOps.itemNeighborBroadcast(spark, sfDir)
+            .fold(0L)(_.value.size.toLong)
           operators.GraphOps.itemPairCounts(spark, sfDir).count()
             + nbrs + bcSize
         }),

@@ -132,11 +132,13 @@ object IndexCache {
     */
   def clear(): Unit = { cache.clear(); locks.clear() }
 
-  /** Destroy and evict this session's BROADCAST-valued entries — the
-    * bench's between-section release: broadcast blocks survive
-    * `catalog.clearCache()` + RDD unpersists, and nothing after the
-    * release point reads one (a later getOrBuild on the same key would
-    * simply rebuild). Dataset handles / scalars / path memos stay.
+  /** Destroy and evict this session's BROADCAST-valued entries (bare,
+    * or a cutover memo's `Some`) — the bench's between-section release:
+    * broadcast blocks survive `catalog.clearCache()` + RDD unpersists.
+    * A later getOrBuild on the key rebuilds, but a persisted memo whose
+    * lineage captured a memoized broadcast would fail on recompute, so
+    * memos hold driver values and their readers broadcast per build.
+    * Dataset handles / scalars / path memos / driver maps stay.
     */
   def releaseBroadcasts(spark: SparkSession): Unit = {
     val appId = spark.sparkContext.applicationId
@@ -144,8 +146,9 @@ object IndexCache {
     cache.asScala.foreach { case (k, v) =>
       if (k._1 == appId) v match {
         case b: org.apache.spark.broadcast.Broadcast[_] =>
-          cache.remove(k)
-          b.destroy()
+          cache.remove(k); b.destroy()
+        case Some(b: org.apache.spark.broadcast.Broadcast[_]) =>
+          cache.remove(k); b.destroy()
         case _ => ()
       }
     }
@@ -164,19 +167,13 @@ object IndexCache {
   // BoundAuditSweepSpec sweeps the whole declared surface against this.
   // ---------------------------------------------------------------------
 
-  /** Max driver-held LEAF elements per key family. Each bound names its
-    * build-site origin.
-    * Bounds are deliberately ~10x the sf0.1 measurement — headroom for
-    * bigger SFs of the artifact's own O(1)/catalog-bounded growth, tight
-    * enough that corpus-proportional growth (the failure mode this
-    * guards) trips immediately.
+  /** Max driver-held LEAF elements per key family, each with the
+    * build-site origin of its bound. Bounds are deliberately ~10x the
+    * sf0.1 measurement — headroom for bigger SFs of the artifact's own
+    * O(1)/catalog-bounded growth, tight enough that corpus-proportional
+    * growth (the failure mode this guards) trips immediately. The
+    * cutover entries bound [[graft.plans.GraftOps.driverOr]] probes.
     */
-  /** Mirror of GraphOps.ItemNbrDriverMaxEntries (IndexCache sits below
-    * the operators package, so the constant is duplicated here and
-    * cross-checked by BoundAuditSweepSpec).
-    */
-  private[graft] val ItemNbrDriverMax = 4000000L
-
   private[graft] val driverArtifactBounds: Map[String, (String, Long)] = Map(
     // --- handles to persisted distributed datasets (+ O(1) scalars) ---
     "hnsw" -> ("shards int + placed RDD[(Int, HnswIndex)] handle", 8L),
@@ -208,6 +205,7 @@ object IndexCache {
     "graph-bipartite-trans" -> ("persisted transition DataFrame handle", 8L),
     "graph-deg" -> ("persisted node-degree DataFrame handle", 8L),
     "graph-tri" -> ("persisted triangle DataFrame handle", 8L),
+    "graph-oriented" -> ("persisted degree-oriented edge handle", 8L),
     "graph-labels" -> ("persisted LPA community DataFrame handle", 8L),
     "graph-sssp-adj" -> ("persisted weighted adjacency handle", 8L),
     "graph-ppr-seed" -> ("persisted seeded-walk DataFrame handle", 8L),
@@ -284,7 +282,7 @@ object IndexCache {
     // whole-corpus flat matrix (n x dim doubles + n ids), envelope-
     // identical to the BroadcastExchange a broadcast-NLJ would stage.
     // Every scale consumer is cutover-gated to the LSH leg
-    // (DbscanExactMaxRows; the LSH twin rows); the bound is sized to
+    // (dbscan-exact-rows; the LSH twin rows); the bound is sized to
     // the sf10 audit tier (200k x 64 ≈ 13M leaves) so running the
     // O(n²) baseline past the measured tiers trips the audit instead
     // of silently ballooning the driver.
@@ -304,10 +302,17 @@ object IndexCache {
     "unigram-vocab" -> ("capped unigram-LM vocab entries", 1000000L),
     "bpe-merges" -> ("nMerges merge-rule entries", 100000L),
     "gram-topfreq" -> ("TopFreqGrams (64k) df-map entries", 200000L),
-    "item-nbr-lists" -> ("|items| x nbrCap (ItemNbrDriverMaxEntries)",
-      3L * ItemNbrDriverMax),
-    "item-nbr-bc" -> ("broadcast of the same capped lists",
-      3L * ItemNbrDriverMax))
+    // --- driver-or-distributed cutovers (GraftOps.driverOr) ---
+    "item-nbr-bc" -> ("4M capped CF (p, rec, n) rows x 3 leaves, a few " +
+      "hundred MB of driver map; co-partitioned serving past it", 12000000L),
+    "driver-edges" -> ("10M (Long, Long) edges = 160 MB for the driver " +
+      "union-find / k-core peel; distributed legs past it", 10000000L),
+    "lsh-verify-flat" -> ("rows x dim doubles = 256 MB of LSH verification " +
+      "broadcast; distributed join leg past it", 32000000L),
+    "dbscan-exact-rows" -> ("vectors the O(n^2) exact dbscan pairing scans " +
+      "(sf0.01/0.1 panels); LSH banding leg past it", 4000L),
+    "bpe-word-counts" -> ("distinct words the driver BPE trainer holds " +
+      "(vocabulary-sized); distributed merge loop past it", 1000000L))
 
   /** Leaf-element count of a cached value: Dataset handles are
     * distributed (0), strings/scalars O(1), collections and case
@@ -351,7 +356,15 @@ object IndexCache {
     audited.add((key, family, measured, bound))
   }
 
-  /** Snapshot of every bound-enforced build so far (tests). */
+  /** Log a [[graft.plans.GraftOps.driverOr]] decision: its probe rows
+    * and row bound, keyed `driverOr:<family>:<leg>`.
+    */
+  private[graft] def recordLeg(family: String, leg: String, rows: Long,
+      bound: Long): Unit = audited.add((s"driverOr:$family:$leg", family, rows, bound))
+
+  /** Snapshot of every bound-enforced build and cutover decision so
+    * far (tests).
+    */
   private[graft] def auditLog: Seq[(String, String, Long, Long)] = {
     import scala.jdk.CollectionConverters._
     audited.synchronized { audited.asScala.toList }

@@ -329,19 +329,20 @@ object Dedup {
     */
   private val TopFreqGrams = 65536
 
-  /** Broadcast df map of the [[TopFreqGrams]] most common gram hashes —
-    * memoized per dataset next to [[gramHashSets]].
+  /** Driver df map of the [[TopFreqGrams]] most common gram hashes —
+    * memoized per dataset next to [[gramHashSets]]. The memo holds the
+    * map, not a broadcast: its readers broadcast per build, so a cache
+    * release never destroys a broadcast a persisted pair memo's lineage
+    * still captures.
     */
-  private def topGramFreq(spark: SparkSession, dir: String)
-      : org.apache.spark.broadcast.Broadcast[Map[Long, Long]] =
+  private def topGramFreq(spark: SparkSession, dir: String): Map[Long, Long] =
     graft.IndexCache.getOrBuild(spark, "gram-topfreq", dir) {
-      val top = gramHashSets(spark, dir)
+      gramHashSets(spark, dir)
         .select(explode(col("ghashes")).as("gram"))
         .groupBy("gram").agg(count(lit(1)).as("df"))
         .orderBy(col("df").desc, col("gram"))
         .limit(TopFreqGrams)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      spark.sparkContext.broadcast(top)
     }
 
   /** The pair mining itself — prefix-filtered set-similarity self-join
@@ -376,7 +377,7 @@ object Dedup {
       threshold: Double): DataFrame = {
     import spark.implicits._
     val g = gramHashSets(spark, dir)
-    val bcFreq = topGramFreq(spark, dir)
+    val bcFreq = spark.sparkContext.broadcast(topGramFreq(spark, dir))
     val prefixes = g.as[(Long, Array[Long])].flatMap { case (id, hs) =>
       val freq = bcFreq.value
       val sorted = hs.sortBy(h => (freq.getOrElse(h, 0L), h))
@@ -823,29 +824,39 @@ object Dedup {
     * the audited-tier envelope, so running the O(n²) yardstick past
     * the tiers it exists for trips the audit instead of silently
     * ballooning the driver (r12 verdict #2: every scale consumer is
-    * cutover-gated to the LSH leg; this baseline serves DedupSpec,
-    * the sub-cutover dbscan leg, and the DuckDB oracle replay).
+    * cutover-gated to the LSH leg; this baseline serves DedupSpec and
+    * the DuckDB oracle replay).
     */
   def embeddingNearDupExactNormalized(n: DataFrame,
       threshold: Double): DataFrame = {
-    val spark = n.sparkSession
-    import spark.implicits._
-    val rows = n.select(col("vec_id"), col("nv")).as[(Long, Array[Double])]
     // key = semantic hash AND row count (r13 advice): a 32-bit plan-hash
     // collision between two corpora in one session — or the same path
     // re-written with different data mid-session — must not serve a
     // stale flat matrix to the exact yardstick. The count is one cheap
     // action on what is in practice the persisted norm cache.
-    val (ids, flat, _) = graft.IndexCache.getOrBuild(spark,
+    val corpus = graft.IndexCache.getOrBuild(n.sparkSession,
         "neardup-oracle-corpus", n.queryExecution.analyzed.semanticHash(),
         n.count()) {
       collectFlat(n)
     }
+    exactKernel(n, corpus, threshold)
+  }
+
+  /** The fused exact kernel: every (vec_id, nv) row of `n` scored
+    * against the flat id-sorted `side` matrix, pairs vec_a < vec_b.
+    */
+  private def exactKernel(n: DataFrame,
+      side: (Array[Long], Array[Double], Int), threshold: Double)
+      : DataFrame = {
+    val spark = n.sparkSession
+    import spark.implicits._
+    val (ids, flat, _) = side
     val bc = spark.sparkContext.broadcast((ids, flat))
     // rounding moves a value by <= 5e-7, so anything below this guard
     // cannot reach `threshold` after rounding — the exact filter runs
     // on the rounded value only for the rare near-threshold survivors
     val guard = threshold - 1e-6
+    val rows = n.select(col("vec_id"), col("nv")).as[(Long, Array[Double])]
     rows.mapPartitions { it =>
       val (bIds, bFlat) = bc.value
       val m = bIds.length
@@ -982,8 +993,8 @@ object Dedup {
     * universe is bounded at ≤ 2·target vectors at EVERY tier and the
     * oracle recomputes instead of pinning. Stride resolves to 1 at the
     * sf0.01 oracle tier (the historical full fixture, bit-identical);
-    * 2·target = 4000 also keeps the panel under
-    * [[DbscanExactMaxRows]], so the gated dbscan row stays on its
+    * 2·target = 4000 also keeps the panel under the
+    * `dbscan-exact-rows` bound, so the gated dbscan row stays on its
     * exact-leg oracle baseline at derived tiers.
     */
   def plantedNormalizedEmbeddingsPanel(spark: SparkSession, dir: String,
@@ -1023,98 +1034,94 @@ object Dedup {
     * are invariant under positive scaling, so the band keys are
     * identical on unit vectors, and verification becomes a clamped dot
     * product.
+    * Under the `lsh-verify-flat` bound (entries / dim rows,
+    * [[graft.plans.GraftOps.driverOr]]) the probe rows ARE the fused
+    * kernel's flat broadcast; past it [[lshVerifyDistributed]] runs.
     */
-  /** Fused-verification broadcast bound: the flat matrix the LSH leg
-    * ships is n x dim doubles; past this entry count (256 MB of
-    * doubles) the kernel would stage an executor-memory-sized artifact
-    * through the driver, so verification cuts over to the fully
-    * distributed join form below — slower per candidate, unbounded in
-    * corpus size. Same cutover discipline as the CF neighbor lists and
-    * [[GraphOps.ComponentsDriverMaxEdges]].
-    */
-  private[graft] val LshBroadcastMaxEntries = 32000000L
-
   def embeddingNearDupLshNormalized(normalized: DataFrame, dim: Int,
       threshold: Double = 0.9, bands: Int = 16, rowsPerBand: Int = 8,
-      seed: Long = 7L,
-      maxBroadcastEntries: Long = LshBroadcastMaxEntries): DataFrame = {
+      seed: Long = 7L): DataFrame = {
     val spark = normalized.sparkSession
     import spark.implicits._
-    val guard0 = threshold - 1e-6
-    // Leg selection WITHOUT a separate count() action (r11 advice): one
-    // bounded collect of at most maxRows+1 rows both decides the regime
-    // and, in the (common) broadcast regime, IS the flat envelope — the
-    // broadcast path costs one scan instead of count-then-recollect.
-    val maxRows = math.max(1L, maxBroadcastEntries / math.max(1, dim))
-    val limitN = math.min(maxRows + 1, Int.MaxValue.toLong).toInt
-    val headRows = normalized.select(col("vec_id"), col("nv"))
-      .as[(Long, Array[Double])].limit(limitN).collect()
-    // past the broadcast bound: verify on the DEDUPED candidate pairs
-    // (16-byte rows) with both vectors joined on — two candidate-
-    // bounded shuffles, no driver artifact, identical arithmetic. (The
-    // 197 s regression this kernel replaced joined vectors onto the
-    // RAW collision stream and deduped the full collision relation;
-    // deduping the id pairs FIRST keeps the join input survivors-sized.)
-    if (headRows.length > maxRows) {
-      val v = normalized.select(col("vec_id"), col("nv"))
-      return lshCandidatePairs(normalized, dim, bands, rowsPerBand, seed)
-        .join(v.withColumnRenamed("vec_id", "vec_a")
-          .withColumnRenamed("nv", "va"), "vec_a")
-        .join(v.withColumnRenamed("vec_id", "vec_b")
-          .withColumnRenamed("nv", "vb"), "vec_b")
-        .select(col("vec_a"), col("vec_b"), col("va"), col("vb"))
-        .as[(Long, Long, Array[Double], Array[Double])]
-        .flatMap { case (a, b, va, vb) =>
-          var s = 0.0; var k = 0
-          while (k < va.length) { s += va(k) * vb(k); k += 1 }
-          val clamped = if (s > 0.0) s else 0.0
-          if (clamped >= guard0) {
-            val sim = roundHalfUp6(clamped)
-            if (sim >= threshold) Iterator.single((a, b, sim))
-            else Iterator.empty
-          } else Iterator.empty
-        }.toDF("vec_a", "vec_b", "sim")
-    }
-    // verification rides the SAME flattened broadcast envelope as the
-    // exact kernel: candidates carry two 8-byte ids through the join,
-    // vectors are looked up in the broadcast matrix inside a fused FMA
-    // loop, and the pair dedup runs AFTER the threshold (the surviving
-    // relation, not the raw band collisions). The former plan joined
-    // both 64-dim arrays onto every raw candidate and deduped the full
-    // collision relation first — at the 10x tier's moderate-threshold
-    // regime (23M collisions) that materialization measured 197 s vs
-    // seconds for this form (r11; the same lesson as the exact leg's
-    // NLJ-to-kernel move).
-    val (ids, flat, _) = flattenRows(headRows)
-    val bc = spark.sparkContext.broadcast((ids, flat))
-    val guard = threshold - 1e-6
-    lshCandidatePairsRaw(normalized, dim, bands, rowsPerBand, seed)
-      .as[(Long, Long)]
-      .mapPartitions { it =>
-        val (bIds, bFlat) = bc.value
-        it.flatMap { case (a, b) =>
-          val ia = java.util.Arrays.binarySearch(bIds, a)
-          val ib = java.util.Arrays.binarySearch(bIds, b)
-          if (ia < 0 || ib < 0) Iterator.empty
-          else {
-            val d = bFlat.length / bIds.length
-            var s = 0.0; var k = 0
-            val oa = ia * d; val ob = ib * d
-            while (k < d) { s += bFlat(oa + k) * bFlat(ob + k); k += 1 }
-            val clamped = if (s > 0.0) s else 0.0
-            if (clamped >= guard) {
-              val sim = roundHalfUp6(clamped)
-              if (sim >= threshold) Iterator.single((a, b, sim))
-              else Iterator.empty
-            } else Iterator.empty
+    graft.plans.GraftOps.driverOr(normalized.select(col("vec_id"), col("nv"))
+        .as[(Long, Array[Double])], "lsh-verify-flat", rowWidth = dim) {
+      headRows =>
+      // verification rides the SAME flattened broadcast envelope as the
+      // exact kernel: candidates carry two 8-byte ids through the join,
+      // vectors are looked up in the broadcast matrix inside a fused FMA
+      // loop, and the pair dedup runs AFTER the threshold (the surviving
+      // relation, not the raw band collisions). The former plan joined
+      // both 64-dim arrays onto every raw candidate and deduped the full
+      // collision relation first — at the 10x tier's moderate-threshold
+      // regime (23M collisions) that materialization measured 197 s vs
+      // seconds for this form (r11; the same lesson as the exact leg's
+      // NLJ-to-kernel move).
+      val (ids, flat, _) = flattenRows(headRows)
+      val bc = spark.sparkContext.broadcast((ids, flat))
+      val guard = threshold - 1e-6
+      lshCandidatePairsRaw(normalized, dim, bands, rowsPerBand, seed)
+        .as[(Long, Long)]
+        .mapPartitions { it =>
+          val (bIds, bFlat) = bc.value
+          it.flatMap { case (a, b) =>
+            val ia = java.util.Arrays.binarySearch(bIds, a)
+            val ib = java.util.Arrays.binarySearch(bIds, b)
+            if (ia < 0 || ib < 0) Iterator.empty
+            else {
+              val d = bFlat.length / bIds.length
+              var s = 0.0; var k = 0
+              val oa = ia * d; val ob = ib * d
+              while (k < d) { s += bFlat(oa + k) * bFlat(ob + k); k += 1 }
+              val clamped = if (s > 0.0) s else 0.0
+              if (clamped >= guard) {
+                val sim = roundHalfUp6(clamped)
+                if (sim >= threshold) Iterator.single((a, b, sim))
+                else Iterator.empty
+              } else Iterator.empty
+            }
           }
-        }
+        }.toDF("vec_a", "vec_b", "sim")
+        // pair dedup via grouped max (sim is a pure function of the pair,
+        // so max == the value; dropDuplicates through the typed-kernel
+        // boundary trips a Catalyst binding bug in Spark 4.1)
+        .groupBy(col("vec_a"), col("vec_b"))
+        .agg(max(col("sim")).as("sim"))
+    }(lshVerifyDistributed(normalized, dim, threshold, bands, rowsPerBand,
+      seed))
+  }
+
+  /** Past-bound verification leg of [[embeddingNearDupLshNormalized]]:
+    * verify on the DEDUPED candidate pairs (16-byte rows) with both
+    * vectors joined on — two candidate-bounded shuffles, no driver
+    * artifact, identical arithmetic. (The 197 s regression this kernel
+    * replaced joined vectors onto the RAW collision stream and deduped
+    * the full collision relation; deduping the id pairs FIRST keeps the
+    * join input survivors-sized.)
+    */
+  private[graft] def lshVerifyDistributed(normalized: DataFrame, dim: Int,
+      threshold: Double = 0.9, bands: Int = 16, rowsPerBand: Int = 8,
+      seed: Long = 7L): DataFrame = {
+    val spark = normalized.sparkSession
+    import spark.implicits._
+    val guard = threshold - 1e-6
+    val v = normalized.select(col("vec_id"), col("nv"))
+    lshCandidatePairs(normalized, dim, bands, rowsPerBand, seed)
+      .join(v.withColumnRenamed("vec_id", "vec_a")
+        .withColumnRenamed("nv", "va"), "vec_a")
+      .join(v.withColumnRenamed("vec_id", "vec_b")
+        .withColumnRenamed("nv", "vb"), "vec_b")
+      .select(col("vec_a"), col("vec_b"), col("va"), col("vb"))
+      .as[(Long, Long, Array[Double], Array[Double])]
+      .flatMap { case (a, b, va, vb) =>
+        var s = 0.0; var k = 0
+        while (k < va.length) { s += va(k) * vb(k); k += 1 }
+        val clamped = if (s > 0.0) s else 0.0
+        if (clamped >= guard) {
+          val sim = roundHalfUp6(clamped)
+          if (sim >= threshold) Iterator.single((a, b, sim))
+          else Iterator.empty
+        } else Iterator.empty
       }.toDF("vec_a", "vec_b", "sim")
-      // pair dedup via grouped max (sim is a pure function of the pair,
-      // so max == the value; dropDuplicates through the typed-kernel
-      // boundary trips a Catalyst binding bug in Spark 4.1)
-      .groupBy(col("vec_a"), col("vec_b"))
-      .agg(max(col("sim")).as("sim"))
   }
 
   /** The BLOCKING stage of [[embeddingNearDupLshNormalized]], exposed
@@ -1248,20 +1255,19 @@ object Dedup {
     * Scale shape: the declared row runs over the deterministic
     * [[plantedNormalizedEmbeddingsPanel]] universe (≤ 4000 vectors at
     * every tier; stride 1 = the historical full fixture at the sf0.01
-    * oracle tier — r13 verdict #1), which keeps it under
-    * [[DbscanExactMaxRows]] so the DuckDB oracle reconstructs the SAME
-    * exact pairing at derived tiers instead of pinning a generation
+    * oracle tier — r13 verdict #1), which keeps it under the
+    * `dbscan-exact-rows` bound so the DuckDB oracle reconstructs the
+    * SAME exact pairing at derived tiers instead of pinning a generation
     * literal. The pair relation itself stays CUTOVER-GATED like the
     * union-find and CF legs (r10 verdict weak #3) — the exact O(n²)
-    * scan below [[DbscanExactMaxRows]] vectors,
+    * scan up to the bound ([[dbscanPairSource]]),
     * [[lshCandidatePairs]] banding above it with threshold-adapted
     * parameters (shorter band keys + more bands than the 0.98-regime
     * leg, because collision probability per sign bit is only
     * 1−θ/π ≈ 0.65 at cosine 0.45; 8-bit keys × 32 bands inspect ~12%
     * of the pair space at ~64% ε-edge recall — banding dials constant
     * factors at moderate thresholds, while the genuinely sub-quadratic
-    * regime is the high-similarity one [[dbscanClustersLsh]] declares;
-    * the gate is spec-pinned on [[dbscanPairSource]] directly).
+    * regime is the high-similarity one [[dbscanClustersLsh]] declares).
     * Candidates are exactly verified, so past-cutover output loses
     * only recall, never precision. Degrees and border attachment are
     * one groupBy each; the THRESHOLDED core-core edge list is labeled
@@ -1271,29 +1277,30 @@ object Dedup {
   def dbscanClusters(spark: SparkSession, dir: String,
       simThreshold: Double = 0.45, minPts: Int = 3): DataFrame = {
     val n = plantedNormalizedEmbeddingsPanel(spark, dir)
-    val (_, pairs) = dbscanPairSource(n, n.count(), simThreshold)
-    dbscanOverPairs(n, pairs, minPts)
+    dbscanOverPairs(n, dbscanPairSource(n, simThreshold), minPts)
   }
 
-  /** Largest embedding count the declared dbscan row scans exactly;
-    * past it the ε-pairs come from the LSH banding leg. Sized so the
-    * driver scales (500 / 2k vectors) stay on the exact oracle baseline
-    * while the 10x tier (20k) takes the scale path.
+  /** The gated ε-pair source behind [[dbscanClusters]]: under the
+    * `dbscan-exact-rows` bound ([[graft.plans.GraftOps.driverOr]]) the
+    * probe rows ARE the exact kernel's flat side; past it
+    * [[dbscanLshPairs]].
     */
-  private[graft] val DbscanExactMaxRows = 4000L
+  private[graft] def dbscanPairSource(n: DataFrame,
+      simThreshold: Double): DataFrame = {
+    val spark = n.sparkSession
+    import spark.implicits._
+    graft.plans.GraftOps.driverOr(n.select(col("vec_id"), col("nv"))
+        .as[(Long, Array[Double])], "dbscan-exact-rows")(rows =>
+      exactKernel(n, flattenRows(rows), simThreshold))(
+      dbscanLshPairs(n, simThreshold))
+      .select(col("vec_a"), col("vec_b"))
+  }
 
-  /** The gated ε-pair source behind [[dbscanClusters]], tagged so the
-    * cutover spec can pin leg selection without running the pairing.
-    */
-  private[graft] def dbscanPairSource(n: DataFrame, sz: Long,
-      simThreshold: Double): (String, DataFrame) =
-    if (sz <= DbscanExactMaxRows)
-      ("exact", embeddingNearDupExactNormalized(n, simThreshold)
-        .select(col("vec_a"), col("vec_b")))
-    else
-      ("lsh", embeddingNearDupLshNormalized(n, dim = 64,
-          threshold = simThreshold, bands = 32, rowsPerBand = 8)
-        .select(col("vec_a"), col("vec_b")))
+  /** Past-bound leg of [[dbscanPairSource]]. */
+  private[graft] def dbscanLshPairs(n: DataFrame,
+      simThreshold: Double): DataFrame =
+    embeddingNearDupLshNormalized(n, dim = 64, threshold = simThreshold,
+      bands = 32, rowsPerBand = 8)
 
   /** [[dbscanClusters]] on its documented SCALE PATH: the ε-pair
     * relation comes from the seeded-hyperplane LSH banding

@@ -222,32 +222,23 @@ object GraphOps {
     * over a per-customer hash map. Exactly one shuffle of the (c, p)
     * incidence — no candidate fan-out relation ever materializes or
     * shuffles (the relational join+agg+anti-join+topk form measured
-    * 6.7 s at sf0.1; this form ~1.5 s). The `.collect()` of the capped
-    * lists is bounded by |items| × nbrCap by construction AND gated:
-    * past [[ItemNbrDriverMaxEntries]] the plan switches to
-    * [[basketCompletionDistributed]], which co-partitions the same
-    * index instead of broadcasting it (the union-find cutover
-    * discipline). Output: (custkey, partkey, score, rk).
+    * 6.7 s at sf0.1; this form ~1.5 s). The capped lists are bounded
+    * by |items| × nbrCap by construction AND gated: the broadcast memo
+    * ([[itemNeighborBroadcast]]) collects them through
+    * [[GraftOps.driverOr]] under the `item-nbr-bc` registry bound, and
+    * past it the plan switches to [[basketCompletionDistributed]],
+    * which co-partitions the same index instead of broadcasting it.
+    * Output: (custkey, partkey, score, rk).
     */
-  /** Driver-size cutover for [[basketCompletion]]'s broadcast serving
-    * leg: the capped neighbor lists hold at most |items| × nbrCap
-    * entries — collected as a driver map only while that product stays
-    * under this bound (4M entries of 3 boxed longs ≈ low hundreds of
-    * MB driver heap, the same order as [[ComponentsDriverMaxEdges]]).
-    * Past it [[basketCompletion]] switches to the co-partitioned
-    * relational leg ([[basketCompletionDistributed]]) and nothing
-    * collects.
-    */
-  private[graft] val ItemNbrDriverMaxEntries = 4000000L
 
   /** The truncated per-item neighbor lists as a RELATION — the
     * PUBLISHED index of item-item CF (built offline, served online;
     * Linden et al. 2003): each item's `nbrCap` strongest co-purchase
     * neighbors (affinity desc, part-key ties asc), |items| × nbrCap
     * rows by construction. Memoized + persisted per (dataset, cap);
-    * the driver map / broadcast below derive from it, and past
-    * [[ItemNbrDriverMaxEntries]] it IS the serving index (joined
-    * co-partitioned, never collected). Output: (p, rec, n).
+    * the broadcast below derives from it, and past the `item-nbr-bc`
+    * bound it IS the serving index (joined co-partitioned, never
+    * collected). Output: (p, rec, n).
     */
   private[graft] def itemNeighborListsDF(spark: SparkSession, dir: String,
       nbrCap: Int = 20): DataFrame =
@@ -262,31 +253,22 @@ object GraphOps {
           col("cnt").cast("long").as("n"))
     }
 
-  /** [[itemNeighborListsDF]] collected to a driver map. Bound: callers
-    * gate on [[ItemNbrDriverMaxEntries]] BEFORE collecting (the
-    * broadcast-centroids discipline — every driver-side artifact here
-    * carries an explicit bound plus a distributed fallback).
-    */
-  private[graft] def itemNeighborLists(spark: SparkSession, dir: String,
-      nbrCap: Int = 20): Map[Long, Array[(Long, Long)]] =
-    graft.IndexCache.getOrBuild(spark, "item-nbr-lists", dir, nbrCap) {
-      import spark.implicits._
-      itemNeighborListsDF(spark, dir, nbrCap)
-        .as[(Long, Long, Long)].collect()
-        .groupBy(_._1)
-        .map { case (p, rows) => p -> rows.map(r => (r._2, r._3)) }
-    }
-
-  /** The driver map wrapped in a MEMOIZED Broadcast — one broadcast
-    * per (dataset, cap) per session, however many times the serving
-    * query runs (an un-memoized `sc.broadcast` per invocation leaks
-    * broadcast blocks across a bench + test session).
+  /** [[itemNeighborListsDF]] as a MEMOIZED driver-map Broadcast, or
+    * None past the `item-nbr-bc` bound: the memo build makes the
+    * cutover decision once per (dataset, cap), so a serving call runs
+    * no count (an un-memoized `sc.broadcast` per invocation would also
+    * leak broadcast blocks across a bench + test session).
     */
   private[graft] def itemNeighborBroadcast(spark: SparkSession, dir: String,
-      nbrCap: Int = 20)
-      : org.apache.spark.broadcast.Broadcast[Map[Long, Array[(Long, Long)]]] =
+      nbrCap: Int = 20): Option[
+        org.apache.spark.broadcast.Broadcast[Map[Long, Array[(Long, Long)]]]] =
     graft.IndexCache.getOrBuild(spark, "item-nbr-bc", dir, nbrCap) {
-      spark.sparkContext.broadcast(itemNeighborLists(spark, dir, nbrCap))
+      import spark.implicits._
+      graft.plans.GraftOps.driverOr(itemNeighborListsDF(spark, dir, nbrCap)
+          .as[(Long, Long, Long)], "item-nbr-bc", rowWidth = 3) { rows =>
+        Option(spark.sparkContext.broadcast(rows.groupBy(_._1)
+          .map { case (p, rs) => p -> rs.map(r => (r._2, r._3)) }))
+      }(None)
     }
 
   /** ITEM SIMILARITY — the normalized "related items" table (the
@@ -329,31 +311,30 @@ object GraphOps {
   def basketCompletion(spark: SparkSession, dir: String,
       topK: Int = 5, nbrCap: Int = 20): DataFrame = {
     import spark.implicits._
-    val cp = custPartPairs(spark, dir)
     // cutover: the broadcast leg holds |items| × nbrCap entries on the
-    // driver — fine for any real catalog (the count reads the persisted
-    // index, no recompute), unservable at web-catalog extremes, where
-    // the co-partitioned relational leg takes over
-    if (itemNeighborListsDF(spark, dir, nbrCap).count()
-        > ItemNbrDriverMaxEntries)
-      return basketCompletionDistributed(spark, dir, topK, nbrCap)
-    val bc = itemNeighborBroadcast(spark, dir, nbrCap)
-    cp.select(col("c").cast("long"), col("p").cast("long"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups { (c, it) =>
-        val owned = it.map(_._2).toSet
-        val scores = scala.collection.mutable.LongMap.empty[Long]
-        owned.foreach { p =>
-          bc.value.get(p).foreach(_.foreach { case (rec, n) =>
-            if (!owned(rec)) scores(rec) = scores.getOrElse(rec, 0L) + n
-          })
-        }
-        scores.toSeq.sortBy { case (rec, s) => (-s, rec) }.take(topK)
-          .zipWithIndex
-          .map { case ((rec, s), i) => (c, rec, s, i + 1) }
-      }
-      .toDF("custkey", "partkey", "score", "rk")
+    // driver — fine for any real catalog, unservable at web-catalog
+    // extremes, where the co-partitioned relational leg takes over
+    itemNeighborBroadcast(spark, dir, nbrCap) match {
+      case None => basketCompletionDistributed(spark, dir, topK, nbrCap)
+      case Some(bc) =>
+        custPartPairs(spark, dir)
+          .select(col("c").cast("long"), col("p").cast("long"))
+          .as[(Long, Long)]
+          .groupByKey(_._1)
+          .flatMapGroups { (c, it) =>
+            val owned = it.map(_._2).toSet
+            val scores = scala.collection.mutable.LongMap.empty[Long]
+            owned.foreach { p =>
+              bc.value.get(p).foreach(_.foreach { case (rec, n) =>
+                if (!owned(rec)) scores(rec) = scores.getOrElse(rec, 0L) + n
+              })
+            }
+            scores.toSeq.sortBy { case (rec, s) => (-s, rec) }.take(topK)
+              .zipWithIndex
+              .map { case ((rec, s), i) => (c, rec, s, i + 1) }
+          }
+          .toDF("custkey", "partkey", "score", "rk")
+    }
   }
 
   /** The past-cutover serving leg of [[basketCompletion]] — identical
@@ -621,15 +602,20 @@ object GraphOps {
     * itself, exposed so GraphOpsSpec can demonstrate it on a synthetic
     * pendant-chain graph where the cascade provably removes nodes.
     */
-  def kCoreOf(adjacency: DataFrame, k: Int, rounds: Int): DataFrame =
+  def kCoreOf(adjacency: DataFrame, k: Int, rounds: Int): DataFrame = {
+    val spark = adjacency.sparkSession
+    import spark.implicits._
     // small-graph cutover: an iterative peel pays ~4 scheduler
     // round-trips per round, which dominates small graphs (measured:
     // 3.4 s for 9 rounds over a 30k-edge adjacency, ~0.3 s
-    // driver-side). Up to the labeler's edge bound the edge list is
-    // collected and peeled on the driver; past it the distributed loop
-    // runs. GraphOpsSpec pins both legs equal.
-    kCoreDriver(adjacency, k, rounds)
-      .getOrElse(kCoreDistributed(adjacency, k, rounds))
+    // driver-side). Up to the `driver-edges` bound the edge list is
+    // peeled on the driver; past it the distributed loop runs.
+    // GraphOpsSpec pins both legs equal.
+    graft.plans.GraftOps.driverOr(
+        adjacency.select(col("u").cast("long"), col("v").cast("long"))
+          .as[(Long, Long)], "driver-edges")(
+      kCoreDriver(spark, _, k, rounds))(kCoreDistributed(adjacency, k, rounds))
+  }
 
   /** The distributed leg of [[kCoreOf]] — per round: one degree
     * aggregate + two broadcast semi-joins + a lineage-cutting
@@ -669,20 +655,14 @@ object GraphOps {
       .select(col("u").as("node"), col("deg"))
   }
 
-  /** The driver leg of [[kCoreOf]], None past
-    * [[ComponentsDriverMaxEdges]]: one `limit(bound + 1)` collect both
-    * decides the leg and, under the bound, IS the edge multiset (the
-    * [[componentsDriver]] envelope), peeled with the same fixed unroll
-    * and early exit as [[kCoreDistributed]] (same output shape).
+  /** The driver leg of [[kCoreOf]]: the collected edge multiset,
+    * peeled with the same fixed unroll and early exit as
+    * [[kCoreDistributed]] (same output shape).
     */
-  private[graft] def kCoreDriver(adjacency: DataFrame, k: Int,
-      rounds: Int): Option[DataFrame] = {
-    val spark = adjacency.sparkSession
+  private[graft] def kCoreDriver(spark: SparkSession,
+      collected: Array[(Long, Long)], k: Int, rounds: Int): DataFrame = {
     import spark.implicits._
-    val limitN = (ComponentsDriverMaxEdges + 1).toInt
-    var edges = adjacency.select(col("u").cast("long"), col("v").cast("long"))
-      .as[(Long, Long)].limit(limitN).collect()
-    if (edges.length > ComponentsDriverMaxEdges) return None
+    var edges = collected
     var prevEdges = -1
     var r = 0
     while (r < rounds && prevEdges != 0) {
@@ -692,8 +672,8 @@ object GraphOps {
       if (edges.length == prevEdges) r = rounds
       else { prevEdges = edges.length; r += 1 }
     }
-    Some(edges.groupBy(_._1).view.mapValues(_.length.toLong).toSeq
-      .toDF("node", "deg"))
+    edges.groupBy(_._1).view.mapValues(_.length.toLong).toSeq
+      .toDF("node", "deg")
   }
 
   /** Triangle census of the co-purchase graph: edge and triangle
@@ -741,22 +721,24 @@ object GraphOps {
       // so the order is total and every undirected edge appears once
       val du = deg.select(col("node").as("u"), col("deg").as("du"))
       val dv = deg.select(col("node").as("v"), col("deg").as("dv"))
-      // materialized once: three plan references below (both wedge
-      // sides + the closing-edge semi join) would each re-run the
-      // degree joins (§7.2)
-      val oriented = edges
-        .join(broadcast(du), Seq("u")).join(broadcast(dv), Seq("v"))
-        .select(
-          when(col("du") < col("dv")
-            || (col("du") === col("dv") && col("u") < col("v")),
-            col("u")).otherwise(col("v")).as("a"),
-          when(col("du") < col("dv")
-            || (col("du") === col("dv") && col("u") < col("v")),
-            col("v")).otherwise(col("u")).as("b"),
-          when(col("du") < col("dv")
-            || (col("du") === col("dv") && col("u") < col("v")),
-            col("dv")).otherwise(col("du")).as("db"))
-        .localCheckpoint(true)
+      // its own memo, not an inner checkpoint: three plan references
+      // below (both wedge sides + the closing-edge semi join) read it
+      // once, and after a cache release it re-persists from lineage
+      val oriented = graft.IndexCache.persisted(spark, "graph-oriented",
+          dir, minShared) {
+        edges
+          .join(broadcast(du), Seq("u")).join(broadcast(dv), Seq("v"))
+          .select(
+            when(col("du") < col("dv")
+              || (col("du") === col("dv") && col("u") < col("v")),
+              col("u")).otherwise(col("v")).as("a"),
+            when(col("du") < col("dv")
+              || (col("du") === col("dv") && col("u") < col("v")),
+              col("v")).otherwise(col("u")).as("b"),
+            when(col("du") < col("dv")
+              || (col("du") === col("dv") && col("u") < col("v")),
+              col("dv")).otherwise(col("du")).as("db"))
+      }
       val left = oriented.select(col("a"), col("b"), col("db"))
       val right = oriented.select(col("a"), col("b").as("c"),
         col("db").as("dc"))
@@ -768,10 +750,15 @@ object GraphOps {
         .select(col("a"), col("b"), col("c"))
       // the closing-edge probe broadcasts (|E| keys, a few MB): the
       // wedge relation — the big side — never shuffles
-      wedges
+      val tri = wedges
         .join(broadcast(oriented.select(col("a").as("b"), col("b").as("c"))),
           Seq("b", "c"), "left_semi")
         .select(col("a").as("x"), col("b").as("y"), col("c").as("z"))
+      // readers plan against one RDD leaf that keeps its lineage, not the
+      // wedge plan (a serving count over that plan took ~0.7 s at sf0.1
+      // for a 5-task cached scan; ~0.2 s over the leaf)
+      org.apache.spark.sql.GraftColumn.ofInternal(spark,
+        tri.queryExecution.toRdd.map(_.copy()), tri.schema)
     }
 
   def triangleCensus(spark: SparkSession, dir: String,
@@ -850,15 +837,6 @@ object GraphOps {
           6).as("assortativity"))
   }
 
-  /** Edge bound of [[componentLabels]]' driver leg: 10M (Long, Long)
-    * edges = 160 MB, cheap against a driver sized for a 1000-executor
-    * cluster. Thresholded similarity edges (near-dup, mutual-kNN,
-    * DBSCAN core-core, SemDeDup pairs) are orders of magnitude fewer
-    * than the nodes they connect; past the bound the star-contraction
-    * leg runs.
-    */
-  private[graft] val ComponentsDriverMaxEdges = 10000000L
-
   /** Connected components of a two-column Long edge relation: every
     * node labeled with the minimum id of its component. Without a
     * `universe` the output is (node, component) for every node incident
@@ -866,33 +844,28 @@ object GraphOps {
     * first holds the node ids) plus `component`, and a universe id with
     * no edge labels itself.
     *
-    * The driver leg labels up to [[ComponentsDriverMaxEdges]] edges
-    * with [[unionFind]] and broadcast-joins the labels to the universe;
-    * past the bound [[starContractionComponents]] labels them in
-    * O(log n) distributed rounds, joined without a broadcast hint.
-    * GraphOpsSpec pins both legs to the same labels.
+    * Up to the `driver-edges` registry bound ([[GraftOps.driverOr]])
+    * the driver leg labels the edges with [[unionFind]] and
+    * broadcast-joins the labels to the universe; past it
+    * [[starContractionComponents]] labels them in O(log n) distributed
+    * rounds, joined without a broadcast hint. GraphOpsSpec pins both
+    * legs to the same labels.
     */
   private[graft] def componentLabels(edges: DataFrame,
-      universe: Option[DataFrame] = None): DataFrame =
-    componentsDriver(edges, universe)
-      .getOrElse(componentsDistributed(edges, universe))
-
-  /** Driver leg of [[componentLabels]], None past the bound: one
-    * `limit(bound + 1)` collect both decides the leg and, under the
-    * bound, IS the edge list (the envelope of
-    * [[Dedup.embeddingNearDupLshNormalized]]; no separate count job).
-    */
-  private[graft] def componentsDriver(edges: DataFrame,
-      universe: Option[DataFrame]): Option[DataFrame] = {
+      universe: Option[DataFrame] = None): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val limitN = (ComponentsDriverMaxEdges + 1).toInt
-    val es = edges.as[(Long, Long)].limit(limitN).collect()
-    if (es.length > ComponentsDriverMaxEdges) None
-    else {
-      val labels = unionFind(es).toDF("node", "component")
-      Some(universe.fold(labels)(labelUniverse(_, broadcast(labels))))
-    }
+    graft.plans.GraftOps.driverOr(edges.as[(Long, Long)], "driver-edges")(
+      componentsDriver(spark, _, universe))(
+      componentsDistributed(edges, universe))
+  }
+
+  /** Driver leg of [[componentLabels]] over the collected edge list. */
+  private[graft] def componentsDriver(spark: SparkSession,
+      es: Array[(Long, Long)], universe: Option[DataFrame]): DataFrame = {
+    import spark.implicits._
+    val labels = unionFind(es).toDF("node", "component")
+    universe.fold(labels)(labelUniverse(_, broadcast(labels)))
   }
 
   /** Past-bound leg of [[componentLabels]]. */
@@ -1068,8 +1041,8 @@ object GraphOps {
     * Scale shape: per round, ONE equi-join of the (node-sized) label
     * relation against the edge list plus two partial-aggregatable
     * groupBys ((node, lbl) counts, then max_by per node) — the same
-    * per-round cost as PageRank; rounds are rebased on localCheckpoint
-    * so plan size stays constant (see [[starContractionComponents]]).
+    * per-round cost as PageRank, run as an RDD loop so plan size stays
+    * constant (see [[starContractionComponents]]).
     */
   def labelPropagation(spark: SparkSession, dir: String,
       minShared: Int = 4, rounds: Int = 3): DataFrame =
@@ -1086,7 +1059,8 @@ object GraphOps {
     * same justification as [[starContractionComponents]]: the
     * DataFrame loop re-planned every round against a fresh LogicalRDD
     * and paid one localCheckpoint materialization per round, on a
-    * relation of a few thousand rows. Here the adjacency is keyed by neighbor under a
+    * relation of a few thousand rows. No checkpoint pins the result:
+    * the memo recomputes from shuffle lineage after a cache release. Here the adjacency is keyed by neighbor under a
     * shared HashPartitioner once, labels come back keyed by node under
     * the SAME partitioner, so every round's join is co-partitioned
     * (zero join shuffle) and only the two reduceByKey passes move data.
@@ -1106,7 +1080,8 @@ object GraphOps {
     val byNbr = e.select(col("u"), col("v")).as[(Long, Long)].rdd
       .flatMap { case (u, v) => Iterator((u, v), (v, u)) }
       .partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // not persisted: the memo's lineage must survive a cache release,
+    // and each round reads the partitioned adjacency's shuffle output
     var labels = byNbr.keys.distinct(parts)
       .map(n => (n, n)).partitionBy(part)
     (1 to rounds).foreach { _ =>
@@ -1118,14 +1093,7 @@ object GraphOps {
           if (a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)) a else b)
         .mapValues(_._1) // keeps the node partitioning
     }
-    val out = labels
-      .toDF("node", "community")
-      // pin the values before the adjacency cache is dropped: the memo
-      // in [[labelPropagation]] persists lazily, so without this the
-      // unpersist below could force a recompute from released blocks
-      .localCheckpoint(true)
-    byNbr.unpersist(blocking = false)
-    out
+    labels.toDF("node", "community")
   }
 
   /** Newman modularity of the [[labelPropagation]] communities — the

@@ -1609,33 +1609,27 @@ object TextOps {
 
   /** BPE training always runs on the WORD-FREQUENCY table (vocabulary-
     * sized — ~1e7 rows even at 100 TB, orders of magnitude below the
-    * corpus). Below `cutover` distinct words the whole table is
+    * corpus). Up to the `bpe-word-counts` registry bound the table is
     * BOUNDED BY CONSTRUCTION, and the 10-round merge loop pays ~10
     * sequential scheduler round-trips for milliseconds of actual work
     * (measured: bench_build_bpe ~15 s distributed, ~1 s driver-side at
-    * sf0.1's 27k-word vocab) — so the sub-cutover leg collects the
-    * counts and trains in a tight loop, bit-identical tie-breaks
-    * included (the nearDupClusters/kCore small-side discipline; a spec
-    * pins the two legs equal). Above cutover the distributed loop runs
-    * unchanged.
+    * sf0.1's 27k-word vocab) — so the [[graft.plans.GraftOps.driverOr]]
+    * probe's rows train in a tight driver loop, bit-identical
+    * tie-breaks included (a spec pins the two legs equal). Past the
+    * bound the distributed loop runs unchanged.
     */
   private def trainBpeVocab(spark: SparkSession, dir: String,
-      nMerges: Int, cutover: Int = 1000000): DataFrame = {
+      nMerges: Int): DataFrame = {
     import spark.implicits._
     val wordCounts = tokenizedDocs(spark, dir)
       .select(explode(col("w")).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-    // a bounded COUNT probe decides the leg (early-exits at cutover+1
-    // rows, ships one Long) — only the proven-small side ever collects
-    // its rows to the driver
-    val probe = wordCounts.limit(cutover + 1).count()
-    if (probe <= cutover)
-      trainBpeDriver(spark,
-        wordCounts.as[(String, Long)].collect(), nMerges)
-    else trainBpeDistributed(spark, wordCounts, nMerges)
+    graft.plans.GraftOps.driverOr(wordCounts.as[(String, Long)],
+        "bpe-word-counts")(trainBpeDriver(spark, _, nMerges))(
+      trainBpeDistributed(spark, wordCounts, nMerges))
   }
 
-  /** Sub-cutover driver-side BPE trainer: same argmax, same
+  /** Under-bound driver-side BPE trainer: same argmax, same
     * (cnt desc, left asc, right asc) tie-break as the distributed leg —
     * string order compared on UTF-8 bytes to match Spark's binary
     * string ordering exactly.

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, GraftColumn, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftColumn, Row}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.functions.col
@@ -10,19 +10,36 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 object GraftOps {
 
   /** Row-count cutover between the single-partition window form and
-    * the range-partitioned global-order primitives (the
-    * [[graft.operators.GraphOps.kCoreOf]]-style explicit-cutover
-    * discipline): below it, one reducer sorts
-    * the relation in well under a second and the primitives' fixed
-    * cost (two extra jobs + Row conversion) dominates — measured 3-6x
-    * slower on 1.5k-row rollups at sf0.1; at or above it, the
-    * single-partition window IS the bottleneck and the range form is
-    * the only shape that survives. Callers with a dimension-sized
-    * rollup (|customers|, |suppliers|) branch on a cheap `count()`;
-    * callers ranking the raw corpus (curriculum, sequence packing)
-    * use the range form unconditionally.
+    * the range-partitioned global-order primitives: below it, one
+    * reducer sorts the relation in well under a second and the
+    * primitives' fixed cost (two extra jobs + Row conversion)
+    * dominates — measured 3-6x slower on 1.5k-row rollups at sf0.1; at
+    * or above it, the single-partition window IS the bottleneck and
+    * the range form is the only shape that survives. Callers with a
+    * dimension-sized rollup (|customers|, |suppliers|) branch on a
+    * cheap `count()` — the small leg collects nothing, so there is no
+    * [[driverOr]] probe to reuse; callers ranking the raw corpus
+    * (curriculum, sequence packing) use the range form unconditionally.
     */
   val smallOrderCutover: Long = 4000000L
+
+  /** The one driver-or-distributed cutover. One `limit(bound + 1)`
+    * collect decides the leg and, under the bound, IS the driver leg's
+    * input (no count job); the bound is the registry entry `key` of
+    * [[graft.IndexCache.driverArtifactBounds]] over `rowWidth` (one
+    * row's share of the entry's unit). Each decision is logged.
+    */
+  def driverOr[T, R](ds: Dataset[T], key: String, rowWidth: Long = 1L)(
+      driver: Array[T] => R)(distributed: => R): R = {
+    val (_, entries) = graft.IndexCache.driverArtifactBounds.getOrElse(key,
+      throw new IllegalStateException(s"driverOr: no registry bound '$key'"))
+    val bound = math.max(1L, entries / math.max(1L, rowWidth))
+    val rows = ds.limit(math.min(bound + 1, Int.MaxValue.toLong).toInt).collect()
+    val small = rows.length <= bound
+    graft.IndexCache.recordLeg(key, if (small) "driver" else "distributed",
+      rows.length, bound)
+    if (small) driver(rows) else distributed
+  }
 
   /** Ensure a compute-bound relation carries at least the executor
     * width before its expensive map stage. The fixture tables are

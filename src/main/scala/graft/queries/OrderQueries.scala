@@ -98,9 +98,9 @@ object OrderQueries {
       (s, d) => GraphOps.basketCompletion(s, d), readsMemos = true,
       oracle = basketCompletionSql),
 
-    // the ItemNbrDriverMaxEntries fallback leg, gated on the same oracle
-    // the past-cutover serving leg under the SAME oracle: the fallback
-    // must be semantically invisible, so it earns its own gated row
+    // the serving leg past the `item-nbr-bc` bound, under the SAME
+    // oracle: the fallback must be semantically invisible, so it earns
+    // its own gated row
     // reads the persisted item-pair builds (bench_build_itempairs)
     Declared("orders_basket_completion_dist",
       (s, d) => GraphOps.basketCompletionDistributed(s, d), readsMemos = true,

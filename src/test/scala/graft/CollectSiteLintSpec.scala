@@ -27,6 +27,14 @@ class CollectSiteLintSpec extends AnyFunSuite {
     * IndexCache driver-artifact family.
     */
   private val allow: Map[(String, String), (Int, String)] = Map(
+    // --- the one driver-or-distributed cutover ----------------------
+    ("GraftOps.scala",
+      "val rows = ds.limit(math.min(bound + 1, Int.MaxValue.toLong).toInt).collect()") ->
+      (1, "the driverOr probe: bound + 1 rows of a registry entry, the " +
+        "driver leg's input under it — family:driver-edges (k-core, " +
+        "component labeler) family:item-nbr-bc (CF serving) " +
+        "family:lsh-verify-flat family:dbscan-exact-rows " +
+        "family:bpe-word-counts"),
     // --- custom plans: per-partition offset scans -------------------
     ("GraftOps.scala", ".collect().sortBy(_._1).map(_._2)") ->
       (1, "O(|partitions|) subtotal rows (global-rank offsets)"),
@@ -83,9 +91,6 @@ class CollectSiteLintSpec extends AnyFunSuite {
       (1, "single-char seed pieces (<= alphabet size)"),
     ("TextOps.scala", ".as[(String, Long)].collect().toMap") ->
       (1, "EM usage counts over the FIXED seeded vocab (<= vocabSize)"),
-    ("TextOps.scala", "wordCounts.as[(String, Long)].collect(), nMerges)") ->
-      (1, "cutover-proven small side (bounded COUNT probe one line up; " +
-        "distributed BPE trainer above the cutover)"),
     ("TextOps.scala", ".limit(1).collect()") ->
       (1, "limit(1) best merge pair per BPE round"),
     ("TextOps.scala",
@@ -104,10 +109,6 @@ class CollectSiteLintSpec extends AnyFunSuite {
     ("Dedup.scala", "collectFlat(n)") ->
       (1, "the ONE corpus-proportional oracle-baseline exemption, " +
         "inside the family:neardup-oracle-corpus build (r12 verdict #2)"),
-    ("Dedup.scala",
-      ".as[(Long, Array[Double])].limit(limitN).collect()") ->
-      (1, "limit(maxRows+1) decide-and-reuse envelope " +
-        "(LshBroadcastMaxEntries cutover)"),
     ("Dedup.scala", ".as[(Long, Array[Double])].collect())") ->
       (1, "body of collectFlat — both callers ride registered " +
         "IndexCache families (anchor-flat, neardup-oracle-corpus)"),
@@ -121,17 +122,6 @@ class CollectSiteLintSpec extends AnyFunSuite {
     ("EmbeddingStats.scala", "}.collect().sortBy(_._1)") ->
       (1, "O(|labels|) centroid partials (family:rocchio-cents bound)"),
     // --- graph ----------------------------------------------------------
-    ("GraphOps.scala", ".as[(Long, Long, Long)].collect()") ->
-      (1, "nbrCap-capped lists inside the family:item-nbr-lists build " +
-        "(ItemNbrDriverMaxEntries; distributed CF leg above cutover)"),
-    ("GraphOps.scala", ".as[(Long, Long)].limit(limitN).collect()") ->
-      (1, "limit(ComponentsDriverMaxEdges+1) decide-and-reuse envelope " +
-        "of the k-core driver leg (distributed peel past it)"),
-    ("GraphOps.scala",
-      "val es = edges.as[(Long, Long)].limit(limitN).collect()") ->
-      (1, "limit(ComponentsDriverMaxEdges+1) decide-and-reuse envelope " +
-        "of the one component labeler (star-contraction leg past it); " +
-        "serves the near-dup, mutual-kNN, DBSCAN and SemDeDup clusters"),
     // --- layout / ingest -------------------------------------------------
     ("ScaleTechniques.scala", ".collect().head") ->
       (1, "1-row max() aggregate (layout-width assertion)"),
@@ -195,6 +185,61 @@ class CollectSiteLintSpec extends AnyFunSuite {
     assert(hits == Seq("GraphOps.scala: while (parent(r) != r) r = parent(r)"),
       "union-find copies outside GraphOps.unionFind — label components " +
         s"with GraphOps.componentLabels or call unionFind:\n  ${hits.mkString("\n  ")}")
+  }
+
+  /** (file, trimmed line) -> reason: the only `count()` compared with
+    * a bound outside [[graft.plans.GraftOps.driverOr]]. The
+    * single-partition window leg collects nothing, so there is no
+    * probe whose rows it could reuse.
+    */
+  private val countCutovers: Map[(String, String), String] = Map(
+    ("Relational.scala",
+      "if (s.count() < graft.plans.GraftOps.smallOrderCutover) {") ->
+      "smallOrderCutover: supplier-rollup window vs range rank",
+    ("Relational.scala", "if (ltv.count() < smallOrderCutover) {") ->
+      "smallOrderCutover: customer-LTV window vs range quartiles",
+    ("Stats.scala",
+      "if (perCust.count() < graft.plans.GraftOps.smallOrderCutover)") ->
+      "smallOrderCutover: per-customer rollup window vs range rank")
+
+  test("leg choices go through GraftOps.driverOr: no count() compared " +
+      "with a bound and no limit(n + 1) collect outside it") {
+    // a comparison on the count's line or opening the next line
+    val countCmp = """\.count\(\)\s*[<>]|[<>]=?\s*[\w.]*\.count\(\)""".r
+    val limitPlusOne = """limit\([^)]*\+\s*1\b""".r
+    val envelope = scala.collection.mutable.Buffer.empty[String]
+    val hits = mainSources.flatMap { p =>
+      import scala.jdk.CollectionConverters._
+      val name = p.getFileName.toString
+      val lines = java.nio.file.Files.readAllLines(p).asScala.toIndexedSeq
+      // a `val n = bound + 1` passed as `.limit(n)` a few lines on
+      def plusOneVals(i: Int) = lines.slice(i - 5, i).flatMap(l =>
+        """val (\w+) = .*\+\s*1\b""".r.findFirstMatchIn(l).map(_.group(1)))
+      var inEnvelope = false
+      lines.indices.flatMap { i =>
+        val t = lines(i).trim
+        if (name == "GraftOps.scala" && t.startsWith("def driverOr["))
+          inEnvelope = true
+        else if (inEnvelope && lines(i) == "  }") inEnvelope = false
+        val next = if (i + 1 < lines.size) lines(i + 1).trim else ""
+        val decides = countCmp.findFirstIn(t).nonEmpty ||
+          limitPlusOne.findFirstIn(t).nonEmpty ||
+          plusOneVals(i).exists(v => t.contains(s".limit($v)")) ||
+          (t.endsWith(".count()") && countCmp.findFirstIn(".count()" + next)
+            .nonEmpty)
+        if (t.startsWith("//") || t.startsWith("/*") || t.startsWith("*")
+            || !decides) None
+        else if (inEnvelope) { envelope += t; None }
+        else Some((name, t))
+      }
+    }
+    val extras = hits.filterNot(countCutovers.contains)
+    assert(extras.isEmpty, "hand-written leg choice(s) — route them " +
+      s"through GraftOps.driverOr:\n  ${extras.mkString("\n  ")}")
+    val stale = countCutovers.keySet -- hits
+    assert(stale.isEmpty, s"stale count-cutover entries: $stale")
+    assert(envelope.size == 1 && limitPlusOne.findFirstIn(envelope.head)
+      .nonEmpty, s"driverOr must hold one limit(bound + 1) probe: $envelope")
   }
 
   test("every family a bound cites is registered in " +

@@ -259,12 +259,11 @@ class DedupSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("vec_a", "vec_b", "sim").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    // maxBroadcastEntries = 0 forces the cutover's distributed leg on
-    // the same inputs; outputs must match pair-for-pair AND bit-for-bit
-    // on sim (identical accumulation order + clamp + HALF_UP rounding)
+    // the distributed leg, called directly on the same inputs; outputs
+    // must match pair-for-pair AND bit-for-bit on sim (identical
+    // accumulation order + clamp + HALF_UP rounding)
     val broadcastLeg = rows(Dedup.embeddingNearDupLshNormalized(n, 64, 0.45))
-    val distributedLeg = rows(Dedup.embeddingNearDupLshNormalized(
-      n, 64, 0.45, maxBroadcastEntries = 0L))
+    val distributedLeg = rows(Dedup.lshVerifyDistributed(n, 64, 0.45))
     assert(broadcastLeg.nonEmpty, "fixture must produce pairs at 0.45")
     assert(distributedLeg == broadcastLeg,
       s"legs diverge: ${distributedLeg.size} vs ${broadcastLeg.size} pairs")
@@ -375,8 +374,7 @@ class DedupSpec extends SparkSpec {
     val other = (200 to 260).map(i => s"x$i").mkString(" ")
     val docs = Seq((1L, big), (2L, quote), (3L, other))
       .toDF("doc_id", "text").withColumn("lang", lit("en"))
-    val dirTmp = java.nio.file.Files
-      .createTempDirectory("conttest").toString
+    val dirTmp = graft.streaming.OneShot.tempDir("conttest")
     docs.write.mode("overwrite").parquet(s"$dirTmp/documents.parquet")
     val gram = graft.operators.Dedup.containmentPairs(spark, dirTmp)
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
@@ -442,12 +440,20 @@ class DedupSpec extends SparkSpec {
 
   test("dbscan pair source is cutover-gated: exact at/below the bound, " +
       "LSH above, and the LSH leg loses only recall, never precision") {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{array, col, lit}
     val n = operators.Dedup.plantedNormalizedEmbeddings(spark, sf0001)
-    val bound = operators.Dedup.DbscanExactMaxRows
-    assert(operators.Dedup.dbscanPairSource(n, bound, 0.45)._1 == "exact")
-    val (tag, lshPairs) = operators.Dedup.dbscanPairSource(n, bound + 1, 0.45)
-    assert(tag == "lsh")
+    val bound = IndexCache.driverArtifactBounds("dbscan-exact-rows")._2
+    // the envelope's audit record names the leg a call took; an m-row
+    // corpus decides the leg without running either pairing
+    def leg(m: Long): String = {
+      val corpus = spark.range(m)
+        .select(col("id").as("vec_id"), array(lit(1.0)).as("nv"))
+      operators.Dedup.dbscanPairSource(corpus, 0.45)
+      IndexCache.auditLog.filter(_._2 == "dbscan-exact-rows").last._1
+    }
+    assert(leg(bound) == "driverOr:dbscan-exact-rows:driver")
+    assert(leg(bound + 1) == "driverOr:dbscan-exact-rows:distributed")
+    val lshPairs = operators.Dedup.dbscanLshPairs(n, 0.45)
     def toSet(df: org.apache.spark.sql.DataFrame) =
       df.select(col("vec_a"), col("vec_b")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -545,7 +551,7 @@ class DedupSpec extends SparkSpec {
       (3L, "tiny doc")) // < 8 tokens: no grams, zero coverage, no crash
       .toDF("doc_id", "text")
     // the operator reads a dataset dir; stage the synthetic as one
-    val dir = java.nio.file.Files.createTempDirectory("substr-docs").toString
+    val dir = graft.streaming.OneShot.tempDir("substr-docs")
     docs.withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -33,8 +33,7 @@ class DocumentsScaleSpec extends SparkSpec {
     */
   private def generate(spark: SparkSession, n: Int, seed: Long = 11L): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft-docscale-$n").toString
+    val dir = graft.streaming.OneShot.tempDir(s"graft-docscale-$n")
     spark.range(n).as[Long].mapPartitions { it =>
       it.map { id =>
         val base = if (id % 50 == 49) id - 1 else id

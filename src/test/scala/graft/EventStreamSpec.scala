@@ -17,7 +17,7 @@ class EventStreamSpec extends SparkSpec {
 
   test("streaming tumbling agg over the file source equals the batch result") {
     // file stream source tails a directory; stage the fixture file into one
-    val dir = Files.createTempDirectory("graft-events")
+    val dir = java.nio.file.Paths.get(graft.streaming.OneShot.tempDir("graft-events"))
     Files.copy(java.nio.file.Paths.get(s"$sf0001/events.parquet"),
       dir.resolve("events.parquet"))
     val q = EventStream.windowedAgg(
@@ -25,7 +25,7 @@ class EventStreamSpec extends SparkSpec {
       .writeStream.format("memory").queryName("tumbling_stream")
       .outputMode("complete")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-t").toString)
+        graft.streaming.OneShot.tempDir("graft-ckpt-t"))
       .start()
     try { q.processAllAvailable() } finally { q.stop() }
     val stream = spark.table("tumbling_stream")
@@ -44,7 +44,7 @@ class EventStreamSpec extends SparkSpec {
       .writeStream.format("memory").queryName("rate_agg_stream")
       .outputMode("complete")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-rate").toString)
+        graft.streaming.OneShot.tempDir("graft-ckpt-rate"))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     try { q.awaitTermination(60000) } finally { q.stop() }
@@ -73,7 +73,7 @@ class EventStreamSpec extends SparkSpec {
       .writeStream.format("memory").queryName("sessions_stream")
       .outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-s").toString)
+        graft.streaming.OneShot.tempDir("graft-ckpt-s"))
       .start()
     def sentinel(off: Long) = Ev(9000000L + off,
       new java.sql.Timestamp(maxTs + off * 3600L * 1000), 999999L, "x", 0.0)
@@ -107,7 +107,7 @@ class EventStreamSpec extends SparkSpec {
       .writeStream.format("memory").queryName("topk_stream")
       .outputMode("update")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-topk").toString)
+        graft.streaming.OneShot.tempDir("graft-ckpt-topk"))
       .start()
     try {
       chunks.foreach { c => source.addData(c: _*); q.processAllAvailable() }
@@ -318,7 +318,7 @@ class EventStreamSpec extends SparkSpec {
       .writeStream.format("memory").queryName("evict_stream")
       .outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-evict").toString)
+        graft.streaming.OneShot.tempDir("graft-ckpt-evict"))
       .start()
     try {
       source.addData(ev(1, 0, 1L), ev(2, 5, 2L)) // one 10-min window
@@ -363,9 +363,9 @@ class EventStreamSpec extends SparkSpec {
   }
 
   test("file sink resumes from checkpoint without reprocessing old files") {
-    val src = Files.createTempDirectory("graft-ss-src").toString
-    val sink = Files.createTempDirectory("graft-ss-sink").toString + "/out"
-    val ckpt = Files.createTempDirectory("graft-ss-ckpt").toString
+    val src = graft.streaming.OneShot.tempDir("graft-ss-src")
+    val sink = graft.streaming.OneShot.tempDir("graft-ss-sink") + "/out"
+    val ckpt = graft.streaming.OneShot.tempDir("graft-ss-ckpt")
     val ev = Tables.events(spark, sf0001)
       .select("event_id", "user_id", "value")
     val n = ev.count()
@@ -402,7 +402,7 @@ class EventStreamSpec extends SparkSpec {
       .writeStream.format("memory").queryName("ssjoin_stream")
       .outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-j").toString)
+        graft.streaming.OneShot.tempDir("graft-ckpt-j"))
       .start()
     try { source.addData(evs: _*); q.processAllAvailable() } finally q.stop()
 
@@ -436,7 +436,7 @@ class EventStreamSpec extends SparkSpec {
       .writeStream.format("memory").queryName("dedup_stream")
       .outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-d").toString)
+        graft.streaming.OneShot.tempDir("graft-ckpt-d"))
       .start()
     try {
       source.addData(evs: _*); q.processAllAvailable()
@@ -459,7 +459,7 @@ class EventStreamSpec extends SparkSpec {
       .writeStream.format("memory").queryName("swin_stream")
       .outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-sw").toString)
+        graft.streaming.OneShot.tempDir("graft-ckpt-sw"))
       .start()
     def sentinel(off: Long) = Ev(9100000L + off,
       new java.sql.Timestamp(maxTs + off * 3600L * 1000), 999999L, "x", 0.0)
@@ -480,8 +480,8 @@ class EventStreamSpec extends SparkSpec {
 
   test("foreachBatch upsert sink merges micro-batches into the parquet target") {
     import spark.implicits._
-    val target = Files.createTempDirectory("graft-up-sink").toString + "/table"
-    val ckpt = Files.createTempDirectory("graft-up-ckpt").toString
+    val target = graft.streaming.OneShot.tempDir("graft-up-sink") + "/table"
+    val ckpt = graft.streaming.OneShot.tempDir("graft-up-ckpt")
     val source = MemoryStream[Ev](spark, numPartitions = 1)
     def ev(id: Long, v: Double) =
       Ev(id, new java.sql.Timestamp(1700000000000L + id), id % 3, "click", v)
@@ -659,7 +659,7 @@ class EventStreamSpec extends SparkSpec {
       .writeStream.format("memory").queryName("late_drop_stream")
       .outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-late").toString)
+        graft.streaming.OneShot.tempDir("graft-ckpt-late"))
       .start()
     try {
       source.addData(ev(1, 0, 7L), ev(2, 5, 7L))

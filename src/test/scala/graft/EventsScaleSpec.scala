@@ -27,8 +27,7 @@ class EventsScaleSpec extends SparkSpec {
     */
   private def generate(spark: SparkSession, n: Int, seed: Long = 23L): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft-evscale-$n").toString
+    val dir = graft.streaming.OneShot.tempDir(s"graft-evscale-$n")
     val users = math.max(n / 200, 1)
     spark.range(n).as[Long].mapPartitions { it =>
       val types = Array("view", "view", "view", "click", "click",

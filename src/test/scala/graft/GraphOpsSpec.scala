@@ -178,7 +178,8 @@ class GraphOpsSpec extends SparkSpec {
     // constant-factor dispatch, never a semantic fork
     val adj = GraphOps.bidirAdjacency(spark, sf0001, 3)
     val dist = GraphOps.kCoreDistributed(adj, 2, 10)
-    val drv = GraphOps.kCoreDriver(adj, 2, 10).get
+    val drv = GraphOps.kCoreDriver(spark, adj.select(col("u").cast("long"),
+      col("v").cast("long")).as[(Long, Long)].collect(), 2, 10)
     assert(dist.exceptAll(drv).count() == 0 && drv.exceptAll(dist).count() == 0,
       "driver and distributed k-core legs diverged")
   }
@@ -303,7 +304,7 @@ class GraphOpsSpec extends SparkSpec {
     val expect = unionFind(all)
     def labels(df: DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val driver = labels(GraphOps.componentsDriver(edges, None).get)
+    val driver = labels(GraphOps.componentsDriver(spark, all.toArray, None))
     val distributed = labels(GraphOps.componentsDistributed(edges, None))
     assert(driver == expect, "driver leg")
     assert(distributed == expect, "star-contraction leg")
@@ -313,7 +314,8 @@ class GraphOpsSpec extends SparkSpec {
     val universe = (all.flatMap(e => Seq(e._1, e._2)) :+ 500L).distinct
       .toDF("id")
     val withU = expect + (500L -> 500L)
-    assert(labels(GraphOps.componentsDriver(edges, Some(universe)).get) == withU)
+    assert(labels(GraphOps.componentsDriver(spark, all.toArray, Some(universe)))
+      == withU)
     assert(labels(GraphOps.componentsDistributed(edges, Some(universe))) == withU)
   }
 
@@ -350,7 +352,7 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("basket completion: the past-cutover distributed leg equals the broadcast leg") {
-    // the ItemNbrDriverMaxEntries fallback must be semantically
+    // the item-nbr-bc fallback must be semantically
     // invisible — same rows, same scores, same tie-broken ranks
     val bcLeg = GraphOps.basketCompletion(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet

@@ -224,7 +224,7 @@ class HnswSpec extends SparkSpec {
     val (base, queries, _, _) = ExactKnn.split(spark, sf0001)
     val index = HnswKnn.buildIndex(base).persist()
     try {
-      val dir = java.nio.file.Files.createTempDirectory("graft-hnsw").toString
+      val dir = graft.streaming.OneShot.tempDir("graft-hnsw")
       HnswKnn.saveIndex(index, dir)
       val loaded = HnswKnn.loadIndex(spark, dir)
       assert(loaded.shards == index.shards,
@@ -367,7 +367,7 @@ class HnswSpec extends SparkSpec {
         "i holds only shard i") {
       val (base, _, _, _) = ExactKnn.split(spark, sf0001)
       val index = knn.buildIndex(base, shards = 5)
-      val dir = java.nio.file.Files.createTempDirectory("graft-shards").toString
+      val dir = graft.streaming.OneShot.tempDir("graft-shards")
       knn.saveIndex(index, dir)
       val loaded = knn.loadIndex(spark, dir)
       try {

@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.knn.IvfKnn
-import graft.operators.{GraphOps, HybridSearch}
+import graft.operators.{Dedup, GraphOps, HybridSearch}
 
 /** The memo contract every cached relation relies on: typed keys never
   * collide, [[IndexCache.persisted]] materializes once and serves hits
@@ -54,24 +56,47 @@ class IndexCacheSpec extends SparkSpec {
     assert(memo().storageLevel == StorageLevel.MEMORY_AND_DISK)
   }
 
-  // two memoized relations a bench release unpersists: the GraphOps
-  // degree table and the IVF inverted file
-  for ((what, memo) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+  /** Bench.releaseCaches: drop every cached relation and RDD, then
+    * destroy and evict the memoized broadcasts.
+    */
+  private def releaseLikeBench(): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    IndexCache.releaseBroadcasts(spark)
+  }
+
+  /** A new plan over a memo, the way a declared row reads it (the
+    * memo handle's own executed plan still holds the shuffle outputs
+    * of its first run).
+    */
+  private def reread(df: DataFrame): DataFrame =
+    df.select(df.columns.map(col): _*)
+
+  // memoized relations a bench release unpersists: the GraphOps degree,
+  // triangle and LPA-label tables, the IVF inverted file, and the mined
+  // Jaccard pairs (built over a broadcast gram-frequency map)
+  for ((what, memo) <- Seq[(String, () => DataFrame)](
       "a graph-deg" -> (() => GraphOps.degreesOf(spark, sf0001)),
-      "an ivf" -> (() => IvfKnn.memoIndex(spark, sf0001, 8).assigned)))
+      "an ivf" -> (() => IvfKnn.memoIndex(spark, sf0001, 8).assigned),
+      "a graph-tri" -> (() => GraphOps.trianglesOf(spark, sf0001)),
+      "a graph-labels" -> (() => GraphOps.labelPropagation(spark, sf0001)),
+      "a jaccard-pairs" -> (() => Dedup.ngramJaccardPairs(spark, sf0001))))
     test(s"$what hit after a cache release is re-persisted") {
       try {
         val before = memo()
-        val n = before.count()
-        // Bench.releaseCaches: drop every cached relation and RDD
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        val rows = reread(before).collect().toSet
+        releaseLikeBench()
         assert(before.storageLevel == StorageLevel.NONE)
+        val builds = IndexCache.auditLog.size
         val after = memo()
-        assert(after eq before, "the hit hands back the memoized handle")
-        assert(after.storageLevel == StorageLevel.MEMORY_AND_DISK)
-        assert(after.count() == n)
+        assert(IndexCache.auditLog.size == builds,
+          "the hit hands back the memoized relation, no rebuild")
+        val again = reread(after)
+        assert(again.queryExecution.withCachedData
+          .find(_.isInstanceOf[InMemoryRelation]).nonEmpty,
+          "the hit re-marks the memo for caching")
+        assert(again.collect().toSet == rows)
       } finally IndexCache.clear() // later suites rebuild from scratch
     }
 }

@@ -24,7 +24,8 @@ class IngestSpec extends SparkSpec {
       // inject a malformed line after every 10th record — must be dropped
       if (i % 10 == 9) Seq(good, """{"body": 17 "broken json""") else Seq(good)
     }
-    val p = Files.createTempFile("graft-ingest", ".ndjson")
+    val p = java.nio.file.Paths.get(
+      graft.streaming.OneShot.tempDir("graft-ingest"), "fixture.ndjson")
     Files.write(p, lines.mkString("\n").getBytes)
     p.toString
   }

@@ -30,8 +30,7 @@ class OrdersScaleSpec extends SparkSpec {
     */
   private def generate(spark: SparkSession, customers: Int): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft-ordscale-$customers").toString
+    val dir = graft.streaming.OneShot.tempDir(s"graft-ordscale-$customers")
     val li = spark.range(customers.toLong).as[Long].flatMap { c =>
       val r = new java.util.Random(0xC0FFEE ^ (c * 0x9E3779B97F4A7CL))
       val probe = c % 97 == 0
@@ -106,7 +105,7 @@ class OrdersScaleSpec extends SparkSpec {
       .agg(max("count")).head().getLong(0)
     assert(perCust <= 5, s"per-customer output not bounded: $perCust")
     // the published index is bounded at 20 neighbors per item
-    val nbrs = GraphOps.itemNeighborLists(spark, dir10x)
+    val nbrs = GraphOps.itemNeighborBroadcast(spark, dir10x).get.value
     assert(nbrs.nonEmpty)
     assert(nbrs.values.map(_.length).max <= 20)
     // every even part's strongest stored neighbor is its partner

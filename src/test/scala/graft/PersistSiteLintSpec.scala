@@ -38,9 +38,6 @@ class PersistSiteLintSpec extends AnyFunSuite {
       (1, "iterative-loop state: large-star round"),
     ("GraphOps.scala", "val next = smallStarR(ls).persist(lvl)") ->
       (1, "iterative-loop state: small-star round"),
-    ("GraphOps.scala",
-      ".persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)") ->
-      (1, "iterative-loop state: LPA co-partitioned adjacency"),
     ("TextOps.scala",
       ".persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)") ->
       (3, "iterative-loop state: unigram EM word table and the " +

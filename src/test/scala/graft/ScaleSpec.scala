@@ -33,7 +33,7 @@ class ScaleSpec extends SparkSpec {
   private def generate(spark: SparkSession, n: Int, dim: Int = 64,
       centers: Int = 50, noise: Double = 1.0, seed: Long = 42L): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-scale-$n").toString
+    val dir = graft.streaming.OneShot.tempDir(s"graft-scale-$n")
     val centerVecs: Array[Array[Double]] = Array.tabulate(centers) { c =>
       val r = new java.util.Random(seed * 7919L + c)
       val v = Array.fill(dim)(r.nextGaussian())
@@ -160,7 +160,7 @@ class ScaleSpec extends SparkSpec {
     */
   private lazy val dirAniso: String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-aniso").toString
+    val dir = graft.streaming.OneShot.tempDir("graft-aniso")
     val dim = 64
     spark.range(2000).as[Long].mapPartitions { it =>
       it.map { id =>

@@ -22,8 +22,8 @@ class ScaleTechniquesSpec extends SparkSpec {
   test("z-ordered layout prunes a non-leading-dimension filter; 1-D sort cannot") {
     val ev = Tables.events(spark, sf0001)
       .select("event_id", "user_id", "event_type", "value")
-    val oneD = java.nio.file.Files.createTempDirectory("graft-1d").toString + "/t"
-    val zord = java.nio.file.Files.createTempDirectory("graft-z").toString + "/t"
+    val oneD = graft.streaming.OneShot.tempDir("graft-1d") + "/t"
+    val zord = graft.streaming.OneShot.tempDir("graft-z") + "/t"
     // 1-D layout: range-sorted by user_id — each file spans few users but
     // the FULL event_id range, so an event_id filter reads every file
     ev.repartitionByRange(8, col("user_id"))

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 class SourcesSpec extends SparkSpec {
 
   test("csv round-trip preserves the orders table") {
-    val dir = Files.createTempDirectory("graft-csv").toString
+    val dir = graft.streaming.OneShot.tempDir("graft-csv")
     val orders = Tables.orders(spark, sf0001)
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
     orders.write.mode("overwrite").option("header", "true").csv(dir)
@@ -22,7 +22,7 @@ class SourcesSpec extends SparkSpec {
 
   test("csv ingest drops malformed rows like the NDJSON path") {
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft-csv-bad")
+    val dir = java.nio.file.Paths.get(graft.streaming.OneShot.tempDir("graft-csv-bad"))
     Files.write(dir.resolve("rows.csv"),
       "id,v\n1,1.5\nnot-a-number,oops,extra\n3,2.5\n".getBytes)
     val schema = StructType(Seq(StructField("id", LongType),
@@ -33,7 +33,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("json lines round-trip preserves values including arrays") {
-    val dir = Files.createTempDirectory("graft-json").toString
+    val dir = graft.streaming.OneShot.tempDir("graft-json")
     val emb = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
     emb.write.mode("overwrite").json(dir)
@@ -43,7 +43,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("orc round-trip preserves the customer table") {
-    val dir = Files.createTempDirectory("graft-orc").toString
+    val dir = graft.streaming.OneShot.tempDir("graft-orc")
     val cust = Tables.customer(spark, sf0001)
     cust.write.mode("overwrite").orc(dir)
     val back = spark.read.orc(dir)
@@ -67,7 +67,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("orc round-trip preserves the lineitem slice with pushdown intact") {
-    val dir = Files.createTempDirectory("graft-orc").toString
+    val dir = graft.streaming.OneShot.tempDir("graft-orc")
     val li = Tables.lineitem(spark, sf0001)
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
     graft.sources.Ingest.writeOrc(li, dir)
@@ -164,7 +164,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("compaction rewrites many small files into few, same rows") {
-    val dir = Files.createTempDirectory("graft-compact").toString
+    val dir = graft.streaming.OneShot.tempDir("graft-compact")
     val ev = Tables.events(spark, sf0001).select("event_id", "user_id", "value")
     ev.repartition(64).write.mode("overwrite").parquet(dir)
     def dataFiles = new java.io.File(dir).listFiles
@@ -179,7 +179,7 @@ class SourcesSpec extends SparkSpec {
 
   test("schema evolution: mergeSchema unions parquet schema versions") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-evolve").toString
+    val dir = graft.streaming.OneShot.tempDir("graft-evolve")
     Seq((1L, "a")).toDF("id", "name").write.parquet(s"$dir/v1")
     Seq((2L, "b", 9.5)).toDF("id", "name", "score").write.parquet(s"$dir/v2")
     val merged = spark.read.option("mergeSchema", "true")
@@ -191,7 +191,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("partitioned parquet write prunes partitions on read") {
-    val dir = Files.createTempDirectory("graft-part").toString
+    val dir = graft.streaming.OneShot.tempDir("graft-part")
     graft.sources.Ingest.writePartitioned(
       Tables.events(spark, sf0001).select("event_id", "event_type", "value"),
       dir, Seq("event_type"))

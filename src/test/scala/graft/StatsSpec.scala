@@ -40,7 +40,7 @@ class StatsSpec extends SparkSpec {
     val base = Tables.documents(spark, sf0001)
     val drifted = base.withColumn("text",
       when(col("source") === "src0", lit("x1 y2 z3")).otherwise(col("text")))
-    val dir = java.nio.file.Files.createTempDirectory("graft-psi").toString
+    val dir = graft.streaming.OneShot.tempDir("graft-psi")
     drifted.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val shifted = Stats.psiBySource(spark, dir).collect()
       .map(r => (r.getString(0), r.getDouble(1))).toMap
@@ -417,7 +417,7 @@ class StatsSpec extends SparkSpec {
     val rows = day(0, Seq.fill(50)(10.0) ++ Seq.fill(50)(60.0)) ++
       day(1, Seq.fill(50)(10.0) ++ Seq.fill(50)(60.0)) ++
       day(2, Seq.fill(100)(310.0))
-    val dirTmp = java.nio.file.Files.createTempDirectory("psidrift").toString
+    val dirTmp = graft.streaming.OneShot.tempDir("psidrift")
     rows.toDF("us", "event_type", "value")
       .select(timestamp_micros(col("us")).as("ts"), col("event_type"),
         col("value"), lit(1L).as("user_id"), lit(1L).as("event_id"))

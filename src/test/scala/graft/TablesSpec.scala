@@ -35,7 +35,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("events loads ns-long and µs-NTZ vintages to identical instants") {
-    val base = java.nio.file.Files.createTempDirectory("graft-vintage")
+    val base = java.nio.file.Paths.get(graft.streaming.OneShot.tempDir("graft-vintage"))
     // the nanos vintage ships ts as a plain long column (the legacy
     // nanosAsLong read path sees exactly this shape)
     val nanosDir = writeVintage(base, ntz = false)
@@ -57,7 +57,7 @@ class TablesSpec extends SparkSpec {
 
   test("load() normalizes every NTZ column, not just events.ts") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-vintage2")
+    val base = java.nio.file.Paths.get(graft.streaming.OneShot.tempDir("graft-vintage2"))
     Seq((1L, 1700000000000000L))
       .toDF("o_orderkey", "us")
       .select(col("o_orderkey"),

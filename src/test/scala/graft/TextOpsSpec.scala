@@ -985,7 +985,7 @@ class TextOpsSpec extends SparkSpec {
     // iter 3: contrib a=936250, b=563750, c=936250
     //   s(a) = 150000 + 850*563750/1000  = 629187 (floor)
     //   s(b) = 150000 + 850*1872500/1000 = 1741625
-    val dir = java.nio.file.Files.createTempDirectory("textrank-docs").toString
+    val dir = graft.streaming.OneShot.tempDir("textrank-docs")
     Seq((0L, "a b c"), (1L, "solo"))
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
@@ -1106,7 +1106,7 @@ class TextOpsSpec extends SparkSpec {
       (i, l, (core ++ Seq("shared")).mkString(" ") + " " + core((i % 3).toInt))
     }.toDF("doc_id", "lang", "text")
     // route through the same pipeline by writing a temp parquet layout
-    val dirTmp = java.nio.file.Files.createTempDirectory("nbtest").toString
+    val dirTmp = graft.streaming.OneShot.tempDir("nbtest")
     docs.write.mode("overwrite").parquet(s"$dirTmp/documents.parquet")
     val conf = TextOps.naiveBayesLangid(spark, dirTmp).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap

@@ -23,8 +23,7 @@ class Vamana100xScaleSpec extends SparkSpec {
 
   private lazy val dir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files
-      .createTempDirectory(s"graft-vamana100x").toString
+    val d = graft.streaming.OneShot.tempDir(s"graft-vamana100x")
     val bc = spark.sparkContext.broadcast(centerVecs)
     spark.range(n).as[Long].mapPartitions { it =>
       val cs = bc.value
