@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Execution instrumentation (SURVEY.md §2.13): run an action and
@@ -12,9 +12,9 @@ import org.apache.spark.sql.SparkSession
   * the two-phase bounded-heap top-k provably shuffles a candidate set,
   * not the fact table (QueryMetricsSpec).
   *
-  * Listener delivery is asynchronous; [[measure]] waits for job-end
-  * events to balance job-starts and for the counters to quiesce, then
-  * detaches the listener.
+  * Listener delivery is asynchronous; [[measure]] drains the listener
+  * bus once the action returns (every job's end and task-end events
+  * are posted before its action unblocks), then detaches the listener.
   */
 object QueryMetrics {
 
@@ -27,12 +27,9 @@ object QueryMetrics {
     val inRecs = new AtomicLong
     val tasks = new AtomicLong
     val jobsStarted = new AtomicLong
-    val jobsEnded = new AtomicLong
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         jobsStarted.incrementAndGet()
-      override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        jobsEnded.incrementAndGet()
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
         val m = t.taskMetrics
         if (m != null) {
@@ -46,16 +43,7 @@ object QueryMetrics {
     spark.sparkContext.addSparkListener(listener)
     try {
       action
-      // quiesce: all started jobs ended AND counters stable for 200ms
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      var last = -1L
-      var stable = false
-      while (!stable && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val snap = shRecs.get + inRecs.get + tasks.get
-        stable = jobsEnded.get >= jobsStarted.get && snap == last
-        last = snap
-      }
+      org.apache.spark.sql.GraftColumn.drainListeners(spark)
     } finally spark.sparkContext.removeSparkListener(listener)
     Metrics(shRecs.get, shBytes.get, inRecs.get, tasks.get, jobsStarted.get)
   }

@@ -280,7 +280,7 @@ object Pipeline {
     *   5. TOKENIZE — whitespace token counts (the declared tokenizer
     *      counting stage);
     *   6. CURRICULUM rank + 7. SEQUENCE packing — ONE fused
-    *      [[graft.plans.GraftOps.globalRankAndPrefix]] pass over
+    *      [[graft.plans.GraftOps.globalOrder]] pass over
     *      (q6 desc, doc_id): the global rank and the exclusive token
     *      prefix sum come out of a single range-partitioned layout —
     *      documents pack into `budget`-token training sequences in
@@ -322,10 +322,9 @@ object Pipeline {
     val gated = scored.join(broadcast(med), Seq("lang"))
       .filter(col("q6") * 2 >= col("med2"))
       .select(col("doc_id"), col("lang"), col("q6"), col("n_tok"))
-    graft.plans.GraftOps.globalRankAndPrefix(gated,
-        Seq("q6" -> false, "doc_id" -> true), "n_tok",
-        rankName = "curriculum_rank", sumName = "start_tok",
-        exclusive = true)
+    graft.plans.GraftOps.globalOrder(gated,
+        Seq("q6" -> false, "doc_id" -> true), rank = Some("curriculum_rank"),
+        sums = Seq("n_tok" -> "start_tok"), exclusive = true)
       .withColumn("start_seq", expr(s"start_tok div $budget"))
       .select(col("doc_id"), col("lang"),
         round(col("q6") / 1e6, 6).as("quality"), col("n_tok"),
@@ -372,7 +371,7 @@ object Pipeline {
     * (ntile would tie-break by partition luck); deciles derive from
     * the rank by exact integer arithmetic (rank−1)·10 / n.
     *
-    * Scale shape: the rank is [[graft.plans.GraftOps.globalRank]] —
+    * Scale shape: the rank is [[graft.plans.GraftOps.globalOrder]] —
     * range-partitioned on (q6 desc, doc_id), local sort + broadcast
     * per-partition offsets — so no task ever holds more than
     * ~|corpus|/partitions rows (the unpartitioned `Window.orderBy`
@@ -385,9 +384,9 @@ object Pipeline {
       .select(col("doc_id"),
         round(TextOps.qualityOf(col("text"), w) * 1e6, 0).cast("long")
           .as("q6"))
-    graft.plans.GraftOps.globalRank(scored,
+    graft.plans.GraftOps.globalOrder(scored,
         Seq("q6" -> false, "doc_id" -> true),
-        rankName = "curriculum_rank", countName = Some("n"))
+        rank = Some("curriculum_rank"), count = Some("n"))
       .select(col("doc_id"), round(col("q6") / 1e6, 6).as("quality"),
         col("curriculum_rank"),
         ((col("curriculum_rank") - 1L) * 10L / col("n")).cast("long")
@@ -474,7 +473,7 @@ object Pipeline {
     * row is a function of one exclusive prefix sum.
     *
     * Scale shape: the prefix sum is
-    * [[graft.plans.GraftOps.globalPrefixSum]] — range-partitioned on
+    * [[graft.plans.GraftOps.globalOrder]] — range-partitioned on
     * doc_id, per-partition token subtotals broadcast as offsets, one
     * running local fold per task — so the corpus never serializes
     * through a single-partition window; everything after the prefix
@@ -487,8 +486,8 @@ object Pipeline {
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tok"))
-    graft.plans.GraftOps.globalPrefixSum(toks, Seq("doc_id" -> true),
-        "n_tok", sumName = "start_tok")
+    graft.plans.GraftOps.globalOrder(toks, Seq("doc_id" -> true),
+        sums = Seq("n_tok" -> "start_tok"), exclusive = true)
       .withColumn("start_seq", expr(s"start_tok div $budget"))
       .withColumn("end_seq", expr(s"(start_tok + n_tok - 1) div $budget"))
       .select(col("doc_id"), col("n_tok"), col("start_tok"),
@@ -502,7 +501,7 @@ object Pipeline {
     * their longest member waste `batch·max − Σ len` tokens, and
     * LENGTH-SORTED batching (every serving/training stack's trick)
     * collapses that waste because batch members are near-equal length.
-    * Both strategies are ranked by [[graft.plans.GraftOps.globalRank]]
+    * Both strategies are ranked by [[graft.plans.GraftOps.globalOrder]]
     * (arrival = doc_id order; sorted = (n_tok, doc_id)), bucketed every
     * `batchSize` ranks, padded to the batch max — so the audit itself
     * runs window-free at any corpus size, and the one ordering that
@@ -516,7 +515,7 @@ object Pipeline {
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tok"))
     def audit(strategy: String, order: Seq[(String, Boolean)]) =
-      graft.plans.GraftOps.globalRank(toks, order, "grk")
+      graft.plans.GraftOps.globalOrder(toks, order, rank = Some("grk"))
         .withColumn("batch_id", expr(s"(grk - 1) div $batchSize"))
         .groupBy(col("batch_id"))
         .agg(count(lit(1)).as("bn"), sum(col("n_tok")).as("bt"),
@@ -545,7 +544,7 @@ object Pipeline {
     * permutations of the same corpus.
     *
     * Scale shape: the rank is
-    * [[graft.plans.GraftOps.globalRank]] unconditionally — shuffling
+    * [[graft.plans.GraftOps.globalOrder]] unconditionally — shuffling
     * IS a corpus-sized global ordering, so the range-partitioned rank
     * is the only shape that survives (a single-partition window here
     * would serialize the whole corpus; this is the third corpus-scale
@@ -558,8 +557,8 @@ object Pipeline {
       .select(col("doc_id"),
         md5(concat(col("doc_id").cast("string"), lit(s":epoch:$epoch")))
           .as("h"))
-    graft.plans.GraftOps.globalRank(keyed,
-        Seq("h" -> true, "doc_id" -> true), rankName = "shuffle_pos")
+    graft.plans.GraftOps.globalOrder(keyed,
+        Seq("h" -> true, "doc_id" -> true), rank = Some("shuffle_pos"))
       .select(col("doc_id"), col("shuffle_pos"))
   }
 

@@ -411,15 +411,14 @@ object Relational {
     *
     * Scale shape: the rank + cumulative sum run over the |customers|
     * ROLLUP (one partial-aggregated shuffle reduces the fact table
-    * first), never over raw orders. Below
-    * [[graft.plans.GraftOps.smallOrderCutover]] the rollup windows on
-    * one reducer (faster there); at or above it the fused
-    * [[graft.plans.GraftOps.globalRankAndPrefix]] takes over —
-    * range-partitioned rank and inclusive prefix in ONE layout with
-    * the grand total as a broadcast column, so a billion-customer
-    * rollup never serializes through a single-partition window (both
-    * legs output-identical; GlobalOrderSpec pins it). Exact integer
-    * cents make the cumulative sums order-independent. Output:
+    * first), never over raw orders, in ONE
+    * [[graft.plans.GraftOps.globalOrder]] pass: range-partitioned rank
+    * and inclusive prefix in one layout with the grand total as a
+    * broadcast column, so a billion-customer rollup never serializes
+    * through a single-partition window (the window leg it replaced is
+    * measured beside it at [[graft.plans.GraftOps.smallOrderCutover]]).
+    * Exact integer cents make the cumulative sums order-independent.
+    * Output:
     * (custkey, spend, rk, cum_share rounded 6, top80).
     */
   def revenuePareto(spark: SparkSession, dir: String): DataFrame = {
@@ -427,18 +426,9 @@ object Relational {
     val s = Tables.orders(spark, dir)
       .select(col("o_custkey").as("custkey"), cents(col("o_totalprice")).as("c"))
       .groupBy(col("custkey")).agg(sum(col("c")).as("cents"))
-    val ranked =
-      if (s.count() < graft.plans.GraftOps.smallOrderCutover) {
-        val ord = Window.orderBy(col("cents").desc, col("custkey"))
-        s.withColumn("rk", row_number().over(ord).cast("long"))
-          .withColumn("cum", sum(col("cents")).over(
-            ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-          .withColumn("tot",
-            sum(col("cents")).over(Window.partitionBy()))
-      } else graft.plans.GraftOps.globalRankAndPrefix(s,
-        Seq("cents" -> false, "custkey" -> true), "cents",
-        rankName = "rk", sumName = "cum", totalName = Some("tot"))
-    ranked
+    graft.plans.GraftOps.globalOrder(s,
+        Seq("cents" -> false, "custkey" -> true), rank = Some("rk"),
+        sums = Seq("cents" -> "cum"), totals = Seq("tot"))
       .select(col("custkey"), (col("cents") / 100.0).as("spend"),
         col("rk"),
         round(col("cum").cast("double") / col("tot"), 6).as("cum_share"))
@@ -446,20 +436,6 @@ object Relational {
         when(col("cum_share") <= 0.8, 1).otherwise(0))
   }
 
-  /** RFM segmentation over the [[customerLtv]] rollup: recency
-    * (last-order day), frequency (order count), and monetary (total
-    * spend) each quartiled — the classic CRM scoring grid. Below
-    * [[graft.plans.GraftOps.smallOrderCutover]] each quartile is a
-    * plain ntile window over the |customers| rollup (faster there);
-    * at or above it each becomes
-    * [[graft.plans.GraftOps.globalRank]] + the SQL-exact ntile
-    * arithmetic ([[graft.plans.GraftOps.ntileFromRank]]: larger
-    * buckets first, bit-parity pinned by GlobalOrderSpec), so a
-    * billion-customer rollup never single-partition-sorts. Every
-    * ordering carries the custkey tie-break so bin boundaries are
-    * deterministic on both engines. Output: one row per customer with
-    * the three scores and their "RFM" concatenation.
-    */
   /** OPEN-ORDER BACKLOG AGING — the operations dashboard cut: every
     * order still open (status 'O' or 'P') bucketed by its age in days
     * relative to the dataset's latest order date (0–30 / 31–90 /
@@ -528,32 +504,59 @@ object Relational {
         when(col("hhi") > 2500.0, 1).otherwise(0).as("concentrated"))
   }
 
+  /** RFM segmentation over the [[customerLtv]] rollup: recency
+    * (last-order day), frequency (order count), and monetary (total
+    * spend) each quartiled — the classic CRM scoring grid. Below
+    * [[graft.plans.GraftOps.smallOrderCutover]] each quartile is a
+    * plain ntile window over the |customers| rollup ([[rfmWindow]],
+    * measured faster there); at or above it each becomes a
+    * [[graft.plans.GraftOps.globalOrder]] rank + the SQL-exact ntile
+    * arithmetic ([[rfmRange]]), so a billion-customer rollup never
+    * single-partition-sorts. Every ordering carries the custkey
+    * tie-break so bin boundaries are deterministic on both engines.
+    * Output: one row per customer with the three scores and their
+    * "RFM" concatenation.
+    */
   def rfmSegments(spark: SparkSession, dir: String): DataFrame = {
-    import graft.plans.GraftOps.{globalRank, ntileFromRank, smallOrderCutover}
     val ltv = customerLtv(spark, dir)
       .select(col("custkey"), col("n_orders"), col("total_spend"),
         col("last_order_epday"))
     val scored =
-      if (ltv.count() < smallOrderCutover) {
-        def quartile(order: org.apache.spark.sql.Column*) =
-          ntile(4).over(Window.orderBy(order: _*))
-        ltv.select(col("custkey"), col("n_orders"), col("total_spend"),
-          col("last_order_epday"),
-          quartile(col("last_order_epday").asc, col("custkey").asc).as("r"),
-          quartile(col("n_orders").asc, col("custkey").asc).as("f"),
-          quartile(col("total_spend").asc, col("custkey").asc).as("m"))
-      } else {
-        def quartile(df: DataFrame, keys: Seq[String], name: String): DataFrame =
-          globalRank(df, keys.map(_ -> true), "_qrk", countName = Some("_qn"))
-            .withColumn(name, ntileFromRank(col("_qrk"), col("_qn"), 4))
-            .drop("_qrk", "_qn")
-        Seq(
-          (Seq("last_order_epday", "custkey"), "r"),
-          (Seq("n_orders", "custkey"), "f"),
-          (Seq("total_spend", "custkey"), "m"))
-          .foldLeft(ltv) { case (df, (keys, name)) => quartile(df, keys, name) }
-      }
+      if (ltv.count() < graft.plans.GraftOps.smallOrderCutover) rfmWindow(ltv)
+      else rfmRange(ltv)
     scored.withColumn("rfm", concat(col("r"), col("f"), col("m")))
+  }
+
+  /** The r/f/m quartiles as three unpartitioned ntile windows: the
+    * small leg of [[rfmSegments]].
+    */
+  private[graft] def rfmWindow(ltv: DataFrame): DataFrame = {
+    def quartile(order: org.apache.spark.sql.Column*) =
+      ntile(4).over(Window.orderBy(order: _*))
+    ltv.select(col("custkey"), col("n_orders"), col("total_spend"),
+      col("last_order_epday"),
+      quartile(col("last_order_epday").asc, col("custkey").asc).as("r"),
+      quartile(col("n_orders").asc, col("custkey").asc).as("f"),
+      quartile(col("total_spend").asc, col("custkey").asc).as("m"))
+  }
+
+  /** The r/f/m quartiles as three range-partitioned ranks through
+    * [[graft.plans.GraftOps.ntileFromRank]] (larger buckets first,
+    * bit-parity pinned by GlobalOrderSpec): the large leg of
+    * [[rfmSegments]], row-equal to [[rfmWindow]].
+    */
+  private[graft] def rfmRange(ltv: DataFrame): DataFrame = {
+    import graft.plans.GraftOps.{globalOrder, ntileFromRank}
+    def quartile(df: DataFrame, keys: Seq[String], name: String): DataFrame =
+      globalOrder(df, keys.map(_ -> true), rank = Some("_qrk"),
+          count = Some("_qn"))
+        .withColumn(name, ntileFromRank(col("_qrk"), col("_qn"), 4))
+        .drop("_qrk", "_qn")
+    Seq(
+      (Seq("last_order_epday", "custkey"), "r"),
+      (Seq("n_orders", "custkey"), "f"),
+      (Seq("total_spend", "custkey"), "m"))
+      .foldLeft(ltv) { case (df, (keys, name)) => quartile(df, keys, name) }
   }
 
   /** UNPIVOT (melt): the per-returnflag wide aggregate folded to the

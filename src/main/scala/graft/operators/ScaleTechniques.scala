@@ -681,7 +681,7 @@ object ScaleTechniques {
     * between scanning everything and scanning one month.
     *
     * The file model is the range-partitioned [[graft.plans.GraftOps
-    * .globalRank]] (the 100 TB global-order primitive — no
+    * .globalOrder]] rank (the 100 TB global-order primitive — no
     * single-partition window), bucketed every `rowsPerFile` rows; the
     * band compares exact integer epoch-days (the engine-parity idiom).
     * Scale shape: two range layouts + one |files|-row rollup each; the
@@ -701,7 +701,7 @@ object ScaleTechniques {
     * [[layoutTradeoffMatrix]] (both audit stats off these |files|-row
     * rollups; the ship-date band reads the epday columns, the supplier
     * band the supp columns). One range-partitioned
-    * [[graft.plans.GraftOps.globalRank]] pass per layout, memoized +
+    * [[graft.plans.GraftOps.globalOrder]] rank per layout, memoized +
     * persisted per (dataset, layout, rowsPerFile) so the two declared
     * rows never repeat a layout's sort.
     */
@@ -740,7 +740,7 @@ object ScaleTechniques {
           Seq("z" -> true, "l_orderkey" -> true, "l_linenumber" -> true)
         case other => throw new IllegalArgumentException(other)
       }
-      graft.plans.GraftOps.globalRank(li, orderCols, "grk")
+      graft.plans.GraftOps.globalOrder(li, orderCols, rank = Some("grk"))
         .withColumn("file_id", ((col("grk") - 1) / rowsPerFile).cast("long"))
         .groupBy(col("file_id"))
         .agg(min(col("epday")).as("dmn"), max(col("epday")).as("dmx"),
@@ -788,7 +788,7 @@ object ScaleTechniques {
     * for a table serving both access paths.
     *
     * Same file model as [[minmaxSkipping]] (range-partitioned
-    * [[graft.plans.GraftOps.globalRank]] bucketed every `rowsPerFile`
+    * [[graft.plans.GraftOps.globalOrder]] rank bucketed every `rowsPerFile`
     * rows — no single-partition window); per layout ONE |files|-row
     * envelope rollup carries min/max of BOTH keys, and each predicate
     * reads it with one conditional sum. Matched-row counts attach from
@@ -845,7 +845,7 @@ object ScaleTechniques {
     * paths.
     *
     * Same file model as [[layoutTradeoffMatrix]] (range-partitioned
-    * [[graft.plans.GraftOps.globalRank]], `rowsPerFile` rows per file);
+    * [[graft.plans.GraftOps.globalOrder]] rank, `rowsPerFile` rows per file);
     * the zorder layout orders by [[zorderValue]] ([[ZorderLayoutBits]]
     * bits per key — range-asserted at build), a pure codegen bit fold the
     * DuckDB oracle replays term-by-term. Envelopes memoized via

@@ -86,14 +86,10 @@ object Stats {
     * in both engines.
     *
     * Scale: the rank runs over the |customers|-sized rollup, never
-    * the fact table. Below
-    * [[graft.plans.GraftOps.smallOrderCutover]] the rollup sorts on
-    * one reducer (faster there — the range form's fixed cost
-    * dominates sub-second relations); at or above it the rank
-    * switches to [[graft.plans.GraftOps.globalRank]] (partition
-    * offset + local rank), so a billion-customer rollup never funnels
-    * through one reducer. Same formula, same output on both legs
-    * (GlobalOrderSpec pins the equality).
+    * the fact table, through [[graft.plans.GraftOps.globalOrder]]
+    * (partition offset + local rank), so a billion-customer rollup
+    * never funnels through one reducer (the window leg it replaced is
+    * measured beside it at [[graft.plans.GraftOps.smallOrderCutover]]).
     */
   def giniCoefficient(spark: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(38, 0)
@@ -101,13 +97,8 @@ object Stats {
       .select(col("o_custkey").as("custkey"),
         ExactNum.cents(col("o_totalprice")).as("c"))
       .groupBy(col("custkey")).agg(sum(col("c")).as("c"))
-    val ranked =
-      if (perCust.count() < graft.plans.GraftOps.smallOrderCutover)
-        perCust.withColumn("rk",
-          row_number().over(Window.orderBy(col("c"), col("custkey")))
-            .cast("long"))
-      else graft.plans.GraftOps.globalRank(perCust,
-        Seq("c" -> true, "custkey" -> true), "rk")
+    val ranked = graft.plans.GraftOps.globalOrder(perCust,
+      Seq("c" -> true, "custkey" -> true), rank = Some("rk"))
     val m = ranked.agg(
       count(lit(1)).cast(dec).as("n"),
       sum(col("c").cast(dec)).as("sx"),
@@ -488,7 +479,7 @@ object Stats {
     * Scale: the corpus collapses to pooled distinct quantized scores —
     * bounded at ≤ 1e6+1 rows by the micro-unit grid REGARDLESS of
     * corpus size (the designed cap) — and BOTH running CDFs stamp in
-    * one fused [[graft.plans.GraftOps.globalPrefixSums]] pass over
+    * one fused [[graft.plans.GraftOps.globalOrder]] pass over
     * that relation: range-partitioned, one layout, no single-reducer
     * window anywhere in the plan (StatsSpec pins the window-free
     * shape).
@@ -506,8 +497,8 @@ object Stats {
       .agg(sum(when(col("source") === srcA, 1L).otherwise(0L)).as("ca"),
         sum(when(col("source") === srcB, 1L).otherwise(0L)).as("cb"))
     val tot = cells.agg(sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"))
-    graft.plans.GraftOps.globalPrefixSums(cells, Seq("q6" -> true),
-        Seq("ca", "cb"), Seq("cum_a", "cum_b"), exclusive = false)
+    graft.plans.GraftOps.globalOrder(cells, Seq("q6" -> true),
+        sums = Seq("ca" -> "cum_a", "cb" -> "cum_b"))
       .crossJoin(broadcast(tot))
       .agg(max(col("n_a")).as("n_a"), max(col("n_b")).as("n_b"),
         max(abs(col("cum_a") * col("n_b") - col("cum_b") * col("n_a")))
@@ -517,26 +508,6 @@ object Stats {
           / (col("n_a").cast("double") * col("n_b")), 6).as("ks_d"))
   }
 
-  /** Mann–Whitney U between the same two sources' quality scores —
-    * the rank-based location test completing the nonparametric trio
-    * (chi-square: independence; KS: distribution shape; U: stochastic
-    * dominance). Tie-corrected via average ranks; the reported effect
-    * size U/(n_a·n_b) is the probability a random src-A doc outscores
-    * a random src-B doc (the common-language effect size — the AUC of
-    * "source predicts quality").
-    *
-    * Exactness: on the pooled distinct quantized scores, a tie block
-    * of `cnt` values after `prev` items has average rank
-    * (2·prev + cnt + 1)/2 — so DOUBLED rank sums are exact longs and
-    * U₂ = 2U = 2R_a − n_a(n_a+1) is exact; one final division.
-    *
-    * Scale: same pooled-distinct-value relation as
-    * [[ksQualityBySource]] (≤ 1e6+1 rows by the quantization grid, at
-    * any corpus size), with the running pooled count stamped by
-    * [[graft.plans.GraftOps.globalPrefixSum]] — window-free
-    * (StatsSpec pins the plan shape).
-    * Output: (n_a, n_b, u2, effect rounded 6).
-    */
   /** ALL-PAIRS KS tests with BENJAMINI–HOCHBERG false-discovery-rate
     * control — the multiple-testing layer the single-pair
     * [[ksQualityBySource]] row lacks: a drift monitor comparing every
@@ -617,6 +588,26 @@ object Stats {
         when(col("qv") <= alpha, 1).otherwise(0).as("significant"))
   }
 
+  /** Mann–Whitney U between the same two sources' quality scores —
+    * the rank-based location test completing the nonparametric trio
+    * (chi-square: independence; KS: distribution shape; U: stochastic
+    * dominance). Tie-corrected via average ranks; the reported effect
+    * size U/(n_a·n_b) is the probability a random src-A doc outscores
+    * a random src-B doc (the common-language effect size — the AUC of
+    * "source predicts quality").
+    *
+    * Exactness: on the pooled distinct quantized scores, a tie block
+    * of `cnt` values after `prev` items has average rank
+    * (2·prev + cnt + 1)/2 — so DOUBLED rank sums are exact longs and
+    * U₂ = 2U = 2R_a − n_a(n_a+1) is exact; one final division.
+    *
+    * Scale: same pooled-distinct-value relation as
+    * [[ksQualityBySource]] (≤ 1e6+1 rows by the quantization grid, at
+    * any corpus size), with the running pooled count stamped by
+    * [[graft.plans.GraftOps.globalOrder]] — window-free
+    * (StatsSpec pins the plan shape).
+    * Output: (n_a, n_b, u2, effect rounded 6).
+    */
   def mannWhitneyQuality(spark: SparkSession, dir: String,
       srcA: String = "src0", srcB: String = "src1"): DataFrame = {
     val w = split(col("text"), " ")
@@ -629,8 +620,8 @@ object Stats {
       .agg(sum(when(col("source") === srcA, 1L).otherwise(0L)).as("ca"),
         sum(when(col("source") === srcB, 1L).otherwise(0L)).as("cb"))
       .withColumn("cnt", col("ca") + col("cb"))
-    graft.plans.GraftOps.globalPrefixSum(cells, Seq("q6" -> true),
-        "cnt", "prev", exclusive = true)
+    graft.plans.GraftOps.globalOrder(cells, Seq("q6" -> true),
+        sums = Seq("cnt" -> "prev"), exclusive = true)
       .agg(sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"),
         sum(col("ca") * (lit(2L) * col("prev") + col("cnt") + 1L)).as("r2a"))
       .select(col("n_a"), col("n_b"),

@@ -1,7 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, Dataset, GraftColumn, Row}
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending, SortOrder}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftColumn}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -10,16 +10,24 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 object GraftOps {
 
   /** Row-count cutover between the single-partition window form and
-    * the range-partitioned global-order primitives: below it, one
-    * reducer sorts the relation in well under a second and the
-    * primitives' fixed cost (two extra jobs + Row conversion)
-    * dominates — measured 3-6x slower on 1.5k-row rollups at sf0.1; at
-    * or above it, the single-partition window IS the bottleneck and
-    * the range form is the only shape that survives. Callers with a
-    * dimension-sized rollup (|customers|, |suppliers|) branch on a
-    * cheap `count()` — the small leg collects nothing, so there is no
-    * [[driverOr]] probe to reuse; callers ranking the raw corpus
-    * (curriculum, sequence packing) use the range form unconditionally.
+    * [[globalOrder]], read by one site: `Relational.rfmSegments` (three
+    * ntile windows over the |customers| rollup). Both legs, measured on
+    * the sf0.1 rollups (<= 15k customers) at `local[4]`, median of 9
+    * alternating reps:
+    *
+    * {{{
+    * site    window leg         range leg          same rows
+    * pareto  0.515 s / 7 jobs   0.467 s / 6 jobs   yes
+    * gini    0.369 s / 7 jobs   0.351 s / 7 jobs   yes
+    * rfm     0.769 s / 10 jobs  0.946 s / 14 jobs  yes
+    * }}}
+    *
+    * Only rfm's window leg pays for its `count()` (its range leg runs
+    * one range layout per quartile), so pareto and gini take
+    * [[globalOrder]] unconditionally, as do the corpus-ranking callers
+    * (curriculum, sequence packing). At or above the cutover the
+    * single-partition window IS the bottleneck and the range form is
+    * the only shape that survives.
     */
   val smallOrderCutover: Long = 4000000L
 
@@ -76,71 +84,6 @@ object GraftOps {
     if (df.rdd.getNumPartitions >= target) df
     else df.repartition(target)
 
-  /** The input globally SORTED by `orderCols` across a real multi-
-    * partition range layout: sampled range boundaries decide each row's
-    * partition (`repartitionByRange`), then each partition sorts
-    * locally — partition i's rows all precede partition i+1's in the
-    * total order. The building block of [[globalRank]] /
-    * [[globalPrefixSum]]: at ANY scale no single task ever sees more
-    * than ~|input|/partitions rows, unlike an unpartitioned
-    * `Window.orderBy` which funnels the whole relation through one
-    * reducer.
-    */
-  private def rangeOrdered(df: DataFrame, orderCols: Seq[(String, Boolean)],
-      partitions: Int): DataFrame = {
-    val sortExprs = orderCols.map { case (n, asc) =>
-      if (asc) col(n).asc else col(n).desc
-    }
-    df.repartitionByRange(partitions, sortExprs: _*)
-      .sortWithinPartitions(sortExprs: _*)
-  }
-
-  /** The range-ordered layout as an `InternalRow` RDD + its schema —
-    * the primitives stay on UnsafeRows end to end (one buffer copy per
-    * row for the persist) instead of round-tripping every field
-    * through boxed external Rows on both the way out AND the way back
-    * in. Partition index i is range bucket i, exactly as with `.rdd`.
-    */
-  private def rangeOrderedInternal(df: DataFrame,
-      orderCols: Seq[(String, Boolean)], partitions: Int)
-      : (org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-        StructType) = {
-    val ordered = rangeOrdered(df, orderCols, partitions)
-    (ordered.queryExecution.toRdd.map(_.copy()), ordered.schema)
-  }
-
-  /** Stamp `nExtra` long columns onto every row of a partition through
-    * one reusable UnsafeProjection — `fill(i, row, extra)` writes the
-    * per-row values into `extra` (a mutable buffer) as the iterator
-    * advances. The projection's output buffer is reused per row (the
-    * standard scan contract; buffering consumers copy).
-    */
-  private def stampedFrame(spark: org.apache.spark.sql.SparkSession,
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      inSchema: StructType, extraFields: Seq[StructField])(
-      fill: Int =>
-        (org.apache.spark.sql.catalyst.InternalRow => Array[Long]))
-      : DataFrame = {
-    val outSchema = StructType(inSchema.fields ++ extraFields)
-    val nExtra = extraFields.length
-    val stamped = rdd.mapPartitionsWithIndex { (i, it) =>
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(outSchema)
-      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      val extra =
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(nExtra)
-      val f = fill(i) // fresh stateful stamper per partition (no sharing)
-      it.map { row =>
-        val vals = f(row)
-        var j = 0
-        while (j < nExtra) { extra.update(j, vals(j)); j += 1 }
-        proj(joined(row, extra))
-          : org.apache.spark.sql.catalyst.InternalRow
-      }
-    }
-    org.apache.spark.sql.GraftColumn.ofInternal(spark, stamped, outSchema)
-  }
-
   /** Persisted range-ordered RDDs, bounded. Persisting the ordered
     * layout before the two jobs (subtotal, stamp) buys two guarantees
     * at the cost of one MEMORY_AND_DISK copy:
@@ -176,112 +119,102 @@ object GraftOps {
     rdd
   }
 
-  /** Per-partition row-count (or value-sum) EXCLUSIVE offsets over a
-    * range-ordered layout — the "one tiny scan of partition subtotals"
-    * both primitives share: one lightweight job computes each
-    * partition's subtotal (|partitions| longs to the driver — bounded
-    * by cluster size, never data size), scanLeft turns them into start
-    * offsets, and the array broadcasts back. Returns (offsets, total).
+  /** The one scalable GLOBAL total-order primitive: `row_number()`,
+    * running sums, the row count and the sum totals over `orderCols`
+    * (name, ascending) without ever forming a single-partition window.
+    * The input is range-partitioned on the sort keys (sampled
+    * boundaries, so partition i's rows all precede partition i+1's)
+    * and sorted within each partition; one subtotal job collects a
+    * (row count, value sums) vector per partition (|partitions| x
+    * (1 + |sums|) longs to the driver — bounded by cluster size, never
+    * data size), a scan turns them into start offsets broadcast back,
+    * and one stamping pass appends, in this order:
+    *
+    *   - `rank`: the 1-based rank (`row_number()`);
+    *   - `sums` (value, name): the running sum of each value column,
+    *     inclusive of the row itself, or strictly before it when
+    *     `exclusive` (`rowsBetween(unboundedPreceding, -1)`, 0 first);
+    *   - `count`: the total row count (the pair an ntile / decile
+    *     projection needs with the rank);
+    *   - `totals`: each sum column's grand total, one name per `sums`
+    *     entry (the denominator of a cumulative share).
+    *
+    * Output rows and values are identical to the window forms for any
+    * TOTAL order (give a tie-breaking final key); no task ever sees
+    * more than ~|input|/partitions rows. Values must be non-null longs
+    * (exact integer discipline: order-free per-partition sums, one
+    * deterministic scan of the subtotals).
     */
-  private def partitionOffsets(
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      subtotal: Iterator[org.apache.spark.sql.catalyst.InternalRow] => Long)
-      : (Array[Long], Long) = {
-    val subs = rdd
-      .mapPartitionsWithIndex((i, it) => Iterator((i, subtotal(it))),
-        preservesPartitioning = true)
-      .collect().sortBy(_._1).map(_._2)
-    (subs.scanLeft(0L)(_ + _), subs.sum)
-  }
-
-  /** Scalable GLOBAL total-order rank: `row_number()` over `orderCols`
-    * (name, ascending) without ever forming a single-partition window —
-    * range-partition on the sort keys, local sort, per-partition row
-    * counts as broadcast offsets, then each task stamps
-    * `offset(p) + local_position`. Appends `rankName` (1-based) and,
-    * when `countName` is set, the total row count (the pair a decile /
-    * percentile projection needs). Output rows and values are identical
-    * to the window form for any TOTAL order (give a tie-breaking final
-    * key); only the plan shape changes — this is the 100 TB form of
-    * `row_number().over(Window.orderBy(...))`.
-    */
-  def globalRank(df: DataFrame, orderCols: Seq[(String, Boolean)],
-      rankName: String = "grk", countName: Option[String] = None,
-      partitions: Int = 0): DataFrame = {
+  def globalOrder(df: DataFrame, orderCols: Seq[(String, Boolean)],
+      rank: Option[String] = None, sums: Seq[(String, String)] = Nil,
+      exclusive: Boolean = false, count: Option[String] = None,
+      totals: Seq[String] = Nil): DataFrame = {
+    require(totals.isEmpty || totals.length == sums.length,
+      s"globalOrder: ${totals.length} totals for ${sums.length} sums")
     val spark = df.sparkSession
-    val p = if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions
-    val (rdd0, inSchema) = rangeOrderedInternal(df, orderCols, p)
-    val rdd = persistOrdered(rdd0)
-    val (offsets, total) = partitionOffsets(rdd, it => {
-      var n = 0L; while (it.hasNext) { it.next(); n += 1L }; n
-    })
-    val bc = spark.sparkContext.broadcast(offsets)
-    val extras = Seq(StructField(rankName, LongType, nullable = false)) ++
-      countName.map(StructField(_, LongType, nullable = false))
-    val nOut = 1 + countName.size
-    stampedFrame(spark, rdd, inSchema, extras) { i =>
-      var r = bc.value(i)
-      val out = new Array[Long](nOut)
-      if (nOut > 1) out(1) = total
-      _ => { r += 1L; out(0) = r; out }
+    val sortExprs = orderCols.map { case (n, asc) =>
+      if (asc) col(n).asc else col(n).desc
     }
-  }
-
-  /** [[globalRank]] and [[globalPrefixSum]] fused into ONE range
-    * layout and ONE stamping pass: appends the 1-based rank, the
-    * prefix sum of `valueCol` (inclusive by default — the Pareto /
-    * cumulative-share shape), and optionally the total row count and
-    * total value sum as broadcast constant columns (the quantities a
-    * share/ntile projection divides by, without a second aggregate
-    * job). One subtotal job collects |partitions| (count, sum) pairs.
-    */
-  def globalRankAndPrefix(df: DataFrame, orderCols: Seq[(String, Boolean)],
-      valueCol: String, rankName: String = "grk",
-      sumName: String = "prefix_sum", exclusive: Boolean = false,
-      countName: Option[String] = None, totalName: Option[String] = None,
-      partitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    val p = if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions
-    val (rdd0, inSchema) = rangeOrderedInternal(df, orderCols, p)
-    val vIdx = inSchema.fieldIndex(valueCol)
-    val rdd = persistOrdered(rdd0)
+    val ordered = df
+      .repartitionByRange(spark.sessionState.conf.numShufflePartitions,
+        sortExprs: _*)
+      .sortWithinPartitions(sortExprs: _*)
+    // UnsafeRows end to end: one buffer copy per row for the persist,
+    // no boxed external Rows on the way out or back in
+    val inSchema = ordered.schema
+    val rdd = persistOrdered(ordered.queryExecution.toRdd.map(_.copy()))
+    val vIdx = sums.map { case (v, _) => inSchema.fieldIndex(v) }.toArray
+    val nv = vIdx.length
+    // slot 0 counts rows, slot j + 1 sums value column j
     val subs = rdd.mapPartitionsWithIndex({ (i, it) =>
-      var n = 0L; var s = 0L
-      while (it.hasNext) { s += it.next().getLong(vIdx); n += 1L }
-      Iterator((i, n, s))
-    }, preservesPartitioning = true).collect().sortBy(_._1)
-    val cntOff = subs.map(_._2).scanLeft(0L)(_ + _)
-    val sumOff = subs.map(_._3).scanLeft(0L)(_ + _)
-    val totalN = cntOff.last
-    val totalS = sumOff.last
-    val bc = spark.sparkContext.broadcast((cntOff, sumOff))
-    val extras = Seq(StructField(rankName, LongType, nullable = false),
-      StructField(sumName, LongType, nullable = false)) ++
-      countName.map(StructField(_, LongType, nullable = false)) ++
-      totalName.map(StructField(_, LongType, nullable = false))
-    stampedFrame(spark, rdd, inSchema, extras) { i =>
-      var rk = bc.value._1(i)
-      var acc = bc.value._2(i)
-      val out = new Array[Long](extras.length)
-      var j = 2
-      countName.foreach { _ => out(j) = totalN; j += 1 }
-      totalName.foreach { _ => out(j) = totalS }
-      row => {
-        val v = row.getLong(vIdx)
-        rk += 1L
-        out(0) = rk
-        out(1) = if (exclusive) acc else acc + v
-        acc += v
-        out
+      val s = new Array[Long](nv + 1)
+      while (it.hasNext) {
+        val row = it.next()
+        s(0) += 1L
+        var j = 0
+        while (j < nv) { s(j + 1) += row.getLong(vIdx(j)); j += 1 }
+      }
+      Iterator((i, s))
+    }, preservesPartitioning = true).collect().sortBy(_._1).map(_._2)
+    val offsets = subs.scanLeft(new Array[Long](nv + 1)) { (acc, s) =>
+      acc.zip(s).map { case (a, b) => a + b }
+    }
+    val grand = offsets.last
+    val bc = spark.sparkContext.broadcast(offsets)
+    val extras = (rank.toSeq ++ sums.map(_._2) ++ count ++ totals)
+      .map(StructField(_, LongType, nullable = false))
+    val outSchema = StructType(inSchema.fields ++ extras)
+    val nRank = rank.size
+    val stamped = rdd.mapPartitionsWithIndex { (i, it) =>
+      val proj = UnsafeProjection.create(outSchema)
+      val joined = new JoinedRow
+      val extra = new GenericInternalRow(extras.length)
+      val acc = bc.value(i).clone() // rows and sums before this partition
+      var k = nRank + nv
+      count.foreach { _ => extra.update(k, grand(0)); k += 1 }
+      totals.indices.foreach(j => extra.update(k + j, grand(j + 1)))
+      it.map { row =>
+        acc(0) += 1L
+        if (nRank == 1) extra.update(0, acc(0))
+        var j = 0
+        while (j < nv) {
+          val v = row.getLong(vIdx(j))
+          extra.update(nRank + j, if (exclusive) acc(j + 1) else acc(j + 1) + v)
+          acc(j + 1) += v
+          j += 1
+        }
+        // the projection's output buffer is reused per row (the
+        // standard scan contract; buffering consumers copy)
+        proj(joined(row, extra))
+          : org.apache.spark.sql.catalyst.InternalRow
       }
     }
+    GraftColumn.ofInternal(spark, stamped, outSchema)
   }
 
   /** SQL `ntile(buckets)` reproduced by exact integer arithmetic from
     * a precomputed (rank, total) pair — the piece that lets an ntile
-    * window re-plan onto [[globalRank]]: the first `n mod buckets`
+    * window re-plan onto [[globalOrder]]: the first `n mod buckets`
     * buckets carry `n div buckets + 1` rows, the rest `n div buckets`
     * (the standard larger-buckets-first contract, matched bit-for-bit
     * against `ntile().over` by GlobalOrderSpec on non-divisible n).
@@ -297,73 +230,6 @@ object GraftOps {
       .otherwise(
         rem + ((rk - lit(1L) - bigSpan) / size).cast("long") + lit(1L))
       .cast("int")
-  }
-
-  /** Scalable GLOBAL prefix sum of `valueCol` in `orderCols` order
-    * (exclusive by default — each row sees the sum of everything
-    * strictly before it): the same range-partitioned skeleton as
-    * [[globalRank]], with per-partition value subtotals as the
-    * broadcast offsets and a running local fold per task. The 100 TB
-    * form of `sum(v).over(Window.orderBy(...).rowsBetween(
-    * unboundedPreceding, -1))` — identical output, no single-reducer
-    * sort. Values must be non-null longs (exact integer discipline:
-    * order-free per-partition sums, one deterministic scan of
-    * |partitions| subtotals).
-    */
-  def globalPrefixSum(df: DataFrame, orderCols: Seq[(String, Boolean)],
-      valueCol: String, sumName: String = "prefix_sum",
-      exclusive: Boolean = true, partitions: Int = 0): DataFrame =
-    // the single-column form IS the fused form at width 1 — one
-    // implementation of the subtle offset/stamping machinery
-    globalPrefixSums(df, orderCols, Seq(valueCol), Seq(sumName),
-      exclusive, partitions)
-
-  /** [[globalPrefixSum]] over SEVERAL value columns in ONE range
-    * layout and ONE stamping pass — the fused form for consumers that
-    * need parallel running sums in the same total order (the KS
-    * statistic's two CDFs): per-partition subtotal VECTORS collect as
-    * |partitions|·|values| longs, broadcast back, and every column
-    * stamps in the same per-task fold. Appends `sumNames(i)` for each
-    * `valueCols(i)`.
-    */
-  def globalPrefixSums(df: DataFrame, orderCols: Seq[(String, Boolean)],
-      valueCols: Seq[String], sumNames: Seq[String],
-      exclusive: Boolean = true, partitions: Int = 0): DataFrame = {
-    require(valueCols.nonEmpty && valueCols.length == sumNames.length)
-    val spark = df.sparkSession
-    val p = if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions
-    val (rdd0, inSchema) = rangeOrderedInternal(df, orderCols, p)
-    val vIdx = valueCols.map(inSchema.fieldIndex).toArray
-    val rdd = persistOrdered(rdd0)
-    val subs = rdd.mapPartitionsWithIndex({ (i, it) =>
-      val s = new Array[Long](vIdx.length)
-      while (it.hasNext) {
-        val row = it.next()
-        var j = 0
-        while (j < vIdx.length) { s(j) += row.getLong(vIdx(j)); j += 1 }
-      }
-      Iterator((i, s))
-    }, preservesPartitioning = true).collect().sortBy(_._1).map(_._2)
-    val offsets = subs.scanLeft(new Array[Long](vIdx.length)) { (acc, s) =>
-      acc.zip(s).map { case (a, b) => a + b }
-    }
-    val bc = spark.sparkContext.broadcast(offsets)
-    val extras = sumNames.map(StructField(_, LongType, nullable = false))
-    stampedFrame(spark, rdd, inSchema, extras) { i =>
-      val acc = bc.value(i).clone()
-      val out = new Array[Long](vIdx.length)
-      row => {
-        var j = 0
-        while (j < vIdx.length) {
-          val v = row.getLong(vIdx(j))
-          out(j) = if (exclusive) acc(j) else acc(j) + v
-          acc(j) += v
-          j += 1
-        }
-        out
-      }
-    }
   }
 
   /** Top-k rows per group with a dense 1..k rank column, executed by

@@ -27,4 +27,11 @@ object GraftColumn {
       rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
+
+  /** Block until every listener event posted so far has been delivered
+    * (`listenerBus` is `private[spark]`) — how [[graft.QueryMetrics]]
+    * reads its counters once an action returns.
+    */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

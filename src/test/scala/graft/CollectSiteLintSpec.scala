@@ -36,14 +36,9 @@ class CollectSiteLintSpec extends AnyFunSuite {
         "family:lsh-verify-flat family:dbscan-exact-rows " +
         "family:bpe-word-counts"),
     // --- custom plans: per-partition offset scans -------------------
-    ("GraftOps.scala", ".collect().sortBy(_._1).map(_._2)") ->
-      (1, "O(|partitions|) subtotal rows (global-rank offsets)"),
-    ("GraftOps.scala",
-      "}, preservesPartitioning = true).collect().sortBy(_._1)") ->
-      (1, "O(|partitions|) (count,sum) rows (rank+prefix offsets)"),
     ("GraftOps.scala",
       "}, preservesPartitioning = true).collect().sortBy(_._1).map(_._2)") ->
-      (1, "O(|partitions|) vector subtotal rows (multi-col offsets)"),
+      (1, "O(|partitions|) (count, sums) subtotal rows (globalOrder offsets)"),
     // --- CDC: bucket routing ----------------------------------------
     ("CdcStream.scala", ".distinct().collect().map(_.getInt(0)).sorted") ->
       (1, "touched bucket ids, <= NStateBuckets"),
@@ -194,13 +189,8 @@ class CollectSiteLintSpec extends AnyFunSuite {
     */
   private val countCutovers: Map[(String, String), String] = Map(
     ("Relational.scala",
-      "if (s.count() < graft.plans.GraftOps.smallOrderCutover) {") ->
-      "smallOrderCutover: supplier-rollup window vs range rank",
-    ("Relational.scala", "if (ltv.count() < smallOrderCutover) {") ->
-      "smallOrderCutover: customer-LTV window vs range quartiles",
-    ("Stats.scala",
-      "if (perCust.count() < graft.plans.GraftOps.smallOrderCutover)") ->
-      "smallOrderCutover: per-customer rollup window vs range rank")
+      "if (ltv.count() < graft.plans.GraftOps.smallOrderCutover) rfmWindow(ltv)") ->
+      "smallOrderCutover: customer-LTV window vs range quartiles")
 
   test("leg choices go through GraftOps.driverOr: no count() compared " +
       "with a bound and no limit(n + 1) collect outside it") {

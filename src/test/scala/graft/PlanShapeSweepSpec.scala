@@ -1,9 +1,17 @@
 package graft
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.window.WindowExec
+
 /** Regression guard over the WHOLE declared batch surface: no query
   * may plan a cartesian product or an unbounded nested-loop join
   * unless it is on the explicit allowlist (the intentional
-  * broadcast-NLJ distance scans and 1-row combiner joins).
+  * broadcast-NLJ distance scans and 1-row combiner joins), and no
+  * query may plan a single-reducer window (a `WindowExec` with no
+  * partition spec) unless its allowlist entry names the bound that
+  * keeps the window's input small.
   *
   * This sweeps every `SparkEntry.queries` entry except the families
   * whose construction executes engine work that other suites already
@@ -92,20 +100,71 @@ class PlanShapeSweepSpec extends SparkSpec {
     "orders_mor_compacted")       // same 1-row facts attach over the
                                   // compacted snapshot summary
 
-  test("no declared batch query plans an unintended cartesian product") {
+  // rows allowed an unpartitioned (single-reducer) window, each with
+  // the bound that keeps the one reducer small
+  private val globalWindowAllowed: Map[String, String] = Map(
+    "orders_rfm_segments" ->
+      "rfm window leg below smallOrderCutover (|customers| rollup)",
+    "events_kaplan_meier" -> "|lifetimes|-sized histogram (calendar-bounded)",
+    "events_nelson_aalen" -> "|lifetimes|-sized histogram (calendar-bounded)",
+    "events_msprt_monitor" -> "|days|-sized daily rollup (calendar-bounded)",
+    "events_markov_holdout" -> "|event types|-sized majority-class rank",
+    "stats_benford_digits" -> "|digits| = 9-row total attach",
+    "stats_bootstrap_ci" -> "|replicates|-sized rank of the bootstrap means",
+    "stats_chi_square" -> "|priorities| x |segments| contingency total",
+    "stats_cramers_v" -> "|priorities| x |segments| contingency total",
+    "stats_ks_fdr" -> "C(|sources|, 2)-sized pair relation (BH rank + m)",
+    "text_zipf_fit" -> "limit(topN)-sized ranked head")
+
+  /** Each swept row's physical plan, planned once for both guards. */
+  private lazy val sweptPlans: Seq[(String, SparkPlan)] = {
     val swept = SparkEntry.queries.keys.toSeq.sorted
       .filterNot(n => excludedPrefixes.exists(n.startsWith))
       .filterNot(n => n.contains("_streamed"))
       .filterNot(excludedExact)
     assert(swept.size > 100, s"sweep unexpectedly small: ${swept.size}")
-    val offenders = swept.flatMap { name =>
-      val plan = SparkEntry.queries(name)(spark, sf0001)
-        .queryExecution.executedPlan.toString
+    swept.map(name => name ->
+      SparkEntry.queries(name)(spark, sf0001).queryExecution.executedPlan)
+  }
+
+  /** Every `WindowExec` with an empty partition spec in `p`, looking
+    * through adaptive plans, query stages, cached relations and
+    * subqueries.
+    */
+  private def globalWindows(p: SparkPlan): Seq[WindowExec] = {
+    val kids = (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case _ => p.children
+    }) ++ p.subqueries
+    (p match {
+      case w: WindowExec if w.partitionSpec.isEmpty => Seq(w)
+      case _ => Nil
+    }) ++ kids.flatMap(globalWindows)
+  }
+
+  test("no declared batch query plans an unintended cartesian product") {
+    val offenders = sweptPlans.flatMap { case (name, executed) =>
+      val plan = executed.toString
       val cartesian = plan.contains("CartesianProduct") ||
         plan.contains("BroadcastNestedLoopJoin")
       if (cartesian && !oneRowCrossAllowed(name)) Some(name) else None
     }
     assert(offenders.isEmpty,
       s"unexpected cartesian/NLJ plans in: ${offenders.mkString(", ")}")
+  }
+
+  test("no declared batch query plans an unpartitioned window unless it " +
+      "names the bound that keeps it small") {
+    val found = sweptPlans.collect {
+      case (name, plan) if globalWindows(plan).nonEmpty => name
+    }.toSet
+    val extras = found -- globalWindowAllowed.keySet
+    assert(extras.isEmpty, "single-reducer window(s) — rank with " +
+      "GraftOps.globalOrder or allowlist the bound: " +
+      extras.toSeq.sorted.mkString(", "))
+    val stale = globalWindowAllowed.keySet -- found
+    assert(stale.isEmpty, s"stale window allowlist entries: $stale")
   }
 }

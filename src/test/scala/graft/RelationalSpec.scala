@@ -324,6 +324,18 @@ class RelationalSpec extends SparkSpec {
     assert(n == Tables.customer(spark, sf0001).count())
   }
 
+  test("rfm: the window and range legs return equal rows") {
+    val ltv = Relational.customerLtv(spark, sf0001)
+      .select("custkey", "n_orders", "total_spend", "last_order_epday")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("custkey", "r", "f", "m").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3)))
+        .sortBy(_._1)
+    val window = rows(Relational.rfmWindow(ltv))
+    assert(window.length == Tables.customer(spark, sf0001).count())
+    assert(rows(Relational.rfmRange(ltv)).sameElements(window))
+  }
+
   test("customer LTV replays per-customer order scans") {
     val ord = Tables.orders(spark, sf0001)
       .select(col("o_custkey"),

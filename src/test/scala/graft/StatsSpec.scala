@@ -306,7 +306,7 @@ class StatsSpec extends SparkSpec {
 
   test("KS and Mann-Whitney plan window-free (range-partitioned CDFs)") {
     // the pooled distinct-score relation is grid-bounded (≤ 1e6+1 rows)
-    // but its running CDFs now stamp via globalPrefixSum — no
+    // but its running CDFs now stamp via GraftOps.globalOrder — no
     // unpartitioned Window operator may appear anywhere in either plan
     for ((name, df) <- Seq(
         "ks" -> graft.operators.Stats.ksQualityBySource(spark, sf0001),
